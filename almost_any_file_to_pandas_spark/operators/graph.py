@@ -1,20 +1,32 @@
-"""Graph analytics over behavioral co-occurrence.
+"""Graph analytics over the hour co-activity graph.
 
-Second member of the graph family next to
-``connected_components_alternating`` (plans/relational.py): build the
-user co-occurrence graph (edge = two users active in the same hour
-more often than twice the global mean) and count its TRIANGLES — the
-clustering signal behind community detection, bot-ring discovery and
-recommendation ("users who always appear together").
+Twelve operators read one graph: users are vertices, and an edge joins
+two users who were active in the same hour more often than
+``EDGE_FACTOR`` times the mean co-count. The graph is built once per
+side:
 
-Scale shape: the pair expansion reuses the dedup family's capped
-one-shuffle bucket machinery (`_pairs_within_buckets`) with the hour
-as the bucket — per-hour co-activity bounds the quadratic term
-exactly like an LSH bucket, with the same skew cap. Triangles use the
-oriented-edge join: every edge is stored once as (lo, hi), and the
-two joins enumerate each triangle exactly once as a < b < c — the
-standard distributed formulation (no per-vertex adjacency
-materialization, no double counting).
+- Engine: :func:`_coactivity_edges` returns ``(cells, pair_counts,
+  edges)`` and :func:`_symmetric` turns the edges into the ``(u, v)``
+  list holding both directions. The pair expansion reuses the dedup
+  family's capped one-shuffle bucket machinery
+  (``_pairs_within_buckets``) with the hour as the bucket, so per-hour
+  co-activity bounds the quadratic term exactly like an LSH bucket.
+  ``pair_counts`` is checkpointed in the builder because it feeds both
+  the threshold and the edge filter; every consumer checkpoints only
+  what it reuses itself.
+- Oracle: every co-activity oracle starts from ``WITH``
+  :data:`_COACTIVITY_CTE` (``cells → hours_ok → pair_counts → cut →
+  edges → sym``). ``cells``, ``pair_counts`` and ``edges`` are
+  ``AS MATERIALIZED`` because DuckDB 1.0 inlines a plain CTE at every
+  reference: the unrolled LPA rounds re-ran the whole build per
+  reference. On sf0.01 (DuckDB 1.0.0, 4 cores, medians of 3-4 runs)
+  the modularity oracle went from 17.8 s to 0.11 s, the LPA oracle
+  from 0.68 s to 0.05 s, and all 12 together from 19.8 s to 0.37 s.
+
+Triangles use the oriented-edge join: every edge is stored once as
+(lo, hi), and the two joins enumerate each triangle exactly once as
+a < b < c — no per-vertex adjacency materialization, no double
+counting.
 """
 
 from __future__ import annotations
@@ -24,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.operators.dedup import (
+    CC_DRIVER_EDGE_CAP,
     MAX_BUCKET_SIZE,
     _pairs_within_buckets,
     connected_components_alternating,
@@ -42,10 +55,67 @@ EDGE_FACTOR = 2.0  # edge iff co-count > EDGE_FACTOR * mean co-count
 # silent engine-side divergence. Dropped hours are an OUTPUT COLUMN
 # (n_capped_hours in the triangle census, via _oversize_hours) so a
 # capped dense hour is visible in every gate run, never silent.
-_HOURS_OK_SQL = f"""
+_COACTIVITY_CTE = f"""
+    cells AS MATERIALIZED (
+      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
+    ), hours_ok AS (
       SELECT h FROM cells GROUP BY h
       HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET_SIZE}
-"""
+    ), pair_counts AS MATERIALIZED (
+      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
+      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
+      JOIN hours_ok ho ON ho.h = a.h
+      GROUP BY a.user_id, b.user_id
+    ), cut AS (
+      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
+    ), edges AS MATERIALIZED (
+      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
+      WHERE c > cut.threshold
+    ), sym AS (
+      SELECT u1 AS u, u2 AS v FROM edges
+      UNION ALL
+      SELECT u2 AS u, u1 AS v FROM edges
+    )"""
+
+
+def _coactivity_edges(spark: SparkSession, sf_dir: str):
+    """``(cells, pair_counts, edges)`` of the hour co-activity graph —
+    the engine side of :data:`_COACTIVITY_CTE`. ``cells`` holds the
+    distinct (h, user_id) pairs, ``pair_counts`` the co-active hour
+    count ``c`` of every pair ``u1 < u2``, and ``edges`` the pairs
+    whose ``c`` clears the data-derived threshold (a one-row
+    broadcast). ``pair_counts`` is checkpointed because it feeds both
+    the threshold and the filter; ``edges`` is returned unmaterialized
+    so each consumer checkpoints it only if it reuses it."""
+    ev = table(spark, sf_dir, "events")
+    cells = ev.select(
+        F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
+    ).distinct()
+    co = _pairs_within_buckets(cells, "user_id", ["h"], distinct=False)
+    pair_counts = (
+        co.groupBy(F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2"))
+        .agg(F.count("*").alias("c"))
+        .localCheckpoint()
+    )
+    cut = pair_counts.agg(
+        (F.lit(EDGE_FACTOR) * F.avg("c")).alias("threshold")
+    )
+    edges = (
+        pair_counts.crossJoin(F.broadcast(cut))
+        .filter(F.col("c") > F.col("threshold"))
+        .select("u1", "u2")
+    )
+    return cells, pair_counts, edges
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """``(u, v)`` with every undirected edge in both directions — the
+    ``sym`` CTE."""
+    return edges.select(
+        F.col("u1").alias("u"), F.col("u2").alias("v")
+    ).unionAll(
+        edges.select(F.col("u2").alias("u"), F.col("u1").alias("v"))
+    )
 
 
 def _oversize_hours(cells: DataFrame) -> DataFrame:
@@ -64,20 +134,7 @@ def _oversize_hours(cells: DataFrame) -> DataFrame:
 @register(
     "events_cooccurrence_triangles",
     oracle=f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), triangles AS (
+    WITH {_COACTIVITY_CTE}, triangles AS (
       SELECT COUNT(*) AS n_triangles
       FROM edges e1
       JOIN edges e2 ON e2.u1 = e1.u2
@@ -109,24 +166,7 @@ def events_cooccurrence_triangles(
     smaller than the event stream.
     """
     apply_engine_conf(spark)
-    ev = table(spark, sf_dir, "events")
-    cells = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
-    ).distinct()
-    co = _pairs_within_buckets(cells, "user_id", ["h"], distinct=False)
-    pair_counts = (
-        co.groupBy(F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2"))
-        .agg(F.count("*").alias("c"))
-    )
-    pair_counts = pair_counts.localCheckpoint()  # feeds cut + edges + counts
-    cut = pair_counts.agg(
-        (F.lit(EDGE_FACTOR) * F.avg("c")).alias("threshold")
-    )
-    edges = (
-        pair_counts.crossJoin(F.broadcast(cut))
-        .filter(F.col("c") > F.col("threshold"))
-        .select("u1", "u2")
-    )
+    cells, pair_counts, edges = _coactivity_edges(spark, sf_dir)
     edges = edges.localCheckpoint()  # reused three times in the join
     e1 = edges
     e2 = edges.select(
@@ -217,24 +257,7 @@ def pagerank(edges: DataFrame, damp: float = PR_DAMP,
 @register(
     "graph_pagerank_floor",
     oracle=f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), nodes AS (
-      SELECT DISTINCT u FROM (
-        SELECT u1 AS u FROM edges UNION ALL SELECT u2 FROM edges
-      )
-    )
+    WITH {_COACTIVITY_CTE}, nodes AS (SELECT DISTINCT u FROM sym)
     SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
            (SELECT COUNT(*) FROM edges) AS n_edges,
            CAST({PR_ITERS} AS INT) AS iters,
@@ -253,24 +276,8 @@ def graph_pagerank_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_operators.py.
     """
     apply_engine_conf(spark)
-    ev = table(spark, sf_dir, "events")
-    cells = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
-    ).distinct()
-    co = _pairs_within_buckets(cells, "user_id", ["h"], distinct=False)
-    pair_counts = (
-        co.groupBy(F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2"))
-        .agg(F.count("*").alias("c"))
-    ).localCheckpoint(eager=True)
-    cut = pair_counts.agg(
-        (F.lit(EDGE_FACTOR) * F.avg("c")).alias("threshold")
-    )
-    edges = (
-        pair_counts.crossJoin(F.broadcast(cut))
-        .filter(F.col("c") > F.col("threshold"))
-        .select("u1", "u2")
-        .localCheckpoint(eager=True)
-    )
+    _, _, edges = _coactivity_edges(spark, sf_dir)
+    edges = edges.localCheckpoint(eager=True)
     ranks = pagerank(edges)
     n_edges = edges.count()
     agg = ranks.agg(
@@ -299,33 +306,15 @@ def graph_pagerank_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_degree_assortativity",
     oracle=f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), deg AS (
-      SELECT u, COUNT(*) AS d FROM (
-        SELECT u1 AS u FROM edges UNION ALL SELECT u2 AS u FROM edges
-      ) GROUP BY u
-    ), sym AS (
+    WITH {_COACTIVITY_CTE}, deg AS (
+      SELECT u, COUNT(*) AS d FROM sym GROUP BY u
+    ), deg_pairs AS (
       SELECT CAST(d1.d AS HUGEINT) AS x, CAST(d2.d AS HUGEINT) AS y
-      FROM edges e JOIN deg d1 ON d1.u = e.u1 JOIN deg d2 ON d2.u = e.u2
-      UNION ALL
-      SELECT CAST(d2.d AS HUGEINT), CAST(d1.d AS HUGEINT)
-      FROM edges e JOIN deg d1 ON d1.u = e.u1 JOIN deg d2 ON d2.u = e.u2
+      FROM sym e JOIN deg d1 ON d1.u = e.u JOIN deg d2 ON d2.u = e.v
     ), s AS (
       SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
              SUM(x*y) AS sxy, SUM(x*x) AS sxx, SUM(y*y) AS syy
-      FROM sym
+      FROM deg_pairs
     )
     SELECT CAST(n // 2 AS BIGINT) AS n_edges,
            CASE WHEN (n*sxx - sx*sx) = 0 OR (n*syy - sy*sy) = 0
@@ -362,23 +351,7 @@ def graph_degree_assortativity(
     Pearson fold is one map-side-combined scalar aggregate.
     """
     apply_engine_conf(spark)
-    ev = table(spark, sf_dir, "events")
-    cells = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
-    ).distinct()
-    co = _pairs_within_buckets(cells, "user_id", ["h"], distinct=False)
-    pair_counts = co.groupBy(
-        F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2")
-    ).agg(F.count("*").alias("c"))
-    pair_counts = pair_counts.localCheckpoint()
-    cut = pair_counts.agg(
-        (F.lit(EDGE_FACTOR) * F.avg("c")).alias("threshold")
-    )
-    edges = (
-        pair_counts.crossJoin(F.broadcast(cut))
-        .filter(F.col("c") > F.col("threshold"))
-        .select("u1", "u2")
-    )
+    _, _, edges = _coactivity_edges(spark, sf_dir)
     edges = edges.localCheckpoint()  # feeds deg + two joins
     deg = (
         edges.select(F.col("u1").alias("u"))
@@ -396,10 +369,10 @@ def graph_degree_assortativity(
             F.col("dy").cast("decimal(38,0)").alias("y"),
         )
     )
-    sym = joined.unionByName(
+    deg_pairs = joined.unionByName(
         joined.select(F.col("y").alias("x"), F.col("x").alias("y"))
     )
-    s = sym.agg(
+    s = deg_pairs.agg(
         F.count("*").cast("decimal(38,0)").alias("n"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
@@ -432,24 +405,7 @@ def _lpa_cte_head() -> str:
     """The shared WITH-chain through ``it{LPA_ITERS}`` (final labels)
     — reused by the LPA census oracle and the modularity oracle."""
     head = f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), sym AS (
-      SELECT u1 AS u, u2 AS v FROM edges
-      UNION ALL
-      SELECT u2 AS u, u1 AS v FROM edges
-    ), it0 AS (
+    WITH {_COACTIVITY_CTE}, it0 AS (
       SELECT DISTINCT u, u AS lab FROM sym
     )"""
     rounds = []
@@ -523,44 +479,12 @@ def _lpa_label_frames(spark: SparkSession, sf_dir: str):
     returning (symmetric edge list, final (u, lab) labels) so the
     modularity scorer can reuse both frames (plan-identical for the
     census query)."""
-    ev = table(spark, sf_dir, "events")
-    cells = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
-    ).distinct()
-    co = _pairs_within_buckets(cells, "user_id", ["h"], distinct=False)
-    pair_counts = (
-        co.groupBy(F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2"))
-        .agg(F.count("*").alias("c"))
-    )
-    pair_counts = pair_counts.localCheckpoint()
-    cut = pair_counts.agg(
-        (F.lit(EDGE_FACTOR) * F.avg("c")).alias("threshold")
-    )
-    edges = (
-        pair_counts.crossJoin(F.broadcast(cut))
-        .filter(F.col("c") > F.col("threshold"))
-        .select("u1", "u2")
-    )
-    sym = edges.select(
-        F.col("u1").alias("u"), F.col("u2").alias("v")
-    ).unionAll(
-        edges.select(F.col("u2").alias("u"), F.col("u1").alias("v"))
-    )
-    # r10 (r9 verdict #7): the r9 ``repartition("v")`` before this
-    # checkpoint claimed the stored partitioning would feed the three
-    # round joins. The captured round-2 census plan
-    # (plans/r10/graph_label_propagation_round2census_before.txt)
-    # refutes it on both counts: the checkpointed scan reports
-    # ``UnknownPartitioning(0)`` (localCheckpoint does not preserve
-    # outputPartitioning under AQE), and the join is a
-    # BroadcastHashJoin BUILDING on sym (the post-threshold edge list
-    # is small), so no round join ever consumed a ``v`` partitioning.
-    # The repartition was a pure extra |E| shuffle — dropped.
-    sym = sym.localCheckpoint(eager=True)
+    _, _, edges = _coactivity_edges(spark, sf_dir)
+    sym = _symmetric(edges).localCheckpoint(eager=True)
     labels = sym.select("u").distinct().select(
         "u", F.col("u").alias("lab")
     )
-    for i in range(LPA_ITERS):
+    for _ in range(LPA_ITERS):
         census = (
             sym.join(
                 labels.select(
@@ -571,31 +495,20 @@ def _lpa_label_frames(spark: SparkSession, sf_dir: str):
             .groupBy("u", F.col("nlab").alias("lab"))
             .agg(F.count("*").alias("c"))
         )
-        # argmax by (count DESC, label ASC) as ONE aggregate instead
-        # of a ranking window: max_by over the struct (c, -lab) picks
-        # the same row the row_number form did, without the per-round
-        # partition sort (the oracle keeps the window formulation).
-        # The census covers EVERY node by construction (sym is
-        # symmetrized, so each node appears as ``u`` in at least one
-        # edge row), so the old carry-over left-join back onto the
-        # previous labels was a per-round no-op shuffle — the rule's
-        # isolated-node branch cannot fire; dropped (r9, output
-        # value-identical, oracle unchanged).
+        # argmax by (count DESC, label ASC) as ONE aggregate: max_by
+        # over the struct (c, -lab) picks the row the oracle's
+        # row_number window picks, without a per-round partition sort.
+        # sym holds both directions of every edge, so every labelled
+        # node appears as ``u`` in the census and the rule's isolated-
+        # node carry-over can never fire.
         labels = census.groupBy("u").agg(
             F.expr("max_by(lab, struct(c, -lab))").alias("lab")
         )
-        # r10: the rounds CHAIN inside one plan — each intermediate
-        # labels frame has exactly one consumer (the next round), so
-        # the per-round eager checkpoint bought no reuse and cost a
-        # blocking job + a Catalyst compile per round. Lineage depth
-        # is linear in the FIXED round count (3 joins + 6 aggregates),
-        # well inside planner comfort. Only the FINAL labels frame is
-        # materialized (eagerly): the modularity consumer reads it
-        # from four places in one job, and an unmaterialized lazy
-        # checkpoint could be computed concurrently by those stages.
-        if i == LPA_ITERS - 1:
-            labels = labels.localCheckpoint(eager=True)
-    return sym, labels
+    # The rounds chain inside one plan (each intermediate labels frame
+    # has one consumer, the next round). Only the final labels are
+    # materialized: the modularity consumer reads them from four
+    # places in one job.
+    return sym, labels.localCheckpoint(eager=True)
 
 
 @register(
@@ -716,7 +629,7 @@ def _kcore_sql() -> str:
     same synchronous recursion both engines run, unrolled because the
     oracle dialect has no iteration."""
     rounds = []
-    prev = "e0"
+    prev = "edges"
     for r in range(1, KCORE_ROUNDS + 1):
         rounds.append(
             f"""
@@ -735,27 +648,14 @@ def _kcore_sql() -> str:
     summaries = [
         "SELECT 0 AS round,"
         " (SELECT COUNT(*) FROM d0) AS n_vertices,"
-        " (SELECT COUNT(*) FROM e0) AS n_edges"
+        " (SELECT COUNT(*) FROM edges) AS n_edges"
     ] + [
         f"SELECT {r}, (SELECT COUNT(*) FROM s{r}),"
         f" (SELECT COUNT(*) FROM e{r})"
         for r in range(1, KCORE_ROUNDS + 1)
     ]
     return f"""
-    WITH cells AS MATERIALIZED (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS MATERIALIZED (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), e0 AS MATERIALIZED (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ){''.join(rounds)}
+    WITH {_COACTIVITY_CTE}{''.join(rounds)}
     {' UNION ALL '.join(summaries)}
     """
 
@@ -785,39 +685,16 @@ def graph_kcore_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     until fixpoint with the same round body.
     """
     apply_engine_conf(spark)
-    ev = table(spark, sf_dir, "events")
-    cells = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
-    ).distinct()
-    co = _pairs_within_buckets(cells, "user_id", ["h"], distinct=False)
-    pair_counts = (
-        co.groupBy(F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2"))
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    cut = pair_counts.agg(
-        (F.lit(EDGE_FACTOR) * F.avg("c")).alias("threshold")
-    )
-    edges = (
-        pair_counts.crossJoin(F.broadcast(cut))
-        .filter(F.col("c") > F.col("threshold"))
-        .select("u1", "u2")
-        .localCheckpoint(eager=True)
-    )
+    _, _, edges = _coactivity_edges(spark, sf_dir)
+    edges = edges.localCheckpoint(eager=True)
 
-    # r10 two-regime peel (the CC_DRIVER_EDGE_CAP pattern, guide
-    # §1.2/§5): the peel runs on the THRESHOLDED edge list — already
-    # orders of magnitude below the corpus — and at bench scale the
-    # distributed rounds paid 2 blocking checkpoint jobs + a Catalyst
-    # compile per round for microseconds of actual degree counting.
-    # The eager checkpoint above already materialized the edges, so
-    # the count is a cheap stored-blocks job and the collect below is
-    # BOUNDED by the cap it gates on (≈2 MB — the broadcast-build
-    # size class). Above the cap the distributed loop runs unchanged.
-    from almost_any_file_to_pandas_spark.operators.dedup import (
-        CC_DRIVER_EDGE_CAP,
-    )
-
+    # Two regimes, split by CC_DRIVER_EDGE_CAP: the peel runs on the
+    # THRESHOLDED edge list, already orders of magnitude below the
+    # corpus, and at bench scale each distributed round paid two
+    # blocking checkpoint jobs and a Catalyst compile for microseconds
+    # of degree counting. The eager checkpoint above makes the count a
+    # cheap stored-blocks job, and the collect below is BOUNDED by the
+    # cap it gates on (≈2 MB). Above the cap the distributed loop runs.
     n_edges0 = edges.count()
     if n_edges0 < CC_DRIVER_EDGE_CAP:
         from collections import Counter
@@ -881,87 +758,84 @@ def graph_kcore_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
 LINKPRED_TOP = 20
 
 
-def _linkpred_sql() -> str:
+def _links_sql(score: str, scored: str) -> str:
+    """Oracle side of :func:`_top_links`. ``scored`` is a SELECT over
+    the ``wedge`` (ua, ub, w) and ``deg`` CTEs yielding one
+    (ua, ub, c, <score>) row per wedge-connected pair."""
     return f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), sym AS (
-      SELECT u1 AS u, u2 AS v FROM edges
-      UNION ALL
-      SELECT u2 AS u, u1 AS v FROM edges
-    ), deg AS (
+    WITH {_COACTIVITY_CTE}, deg AS (
       SELECT u, COUNT(*) AS d FROM sym GROUP BY u
-    ), cn AS (
-      SELECT a.u AS ua, b.u AS ub, COUNT(*) AS c
+    ), wedge AS (
+      SELECT a.u AS ua, b.u AS ub, a.v AS w
       FROM sym a JOIN sym b ON a.v = b.v AND a.u < b.u
-      GROUP BY 1, 2
-    ), nonedge AS (
-      SELECT c.ua, c.ub, c.c FROM cn c
-      WHERE NOT EXISTS (
-        SELECT 1 FROM edges e WHERE e.u1 = c.ua AND e.u2 = c.ub)
-    ), scored AS (
-      SELECT ne.ua, ne.ub, ne.c,
-             ne.c * 1000000 // (da.d + db.d - ne.c) AS jacc_q6
-      FROM nonedge ne
-      JOIN deg da ON da.u = ne.ua
-      JOIN deg db ON db.u = ne.ub
+    ), scored AS ({scored}
     )
     SELECT CAST(ua AS BIGINT) AS u1, CAST(ub AS BIGINT) AS u2,
            CAST(c AS BIGINT) AS common_neighbors,
-           CAST(jacc_q6 AS BIGINT) AS jacc_q6,
-           CAST(ROW_NUMBER() OVER (ORDER BY jacc_q6 DESC, ua, ub)
+           CAST({score} AS BIGINT) AS {score},
+           CAST(ROW_NUMBER() OVER (ORDER BY {score} DESC, ua, ub)
                 AS INTEGER) AS rnk
-    FROM scored
-    QUALIFY ROW_NUMBER() OVER (ORDER BY jacc_q6 DESC, ua, ub)
+    FROM scored s
+    WHERE NOT EXISTS (
+      SELECT 1 FROM edges e WHERE e.u1 = s.ua AND e.u2 = s.ub)
+    QUALIFY ROW_NUMBER() OVER (ORDER BY {score} DESC, ua, ub)
             <= {LINKPRED_TOP}
     """
 
 
 def _coactivity_graph(spark: SparkSession, sf_dir: str):
-    """(edges, sym) of the mean-thresholded hour-co-activity graph —
-    the shared build of both link-prediction operators (identical to
-    the LPA/k-core construction; duplicated there because those
-    operators are gate-frozen). Both frames are localCheckpointed:
-    edges feeds the anti join, sym feeds wedges (×2) and degrees."""
-    ev = table(spark, sf_dir, "events")
-    cells = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
-    ).distinct()
-    co = _pairs_within_buckets(cells, "user_id", ["h"], distinct=False)
-    pair_counts = (
-        co.groupBy(F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2"))
-        .agg(F.count("*").alias("c"))
-    )
-    pair_counts = pair_counts.localCheckpoint()
-    cut = pair_counts.agg(
-        (F.lit(EDGE_FACTOR) * F.avg("c")).alias("threshold")
-    )
-    edges = (
-        pair_counts.crossJoin(F.broadcast(cut))
-        .filter(F.col("c") > F.col("threshold"))
-        .select("u1", "u2")
-        .localCheckpoint(eager=True)
-    )
-    sym = edges.select(
-        F.col("u1").alias("u"), F.col("u2").alias("v")
-    ).unionAll(
-        edges.select(F.col("u2").alias("u"), F.col("u1").alias("v"))
-    ).localCheckpoint(eager=True)
-    return edges, sym
+    """(edges, sym) of the co-activity graph, both localCheckpointed:
+    edges feeds the link predictors' anti join, sym feeds wedges (×2)
+    and degrees."""
+    _, _, edges = _coactivity_edges(spark, sf_dir)
+    edges = edges.localCheckpoint(eager=True)
+    return edges, _symmetric(edges).localCheckpoint(eager=True)
 
 
-@register("graph_jaccard_link_prediction", oracle=_linkpred_sql())
+def _top_links(spark: SparkSession, sf_dir: str, score: str,
+               score_pairs) -> DataFrame:
+    """Shared tail of the two link predictors: the wedge walk
+    ua—w—ub (ua < ub) over the symmetric edge list, folded by
+    ``score_pairs(wedge, deg)`` into one (ua, ub, c, <score>) row per
+    pair, then an existing-edge ANTI join and a TakeOrderedAndProject
+    top-{LINKPRED_TOP} with ties broken (score DESC, ua, ub) on exact
+    integers."""
+    edges, sym = _coactivity_graph(spark, sf_dir)
+    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
+    wedge = (
+        sym.select(F.col("u").alias("ua"), F.col("v").alias("w"))
+        .join(sym.select(F.col("u").alias("ub"), F.col("v").alias("w")), "w")
+        .filter(F.col("ua") < F.col("ub"))
+    )
+    pairs = score_pairs(wedge, deg)
+    nonedge = pairs.join(
+        edges,
+        (pairs.ua == edges.u1) & (pairs.ub == edges.u2),
+        "left_anti",
+    )
+    order = [F.desc(score), F.asc("ua"), F.asc("ub")]
+    top = nonedge.orderBy(*order).limit(LINKPRED_TOP)
+    w = W.partitionBy(F.pmod(F.col(score), F.lit(1))).orderBy(*order)
+    return top.withColumn(
+        "rnk", F.row_number().over(w).cast("int")
+    ).select(
+        F.col("ua").cast("long").alias("u1"),
+        F.col("ub").cast("long").alias("u2"),
+        F.col("c").cast("long").alias("common_neighbors"),
+        F.col(score).cast("long").alias(score),
+        "rnk",
+    )
+
+
+@register(
+    "graph_jaccard_link_prediction",
+    oracle=_links_sql("jacc_q6", """
+      SELECT p.ua, p.ub, p.c,
+             p.c * 1000000 // (da.d + db.d - p.c) AS jacc_q6
+      FROM (SELECT ua, ub, COUNT(*) AS c FROM wedge GROUP BY ua, ub) p
+      JOIN deg da ON da.u = p.ua
+      JOIN deg db ON db.u = p.ub"""),
+)
 def graph_jaccard_link_prediction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -978,106 +852,39 @@ def graph_jaccard_link_prediction(
     common-neighbor counting as ONE self-join of the symmetric edge
     list keyed on the shared endpoint — the wedge walk, Σ deg²-
     bounded, same cost class as the triangle census — a hash
-    aggregate on the (a, b) wedge ends, degree joins keyed on node,
-    an existing-edge ANTI join, and a TakeOrderedAndProject top-k.
-    No window touches anything corpus-sized; ties break (score DESC,
-    u1, u2) on exact integers in both engines.
+    aggregate on the (a, b) wedge ends and degree joins keyed on
+    node, then the :func:`_top_links` tail. No window touches
+    anything corpus-sized.
     """
     apply_engine_conf(spark)
-    edges, sym = _coactivity_graph(spark, sf_dir)
-    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
-    s1 = sym.select(F.col("u").alias("ua"), F.col("v").alias("w"))
-    s2 = sym.select(F.col("u").alias("ub"), F.col("v").alias("w"))
-    cn = (
-        s1.join(s2, "w")
-        .filter(F.col("ua") < F.col("ub"))
-        .groupBy("ua", "ub")
-        .agg(F.count("*").alias("c"))
-    )
-    nonedge = cn.join(
-        edges,
-        (cn.ua == edges.u1) & (cn.ub == edges.u2),
-        "left_anti",
-    )
-    scored = (
-        nonedge.join(
-            deg.select(F.col("u").alias("ua"), F.col("d").alias("da")),
-            "ua",
+
+    def jaccard(wedge: DataFrame, deg: DataFrame) -> DataFrame:
+        return (
+            wedge.groupBy("ua", "ub")
+            .agg(F.count("*").alias("c"))
+            .join(
+                deg.select(F.col("u").alias("ua"), F.col("d").alias("da")),
+                "ua",
+            )
+            .join(
+                deg.select(F.col("u").alias("ub"), F.col("d").alias("db")),
+                "ub",
+            )
+            .selectExpr(
+                "ua", "ub", "c", "c * 1000000 div (da + db - c) AS jacc_q6"
+            )
         )
-        .join(
-            deg.select(F.col("u").alias("ub"), F.col("d").alias("db")),
-            "ub",
-        )
-        .selectExpr(
-            "ua",
-            "ub",
-            "c",
-            "c * 1000000 div (da + db - c) AS jacc_q6",
-        )
-    )
-    top = scored.orderBy(
-        F.desc("jacc_q6"), F.asc("ua"), F.asc("ub")
-    ).limit(LINKPRED_TOP)
-    w = W.partitionBy(F.pmod(F.col("jacc_q6"), F.lit(1))).orderBy(
-        F.desc("jacc_q6"), F.asc("ua"), F.asc("ub")
-    )
-    return top.withColumn(
-        "rnk", F.row_number().over(w).cast("int")
-    ).select(
-        F.col("ua").cast("long").alias("u1"),
-        F.col("ub").cast("long").alias("u2"),
-        F.col("c").cast("long").alias("common_neighbors"),
-        F.col("jacc_q6").cast("long").alias("jacc_q6"),
-        "rnk",
-    )
+
+    return _top_links(spark, sf_dir, "jacc_q6", jaccard)
 
 
-def _ra_links_sql() -> str:
-    return f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), sym AS (
-      SELECT u1 AS u, u2 AS v FROM edges
-      UNION ALL
-      SELECT u2 AS u, u1 AS v FROM edges
-    ), deg AS (
-      SELECT u, COUNT(*) AS d FROM sym GROUP BY u
-    ), wedge AS (
-      SELECT a.u AS ua, b.u AS ub,
-             SUM(1000000 // dw.d) AS ra_q6,
-             COUNT(*) AS common_neighbors
-      FROM sym a
-      JOIN sym b ON a.v = b.v AND a.u < b.u
-      JOIN deg dw ON dw.u = a.v
-      GROUP BY 1, 2
-    ), nonedge AS (
-      SELECT w.ua, w.ub, w.ra_q6, w.common_neighbors FROM wedge w
-      WHERE NOT EXISTS (
-        SELECT 1 FROM edges e WHERE e.u1 = w.ua AND e.u2 = w.ub)
-    )
-    SELECT CAST(ua AS BIGINT) AS u1, CAST(ub AS BIGINT) AS u2,
-           CAST(common_neighbors AS BIGINT) AS common_neighbors,
-           CAST(ra_q6 AS BIGINT) AS ra_q6,
-           CAST(ROW_NUMBER() OVER (ORDER BY ra_q6 DESC, ua, ub)
-                AS INTEGER) AS rnk
-    FROM nonedge
-    QUALIFY ROW_NUMBER() OVER (ORDER BY ra_q6 DESC, ua, ub)
-            <= {LINKPRED_TOP}
-    """
-
-
-@register("graph_resource_allocation_links", oracle=_ra_links_sql())
+@register(
+    "graph_resource_allocation_links",
+    oracle=_links_sql("ra_q6", """
+      SELECT ua, ub, COUNT(*) AS c, SUM(1000000 // dw.d) AS ra_q6
+      FROM wedge JOIN deg dw ON dw.u = wedge.w
+      GROUP BY ua, ub"""),
+)
 def graph_resource_allocation_links(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1091,69 +898,30 @@ def graph_resource_allocation_links(
     the whole ranking is engine-exact where AA's ``1/ln d`` never
     could be.
 
-    Plan: identical wedge walk to the Jaccard op (shared
-    :func:`_coactivity_graph` build) with ONE extra broadcast-sized
-    join — the shared endpoint's degree rides the wedge row and the
-    per-(u,v) score is a plain SUM, so the cost class is unchanged:
+    Plan: the Jaccard op's wedge walk and tail (:func:`_top_links`)
+    with ONE extra broadcast-sized join — the shared endpoint's degree
+    rides the wedge row and the per-(u,v) score is a plain SUM, so the
+    cost class is unchanged:
     Σ deg²-bounded wedge rows, anti join, TakeOrderedAndProject.
     """
     apply_engine_conf(spark)
-    edges, sym = _coactivity_graph(spark, sf_dir)
-    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
-    s1 = sym.select(F.col("u").alias("ua"), F.col("v").alias("w"))
-    s2 = sym.select(F.col("u").alias("ub"), F.col("v").alias("w"))
-    wedge = (
-        s1.join(s2, "w")
-        .filter(F.col("ua") < F.col("ub"))
-        .join(deg.select(F.col("u").alias("w"), "d"), "w")
-        .groupBy("ua", "ub")
-        .agg(
-            F.expr("SUM(1000000 div d)").alias("ra_q6"),
-            F.count("*").alias("common_neighbors"),
+
+    def resource_allocation(wedge: DataFrame, deg: DataFrame) -> DataFrame:
+        return (
+            wedge.join(deg.select(F.col("u").alias("w"), "d"), "w")
+            .groupBy("ua", "ub")
+            .agg(
+                F.count("*").alias("c"),
+                F.expr("SUM(1000000 div d)").alias("ra_q6"),
+            )
         )
-    )
-    nonedge = wedge.join(
-        edges,
-        (wedge.ua == edges.u1) & (wedge.ub == edges.u2),
-        "left_anti",
-    )
-    top = nonedge.orderBy(
-        F.desc("ra_q6"), F.asc("ua"), F.asc("ub")
-    ).limit(LINKPRED_TOP)
-    w = W.partitionBy(F.pmod(F.col("ra_q6"), F.lit(1))).orderBy(
-        F.desc("ra_q6"), F.asc("ua"), F.asc("ub")
-    )
-    return top.withColumn(
-        "rnk", F.row_number().over(w).cast("int")
-    ).select(
-        F.col("ua").cast("long").alias("u1"),
-        F.col("ub").cast("long").alias("u2"),
-        F.col("common_neighbors").cast("long").alias("common_neighbors"),
-        F.col("ra_q6").cast("long").alias("ra_q6"),
-        "rnk",
-    )
+
+    return _top_links(spark, sf_dir, "ra_q6", resource_allocation)
 
 
 def _degree_dist_sql() -> str:
     return f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), sym AS (
-      SELECT u1 AS u, u2 AS v FROM edges
-      UNION ALL
-      SELECT u2 AS u, u1 AS v FROM edges
-    ), deg AS (
+    WITH {_COACTIVITY_CTE}, deg AS (
       SELECT u, COUNT(*) AS d FROM sym GROUP BY u
     ), with_zero AS (
       SELECT d FROM deg
@@ -1201,37 +969,32 @@ def graph_degree_distribution(
     )
 
 
-_EDGE_CTE_HEAD = f"""
-    WITH cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS ({_HOURS_OK_SQL}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), sym AS (
-      SELECT u1 AS u, u2 AS v FROM edges
-      UNION ALL
-      SELECT u2 AS u, u1 AS v FROM edges
-    )"""
-
-
-@register(
-    "graph_two_hop_reach",
-    oracle=_EDGE_CTE_HEAD
-    + """, hop2 AS (
+# every vertex w within two hops of u (w ≠ u), with repeats
+_HOP2_CTE = """, hop2 AS (
       SELECT e1.u, e2.v AS w
       FROM sym e1 JOIN sym e2 ON e2.u = e1.v
       WHERE e2.v <> e1.u
       UNION ALL
       SELECT u, v AS w FROM sym
-    ), deg AS (
+    )"""
+
+
+def _two_hop(sym: DataFrame) -> DataFrame:
+    """Engine side of :data:`_HOP2_CTE`: (u, w) rows, one per 2-hop
+    walk plus one per edge, for a distinct-count to collapse."""
+    e2 = sym.select(F.col("u").alias("mid"), F.col("v").alias("w"))
+    return (
+        sym.join(e2, F.col("v") == F.col("mid"))
+        .filter(F.col("w") != F.col("u"))
+        .select("u", "w")
+        .unionAll(sym.select("u", F.col("v").alias("w")))
+    )
+
+
+@register(
+    "graph_two_hop_reach",
+    oracle=f"""
+    WITH {_COACTIVITY_CTE}{_HOP2_CTE}, deg AS (
       SELECT u, COUNT(*) AS d FROM sym GROUP BY u
     )
     SELECT h.u AS user_id,
@@ -1259,15 +1022,7 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     apply_engine_conf(spark)
     _, sym = _coactivity_graph(spark, sf_dir)
-    e2 = sym.select(
-        F.col("u").alias("mid"), F.col("v").alias("w")
-    )
-    hop2 = (
-        sym.join(e2, F.col("v") == F.col("mid"))
-        .filter(F.col("w") != F.col("u"))
-        .select("u", "w")
-        .unionAll(sym.select("u", F.col("v").alias("w")))
-    )
+    hop2 = _two_hop(sym)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     return (
         hop2.join(deg, "u")
@@ -1284,18 +1039,18 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_MAX_DEPTH = 3  # bounded-depth closure from the smallest-id seed
 
 
-def _bfs_recursion_sql(sym_src: str) -> str:
+def _bfs_recursion_sql(sym_src: str, graph_cte: str = "") -> str:
     """The dialect-shared RECURSION text (Spark 4 executes
     `WITH RECURSIVE` natively since SPARK-24497; DuckDB always has),
-    parameterized only by the symmetric-edge relation: the engine
-    recurses over the MATERIALIZED (localCheckpoint) edge view —
-    Spark re-evaluates non-recursive CTEs at every recursion level,
-    so recursing over the raw edge-build chain re-ran the whole
-    co-activity build per level (measured 23s at sf0.1; checkpointed
-    form is seconds) — while the oracle inlines the same build as
-    CTEs (DuckDB materializes them once)."""
+    parameterized by the symmetric-edge relation and the CTEs that
+    define it: the engine recurses over the MATERIALIZED
+    (localCheckpoint) edge view — Spark re-evaluates non-recursive
+    CTEs at every recursion level, so recursing over the raw
+    edge-build chain re-ran the whole co-activity build per level
+    (measured 23s at sf0.1; checkpointed form is seconds) — while the
+    oracle puts :data:`_COACTIVITY_CTE` ahead of the same recursion."""
     return f"""
-    WITH RECURSIVE seed AS (
+    WITH RECURSIVE {graph_cte}seed AS (
       SELECT MIN(u) AS u FROM {sym_src}
     ), walk(u, depth) AS (
       SELECT u, 0 FROM seed WHERE u IS NOT NULL
@@ -1312,40 +1067,10 @@ def _bfs_recursion_sql(sym_src: str) -> str:
     """
 
 
-def _bfs_oracle() -> str:
-    """Oracle: the shared co-activity edge CTEs inlined ahead of the
-    SAME recursion text the engine runs (over its checkpointed sym
-    view)."""
-    recursion = _bfs_recursion_sql("sym")
-    # splice the edge build between WITH RECURSIVE and seed
-    head, tail = recursion.split("seed AS (", 1)
-    return (
-        head
-        + f"""cells AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
-    ), hours_ok AS (
-      SELECT h FROM cells GROUP BY h
-      HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET_SIZE}
-    ), pair_counts AS (
-      SELECT a.user_id AS u1, b.user_id AS u2, COUNT(*) AS c
-      FROM cells a JOIN cells b ON a.h = b.h AND a.user_id < b.user_id
-      JOIN hours_ok ho ON ho.h = a.h
-      GROUP BY a.user_id, b.user_id
-    ), cut AS (
-      SELECT {EDGE_FACTOR} * AVG(c) AS threshold FROM pair_counts
-    ), edges AS (
-      SELECT u1, u2 FROM pair_counts CROSS JOIN cut
-      WHERE c > cut.threshold
-    ), sym AS (
-      SELECT u1 AS u, u2 AS v FROM edges
-      UNION ALL
-      SELECT u2 AS u, u1 AS v FROM edges
-    ), seed AS ("""
-        + tail
-    )
-
-
-@register("graph_reach_bfs_recursive", oracle=_bfs_oracle())
+@register(
+    "graph_reach_bfs_recursive",
+    oracle=_bfs_recursion_sql("sym", _COACTIVITY_CTE + ","),
+)
 def graph_reach_bfs_recursive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1519,14 +1244,8 @@ HYPERBALL_TOL = 0.05  # per-node |est − exact| ≤ tol·exact (+1 slack)
 
 @register(
     "graph_hyperball_reach_floor",
-    oracle=_EDGE_CTE_HEAD
-    + """, hop2 AS (
-      SELECT e1.u, e2.v AS w
-      FROM sym e1 JOIN sym e2 ON e2.u = e1.v
-      WHERE e2.v <> e1.u
-      UNION ALL
-      SELECT u, v AS w FROM sym
-    )
+    oracle=f"""
+    WITH {_COACTIVITY_CTE}{_HOP2_CTE}
     SELECT h.u AS user_id,
            CAST(COUNT(DISTINCT h.w) AS BIGINT) AS reach_2hop,
            TRUE AS within_tol
@@ -1581,14 +1300,7 @@ def graph_hyperball_reach_floor(
             ).alias("est")
         )
     )
-    e2 = sym.select(F.col("u").alias("mid"), F.col("v").alias("w"))
-    hop2 = (
-        sym.join(e2, F.col("v") == F.col("mid"))
-        .filter(F.col("w") != F.col("u"))
-        .select("u", "w")
-        .unionAll(sym.select("u", F.col("v").alias("w")))
-    )
-    exact = hop2.groupBy("u").agg(
+    exact = _two_hop(sym).groupBy("u").agg(
         F.countDistinct("w").alias("reach_2hop")
     )
     closed_exact = F.col("reach_2hop") + 1  # the ball includes self

@@ -2435,7 +2435,10 @@ def decode_png(content: bytes, want_pixels: bool = True):
     # bytes per UNPACKED pixel (one byte per sample at depths <= 8,
     # two at depth 16); the merge below works in these units
     bpp_u = channels * (2 if depth == 16 else 1)
-    raw = zlib.decompress(idat)
+    try:
+        raw = zlib.decompress(idat)
+    except zlib.error as exc:
+        raise ValueError(f"PNG IDAT stream does not inflate: {exc}") from exc
     if interlace == 0:
         out, _ = _png_subimage(raw, 0, width, height, channels, depth)
     else:  # Adam7: seven independently-filtered sub-images, merged

@@ -1,5 +1,6 @@
-"""Shared fixtures: one SparkSession per test run + golden-grid file
-builders for every supported format (FIXTURES.md schemas).
+"""Shared fixtures: one SparkSession per test run, the engine-vs-
+DuckDB oracle comparison, the skewed events corpus, and golden-grid
+file builders for every supported format (FIXTURES.md schemas).
 
 The golden grid is 6 rows × 4 logical columns of (id, name, qty,
 note); format twists (ragged row, quoted cells, exotic delimiters,
@@ -8,6 +9,9 @@ multi-sheet fan-out) follow FIXTURES.md.
 
 from __future__ import annotations
 
+import datetime
+import os
+import sys
 import zipfile
 from pathlib import Path
 
@@ -47,6 +51,88 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def gate_compare(spark):
+    """``gate_compare(sf_dir, name)`` asserts that query ``name`` on
+    Spark and its DuckDB oracle over the tables present in ``sf_dir``
+    have the same ``tools/check_oracle.py`` frame fingerprint."""
+    import duckdb
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check_oracle import frame_fingerprint
+
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+
+    def compare(sf_dir: str, query_name: str) -> None:
+        sdf = plans.QUERIES[query_name](spark, sf_dir)
+        s_fp = frame_fingerprint(
+            sdf.columns, [tuple(r) for r in sdf.collect()]
+        )
+        con = duckdb.connect()
+        for t in ("events", "documents", "embeddings", "part", "orders",
+                  "customer"):
+            path = f"{sf_dir}/{t}.parquet"
+            if os.path.isdir(path):
+                path = f"{path}/*.parquet"
+            elif not os.path.exists(path):
+                continue
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
+            )
+        cur = con.execute(plans.ORACLES[query_name])
+        cols = [d[0] for d in cur.description]
+        d_fp = frame_fingerprint(cols, cur.fetchall())
+        assert s_fp == d_fp, f"{query_name} diverges from its oracle"
+
+    return compare
+
+
+@pytest.fixture()
+def skewed_events_dir(spark, tmp_path):
+    """User 1 owns ~half the stream (the hot-key shape); the rest is
+    spread thin. Timestamps interleave so sessions split and merge."""
+    base = datetime.datetime(2024, 1, 1)
+    rows = []
+    eid = 0
+    for i in range(600):  # hot user: bursts with occasional gaps
+        gap_min = 2 if i % 50 else 120
+        rows.append(
+            (
+                eid,
+                base + datetime.timedelta(minutes=i * gap_min % 100000),
+                1,
+                ["view", "click", "purchase"][i % 3],
+                float(i % 97) + 0.25,
+                None,
+            )
+        )
+        eid += 1
+    for u in range(2, 102):  # 100 cold users, 6 events each
+        for i in range(6):
+            rows.append(
+                (
+                    eid,
+                    base + datetime.timedelta(hours=u, minutes=i * 7),
+                    u,
+                    "view" if i % 2 else "click",
+                    1.5 * i,
+                    None,
+                )
+            )
+            eid += 1
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    )
+    df.coalesce(2).write.mode("overwrite").parquet(
+        str(tmp_path / "events.parquet")
+    )
+    return str(tmp_path)
+
+
+@pytest.fixture(scope="session")
 def fixture_dir(tmp_path_factory) -> Path:
     return tmp_path_factory.mktemp("format_fixtures")
 
@@ -55,6 +141,14 @@ def fixture_dir(tmp_path_factory) -> Path:
 def txt_file(fixture_dir: Path) -> Path:
     p = fixture_dir / "golden.txt"
     p.write_text("\n".join("\t".join(r) for r in GRID) + "\n")
+    return p
+
+
+@pytest.fixture(scope="session")
+def vals_txt_file(fixture_dir: Path) -> Path:
+    """The reference example.txt's shape: 4×4 tab-separated cells."""
+    p = fixture_dir / "vals.txt"
+    p.write_text("\n".join("\t".join(["Vals"] * 4) for _ in range(4)) + "\n")
     return p
 
 

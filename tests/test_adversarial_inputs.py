@@ -17,91 +17,11 @@ exercises that the clean synthetic testdata never does:
 from __future__ import annotations
 
 import datetime
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
 
-
-def _fingerprint(cols, rows):
-    from check_oracle import frame_fingerprint
-
-    return frame_fingerprint(cols, rows)
-
-
-def _gate_compare(spark, sf_dir, query_name):
-    import os
-
-    import duckdb
-
-    from almost_any_file_to_pandas_spark import plans
-
-    plans.load_all()
-    sdf = plans.QUERIES[query_name](spark, sf_dir)
-    s_fp = _fingerprint(sdf.columns, [tuple(r) for r in sdf.collect()])
-    con = duckdb.connect()
-    for t in ("events", "documents", "embeddings", "part", "orders",
-              "customer"):
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        elif not os.path.exists(path):
-            continue
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-        )
-    cur = con.execute(plans.ORACLES[query_name])
-    cols = [d[0] for d in cur.description]
-    d_fp = _fingerprint(cols, cur.fetchall())
-    assert s_fp == d_fp, f"{query_name} diverges on adversarial shape"
-
-
-@pytest.fixture()
-def skewed_events_dir(spark, tmp_path):
-    """User 1 owns ~half the stream (the hot-key shape); the rest is
-    spread thin. Timestamps interleave so sessions split and merge."""
-    base = datetime.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    for i in range(600):  # hot user: bursts with occasional gaps
-        gap_min = 2 if i % 50 else 120
-        rows.append(
-            (
-                eid,
-                base + datetime.timedelta(minutes=i * gap_min % 100000),
-                1,
-                ["view", "click", "purchase"][i % 3],
-                float(i % 97) + 0.25,
-                None,
-            )
-        )
-        eid += 1
-    for u in range(2, 102):  # 100 cold users, 6 events each
-        for i in range(6):
-            rows.append(
-                (
-                    eid,
-                    base + datetime.timedelta(hours=u, minutes=i * 7),
-                    u,
-                    "view" if i % 2 else "click",
-                    1.5 * i,
-                    None,
-                )
-            )
-            eid += 1
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.coalesce(2).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
-    return str(tmp_path)
-
-
-def test_hot_key_shapes_match_oracle(spark, skewed_events_dir):
+def test_hot_key_shapes_match_oracle(gate_compare, skewed_events_dir):
     for q in (
         "events_sessionization",
         "events_sessionization_incremental",
@@ -121,7 +41,7 @@ def test_hot_key_shapes_match_oracle(spark, skewed_events_dir):
         "events_ab_srm_check",
         "events_ab_power_mde",
     ):
-        _gate_compare(spark, skewed_events_dir, q)
+        gate_compare(skewed_events_dir, q)
 
 
 @pytest.fixture()
@@ -145,13 +65,13 @@ def megadoc_dir(spark, tmp_path):
     return str(tmp_path)
 
 
-def test_megadoc_through_text_kernels(spark, megadoc_dir):
+def test_megadoc_through_text_kernels(spark, gate_compare, megadoc_dir):
     from almost_any_file_to_pandas_spark import plans
 
     plans.load_all()
     # oracle-compared where the oracle stays cheap on a megadoc
     for q in ("text_token_count", "text_token_budget_trim", "dedup_exact"):
-        _gate_compare(spark, megadoc_dir, q)
+        gate_compare(megadoc_dir, q)
     # engine-only smoke for the heavy kernels (the DuckDB side of the
     # shingle oracles is quadratic-ish on a 150k-token doc)
     out = plans.QUERIES["dedup_minhash_lsh"](spark, megadoc_dir).collect()
@@ -182,7 +102,7 @@ def empty_dir(spark, tmp_path):
     return str(tmp_path)
 
 
-def test_empty_tables_never_raise(spark, empty_dir):
+def test_empty_tables_never_raise(spark, gate_compare, empty_dir):
     """Zero-row inputs through one representative per family: the
     engine must plan and execute (no exception); row counts are
     whatever the aggregate shape implies, compared against the oracle
@@ -202,7 +122,7 @@ def test_empty_tables_never_raise(spark, empty_dir):
         rows = plans.QUERIES[q](spark, empty_dir).collect()
         assert rows is not None  # executed without raising
     # gate-level agreement on an aggregate census over nothing
-    _gate_compare(spark, empty_dir, "events_user_erasure_audit")
+    gate_compare(empty_dir, "events_user_erasure_audit")
 
 
 @pytest.fixture()
@@ -259,14 +179,16 @@ def funnel_boundary_dir(spark, tmp_path):
     return str(tmp_path)
 
 
-def test_window_funnel_boundaries(spark, funnel_boundary_dir):
+def test_window_funnel_boundaries(
+    spark, gate_compare, funnel_boundary_dir
+):
     """The greedy one-pass window implementation must equal the
     existential-join oracle on every boundary, AND both must equal
     the hand-derived levels."""
     from almost_any_file_to_pandas_spark import plans
 
     plans.load_all()
-    _gate_compare(spark, funnel_boundary_dir, "events_funnel_within_window")
+    gate_compare(funnel_boundary_dir, "events_funnel_within_window")
     got = {
         r.user_id: r.funnel_level
         for r in plans.QUERIES["events_funnel_within_window"](
@@ -308,13 +230,15 @@ def editdist_boundary_dir(spark, tmp_path):
     return str(tmp_path)
 
 
-def test_passjoin_edit_distance_boundaries(spark, editdist_boundary_dir):
+def test_passjoin_edit_distance_boundaries(
+    spark, gate_compare, editdist_boundary_dir
+):
     """PassJoin must equal the full pairwise oracle on the crafted
     boundary corpus AND produce the hand-derived pair set."""
     from almost_any_file_to_pandas_spark import plans
 
     plans.load_all()
-    _gate_compare(spark, editdist_boundary_dir, "dedup_edit_distance_pairs")
+    gate_compare(editdist_boundary_dir, "dedup_edit_distance_pairs")
     got = {
         (r.doc_a, r.doc_b): r.edit_distance
         for r in plans.QUERIES["dedup_edit_distance_pairs"](
@@ -391,7 +315,7 @@ def wallet_boundary_dir(spark, tmp_path):
 
 
 def test_wallet_reflection_equals_sequential_fold(
-    spark, wallet_boundary_dir
+    spark, gate_compare, wallet_boundary_dir
 ):
     """The windowed reflection identity must equal the literal
     per-user sequential fold AND the SQL oracle on every floor
@@ -425,7 +349,7 @@ def test_wallet_reflection_equals_sequential_fold(
     assert got == expected
     assert expected[1] == (3, 1, 1000, 500)   # floor bound mid-stream
     assert expected[4] == (2, 2, 0, 0)        # pinned at zero
-    _gate_compare(spark, sf_dir, "events_user_balance_reflect")
+    gate_compare(sf_dir, "events_user_balance_reflect")
 
 
 @pytest.fixture()
@@ -458,7 +382,9 @@ def skyline_parts_dir(spark, tmp_path):
     return str(tmp_path)
 
 
-def test_skyline_price_collision_across_sizes(spark, skyline_parts_dir):
+def test_skyline_price_collision_across_sizes(
+    spark, gate_compare, skyline_parts_dir
+):
     from almost_any_file_to_pandas_spark import plans
 
     plans.load_all()
@@ -469,4 +395,4 @@ def test_skyline_price_collision_across_sizes(spark, skyline_parts_dir):
         ).collect()
     }
     assert got == {2, 4, 6, 7}
-    _gate_compare(spark, skyline_parts_dir, "part_skyline_frontier")
+    gate_compare(skyline_parts_dir, "part_skyline_frontier")

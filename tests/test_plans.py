@@ -25,6 +25,7 @@ across scale factors; sf0.001 keeps plan construction fast.
 
 from __future__ import annotations
 
+import datetime
 import re
 
 import pytest
@@ -1452,13 +1453,126 @@ def test_session_r5e_plan_shapes(spark):
     assert "Join" not in pm
     assert pm.count("Window") == 1  # both lags share one spec
 
-    pc = plan("graph_kcore_trajectory")
+    from almost_any_file_to_pandas_spark.operators.graph import (
+        CC_DRIVER_EDGE_CAP,
+    )
+
+    kcore = plans.QUERIES["graph_kcore_trajectory"](spark, sf)
+    pc = kcore._jdf.queryExecution().executedPlan().toString()
     assert pc.count("Scan parquet") == 0  # all rounds checkpointed
     assert "CartesianProduct" not in pc
-    assert pc.count("Union") >= 1
+    # sf0.001's edge list is under the cap, so the driver regime peels
+    # it and the plan scans the driver's rows; the distributed loop's
+    # Union is pinned by the next test
+    (n_edges0,) = [r.n_edges for r in kcore.collect() if r.round == 0]
+    assert n_edges0 < CC_DRIVER_EDGE_CAP
+    assert "Scan ExistingRDD" in pc and "Union" not in pc
 
     pq = plan("sim_mutual_knn_pairs")
     assert "CartesianProduct" not in pq
     # the reciprocal join reads the checkpointed edge RDD, never the
     # vector corpus a second time
     assert pq.count("Scan parquet") == 0
+
+
+def _events_dir(spark, path, pairs) -> str:
+    """An events corpus at ``path`` where each (u, v, n_hours) in
+    ``pairs`` makes users u and v the only ones active in n fresh
+    hours."""
+    base = datetime.datetime(2024, 1, 1)
+    rows, hour = [], 0
+    for u, v, n in pairs:
+        for _ in range(n):
+            ts = base + datetime.timedelta(hours=hour)
+            rows += [(len(rows), ts, u), (len(rows) + 1, ts, v)]
+            hour += 1
+    spark.createDataFrame(
+        [(e, ts, u, "view", 1.0, None) for e, ts, u in rows],
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    ).coalesce(1).write.parquet(f"{path}/events.parquet")
+    return str(path)
+
+
+@pytest.fixture(scope="module")
+def kcore_hand_dir(spark, tmp_path_factory):
+    """Clique {1,2,3,4} with the tail 4—5—6, every edge 20 co-active
+    hours, plus 12 one-hour noise pairs that keep the mean co-count
+    low. The 2-core peel runs (6 vertices, 8 edges) → (5, 7) →
+    (4, 6) → (4, 6)."""
+    strong = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5),
+              (5, 6)]
+    noise = [(100 + 2 * i, 101 + 2 * i, 1) for i in range(12)]
+    return _events_dir(
+        spark, tmp_path_factory.mktemp("kcore_hand"),
+        [(u, v, 20) for u, v in strong] + noise,
+    )
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", "skewed", "hand"])
+def test_kcore_driver_regime_matches_distributed(
+    spark, monkeypatch, request, corpus
+):
+    """Both regimes of graph_kcore_trajectory give the same trajectory:
+    once at the default CC_DRIVER_EDGE_CAP (driver peel) and once with
+    the cap at 0, which forces the distributed loop and its Union."""
+    from almost_any_file_to_pandas_spark.operators import graph
+
+    sf = {
+        "sf0.001": lambda: SF_DIR,
+        "skewed": lambda: request.getfixturevalue("skewed_events_dir"),
+        "hand": lambda: request.getfixturevalue("kcore_hand_dir"),
+    }[corpus]()
+
+    def run():
+        df = graph.graph_kcore_trajectory(spark, sf)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in df.collect()), plan
+
+    driver_rows, driver_plan = run()
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 0)
+    dist_rows, dist_plan = run()
+    assert "Union" not in driver_plan
+    assert "Union" in dist_plan
+    assert dist_rows == driver_rows
+    if corpus == "hand":
+        assert driver_rows == [(0, 6, 8), (1, 5, 7), (2, 4, 6), (3, 4, 6)]
+
+
+COACTIVITY_QUERIES = [
+    "events_cooccurrence_triangles",
+    "graph_pagerank_floor",
+    "graph_degree_assortativity",
+    "graph_label_propagation",
+    "graph_modularity_score",
+    "graph_kcore_trajectory",
+    "graph_jaccard_link_prediction",
+    "graph_resource_allocation_links",
+    "graph_degree_distribution",
+    "graph_two_hop_reach",
+    "graph_reach_bfs_recursive",
+    "graph_hyperball_reach_floor",
+]
+
+
+@pytest.fixture(scope="module")
+def edgeless_events_dir(spark, tmp_path_factory):
+    """User 7 alone in three hours: (hour, user) cells but no
+    co-active pair, hence no edge."""
+    return _events_dir(
+        spark, tmp_path_factory.mktemp("edgeless"), [(7, 7, 3)]
+    )
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", "edgeless"])
+@pytest.mark.parametrize("name", COACTIVITY_QUERIES)
+def test_coactivity_query_matches_oracle(
+    gate_compare, request, name, corpus
+):
+    """Every operator on the shared hour co-activity graph matches its
+    DuckDB oracle, on sf0.001 and on a corpus with no edge."""
+    sf = (
+        SF_DIR if corpus == "sf0.001"
+        else request.getfixturevalue("edgeless_events_dir")
+    )
+    gate_compare(sf, name)

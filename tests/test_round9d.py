@@ -315,6 +315,10 @@ def test_ico_round_trip_and_gates():
     good = synth_ico([(4, 4)])
     with pytest.raises(ValueError):
         decode_ico(good[:-3])
+    # a patched header leaves an IDAT stream that does not inflate
+    two = synth_ico([(16, 8), (8, 16)])
+    with pytest.raises(ValueError):
+        decode_ico(two[:8] + b"\x00" * 6 + b"!" + two[15:])
     # a non-PNG member hits the honest DIB gate
     blob = bytearray(synth_ico([(4, 4)]))
     png_off = 6 + 16
