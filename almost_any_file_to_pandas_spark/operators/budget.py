@@ -75,9 +75,11 @@ _STOP_HITS_SQL = " + ".join(
       WHERE f.cum_tokens <= b.budget
       GROUP BY f.source
     )
-    SELECT b.source, b.n_docs, b.tokens_total, b.budget,
+    SELECT b.source, b.n_docs,
+           CAST(b.tokens_total AS BIGINT) AS tokens_total,
+           CAST(b.budget AS BIGINT) AS budget,
            COALESCE(k.n_kept, 0) AS n_kept,
-           COALESCE(k.tokens_kept, 0) AS tokens_kept
+           CAST(COALESCE(k.tokens_kept, 0) AS BIGINT) AS tokens_kept
     FROM budgets b LEFT JOIN kept k ON b.source = k.source
     """,
 )
@@ -161,33 +163,10 @@ def text_token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate + boundary re-scan), each a plain hash aggregate/join;
 # the only sorts are over level censuses (bounded cardinality) and
 # one q_key level per source.
-_TRIM_ORACLE = ORACLES["text_token_budget_trim"]
-
-# Round-8 gate refresh (r7 verdict Next-round #1): the driver's gate
-# harness caches results per query NAME (round 7's six renamed slots
-# were freshly computed; this row's unchanged name carried a
-# byte-identical round-3 result for five rounds while passing every
-# independent re-execution). Identical callable + oracle under a new
-# name forces re-evaluation; the old name stays registered post-gate.
-register("text_token_budget_trim_v2", oracle=_TRIM_ORACLE)(
-    text_token_budget_trim
+@register(
+    "text_token_budget_trim_twopass",
+    oracle=ORACLES["text_token_budget_trim"],
 )
-
-# Round-9 gate experiment (r8 verdict Next-round #1): the v2 rename
-# reused identical callable + oracle text and stayed red. This twin
-# changes the oracle TEXT and the Spark PLAN trivially while keeping
-# outputs value-identical — see plans.register_neutral_twin.
-from almost_any_file_to_pandas_spark.plans import register_neutral_twin
-
-register_neutral_twin(
-    "text_token_budget_trim_r9",
-    "text_token_budget_trim",
-    ["source", "n_docs", "tokens_total", "budget", "n_kept",
-     "tokens_kept"],
-)
-
-
-@register("text_token_budget_trim_twopass", oracle=_TRIM_ORACLE)
 def text_token_budget_trim_twopass(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -455,10 +455,12 @@ WINSOR_HI = 0.99
            ROUND(ANY_VALUE(hi), 6) AS p99,
            -- COALESCE: zero clipped rows on an empty corpus (the
            -- Spark side's count_if says 0; SUM over no rows, NULL)
-           COALESCE(SUM(CASE WHEN l_extendedprice < lo
-                             THEN 1 ELSE 0 END), 0) AS n_clipped_low,
-           COALESCE(SUM(CASE WHEN l_extendedprice > hi
-                             THEN 1 ELSE 0 END), 0) AS n_clipped_high,
+           CAST(COALESCE(SUM(CASE WHEN l_extendedprice < lo
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT)
+             AS n_clipped_low,
+           CAST(COALESCE(SUM(CASE WHEN l_extendedprice > hi
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT)
+             AS n_clipped_high,
            CAST(SUM(CAST(GREATEST(LEAST(l_extendedprice, hi), lo)
                          AS DECIMAL(25,6))) AS DOUBLE) AS clipped_sum
     FROM lineitem CROSS JOIN bounds
@@ -529,8 +531,10 @@ DRIFT_BINS = 10
       FROM lineitem CROSS JOIN bounds
     ), per_bin AS (
       SELECT bin_idx,
-             SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS n_base,
-             SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS n_delta
+             CAST(SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_base,
+             CAST(SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_delta
       FROM binned GROUP BY bin_idx
     ), totals AS (
       SELECT SUM(n_base) AS tb, SUM(n_delta) AS td FROM per_bin

@@ -32,11 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import (
-    ORACLES,
-    register,
-    table_wide,
-)
+from almost_any_file_to_pandas_spark.plans import register, table_wide
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 
@@ -62,13 +58,15 @@ from almost_any_file_to_pandas_spark.session import apply_engine_conf
       GROUP BY dim ORDER BY COUNT(*) DESC, dim ASC LIMIT 1
     )
     SELECT COUNT(*) AS n_vectors,
-           SUM(CASE WHEN is_null THEN 1 ELSE 0 END) AS n_null,
+           CAST(SUM(CASE WHEN is_null THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_null,
            ANY_VALUE(modal_dim) AS modal_dim,
-           SUM(CASE WHEN NOT is_null AND dim <> modal_dim
-                    THEN 1 ELSE 0 END) AS n_dim_mismatch,
-           SUM(CASE WHEN nonfinite THEN 1 ELSE 0 END) AS n_nonfinite,
-           SUM(CASE WHEN NOT is_null AND NOT nonfinite AND sumsq = 0
-                    THEN 1 ELSE 0 END) AS n_zero_norm,
+           CAST(SUM(CASE WHEN NOT is_null AND dim <> modal_dim
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_dim_mismatch,
+           CAST(SUM(CASE WHEN nonfinite THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_nonfinite,
+           CAST(SUM(CASE WHEN NOT is_null AND NOT nonfinite AND sumsq = 0
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_norm,
            CAST(FLOOR(sqrt(MIN(CASE WHEN NOT is_null AND NOT nonfinite
                                     THEN sumsq END)) * 1000000 + 0.5)
                 AS BIGINT) AS min_norm_q6,
@@ -98,32 +96,6 @@ def embedding_hygiene_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     apply_engine_conf(spark)
     return hygiene_report(table_wide(spark, sf_dir, "embeddings"))
-
-
-# Round-8 gate refresh (r7 verdict Next-round #1): the driver's gate
-# harness caches results per query NAME (round 7's six renamed slots
-# were freshly computed; this row's unchanged name carried a
-# byte-identical round-3 result for five rounds while passing every
-# independent re-execution). Identical callable + oracle under a new
-# name forces re-evaluation; the old name stays registered post-gate.
-register(
-    "embedding_hygiene_report_v2",
-    oracle=ORACLES["embedding_hygiene_report"],
-)(embedding_hygiene_report)
-
-# Round-9 gate experiment (r8 verdict Next-round #1): the v2 rename
-# reused identical callable + oracle text and stayed red. This twin
-# changes the oracle TEXT and the Spark PLAN trivially while keeping
-# outputs value-identical — see plans.register_neutral_twin.
-from almost_any_file_to_pandas_spark.plans import register_neutral_twin
-
-register_neutral_twin(
-    "embedding_hygiene_report_r9",
-    "embedding_hygiene_report",
-    ["n_vectors", "n_null", "modal_dim", "n_dim_mismatch",
-     "n_nonfinite", "n_zero_norm", "min_norm_q6", "max_norm_q6",
-     "avg_norm_q6"],
-)
 
 
 def hygiene_report(emb: DataFrame) -> DataFrame:

@@ -174,7 +174,14 @@ def _driver_lloyd(rows: list, k: int) -> list:
             for dim in range(mat.shape[1]):
                 # SUM(CAST(val AS DECIMAL(30,15))): JVM casts via
                 # Double.toString → setScale(15, HALF_UP); repr()
-                # produces the same shortest decimal string
+                # produces the same shortest decimal string.
+                # Assumption: Python repr() == JVM Double.toString.
+                # Only JDK >= 19 guarantees the shortest string
+                # (JDK-4511638); JDK 17 (tested on 17.0.20) may print
+                # a longer one for some doubles, which could round the
+                # scale-15 cast differently.
+                # test_kmeans_driver_regime_matches_distributed
+                # (tests/test_round10_opt.py) is the guard.
                 s = sum(
                     Decimal(repr(float(x))).quantize(
                         q15, ROUND_HALF_UP

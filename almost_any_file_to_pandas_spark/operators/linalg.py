@@ -312,7 +312,7 @@ def pca_from_gram(rows) -> dict:
     return {
         "n_vectors": n,
         "lambda1": lam,
-        "diag_max": float(np.diag(cov).max()),
+        "max_variance": float(np.diag(cov).max()),
         "trace": float(np.trace(cov)),
         "pc1_loadings": v,
     }
@@ -355,7 +355,7 @@ def emb_pca_power_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ok = True
     else:
         ok = (
-            stats["lambda1"] >= stats["diag_max"] - eps
+            stats["lambda1"] >= stats["max_variance"] - eps
             and stats["lambda1"] <= stats["trace"] + eps
             and stats["lambda1"] >= stats["trace"] / SRC_DIMS - eps
         )

@@ -961,12 +961,12 @@ KNN_EVAL_N = 50  # anchors in the leave-one-out label-accuracy eval
       WHERE e.vec_id <> q.anchor_id
     )
     SELECT COUNT(*) AS n_anchors,
-           SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
-             AS n_correct,
+           CAST(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_correct,
            -- all-integer share (the house _q6 recipe), never a
            -- ROUND-ed float division
-           (SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
-            * 1000000) // COUNT(*) AS accuracy_q6
+           CAST((SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
+                 * 1000000) // COUNT(*) AS BIGINT) AS accuracy_q6
     FROM ranked WHERE rnk = 1
     """,
 )
@@ -2120,6 +2120,7 @@ def _kcenter_oracle() -> str:
         """
     e AS MATERIALIZED (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+      WHERE embedding IS NOT NULL
     ), sel1 AS MATERIALIZED (
       SELECT vec_id, v, 1 AS rank, CAST(NULL AS BIGINT) AS radius
       FROM e WHERE vec_id = (SELECT MIN(vec_id) FROM e)
@@ -2178,8 +2179,11 @@ def sim_kcenter_greedy_coreset(
         _sqdist_q12,
     )
 
-    emb = table_wide(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    # null vectors have no distance: both regimes skip them
+    emb = (
+        table_wide(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
     # r10 small-corpus regime (KMEANS_DRIVER_ROW_CAP pattern): the
     # greedy traversal is K−1 SEQUENTIAL corpus passes — at bench
@@ -2190,11 +2194,7 @@ def sim_kcenter_greedy_coreset(
     # (max mind, min vec_id) tie-breaks; above it the distributed
     # loop below runs unchanged.
     if emb.count() < KMEANS_DRIVER_ROW_CAP:
-        collected = sorted(
-            (r["vec_id"], list(r["v"]))
-            for r in emb.collect()
-            if r["v"] is not None
-        )
+        collected = sorted((r["vec_id"], list(r["v"])) for r in emb.collect())
         if not collected:
             return spark.createDataFrame(
                 [], schema="rank bigint, vec_id bigint, radius_q12 bigint"

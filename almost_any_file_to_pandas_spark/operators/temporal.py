@@ -138,13 +138,13 @@ ZSCORE_THRESHOLD = 3.0
              CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_v,
              CAST(SUM(CAST(
                CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-               AS DECIMAL(30,6))) AS DOUBLE) AS sum_v2
+               AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
       FROM events GROUP BY event_type
     ), quant AS (
       SELECT event_type, n_events,
              CAST(FLOOR(sum_v / n_events * 1000000 + 0.5) AS BIGINT)
                AS mean_value_q6,
-             CAST(FLOOR(sqrt(sum_v2 / n_events
+             CAST(FLOOR(sqrt(sum_vsq / n_events
                              - (sum_v / n_events) * (sum_v / n_events))
                         * 1000000 + 0.5) AS BIGINT) AS std_value_q6
       FROM stats
@@ -182,10 +182,10 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(25,6)"))
         .cast("double")
         .alias("sum_v"),
-        F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_v2"),
+        F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_vsq"),
     )
     mean = F.col("sum_v") / F.col("n_events")
-    var = F.col("sum_v2") / F.col("n_events") - mean * mean
+    var = F.col("sum_vsq") / F.col("n_events") - mean * mean
     quant = stats.select(
         "event_type",
         "n_events",
@@ -389,9 +389,10 @@ LATE_TOL_US = 600 * 1_000_000  # 10-minute candidate watermark delay
     )
     SELECT user_id,
            COUNT(*) AS n_events,
-           SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS n_out_of_order,
-           SUM(CASE WHEN late_us > {LATE_TOL_US} THEN 1 ELSE 0 END)
-             AS n_beyond_watermark,
+           CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_out_of_order,
+           CAST(SUM(CASE WHEN late_us > {LATE_TOL_US} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_beyond_watermark,
            MAX(late_us) AS max_late_us
     FROM lateness
     GROUP BY user_id
@@ -458,7 +459,7 @@ def events_late_arrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type, cohort,
              COUNT(*) AS n,
              CAST(SUM(v) AS DOUBLE) AS sum_v,
-             CAST(SUM(CAST(v6 * v6 AS DECIMAL(30,6))) AS DOUBLE) AS sum_v2
+             CAST(SUM(CAST(v6 * v6 AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
       FROM tagged GROUP BY event_type, cohort
     ), sides AS (
       SELECT event_type,
@@ -466,8 +467,8 @@ def events_late_arrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
              MAX(CASE WHEN cohort = 1 THEN n END) AS n_b,
              MAX(CASE WHEN cohort = 0 THEN sum_v END) AS sum_a,
              MAX(CASE WHEN cohort = 1 THEN sum_v END) AS sum_b,
-             MAX(CASE WHEN cohort = 0 THEN sum_v2 END) AS sum2_a,
-             MAX(CASE WHEN cohort = 1 THEN sum_v2 END) AS sum2_b
+             MAX(CASE WHEN cohort = 0 THEN sum_vsq END) AS sum2_a,
+             MAX(CASE WHEN cohort = 1 THEN sum_vsq END) AS sum2_b
       FROM stats GROUP BY event_type
     )
     SELECT event_type, n_a, n_b,
@@ -505,15 +506,15 @@ def events_ab_cohort_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count("*").alias("n"),
         F.sum(v).cast("double").alias("sum_v"),
-        F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_v2"),
+        F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_vsq"),
     )
     sides = stats.groupBy("event_type").agg(
         F.max(F.when(F.col("cohort") == 0, F.col("n"))).alias("n_a"),
         F.max(F.when(F.col("cohort") == 1, F.col("n"))).alias("n_b"),
         F.max(F.when(F.col("cohort") == 0, F.col("sum_v"))).alias("sum_a"),
         F.max(F.when(F.col("cohort") == 1, F.col("sum_v"))).alias("sum_b"),
-        F.max(F.when(F.col("cohort") == 0, F.col("sum_v2"))).alias("sum2_a"),
-        F.max(F.when(F.col("cohort") == 1, F.col("sum_v2"))).alias("sum2_b"),
+        F.max(F.when(F.col("cohort") == 0, F.col("sum_vsq"))).alias("sum2_a"),
+        F.max(F.when(F.col("cohort") == 1, F.col("sum_vsq"))).alias("sum2_b"),
     )
     mean_a = F.col("sum_a") / F.col("n_a")
     mean_b = F.col("sum_b") / F.col("n_b")
@@ -543,7 +544,8 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
     oracle=f"""
     SELECT CAST(ts AS DATE) AS day,
            {", ".join(
-               f"SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS {t}"
+               f"CAST(SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)"
+               f" AS BIGINT) AS {t}"
                for t in EVENT_TYPES
            )},
            CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -3036,13 +3038,13 @@ ANOMALY_CURVE_DECI = (15, 20, 30, 40)  # σ-multiplier tenths
              CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_v,
              CAST(SUM(CAST(
                CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-               AS DECIMAL(30,6))) AS DOUBLE) AS sum_v2
+               AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
       FROM events GROUP BY event_type
     ), quant AS (
       SELECT event_type, n_events,
              CAST(FLOOR(sum_v / n_events * 1000000 + 0.5) AS BIGINT)
                AS mean_q6,
-             CAST(FLOOR(sqrt(sum_v2 / n_events
+             CAST(FLOOR(sqrt(sum_vsq / n_events
                              - (sum_v / n_events) * (sum_v / n_events))
                         * 1000000 + 0.5) AS BIGINT) AS std_q6
       FROM stats
@@ -3090,10 +3092,10 @@ def events_anomaly_threshold_curve(
         .alias("sum_v"),
         F.sum((v6 * v6).cast("decimal(30,6)"))
         .cast("double")
-        .alias("sum_v2"),
+        .alias("sum_vsq"),
     )
     mean = F.col("sum_v") / F.col("n_events")
-    var = F.col("sum_v2") / F.col("n_events") - mean * mean
+    var = F.col("sum_vsq") / F.col("n_events") - mean * mean
     quant = stats.select(
         "event_type",
         "n_events",
@@ -3243,18 +3245,18 @@ AB_DELTA_INV = 20  # failure probability δ = 1/20 = 5%
              CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_v,
              CAST(SUM(CAST(
                CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-               AS DECIMAL(30,6))) AS DOUBLE) AS sum_v2
+               AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
       FROM events GROUP BY event_type
     ), es(e) AS (VALUES {", ".join(f"({e})" for e in AB_EPS_DECI)})
     SELECT s.event_type,
            CAST(es.e AS BIGINT) AS eps_deci,
            CAST(s.n_events AS BIGINT) AS n_available,
-           CAST(CEIL((s.sum_v2 / s.n_events
+           CAST(CEIL((s.sum_vsq / s.n_events
                       - (s.sum_v / s.n_events) * (s.sum_v / s.n_events))
                      * {AB_DELTA_INV} * 100 / (es.e * es.e))
                 AS BIGINT) AS n_required,
            CAST(CASE WHEN s.n_events >= CEIL(
-                  (s.sum_v2 / s.n_events
+                  (s.sum_vsq / s.n_events
                    - (s.sum_v / s.n_events) * (s.sum_v / s.n_events))
                   * {AB_DELTA_INV} * 100 / (es.e * es.e))
                 THEN 1 ELSE 0 END AS BIGINT) AS feasible
@@ -3290,11 +3292,11 @@ def events_ab_sample_size_chebyshev(
         .alias("sum_v"),
         F.sum((v6 * v6).cast("decimal(30,6)"))
         .cast("double")
-        .alias("sum_v2"),
+        .alias("sum_vsq"),
     )
     es = spark.createDataFrame([(e,) for e in AB_EPS_DECI], "e long")
     var = (
-        "(sum_v2 / n_events - (sum_v / n_events) * (sum_v / n_events))"
+        "(sum_vsq / n_events - (sum_v / n_events) * (sum_v / n_events))"
     )
     nreq = f"CEIL({var} * {AB_DELTA_INV} * 100 / (e * e))"
     return (

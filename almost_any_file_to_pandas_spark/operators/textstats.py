@@ -1857,10 +1857,11 @@ def text_cross_lang_contamination(
     SELECT l.lang,
            COUNT(*) AS n_scored,
            m.median_score_q9,
-           SUM(CASE WHEN l.score >= m.median_score_q9
-                    THEN 1 ELSE 0 END) AS n_kept,
-           SUM(CASE WHEN l.score >= m.median_score_q9
-                    THEN l.n_tokens ELSE 0 END) AS kept_tokens
+           CAST(SUM(CASE WHEN l.score >= m.median_score_q9
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           CAST(SUM(CASE WHEN l.score >= m.median_score_q9
+                         THEN l.n_tokens ELSE 0 END) AS BIGINT)
+             AS kept_tokens
     FROM labelled l JOIN med m ON l.lang = m.lang
     GROUP BY l.lang, m.median_score_q9
     """,

@@ -4,7 +4,10 @@ callable plus (when SQL-expressible) a DuckDB oracle SQL string.
 
 The registry is the single source for ``__spark_entry__.queries()`` /
 ``oracle_sql()``. Column names are aliased identically on both sides —
-the driver hash-compares after sorting columns by name.
+the driver hash-compares after sorting columns by name. Oracle output
+columns keep to the types in ``tools/check_oracle.ORACLE_TYPES``: an
+integer ``SUM`` is ``HUGEINT`` in DuckDB and must be cast to
+``BIGINT``, or the driver renders it as a float.
 """
 
 from __future__ import annotations
@@ -37,61 +40,6 @@ def register(name: str, oracle: Optional[str] = None):
     return decorator
 
 
-def register_neutral_twin(new_name: str, parent: str, cols: list[str]) -> None:
-    """Round-9 gate experiment (r8 verdict Next-round #1): register a
-    value-identical twin of an already-registered query where BOTH the
-    oracle SQL text and the Spark physical plan differ trivially-but-
-    detectably from the parent's.
-
-    History of the three fossil gate rows: red in CORRECTNESS_r03..r08
-    with rows/schema matching and only the value hash diverging, while
-    passing every independent re-execution (tools/check_oracle at
-    sf0.01, the driver-recorded bench digest, pytest). The round-8
-    experiment renamed them with IDENTICAL callables + IDENTICAL
-    oracle SQL in the same gate slots — still red, which falsifies a
-    per-NAME cache. The remaining hypothesis is a cache keyed on
-    content (oracle text / callable identity) or a canonicalization
-    divergence. This third-generation twin changes the content hash on
-    both sides while keeping outputs value-identical:
-
-    * oracle: the parent's SQL wrapped as a named CTE with an explicit
-      column projection and a no-op ``WHERE 1=1`` — different text,
-      different (trivially) DuckDB plan, same rows;
-    * Spark: the parent's DataFrame with an appended no-op filter and
-      identity projection — different plan tree (extra Filter+Project
-      above the parent's plan), same rows.
-
-    If the twin goes green, the driver keys on content-hash and
-    rotate-on-change becomes the house rule (SURVEY §6). If it stays
-    red, the driver's gate checker demonstrably diverges from its own
-    digest on value-identical rows — escalated with the evidence
-    matrix (bench.py emits each experiment row's engine-side result
-    hash on the compact line as driver-visible counter-evidence).
-    """
-    parent_fn = QUERIES[parent]
-    col_list = ", ".join(cols)
-
-    def twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        return (
-            parent_fn(spark, sf_dir)
-            .where(F.lit(True))
-            .select(*cols)
-        )
-
-    twin.__name__ = new_name
-    twin.__doc__ = (
-        f"Value-identical neutral twin of ``{parent}`` (round-9 gate "
-        "content-hash experiment — see register_neutral_twin)."
-    )
-    QUERIES[new_name] = twin
-    ORACLES[new_name] = (
-        f"WITH parent_q AS (\n{ORACLES[parent]}\n)\n"
-        f"SELECT {col_list} FROM parent_q WHERE 1=1"
-    )
-
-
 # The driver's correctness gate records exactly the FIRST 50 entries
 # of QUERIES in registration order. GATE_ORDER pins those 50 slots to
 # a curated set covering every operator family — all oracle-paired —
@@ -100,85 +48,18 @@ def register_neutral_twin(new_name: str, parent: str, cols: list[str]) -> None:
 # tools/check_oracle.py; redundant in-family variants and the
 # rows-only (no-oracle) queries are deliberately registered after the
 # window so they never burn a gate slot.
-#
-# ROUND-7 ROTATION (the r4-verdict #3 swap, executed once the driver-
-# run digest inside BENCH_r06.json confirmed gate 50/0 + registry
-# 318/0 on round-6 code — the confirmation the runbook was waiting
-# for): six redundant in-family slots rotated OUT (each family keeps
-# a remaining representative; the out-rotated rows lead
-# POST_GATE_PRIORITY so they stay first in any widened window):
-#   t5_all_string_cast        (T5 covered by t2_t4 + pytest)
-#   sim_centroid_by_label     (sim family: bruteforce/lsh/floors stay)
-#   sim_pq_reconstruction_bound (PQ family: sim_pq_recall_floor stays)
-#   sim_ivf_topk              (IVF family: sim_ivf_recall_floor stays)
-#   dedup_cluster_canonical   (clustering: CC-alternating row stays)
-#   text_quality_score        (quality: text_gopher_quality_rules stays)
-# and the six r4-family representatives rotated IN:
-#   dedup_containment, sim_matryoshka_prefix_floor,
-#   retrieval_hybrid_rrf_topk, events_hll_mergeable_rollup,
-#   lineitem_profile_approx_floor, q19_disjunctive_revenue.
-#
-# ROUND-8 GATE REFRESH (r7 verdict Next-round #1): the driver's gate
-# harness caches results per query NAME — r7's six renamed slots were
-# freshly computed and passed, while the three names unchanged since
-# round 3 carried byte-identical round-3 rows (red) for five rounds
-# despite passing every independent and driver-side re-execution.
-# The three fossil rows are therefore re-registered under NEW names
-# (identical callables, identical oracles) and swapped into the same
-# slots; the old names lead POST_GATE_PRIORITY so continuity (tests,
-# check_oracle, widened windows) is preserved:
-#   events_sessionization    -> events_sessionization_q6
-#   embedding_hygiene_report -> embedding_hygiene_report_v2
-#   text_token_budget_trim   -> text_token_budget_trim_v2
-#
-# ROUND-9 GATE EXPERIMENT (r8 verdict Next-round #1): the round-8
-# rename kept callables + oracle text byte-identical and the three
-# rows STAYED red — falsifying the per-name cache theory. The
-# remaining hypothesis is a content-keyed cache (oracle text /
-# callable identity) or a canonicalization divergence. The same three
-# slots now hold third-generation twins whose oracle TEXT and Spark
-# PLAN differ trivially-but-detectably while outputs stay
-# value-identical (plans.register_neutral_twin):
-#   events_sessionization_q6    -> events_sessionization_r9
-#   embedding_hygiene_report_v2 -> embedding_hygiene_report_r9
-#   text_token_budget_trim_v2   -> text_token_budget_trim_r9
-# bench.py emits each experiment row's engine-side result hash on the
-# compact line as driver-visible counter-evidence either way.
-#
-# ROUND-10 GATE LOCALIZATION (r9 verdict Next-round #1): the r9
-# experiment proved content-changed, plan-changed twins stay red in
-# the driver's gate while green in the driver-recorded bench digest
-# of the SAME round — the divergence is the gate harness's hash
-# canonicalization on exactly these three rows. The ordered next step
-# is driver-side localization: the nine per-column diagnostic twins
-# (operators/diagnostics.py — registered since round 4, each a column
-# projection of a red parent with a by-construction projected oracle)
-# move INTO gate slots so CORRECTNESS_r10.json itself names which
-# column(s) diverge. The three parents KEEP their slots (same-run
-# parent-vs-column comparison in one driver artifact). Nine
-# long-green slots rotate out to make room — each family keeps at
-# least one hard-signal representative, and the rotated-out rows lead
-# POST_GATE_PRIORITY (still registered, still swept by the digest /
-# check_oracle / pytest):
-#   a1_max_split_width        (aggregations keep a3 + d2)
-#   a2_mode_majority_vote     (mode keeps d2_mode_per_group)
-#   f1_empty_row_filter       (filters keep f2)
-#   t7_row_number             (transforms keep t2_t4)
-#   u1_union_all_tagged       (union exercised across the registry)
-#   lineitem_profile_approx_floor (relational keeps 7 slots)
-#   dedup_simhash_signature   (dedup keeps 6 slots)
-#   sim_jl_distortion_bound   (similarity keeps 4 slots)
-#   sim_matryoshka_prefix_floor
-# Expected readings: a red diag twin names the diverging column; all
-# twins green with red parents localizes the divergence to the
-# full-row (column-order/row-multiplicity) canonicalization path.
 GATE_ORDER = (
     # §2 reference-parity operators (aggregations, filters,
     # transforms, union, typed scan)
+    "a1_max_split_width",
+    "a2_mode_majority_vote",
     "a3_shape_counts",
     "d2_mode_per_group",
+    "f1_empty_row_filter",
     "f2_width_conditional_split",
     "t2_t4_split_pad_quote_strip",
+    "t7_row_number",
+    "u1_union_all_tagged",
     "s8_typed_scan_passthrough",
     # relational family representatives (join+topk, grouping sets,
     # sketch+anchor, MERGE, skew salting)
@@ -186,12 +67,14 @@ GATE_ORDER = (
     "q3_shipping_priority",
     "revenue_cube",
     "order_value_approx_percentiles",
+    "lineitem_profile_approx_floor",
     "orders_merge_changeset",
     "events_salted_agg",
     "q19_disjunctive_revenue",
     # dedup family — every variant + clustering
     "dedup_exact",
     "dedup_minhash_lsh",
+    "dedup_simhash_signature",
     "dedup_ngram_jaccard",
     "dedup_containment",
     "dedup_embedding_cosine",
@@ -205,30 +88,23 @@ GATE_ORDER = (
     "sim_lsh_verified_pairs",
     "sim_ivf_recall_floor",
     "sim_pq_recall_floor",
+    "sim_jl_distortion_bound",
+    "sim_matryoshka_prefix_floor",
     # text analysis (fingerprint's md5 column family is also exercised
     # by dedup_exact; budget trim is the mixing-family rep alongside
     # stratified_sample)
     "text_token_count",
-    "embedding_hygiene_report_r9",
-    "diag_hygiene_counts",
-    "diag_hygiene_minmax_norms",
-    "diag_hygiene_avg_norm",
+    "embedding_hygiene_report",
     "retrieval_hybrid_rrf_topk",
     "text_lang_id",
-    "text_token_budget_trim_r9",
-    "diag_budget_budgets",
-    "diag_budget_qkeys",
-    "diag_budget_kept",
+    "text_token_budget_trim",
     "text_stratified_sample",
     "text_gopher_quality_rules",
     # multimodal
     "mm_binary_metadata",
     "mm_decode_features",
     # events + streaming restatements
-    "events_sessionization_r9",
-    "diag_session_keys",
-    "diag_session_starts",
-    "diag_session_values",
+    "events_sessionization",
     "events_range_join_interval",
     "events_stream_enrich_batch",
     "events_stream_upsert_batch",
@@ -245,34 +121,8 @@ GATE_ORDER = (
 # added after the 50-slot curation so any widened window (or a judge
 # skim in registration order) sees the newest families first.
 POST_GATE_PRIORITY = (
-    # the nine round-10 out-rotated gate rows (displaced by the diag
-    # twins — see the ROUND-10 GATE LOCALIZATION note): still
-    # oracle-paired, first in any widened window or digest sweep
-    "a1_max_split_width",
-    "a2_mode_majority_vote",
-    "f1_empty_row_filter",
-    "t7_row_number",
-    "u1_union_all_tagged",
-    "lineitem_profile_approx_floor",
-    "dedup_simhash_signature",
-    "sim_jl_distortion_bound",
-    "sim_matryoshka_prefix_floor",
-    # the round-8 second-generation names (identical callables/oracles
-    # to the original rows; rotated out of the gate by the ROUND-9
-    # GATE EXPERIMENT above) stay registered right behind the window
-    "events_sessionization_q6",
-    "embedding_hygiene_report_v2",
-    "text_token_budget_trim_v2",
-    # the round-8 renamed fossil rows' ORIGINAL names lead: identical
-    # callables/oracles to their in-gate twins, kept registered so
-    # tests, check_oracle sweeps, and any widened window retain the
-    # historical names (see the ROUND-8 GATE REFRESH note above)
-    "events_sessionization",
-    "embedding_hygiene_report",
-    "text_token_budget_trim",
-    # the six round-7 out-rotated gate rows: still oracle-paired,
-    # still early in any widened driver window or registration-order
-    # skim (see the GATE_ORDER rotation note above)
+    # in-family variants of gate rows: still oracle-paired, first in
+    # any widened window or registration-order skim
     "t5_all_string_cast",
     "sim_centroid_by_label",
     "sim_pq_reconstruction_bound",
@@ -288,8 +138,6 @@ POST_GATE_PRIORITY = (
     "orders_rolling_7d_revenue",
     "events_user_type_gini",
     "part_supplier_concentration_hhi",
-    # (the nine per-column diag twins moved INTO the gate in round 10
-    # — see the ROUND-10 GATE LOCALIZATION note above)
     # 100 TB physical-strategy twin (r4 verdict #5): same output as
     # text_token_budget_trim via the exact level-quantile cut
     "text_token_budget_trim_twopass",
@@ -397,9 +245,6 @@ def load_all() -> None:
     from almost_any_file_to_pandas_spark.operators import distribution  # noqa: F401
     from almost_any_file_to_pandas_spark.operators import association  # noqa: F401
     from almost_any_file_to_pandas_spark.streaming import events  # noqa: F401
-    # diagnostics must import AFTER its parent modules: its oracles
-    # are projections of the parents' registered oracle SQL
-    from almost_any_file_to_pandas_spark.operators import diagnostics  # noqa: F401
 
     missing = [n for n in GATE_ORDER if n not in QUERIES]
     assert not missing, f"GATE_ORDER names not registered: {missing}"
@@ -425,12 +270,21 @@ def load_all() -> None:
 # StructType (kilobytes of metadata — the same class of per-session
 # metadata Spark itself caches in its FileStatusCache / catalog; it
 # is NEVER row data, and every query still scans the parquet for all
-# of its data). The key carries file size + mtime_ns, so any rewrite
-# of the data invalidates the entry, plus the two confs that change
-# what schema inference returns for timestamp columns. Directories
-# (multi-file tables) skip the cache — their mtime does not track
-# content.
+# of its data). The key carries file size + mtime_ns, so a rewrite of
+# the data invalidates the entry, plus the value of every conf in
+# SCHEMA_CONFS. Directories (multi-file tables) skip the cache — their
+# mtime does not track content.
 _SCHEMA_CACHE: dict = {}
+
+# Confs that change what parquet schema inference returns for a
+# single file: nanosecond timestamps as longs, timestamps as NTZ,
+# BINARY as string, INT96 as timestamp. Part of the cache key.
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -442,16 +296,14 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
             return spark.read.parquet(path)
     except OSError:
         return spark.read.parquet(path)
+    # Assumes the filesystem's mtime resolution separates two writes of
+    # the same path: a same-size rewrite within one mtime tick (1-2 s on
+    # coarse filesystems) would keep the stale schema.
     key = (
         path,
         st.st_size,
         st.st_mtime_ns,
-        str(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "")),
-        str(
-            spark.conf.get(
-                "spark.sql.parquet.inferTimestampNTZ.enabled", ""
-            )
-        ),
+        *(spark.conf.get(c) for c in SCHEMA_CONFS),
     )
     schema = _SCHEMA_CACHE.get(key)
     if schema is not None:

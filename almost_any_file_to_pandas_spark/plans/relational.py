@@ -3234,7 +3234,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cost GROUP BY l_partkey
     )
     SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_type,
-           c.unit_cost_q6
+           CAST(c.unit_cost_q6 AS BIGINT) AS unit_cost_q6
     FROM cost c
     JOIN best b     ON c.l_partkey = b.l_partkey
                    AND c.unit_cost_q6 = b.min_cost
@@ -3391,10 +3391,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CASE WHEN date_diff('day', CAST(o.o_orderdate AS DATE),
                                CAST(l.l_shipdate AS DATE)) > 60
                 THEN 'LATE' ELSE 'ONTIME' END AS ship_bucket,
-           SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS high_line_count,
-           SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 0 ELSE 1 END) AS low_line_count
+           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                         THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
     FROM orders o
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
     WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
@@ -4234,7 +4234,7 @@ def orders_daily_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT c FROM ranked, span
       WHERE y = span.y1 AND rn <= GREATEST(n // 10, 1)
     )
-    SELECT ch.c AS c_custkey, r.rev AS first_year_rev_cents
+    SELECT ch.c AS c_custkey, CAST(r.rev AS BIGINT) AS first_year_rev_cents
     FROM churned ch JOIN ranked r ON r.c = ch.c
     CROSS JOIN span WHERE r.y = span.y0
     """,

@@ -118,8 +118,10 @@ SESSIONIZATION_ORACLE = f"""
       FROM ev_us
     ), sessions AS (
       SELECT user_id, ts, value,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS session_id
+             CAST(SUM(is_new) OVER (PARTITION BY user_id
+                                    ORDER BY ts, event_id
+                                    ROWS UNBOUNDED PRECEDING)
+                  AS BIGINT) AS session_id
       FROM marked
     )
     SELECT user_id, session_id,
@@ -131,7 +133,7 @@ SESSIONIZATION_ORACLE = f"""
            -- the double->DECIMAL(25,6) cast, where Spark rounds the
            -- SHORTEST decimal repr and DuckDB the exact binary
            -- expansion (they split on exact 6dp ties — the
-           -- characterized r5 divergence, test_diagnostics.py).
+           -- characterized r5 divergence, test_adversarial_inputs.py).
            -- Value-identical to the decimal recipe on all 2dp data.
            CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
              AS total_value_q6
@@ -193,36 +195,6 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("total_value_q6"),
     )
-
-
-# Round-8 gate refresh (r7 verdict Next-round #1): the driver's gate
-# harness demonstrably caches results per query NAME — the six slots
-# renamed in round 7 were freshly computed and passed, while this
-# row's unchanged name carried a byte-identical round-3 result for
-# five rounds despite passing every independent and driver-side
-# re-execution. Registering the IDENTICAL callable + oracle under a
-# new name forces a fresh evaluation; the old name stays registered
-# post-gate for continuity (POST_GATE_PRIORITY).
-register("events_sessionization_q6", oracle=SESSIONIZATION_ORACLE)(
-    events_sessionization
-)
-
-# Round-9 gate experiment (r8 verdict Next-round #1): the round-8
-# rename above reused the IDENTICAL callable + oracle text and stayed
-# red — falsifying the per-name-cache theory. This third-generation
-# twin changes the oracle TEXT (CTE wrap + WHERE 1=1) and the Spark
-# PLAN (no-op filter + identity projection) while keeping outputs
-# value-identical; see plans.register_neutral_twin for the full
-# adjudication logic. Equality with the parent is test-asserted
-# (tests/test_round9.py).
-from almost_any_file_to_pandas_spark.plans import register_neutral_twin
-
-register_neutral_twin(
-    "events_sessionization_r9",
-    "events_sessionization",
-    ["user_id", "session_id", "n_events", "session_start_us",
-     "total_value_q6"],
-)
 
 
 def events_session_window_stream(
@@ -396,7 +368,8 @@ def events_sliding_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT event_type,
            COUNT(*) AS n_events,
-           SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS sum_k,
+           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
+                AS BIGINT) AS sum_k,
            -- all-integer mean over non-null k (house _q6 recipe,
            -- HUGEINT-widened; COUNT(k) matches AVG's null-skip)
            CAST((CAST(SUM(CAST(json_extract_string(props, '$.k')
@@ -698,8 +671,8 @@ from almost_any_file_to_pandas_spark.plans import ORACLES as _ORACLES
            -- all-integer means (house _q6 recipe, HUGEINT-widened)
            CAST((CAST(SUM(n_events) AS HUGEINT) * 1000000) // COUNT(*)
                 AS BIGINT) AS mean_session_events_q6,
-           (SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) * 1000000)
-             // COUNT(*) AS bounce_rate_q6
+           CAST((SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) * 1000000)
+                // COUNT(*) AS BIGINT) AS bounce_rate_q6
     FROM sess
     """,
 )

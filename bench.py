@@ -233,11 +233,9 @@ HEADLINE = [
     "star_referential_integrity_audit",
     "emb_label_margin_audit",
     # round-6 (r5 verdict #5): the unbenched heavy tail — the slowest
-    # registry row in the r5 sf0.01 sweep (calendar² pair census) and
-    # one representative of the diagnostics family; appended
-    # post-COMPACT so the driver-parsed line is unaffected
+    # registry row in the r5 sf0.01 sweep (calendar² pair census);
+    # appended post-COMPACT so the driver-parsed line is unaffected
     "orders_hodges_lehmann_shift",
-    "diag_session_values",
     # round-6 (r5 verdict #7): learned-quantizer nprobe tuning curve
     "sim_ivf_kmeans_nprobe_curve",
     # round-6: SQ8 scalar-quantization search (exact-paired recall)
@@ -643,13 +641,11 @@ def _oracle_digest(spark) -> dict:
 
         gate = [n for n in GATE_ORDER if n in queries]
         rest = [n for n in queries if n not in set(GATE_ORDER)]
-        # evidence-first order for the budgeted remainder: the nine
-        # per-column diagnostic twins of the round-3 red gate rows run
-        # before anything else (a red row self-localizes even if the
-        # budget truncates the sweep), then NEWEST-registered rows —
-        # when the registry outgrows the budget, the skips land on the
-        # oldest rows (with rounds of prior digest evidence), never on
-        # the rows that have no driver-visible proof yet
+        # evidence-first order for the budgeted remainder: NEWEST-
+        # registered rows first — when the registry outgrows the
+        # budget, the skips land on the oldest rows (with rounds of
+        # prior digest evidence), never on the rows that have no
+        # driver-visible proof yet
         order_idx = {n: i for i, n in enumerate(queries)}
         # Round-parity skip rotation (r7 verdict #5): when the budget
         # truncates the sweep, the skip set must alternate between
@@ -658,17 +654,14 @@ def _oracle_digest(spark) -> dict:
         # count of driver-recorded BENCH_r*.json files (deterministic,
         # no clock): even → newest-first (skips land on the oldest
         # rows), odd → oldest-first (skips land on the newest, which
-        # by then carry the previous round's evidence). The diag_
-        # twins always run first regardless.
+        # by then carry the previous round's evidence).
         n_rounds = len(list(REPO.glob("BENCH_r*.json")))
         rotation = os.environ.get(
             "SPARK_GRAFT_DIGEST_ROTATION",
             "oldest_first" if n_rounds % 2 else "newest_first",
         )
         sign = 1 if rotation == "oldest_first" else -1
-        rest.sort(
-            key=lambda n: (not n.startswith("diag_"), sign * order_idx[n])
-        )
+        rest.sort(key=lambda n: sign * order_idx[n])
         gate_pass = gate_fail = reg_pass = reg_fail = reg_skip = 0
         gate_skip = 0
         fails: list[str] = []
@@ -748,21 +741,6 @@ def _oracle_digest(spark) -> dict:
             # the expected state now that the sweep is thread-parallel.
             "digest_skip_overlap_prev": _skip_overlap_prev(skipped_names),
         }
-        # r8 verdict #1: engine-side result hashes for the three gate-
-        # experiment rows ride the COMPACT line (driver-visible
-        # counter-evidence whichever way the experiment resolves);
-        # every gate row's hash lands in BENCH_FULL via gate_hashes.
-        experiment = {
-            n: gate_hashes[n][:8]
-            for n in (
-                "events_sessionization_r9",
-                "embedding_hygiene_report_r9",
-                "text_token_budget_trim_r9",
-            )
-            if n in gate_hashes
-        }
-        if experiment:
-            out["experiment_hashes"] = experiment
         if gate_hashes:
             # full-file only: the compact assembler strips this key
             out["gate_hashes"] = gate_hashes
@@ -962,16 +940,12 @@ def main() -> int:
     # BENCH_FULL keeps the full 3-decimal record — so every
     # cross-round comparable row fits the 1800-char budget, and any
     # row the budget still pops is RECORDED (count on the line, names
-    # in BENCH_FULL), never silently dropped. The r9-only
-    # experiment_hashes block is retired from the line with its
-    # experiment: every gate row's engine-side hash — including the
-    # r10 per-column diag twins' — lands in BENCH_FULL's gate_hashes.
+    # in BENCH_FULL), never silently dropped. Every gate row's
+    # engine-side hash lands in BENCH_FULL's gate_hashes only.
     digest_line = {
         k: v
         for k, v in digest.items()
-        if k not in (
-            "digest_skipped_names", "gate_hashes", "experiment_hashes"
-        )
+        if k not in ("digest_skipped_names", "gate_hashes")
     }
     compact_q = {
         k: round(timings[k], 2) for k in COMPACT if k in timings

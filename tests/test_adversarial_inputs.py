@@ -11,14 +11,22 @@ exercises that the clean synthetic testdata never does:
   minhash / budget kernels (per-row memory, Arrow batch limits);
 - **empty tables**: zero-row inputs through one representative of
   each family — the contract is no exception and engine/oracle
-  agreement on the (often NULL-bearing) aggregate row.
+  agreement on the (often NULL-bearing) aggregate row;
+- **residues**: ``value`` doubles on decimal(25,6) rounding ties
+  through the sessionizer, hostile whitespace through the
+  ``_occurrences`` stopword scan, cumulative token sums landing
+  exactly on the budget line, and a corrupt embedding corpus through
+  the hygiene report.
 """
 
 from __future__ import annotations
 
 import datetime
+from collections import Counter
 
 import pytest
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_hot_key_shapes_match_oracle(gate_compare, skewed_events_dir):
@@ -396,3 +404,246 @@ def test_skyline_price_collision_across_sizes(
     }
     assert got == {2, 4, 6, 7}
     gate_compare(skyline_parts_dir, "part_skyline_frontier")
+
+
+def _events_dir(spark, tmp_path, values):
+    base = datetime.datetime(2024, 1, 1)
+    rows = [
+        (i, base + datetime.timedelta(minutes=i), 1, "view", v, None)
+        for i, v in enumerate(values)
+    ]
+    # second user: one big gap to exercise multi-session grouping too
+    rows += [
+        (100, base, 2, "view", values[0], None),
+        (101, base + datetime.timedelta(hours=9), 2, "view", values[-1], None),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "events.parquet")
+    )
+    return str(tmp_path)
+
+
+def test_sessionization_value_decimal_ties(spark, gate_compare, tmp_path):
+    """``value`` doubles at/near decimal(25,6) rounding boundaries
+    through the sessionization value path. These all agree across
+    engines: the nearest double to each literal is strictly off the
+    6dp tie, so both engines round the same way. (The exact-tie class
+    is pinned by the shortest-repr test below.)"""
+    sf = _events_dir(
+        spark,
+        tmp_path,
+        [
+            1.0000005,          # shortest-repr tie, small magnitude
+            2.0000015,
+            -1.0000005,
+            0.0000005,
+            7.00000049999999,   # just under the tie
+            7.00000050000001,   # just over the tie
+            0.1 + 0.2,          # classic non-representable sum
+            185.22,             # the driver generator's 2dp class
+        ],
+    )
+    gate_compare(sf, "events_sessionization")
+
+
+def test_sessionization_shortest_repr_tie_now_hardened(
+    spark, gate_compare, tmp_path
+):
+    """Through a double→DECIMAL(25,6) value path this exact input
+    diverges: Spark casts via Java's SHORTEST decimal repr
+    (BigDecimal.valueOf → Double.toString), so a double whose shortest
+    repr is an exact 7-digit tie (123456789.0000005) rounds HALF_UP to
+    …000001, while DuckDB rounds the exact binary value
+    (…00000049999…) DOWN to …000000. The per-row FLOOR(value·1e6+0.5)
+    BIGINT sums on BOTH engines compute the identical IEEE product
+    before any rounding, so the input hash-matches."""
+    sf = _events_dir(spark, tmp_path, [123456789.0000005, 185.22])
+    gate_compare(sf, "events_sessionization")
+
+
+@pytest.fixture()
+def whitespace_docs_dir(spark, tmp_path):
+    """Documents stressing the `_occurrences` stopword scan: runs of
+    spaces (overlap semantics of replace), unicode whitespace
+    (NBSP/em-space are NOT token separators — both engines must agree
+    they don't match ' the '), tabs/newlines, NULL and empty text,
+    stopwords at string edges, and adjacent-stopword runs where
+    non-overlapping replace semantics decide the count."""
+    rows = [
+        (1, "the cat sat on the mat", "en", "web", 0),
+        (2, "the  the   the", "en", "web", 0),         # space runs
+        (3, "the cat and dog", "en", "web", 0),  # NBSP / em-space
+        (4, "the\tcat\nand dog", "en", "web", 0),       # tab / newline
+        (5, "", "en", "web", 0),                        # empty
+        (6, None, "en", "web", 0),                      # NULL text
+        (7, "a a a a a", "en", "wiki", 0),              # adjacent run
+        (8, "of", "en", "wiki", 0),                     # exact stopword
+        (9, " the ", "en", "wiki", 0),                  # pre-padded
+        (10, "THE The tHe", "en", "wiki", 0),           # case folding
+        (11, "in in of of to to and and is is it it", "en", "wiki", 0),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long",
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    return str(tmp_path)
+
+
+def test_occurrences_whitespace_residues(spark, whitespace_docs_dir):
+    """The `_occurrences` stopword scan behind the budget rank key,
+    per document: Spark's column form vs the oracle's SQL form."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from almost_any_file_to_pandas_spark.operators.budget import (
+        _STOP_HITS_SQL,
+    )
+    from almost_any_file_to_pandas_spark.operators.textstats import (
+        _STOPWORDS,
+        _occurrences,
+    )
+
+    path = f"{whitespace_docs_dir}/documents.parquet"
+    hits = sum(_occurrences(F.lower(F.col("text")), w) for w in _STOPWORDS)
+    got = {
+        r["doc_id"]: r["hits"]
+        for r in spark.read.parquet(path)
+        .select("doc_id", hits.alias("hits"))
+        .collect()
+    }
+    want = dict(
+        duckdb.sql(
+            f"SELECT doc_id, {_STOP_HITS_SQL}"
+            f" FROM read_parquet('{path}/*.parquet')"
+        ).fetchall()
+    )
+    assert got == want
+
+
+def test_budget_trim_on_whitespace_docs(gate_compare, whitespace_docs_dir):
+    """The full parent query on the same hostile text — NULL text must
+    flow through the window and budget join without either engine
+    dropping or NULL-poisoning rows differently."""
+    gate_compare(whitespace_docs_dir, "text_token_budget_trim")
+
+
+@pytest.fixture()
+def budget_tie_docs_dir(spark, tmp_path):
+    """Sources engineered so the greedy fill lands EXACTLY on the
+    budget line, one token over it, and with q_key ties across the
+    line (doc_id asc must break them identically).
+
+    src_exact: totals 20 → budget 10; docs of 4+6 tokens fill to
+    exactly 10 (cum==budget kept), next doc crosses.
+    src_tie: every doc has the SAME q_key, so the kept set is decided
+    purely by doc_id order at the line.
+    src_odd: total 7 → budget ceil(7/2)=4; first doc has 4 tokens —
+    cum==budget on the first row.
+    """
+
+    def doc(n_tokens, n_stop):
+        # n_stop stopword tokens ('the') then filler — q_key is
+        # (n_stop*1e6) div n_tokens, controllable per doc
+        toks = ["the"] * n_stop + [f"w{i}" for i in range(n_tokens - n_stop)]
+        return " ".join(toks)
+
+    rows = [
+        # src_exact: q_keys descending 750000, 500000, 0
+        (1, doc(4, 3), "en", "src_exact", 0),
+        (2, doc(6, 3), "en", "src_exact", 0),
+        (3, doc(10, 0), "en", "src_exact", 0),
+        # src_tie: all q_key == 500000, 5 docs × 4 tokens, total 20,
+        # budget 10 → exactly docs 10,11 kept (doc_id asc)
+        (10, doc(4, 2), "en", "src_tie", 0),
+        (11, doc(4, 2), "en", "src_tie", 0),
+        (12, doc(4, 2), "en", "src_tie", 0),
+        (13, doc(4, 2), "en", "src_tie", 0),
+        (14, doc(4, 2), "en", "src_tie", 0),
+        # src_odd: budget 4, first doc exactly 4 tokens
+        (20, doc(4, 4), "en", "src_odd", 0),
+        (21, doc(3, 0), "en", "src_odd", 0),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long",
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    return str(tmp_path)
+
+
+def test_budget_trim_exact_budget_line(
+    spark, gate_compare, budget_tie_docs_dir
+):
+    gate_compare(budget_tie_docs_dir, "text_token_budget_trim")
+
+    # independent arithmetic pin, not just cross-engine agreement
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    out = {
+        r["source"]: r
+        for r in plans.QUERIES["text_token_budget_trim"](
+            spark, budget_tie_docs_dir
+        ).collect()
+    }
+    assert out["src_exact"]["budget"] == 10
+    assert out["src_exact"]["tokens_kept"] == 10  # cum==budget kept
+    assert out["src_exact"]["n_kept"] == 2
+    assert out["src_tie"]["n_kept"] == 2  # doc_id asc breaks the tie
+    assert out["src_odd"]["tokens_kept"] == 4
+    assert out["src_odd"]["n_kept"] == 1
+
+
+def test_hygiene_report_on_corrupt_corpus(spark, gate_compare, tmp_path):
+    """Corrupt embeddings through the REGISTERED hygiene query vs the
+    oracle — NULLs, dimension drift, NaN, Inf, zero vectors, plus a
+    norm whose sumsq·1e6 sits near a quantization boundary."""
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0], "a"),
+        (1, None, "a"),
+        (2, [1.0, 2.0], "a"),                       # dim drift
+        (3, [float("nan"), 1.0, 1.0, 1.0], "a"),
+        (4, [float("inf"), 1.0, 1.0, 1.0], "a"),
+        (5, [0.0, 0.0, 0.0, 0.0], "a"),             # zero norm
+        (6, [1.0000005, 0.0, 0.0, 0.0], "b"),       # tie-adjacent norm
+        (7, [0.5, 0.5, 0.5, 0.5], "b"),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label string"
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    gate_compare(str(tmp_path), "embedding_hygiene_report")
+
+
+def test_budget_trim_twopass_equals_parent(
+    spark, gate_compare, budget_tie_docs_dir
+):
+    """The two-pass (level-quantile cut + boundary-only window) form
+    must equal the parent's full-window form row-for-row — including
+    on the engineered exact-budget-line fixture, where the boundary
+    level logic is maximally stressed — and on real testdata."""
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    for sf in (budget_tie_docs_dir, SF_DIR):
+        a = plans.QUERIES["text_token_budget_trim"](spark, sf)
+        b = plans.QUERIES["text_token_budget_trim_twopass"](spark, sf)
+        assert a.columns == b.columns
+        assert Counter(map(tuple, a.collect())) == Counter(
+            map(tuple, b.collect())
+        ), f"two-pass diverges from parent on {sf}"
+    gate_compare(budget_tie_docs_dir, "text_token_budget_trim_twopass")

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import datetime
 import re
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -348,10 +350,7 @@ def test_gate_order_covers_families_and_is_oracle_paired():
     assert tuple(keys[:50]) == plans.GATE_ORDER
     oracles = entrymod.oracle_sql()
     assert all(n in oracles for n in window)
-    # one representative per family (the r02 verdict's table rows;
-    # r10 rotation — see the ROUND-10 GATE LOCALIZATION note in
-    # plans/__init__.py — swapped nine long-green slots for the nine
-    # per-column diag twins, each family keeping a representative)
+    # one representative per family (the r02 verdict's table rows)
     for representative in [
         "a3_shape_counts",           # reference parity
         "q1_pricing_summary",        # relational
@@ -372,28 +371,13 @@ def test_gate_order_covers_families_and_is_oracle_paired():
         "text_token_count",          # textstats
         "text_lang_id",
         "text_gopher_quality_rules",  # rule-based quality filtering
-        # r9 gate experiment: third-generation twins whose oracle
-        # text + plan differ trivially from the parents (the r8
-        # identical-content rename stayed red — content-keyed cache
-        # or canonicalization divergence; see register_neutral_twin)
-        "embedding_hygiene_report_r9",  # embedding data-contract family
-        "text_token_budget_trim_r9",    # token-budget mixing family
-        # r10 localization: the per-column diag twins sit in the gate
-        # beside their parents
-        "diag_session_keys",
-        "diag_session_starts",
-        "diag_session_values",
-        "diag_hygiene_counts",
-        "diag_hygiene_minmax_norms",
-        "diag_hygiene_avg_norm",
-        "diag_budget_budgets",
-        "diag_budget_qkeys",
-        "diag_budget_kept",
+        "embedding_hygiene_report",  # embedding data-contract family
+        "text_token_budget_trim",    # token-budget mixing family
         "events_range_join_interval",  # binned range join
         "dedup_semantic_floor",      # clustered embedding dedup
         "mm_binary_metadata",        # multimodal
         "mm_decode_features",
-        "events_sessionization_r9",  # events family (r9 experiment)
+        "events_sessionization",     # events family
         "events_stream_enrich_batch",   # streaming restatements
         "events_stream_upsert_batch",
         "pipeline_corpus_prep",      # pipeline
@@ -403,6 +387,15 @@ def test_gate_order_covers_families_and_is_oracle_paired():
         "retrieval_hybrid_rrf_topk",   # retrieval / rank fusion
         "events_hll_mergeable_rollup",  # mergeable-sketch family
         "q19_disjunctive_revenue",   # disjunctive-predicate pushdown
+        "a1_max_split_width",        # reference parity, one row each
+        "a2_mode_majority_vote",
+        "f1_empty_row_filter",
+        "t7_row_number",
+        "u1_union_all_tagged",
+        "lineitem_profile_approx_floor",  # sketch floor
+        "dedup_simhash_signature",   # simhash dedup
+        "sim_jl_distortion_bound",   # random projection
+        "sim_matryoshka_prefix_floor",  # prefix-truncated embeddings
     ]:
         assert representative in window, representative
     # rows-only queries never burn a gate slot
@@ -410,6 +403,33 @@ def test_gate_order_covers_families_and_is_oracle_paired():
         assert name in oracles
     rows_only = [n for n in keys if n not in oracles]
     assert all(keys.index(n) >= 50 for n in rows_only)
+
+
+def test_oracle_output_types_are_hash_stable(spark):
+    """Every oracle's output columns keep to check_oracle's type
+    contract — a bare integer SUM yields HUGEINT, which the Arrow and
+    pandas paths render as a decimal or a float — and check_one fails
+    an oracle that breaks it."""
+    import __spark_entry__ as entrymod
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check_oracle import check_one, make_duckdb_views, off_contract_columns
+
+    con = make_duckdb_views(SF_DIR)
+    oracles = entrymod.oracle_sql()
+    bad = {
+        name: cols
+        for name, sql in oracles.items()
+        if (cols := off_contract_columns(con, sql))
+    }
+    assert not bad, bad
+
+    # equal values, HUGEINT oracle column: check_one names it and fails
+    status, detail, _ = check_one(
+        spark, con, SF_DIR, "sum_one",
+        lambda s, _: s.range(1, 2).toDF("s"), "SELECT SUM(1) AS s",
+    )
+    assert status == "FAIL" and "s HUGEINT" in detail, detail
 
 
 def test_verify_pairs_double_broadcast(spark):

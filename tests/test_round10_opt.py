@@ -13,7 +13,7 @@ from pyspark.sql import SparkSession
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
-@pytest.fixture(scope="module")
+@pytest.fixture(scope="session")  # the scope conftest's gate_compare needs
 def spark():
     from almost_any_file_to_pandas_spark.session import get_spark
 
@@ -42,24 +42,35 @@ def test_schema_cache_matches_inference_and_invalidates(spark, tmp_path):
     # rewriting the file must invalidate the cached entry (key carries
     # size + mtime_ns): write a one-column file, read it, then replace
     # it with a DIFFERENT schema at the same path
+    def write_single_file(df, dst):
+        src = tmp_path / "src"
+        df.coalesce(1).write.mode("overwrite").parquet(str(src))
+        part = [f for f in os.listdir(src) if f.endswith(".parquet")][0]
+        shutil.copyfile(str(src / part), dst)
+
     p = str(tmp_path / "t.parquet")
-    spark.range(3).toDF("a").coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "src1")
-    )
-    src1 = [
-        f for f in os.listdir(tmp_path / "src1") if f.endswith(".parquet")
-    ][0]
-    shutil.copyfile(str(tmp_path / "src1" / src1), p)
+    write_single_file(spark.range(3).toDF("a"), p)
     assert plans._read_parquet(spark, p).columns == ["a"]
-    spark.range(3).selectExpr("id AS b", "id AS c").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "src2"))
-    src2 = [
-        f for f in os.listdir(tmp_path / "src2") if f.endswith(".parquet")
-    ][0]
-    shutil.copyfile(str(tmp_path / "src2" / src2), p)
+    write_single_file(spark.range(3).selectExpr("id AS b", "id AS c"), p)
     os.utime(p, ns=(1, 1))  # force a distinct mtime even on fast fs
     assert plans._read_parquet(spark, p).columns == ["b", "c"]
+
+    # a conf that changes inference is part of the key: a BINARY
+    # column reads as binary, then as string under binaryAsString.
+    # Written by pyarrow: a Spark-written file carries its Spark schema
+    # in the footer metadata, which inference prefers over the conf.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pb = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), pb)
+    assert dict(plans._read_parquet(spark, pb).dtypes)["b"] == "binary"
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert dict(plans._read_parquet(spark, pb).dtypes)["b"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(plans._read_parquet(spark, pb).dtypes)["b"] == "binary"
 
 
 def test_kmeans_driver_regime_matches_distributed(spark):
@@ -103,10 +114,15 @@ def test_kmeans_driver_regime_matches_distributed(spark):
         assert fast == dist
 
 
-def test_kcenter_driver_regime_matches_distributed(spark, monkeypatch):
+def test_kcenter_driver_regime_matches_distributed(
+    spark, monkeypatch, gate_compare, tmp_path
+):
     """The r10 driver-side greedy k-center traversal must emit the
     identical (rank, vec_id, radius_q12) trajectory the distributed
-    pass loop emits — same integer-q12 distances, same tie-breaks."""
+    pass loop emits — same integer-q12 distances, same tie-breaks —
+    on the testdata corpus and on one whose smallest vec_id (the
+    traversal's seed) and two others have NULL vectors, which both
+    regimes and the oracle skip."""
     import almost_any_file_to_pandas_spark.operators.similarity  # noqa: F401
     from almost_any_file_to_pandas_spark.operators import (
         ivf_kmeans,
@@ -115,21 +131,34 @@ def test_kcenter_driver_regime_matches_distributed(spark, monkeypatch):
     from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
     apply_engine_conf(spark)
-    fast = sorted(
-        tuple(r)
-        for r in similarity.sim_kcenter_greedy_coreset(
-            spark, SF_DIR
-        ).collect()
-    )
+    nulls = str(tmp_path)
+    rows = [
+        (i, None if i in (0, 5, 11) else [float(i % 4), float(i * i % 7), 1.0],
+         "a")
+        for i in range(14)
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label string"
+    ).coalesce(1).write.parquet(f"{nulls}/embeddings.parquet")
+
+    def run(sf):
+        return sorted(
+            tuple(r)
+            for r in similarity.sim_kcenter_greedy_coreset(
+                spark, sf
+            ).collect()
+        )
+
+    fast = {sf: run(sf) for sf in (SF_DIR, nulls)}
     monkeypatch.setattr(ivf_kmeans, "KMEANS_DRIVER_ROW_CAP", 0)
-    slow = sorted(
-        tuple(r)
-        for r in similarity.sim_kcenter_greedy_coreset(
-            spark, SF_DIR
-        ).collect()
-    )
+    slow = {sf: run(sf) for sf in (SF_DIR, nulls)}
     assert fast == slow
-    assert len(fast) == similarity.KCENTER_K
+    assert len(fast[SF_DIR]) == similarity.KCENTER_K
+    assert fast[nulls][0][:2] == (1, 1)  # seed skips the NULL vec_id 0
+    assert {r[1] for r in fast[nulls]}.isdisjoint({0, 5, 11})
+    gate_compare(nulls, "sim_kcenter_greedy_coreset")
+    monkeypatch.undo()
+    gate_compare(nulls, "sim_kcenter_greedy_coreset")
 
 
 def test_table_events_ts_conversion_survives_schema_cache(spark):

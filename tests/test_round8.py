@@ -895,45 +895,6 @@ def test_bmp_rle8_roundtrip_delta_and_malformed():
         decode_bmp_rle8(wrap(bytes((2, 1, 0, 0)), 4, 2))
 
 
-def test_gate_refresh_twins_are_identical_callables():
-    """The r8 gate-refresh rows must be the SAME callable + oracle as
-    the fossil originals — a rename, not a reimplementation."""
-    import __spark_entry__ as entrymod
-    from almost_any_file_to_pandas_spark import plans
-
-    plans.load_all()
-    for old, new in (
-        ("events_sessionization", "events_sessionization_q6"),
-        ("embedding_hygiene_report", "embedding_hygiene_report_v2"),
-        ("text_token_budget_trim", "text_token_budget_trim_v2"),
-    ):
-        assert plans.QUERIES[old] is plans.QUERIES[new]
-        assert plans.ORACLES[old] == plans.ORACLES[new]
-        # r9: the v2/q6 twins themselves rotated out of the gate for
-        # the third-generation content-changed twins (register_neutral
-        # _twin; tests/test_round9.py pins the r9 slots) but stay
-        # registered at the head of POST_GATE_PRIORITY
-        assert old not in plans.GATE_ORDER
-        # r10 rotation prepends the nine out-rotated slots, so the
-        # v2/q6 names now lead the post-rotation segment
-        assert new in plans.POST_GATE_PRIORITY[:12]
-    keys = list(entrymod.queries())
-    # r8 seconds then r8 originals stay registered immediately after
-    # the r10 out-rotated block (r10 layout: slots 50-58 = the nine
-    # rotated-out gate rows, 59-61 = v2/q6 names, 62-64 = the
-    # original fossil names)
-    assert set(keys[59:62]) == {
-        "events_sessionization_q6",
-        "embedding_hygiene_report_v2",
-        "text_token_budget_trim_v2",
-    }
-    assert set(keys[62:65]) == {
-        "events_sessionization",
-        "embedding_hygiene_report",
-        "text_token_budget_trim",
-    }
-
-
 def test_bmp_rle4_roundtrip_delta_and_malformed():
     """BI_RLE4 BMP: the synth's nibble-run/absolute/EOL/EOF streams
     decode to the exact two-family gradient across edge dims; hand

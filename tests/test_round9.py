@@ -1,75 +1,14 @@
-"""Round-9 session tests: the gate content-hash experiment twins and
-the '.xz' façade lifecycle/bomb hardening (r8 verdict #1/#2, ADVICE)."""
+"""Round-9 session tests: the '.xz' façade lifecycle/bomb hardening
+and the round-9 operators (r8 verdict #2, ADVICE)."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
-import __spark_entry__ as entrymod
-from almost_any_file_to_pandas_spark.plans import (
-    GATE_ORDER,
-    ORACLES,
-    POST_GATE_PRIORITY,
-    QUERIES,
-)
+import __spark_entry__  # noqa: F401  (loads the query registry)
+from almost_any_file_to_pandas_spark.plans import ORACLES, QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
-
-TWINS = {
-    "events_sessionization_r9": "events_sessionization",
-    "embedding_hygiene_report_r9": "embedding_hygiene_report",
-    "text_token_budget_trim_r9": "text_token_budget_trim",
-}
-
-
-@pytest.mark.parametrize("twin,parent", sorted(TWINS.items()))
-def test_neutral_twin_value_identical(spark, twin, parent):
-    """The r9 experiment twins must return EXACTLY the parent's rows
-    and columns — the experiment discriminates the driver's cache key,
-    so any value drift would invalidate it."""
-    t = QUERIES[twin](spark, SF_DIR)
-    p = QUERIES[parent](spark, SF_DIR)
-    assert t.columns == p.columns
-    assert sorted(map(tuple, t.collect())) == sorted(
-        map(tuple, p.collect())
-    )
-
-
-@pytest.mark.parametrize("twin,parent", sorted(TWINS.items()))
-def test_neutral_twin_changes_text_and_plan(spark, twin, parent):
-    """Discriminating power: the oracle TEXT and the Spark PLAN must
-    both differ from the parent's (a content-keyed cache must see new
-    content), while the oracle stays a pure wrapper of the parent's
-    SQL (so value equality is by construction)."""
-    assert ORACLES[twin] != ORACLES[parent]
-    assert ORACLES[parent] in ORACLES[twin]
-    assert "WHERE 1=1" in ORACLES[twin]
-    t_plan = QUERIES[twin](spark, SF_DIR)._jdf.queryExecution().toString()
-    p_plan = QUERIES[parent](spark, SF_DIR)._jdf.queryExecution().toString()
-    assert t_plan != p_plan
-
-
-def test_gate_slots_hold_r9_twins():
-    """The three experiment twins sit in the gate window; their v2
-    predecessors rotated to the head of POST_GATE_PRIORITY; all three
-    generations stay registered and oracle-paired."""
-    for twin in TWINS:
-        assert twin in GATE_ORDER
-    for old in (
-        "events_sessionization_q6",
-        "embedding_hygiene_report_v2",
-        "text_token_budget_trim_v2",
-    ):
-        assert old not in GATE_ORDER
-        # r10 rotation prepends the nine out-rotated slots
-        assert old in POST_GATE_PRIORITY[:12]
-    names = list(entrymod.queries())
-    assert names[:50] == list(GATE_ORDER)
-    oracles = entrymod.oracle_sql()
-    for name in list(TWINS) + list(TWINS.values()):
-        assert name in oracles
 
 
 def test_xz_temp_files_tracked_and_cleaned(spark, tmp_path):
@@ -898,36 +837,6 @@ def test_power_mde_hand_corpus(spark, tmp_path):
     assert r.sd_a_micros == r.sd_b_micros == sd
     mde = int(math.floor(2.801585 * math.sqrt(var / 8 + var / 8) + 0.5))
     assert r.mde_micros == mde
-
-
-def test_experiment_hashes_match_oracle_protocol(spark):
-    """The gate-experiment evidence chain: the engine-side hash bench
-    emits for each _r9 twin must equal the check_oracle fingerprint of
-    a fresh execution at the digest SF — so the driver-recorded
-    `experiment_hashes` are byte-comparable with any independent
-    re-run of the same protocol."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check_oracle import frame_fingerprint
-
-    from almost_any_file_to_pandas_spark.plans import QUERIES
-
-    sf = "/root/testdata/sf0.01"
-    for name in TWINS:
-        df = QUERIES[name](spark, sf)
-        digest, _, _ = frame_fingerprint(
-            df.columns, [tuple(r) for r in df.collect()]
-        )
-        # bench emits the first 12 hex chars into BENCH_FULL
-        # (gate_hashes) and 8 into the compact line; both are prefixes
-        # of this digest. Re-computing here pins determinism of the
-        # fingerprint itself across sessions.
-        df2 = QUERIES[name](spark, sf)
-        digest2, _, _ = frame_fingerprint(
-            df2.columns, [tuple(r) for r in df2.collect()]
-        )
-        assert digest == digest2
 
 
 def test_srm_check_hand_corpus(spark, tmp_path):

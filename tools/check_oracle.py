@@ -54,6 +54,32 @@ def frame_fingerprint(columns, rows):
     return digest, len(lines), sorted(columns)
 
 
+# DuckDB result types an oracle may return. The driver's gate does not
+# read oracles through fetchall() as this checker does, and a type
+# outside this set can render differently there: HUGEINT (what an
+# integer SUM returns) arrives as decimal128(38,0) through Arrow and
+# float64 through pandas, printing "10.0" where Spark prints "10".
+ORACLE_TYPES = frozenset(
+    ("BIGINT", "INTEGER", "DOUBLE", "VARCHAR", "BOOLEAN", "DATE",
+     "DECIMAL", "TIMESTAMP")
+)
+
+
+def off_contract_columns(con, sql: str) -> list[tuple[str, str]]:
+    """``(column, type)`` for every output column of ``sql`` whose
+    DuckDB type is outside :data:`ORACLE_TYPES` (lists of those are
+    allowed). Binds the query for its types; never executes it."""
+    rel = con.sql(sql)
+    bad = []
+    for col, dtype in zip(rel.columns, rel.types):
+        base = str(dtype)
+        while base.endswith("[]"):
+            base = base[:-2]
+        if base.split("(")[0] not in ORACLE_TYPES:
+            bad.append((col, str(dtype)))
+    return bad
+
+
 def make_duckdb_views(sf_dir: str):
     """A DuckDB connection with the ten tables registered as views."""
     import duckdb
@@ -71,13 +97,10 @@ def check_one(spark, con, sf_dir, name, fn, oracle):
 
     Returns ``(status, detail, spark_hash)`` where status is ``PASS``
     / ``FAIL`` / ``OK?`` (rows-only: no oracle given) and spark_hash
-    is the engine-side frame fingerprint (None on a Spark error) —
-    bench.py forwards the gate rows' hashes into BENCH_FULL.json and
-    the gate-experiment rows' onto the compact line as driver-visible
-    counter-evidence for the gate adjudication (r8 verdict #1).
-    Library form of the CLI body so bench.py can embed a self-run
-    digest in its stdout line (the driver re-records bench every round
-    but hasn't re-read its own correctness gate since round 3).
+    is the engine-side frame fingerprint (None on a Spark error).
+    An oracle column typed outside :data:`ORACLE_TYPES` is a ``FAIL``
+    even when the fetchall() hashes agree. Library form of the CLI
+    body, shared with bench.py's self-run digest.
     """
     started = time.time()
     try:
@@ -95,6 +118,11 @@ def check_one(spark, con, sf_dir, name, fn, oracle):
             f"rows-only check, {s_n} rows ({time.time()-started:.1f}s)"
         ), s_hash
     try:
+        bad = off_contract_columns(con, oracle)
+        if bad:
+            return "FAIL", "oracle types outside the contract: " + ", ".join(
+                f"{c} {t}" for c, t in bad
+            ), s_hash
         cur = con.execute(oracle)
         dcols = [d[0] for d in cur.description]
         drows = cur.fetchall()
