@@ -288,6 +288,40 @@ _SHINGLE_JACCARD_ORACLE = """
           / len(list_distinct(a.toks || b.toks)) >= {threshold}
 """
 
+# Component closure over a ``pairs(u, v)`` CTE: ``comp(u, lbl)`` labels
+# every node with the least node id it reaches, the algorithm-
+# independent component definition that :func:`connected_components`
+# must reproduce. The oracle opens ``WITH RECURSIVE`` and defines
+# ``pairs`` before it.
+_COMPONENT_CTE = """
+    edges AS (
+      SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs
+    ), reach AS (
+      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
+      UNION
+      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
+    ), comp AS (SELECT u, MIN(lbl) AS lbl FROM reach GROUP BY u)"""
+
+# The verified near-dup pairs, as the closure's ``pairs`` input.
+_NEAR_DUP_PAIRS_CTE = f"""
+    pairs AS (
+      SELECT doc_a AS u, doc_b AS v FROM (
+        {_SHINGLE_JACCARD_ORACLE.format(threshold=JACCARD_THRESHOLD)}
+      )
+    )"""
+
+# Consecutive doc_ids within each (source, lang) slice, as the
+# closure's ``pairs`` input: the oracle side of :func:`_doc_chain_edges`.
+_DOC_CHAIN_CTE = """
+    pairs AS (
+      SELECT u, v FROM (
+        SELECT doc_id AS u,
+               LEAD(doc_id) OVER (
+                 PARTITION BY source, lang ORDER BY doc_id) AS v
+        FROM documents
+      ) WHERE v IS NOT NULL
+    )"""
+
 
 @register(
     "dedup_minhash_lsh",
@@ -547,77 +581,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _verify_pairs(candidates, docs, NGRAM_THRESHOLD)
 
 
-def connected_components(
-    edges: DataFrame, src: str = "u", dst: str = "v", max_iter: int = 20
-) -> DataFrame:
-    """Min-label propagation connected components over an edge list →
-    ``(u, lbl)`` with ``lbl`` = smallest vertex id in the component.
-
-    Each round every vertex takes the min of its own label and its
-    neighbours' labels — one shuffle join + one groupBy per round,
-    converging in O(graph diameter) rounds. Near-dup graphs are
-    star-like (diameter 2-3), so this terminates in a handful of
-    rounds even at corpus scale; for adversarial long-path graphs the
-    large-star/small-star reformulation (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") bounds rounds at O(log n) —
-    same join-shape, different edge rewrite, drop-in here.
-
-    ``localCheckpoint`` truncates the lineage each round: iterative
-    self-referential plans otherwise double in depth per iteration and
-    push Catalyst analysis time past the actual compute. The
-    convergence probe is a driver-side ``isEmpty`` on the changed-label
-    delta — orchestration only, never the data path.
-    """
-    # materialize the edge list ONCE before mirroring it — the union
-    # references `edges` twice, and an expensive upstream (LSH + verify)
-    # would otherwise execute twice
-    edges = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
-    und = (
-        edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = und.select("u").distinct().withColumn("lbl", F.col("u"))
-    for _ in range(max_iter):
-        nbr = und.join(
-            labels.select(F.col("u").alias("v"), "lbl"), "v"
-        ).select("u", "lbl")
-        new_labels = (
-            nbr.union(labels).groupBy("u").agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-        )
-        labels = new_labels
-        if changed.isEmpty():
-            break
-    return labels
-
-
 @register(
     "dedup_cluster_canonical",
     oracle=f"""
-    WITH RECURSIVE pairs AS (
-      {_SHINGLE_JACCARD_ORACLE.format(threshold=JACCARD_THRESHOLD)}
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach AS (
-      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
-      UNION
-      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
-    ),
-    comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u)
-    SELECT doc_id, cluster_id,
-           COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-           doc_id = cluster_id AS is_canonical
+    WITH RECURSIVE {_NEAR_DUP_PAIRS_CTE}, {_COMPONENT_CTE}
+    SELECT u AS doc_id, lbl AS cluster_id,
+           COUNT(*) OVER (PARTITION BY lbl) AS cluster_size,
+           u = lbl AS is_canonical
     FROM comp
     """,
 )
@@ -637,8 +607,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_engine_conf(spark)
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(pairs, "doc_a", "doc_b")
-    from pyspark.sql import Window as W
-
     return (
         comp.select(F.col("u").alias("doc_id"), F.col("lbl").alias("cluster_id"))
         .withColumn(
@@ -1038,20 +1006,7 @@ def dedup_cosine_threshold_curve(
 @register(
     "dedup_corpus_retention",
     oracle=f"""
-    WITH RECURSIVE pairs AS (
-      {_SHINGLE_JACCARD_ORACLE.format(threshold=JACCARD_THRESHOLD)}
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach AS (
-      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
-      UNION
-      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
-    ),
-    comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
+    WITH RECURSIVE {_NEAR_DUP_PAIRS_CTE}, {_COMPONENT_CTE},
     exact_loser AS (
       SELECT doc_id FROM (
         SELECT doc_id,
@@ -1061,9 +1016,9 @@ def dedup_cosine_threshold_curve(
       ) WHERE doc_id <> keeper
     ),
     near_loser AS (
-      SELECT doc_id FROM comp
-      WHERE doc_id <> cluster_id
-        AND doc_id NOT IN (SELECT doc_id FROM exact_loser)
+      SELECT u AS doc_id FROM comp
+      WHERE u <> lbl
+        AND u NOT IN (SELECT doc_id FROM exact_loser)
     )
     SELECT
       (SELECT COUNT(*) FROM documents) AS n_docs,
@@ -1255,73 +1210,62 @@ def _driver_union_find(pairs) -> dict:
     return {x: comp_min[find(x)] for x in parent}
 
 
-def connected_components_alternating(
-    edges: DataFrame, src: str = "u", dst: str = "v", max_rounds: int = 30,
-    driver_cap: int = CC_DRIVER_EDGE_CAP,
+def connected_components(
+    edges: DataFrame, src: str = "u", dst: str = "v"
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     rewrites (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") → ``(u, lbl)``, same contract as
-    :func:`connected_components`.
+    Beyond") → ``(u, lbl)`` with ``lbl`` = the smallest vertex id in
+    ``u``'s component. Every vertex of ``edges`` appears once.
 
-    Round count is O(log n) on ANY graph — the drop-in for
-    adversarial long-path topologies where min-label propagation pays
-    O(diameter):
+    Round count is O(log n) on ANY graph, long paths included:
 
     - **large-star**: every node points its LARGER neighbours at the
       minimum of its neighbourhood (halves long paths),
     - **small-star**: every node folds its smaller neighbours onto
       that minimum (flattens into stars).
 
-    r9 optimization (guide §2.4): each star's ``min`` attaches as a
-    whole-partition WINDOW over the per-node partition instead of a
-    groupBy + self-join — one |E| shuffle per star instead of two
-    (the aggregate's and the join's), with identical row semantics
-    (duplicates a window emits where the join emitted one row per
-    key are absorbed by the round's final ``distinct``). The
-    convergence probe is also restated: the star edge count is
-    CONSTANT across rounds (#nodes − #roots stabilizes immediately),
-    so the old two-``exceptAll`` probe paid two |E| shuffles per
-    round for a signal available far cheaper — each round now folds
+    Each star's ``min`` attaches as a whole-partition WINDOW over the
+    per-node partition instead of a groupBy + self-join — one |E|
+    shuffle per star instead of two; duplicates the window emits are
+    absorbed by the round's final ``distinct``. The star edge count is
+    constant across rounds once #roots stabilizes, so each round folds
     one narrow (count, bit_xor(xxhash64)) digest over the
-    just-materialized checkpoint (order-insensitive, overflow-free)
-    and pays the exact ``exceptAll`` confirmation ONLY when
-    consecutive digests match; a digest mismatch proves
-    not-converged, and convergence is still decided by the exact
-    set comparison, never by the hash alone.
+    just-materialized checkpoint and pays the exact ``exceptAll``
+    confirmation ONLY when consecutive digests match: a digest
+    mismatch proves not-converged, and convergence is decided by the
+    exact set comparison, never by the hash alone.
 
-    r10 two-regime split (see :data:`CC_DRIVER_EDGE_CAP`): the initial
-    digest already counts the normalized edges; under the cap the
-    driver runs exact union-find on the collected pairs and the star
-    loop never starts — the collect is bounded by the gate, the labels
-    are the identical min-root fixed point, and at scale the
-    distributed loop below runs unchanged.
+    Two regimes (see :data:`CC_DRIVER_EDGE_CAP`, read at call time):
+    the initial digest already counts the normalized edges; under the
+    cap the driver runs exact union-find on the collected pairs and
+    the star loop never starts — the collect is bounded by the gate
+    and the labels are the identical min-root fixed point.
 
     At the fixed point the edge set IS the component assignment
-    (child → root). ``localCheckpoint`` truncates lineage per round.
-    Skew note: a hub node's rows land in one window partition — the
-    same per-key locality the groupBy form had; the window carries no
-    orderBy, so the physical shape is a hash partition + a LOCAL sort
-    on the partition key feeding WindowExec (never a global order-by
-    sort).
+    (child → root). Skew note: a hub node's rows land in one window
+    partition; the window carries no orderBy, so the physical shape is
+    a hash partition + a LOCAL sort feeding WindowExec (never a global
+    order-by sort).
     """
-    # Lazy checkpoints throughout (r10, guide §5): every checkpointed
-    # frame here is forced by an immediately-following action (the
-    # digest ``first()`` each round, the first consumer for nodes), so
-    # the eager flag only added one extra blocking job per frame —
-    # materialization now rides the digest job itself. Iterative
-    # semantics are unchanged: the frame is still materialized exactly
-    # once and every later consumer reads the stored blocks.
+    # Lazy checkpoints throughout: every checkpointed frame is forced
+    # by the action that follows it (the digest ``first()`` each round,
+    # the first consumer for nodes), so it is materialized exactly once
+    # without a separate blocking job. The input is checkpointed before
+    # both ``nodes`` and ``e`` read it, so an expensive upstream (LSH +
+    # verify) runs once.
+    pairs = edges.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=False)
     nodes = (
-        edges.select(F.col(src).alias("u"))
-        .union(edges.select(F.col(dst).alias("u")))
+        pairs.select(F.col("a").alias("u"))
+        .union(pairs.select(F.col("b").alias("u")))
         .distinct()
         .localCheckpoint(eager=False)
     )
     # normalize: drop self-loops, orient big→small, dedup
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
+        pairs.filter(F.col("a") != F.col("b"))
         .select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
@@ -1337,10 +1281,10 @@ def connected_components_alternating(
         return (row["c"], row["h"])
 
     d_e = _digest(e)
-    if d_e[0] < driver_cap:
-        # small-graph regime (see CC_DRIVER_EDGE_CAP): the collect is
-        # BOUNDED by the gate just evaluated; labels return as a
-        # broadcast-sized frame with the identical min-root semantics
+    if d_e[0] < CC_DRIVER_EDGE_CAP:
+        # small-graph regime: the collect is BOUNDED by the gate just
+        # evaluated; labels return as a broadcast-sized frame with the
+        # identical min-root semantics
         spark = edges.sparkSession
         labels = _driver_union_find(
             [(r["u"], r["v"]) for r in e.collect()]
@@ -1354,7 +1298,7 @@ def connected_components_alternating(
             .select("u", F.coalesce("lbl", "u").alias("lbl"))
         )
     wu = W.partitionBy("u")
-    for _ in range(max_rounds):
+    while True:
         und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         withm = und.withColumn(
             "m", F.least(F.min("v").over(wu), F.col("u"))
@@ -1365,14 +1309,10 @@ def connected_components_alternating(
             .filter(F.col("u") != F.col("v"))
         )
         lm = large.withColumn("m", F.min("v").over(wu))
-        # small-star fold+point as ONE generate over the window output
-        # (r10, guide §2.4): the previous ``folded.union(pointed)``
-        # duplicated the whole two-window subtree — ReuseExchange
-        # dedupes only the exchanges, so both WindowExecs ran TWICE
-        # per round (once per union arm). Each lm row emits the same
-        # multiset the union produced — (u, m) always, (v, m) when
-        # v != m — so the post-explode filter + distinct see identical
-        # rows and the round's edge set is unchanged.
+        # small-star fold+point as ONE generate over the window output:
+        # a ``folded.union(pointed)`` would run both WindowExecs once
+        # per union arm (ReuseExchange dedupes only the exchanges).
+        # Each lm row emits (u, m), plus (v, m) when v != m.
         pair = F.when(
             F.col("v") != F.col("m"),
             F.array(
@@ -1404,62 +1344,43 @@ def connected_components_alternating(
 
 @register(
     "connected_components_alternating",
-    oracle="""
-    WITH RECURSIVE chained AS (
-      SELECT doc_id AS u,
-             LEAD(doc_id) OVER (
-               PARTITION BY source, lang ORDER BY doc_id) AS v
-      FROM documents
-    ), e0 AS (
-      SELECT u, v FROM chained WHERE v IS NOT NULL
-    ), edges AS (
-      SELECT u, v FROM e0 UNION SELECT v AS u, u AS v FROM e0
-    ), reach AS (
-      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
-      UNION
-      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
-    )
-    SELECT u AS doc_id, MIN(lbl) AS component_id FROM reach GROUP BY u
+    oracle=f"""
+    WITH RECURSIVE {_DOC_CHAIN_CTE}, {_COMPONENT_CTE}
+    SELECT u AS doc_id, lbl AS component_id FROM comp
     """,
 )
 def connected_components_alternating_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Gate query for :func:`connected_components_alternating` — the
-    O(log n) large-star/small-star CC (Kiveris et al.) — run over a
-    deterministic PATH graph: chain edges linking consecutive doc_ids
-    within each (source, lang) corpus slice. Paths are the
-    adversarial topology this algorithm exists for — diameter grows
-    linearly with slice size (25 docs/slice at sf0.01, 10× per SF
-    step), where min-label propagation pays O(diameter) shuffle
-    rounds and the alternating rewrite stays O(log n).
+    """Gate query for :func:`connected_components` — the O(log n)
+    large-star/small-star CC (Kiveris et al.) — run over a
+    deterministic PATH graph (:func:`_doc_chain_edges`). Paths are the
+    adversarial topology: diameter grows linearly with slice size
+    (25 docs/slice at sf0.01, 10× per SF step), while the round count
+    stays O(log n).
 
     The oracle closes the same edge set with a recursive-CTE
     transitive closure and takes the min reachable label — the
     algorithm-independent definition of a component — so the row is a
-    hash-checked equivalence proof for the alternating implementation
-    (the propagation variant is pinned equal in pytest on chain /
-    star / random graphs).
-
-    Plan shape: chaining is one hash-partitioned window (partitioned
-    by (source, lang) — never global); each CC round is two
-    join+aggregate passes over the edge set with localCheckpoint
-    lineage truncation.
+    hash-checked equivalence proof for the kernel.
     """
     apply_engine_conf(spark)
-    docs = table(spark, sf_dir, "documents")
-    w_slice = W.partitionBy("source", "lang").orderBy("doc_id")
-    edges = (
-        docs.select(
-            F.col("doc_id").alias("u"),
-            F.lead("doc_id").over(w_slice).alias("v"),
-        )
-        .filter(F.col("v").isNotNull())
-    )
-    comp = connected_components_alternating(edges, "u", "v")
+    comp = connected_components(_doc_chain_edges(spark, sf_dir))
     return comp.select(
         F.col("u").alias("doc_id"), F.col("lbl").alias("component_id")
     )
+
+
+def _doc_chain_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(u, v)`` edges linking consecutive doc_ids within each
+    (source, lang) corpus slice: a deterministic path graph, built by
+    one window hash-partitioned on (source, lang), never global.
+    The oracle side is ``_DOC_CHAIN_CTE``."""
+    docs = table(spark, sf_dir, "documents")
+    w = W.partitionBy("source", "lang").orderBy("doc_id")
+    return docs.select(
+        F.col("doc_id").alias("u"), F.lead("doc_id").over(w).alias("v")
+    ).filter(F.col("v").isNotNull())
 
 
 SEMANTIC_CLUSTER_K = 16  # floor for the coarse partition
@@ -2073,26 +1994,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cluster_keep_best",
     oracle=f"""
-    WITH RECURSIVE pairs AS (
-      {_SHINGLE_JACCARD_ORACLE.format(threshold=JACCARD_THRESHOLD)}
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach AS (
-      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
-      UNION
-      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
-    ),
-    comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
+    WITH RECURSIVE {_NEAR_DUP_PAIRS_CTE}, {_COMPONENT_CTE},
     ranked AS (
-      SELECT c.doc_id, c.cluster_id, d.n_chars,
+      SELECT c.u AS doc_id, c.lbl AS cluster_id, d.n_chars,
              ROW_NUMBER() OVER (
-               PARTITION BY c.cluster_id
-               ORDER BY d.n_chars DESC, c.doc_id ASC) AS pick
-      FROM comp c JOIN documents d ON d.doc_id = c.doc_id
+               PARTITION BY c.lbl
+               ORDER BY d.n_chars DESC, c.u ASC) AS pick
+      FROM comp c JOIN documents d ON d.doc_id = c.u
     )
     SELECT doc_id, cluster_id, n_chars, pick = 1 AS is_kept
     FROM ranked
@@ -2105,20 +2013,19 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps an arbitrary member; keep-longest keeps the superset
     document, which matters when near-dups are truncations or
     quote-wrapped copies of each other; swap any quality scalar into
-    the rank). ``dedup_cluster_canonical`` remains the
-    algorithm-equivalence gate; this row pins the survivorship
-    RANKING against the same recursive-CTE cluster oracle.
+    the rank). The clusters are :func:`dedup_cluster_canonical`'s,
+    so both rows run one LSH + CC code path; the oracle closes the
+    same near-dup pairs with the shared recursive CTE.
 
-    Plan: verified LSH pairs → O(log n)-style label propagation →
-    one id-keyed join to the quality column (broadcast-eligible: the
+    Plan: verified LSH pairs → :func:`connected_components` → one
+    id-keyed join to the quality column (broadcast-eligible: the
     clustered subset is far smaller than the corpus) → a per-cluster
     row_number window over cluster-sized groups. Nothing corpus-scale
     moves after the pair stage.
     """
     apply_engine_conf(spark)
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    comp = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("u").alias("doc_id"), F.col("lbl").alias("cluster_id")
+    comp = dedup_cluster_canonical(spark, sf_dir).select(
+        "doc_id", "cluster_id"
     )
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     ranked = comp.join(docs, "doc_id").withColumn(

@@ -38,8 +38,11 @@ from pyspark.sql import Window as W
 from almost_any_file_to_pandas_spark.operators.dedup import (
     CC_DRIVER_EDGE_CAP,
     MAX_BUCKET_SIZE,
+    _COMPONENT_CTE,
+    _DOC_CHAIN_CTE,
+    _doc_chain_edges,
     _pairs_within_buckets,
-    connected_components_alternating,
+    connected_components,
 )
 from almost_any_file_to_pandas_spark.plans import register, table
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
@@ -1080,8 +1083,8 @@ def graph_reach_bfs_recursive(
     frontier census to depth {BFS_MAX_DEPTH} over the co-activity
     graph), exercising the engine's recursion operator rather than
     the DataFrame-loop form the scale-path rows use
-    (``connected_components_alternating``'s checkpointed O(log n)
-    rounds, LPA, k-core).
+    (:func:`connected_components`' checkpointed O(log n) rounds, LPA,
+    k-core).
 
     Scale contract: the recursive arm SELECTs DISTINCT per level, so
     each level is bounded by |nodes| rows instead of enumerating
@@ -1106,24 +1109,9 @@ CC_DELTA_MOD = 5  # edges with md5(u:v) % 5 = 0 arrive as the delta
 @register(
     "graph_cc_incremental_batch",
     oracle=f"""
-    WITH RECURSIVE chained AS (
-      SELECT doc_id AS u,
-             LEAD(doc_id) OVER (
-               PARTITION BY source, lang ORDER BY doc_id) AS v
-      FROM documents
-    ), e0 AS (
-      SELECT u, v FROM chained WHERE v IS NOT NULL
-    ), edges AS (
-      SELECT u, v FROM e0 UNION SELECT v AS u, u AS v FROM e0
-    ), reach AS (
-      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
-      UNION
-      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
-    ), comp AS (
-      SELECT u, MIN(lbl) AS component_id FROM reach GROUP BY u
-    ), sizes AS (
-      SELECT component_id, COUNT(*) AS component_size FROM comp
-      GROUP BY component_id
+    WITH RECURSIVE {_DOC_CHAIN_CTE}, {_COMPONENT_CTE}, sizes AS (
+      SELECT lbl AS component_id, COUNT(*) AS component_size FROM comp
+      GROUP BY lbl
     )
     SELECT CAST(component_size AS BIGINT) AS component_size,
            CAST(COUNT(*) AS BIGINT) AS n_components,
@@ -1140,7 +1128,7 @@ def graph_cc_incremental_batch(
     doc-chain edge set is split by the portable edge hash
     (``md5(u:v) % {CC_DELTA_MOD} = 0`` → the delta, ~20%; the rest →
     the base): base labels come from the O(log n) alternating
-    algorithm (`connected_components_alternating`), then each delta
+    algorithm (:func:`connected_components`), then each delta
     edge is PROJECTED onto base labels and the merge runs on the
     label-QUOTIENT graph — whose size is bounded by the number of
     delta-touched components, not the corpus. Final labels compose
@@ -1158,11 +1146,7 @@ def graph_cc_incremental_batch(
     orders of magnitude below the node count.
     """
     apply_engine_conf(spark)
-    docs = table(spark, sf_dir, "documents")
-    w = W.partitionBy("source", "lang").orderBy("doc_id")
-    chained = docs.select(
-        F.col("doc_id").alias("u"), F.lead("doc_id").over(w).alias("v")
-    ).filter(F.col("v").isNotNull())
+    chained = _doc_chain_edges(spark, sf_dir)
     is_delta = (
         F.conv(
             F.substring(
@@ -1197,9 +1181,7 @@ def graph_cc_incremental_batch(
         .distinct()
     )
     base_lbl = (
-        nodes.join(
-            connected_components_alternating(base), "u", "left"
-        )
+        nodes.join(connected_components(base), "u", "left")
         .select("u", F.coalesce("lbl", "u").alias("lbl"))
         # lazy (r10): forced by the quotient CC's first digest, which
         # reads base_lbl through the lu/lv joins
@@ -1218,7 +1200,7 @@ def graph_cc_incremental_batch(
         .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
         .distinct()
     )
-    q_lbl = connected_components_alternating(quotient).select(
+    q_lbl = connected_components(quotient).select(
         F.col("u").alias("qlbl_key"), F.col("lbl").alias("qlbl")
     )
     final = base_lbl.join(

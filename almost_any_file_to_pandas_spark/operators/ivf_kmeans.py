@@ -202,8 +202,7 @@ def _driver_lloyd(rows: list, k: int) -> list:
 
 
 def deterministic_kmeans_centroids(
-    spark: SparkSession, emb: DataFrame, k: int,
-    driver_cap: int = KMEANS_DRIVER_ROW_CAP,
+    spark: SparkSession, emb: DataFrame, k: int
 ) -> DataFrame:
     """LLOYD_ROUNDS deterministic Lloyd's iterations over ``emb``
     (``vec_id``, ``v`` double array) → (``cid``, ``cvec``).
@@ -214,16 +213,16 @@ def deterministic_kmeans_centroids(
     from re-executing prior rounds' assignments (lineage doubles per
     round otherwise) — the frame is k rows, so the checkpoint is free.
 
-    r10 two-regime split (:data:`KMEANS_DRIVER_ROW_CAP`): a corpus
-    whose row count sits under the cap collects (bounded by the gate)
-    and trains on the driver with bit-identical arithmetic; above it
-    the distributed loop below runs unchanged.
+    Two regimes (:data:`KMEANS_DRIVER_ROW_CAP`, read at call time): a
+    corpus whose row count sits under the cap collects (bounded by the
+    gate) and trains on the driver with bit-identical arithmetic;
+    above it the distributed loop below runs unchanged.
 
     Guards the :data:`Q12_SAFE_ABS` data contract with a one-time
     check on the seed frame (bounded — a k-row tripwire, not a corpus
     proof; the contract itself is the documented bound).
     """
-    if driver_cap and emb.count() < driver_cap:
+    if emb.count() < KMEANS_DRIVER_ROW_CAP:
         collected = emb.collect()
         rows = [
             (r["vec_id"], list(r["v"]))

@@ -17,10 +17,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from almost_any_file_to_pandas_spark.operators.dedup import (
+    _COMPONENT_CTE,
+    connected_components,
+)
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 LINK_MAX_DIST = 6  # prefix swap costs 5 ("Customer"->"Supplier"); +1 fuzz
+
+# The fuzzy match pairs as an entity graph, the component closure's
+# ``pairs`` input: customers on even node ids, suppliers on odd.
+_LINK_PAIRS_CTE = f"""
+    pairs AS (
+      SELECT 2 * c.c_custkey AS u, 2 * s.s_suppkey + 1 AS v
+      FROM customer c JOIN supplier s
+        ON c.c_nationkey = s.s_nationkey
+       AND right(c.c_name, 2) = right(s.s_name, 2)
+      WHERE levenshtein(c.c_name, s.s_name) <= {LINK_MAX_DIST}
+    )"""
 
 
 @register(
@@ -78,24 +93,12 @@ def link_customer_supplier_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "link_entity_clusters",
     oracle=f"""
-    WITH RECURSIVE pairs AS (
-      SELECT 2 * c.c_custkey AS u, 2 * s.s_suppkey + 1 AS v
-      FROM customer c JOIN supplier s
-        ON c.c_nationkey = s.s_nationkey
-       AND right(c.c_name, 2) = right(s.s_name, 2)
-      WHERE levenshtein(c.c_name, s.s_name) <= {LINK_MAX_DIST}
-    ), edges AS (
-      SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs
-    ), reach AS (
-      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
-      UNION
-      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
-    )
+    WITH RECURSIVE {_LINK_PAIRS_CTE}, {_COMPONENT_CTE}
     SELECT u AS node_id,
            CASE WHEN u % 2 = 0 THEN 'customer' ELSE 'supplier' END
              AS entity_type,
-           MIN(lbl) AS component_id
-    FROM reach GROUP BY u
+           lbl AS component_id
+    FROM comp
     """,
 )
 def link_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,17 +112,13 @@ def link_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick one survivor per component_id.
 
     Plan: the blocked broadcast linkage join (above) emits the pairs;
-    clustering reuses the dedup family's min-label-propagation CC
-    (one join + one aggregate per round, localCheckpoint-truncated,
-    O(diameter) rounds — linkage graphs are star-like). The oracle
-    closes the identical edge set with a recursive CTE — the
-    algorithm-independent component definition — so the row set is an
-    equivalence proof, like the alternating-CC gate row.
+    clustering is the dedup family's :func:`connected_components`
+    (O(log n) rounds on any graph, a driver union-find on small
+    ones). The oracle closes the identical edge set with the shared
+    recursive CTE — the algorithm-independent component definition —
+    so the row set is an equivalence proof, like the
+    ``connected_components_alternating`` gate row.
     """
-    from almost_any_file_to_pandas_spark.operators.dedup import (
-        connected_components,
-    )
-
     apply_engine_conf(spark)
     pairs = link_customer_supplier_fuzzy(spark, sf_dir)
     edges = pairs.select(
@@ -139,20 +138,8 @@ def link_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "link_golden_records",
     oracle=f"""
-    WITH RECURSIVE pairs AS (
-      SELECT 2 * c.c_custkey AS u, 2 * s.s_suppkey + 1 AS v
-      FROM customer c JOIN supplier s
-        ON c.c_nationkey = s.s_nationkey
-       AND right(c.c_name, 2) = right(s.s_name, 2)
-      WHERE levenshtein(c.c_name, s.s_name) <= {LINK_MAX_DIST}
-    ), edges AS (
-      SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs
-    ), reach AS (
-      SELECT u, u AS lbl FROM (SELECT DISTINCT u FROM edges)
-      UNION
-      SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u
-    ), members AS (
-      SELECT u AS node_id, MIN(lbl) AS component_id FROM reach GROUP BY u
+    WITH RECURSIVE {_LINK_PAIRS_CTE}, {_COMPONENT_CTE}, members AS (
+      SELECT u AS node_id, lbl AS component_id FROM comp
     ), attrs AS (
       SELECT 2 * c_custkey AS node_id, c_name AS name, c_acctbal AS bal
       FROM customer
@@ -182,10 +169,10 @@ def link_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     records.
 
     Plan: clusters from :func:`link_entity_clusters` (blocked
-    broadcast match + propagation CC); the attribute union is two
-    narrow projections; the survivor election is a per-component rank
-    window over component-sized groups (entities are small by
-    definition), then one aggregate.
+    broadcast match + :func:`connected_components`); the attribute
+    union is two narrow projections; the survivor election is a
+    per-component rank window over component-sized groups (entities
+    are small by definition), then one aggregate.
     """
     from pyspark.sql import Window as W
 

@@ -107,7 +107,9 @@ def _quality_cols(docs: DataFrame) -> DataFrame:
         F.length(text).alias("n_chars_measured"),
         n_tokens.alias("n_tokens"),
         (F.length(text) / n_tokens).alias("avg_token_len"),
-        (space_count / F.length(text)).alias("space_ratio"),
+        # NULL on an empty document, as in the oracle (a bare ``/``
+        # raises DIVIDE_BY_ZERO under ANSI mode)
+        F.try_divide(space_count, F.length(text)).alias("space_ratio"),
         stop_hits.alias("stopword_hits"),
         (stop_hits / n_tokens).alias("stopword_ratio"),
     )

@@ -58,7 +58,7 @@ def gate_compare(spark):
     import duckdb
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-    from check_oracle import frame_fingerprint
+    from check_oracle import TABLES, frame_fingerprint
 
     from almost_any_file_to_pandas_spark import plans
 
@@ -70,8 +70,7 @@ def gate_compare(spark):
             sdf.columns, [tuple(r) for r in sdf.collect()]
         )
         con = duckdb.connect()
-        for t in ("events", "documents", "embeddings", "part", "orders",
-                  "customer"):
+        for t in TABLES:
             path = f"{sf_dir}/{t}.parquet"
             if os.path.isdir(path):
                 path = f"{path}/*.parquet"

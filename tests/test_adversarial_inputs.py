@@ -16,12 +16,15 @@ exercises that the clean synthetic testdata never does:
   through the sessionizer, hostile whitespace through the
   ``_occurrences`` stopword scan, cumulative token sums landing
   exactly on the budget line, and a corrupt embedding corpus through
-  the hygiene report.
+  the hygiene report;
+- **long paths**: a fuzzy-match graph that is one long path through
+  entity clustering (component labels must cross every hop).
 """
 
 from __future__ import annotations
 
 import datetime
+import random
 from collections import Counter
 
 import pytest
@@ -529,6 +532,12 @@ def test_occurrences_whitespace_residues(spark, whitespace_docs_dir):
     assert got == want
 
 
+def test_quality_score_on_whitespace_docs(gate_compare, whitespace_docs_dir):
+    """Quality ratios on the same hostile text: the empty document's
+    whitespace ratio is NULL on both engines, never a division error."""
+    gate_compare(whitespace_docs_dir, "text_quality_score")
+
+
 def test_budget_trim_on_whitespace_docs(gate_compare, whitespace_docs_dir):
     """The full parent query on the same hostile text — NULL text must
     flow through the window and budget join without either engine
@@ -647,3 +656,60 @@ def test_budget_trim_twopass_equals_parent(
             map(tuple, b.collect())
         ), f"two-pass diverges from parent on {sf}"
     gate_compare(budget_tie_docs_dir, "text_token_budget_trim_twopass")
+
+
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(
+                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
+            )
+        prev = cur
+    return prev[-1]
+
+
+@pytest.fixture()
+def link_path_dir(spark, tmp_path):
+    """23 customers and 23 suppliers whose fuzzy-match graph is ONE
+    46-node path: customer k (node 2k) matches suppliers k - 1 and k
+    (nodes 2k - 1 and 2k + 1) and no one else. Names are 12-letter
+    windows sliding 3 letters per path step over one random string, so
+    path neighbours are 6 edits apart and every other
+    customer/supplier pair more than LINK_MAX_DIST; all rows share the
+    nation and the 2-character block suffix."""
+    from almost_any_file_to_pandas_spark.operators.linkage import (
+        LINK_MAX_DIST,
+    )
+
+    n = 46
+    rng = random.Random(0)
+    seq = "".join(
+        rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(3 * n + 9)
+    )
+    names = [seq[3 * p : 3 * p + 12] + "zz" for p in range(n)]
+    for p in range(0, n, 2):
+        for q in range(1, n, 2):
+            near = _levenshtein(names[p], names[q]) <= LINK_MAX_DIST
+            assert near == (abs(p - q) == 1), (p, q)
+    spark.createDataFrame(
+        [(k, names[2 * k], 7, 100.0 + (k * 37) % 23, "BUILDING")
+         for k in range(n // 2)],
+        "c_custkey long, c_name string, c_nationkey int,"
+        " c_acctbal double, c_mktsegment string",
+    ).coalesce(1).write.parquet(str(tmp_path / "customer.parquet"))
+    spark.createDataFrame(
+        [(k, names[2 * k + 1], 7, 100.5 + (k * 11) % 23)
+         for k in range(n // 2)],
+        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
+    ).coalesce(1).write.parquet(str(tmp_path / "supplier.parquet"))
+    return str(tmp_path)
+
+
+def test_link_clusters_on_a_long_match_path(gate_compare, link_path_dir):
+    """All 46 records are one entity: the cluster label must travel
+    the full 45-hop path, and the golden record is elected over all of
+    them."""
+    gate_compare(link_path_dir, "link_entity_clusters")
+    gate_compare(link_path_dir, "link_golden_records")

@@ -481,37 +481,10 @@ def test_ivf_bits_parameter_scales_buckets(spark):
     assert n4 <= 16 and n6 <= 64 and n6 > n4
 
 
-def test_cc_gate_query_matches_propagation(spark):
-    """The registered alternating-CC gate query labels the chain
-    graph identically to min-label propagation."""
-    from pyspark.sql import Window, functions as F
-
-    from almost_any_file_to_pandas_spark.operators.dedup import (
-        connected_components,
-    )
-    import __spark_entry__ as entrymod
-
-    got = {
-        (r["doc_id"], r["component_id"])
-        for r in entrymod.queries()["connected_components_alternating"](
-            spark, SF_DIR
-        ).collect()
-    }
-    from almost_any_file_to_pandas_spark.plans import table
-
-    docs = table(spark, SF_DIR, "documents")
-    w = Window.partitionBy("source", "lang").orderBy("doc_id")
-    edges = (
-        docs.select(
-            F.col("doc_id").alias("u"), F.lead("doc_id").over(w).alias("v")
-        )
-        .filter(F.col("v").isNotNull())
-    )
-    want = {
-        (r["u"], r["lbl"])
-        for r in connected_components(edges, max_iter=80).collect()
-    }
-    assert got == want and len(got) > 0
+def test_cc_gate_query_matches_oracle(gate_compare):
+    """The registered CC gate query labels the doc-chain path graph
+    exactly as the oracle's recursive-CTE closure does."""
+    gate_compare(SF_DIR, "connected_components_alternating")
 
 
 def test_stream_restatements_plan_shapes(spark):

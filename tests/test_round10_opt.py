@@ -73,7 +73,7 @@ def test_schema_cache_matches_inference_and_invalidates(spark, tmp_path):
     assert dict(plans._read_parquet(spark, pb).dtypes)["b"] == "binary"
 
 
-def test_kmeans_driver_regime_matches_distributed(spark):
+def test_kmeans_driver_regime_matches_distributed(spark, monkeypatch):
     """The r10 driver-side Lloyd's regime must produce BIT-IDENTICAL
     centroids to the distributed loop (same integer-q12 distances,
     same DECIMAL(30,15) mean arithmetic) — on the real embeddings
@@ -83,9 +83,7 @@ def test_kmeans_driver_regime_matches_distributed(spark):
     # similarity must import before ivf_kmeans (module-level oracle
     # strings in similarity import back from ivf_kmeans)
     import almost_any_file_to_pandas_spark.operators.similarity  # noqa: F401
-    from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
-        deterministic_kmeans_centroids,
-    )
+    from almost_any_file_to_pandas_spark.operators import ivf_kmeans
     from almost_any_file_to_pandas_spark.plans import table_wide
     from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
@@ -98,20 +96,20 @@ def test_kmeans_driver_regime_matches_distributed(spark):
          for i in range(40)],
         "vec_id long, v array<double>",
     )
-    for frame, k in ((emb, 8), (feat, 4)):
-        fast = {
+
+    def run(frame, k):
+        return {
             r["cid"]: r["cvec"]
-            for r in deterministic_kmeans_centroids(
+            for r in ivf_kmeans.deterministic_kmeans_centroids(
                 spark, frame, k
             ).collect()
         }
-        dist = {
-            r["cid"]: r["cvec"]
-            for r in deterministic_kmeans_centroids(
-                spark, frame, k, driver_cap=0
-            ).collect()
-        }
-        assert fast == dist
+
+    cases = ((emb, 8), (feat, 4))
+    fast = [run(frame, k) for frame, k in cases]
+    monkeypatch.setattr(ivf_kmeans, "KMEANS_DRIVER_ROW_CAP", 0)
+    dist = [run(frame, k) for frame, k in cases]
+    assert fast == dist
 
 
 def test_kcenter_driver_regime_matches_distributed(

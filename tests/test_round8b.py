@@ -219,27 +219,21 @@ def test_cc_incremental_merges_to_full_graph(spark, merging_docs_dir):
 
 def test_cc_incremental_census_equals_from_scratch(spark):
     """On testdata the incremental composition must produce the same
-    size histogram as a from-scratch alternating CC of the full edge
-    set (the Spark-side restatement of the oracle identity)."""
-    from pyspark.sql import Window as W
+    size histogram as a from-scratch CC of the full edge set (the
+    Spark-side restatement of the oracle identity)."""
     from pyspark.sql import functions as F
 
     from almost_any_file_to_pandas_spark.operators.dedup import (
-        connected_components_alternating,
+        _doc_chain_edges,
+        connected_components,
     )
-    from almost_any_file_to_pandas_spark.plans import table
 
     qs = _queries()
     inc = {
         r.component_size: (r.n_components, r.n_nodes)
         for r in qs["graph_cc_incremental_batch"](spark, SF_DIR).collect()
     }
-    docs = table(spark, SF_DIR, "documents")
-    w = W.partitionBy("source", "lang").orderBy("doc_id")
-    edges = docs.select(
-        F.col("doc_id").alias("u"), F.lead("doc_id").over(w).alias("v")
-    ).filter(F.col("v").isNotNull())
-    full = connected_components_alternating(edges)
+    full = connected_components(_doc_chain_edges(spark, SF_DIR))
     sizes = full.groupBy("lbl").count()
     scratch = {
         r["count"]: r["n"]

@@ -7,13 +7,16 @@ operator's physical shape while keeping its output contract:
   one ``mapInPandas`` pass over user-partitioned sorted rows — the
   risky path is a user whose rows SPLIT across Arrow batches (bucket
   state must carry over the boundary).
-- ``connected_components_alternating`` moved each star's min from a
-  groupBy+join to a whole-partition window and its convergence probe
-  to a digest-gated exact check — pinned against a brute-force
-  reference on an adversarial long-path + star + isolated-pair graph.
+- ``connected_components`` moved each star's min from a groupBy+join
+  to a whole-partition window and its convergence probe to a
+  digest-gated exact check — pinned against a brute-force reference
+  on an adversarial long-path, a star + isolated-pair graph and a
+  random graph.
 """
 
 from __future__ import annotations
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,6 +95,14 @@ def test_rate_limit_audit_state_carries_across_arrow_batches(
     assert any(not a for (a, _) in got.values())
 
 
+def _random_edges(n_edges, n_nodes, seed):
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(n_nodes), rng.randrange(n_nodes))
+        for _ in range(n_edges)
+    ]
+
+
 @pytest.mark.parametrize(
     "edges",
     [
@@ -100,25 +111,26 @@ def test_rate_limit_audit_state_carries_across_arrow_batches(
         # star + isolated pair + duplicate/self edges
         [(100, j) for j in range(101, 140)]
         + [(500, 501), (500, 501), (7, 7), (200, 300), (300, 400)],
+        # random graph over 200 nodes, self-loops dropped
+        [e for e in _random_edges(150, 200, seed=7) if e[0] != e[1]],
     ],
 )
-@pytest.mark.parametrize("driver_cap", [None, 0])
+@pytest.mark.parametrize("edge_cap", [None, 0])
 def test_cc_alternating_window_form_matches_bruteforce(
-    spark, edges, driver_cap
+    spark, monkeypatch, edges, edge_cap
 ):
-    """driver_cap=None exercises the r10 small-graph driver
-    union-find regime (these graphs sit under CC_DRIVER_EDGE_CAP);
-    driver_cap=0 forces the distributed star loop — both regimes must
-    emit identical min-root labels."""
-    from almost_any_file_to_pandas_spark.operators.dedup import (
-        connected_components_alternating,
-    )
+    """edge_cap=None keeps CC_DRIVER_EDGE_CAP, so these small graphs
+    take the driver union-find regime; edge_cap=0 forces the
+    distributed star loop. Both regimes must emit identical min-root
+    labels."""
+    from almost_any_file_to_pandas_spark.operators import dedup
 
+    if edge_cap is not None:
+        monkeypatch.setattr(dedup, "CC_DRIVER_EDGE_CAP", edge_cap)
     df = spark.createDataFrame(edges, "u long, v long")
-    kwargs = {} if driver_cap is None else {"driver_cap": driver_cap}
     got = {
         r["u"]: r["lbl"]
-        for r in connected_components_alternating(df, **kwargs).collect()
+        for r in dedup.connected_components(df).collect()
     }
     # brute force: min node id per connected component
     parent = {}
