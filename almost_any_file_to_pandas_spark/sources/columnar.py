@@ -212,10 +212,11 @@ def read_feather(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
     A Feather/IPC file is a single memory-mappable Arrow blob — a
     desktop interchange format like pickle, not a splittable lake
     format — so the read is driver-side by construction (pyarrow),
-    then handed to Spark via the Arrow-batched ``createDataFrame``
-    fast path. Downstream transformations are fully distributed;
-    at 100 TB the lake formats are the parquet/ORC arms, and this arm
-    exists for the reference's desktop-file world.
+    then handed to Spark as the Arrow table itself (no pandas detour,
+    which would turn a nullable int64 column into double). Downstream
+    transformations are fully distributed; at 100 TB the lake formats
+    are the parquet/ORC arms, and this arm exists for the reference's
+    desktop-file world.
     """
     import pyarrow as pa
 
@@ -230,7 +231,25 @@ def read_feather(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
         with pa.memory_map(path) as source:
             tbl = pa.ipc.open_stream(source).read_all()
         engine = "pyarrow.ipc(stream) -> createDataFrame"
-    df = spark.createDataFrame(tbl.to_pandas())
+    # Arrow types Spark's Arrow conversion rejects, each cast to one it
+    # takes that holds every value: unsigned ints widen to signed ones,
+    # date64/time32/float16 go to their finer-grained siblings
+    supported = {
+        pa.uint8(): pa.int16(),
+        pa.uint16(): pa.int32(),
+        pa.uint32(): pa.int64(),
+        pa.uint64(): pa.decimal128(20, 0),
+        pa.date64(): pa.date32(),
+        pa.time32("s"): pa.time64("us"),
+        pa.time32("ms"): pa.time64("us"),
+        pa.float16(): pa.float32(),
+    }
+    tbl = tbl.cast(
+        pa.schema(
+            [f.with_type(supported.get(f.type, f.type)) for f in tbl.schema]
+        )
+    )
+    df = spark.createDataFrame(tbl)
     return ParseResult(
         data=df,
         sheet_name="Feather file content",

@@ -8,9 +8,10 @@ Distributed by construction: DBF records are FIXED WIDTH, so the
 driver reads only the 32-byte header + field descriptors and every
 task locates its records by pure offset arithmetic
 (``header_size + i·record_size``) — the same rowid-range pattern as
-the SQLite arm, with zero per-task catalog work. Deleted records
-(``*`` flag) are skipped per spec. Shared-filesystem requirement as
-with the other by-path arms.
+the SQLite arm (``sources.range_frame`` feeding ``mapInArrow``, one
+typed Arrow batch per range), with zero per-task catalog work.
+Deleted records (``*`` flag) are skipped per spec. Shared-filesystem
+requirement as with the other by-path arms.
 
 Typing per field descriptor: C→string (right-trimmed), N/F with 0
 decimals→bigint, N/F with decimals→double, L→boolean (T/t/Y/y true,
@@ -25,14 +26,13 @@ import struct
 from pathlib import Path
 from typing import Iterator, List, Tuple, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources import arrow_batch, range_frame
 
 _DBF_VERSIONS = {0x02, 0x03, 0x04, 0x05, 0x30, 0x31, 0x83, 0x8B}
-
-_MAX_RANGES = 64
 
 
 class _Field:
@@ -96,10 +96,12 @@ def _convert(raw: bytes, f: _Field):
         if not text:
             return None
         try:
-            if f.decimals == 0 and f.ftype == "N":
-                return int(text)
-            return float(text)
-        except ValueError:
+            if f.decimals:
+                return float(text)
+            if f.ftype == "F" and not text.lstrip("+-").isdigit():
+                return int(float(text))  # F may hold "1.5E+03"
+            return int(text)
+        except (ValueError, OverflowError):
             return None
     if f.ftype == "L":
         if text in ("T", "t", "Y", "y"):
@@ -146,50 +148,35 @@ def read_dbf(
         [T.StructField(f.name, _spark_type(f), True) for f in fields]
     )
     abspath = str(p.absolute())
-    parallelism = spark.sparkContext.defaultParallelism
-    n_ranges = max(1, min(_MAX_RANGES, parallelism, n_records or 1))
-    width = (n_records + n_ranges - 1) // n_ranges if n_records else 1
-    ranges = [
-        (i * width, min(n_records, (i + 1) * width))
-        for i in range(n_ranges)
-        if i * width < n_records
-    ] or [(0, 0)]
     field_specs = [
         (f.name, f.ftype, f.length, f.decimals, f.offset)
         for f in fields
     ]
-    out_names = [f.name for f in fields]
 
     def scan(batches: Iterator) -> Iterator:
-        import pandas as pd
-
         specs = [_Field(*s) for s in field_specs]
-        for pdf in batches:
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                rows = []
+        for batch in batches:
+            for lo, hi in zip(
+                batch.column("lo").to_pylist(), batch.column("hi").to_pylist()
+            ):
+                cols: List[list] = [[] for _ in specs]
                 with open(abspath, "rb") as fh:
-                    fh.seek(header_size + int(lo) * record_size)
-                    for _ in range(int(hi) - int(lo)):
+                    fh.seek(header_size + lo * record_size)
+                    for _ in range(hi - lo + 1):
                         rec = fh.read(record_size)
                         if len(rec) < record_size:
                             break
                         if rec[0:1] == b"*":  # deleted record
                             continue
-                        rows.append(
-                            tuple(
-                                _convert(
-                                    rec[f.offset : f.offset + f.length],
-                                    f,
-                                )
-                                for f in specs
-                            )
-                        )
-                yield pd.DataFrame(rows, columns=out_names)
+                        for col, f in zip(cols, specs):
+                            raw = rec[f.offset : f.offset + f.length]
+                            col.append(_convert(raw, f))
+                yield arrow_batch(cols, schema)
 
-    range_df = spark.createDataFrame(
-        ranges, "lo long, hi long"
-    ).repartition(len(ranges))
-    df = range_df.mapInPandas(scan, schema)
+    if n_records:
+        df = range_frame(spark, 0, n_records - 1).mapInArrow(scan, schema)
+    else:
+        df = spark.createDataFrame([], schema)
     return [
         ParseResult(
             data=df,

@@ -5,15 +5,15 @@ Reference: ``ImportExcel.work()`` (/root/reference/main.py:239-265) —
 header=None, index_col=None, dtype=str)`` per sheet; no sheets →
 single failed answer (main.py:251-253).
 
-Spark design: the driver enumerates sheets and pre-scans each sheet's
-width (the Excel analogue of the text pipeline's max-columns pre-scan
-D3, main.py:360-368 — needed because a DataFrame schema is fixed
-before read). Row data is then read *executor-side* through a Spark 4
-Python DataSource (`excel_core.ExcelDataSource`), one partition per
-worksheet part: the parse runs where the data will be consumed, and
-reading many workbooks in one job parallelizes across files. The
-DataSource module is registered with cloudpickle by value, so workers
-need no package install.
+Spark design: the driver enumerates sheets and parses each sheet once
+with the stdlib core (``excel_core``); the padded all-string grid goes
+to Spark as one Arrow table (``sources.grid_frame``), the same hand-off
+as the SpreadsheetML and HTML arms. A sheet part is a single deflate
+stream, so one sheet's parse cannot be split anyway; what scales is
+many workbooks, which ``read_excel_many`` reads executor-side through
+a Spark 4 Python DataSource (``excel_core.ExcelCorpusDataSource``),
+one partition per file. That DataSource module is registered with
+cloudpickle by value, so workers need no package install.
 
 All six suffixes parse natively with stdlib code in ``excel_core``:
 .xlsx (OOXML), .xlsb (BIFF12 record reader), .xls (BIFF8 records in a
@@ -30,7 +30,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
-from almost_any_file_to_pandas_spark.sources import excel_core
+from almost_any_file_to_pandas_spark.sources import excel_core, grid_frame
 
 NATIVE_FORMATS = {
     ".xlsx": "xlsx",
@@ -45,7 +45,7 @@ _registered_sessions: set[int] = set()
 
 
 def _register(spark: SparkSession) -> None:
-    """Register the Python DataSource once per session, shipping the
+    """Register the corpus DataSource once per session, shipping the
     stdlib-only core module by value inside the pickled class."""
     key = id(spark)
     if key in _registered_sessions:
@@ -56,7 +56,6 @@ def _register(spark: SparkSession) -> None:
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(excel_core)
-    spark.dataSource.register(excel_core.ExcelDataSource)
     spark.dataSource.register(excel_core.ExcelCorpusDataSource)
     _registered_sessions.add(key)
 
@@ -90,11 +89,10 @@ def read_excel(
             return _failed(spark, str(p), engine=f"pandas[{suffix}] unavailable")
         out = []
         for name, frame in sheets.items():
-            frame = frame.fillna("")
-            frame.columns = [f"c{i}" for i in range(frame.shape[1])]
+            grid = frame.fillna("").astype(str).values.tolist()
             out.append(
                 ParseResult(
-                    data=spark.createDataFrame(frame.astype(str)),
+                    data=grid_frame(spark, grid),
                     sheet_name=name,
                     file_path=str(p),
                     engine="pandas",
@@ -106,40 +104,17 @@ def read_excel(
     if not inventory:  # no sheets → failed (main.py:251-253)
         return _failed(spark, str(p), engine=fmt)
 
-    _register(spark)
     results: List[ParseResult] = []
     for sheet_name, ref in inventory:
-        # Driver pre-scan: width only (schema must precede the read).
-        width = excel_core.sheet_width(
-            excel_core.sheet_rows(str(p), fmt, ref)
+        rows = excel_core.sheet_rows(str(p), fmt, ref)
+        width = excel_core.sheet_width(rows)
+        result = ParseResult(
+            data=grid_frame(spark, excel_core.padded(rows, width)),
+            sheet_name=sheet_name,
+            file_path=str(p),
+            engine=f"{fmt} (stdlib) -> arrow",
         )
-        if width == 0:
-            df = spark.createDataFrame([], T.StructType([]))
-            results.append(
-                ParseResult(
-                    data=df,
-                    sheet_name=sheet_name,
-                    file_path=str(p),
-                    engine=f"{fmt} datasource",
-                ).mark_failed()
-            )
-            continue
-        df = (
-            spark.read.format("aaftp_excel")
-            .option("path", str(p))
-            .option("fmt", fmt)
-            .option("sheetref", ref)
-            .option("width", str(width))
-            .load()
-        )
-        results.append(
-            ParseResult(
-                data=df,
-                sheet_name=sheet_name,
-                file_path=str(p),
-                engine=f"{fmt} datasource",
-            )
-        )
+        results.append(result if width else result.mark_failed())
     return results
 
 

@@ -1,4 +1,4 @@
-"""Self-contained (stdlib-only) Excel parsing core + Python DataSource.
+"""Self-contained (stdlib-only) Excel parsing core + corpus DataSource.
 
 Covers the reference's Excel arm (`ImportExcel`, /root/reference/
 main.py:239-265): enumerate sheets, read every sheet headerless with
@@ -22,11 +22,13 @@ formats directly from their XML parts:
   LabelSst/Label/Number/RK/MulRk/BoolErr/Formula, XF/FORMAT date
   styles).
 
-EVERYTHING in this module must stay importable-by-value: the façade
-registers this module with ``cloudpickle.register_pickle_by_value`` so
-the :class:`ExcelDataSource` class and these parser functions ship to
-executors inside the serialized plan — no package install on workers.
-Keep imports stdlib-only.
+EVERYTHING in this module must stay importable-by-value: for the
+corpus reader (``excel.read_excel_many``) the façade registers this
+module with ``cloudpickle.register_pickle_by_value`` so the
+:class:`ExcelCorpusDataSource` class and these parser functions ship
+to executors inside the serialized plan — no package install on
+workers. The single-workbook path (``excel.read_excel``) parses on
+the driver and needs none of this. Keep imports stdlib-only.
 """
 
 from __future__ import annotations
@@ -852,7 +854,7 @@ def ods_sheet_rows(path: str, table_index: int) -> list[list[str | None]]:
 
 
 # ---------------------------------------------------------------------------
-# Generic helpers + Python DataSource (Spark 4)
+# Generic helpers + the many-workbooks Python DataSource (Spark 4)
 # ---------------------------------------------------------------------------
 
 
@@ -894,53 +896,6 @@ def padded(rows: list[list[str | None]], width: int) -> list[list[str]]:
 
 try:  # pragma: no cover - import guard exercised only on Spark < 4
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _SheetPartition(InputPartition):
-        def __init__(self, ref: str, width: int):
-            self.ref = ref
-            self.width = width
-
-    class ExcelReader(DataSourceReader):
-        def __init__(self, options):
-            self.path = options["path"]
-            self.fmt = options.get("fmt", "xlsx")
-            self.ref = options["sheetref"]
-            self.width = int(options["width"])
-
-        def partitions(self):
-            # One worksheet = one partition: a worksheet XML part is a
-            # single deflate stream, not splittable mid-part. Cross-
-            # sheet and cross-file parallelism come from reading each
-            # sheet as its own DataFrame (the façade fans out) over
-            # many files.
-            return [_SheetPartition(self.ref, self.width)]
-
-        def read(self, partition):
-            rows = sheet_rows(self.path, self.fmt, partition.ref)
-            for row in padded(rows, partition.width):
-                yield tuple(row)
-
-    class ExcelDataSource(DataSource):
-        """spark.read.format(...) adapter: executor-side stdlib parse
-        of one sheet (options: path, fmt, sheetref, width)."""
-
-        @classmethod
-        def name(cls):
-            return "aaftp_excel"
-
-        def schema(self):
-            width = int(self.options["width"])
-            return ", ".join(f"c{i} string" for i in range(width))
-
-        def reader(self, schema):
-            return ExcelReader(self.options)
-
-except ImportError:  # pragma: no cover
-    ExcelDataSource = None  # type: ignore[assignment]
-
-
-try:  # pragma: no cover - Spark < 4 guard mirrors ExcelDataSource
-    from pyspark.sql.datasource import DataSource as _DS2  # noqa: F401
 
     class _FilePartition(InputPartition):
         def __init__(self, path: str):

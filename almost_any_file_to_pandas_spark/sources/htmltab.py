@@ -14,11 +14,11 @@ Spark design: like SpreadsheetML (xmlss.py), a single HTML document
 is not splittable, so structure discovery runs driver-side on the
 stdlib ``html.parser`` — which is error-tolerant BY DESIGN (no
 exception on malformed markup; whatever tables complete are kept, a
-built-in salvage pass). Each table becomes a DataFrame via
-``createDataFrame`` over the padded grid; at corpus scale the unit
-of parallelism is many files (``read_html_many``, executor-side via
-mapInPandas over the file list — the ``read_spreadsheetml_many``
-shape).
+built-in salvage pass). Each table becomes a DataFrame via one Arrow
+table over the padded grid (``sources.grid_frame``); at corpus scale
+the unit of parallelism is many files (``read_html_many``,
+executor-side via mapInPandas over the file list — the
+``read_spreadsheetml_many`` shape).
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources import grid_frame
 
 _SKIP_TAGS = ("script", "style")
 _VOID_ROW_TAGS = ("thead", "tbody", "tfoot")  # structural, transparent
@@ -174,14 +175,6 @@ def extract_tables(text: str) -> list[list[list[str]]]:
     return p.finish()
 
 
-def _grid_df(spark: SparkSession, grid: list[list[str]]):
-    width = len(grid[0]) if grid else 0
-    schema = T.StructType(
-        [T.StructField(f"c{i}", T.StringType()) for i in range(width)]
-    )
-    return spark.createDataFrame([tuple(r) for r in grid], schema)
-
-
 def _failed(spark: SparkSession, path: str) -> List[ParseResult]:
     return [
         ParseResult(
@@ -212,7 +205,7 @@ def read_html(
     grids = extract_tables(text)
     return [
         ParseResult(
-            data=_grid_df(spark, grid),
+            data=grid_frame(spark, grid),
             sheet_name=f"table_{i}",
             encoding=encoding,
             file_path=str(p),

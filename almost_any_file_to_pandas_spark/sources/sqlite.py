@@ -14,9 +14,11 @@ Spark design — distributed ROWID-RANGE scan, not a driver slurp:
   and reads only catalog metadata: ``sqlite_master`` table names,
   ``PRAGMA table_info`` column declarations, and per-table
   ``MIN(rowid)/MAX(rowid)`` bounds — O(tables), never row data;
-* each table scan is ``mapInPandas`` over a small frame of rowid
-  ranges (one range per task): every task opens the SQLite file
-  itself and pulls only ``WHERE rowid BETWEEN lo AND hi``. SQLite's
+* each table scan is ``mapInArrow`` over ``sources.range_frame``, a
+  ``spark.range`` of rowid ranges with one range per partition and no
+  repartition (so a scan is one stage): every task opens the SQLite
+  file itself, pulls only ``WHERE rowid BETWEEN lo AND hi`` and yields
+  one typed Arrow batch per range. SQLite's
   rowid is the clustered btree key, so a range probe is a contiguous
   btree walk, not a table scan per task. Like the Avro/driver-side
   arms, executors re-open the path by name — a shared filesystem is
@@ -33,6 +35,8 @@ type — INT→bigint, TEXT/CHAR/CLOB→string, BLOB/untyped→binary,
 REAL/FLOA/DOUB→double, everything else (NUMERIC)→double — and coerce
 stored values per cell, with ``None`` for values a column's affinity
 cannot represent (e.g. a TEXT value smuggled into an INTEGER column).
+Batches are typed Arrow (``sources.arrow_batch``), so a NULL beside
+an int64 above 2**53 does not round it through float64.
 """
 
 from __future__ import annotations
@@ -45,15 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources import arrow_batch, range_frame
 
 SQLITE_MAGIC = b"SQLite format 3\x00"
 
 SQLITE_SUFFIXES = (".db", ".sqlite", ".sqlite3")
-
-# Upper bound on ranges per table: enough tasks to keep a cluster
-# busy without issuing thousands of btree probes against one small
-# file. At local[32] this is one range per core.
-_MAX_RANGES = 64
 
 
 def _affinity_type(decl: Optional[str]) -> T.DataType:
@@ -138,6 +138,22 @@ def _table_plan(
     return schema, src_names, (int(lo), int(hi))
 
 
+def _batch(rows: list, schema: T.StructType):
+    return arrow_batch(
+        [
+            [_coerce(row[i], f.dataType) for row in rows]
+            for i, f in enumerate(schema.fields)
+        ],
+        schema,
+    )
+
+
+def _select(tbl: str, src_names: List[str]) -> str:
+    qt = tbl.replace('"', '""')
+    cols = ", ".join('"' + c.replace('"', '""') + '"' for c in src_names)
+    return f'SELECT {cols} FROM "{qt}"'
+
+
 def _scan_ranged(
     spark: SparkSession,
     path: str,
@@ -146,48 +162,21 @@ def _scan_ranged(
     src_names: List[str],
     bounds: Tuple[int, int],
 ) -> DataFrame:
-    lo, hi = bounds
-    parallelism = spark.sparkContext.defaultParallelism
-    n_ranges = max(1, min(_MAX_RANGES, parallelism, hi - lo + 1))
-    width = (hi - lo + 1 + n_ranges - 1) // n_ranges
-    ranges = [
-        (lo + i * width, min(hi, lo + (i + 1) * width - 1))
-        for i in range(n_ranges)
-        if lo + i * width <= hi
-    ]
-    qt = tbl.replace('"', '""')
-    select_cols = ", ".join(
-        '"' + c.replace('"', '""') + '"' for c in src_names
-    )
-    out_names = [f.name for f in schema.fields]
-    dtypes = [f.dataType for f in schema.fields]
+    query = _select(tbl, src_names) + " WHERE rowid BETWEEN ? AND ?"
 
     def scan(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            for r_lo, r_hi in zip(pdf["lo"], pdf["hi"]):
+        for batch in batches:
+            for r_lo, r_hi in zip(
+                batch.column("lo").to_pylist(), batch.column("hi").to_pylist()
+            ):
                 con = _connect_ro(path)
                 try:
-                    rows = con.execute(
-                        f'SELECT {select_cols} FROM "{qt}"'
-                        " WHERE rowid BETWEEN ? AND ?",
-                        (int(r_lo), int(r_hi)),
-                    ).fetchall()
+                    rows = con.execute(query, (r_lo, r_hi)).fetchall()
                 finally:
                     con.close()
-                data = {
-                    name: [_coerce(row[i], dt) for row in rows]
-                    for i, (name, dt) in enumerate(
-                        zip(out_names, dtypes)
-                    )
-                }
-                yield pd.DataFrame(data, columns=out_names)
+                yield _batch(rows, schema)
 
-    range_df = spark.createDataFrame(
-        ranges, "lo long, hi long"
-    ).repartition(len(ranges))
-    return range_df.mapInPandas(scan, schema)
+    return range_frame(spark, *bounds).mapInArrow(scan, schema)
 
 
 def _scan_single(
@@ -198,22 +187,16 @@ def _scan_single(
     src_names: List[str],
 ) -> DataFrame:
     """WITHOUT ROWID fallback: one driver-side read."""
-    qt = tbl.replace('"', '""')
-    select_cols = ", ".join(
-        '"' + c.replace('"', '""') + '"' for c in src_names
-    )
+    import pyarrow as pa
+
     con = _connect_ro(path)
     try:
-        rows = con.execute(f'SELECT {select_cols} FROM "{qt}"').fetchall()
+        rows = con.execute(_select(tbl, src_names)).fetchall()
     finally:
         con.close()
-    coerced = [
-        tuple(
-            _coerce(v, f.dataType) for v, f in zip(row, schema.fields)
-        )
-        for row in rows
-    ]
-    return spark.createDataFrame(coerced, schema)
+    return spark.createDataFrame(
+        pa.Table.from_batches([_batch(rows, schema)]), schema
+    )
 
 
 def read_sqlite(

@@ -15,9 +15,10 @@ main.py:276): an incremental ``XMLPullParser`` keeps every Row that
 completed before the first fatal error, so a truncated or damaged
 file yields its intact prefix rows instead of a failed result;
 nothing salvageable → failed. Each discovered table becomes a
-DataFrame via ``spark.createDataFrame`` over the padded all-string
-grid; at scale the unit of parallelism is *many files*, which the
-façade callers get by looping paths into independent lazy plans.
+DataFrame via one Arrow table over the padded all-string grid
+(``sources.grid_frame``); at scale the unit of parallelism is *many
+files*, which the façade callers get by looping paths into
+independent lazy plans.
 
 Spark's own ``spark.read.format("xml")`` (native since 4.0) is not
 used because rowTag-based parsing cannot express the namespace-
@@ -35,6 +36,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources import grid_frame
 
 SS_NS = "{urn:schemas-microsoft-com:office:spreadsheet}"
 
@@ -63,14 +65,6 @@ def table_grid(table: ET.Element) -> list[list[str]]:
             rows.append(cells)
     width = max((len(r) for r in rows), default=0)
     return [r + [""] * (width - len(r)) for r in rows]
-
-
-def _grid_df(spark: SparkSession, grid: list[list[str]]):
-    width = len(grid[0]) if grid else 0
-    schema = T.StructType(
-        [T.StructField(f"c{i}", T.StringType()) for i in range(width)]
-    )
-    return spark.createDataFrame([tuple(r) for r in grid], schema)
 
 
 def _salvage_tables(
@@ -139,7 +133,7 @@ def read_spreadsheetml(
             return _failed(spark, str(p))
         return [
             ParseResult(
-                data=_grid_df(spark, grid),
+                data=grid_frame(spark, grid),
                 sheet_name=name if name else "Not defined",
                 file_path=str(p),
                 engine="spreadsheetml (salvaged)",
@@ -155,7 +149,7 @@ def read_spreadsheetml(
             return
         results.append(
             ParseResult(
-                data=_grid_df(spark, grid),
+                data=grid_frame(spark, grid),
                 sheet_name=sheet_name if sheet_name else "Not defined",
                 file_path=str(p),
                 engine="spreadsheetml",

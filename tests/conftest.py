@@ -37,6 +37,14 @@ EXPECTED = [
 ]
 
 
+def assert_range_scan_plan(df, n_ranges: int) -> None:
+    """A range-parallel source scan is one narrow stage: one partition
+    per range and no Exchange in the executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert df.rdd.getNumPartitions() == n_ranges
+
+
 @pytest.fixture(scope="session")
 def spark():
     session = (

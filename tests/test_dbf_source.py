@@ -11,6 +11,7 @@ import pytest
 
 from almost_any_file_to_pandas_spark.parse import parse
 from almost_any_file_to_pandas_spark.sources.dbf import read_dbf
+from tests.conftest import assert_range_scan_plan
 
 
 def _make_dbf(fields, records, deleted=()):
@@ -91,8 +92,44 @@ def test_dbf_many_records_all_ranges_covered(spark, tmp_path):
     records = [[f"{i:6d}"] for i in range(500)]
     path = tmp_path / "big.dbf"
     path.write_bytes(_make_dbf(fields, records))
-    got = sorted(r.N for r in read_dbf(spark, str(path))[0].data.collect())
+    df = read_dbf(spark, str(path))[0].data
+    assert_range_scan_plan(df, min(64, spark.sparkContext.defaultParallelism))
+    got = sorted(r.N for r in df.collect())
     assert got == list(range(500))
+
+
+def test_dbf_float_field_without_decimals_is_bigint(spark, tmp_path):
+    """An F field with 0 decimals is bigint like N: exact above 2**53,
+    exponent form included; a file with no records is the empty typed
+    frame."""
+    fields = [("F", "F", 20, 0)]
+    values = [str(2**60 + 1), "", "1.5E+03", "-7"]
+    path = tmp_path / "float.dbf"
+    path.write_bytes(_make_dbf(fields, [[v.rjust(20)] for v in values]))
+    (res,) = read_dbf(spark, str(path))
+    assert dict(res.data.dtypes) == {"F": "bigint"}
+    assert sorted(res.data.collect(), key=str) == sorted(
+        [(2**60 + 1,), (None,), (1500,), (-7,)], key=str
+    )
+
+    empty = tmp_path / "empty.dbf"
+    empty.write_bytes(_make_dbf(fields, []))
+    (res,) = read_dbf(spark, str(empty))
+    assert dict(res.data.dtypes) == {"F": "bigint"}
+    assert res.data.count() == 0
+
+
+def test_dbf_int64_beside_blank_stays_exact(spark, tmp_path):
+    """A blank numeric in the same record range must not round an
+    int64 above 2**53 through float64."""
+    fields = [("N", "N", 19, 0)]
+    values = [str(2**60 + 1), ""] + [str(i) for i in range(6)]
+    path = tmp_path / "wide.dbf"
+    path.write_bytes(_make_dbf(fields, [[v.rjust(19)] for v in values]))
+    (res,) = read_dbf(spark, str(path))
+    assert dict(res.data.dtypes) == {"N": "bigint"}
+    got = [r.N for r in res.data.collect()]
+    assert sorted(got, key=str) == sorted([2**60 + 1, None, *range(6)], key=str)
 
 
 def test_dbf_facade_and_error_paths(spark, typed_dbf, tmp_path):

@@ -5,13 +5,14 @@ reference-normalized output: headerless all-string cells, positional
 
 from __future__ import annotations
 
+import datetime
 import json
 from pathlib import Path
 
 import pytest
 
 from almost_any_file_to_pandas_spark.parse import parse
-from tests.conftest import EXPECTED, GRID
+from tests.conftest import EXPECTED, GRID, _write_minimal_xlsx
 
 # the reference project's checkout, next to this repository's
 REFERENCE_DIR = Path(__file__).resolve().parents[2] / "reference"
@@ -640,6 +641,38 @@ def test_feather_and_arrow_dispatch(spark, fixture_dir):
     assert r.ok and r.sheet_name == "Feather file content"
     assert {(x["a"], x["b"]) for x in r.data.collect()} == {(1, "x"), (2, "y")}
 
+    # a nullable int64 stays bigint and exact (a pandas detour makes it
+    # double); types Spark's Arrow conversion rejects (unsigned ints,
+    # date64, time32, float16) are cast to ones holding every value
+    typed = pa.table(
+        {
+            "n": pa.array([2**60 + 1, None, 7], pa.int64()),
+            "u32": pa.array([2**32 - 1, 0, None], pa.uint32()),
+            "u64": pa.array([2**64 - 1, 0, 1], pa.uint64()),
+            "d64": pa.array([datetime.date(2020, 1, 2), None, None], pa.date64()),
+            "t32": pa.array([datetime.time(1, 2, 3), None, None], pa.time32("s")),
+            "f16": pa.array([1.5, None, None], pa.float32()).cast(pa.float16()),
+        }
+    )
+    tp = fixture_dir / "typed.feather"
+    feather.write_feather(typed, str(tp))
+    r3 = parse(spark, tp)[0]
+    assert r3.ok
+    assert dict(r3.data.dtypes) == {
+        "n": "bigint",
+        "u32": "bigint",
+        "u64": "decimal(20,0)",
+        "d64": "date",
+        "t32": "time(6)",
+        "f16": "float",
+    }
+    assert [tuple(x) for x in r3.data.collect()] == [
+        (2**60 + 1, 2**32 - 1, 2**64 - 1, datetime.date(2020, 1, 2),
+         datetime.time(1, 2, 3), 1.5),
+        (None, 0, 0, None, None, None),
+        (7, None, 1, None, None, None),
+    ]
+
     ap = fixture_dir / "frame.arrow"
     with pa.OSFile(str(ap), "wb") as sink:
         with pa.ipc.new_stream(sink, tbl.schema) as writer:
@@ -968,3 +1001,40 @@ def test_many_readers_survive_all_unparseable_partition(
     junk_html = fixture_dir / "junk_only.html"
     junk_html.write_text("prose, zero tables")
     assert read_html_many(spark, str(junk_html)).count() == 0
+
+
+def _html_table(grid: list[list[str]]) -> str:
+    body = "".join(
+        "<tr>" + "".join(f"<td>{v}</td>" for v in row) + "</tr>" for row in grid
+    )
+    return f"<html><body><table>{body}</table></body></html>"
+
+
+def _xmlss_table(grid: list[list[str]]) -> str:
+    body = "".join(
+        "<Row>" + "".join(f"<Cell><Data>{v}</Data></Cell>" for v in row) + "</Row>"
+        for row in grid
+    )
+    return (
+        '<?xml version="1.0"?>'
+        '<Workbook xmlns="urn:schemas-microsoft-com:office:spreadsheet" '
+        'xmlns:ss="urn:schemas-microsoft-com:office:spreadsheet">'
+        f'<Worksheet ss:Name="S"><Table>{body}</Table></Worksheet></Workbook>'
+    )
+
+
+@pytest.mark.parametrize("suffix", [".xlsx", ".xml", ".html"])
+def test_grid_row_order_across_partitions(spark, tmp_path, suffix):
+    """A driver-parsed grid spans several partitions; collect() must
+    still return document order, header row first."""
+    grid = [["id", "word"]] + [[str(i), f"w{i}"] for i in range(999)]
+    path = tmp_path / f"ordered{suffix}"
+    if suffix == ".xlsx":
+        _write_minimal_xlsx(path, {"S": grid})
+    elif suffix == ".xml":
+        path.write_text(_xmlss_table(grid))
+    else:
+        path.write_text(_html_table(grid))
+    (res,) = parse(spark, path)
+    assert res.data.rdd.getNumPartitions() > 1
+    assert grid_of(res.data) == grid

@@ -11,6 +11,7 @@ import pytest
 
 from almost_any_file_to_pandas_spark.parse import parse
 from almost_any_file_to_pandas_spark.sources.sqlite import read_sqlite
+from tests.conftest import assert_range_scan_plan
 
 
 @pytest.fixture()
@@ -113,9 +114,9 @@ def test_range_scan_covers_sparse_rowids(spark, tmp_path):
     con.execute("DELETE FROM t WHERE n % 3 = 0")
     con.commit()
     con.close()
-    got = sorted(
-        r.n for r in read_sqlite(spark, str(path))[0].data.collect()
-    )
+    df = read_sqlite(spark, str(path))[0].data
+    assert_range_scan_plan(df, min(64, spark.sparkContext.defaultParallelism))
+    got = sorted(r.n for r in df.collect())
     assert got == [i for i in range(200) if i % 3 != 0]
 
 
@@ -139,3 +140,21 @@ def test_facade_dispatch_and_error_paths(spark, two_table_db, tmp_path):
     con.commit()
     con.close()
     assert parse(spark, str(no_tables))[0].parse_info == "Failed"
+
+
+def test_int64_beside_null_stays_exact(spark, tmp_path):
+    """A NULL in the same rowid range must not round an int64 above
+    2**53 through float64."""
+    path = tmp_path / "big.sqlite"
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE t (v INTEGER)")
+    con.executemany(
+        "INSERT INTO t VALUES (?)",
+        [(2**60 + 1,), (None,)] + [(i,) for i in range(6)],
+    )
+    con.commit()
+    con.close()
+    (res,) = read_sqlite(spark, str(path))
+    assert dict(res.data.dtypes) == {"v": "bigint"}
+    got = [r.v for r in res.data.collect()]
+    assert sorted(got, key=str) == sorted([2**60 + 1, None, *range(6)], key=str)
