@@ -1474,9 +1474,8 @@ def _semantic_centers(
     r5 evidence (2.96→1.54s at sf0.1: Spark ML pays ~2s of fixed
     per-iteration job-scheduling overhead at EVERY corpus size for a
     ≤65,536-row ≈ 32 MB training matrix) once the driver-run digest in
-    BENCH_r06.json confirmed the fastfit floor twin green
-    (gate 50/0, registry 318/0). The fastfit twins below pin
-    backend equality from now on.
+    BENCH_r06.json confirmed the numpy-fit floor green
+    (gate 50/0, registry 318/0).
 
     Two-level (k > SEMANTIC_COARSE_MAX, i.e. the corpus outgrew what
     one SEMANTIC_FIT_SAMPLE-row fit supports): fit SEMANTIC_COARSE_MAX
@@ -1498,10 +1497,11 @@ def _semantic_centers(
             [], "cluster int, center array<double>"
         )
     if n_vectors == 1:
-        row = feats.select("features").first()
+        row = feats.select(
+            F.col("embedding").cast("array<double>").alias("v")
+        ).first()
         return spark.createDataFrame(
-            [(0, [float(x) for x in row["features"]])],
-            "cluster int, center array<double>",
+            [(0, row["v"])], "cluster int, center array<double>"
         )
     k = max(2, min(k, n_vectors))
     if k <= SEMANTIC_COARSE_MAX:
@@ -1597,19 +1597,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-build statistic, same class as the fit itself).
     """
     apply_engine_conf(spark)
-    from pyspark.ml.functions import array_to_vector
-
     emb = table_wide(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        "vec_id",
-        "embedding",
-        array_to_vector(F.col("embedding").cast("array<double>")).alias(
-            "features"
-        ),
-    )
-    # k sizing: a column-pruned count (Catalyst drops the unused
-    # vector conversion), one cheap scan-only pass
-    n_vectors = feats.count()
+    # k sizing: a column-pruned count, one cheap scan-only pass
+    n_vectors = emb.count()
     k = max(
         SEMANTIC_CLUSTER_K,
         -(-n_vectors // SEMANTIC_TARGET_CLUSTER_ROWS),
@@ -1619,20 +1609,22 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once per Lloyd's pass — single-level on the capped cached
     # sample up to SEMANTIC_COARSE_MAX centroids, the two-level
     # coarse/fine path past it (see _semantic_centers).
-    centers = _semantic_centers(spark, feats, n_vectors, k)
-    return _semantic_pairs_from_centers(emb, feats, centers)
+    centers = _semantic_centers(spark, emb, n_vectors, k)
+    return _semantic_pairs_from_centers(emb, centers)
 
 
 def _semantic_pairs_from_centers(
-    emb: DataFrame, feats: DataFrame, centers: DataFrame
+    emb: DataFrame, centers: DataFrame
 ) -> DataFrame:
-    """Top-2 multi-probe assignment + in-cluster exact scoring —
-    shared verbatim (pure code motion) by the FROZEN gate query and
-    the fast-fit twin, so the parent's plan is bit-identical to r4."""
+    """Top-2 multi-probe assignment + in-cluster exact scoring over
+    the ``embeddings`` frame ``emb`` — shared by
+    :func:`dedup_semantic_clusters` and its oracle-paired twin
+    ``dedup_semantic_clusters_det`` (``ivf_kmeans.py``), which differ
+    only in how ``centers`` (``cluster``, ``center``) are fit."""
     sqdist = _sq_dist(
         F.col("embedding").cast("array<double>"), F.col("center")
     )
-    scored = feats.crossJoin(F.broadcast(centers)).select(
+    scored = emb.crossJoin(F.broadcast(centers)).select(
         "vec_id", "cluster", sqdist.alias("_d2")
     )
     w2 = W.partitionBy("vec_id").orderBy(F.asc("_d2"), F.asc("cluster"))
@@ -1693,8 +1685,7 @@ def _semantic_centers_fast(
     rows ≈ 32 MB at dim 64 — an index-build collect, the PQ codebook
     pattern). Eliminates Spark ML's per-iteration job-scheduling
     overhead (~2s fixed at every SF, measured r5). THE production
-    backend since round 7 (`_semantic_centers` routes here); the
-    `*_fastfit` twins now pin backend equality against the parent."""
+    backend since round 7 (`_semantic_centers` routes here)."""
     pdf = _semantic_fit_frame(feats, n_vectors).toPandas()
     # degenerate guards mirroring _semantic_centers (the numpy path
     # handles k = 1, so only empty needs a short-circuit)
@@ -1710,79 +1701,6 @@ def _semantic_centers_fast(
             for r in out.itertuples()
         ],
         "cluster int, center array<double>",
-    )
-
-
-@register("dedup_semantic_clusters_fastfit")  # rows-only twin
-def dedup_semantic_clusters_fastfit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """`dedup_semantic_clusters` calling the numpy fit DIRECTLY —
-    since the round-7 backend swap the parent routes to the same
-    `_semantic_centers_fast`, so this twin now pins BACKEND EQUALITY:
-    any future divergence between the parent's routed fit and the
-    direct fast fit shows up as a floor/equality break here (a
-    fingerprint-equality test also pins parent == twin)."""
-    apply_engine_conf(spark)
-    from pyspark.ml.functions import array_to_vector
-
-    emb = table_wide(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        "vec_id",
-        "embedding",
-        array_to_vector(F.col("embedding").cast("array<double>")).alias(
-            "features"
-        ),
-    )
-    n_vectors = feats.count()
-    k = max(
-        SEMANTIC_CLUSTER_K,
-        -(-n_vectors // SEMANTIC_TARGET_CLUSTER_ROWS),
-    )
-    centers = _semantic_centers_fast(spark, feats, n_vectors, k)
-    return _semantic_pairs_from_centers(emb, feats, centers)
-
-
-@register(
-    "dedup_semantic_floor_fastfit",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           TRUE AS precision_exact,
-           TRUE AS recall_floor_met
-    FROM embeddings
-    """,
-)
-def dedup_semantic_floor_fastfit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Acceptance gate for the fast-fit twin — same precision/recall
-    contract as `dedup_semantic_floor`. Its driver-green history
-    (r5/r6) was the banked evidence for the round-7 backend swap;
-    post-swap it stands as the backend-equality regression row."""
-    sem = dedup_semantic_clusters_fastfit(spark, sf_dir).select(
-        "vec_a", "vec_b", F.lit(1).alias("_sem")
-    )
-    exact = dedup_embedding_cosine(spark, sf_dir).select(
-        "vec_a", "vec_b", F.lit(1).alias("_ex")
-    )
-    joined = exact.join(sem, ["vec_a", "vec_b"], "full").agg(
-        F.count_if(F.col("_ex").isNotNull()).alias("n_exact"),
-        F.count_if(F.col("_sem").isNotNull()).alias("n_sem"),
-        F.count_if(
-            F.col("_ex").isNotNull() & F.col("_sem").isNotNull()
-        ).alias("n_both"),
-    )
-    emb = table(spark, sf_dir, "embeddings")
-    return emb.agg(
-        F.count("*").cast("bigint").alias("n_vectors")
-    ).crossJoin(
-        joined.select(
-            (F.col("n_sem") == F.col("n_both")).alias("precision_exact"),
-            (
-                F.col("n_both")
-                >= F.col("n_exact") * F.lit(SEMANTIC_RECALL_FLOOR)
-            ).alias("recall_floor_met"),
-        )
     )
 
 

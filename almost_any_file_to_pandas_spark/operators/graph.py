@@ -695,14 +695,15 @@ def graph_kcore_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     # THRESHOLDED edge list, already orders of magnitude below the
     # corpus, and at bench scale each distributed round paid two
     # blocking checkpoint jobs and a Catalyst compile for microseconds
-    # of degree counting. The eager checkpoint above makes the count a
-    # cheap stored-blocks job, and the collect below is BOUNDED by the
-    # cap it gates on (≈2 MB). Above the cap the distributed loop runs.
-    n_edges0 = edges.count()
-    if n_edges0 < CC_DRIVER_EDGE_CAP:
+    # of degree counting. One limit(cap).collect() over the eager
+    # checkpoint above both gates and fetches (fewer than cap rows
+    # back means under the cap), so it is BOUNDED by the cap (≈2 MB).
+    # Above the cap the distributed loop runs.
+    collected = edges.limit(CC_DRIVER_EDGE_CAP).collect()
+    if len(collected) < CC_DRIVER_EDGE_CAP:
         from collections import Counter
 
-        es = [(r["u1"], r["u2"]) for r in edges.collect()]
+        es = [(r["u1"], r["u2"]) for r in collected]
         deg = Counter()
         for a, b in es:
             deg[a] += 1

@@ -1,12 +1,15 @@
-"""Learned-quantizer (k-means) IVF with a fully oracle-checkable
-nprobe recall curve.
+"""Learned-quantizer (k-means) IVF: the served top-k and its nprobe
+recall curve, both oracle-checked.
 
 The sign-bit IVF curve (``sim_ivf_nprobe_recall_curve``) proved the
 tuning methodology, but the quantizer actually recommended for a
-100 TB corpus is the LEARNED one (``ivf_k_for_corpus`` +
-k-means inverted lists — see ``sim_ivf_kmeans_topk``). pyspark.ml's
-KMeans is not SQL-restatable, so this module implements a
-DETERMINISTIC Lloyd's iteration both engines can reproduce exactly:
+100 TB corpus is the LEARNED one (``ivf_k_for_corpus`` k-means
+inverted lists). ONE index serves queries and gets tuned:
+:func:`kmeans_ivf_candidates` trains, assigns, probes and scores it,
+and both ``sim_ivf_kmeans_topk`` (nprobe = ``IVF_NPROBE``) and
+``sim_ivf_kmeans_nprobe_curve`` read its candidates, so the curve
+measures the recall of the index the engine serves. The trainer is a
+DETERMINISTIC Lloyd's iteration both engines reproduce exactly:
 
 - **seeds**: the k smallest-``vec_id`` vectors (k from
   ``ivf_k_for_corpus`` — both engines derive it from the corpus count);
@@ -25,13 +28,12 @@ Scale shape (100 TB): each round's ASSIGNMENT is one narrow map pass —
 the ≤k-row centroid frame is collapsed into a single broadcast row and
 every vector computes its argmin inside ``transform``/``array_min``
 (no shuffle, no UDF); the MEAN step shuffles only (k × d) group keys.
-At production scale the quantizer trains on a bounded sample exactly
-like ``sim_ivf_kmeans_topk``; the full corpus then takes ONE
-assignment pass to materialize bucket ids (the hash-partitioning key
-for the inverted lists). The curve itself generates candidates ONCE at
-the widest probe depth and re-ranks through (nprobe, query) windows —
-one corpus pass for all curve points, the same plan spine as the
-sign-bit curve.
+At production scale the quantizer trains on a bounded sample; the
+full corpus then takes ONE assignment pass to materialize bucket ids
+(the hash-partitioning key for the inverted lists). The curve
+generates candidates ONCE at the widest probe depth and re-ranks
+through (nprobe, query) windows — one corpus pass for all curve
+points, the same plan spine as the sign-bit curve.
 
 Reference parity: extends the reference's aggregate surface
 (main.py:416-466 computes max/mode/shape summaries) with the
@@ -49,6 +51,7 @@ from almost_any_file_to_pandas_spark.plans import register, table_wide
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
 from almost_any_file_to_pandas_spark.operators.similarity import (
     IVF_K,
+    IVF_NPROBE,
     IVF_TARGET_BUCKET_ROWS,
     KNN_K,
     N_QUERIES,
@@ -155,6 +158,23 @@ def _driver_lloyd(rows: list, k: int) -> list:
     mat = np.array([v for _, v in rows], dtype=np.float64)
     q15 = Decimal(1).scaleb(-15)
     q12 = Decimal(1).scaleb(-12)
+    # SUM(CAST(val AS DECIMAL(30,15))) addends: the JVM casts via
+    # Double.toString → setScale(15, HALF_UP); repr() produces the
+    # same shortest decimal string.
+    # Assumption: Python repr() == JVM Double.toString.
+    # Only JDK >= 19 guarantees the shortest string (JDK-4511638);
+    # JDK 17 (tested on 17.0.20) may print a longer one for some
+    # doubles, which could round the scale-15 cast differently.
+    # test_kmeans_driver_regime_matches_distributed
+    # (tests/test_round10_opt.py) is the guard.
+    # A vector's addends do not change across rounds, so they are
+    # quantized once. Under the Q12_SAFE_ABS contract their Decimal
+    # sums stay exact (≤ 21 significant digits, inside the context's
+    # 28), so summation order is free.
+    addends = [
+        [Decimal(repr(x)).quantize(q15, ROUND_HALF_UP) for x in row]
+        for row in mat.tolist()
+    ]
     for _ in range(LLOYD_ROUNDS):
         c_arr = np.array(cents, dtype=np.float64)  # (k, d)
         # integer-q12 squared L2 per (vector, centroid): floor each
@@ -166,36 +186,18 @@ def _driver_lloyd(rows: list, k: int) -> list:
         assign = dists.argmin(axis=1)  # first min == smallest cid
         new_cents = []
         for cid in range(len(cents)):
-            members = mat[assign == cid]
-            if len(members) == 0:
+            members = [addends[i] for i in np.flatnonzero(assign == cid)]
+            if not members:
                 new_cents.append(cents[cid])  # empty keeps previous
                 continue
-            cvec = []
-            for dim in range(mat.shape[1]):
-                # SUM(CAST(val AS DECIMAL(30,15))): JVM casts via
-                # Double.toString → setScale(15, HALF_UP); repr()
-                # produces the same shortest decimal string.
-                # Assumption: Python repr() == JVM Double.toString.
-                # Only JDK >= 19 guarantees the shortest string
-                # (JDK-4511638); JDK 17 (tested on 17.0.20) may print
-                # a longer one for some doubles, which could round the
-                # scale-15 cast differently.
-                # test_kmeans_driver_regime_matches_distributed
-                # (tests/test_round10_opt.py) is the guard.
-                s = sum(
-                    Decimal(repr(float(x))).quantize(
-                        q15, ROUND_HALF_UP
-                    )
-                    for x in members[:, dim]
-                )
-                mean = float(s) / len(members)
-                cvec.append(
-                    float(
-                        Decimal(repr(mean)).quantize(
-                            q12, ROUND_HALF_UP
-                        )
+            cvec = [
+                float(
+                    Decimal(repr(float(sum(col)) / len(members))).quantize(
+                        q12, ROUND_HALF_UP
                     )
                 )
+                for col in zip(*members)
+            ]
             new_cents.append(cvec)
         cents = new_cents
     return list(enumerate(cents))
@@ -214,16 +216,18 @@ def deterministic_kmeans_centroids(
     round otherwise) — the frame is k rows, so the checkpoint is free.
 
     Two regimes (:data:`KMEANS_DRIVER_ROW_CAP`, read at call time): a
-    corpus whose row count sits under the cap collects (bounded by the
-    gate) and trains on the driver with bit-identical arithmetic;
-    above it the distributed loop below runs unchanged.
+    corpus whose row count sits under the cap trains on the driver
+    with bit-identical arithmetic; above it the distributed loop below
+    runs unchanged. One ``limit(cap).collect()`` both gates and fetches
+    (fewer than cap rows back means the corpus is under the cap), so
+    the collect is bounded by the cap either way.
 
     Guards the :data:`Q12_SAFE_ABS` data contract with a one-time
     check on the seed frame (bounded — a k-row tripwire, not a corpus
     proof; the contract itself is the documented bound).
     """
-    if emb.count() < KMEANS_DRIVER_ROW_CAP:
-        collected = emb.collect()
+    collected = emb.limit(KMEANS_DRIVER_ROW_CAP).collect()
+    if len(collected) < KMEANS_DRIVER_ROW_CAP:
         rows = [
             (r["vec_id"], list(r["v"]))
             for r in collected
@@ -372,32 +376,154 @@ def _kmeans_cents_sql(
     return ",".join(parts)
 
 
-_CURVE_TAIL_DIST = _sqdist_q12_sql("q.v", "c.cvec")
+def _kmeans_ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The learned IVF index over ``embeddings``: the double-cast
+    corpus ``(vec_id, v)``, its ``ivf_k_for_corpus`` deterministic
+    Lloyd's centroids ``(cid, cvec)``, and the corpus with ONE bucket
+    per vector ``(vec_id, v, bucket)``, assigned map-side against the
+    one-broadcast-row centroid array. The driver-side ``count()`` sizes
+    the quantizer — bounded index-build orchestration, not a data
+    path. :func:`_kmeans_ivf_assigned_sql` is the DuckDB twin."""
+    apply_engine_conf(spark)
+    emb = table_wide(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    k = ivf_k_for_corpus(emb.count())
+    cents = deterministic_kmeans_centroids(spark, emb, k)
+    crow = cents.agg(F.collect_list(F.struct("cid", "cvec")).alias("cs"))
+    assigned = emb.crossJoin(F.broadcast(crow)).select(
+        "vec_id",
+        "v",
+        _argmin_cid(F.col("cs"), F.col("v")).alias("bucket"),
+    )
+    return emb, cents, assigned
 
 
-@register(
-    "sim_ivf_kmeans_nprobe_curve",
-    oracle=f"""
-    WITH {_kmeans_cents_sql()}, assigned AS (
+def _kmeans_ivf_assigned_sql() -> str:
+    """CTE chain ending in ``assigned`` (``vec_id, v, bucket``) — the
+    DuckDB twin of :func:`_kmeans_ivf_index` (``e`` and ``c2`` come
+    from :func:`_kmeans_cents_sql`)."""
+    return f"""{_kmeans_cents_sql()}, assigned AS (
       SELECT e.vec_id, e.v, c.cid AS bucket
       FROM e CROSS JOIN c2 c
       QUALIFY ROW_NUMBER() OVER (
         PARTITION BY e.vec_id
         ORDER BY {_sqdist_q12_sql('e.v', 'c.cvec')}, c.cid) = 1
-    ), probes AS (
+    )"""
+
+
+def kmeans_ivf_candidates(
+    spark: SparkSession, sf_dir: str, nprobe: int
+) -> DataFrame:
+    """The learned IVF index and its in-probe candidates — the ONE
+    implementation behind the served top-k (:func:`sim_ivf_kmeans_topk`,
+    nprobe = ``IVF_NPROBE``) and the tuning curve
+    (:func:`sim_ivf_kmeans_nprobe_curve`, its widest point):
+
+    - **train** and **assign**: :func:`_kmeans_ivf_index`;
+    - **probe**: each of the first ``N_QUERIES`` vectors probes its
+      ``nprobe`` nearest centroids by integer-q12 L2 (tie-break
+      bucket), ranked 1..nprobe;
+    - **candidates**: every other vector in a probed list, scored by
+      cosine to the query rounded to 6 places.
+
+    Returns ``(query_id, probe_rank, bucket, vec_id, cosine)``; a
+    vector sits in one list, so each (query, vector) pair appears at
+    most once. Plan: a bucket-keyed join of the broadcast
+    ≤|queries|·nprobe probe table against the one-pass assigned
+    corpus. :func:`_kmeans_ivf_cand_sql` is the DuckDB twin.
+    """
+    emb, cents, assigned = _kmeans_ivf_index(spark, sf_dir)
+    wp = W.partitionBy("query_id").orderBy(F.asc("d"), F.asc("bucket"))
+    probes = (
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qvec"))
+        .crossJoin(F.broadcast(cents.withColumnRenamed("cid", "bucket")))
+        .withColumn("d", _sqdist_q12(F.col("qvec"), F.col("cvec")))
+        .withColumn("probe_rank", F.row_number().over(wp))
+        .filter(F.col("probe_rank") <= nprobe)
+        .select("query_id", "qvec", "bucket", "probe_rank")
+    )
+    return (
+        assigned.join(F.broadcast(probes), "bucket")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "probe_rank",
+            "bucket",
+            "vec_id",
+            F.round(
+                _dot(F.col("v"), F.col("qvec"))
+                / (_norm(F.col("v")) * _norm(F.col("qvec"))),
+                6,
+            ).alias("cosine"),
+        )
+    )
+
+
+def _kmeans_ivf_cand_sql(nprobe: int) -> str:
+    """CTE chain ending in ``cand`` — the DuckDB twin of
+    :func:`kmeans_ivf_candidates`, shared by the top-k and curve
+    oracles."""
+    return f"""{_kmeans_ivf_assigned_sql()}, probes AS (
       SELECT q.vec_id AS query_id, q.v AS qvec, c.cid AS bucket,
              ROW_NUMBER() OVER (
                PARTITION BY q.vec_id
-               ORDER BY {_CURVE_TAIL_DIST}, c.cid) AS probe_rank
+               ORDER BY {_sqdist_q12_sql('q.v', 'c.cvec')}, c.cid)
+               AS probe_rank
       FROM e q CROSS JOIN c2 c
       WHERE q.vec_id < {N_QUERIES}
     ), cand AS (
-      SELECT p.query_id, p.probe_rank, x.vec_id,
+      SELECT p.query_id, p.probe_rank, p.bucket, x.vec_id,
              ROUND({_cosine_sql('x.v', 'p.qvec')}, 6) AS cosine
       FROM probes p JOIN assigned x ON x.bucket = p.bucket
-      WHERE p.probe_rank <= {max(NPROBE_CURVE)}
+      WHERE p.probe_rank <= {nprobe}
         AND x.vec_id <> p.query_id
-    ), exact AS (
+    )"""
+
+
+@register(
+    "sim_ivf_kmeans_topk",
+    oracle=f"""
+    WITH {_kmeans_ivf_cand_sql(IVF_NPROBE)}
+    SELECT query_id, vec_id, bucket, cosine,
+           ROW_NUMBER() OVER (
+             PARTITION BY query_id ORDER BY cosine DESC, vec_id)
+             AS ivf_rank
+    FROM cand
+    QUALIFY ivf_rank <= {KNN_K}
+    """,
+)
+def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN over the learned quantizer: each query probes its
+    ``IVF_NPROBE`` nearest inverted lists and keeps the in-probe
+    cosine top-``KNN_K`` (ties to the smaller vec_id) — the index
+    :func:`sim_ivf_kmeans_nprobe_curve` tunes, served. Output
+    ``(query_id, vec_id, bucket, cosine, ivf_rank)``, the contract the
+    recall harness (``sim_ivf_recall``) and PQ's top-k share.
+
+    This is the production ANN shape at 100 TB: train the quantizer on
+    a sample (here: the corpus — testdata-sized), assign every vector
+    ONE bucket id (a plain int column → hash-partitioned storage by
+    bucket co-locates each list), and at query time touch nprobe/k of
+    the data. Search cost drops ~k/nprobe-fold vs brute force at the
+    recall the probe count buys.
+    """
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        kmeans_ivf_candidates(spark, sf_dir, IVF_NPROBE)
+        .withColumn("ivf_rank", F.row_number().over(w))
+        .filter(F.col("ivf_rank") <= KNN_K)
+        .select("query_id", "vec_id", "bucket", "cosine", "ivf_rank")
+    )
+
+
+@register(
+    "sim_ivf_kmeans_nprobe_curve",
+    oracle=f"""
+    WITH {_kmeans_ivf_cand_sql(max(NPROBE_CURVE))}, exact AS (
       SELECT q.vec_id AS query_id, x.vec_id
       FROM e q JOIN e x ON x.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES}
@@ -435,62 +561,23 @@ def sim_ivf_kmeans_nprobe_curve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Recall@k vs nprobe for the LEARNED (k-means) IVF quantizer —
-    the tuning curve for the index actually recommended at 100 TB
-    (``ivf_k_for_corpus`` lists, trained centroids), oracle-paired
-    end-to-end because the training loop is the deterministic
-    integer-exact Lloyd's of :func:`deterministic_kmeans_centroids`.
+    the tuning curve for the index the engine serves
+    (:func:`sim_ivf_kmeans_topk` is its nprobe = ``IVF_NPROBE`` point),
+    oracle-paired end-to-end because the training loop is the
+    deterministic integer-exact Lloyd's of
+    :func:`deterministic_kmeans_centroids`.
 
-    For each nprobe ∈ {1, 2, 4, 8}: probe the nprobe centroids
-    nearest the query (integer-q12 L2, tie-break cid), take the
-    in-probe cosine top-k, and score hits against the exact
+    For each nprobe ∈ {1, 2, 4, 8}: take the in-probe cosine top-k
+    over the nprobe nearest lists and score hits against the exact
     brute-force top-k (:func:`sim_knn_batch` — same batch, same
     rounding). One row per nprobe: hit/evaluable counts + integer q6
     macro recall.
 
-    Plan: candidates are generated ONCE at the widest probe depth
-    (bucket-keyed join of the broadcast ≤|queries|·nprobe_max probe
-    table against the one-pass bucket-assigned corpus); every curve
-    point re-ranks that scored frame through a (nprobe, query)
-    window. The driver-side ``count()`` sizes the quantizer — bounded
-    index-build orchestration, not a data path.
+    Plan: :func:`kmeans_ivf_candidates` generates candidates ONCE at
+    the widest probe depth; every curve point re-ranks that scored
+    frame through a (nprobe, query) window.
     """
-    apply_engine_conf(spark)
-    emb = table_wide(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    k = ivf_k_for_corpus(emb.count())
-    cents = deterministic_kmeans_centroids(spark, emb, k)
-
-    crow = cents.agg(F.collect_list(F.struct("cid", "cvec")).alias("cs"))
-    assigned = emb.crossJoin(F.broadcast(crow)).select(
-        "vec_id",
-        "v",
-        _argmin_cid(F.col("cs"), F.col("v")).alias("bucket"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.asc("d"), F.asc("bucket"))
-    probes = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qvec"))
-        .crossJoin(F.broadcast(cents.withColumnRenamed("cid", "bucket")))
-        .withColumn("d", _sqdist_q12(F.col("qvec"), F.col("cvec")))
-        .withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= max(NPROBE_CURVE))
-        .select("query_id", "qvec", "bucket", "probe_rank")
-    )
-    cand = (
-        assigned.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "probe_rank",
-            "vec_id",
-            F.round(
-                _dot(F.col("v"), F.col("qvec"))
-                / (_norm(F.col("v")) * _norm(F.col("qvec"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
+    cand = kmeans_ivf_candidates(spark, sf_dir, max(NPROBE_CURVE))
     nprobes = spark.createDataFrame(
         [(v,) for v in NPROBE_CURVE], "nprobe int"
     )
@@ -531,13 +618,7 @@ def sim_ivf_kmeans_nprobe_curve(
 @register(
     "sim_ivf_kmeans_bucket_balance",
     oracle=f"""
-    WITH {_kmeans_cents_sql()}, assigned AS (
-      SELECT e.vec_id, c.cid AS bucket
-      FROM e CROSS JOIN c2 c
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY e.vec_id
-        ORDER BY {_sqdist_q12_sql('e.v', 'c.cvec')}, c.cid) = 1
-    ), sz AS (
+    WITH {_kmeans_ivf_assigned_sql()}, sz AS (
       SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vecs
       FROM assigned GROUP BY bucket
     ), tot AS (
@@ -567,17 +648,9 @@ def sim_ivf_kmeans_bucket_balance(
     count, and two broadcast scalars — the operator's cost is the
     assignment scan.
     """
-    apply_engine_conf(spark)
-    emb = table_wide(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    k = ivf_k_for_corpus(emb.count())
-    cents = deterministic_kmeans_centroids(spark, emb, k)
-    crow = cents.agg(F.collect_list(F.struct("cid", "cvec")).alias("cs"))
+    _, _, assigned = _kmeans_ivf_index(spark, sf_dir)
     sz = (
-        emb.crossJoin(F.broadcast(crow))
-        .select(_argmin_cid(F.col("cs"), F.col("v")).alias("bucket"))
-        .groupBy("bucket")
+        assigned.groupBy("bucket")
         .agg(F.count("*").cast("long").alias("n_vecs"))
     )
     tot = sz.agg(F.sum("n_vecs").cast("long").alias("n"))
@@ -636,7 +709,8 @@ def dedup_semantic_clusters_det(
     ``dedup_semantic_clusters`` pipeline — top-2 multi-probe
     assignment, in-cluster exact-cosine verification at the duplicate
     threshold, pair dedup — with ONLY the quantizer fit swapped from
-    ml.KMeans to :func:`deterministic_kmeans_centroids`. That swap
+    the driver-side numpy Lloyd's to
+    :func:`deterministic_kmeans_centroids`. That swap
     upgrades the family's correctness evidence from rows-only + floor
     to a full value-hash pair: centroids, float sq-dist assignments
     (the sequential fold is bit-identical across engines), kernel
@@ -668,4 +742,4 @@ def dedup_semantic_clusters_det(
     cents = deterministic_kmeans_centroids(spark, embd, k).select(
         F.col("cid").alias("cluster"), F.col("cvec").alias("center")
     )
-    return _semantic_pairs_from_centers(emb, emb, cents)
+    return _semantic_pairs_from_centers(emb, cents)

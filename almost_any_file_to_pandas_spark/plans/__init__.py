@@ -158,10 +158,6 @@ POST_GATE_PRIORITY = (
     "sim_ivf_incremental_assign",
     "events_session_stats",
     "events_user_erasure_audit",
-    # r6-swap evidence: the frozen semantic gate row's fit backend,
-    # swapped to the driver-side numpy Lloyd's, behind its own floor
-    "dedup_semantic_floor_fastfit",
-    "dedup_semantic_clusters_fastfit",
     "mm_dedup_binary_exact",
     "events_time_to_convert",
     "dedup_minhash_calibration",

@@ -129,10 +129,7 @@ HEADLINE = [
     "events_attribution_last_touch",
     "text_token_budget_trim_twopass",
     "sim_ivfpq_topk",
-    # late-r05 additions (appended; prior slots frozen). The fast-fit
-    # twin's slot records the driver-side number backing the queued
-    # r6 swap of dedup_semantic_clusters' fit backend.
-    "dedup_semantic_clusters_fastfit",
+    # late-r05 additions (appended; prior slots frozen)
     "mm_dedup_binary_exact",
     "events_session_stats",
     "events_hourly_quantiles_by_type",

@@ -126,13 +126,13 @@ BATTERY = [
     "events_sprt_click_rate_walk",
     # zero-user corpus → zero sums, mean guard
     "privacy_dp_clipped_mean",
+    # empty corpus → no centroids; one vector → no neighbor but itself
+    "sim_ivf_kmeans_topk",
 ]
 
 # Rows-only repaired queries (no oracle): crash-freedom is the pin.
 ROWS_ONLY_BATTERY = [
     "dedup_semantic_clusters",
-    "dedup_semantic_clusters_fastfit",
-    "sim_ivf_kmeans_topk",
     "sim_pq_topk",
     "sim_pq_recall",
     "sim_pq_reconstruction",

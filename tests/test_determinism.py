@@ -102,6 +102,9 @@ QUERIES_UNDER_TEST = [
     # learned-quantizer curve: deterministic Lloyd's (integer-q12
     # distances, DECIMAL means) must be partitioning-independent too
     "sim_ivf_kmeans_nprobe_curve",
+    # ... and so must the served top-k over the same index (in-probe
+    # rank-window cut, ties to the smaller vec_id)
+    "sim_ivf_kmeans_topk",
     # SQ8: global per-dim min/max + rank-window cut value classes
     "sim_sq8_topk",
     # IVFSQ8 + threshold sweep: probe-rank cuts and broadcast-scalar
@@ -306,6 +309,7 @@ _ROUND_AGG_EXEMPT = {
     # order-independent and exact; divide-by-count + ROUND 12 is the
     # proven margin-audit recipe, not a float-aggregate ratio
     "sim_ivf_kmeans_nprobe_curve",
+    "sim_ivf_kmeans_topk",  # the curve's chain, at IVF_NPROBE
     "sim_ivf_kmeans_bucket_balance",
     "dedup_semantic_clusters_det",
     "customer_rfm_kmeans_segments",  # same Lloyd centroid-mean chain

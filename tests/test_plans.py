@@ -732,25 +732,32 @@ def test_semantic_fit_sample_is_corpus_independent(spark):
     assert cap >= 4 * dd.SEMANTIC_TARGET_CLUSTER_ROWS
 
 
-def test_semantic_parent_equals_fastfit_twin(spark):
-    """Round-7 backend swap pin: `dedup_semantic_clusters` (which now
-    routes its fit through `_semantic_centers` → the driver-side numpy
-    Lloyd's) must emit EXACTLY the pair set of the direct fast-fit
-    twin — any future backend divergence breaks this equality."""
-    import __spark_entry__ as entrymod
+def test_ivf_kmeans_topk_is_the_curve_point_at_ivf_nprobe(spark):
+    """The served learned-IVF top-k is the index the nprobe curve
+    tunes: its hits against the exact kNN equal the curve's n_hits at
+    IVF_NPROBE."""
+    from almost_any_file_to_pandas_spark.operators.similarity import (
+        IVF_NPROBE,
+        sim_knn_batch,
+    )
+    from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
+        sim_ivf_kmeans_nprobe_curve,
+        sim_ivf_kmeans_topk,
+    )
 
-    qs = entrymod.queries()
-    parent = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in qs["dedup_semantic_clusters"](spark, SF_DIR).collect()
+    topk = {
+        (r.query_id, r.vec_id)
+        for r in sim_ivf_kmeans_topk(spark, SF_DIR).collect()
     }
-    twin = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in qs["dedup_semantic_clusters_fastfit"](
-            spark, SF_DIR
-        ).collect()
+    exact = {
+        (r.query_id, r.vec_id)
+        for r in sim_knn_batch(spark, SF_DIR).collect()
     }
-    assert parent == twin and len(parent) > 0
+    curve = {
+        r.nprobe: r.n_hits
+        for r in sim_ivf_kmeans_nprobe_curve(spark, SF_DIR).collect()
+    }
+    assert len(topk & exact) == curve[IVF_NPROBE] > 0
 
 
 def test_vocab_coverage_top_terms_via_take_ordered(spark):
@@ -1076,7 +1083,6 @@ def test_semantic_two_level_scales_centroids_past_fit_cap(spark):
     fits) instead of silently capping k. Constants are patched down
     so the boundary is reachable at test scale; the pin is that the
     centers table crosses the single-fit cap and stays deterministic."""
-    from pyspark.ml.functions import array_to_vector
     from pyspark.sql import functions as F
 
     from almost_any_file_to_pandas_spark.operators import dedup as dd
@@ -1093,7 +1099,6 @@ def test_semantic_two_level_scales_centroids_past_fit_cap(spark):
                 F.lit(1.0),
             ).alias("embedding"),
         )
-        .withColumn("features", array_to_vector("embedding"))
     )
     saved = (
         dd.SEMANTIC_FIT_SAMPLE,

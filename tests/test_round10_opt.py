@@ -112,6 +112,25 @@ def test_kmeans_driver_regime_matches_distributed(spark, monkeypatch):
     assert fast == dist
 
 
+@pytest.mark.parametrize("cap", ["default", 0])
+def test_kmeans_rejects_components_past_q12_bound(spark, monkeypatch, cap):
+    """The Q12_SAFE_ABS data contract trips in both trainer regimes: a
+    seed vector with a component of 9.0 (> 8.0) would overflow the
+    integer-q12 distance terms, so the trainer raises instead."""
+    import almost_any_file_to_pandas_spark.operators.similarity  # noqa: F401
+    from almost_any_file_to_pandas_spark.operators import ivf_kmeans
+
+    assert ivf_kmeans.Q12_SAFE_ABS < 9.0
+    if cap != "default":
+        monkeypatch.setattr(ivf_kmeans, "KMEANS_DRIVER_ROW_CAP", cap)
+    emb = spark.createDataFrame(
+        [(0, [9.0, 0.0]), (1, [0.5, 0.5]), (2, [0.1, 0.2])],
+        "vec_id long, v array<double>",
+    )
+    with pytest.raises(ValueError, match="Q12_SAFE_ABS"):
+        ivf_kmeans.deterministic_kmeans_centroids(spark, emb, 2).collect()
+
+
 def test_kcenter_driver_regime_matches_distributed(
     spark, monkeypatch, gate_compare, tmp_path
 ):
