@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 TOP_RULES = 20
 HITS_TOP_K = 15
@@ -76,7 +75,6 @@ def orders_brand_basket_rules(
     Pair counts map-side combine onto a ≤ C(|brands|, 2)-key domain
     (25 brands → ≤ 300 cells). The final ranking sorts that bounded
     rule frame, not data."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -182,7 +180,6 @@ def graph_hits_authority_counts(
     state beyond one value per node. Folds are DECIMAL(38,0)/HUGEINT
     against hub-degree² blow-up; the final sort ranks the
     supplier-count frame only."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )

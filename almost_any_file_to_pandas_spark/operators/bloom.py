@@ -39,7 +39,6 @@ from almost_any_file_to_pandas_spark.operators.textstats import (
     CONTAM_NGRAM,
 )
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 BLOOM_BITS = 1 << 20  # 128 KiB bitset
 BLOOM_K = 3  # hash probes per shingle
@@ -122,7 +121,6 @@ def text_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL) and the engine's claim that every exact hit was also a Bloom
     candidate — a false negative would flip the boolean and turn the
     driver's hash gate red."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     # The shingle explosion is an interpreted higher-order expression
     # (CPU-heavy, no codegen) and BOTH frames are consumed more than
@@ -231,7 +229,6 @@ def text_bloom_size_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     sh = _shingles(docs).localCheckpoint(eager=True)
     bench = _shingles(

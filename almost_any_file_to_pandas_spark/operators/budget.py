@@ -35,12 +35,7 @@ from almost_any_file_to_pandas_spark.operators.textstats import (
     _occurrences,
     _occurrences_sql,
 )
-from almost_any_file_to_pandas_spark.plans import (
-    ORACLES,
-    register,
-    table_wide,
-)
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
+from almost_any_file_to_pandas_spark.plans import register, table_wide
 
 BUDGET_FRACTION_DEN = 2  # keep ceil(total/2) tokens per source
 
@@ -99,7 +94,6 @@ def text_token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget line. ``n_tokens ≥ 1`` always (split of "" is [""]), so the
     integer division is total.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.col("text"), " ", -1))
     hits = None
@@ -151,137 +145,3 @@ def text_token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("tokens_kept"), F.lit(0)).alias("tokens_kept"),
     )
 
-
-# The 100 TB form of the same semantics (the docstring's documented
-# production swap, r4 verdict #5): the parent pays a per-source sort
-# of EVERY document inside the cumulative window. When one source is
-# too hot for a single partition's sort, cut on the quality
-# DISTRIBUTION instead — q_key is already integer-quantized to
-# ≤ 1e6+1 levels, so the token-weighted quantile cut is EXACT on the
-# (source, q_key) level census, and only the single boundary level's
-# documents ever enter an exact window. Two corpus passes (level
-# aggregate + boundary re-scan), each a plain hash aggregate/join;
-# the only sorts are over level censuses (bounded cardinality) and
-# one q_key level per source.
-@register(
-    "text_token_budget_trim_twopass",
-    oracle=ORACLES["text_token_budget_trim"],
-)
-def text_token_budget_trim_twopass(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Equality twin of :func:`text_token_budget_trim` — identical
-    output (same oracle SQL verbatim), different physical strategy:
-
-    Pass 1: fold docs to the per-(source, q_key) LEVEL census (one
-    hash aggregate), cumulative-sum token counts over levels ordered
-    q_key DESC (a window over ≤ |q levels| ≈ 1e6 rows per source,
-    never documents), and classify each level against the budget:
-    wholly kept (cum ≤ budget), boundary (cum_before < budget < cum),
-    or dropped. Whole/dropped levels contribute closed-form sums.
-
-    Pass 2: ONLY the boundary level's documents (one level per
-    source) re-enter the exact doc_id-ordered window with the
-    remaining budget — the per-partition sort is bounded by a single
-    quality level instead of the whole source.
-
-    Kept-set equality with the parent is exact, not approximate: the
-    parent's order is (q_key desc, doc_id asc), so every higher
-    level's docs precede all boundary docs, and within the boundary
-    level the same doc_id tie-break applies; integer arithmetic
-    everywhere means no cut-point ambiguity. Pinned by the shared
-    oracle and a direct DataFrame-equality test.
-    """
-    apply_engine_conf(spark)
-    docs = table_wide(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.col("text"), " ", -1))
-    hits = None
-    for w in _STOPWORDS:
-        occ = _occurrences(F.lower(F.col("text")), w)
-        hits = occ if hits is None else hits + occ
-    scored = docs.select(
-        "source",
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        (hits.cast("long") * F.lit(1_000_000)).alias("_hits_scaled"),
-    ).select(
-        "source",
-        "doc_id",
-        "n_tokens",
-        F.expr("_hits_scaled div n_tokens").alias("q_key"),
-    )
-    # the stopword-scan projection is interpreted and CPU-heavy, and
-    # THREE consumers read it (budgets, level census, boundary
-    # re-scan) — materialize once, the bloom/minhash discipline
-    scored = scored.localCheckpoint(eager=True)
-    budgets = scored.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("tokens_total"),
-        F.expr(
-            f"(SUM(n_tokens) + {BUDGET_FRACTION_DEN - 1}) "
-            f"div {BUDGET_FRACTION_DEN}"
-        ).alias("budget"),
-    )
-    levels = scored.groupBy("source", "q_key").agg(
-        F.sum("n_tokens").alias("lvl_tokens"),
-        F.count("*").alias("lvl_docs"),
-    )
-    w_lvl = (
-        Window.partitionBy("source")
-        .orderBy(F.desc("q_key"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    lvl_cum = (
-        levels.withColumn("cum", F.sum("lvl_tokens").over(w_lvl))
-        .join(F.broadcast(budgets.select("source", "budget")), "source")
-        .withColumn("cum_before", F.col("cum") - F.col("lvl_tokens"))
-    )
-    whole = (
-        lvl_cum.filter(F.col("cum") <= F.col("budget"))
-        .groupBy("source")
-        .agg(
-            F.sum("lvl_docs").alias("n_full"),
-            F.sum("lvl_tokens").alias("tokens_full"),
-        )
-    )
-    boundary = lvl_cum.filter(
-        (F.col("cum") > F.col("budget"))
-        & (F.col("cum_before") < F.col("budget"))
-    ).select(
-        "source",
-        "q_key",
-        (F.col("budget") - F.col("cum_before")).alias("remaining"),
-    )
-    w_doc = (
-        Window.partitionBy("source", "q_key")
-        .orderBy(F.asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    kept_boundary = (
-        scored.join(F.broadcast(boundary), ["source", "q_key"])
-        .withColumn("cum2", F.sum("n_tokens").over(w_doc))
-        .filter(F.col("cum2") <= F.col("remaining"))
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_bnd"),
-            F.sum("n_tokens").alias("tokens_bnd"),
-        )
-    )
-    return (
-        budgets.join(F.broadcast(whole), "source", "left")
-        .join(F.broadcast(kept_boundary), "source", "left")
-        .select(
-            "source",
-            "n_docs",
-            "tokens_total",
-            "budget",
-            (
-                F.coalesce(F.col("n_full"), F.lit(0))
-                + F.coalesce(F.col("n_bnd"), F.lit(0))
-            ).alias("n_kept"),
-            (
-                F.coalesce(F.col("tokens_full"), F.lit(0))
-                + F.coalesce(F.col("tokens_bnd"), F.lit(0))
-            ).alias("tokens_kept"),
-        )
-    )

@@ -29,14 +29,24 @@ quadratic bucket.
 
 from __future__ import annotations
 
+import random
+import sys
+import zlib
+
+import numpy as np
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
+
+# The Arrow kernels call this module's shingle and MinHash helpers:
+# ship them to the Python workers by value, so a worker never has to
+# import the package (its path is on the driver's sys.path only).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # MinHash parameters: 128 hashes in 32 bands × 4 rows. At Jaccard 0.8
 # the per-band collision prob is 0.8^4 ≈ 0.41 → miss prob across 32
@@ -58,44 +68,52 @@ def _tokens(col):
     return F.array_distinct(F.split(col, " ", -1))
 
 
-def _shingled(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, toks) with distinct word-n-gram shingles, ready for
-    heavy per-row work.
+def _shingle_set(text: str, n: int = 3) -> set:
+    """The distinct word-n-gram shingles of ``text`` (split on single
+    spaces); empty when it has fewer than ``n`` words.
 
-    The shingle build is an Arrow-batched Python stage, not a JVM
-    ``transform``/``concat_ws`` expression: higher-order functions are
-    interpreted per element in Spark (never codegen'd), and the
-    measured gap at bench scale is 3.5× cold / 5× warm in favor of a
-    CPython set-comprehension over the same strings. The equivalent
-    declarative form is kept in :func:`_word_ngrams`; a unit test pins
-    the two to the same shingle sets.
-
-    ``repartition`` by doc_id: a small input (one parquet split)
-    otherwise yields ONE task, serializing the per-row work on a
-    single core. On a real cluster with many splits this shuffle is
-    still worth it when upstream partitioning is skewed; the payload
-    is (id, text) only.
+    Every shingle kernel here (LSH bands, MinHash signatures, the
+    prefix index, pair verification) is an Arrow-batched Python stage
+    calling this, not a JVM ``transform``/``concat_ws`` expression:
+    higher-order functions are interpreted per element in Spark
+    (never codegen'd), and the measured gap at bench scale is 3.5×
+    cold / 5× warm in favor of a CPython set-comprehension over the
+    same strings. The equivalent declarative form is kept in
+    :func:`_word_ngrams`; a unit test pins the two to the same sets.
     """
-    spark = docs.sparkSession
+    words = text.split(" ")
+    return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
 
-    def _batches(batches):
-        for batch in batches:
-            ids, toks = [], []
-            for d, text in zip(batch["doc_id"], batch["text"]):
-                w = text.split(" ")
-                if len(w) < n:
-                    continue
-                ids.append(d)
-                toks.append(
-                    list({" ".join(w[i : i + n]) for i in range(len(w) - n + 1)})
-                )
-            yield pd.DataFrame({"doc_id": ids, "toks": toks})
 
-    return (
-        docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", "text")
-        .mapInPandas(_batches, schema="doc_id bigint, toks array<string>")
-    )
+# The N_HASHES affine maps h -> (a·h + b) mod MERSENNE_PRIME of the
+# MinHash family, drawn once from a fixed seed.
+_MINHASH_RNG = random.Random(42)
+_MINHASH_A, _MINHASH_B = np.array(
+    [
+        (
+            _MINHASH_RNG.randrange(1, MERSENNE_PRIME),
+            _MINHASH_RNG.randrange(0, MERSENNE_PRIME),
+        )
+        for _ in range(N_HASHES)
+    ],
+    dtype=np.int64,
+).T[:, :, None]
+
+
+def _minhash(shingles: set) -> np.ndarray:
+    """The N_HASHES-long MinHash signature of a non-empty shingle set.
+
+    Every hash here is internal (the public contracts are verified
+    pair sets and hash-independent estimates), so the base hash is
+    crc32 (zlib, C speed) rather than xxhash64. a,h < 2^31 keeps
+    a*h+b < 2^62 inside int64.
+    """
+    h = np.fromiter(
+        (zlib.crc32(s.encode()) for s in shingles),
+        dtype=np.int64,
+        count=len(shingles),
+    ) % MERSENNE_PRIME
+    return ((_MINHASH_A * h[None, :] + _MINHASH_B) % MERSENNE_PRIME).min(axis=1)
 
 
 @register(
@@ -117,7 +135,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies regardless of cluster size); partial agg map-side. This is
     the canonical 100 TB dedup: no sort, no window, no collect.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     return (
         docs.select(
@@ -132,58 +149,29 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_candidate_pairs(docs: DataFrame, seed: int = 42) -> DataFrame:
+def minhash_candidate_pairs(docs: DataFrame) -> DataFrame:
     """LSH candidate pairs via banded minhash signatures over 3-word
     shingles (the standard near-dup formulation — raw token *sets*
     are undiscriminating on small vocabularies).
 
-    Internal hash functions are Spark-side only (xxhash64 + affine
-    transforms mod a Mersenne prime) — the public contract is the
-    *verified* pair set, which is hash-independent.
+    The whole signature pipeline — shingle, :func:`_minhash`, band
+    keys — is ONE narrow Arrow-batched Python stage from
+    (doc_id, text) to (doc_id, band, key): no JVM array building, no
+    per-element HOF lambdas, no shingle arrays through Arrow. The
+    public contract is the *verified* pair set, which is
+    hash-independent.
     """
-    import random
-
-    rng = random.Random(seed)
-    coeffs = [
-        (rng.randrange(1, MERSENNE_PRIME), rng.randrange(0, MERSENNE_PRIME))
-        for _ in range(N_HASHES)
-    ]
-
-    # The whole signature pipeline — shingle, base-hash, 128 affine
-    # min-hashes, band keys — is ONE narrow Arrow-batched Python stage
-    # from (doc_id, text) to (doc_id, band, key): no JVM array
-    # building, no per-element HOF lambdas, no shingle arrays through
-    # Arrow. Every hash here is internal (the public contract is the
-    # *verified* pair set, hash-independent), so the base hash is
-    # crc32 (zlib, C speed) rather than xxhash64. a,h < 2^31 keeps
-    # a*h+b < 2^62 inside int64.
-    a_vec = [c[0] for c in coeffs]
-    b_vec = [c[1] for c in coeffs]
     n_bands, rows_per_band = N_BANDS, ROWS_PER_BAND
 
     def _band_batches(batches):
-        import zlib
-
-        import numpy as np
-
-        a = np.asarray(a_vec, dtype=np.int64)[:, None]
-        b = np.asarray(b_vec, dtype=np.int64)[:, None]
-        band_idx = np.repeat(np.arange(n_bands), 1)
+        band_idx = np.arange(n_bands)
         for batch in batches:
             out_doc, out_band, out_key = [], [], []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                words = text.split(" ")
-                if len(words) < 3:
+                shingles = _shingle_set(text)
+                if not shingles:
                     continue
-                shingles = {
-                    " ".join(words[i : i + 3]) for i in range(len(words) - 2)
-                }
-                h = np.fromiter(
-                    (zlib.crc32(s.encode()) for s in shingles),
-                    dtype=np.int64,
-                    count=len(shingles),
-                ) % MERSENNE_PRIME
-                sig = ((a * h[None, :] + b) % MERSENNE_PRIME).min(axis=1)
+                sig = _minhash(shingles)
                 # band key: fold the band's rows into one int64 with a
                 # 64-bit FNV-style mix (wraparound is deterministic)
                 key = np.zeros(n_bands, dtype=np.uint64)
@@ -337,7 +325,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force O(n²) statement of the same contract (feasible only
     at oracle scale — the Spark path is the one that survives 100 TB).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     # Materialize the candidate set ONCE (it's tiny — LSH output) so
     # the verify stage's broadcast build starts from the checkpointed
@@ -390,12 +377,7 @@ def _verify_pairs(
             if s is None:
                 if len(cache) > 50_000:
                     cache.clear()
-                words = text.split(" ")
-                s = {
-                    " ".join(words[i : i + n])
-                    for i in range(len(words) - n + 1)
-                }
-                cache[doc_id] = s
+                s = cache[doc_id] = _shingle_set(text, n)
             return s
 
         for batch in batches:
@@ -498,18 +480,13 @@ def _prefix_index(
 
     def _batches(batches):
         import math
-        import zlib
 
         for batch in batches:
             out_doc, out_sh = [], []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                words = text.split(" ")
-                if len(words) < n:
+                shingles = _shingle_set(text, n)
+                if not shingles:
                     continue
-                shingles = {
-                    " ".join(words[i : i + n])
-                    for i in range(len(words) - n + 1)
-                }
                 k = len(shingles)
                 p = k - math.ceil(threshold * k) + k_prefix
                 prefix = sorted(
@@ -554,7 +531,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-dup), and inert on any corpus whose max shingle-df stays
     under the cap (testdata max df ≈ 25).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     prefix = _prefix_index(docs, 3, NGRAM_THRESHOLD, k_prefix=2)
     co = _pairs_within_buckets(
@@ -604,7 +580,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, and a canonical flag; the retained corpus = canonical rows
     plus all unclustered docs (anti-join on doc_id).
     """
-    apply_engine_conf(spark)
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(pairs, "doc_a", "doc_b")
     return (
@@ -679,7 +654,6 @@ def dedup_simhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: explode distinct tokens → groupBy doc_id with 16 sign-sum
     aggregates (single shuffle, map-side partials).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = (
         docs.repartition(
@@ -873,7 +847,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness anchor for the bucketed variants (sim_lsh /
     sim_ivf_topk, the 100 TB candidate paths).
     """
-    apply_engine_conf(spark)
     return _cosine_pair_stream(spark, sf_dir, EMBEDDING_DUP_THRESHOLD)
 
 
@@ -955,7 +928,6 @@ def dedup_cosine_threshold_curve(
     double literal division on both engines — against the
     bit-identical rounded cosine.
     """
-    apply_engine_conf(spark)
     lo = min(COSINE_CURVE_PCTS) / 100.0
     pairs = _cosine_pair_stream(spark, sf_dir, lo).localCheckpoint(
         eager=True
@@ -1042,7 +1014,6 @@ def dedup_corpus_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the same two lineages the standalone operators use; the
     final row is a driver-side scalar join (4 longs, not a data path).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     w_fp = W.partitionBy(F.md5(F.lower(F.trim(F.col("text")))))
     exact_loser = (
@@ -1125,7 +1096,6 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     here both sides derive from one table so the DuckDB oracle can
     restate the whole contract.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % INCR_BATCH_MOD == INCR_BATCH_MOD - 1
 
@@ -1364,7 +1334,6 @@ def connected_components_alternating_query(
     algorithm-independent definition of a component — so the row is a
     hash-checked equivalence proof for the kernel.
     """
-    apply_engine_conf(spark)
     comp = connected_components(_doc_chain_edges(spark, sf_dir))
     return comp.select(
         F.col("u").alias("doc_id"), F.col("lbl").alias("component_id")
@@ -1596,7 +1565,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(16, n/SEMANTIC_TARGET_CLUSTER_ROWS) via one count (an
     index-build statistic, same class as the fit itself).
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     # k sizing: a column-pruned count, one cheap scan-only pass
     n_vectors = emb.count()
@@ -1788,7 +1756,6 @@ def dedup_modality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify shapes; the comparison joins two candidate-sized frames —
     a broadcast join and three tiny counts folded into one row.
     """
-    apply_engine_conf(spark)
     text_pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     emb_pairs = dedup_embedding_cosine(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
@@ -1870,7 +1837,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     production swap is prefix-candidates + a count-verify kernel, at
     the cost of the kernel stage this form avoids.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
     sh = docs.select(
@@ -1941,7 +1907,6 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number window over cluster-sized groups. Nothing corpus-scale
     moves after the pair stage.
     """
-    apply_engine_conf(spark)
     comp = dedup_cluster_canonical(spark, sf_dir).select(
         "doc_id", "cluster_id"
     )
@@ -1965,44 +1930,20 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_CALIB_TOL_Q6 = 250_000  # |sig-agreement − exact J| ≤ 0.25
 
 
-def _minhash_signatures(docs: DataFrame, seed: int = 42) -> DataFrame:
+def _minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, sig array<bigint>) — the full N_HASHES minhash
-    signature per document; same shingling, base hash and affine
-    family as the banded LSH kernel (one narrow Arrow stage)."""
-    import random
-
-    rng = random.Random(seed)
-    coeffs = [
-        (rng.randrange(1, MERSENNE_PRIME), rng.randrange(0, MERSENNE_PRIME))
-        for _ in range(N_HASHES)
-    ]
-    a_vec = [c[0] for c in coeffs]
-    b_vec = [c[1] for c in coeffs]
+    signature per document; the same shingles and :func:`_minhash`
+    as the banded LSH kernel (one narrow Arrow stage)."""
 
     def _sig_batches(batches):
-        import zlib
-
-        import numpy as np
-
-        a = np.asarray(a_vec, dtype=np.int64)[:, None]
-        b = np.asarray(b_vec, dtype=np.int64)[:, None]
         for batch in batches:
             out_doc, out_sig = [], []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                words = text.split(" ")
-                if len(words) < 3:
+                shingles = _shingle_set(text)
+                if not shingles:
                     continue
-                shingles = {
-                    " ".join(words[i : i + 3]) for i in range(len(words) - 2)
-                }
-                h = np.fromiter(
-                    (zlib.crc32(s.encode()) for s in shingles),
-                    dtype=np.int64,
-                    count=len(shingles),
-                ) % MERSENNE_PRIME
-                sig = ((a * h[None, :] + b) % MERSENNE_PRIME).min(axis=1)
                 out_doc.append(doc_id)
-                out_sig.append(list(sig))
+                out_sig.append(list(_minhash(shingles)))
             yield pd.DataFrame({"doc_id": out_doc, "sig": out_sig})
 
     spark = docs.sparkSession
@@ -2041,7 +1982,6 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     over two 128-long arrays per pair. Nothing quadratic, nothing
     collected.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     pairs = _verify_pairs(
         minhash_candidate_pairs(docs), docs, JACCARD_THRESHOLD
@@ -2135,7 +2075,6 @@ def dedup_edit_distance_pairs(
     on the segment key, distinct pair set, then a verify join pulling
     the two texts by doc_id.
     """
-    apply_engine_conf(spark)
     n_seg = EDIT_K + 1
     docs = table_wide(spark, sf_dir, "documents").select(
         "doc_id", "text", F.length("text").alias("L")
@@ -2345,7 +2284,6 @@ def dedup_simhash_hamming_pairs(
     near-duplicate mass. Generalizes to radius K by flipping up to K
     bits (``ΣC(16,i)`` keys) — the standard multi-probe trade-off.
     """
-    apply_engine_conf(spark)
     sig = dedup_simhash_signature(spark, sf_dir).localCheckpoint(
         eager=True
     )  # one corpus pass feeds probe + base sides
@@ -2601,7 +2539,6 @@ def dedup_lsh_band_tuning_curve(
     band shuffles over signature rows (16 ints/doc), never a second
     pass over text.
     """
-    apply_engine_conf(spark)
     kept, sizes, inter, sig = _shingle_sig_frames(spark, sf_dir)
     sig = sig.localCheckpoint(eager=False)  # 28 band keys read it
     truth = (
@@ -2748,7 +2685,6 @@ def dedup_cluster_size_histogram(
     broadcast — strictly cheaper than dedup_exact's own output at
     every scale; no sort, no window.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     grouped = (
         docs.select(
@@ -2821,7 +2757,6 @@ def dedup_minhash_estimate_calibration(
     bound, Σ df² as everywhere in this family) and collapses to ≤ 11
     decile rows. Nothing wider than the pair frame moves.
     """
-    apply_engine_conf(spark)
     kept, sizes, inter, sig = _shingle_sig_frames(spark, sf_dir)
     sig = sig.localCheckpoint(eager=False)  # joined twice (a/b side)
     sig_a = sig.select(
@@ -2926,7 +2861,6 @@ def dedup_cross_source_matrix(
     source) projection; the matrix aggregate is ≤|sources|² groups,
     map-side combined.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     pairs = dedup_ngram_jaccard(spark, sf_dir)
     src = docs.select("doc_id", "source")
@@ -3032,7 +2966,6 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are linear in tokens/chunks with map-side combine; no
     pairwise anything.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",

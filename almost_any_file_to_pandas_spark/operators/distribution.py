@@ -30,7 +30,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 _GINI_ORACLE = """
     WITH spend AS (
@@ -93,7 +92,6 @@ def customer_spend_gini_lorenz(
     ranking; at 100 TB the sort is Spark's ordinary range-partitioned
     exchange, never one task.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey")
     orders = table(spark, sf_dir, "orders").select(
         "o_custkey",
@@ -267,7 +265,6 @@ def orders_acf_daily_counts(
     does not grow with the data; the only full-table work is the one
     map-side-combined daily groupBy.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min("o_orderdate").alias("d0"),
@@ -376,7 +373,6 @@ def events_type_entropy_census(
 
     Scale: one map-side-combined groupBy onto the bounded event-type
     domain, then a 1-row fold of that census."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("event_type").agg(F.count("*").alias("n"))
     agg = counts.agg(
@@ -450,7 +446,6 @@ def part_newsvendor_stock_level(
     qty| cells (25×50 here — quantity domains are enumerable in any
     real catalog) and every window runs partitioned by brand over
     that bounded frame."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.expr("CAST(FLOOR(l_quantity + 0.5) AS BIGINT)").alias("q"),
@@ -574,7 +569,6 @@ def orders_weekday_spectrum(
     spectrum fold joins the CALENDAR-BOUNDED series to a 104-row
     broadcast coefficient table and aggregates onto ≤13 period
     keys."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min("o_orderdate").alias("d0"),
@@ -698,7 +692,6 @@ def orders_price_index_fisher(
     two basket years (partition-prunable at a real lake), a
     co-partitioned self-join on part, and a 1-row fold. Nothing
     holds more than the part-year frame."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("y")
     )

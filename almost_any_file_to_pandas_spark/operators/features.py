@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 HASH_BUCKETS = 1024
 
@@ -59,7 +58,6 @@ def feat_brand_index_onehot(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring) and the encode is a literal CASE chain + array
     expression, keeping the corpus pass join-free and JVM-side.
     """
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     vocab = sorted(
         r[0]
@@ -109,7 +107,6 @@ def feat_price_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed for hash parity); the 1-row bounds frame broadcasts onto
     the scan, so the scaling pass is a single narrow projection.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     bounds = li.agg(
         F.min("l_extendedprice").alias("lo"),
@@ -149,7 +146,6 @@ def feat_hash_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding used when cardinality is unbounded (URLs, tokens,
     user-agents) and a collision rate ~1/buckets is acceptable.
     """
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     bucket = (
         F.conv(F.substring(F.md5(F.col("p_name")), 1, 8), 16, 10)
@@ -200,7 +196,6 @@ def feat_segment_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity), a 1-row global prior broadcast back onto the 5-row
     category aggregate. Two shuffles total, both over partial sums.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -283,7 +278,6 @@ def feat_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     randomness is md5-derived and engine-portable, so the sample is
     reproducible run-to-run and matches the oracle exactly.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     orders = table(spark, sf_dir, "orders")
@@ -370,7 +364,6 @@ def feat_segment_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sums are order-independent, and the doubles are derived from
     them with the identical expression shape as the oracle.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -481,7 +474,6 @@ def feat_price_winsorize_census(
     the clip census folds map-side. Two passes over the column, no
     corpus-wide sort — the win over naive rank-based winsorizing.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     bounds = li.agg(
         F.percentile("l_extendedprice", F.lit(WINSOR_LO)).alias("lo"),
@@ -569,7 +561,6 @@ def feat_price_drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional sums (the corpus is read once, not once per half),
     and the share/χ² arithmetic runs on the 10-row bin table.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     bounds = li.agg(
         F.min("l_extendedprice").alias("lo"),
@@ -661,7 +652,6 @@ def feat_price_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding at the boundary); the census aggregates over ≤ {QBIN_N}
     keys.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     cuts = li.agg(
         F.array(
@@ -752,7 +742,6 @@ def feat_target_encode_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the cell grid; windows touch only the grid. Same cost shape as
     the in-fold encoder — leakage-freedom is free at scale.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -914,7 +903,6 @@ def customer_rfm_kmeans_segments(
     {RFM_K}-row aggregate. q12 contract holds by construction:
     features live in [0, 1].
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
         _argmin_cid,
         deterministic_kmeans_centroids,
@@ -1057,7 +1045,6 @@ def customer_rfm_kmeans_elbow_curve(
     trainer's fixed passes; at production scale the trainer runs on
     a bounded sample exactly like the IVF quantizer.
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
         _sqdist_q12,
         deterministic_kmeans_centroids,
@@ -1194,7 +1181,6 @@ def feat_group_kfold_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself never shuffles: training readers filter
     ``fold != k`` with the same expression, predicate-pushable.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     folded = ev.select(
         "user_id",

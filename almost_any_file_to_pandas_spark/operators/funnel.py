@@ -30,7 +30,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 FUNNEL_STEPS = ("view", "click", "purchase")
 
@@ -88,7 +87,6 @@ def events_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle volume, not event count — each stage pre-aggregates
     map-side before its exchange.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
 
     s1 = ev.groupBy("user_id").agg(
@@ -157,7 +155,6 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries at most users × active-days rows. Cohort keys are
     calendar days — bounded cardinality, no skew risk at any scale.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
 
     first_day = ev.groupBy("user_id").agg(
@@ -217,7 +214,6 @@ def events_journey_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own shifted slices (single walk, no indexed-lambda
     re-evaluation), then partial-count + TakeOrderedAndProject.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.sort_array(
@@ -288,7 +284,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over that tiny matrix — partitioned by source state, so no
     single-partition exchange over data.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.sort_array(
@@ -392,7 +387,6 @@ def events_attribution_last_touch(
     row_number form is value-identical because attribution only
     compares events WITHIN a user.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     is_touch = F.col("event_type").isin("view", "click")
     # carry the latest STRICTLY-preceding touch: shift the window one
@@ -483,7 +477,6 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds (epoch-micros subtraction div 1e6) so the quantile values
     are hash-stable.
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.plans.relational import (
         exact_disc_quantiles,
     )
@@ -590,7 +583,6 @@ def events_funnel_within_window(
     key; the final per-user MAX aggregate reuses the window's
     partitioning (one Exchange total at 100 TB).
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as _W
 
     W_US = 24 * 3600 * 1_000_000  # 24h in epoch micros
@@ -724,7 +716,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF codebooks (a |types|-sized frame is orchestration state, not
     data).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.sort_array(
@@ -831,7 +822,6 @@ def events_attribution_linear(
     credited value differs from total purchase value only by the
     per-purchase truncation dust (< 2 µcents each, test-pinned).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
@@ -1097,7 +1087,6 @@ def events_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-model-state discipline. Channel count multiplies the
     tiny iteration, never the corpus pass.
     """
-    apply_engine_conf(spark)
     collected = _removal_chain_frame(spark, sf_dir).collect()
     mat = [
         (row["src"], row["dst"], int(row["c"]), int(row["r"]))
@@ -1217,7 +1206,6 @@ def events_attribution_time_decay(
     at 100 TB the join side would shuffle touches ×7 days of fanout
     while the frames reuse one exchange.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
@@ -1354,7 +1342,6 @@ def events_funnel_window_curve(
     per width independently. The curve costs one funnel pass, not
     one per point.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
@@ -1532,7 +1519,6 @@ def events_attribution_shapley(
     channel domain (~5 here, capped 8), which is what makes the exact
     computation production-feasible.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
@@ -1706,7 +1692,6 @@ def events_cep_pattern_census(
     scopes them per session (the gaps-and-islands machinery) to cap
     string length; the pattern algebra is identical.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.concat_ws(
@@ -1804,7 +1789,6 @@ def events_markov_entropy_rate(
     Scale: the same one-shuffle per-user sequence aggregate the
     transition matrix pays; the fold runs on the |types|²-bounded
     count frame."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.sort_array(

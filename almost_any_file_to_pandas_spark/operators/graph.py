@@ -45,7 +45,6 @@ from almost_any_file_to_pandas_spark.operators.dedup import (
     connected_components,
 )
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 EDGE_FACTOR = 2.0  # edge iff co-count > EDGE_FACTOR * mean co-count
 
@@ -168,7 +167,6 @@ def events_cooccurrence_triangles(
     input is the post-threshold edge table, orders of magnitude
     smaller than the event stream.
     """
-    apply_engine_conf(spark)
     cells, pair_counts, edges = _coactivity_edges(spark, sf_dir)
     edges = edges.localCheckpoint()  # reused three times in the join
     e1 = edges
@@ -278,7 +276,6 @@ def graph_pagerank_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks are additionally pinned against a numpy power iteration in
     tests/test_operators.py.
     """
-    apply_engine_conf(spark)
     _, _, edges = _coactivity_edges(spark, sf_dir)
     edges = edges.localCheckpoint(eager=True)
     ranks = pagerank(edges)
@@ -353,7 +350,6 @@ def graph_degree_assortativity(
     degree joins shuffle only edge-sized frames on the user key; the
     Pearson fold is one map-side-combined scalar aggregate.
     """
-    apply_engine_conf(spark)
     _, _, edges = _coactivity_edges(spark, sf_dir)
     edges = edges.localCheckpoint()  # feeds deg + two joins
     deg = (
@@ -470,7 +466,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     next round's join starts from materialized (node, label) pairs —
     the iterative-algorithm discipline PageRank set (graph.py).
     """
-    apply_engine_conf(spark)
     _, labels = _lpa_label_frames(spark, sf_dir)
     return labels.groupBy(F.col("lab").alias("community")).agg(
         F.count("*").alias("n_members")
@@ -572,7 +567,6 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     anything — then three scalar aggregates folded by 1-row
     crossJoins.
     """
-    apply_engine_conf(spark)
     sym, labels = _lpa_label_frames(spark, sf_dir)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     lab_u = labels.select(F.col("u"), F.col("lab").alias("lab_a"))
@@ -687,7 +681,6 @@ def graph_kcore_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative discipline. Production k-max core numbers would loop
     until fixpoint with the same round body.
     """
-    apply_engine_conf(spark)
     _, _, edges = _coactivity_edges(spark, sf_dir)
     edges = edges.localCheckpoint(eager=True)
 
@@ -860,8 +853,6 @@ def graph_jaccard_link_prediction(
     node, then the :func:`_top_links` tail. No window touches
     anything corpus-sized.
     """
-    apply_engine_conf(spark)
-
     def jaccard(wedge: DataFrame, deg: DataFrame) -> DataFrame:
         return (
             wedge.groupBy("ua", "ub")
@@ -908,8 +899,6 @@ def graph_resource_allocation_links(
     cost class is unchanged:
     Σ deg²-bounded wedge rows, anti join, TakeOrderedAndProject.
     """
-    apply_engine_conf(spark)
-
     def resource_allocation(wedge: DataFrame, deg: DataFrame) -> DataFrame:
         return (
             wedge.join(deg.select(F.col("u").alias("w"), "d"), "w")
@@ -956,7 +945,6 @@ def graph_degree_distribution(
     distinct-user frame for the zero row — all frames from ``deg``
     onward are node- or domain-sized, never event-sized.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     edges, sym = _coactivity_graph(spark, sf_dir)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
@@ -1024,7 +1012,6 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound on this exact graph) — unioned with the 1-hop list and
     collapsed by a distinct-count aggregate. Output is node-sized.
     """
-    apply_engine_conf(spark)
     _, sym = _coactivity_graph(spark, sf_dir)
     hop2 = _two_hop(sym)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
@@ -1097,7 +1084,6 @@ def graph_reach_bfs_recursive(
     the boundary between the two. The depth guard bounds recursion
     well under Spark's cteRecursionLevelLimit.
     """
-    apply_engine_conf(spark)
     _, sym = _coactivity_graph(spark, sf_dir)
     view = "sym_bfs_r7"
     sym.createOrReplaceTempView(view)
@@ -1146,7 +1132,6 @@ def graph_cc_incremental_batch(
     (c) alternating CC on the quotient frame — component-count-sized,
     orders of magnitude below the node count.
     """
-    apply_engine_conf(spark)
     chained = _doc_chain_edges(spark, sf_dir)
     is_delta = (
         F.conv(
@@ -1259,7 +1244,6 @@ def graph_hyperball_reach_floor(
     register union of fixed-size blobs — t rounds cost t·|E| regardless
     of ball sizes. The exact anchor here is the correctness harness
     only; production keeps sketches."""
-    apply_engine_conf(spark)
     _, sym = _coactivity_graph(spark, sf_dir)
     closed = sym.unionAll(
         sym.select("u").distinct().select(

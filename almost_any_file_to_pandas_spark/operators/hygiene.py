@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 
 @register(
@@ -94,7 +93,6 @@ def embedding_hygiene_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs no declared schema contract; the tiny modal row broadcasts
     back onto the aggregate.
     """
-    apply_engine_conf(spark)
     return hygiene_report(table_wide(spark, sf_dir, "embeddings"))
 
 

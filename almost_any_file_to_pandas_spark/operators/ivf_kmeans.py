@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 from almost_any_file_to_pandas_spark.operators.similarity import (
     IVF_K,
     IVF_NPROBE,
@@ -386,7 +385,6 @@ def _kmeans_ivf_index(
     one-broadcast-row centroid array. The driver-side ``count()`` sizes
     the quantizer — bounded index-build orchestration, not a data
     path. :func:`_kmeans_ivf_assigned_sql` is the DuckDB twin."""
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -732,7 +730,6 @@ def dedup_semantic_clusters_det(
         _semantic_pairs_from_centers,
     )
 
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     embd = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

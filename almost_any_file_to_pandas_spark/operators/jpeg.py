@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 # Zigzag order (T.81 Figure 5): index = zigzag position, value = raster
 ZIGZAG = [
@@ -713,7 +712,6 @@ def mm_jpeg_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     only inside Python worker batches; four integers per asset
     shuffle; the census is ≤ {JPEG_WB_MOD}·{JPEG_HB_MOD} cells.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1).select(
         "doc_id"

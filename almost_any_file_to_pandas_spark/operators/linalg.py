@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 SRC_DIMS = 64  # embeddings table dimensionality (TESTDATA.md)
 COV_DIMS = 8  # leading block emitted by emb_covariance_block
@@ -97,7 +96,6 @@ def emb_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring) keep the hash engine-portable; min/max of doubles are
     order-independent as-is.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
@@ -170,7 +168,6 @@ def emb_covariance_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov(i,j) = E[x_i·x_j] − E[x_i]·E[x_j], reconstructed from exact
     integer sums (module docstring) — bit-identical to the oracle.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
@@ -340,7 +337,6 @@ def emb_pca_power_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact loadings are additionally pinned against ``numpy.linalg``
     in tests/test_operators.py.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
@@ -432,7 +428,6 @@ def emb_anisotropy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials (the only shuffle, O(d·tasks)) → a d-row fold with the
     broadcast n scalar. Nothing driver-side, state O(d).
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
@@ -547,7 +542,6 @@ def emb_effective_rank_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: inherits gram_moments' shape — per-task O(d²) integer
     partials via the Arrow fold, one d²-cell shuffle, then arithmetic
     on the 2 080-row triangle. Nothing touches the corpus twice."""
-    apply_engine_conf(spark)
     d = SRC_DIMS
     emb = table_wide(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()

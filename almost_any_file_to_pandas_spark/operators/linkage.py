@@ -22,7 +22,6 @@ from almost_any_file_to_pandas_spark.operators.dedup import (
     connected_components,
 )
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 LINK_MAX_DIST = 6  # prefix swap costs 5 ("Customer"->"Supplier"); +1 fuzz
 
@@ -59,7 +58,6 @@ def link_customer_supplier_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: supplier (the small side) broadcasts; the blocked equi-join
     keeps levenshtein off the hot path until candidates are bounded.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
@@ -119,7 +117,6 @@ def link_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the row set is an equivalence proof, like the
     ``connected_components_alternating`` gate row.
     """
-    apply_engine_conf(spark)
     pairs = link_customer_supplier_fuzzy(spark, sf_dir)
     edges = pairs.select(
         (2 * F.col("c_custkey")).alias("u"),
@@ -176,7 +173,6 @@ def link_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    apply_engine_conf(spark)
     members = link_entity_clusters(spark, sf_dir)
     cust = table(spark, sf_dir, "customer").select(
         (2 * F.col("c_custkey")).alias("node_id"),
@@ -279,7 +275,6 @@ def link_blocking_tuning_curve(
     tuning row runs on an entity sample, and only the chosen key's
     production join runs corpus-wide.
     """
-    apply_engine_conf(spark)
     # table_wide (r10): the nation-block fan-out runs ~600 k
     # levenshtein calls in the narrow stage ABOVE this scan — on the
     # local single-row-group parquet the bare scan plans ONE split and

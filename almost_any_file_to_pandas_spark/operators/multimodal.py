@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 CHECKSUM_MOD = 997
 FRAME_STEP = 10
@@ -116,7 +115,6 @@ def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream filters (e.g. by modality or size) push down to the
     parquet scan instead of decoding anything.
     """
-    apply_engine_conf(spark)
     mm = with_binary_content(table(spark, sf_dir, "documents"))
     return mm.filter(F.col("byte_len") > 0).select(
         "doc_id",
@@ -153,7 +151,6 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Real decoding plugs in by swapping `_features_of` for a codec call
     (see :func:`decode_image`).
     """
-    apply_engine_conf(spark)
     mm = with_binary_content(table_wide(spark, sf_dir, "documents")).filter(
         F.col("byte_len") > 0
     )
@@ -202,7 +199,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver. Fake frame count = byte_len % 256 (a real pipeline reads
     it from container metadata, same column shape).
     """
-    apply_engine_conf(spark)
     mm = with_binary_content(table(spark, sf_dir, "documents"))
     videos = mm.filter(F.col("modality") == "video").select(
         "doc_id", F.pmod(F.col("byte_len"), F.lit(256)).alias("n_frames")
@@ -332,7 +328,6 @@ def mm_dedup_binary_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard two-phase distinct; at 100 TB only fingerprints
     shuffle, never content bytes.
     """
-    apply_engine_conf(spark)
     mm = with_binary_content(table(spark, sf_dir, "documents"))
     return (
         mm.select("doc_id", "modality", F.md5("content").alias("fp"))
@@ -384,7 +379,6 @@ def mm_tile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all (tile rows inherit the scan's partitioning, which
     is exactly what the downstream mapInPandas decode wants).
     """
-    apply_engine_conf(spark)
     mm = with_binary_content(table(spark, sf_dir, "documents")).filter(
         F.col("byte_len") > 0
     )
@@ -463,7 +457,6 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base. Bands are contiguous doc_id ranges, so the within-band
     order extends the global order exactly.
     """
-    apply_engine_conf(spark)
     mm = with_binary_content(table(spark, sf_dir, "documents")).select(
         "doc_id",
         "modality",
@@ -574,7 +567,6 @@ def mm_bmp_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decode is the real parser shared with the Pillow-gated
     general arm.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0).select(
         "doc_id"
@@ -770,7 +762,6 @@ def mm_bmp_rle8_decode_census(
     inside worker batches, five integers per asset shuffle, the
     census frame is ≤{BMP_W_MOD}·{BMP_H_MOD} cells.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 4).select(
         "doc_id"
@@ -998,7 +989,6 @@ def mm_bmp_rle4_decode_census(
     inside worker batches, five integers per asset shuffle, the
     census frame is ≤{BMP_W_MOD}·{BMP_H_MOD} cells.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 2).select(
         "doc_id"
@@ -1194,7 +1184,6 @@ def mm_bmp_bitfields_decode_census(
     inside worker batches, six integers per asset shuffle, the census
     frame is ≤2·{BMP_W_MOD}·{BMP_H_MOD} cells.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 3).select(
         "doc_id"
@@ -1336,7 +1325,6 @@ def mm_bmp_png_decode_census(
     frame. Remaining honest gate: BI_JPEG (method 4) requires a JPEG
     decoder.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2).select(
         "doc_id"
@@ -1726,7 +1714,6 @@ def mm_wav_adpcm_decode_census(
     census frame is ≤8 cells; the oracle's recursion is
     samples-per-block-bounded (≤33 levels), never corpus-bounded.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     assets = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 1).select(
         "doc_id"
@@ -1821,7 +1808,6 @@ def mm_wav_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Duration is exact integer microseconds — frame counts are
     multiples of 8, so nf·10⁶ divides evenly by both 8000 and 16000.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     auds = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1).select(
         "doc_id"
@@ -1933,7 +1919,6 @@ def mm_wav_float_decode_census(
     100 TB shape: identical to the PCM census — blobs stay inside
     worker batches, five integers per asset shuffle, ≤4-cell census.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     auds = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2).select(
         "doc_id"
@@ -2080,7 +2065,6 @@ def mm_wav_g711_decode_census(
     inside Python worker batches; five integers per asset shuffle;
     the census frame is ≤4 cells (2 codecs × 2 channel layouts).
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     auds = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 3).select(
         "doc_id"
@@ -2185,7 +2169,6 @@ def mm_video_shot_boundaries(
     never cross documents, no global sort); the census collapses back
     to one row per asset.
     """
-    apply_engine_conf(spark)
     mm = with_binary_content(table(spark, sf_dir, "documents"))
     v = mm.filter(
         (F.col("modality") == "video")
@@ -2842,7 +2825,6 @@ def mm_png_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries four integers per asset and the census is a
     ≤{PNG_W_MOD}·{PNG_H_MOD}-cell frame.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0).select(
         "doc_id"
@@ -2926,7 +2908,6 @@ def mm_png_rgb_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers per asset, the census is a ≤{PNG_W_MOD}·{PNG_H_MOD}-cell
     frame.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1).select(
         "doc_id"
@@ -3029,7 +3010,6 @@ def mm_png_palette_decode_census(
     only inside Python worker batches; six integers per asset
     shuffle; ≤{PNG_W_MOD}·{PNG_H_MOD}-cell census.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2).select(
         "doc_id"
@@ -3116,7 +3096,6 @@ def mm_png_gray16_decode_census(
     """
     import struct as _struct
 
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 3).select(
         "doc_id"
@@ -3196,7 +3175,6 @@ def mm_png_rgba_decode_census(
 
     100 TB shape: identical to the other codec censuses.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 2).select(
         "doc_id"
@@ -3280,7 +3258,6 @@ def mm_png_adam7_decode_census(
 
     100 TB shape: identical to the other codec censuses.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0).select(
         "doc_id"
@@ -3374,7 +3351,6 @@ def mm_png_subbyte_decode_census(
     only inside Python worker batches; five integers per asset
     shuffle; the census frame is depth×dims-bounded.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 1).select(
         "doc_id"
@@ -3460,7 +3436,6 @@ def mm_png_rgb16_decode_census(
     """
     import struct as _struct
 
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 2).select(
         "doc_id"
@@ -3568,7 +3543,6 @@ def mm_tile_patch_dedup_census(
     discipline); the class census is one fingerprint-keyed
     map-side-combined shuffle, and the histogram is class-level.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0).select(
         "doc_id"
@@ -3879,7 +3853,6 @@ def mm_wav_ms_adpcm_decode_census(
     census frame is ≤6 cells; the oracle recursion is bounded by
     samples-per-block (≤26 levels), never the corpus.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     assets = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0).select(
         "doc_id"
@@ -4189,7 +4162,6 @@ def mm_gif_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries four integers per asset; the census is a
     ≤{PNG_W_MOD}·{PNG_H_MOD}-cell frame.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 1).select(
         "doc_id"
@@ -4525,7 +4497,6 @@ def mm_tiff_decode_census(
     100 TB shape: identical to the GIF/PNG censuses — blobs only in
     worker batches, four integers + a dialect tag per asset on the
     shuffle, bounded census frame."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 2).select(
         "doc_id"
@@ -4673,7 +4644,6 @@ def mm_ico_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: identical to the other codec censuses — blobs in
     worker batches only, four integers per asset on the shuffle,
     bounded census frame."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 3).select(
         "doc_id"

@@ -38,7 +38,6 @@ from almost_any_file_to_pandas_spark.operators.textstats import (
     QF_MIN_WORDS,
 )
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 # Regexes chosen to mean the same thing in Java regex (Spark) and RE2
 # (DuckDB): character classes, bounded repeats, \b and \d only.
@@ -107,7 +106,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: a single narrow projection — whole-stage codegen, no
     exchange, no Python. Scales as a pure map at any data size.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     injected = F.concat(
         F.lit("contact user"),
@@ -178,7 +176,6 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output carries md5(chunk) instead of chunk text so downstream
     exchanges stay narrow at 100 TB.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
     n_chunks = (
@@ -241,7 +238,6 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``source``; skew bounded by shard sizing upstream (the same knob
     that sizes training shards).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
@@ -325,7 +321,6 @@ def pipeline_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shard key — no skew-prone key anywhere, no driver
     materialization, no Python stage.
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.textstats import (
         text_quality_filter,
     )
@@ -404,7 +399,6 @@ def text_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-sharded copies of a document land in the SAME split, so
     train/test leakage can't be introduced by pipeline mechanics.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     bucket = split_bucket_expr(F.col("text"))
     return docs.select(
@@ -455,7 +449,6 @@ def split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-sized (tiny vs corpus), so both split joins broadcast
     the pairs.
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.dedup import (
         dedup_minhash_lsh,
     )
@@ -524,7 +517,6 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest is its audit record, and the same hash expression is the
     partition key, so manifest and files agree by construction.
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.dedup import (
         _portable_token_hash,
     )
@@ -647,7 +639,6 @@ def pipeline_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable hash aggregate on (layout, shard), then a
     layout-keyed fold over shard-count-sized frames.
     """
-    apply_engine_conf(spark)
     keyed = table(spark, sf_dir, "orders").select(
         F.expr("o_custkey & 65535").alias("k_x"),
         F.expr(
@@ -745,7 +736,6 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     would Expand the 100 TB scan ×3 (the lineitem_profile lesson);
     separate pruned passes each read one column.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     stats = docs.agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -866,7 +856,6 @@ def text_padding_waste_audit(
     into 3 groups — one scan for the whole audit. Integer ceiling
     division throughout ((n + L − 1) div L — exact on both engines).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     t = docs.select(
         F.size(F.split(F.col("text"), " ", -1)).cast("long").alias(
@@ -947,7 +936,6 @@ def pipeline_stratified_quota_sample(
     (WindowGroupLimit) below the exchange, so each task ships at most
     {QUOTA_PER_SOURCE} rows per (partition, source).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     w = W.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -1011,7 +999,6 @@ def pipeline_global_shuffle_shards(
     100 TB the only full-data movement is that single shuffle, and
     the census is how you check it before paying for it.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     assigned = docs.select(
         "source",
@@ -1131,7 +1118,6 @@ def lineitem_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape, but exact NDV is what the DuckDB oracle can restate.
     The per-column unpivot runs on a 1-row frame.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as _W
 
     li = table(spark, sf_dir, "lineitem")
@@ -1264,7 +1250,6 @@ def lineitem_encoding_advisor_approx(
     Expand pass, verification harness only — the floor-row
     discipline; a production run at 100 TB skips it).
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.plans.relational import (
         APPROX_REL_TOL,
     )
@@ -1410,7 +1395,6 @@ def pipeline_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps, never a global sort).
     The rank window runs over the ≤{DSIR_K}-row LIMIT result.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as _W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -1563,7 +1547,6 @@ def lineitem_zonemap_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate rows are a UNION of 1-row projections over that scalar
     frame. Empty-safe by construction (global aggregate + NULLIF).
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     lo_ts = f"TIMESTAMP '{ZM_SHIP_LO}'"
     hi_ts = f"TIMESTAMP '{ZM_SHIP_HI}'"
@@ -1690,7 +1673,6 @@ def pipeline_unimax_waterfill_mix(
     the |sources|-row frame — broadcast-scale windows, no second
     corpus pass, no driver collect.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as _W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -1807,7 +1789,6 @@ def pipeline_snapshot_diff_census(
     co-partition into ONE shuffle each; the census is
     |sources|×4 rows. No text ever shuffles — fingerprints only.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     a = docs.select(
         "doc_id",
@@ -1926,7 +1907,6 @@ def pipeline_file_compaction_plan(
     source's manifest is file-count-sized, orders of magnitude
     smaller than the corpus. The final regroup is bin-count-sized.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     files = docs.groupBy(
         "source",
@@ -2043,7 +2023,6 @@ def events_props_schema_census(
     key-domain-bounded after combine — and the census frame is
     key-count-sized. No Python touches the hot path.
     """
-    apply_engine_conf(spark)
     ev = table_wide(spark, sf_dir, "events")
     # F.lit keeps the pattern out of SQL string-literal escaping
     # (an F.expr literal would eat the \s)
@@ -2152,7 +2131,6 @@ def pipeline_repeat_epochs_advisor(
     source-count frame with the 1-row total broadcast. Exact integer
     ceil-division throughout.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     src = docs.groupBy("source").agg(
         F.coalesce(

@@ -45,7 +45,6 @@ from almost_any_file_to_pandas_spark.operators.similarity import (
     N_QUERIES,
 )
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 PQ_M = 8  # subspaces
 PQ_K = 256  # codes per subspace (8 bits, the standard PQ setting)
@@ -173,7 +172,6 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_m ‖c_{m,code_m}‖²) — the full ADC formulation, no raw candidate
     vector read after encoding.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     sample = _train_sample(emb)  # one job serves codebooks AND queries
     if len(sample) == 0:  # empty corpus: nothing to index or query
@@ -245,7 +243,6 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of PQ/ADC search against the exact kNN baseline, per
     query — the acceptance metric for any quantized index rollout."""
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.similarity import (
         sim_knn_batch,
     )
@@ -286,7 +283,6 @@ def sim_pq_reconstruction(spark: SparkSession, sf_dir: str) -> DataFrame:
     error and the compression ratio — one row. The tuning signal for
     (M, K): error falls as either grows, storage grows as M·log2(K).
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     books = _train_codebooks(emb)
     if books is None:  # empty corpus: no vectors, no error summary
@@ -383,7 +379,6 @@ def sim_pq_reconstruction_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked acceptance gate over :func:`sim_pq_reconstruction`:
     corpus size and compression ratio anchor the row; the boolean
     claims mean squared reconstruction error ≤ PQ_MSE_CEIL."""
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     stats = sim_pq_reconstruction(spark, sf_dir)
     n = emb.agg(F.count("*").alias("n_vectors"))
@@ -438,7 +433,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are read a second time only for shortlist members — the IVFPQ
     memory contract (full vectors never co-resident with the index).
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.similarity import (
         IVF_BITS,
         cosine_expr,
@@ -594,7 +588,6 @@ def sim_ivfpq_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplane splits), anchored to the query count the oracle derives
     independently — the same contract as the IVF and PQ floors it
     composes."""
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.similarity import (
         sim_knn_batch,
     )

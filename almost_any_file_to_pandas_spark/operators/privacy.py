@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 K_ANONYMITY_LEVELS = (2, 5, 10, 25)
 ACCTBAL_BUCKET = 1000  # quasi-identifier coarsening for the balance
@@ -71,7 +70,6 @@ def privacy_k_anonymity_census(
     no second corpus pass. The suppression share is integer
     arithmetic end to end (no float division to drift cross-engine).
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     sizes = cust.groupBy(
         "c_nationkey",
@@ -154,7 +152,6 @@ def privacy_l_diversity_census(
     l-sweep is conditional sums over the broadcast-scale level frame
     crossed with the {len(L_DIVERSITY_LEVELS)}-row l list.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     g = cust.groupBy(
         "c_nationkey",
@@ -249,7 +246,6 @@ def privacy_subject_access_manifest(
     subject contribute no manifest row on either engine (absence is
     part of the receipt).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
@@ -354,7 +350,6 @@ def privacy_t_closeness_census(
     a conditional sum over that frame crossed with the
     {len(T_CLOSENESS_LEVELS_Q6)}-row threshold list.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     cell = cust.groupBy(
         "c_nationkey",
@@ -494,7 +489,6 @@ def privacy_qi_generalization_ladder(
     both engines. At 100 TB: one corpus shuffle, 4× expanded — the
     ladder never rescans.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_nationkey",
         "c_mktsegment",
@@ -609,7 +603,6 @@ def privacy_dp_noisy_histogram(
     Scale: one map-side-combined groupBy onto the bounded segment
     domain; the noise projection is per-cell arithmetic on that
     census frame."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     counts = cust.groupBy("c_mktsegment").agg(
         F.count("*").cast("long").alias("true_n")
@@ -712,7 +705,6 @@ def privacy_dp_clipped_mean(
 
     Scale: one user-keyed aggregate (the shuffle any per-user rollup
     pays) then a 1-row fold; noise is constant-time arithmetic."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.expr("CAST(FLOOR(SUM(value) * 100 + 0.5) AS BIGINT)").alias(

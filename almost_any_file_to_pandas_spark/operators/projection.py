@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.operators.similarity import cosine_expr
 from almost_any_file_to_pandas_spark.plans import register, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 PROJ_DIMS = 16
 SRC_DIMS = 64  # embeddings table dimensionality (TESTDATA.md)
@@ -155,7 +154,6 @@ def sim_jl_projection_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one narrow projection map over the scan, broadcast of the
     single projected query row, TakeOrderedAndProject for the top-k.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     proj = emb.select(
         "vec_id", "label", project_expr(F.col("embedding")).alias("pv")
@@ -228,7 +226,6 @@ def sim_jl_distortion_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     {JL_SAMPLE}`` is a parquet min/max prune at scale); the pair join
     is over a broadcast-sized sample; one row out.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     sample = emb.filter(F.col("vec_id") < JL_SAMPLE).select(
         "vec_id",

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 # Gopher-flavored bounds, tuned so the synthetic corpus genuinely
 # splits (the word-count floor is the binding rule on testdata's
@@ -100,7 +99,6 @@ def text_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Python anywhere), so the filter fuses into the parquet scan:
     zero shuffles, zero exchanges, one codegen stage.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
 
     words = F.split(F.col("text"), " ", -1)
@@ -194,7 +192,6 @@ def corpus_data_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-join-null so the oracle matches row-for-row); Spark runs
     them as separate tiny jobs crossJoined into the single row.
     """
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings")
     li = table(spark, sf_dir, "lineitem")
@@ -306,7 +303,6 @@ def text_quality_threshold_curve(
     aggregation into 5 groups. The curve costs one scan regardless of
     how many thresholds are swept. Integer q6 arithmetic end-to-end.
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.plans import table_wide
     from almost_any_file_to_pandas_spark.operators.textstats import (
         dup_ratio_metrics,

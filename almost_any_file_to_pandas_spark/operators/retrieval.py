@@ -34,7 +34,6 @@ from almost_any_file_to_pandas_spark.operators.similarity import (
     cosine_expr,
 )
 from almost_any_file_to_pandas_spark.plans import register, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 MMR_QUERY_VEC_ID = 0
 MMR_CANDIDATES = 50
@@ -142,7 +141,6 @@ def sim_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR-diverse top-``MMR_K`` for one query vector (module
     docstring): distributed candidate generation, bounded greedy
     re-rank, oracle restated as K chained greedy CTEs."""
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == MMR_QUERY_VEC_ID).select(
         F.col("embedding").cast("array<double>").alias("qvec")
@@ -253,7 +251,6 @@ def retrieval_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query_id — at 100 TB each arm is the already-audited shape of its
     family and the fusion moves only rank rows.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -471,7 +468,6 @@ def retrieval_bm25_rational_topk(
     projection. Final top-k is TakeOrderedAndProject (per-partition
     heaps), never a global sort; the rank window sees ≤ k rows.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -545,7 +541,6 @@ def retrieval_phrase_match_topk(
     INDEX (positional postings) is the next step only when the same
     corpus serves many phrase queries.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
@@ -613,7 +608,6 @@ def retrieval_phrase_index_topk(
     the phrase join co-partitioned and shuffle-free per query; the
     in-query build here prices exactly that reuse decision.
     """
-    apply_engine_conf(spark)
     terms = PHRASE_QUERY.split()
     docs = table_wide(spark, sf_dir, "documents")
     postings = docs.select(
@@ -756,7 +750,6 @@ def retrieval_prf_expansion_topk(
     (``retrieval_phrase_index_topk``); the {PRF_EXPAND} chosen terms
     are a bounded driver collect (the train-sample exemption class).
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -872,7 +865,6 @@ def retrieval_postings_gap_census(
     stop-terms are the known hot keys and exactly the ones the df
     buckets isolate), then a ≤64-row bucket aggregate.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -988,7 +980,6 @@ def retrieval_query_likelihood_topk(
     frame with a full tie-break."""
     from pyspark.sql import Window as W
 
-    apply_engine_conf(spark)
     docs_t = table_wide(spark, sf_dir, "documents")
     docs = docs_t.select(
         "doc_id", F.size(F.split("text", " ", -1)).alias("dl")

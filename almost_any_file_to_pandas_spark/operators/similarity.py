@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 TOP_K = 20
 QUERY_VEC_ID = 0
@@ -101,7 +100,6 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only all-to-one step is k rows). At 100 TB this is the exact-
     search baseline the ANN path is measured against.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec")
@@ -201,7 +199,6 @@ def sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     only k rows per query survive the rank filter. Ranking happens on
     the rounded cosine so ordering is identical across engines.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -376,7 +373,6 @@ def sim_ivf_topk(
     oracle-checkable — the probabilistic variant (random hyperplanes)
     is :func:`sim_lsh_candidate_pairs`.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     b = emb.select(
         "vec_id",
@@ -434,7 +430,6 @@ def sim_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check; :func:`sim_lsh_verified_pairs` states the
     hash-checkable recall contract.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     cand = lsh_candidate_pairs(emb)
     vecs = emb.select("vec_id", "embedding")
@@ -487,7 +482,6 @@ def sim_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pairs_within_buckets,
     )
 
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     buckets = hyperplane_band_keys(
         emb, bands=VERIFY_LSH_BANDS, bits=VERIFY_LSH_BITS
@@ -550,7 +544,6 @@ def sim_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an integer ``div`` by the count (both engines truncate toward
     zero). Emitting ``n_vectors`` alongside keeps the exact sum
     recoverable (``sum_q12 = centroid_q12·n + remainder``)."""
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     exploded = emb.select(
         "label",
@@ -607,7 +600,6 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     production keeps the array column; the string form is the
     gate-facing contract.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     vd = F.col("embedding").cast("array<double>")
     amax = F.array_max(F.transform(vd, lambda x: F.abs(x)))
@@ -650,7 +642,6 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim_ivf_kmeans_topk,
     )
 
-    apply_engine_conf(spark)
     exact = sim_knn_batch(spark, sf_dir).select(
         "query_id", F.col("vec_id").alias("exact_id")
     )
@@ -749,7 +740,6 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens on the ROUNDED cosine so both engines keep the identical
     boundary rows (the zscore-pattern rounding contract).
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -811,7 +801,6 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window — plus the label-mismatch predicate applied BEFORE
     ranking, so the window ranks only eligible negatives.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("anchor_id"),
@@ -888,7 +877,6 @@ def sim_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-anchor one-pass scoring shape as the k-NN batch; one
     row out.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < KNN_EVAL_N).select(
         F.col("vec_id").alias("anchor_id"),
@@ -1007,7 +995,6 @@ def sim_matryoshka_prefix_floor(
     partitioning (Catalyst exchanges once, sorts per window), then a
     one-row fold.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -1089,7 +1076,6 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the selected slice. Scoring/tie-break/quantization are the
     `sim_bruteforce_topk` contract unchanged.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec")
@@ -1157,7 +1143,6 @@ def sim_ivf_incremental_assign(
     cached from the prior build — the full-scan form here is the
     cold-start statement of the same plan.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     bucket = _ivf_bucket_expr(F.col("embedding"))
     base = (
@@ -1238,7 +1223,6 @@ def sim_label_affinity_matrix(
     a broadcast self-join on dim and two tiny norm joins.  At 100 TB
     the |labels|² work is independent of corpus size.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     cent = (
         emb.select(
@@ -1414,7 +1398,6 @@ def sim_binary_sign_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor — complements the IVF/PQ/JL members whose compression is
     lossy-scored.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     packed = emb.select(
         "vec_id",
@@ -1536,7 +1519,6 @@ def sim_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     restatement the oracle mirrors — the tiled numpy kernel
     (:func:`ivf_score_bucket`) is the drop-in production scorer.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     b = emb.select(
         "vec_id",
@@ -1679,7 +1661,6 @@ def sim_ivf_nprobe_recall_curve(
     audited broadcast-scoring pass; the final fixed 4-row frame
     assembles driver-side-free via broadcast joins.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     b = emb.select(
         "vec_id",
@@ -1789,7 +1770,6 @@ def sim_ivf_bucket_balance(
     the scan; it exists so the quantizer's balance is measured, not
     assumed, before committing a 100 TB corpus to those lists.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     sz = (
         emb.select(_ivf_bucket_expr(F.col("embedding")).alias("bucket"))
@@ -1881,7 +1861,6 @@ def emb_label_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds own/other in the same aggregate); output is |labels| rows.
     At 100 TB: one shuffle (the centroid agg), one broadcast scan.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id",
@@ -1996,7 +1975,6 @@ def sim_ivf_delete_compact(
     same single-aggregate shape with a broadcast of the log's
     bucket-level counts.
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings")
     bucket = _ivf_bucket_expr(F.col("embedding"))
     tomb = F.when(
@@ -2083,7 +2061,6 @@ def sim_kcenter_greedy_coreset(
     trainer discipline); the oracle restates the traversal as
     {KCENTER_K - 1} chained CTEs (the MMR pattern).
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
         KMEANS_DRIVER_ROW_CAP,
         _sqdist_q12,
@@ -2235,7 +2212,6 @@ def sim_knn_loo_label_accuracy(
     scale the shortlist would come from the IVF path instead, same
     contract as sim_ivf_recall_floor).
     """
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 CMS_EPS = 0.0001  # relative overestimate bound: est ≤ exact + eps·N
 CMS_CONFIDENCE = 0.99
@@ -64,7 +63,6 @@ def events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch bytes + K candidate keys — both bounded, an index-probe
     pattern, not a data-path collect.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     agg = ev.agg(
         F.count_min_sketch(
@@ -139,7 +137,6 @@ def events_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (over the per-key count column, which is |keys|-sized, never the
     stream), and the hot-key census above ``SKEW_HOT_RATIO×mean``.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     avg_n = counts.agg(F.avg("n")).head()[0]
@@ -206,7 +203,6 @@ def events_hll_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     associatively), then a |days|-row union-aggregate per week; the
     exact anchor is the standard two-phase distinct per week.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("day"),
@@ -293,7 +289,6 @@ def events_hll_audience_overlap(
     exact intersection anchor is one (user_id-keyed) distinct pass
     self-joined per user (bounded by |types|² per user).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     per_type = ev.groupBy("event_type").agg(
         F.expr("hll_sketch_agg(user_id, 14)").alias("sk"),
@@ -393,7 +388,6 @@ def events_sliding_dau_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-joined to the broadcast day spine, then a two-phase
     count-distinct per day.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.expr("hll_sketch_agg(user_id, 14)").alias("sk")
@@ -504,7 +498,6 @@ def events_histogram_quantile_rollup(
     no two-value averaging, so the quantile is a DATA value and the
     bin equality is exact.
     """
-    apply_engine_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -621,7 +614,6 @@ def events_bitmap_distinct_rollup(
     bit on both engines (DuckDB RAISES on 1<<63 where Spark wraps —
     the cross-engine portability trap this constant dodges).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.date_trunc("week", F.col("ts")).cast("date").alias("week_start"),
@@ -697,7 +689,6 @@ def events_salt_factor_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceiling division and DECIMAL-widened ratio products (the house
     skew-profile recipe).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     tot = counts.agg(
@@ -821,7 +812,6 @@ def events_heavy_hitters_countsketch(
     differ across engines. Folds are HUGEINT/DECIMAL(38,0); the only
     double is the final sqrt bound (correctly-rounded IEEE op on an
     exact integer input — bit-stable on both)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(
         F.count("*").cast("long").alias("f")

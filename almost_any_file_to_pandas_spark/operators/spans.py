@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 SPAN_K = 20  # character k-gram width
 SPAN_TOP = 20  # census rows reported
@@ -117,7 +116,6 @@ def text_duplicate_span_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate → TakeOrderedAndProject. Deterministic total order
     (spread, multiplicity, gram) makes the LIMIT reproducible.
     """
-    apply_engine_conf(spark)
     census = (
         _sampled_grams(table_wide(spark, sf_dir, "documents"))
         .groupBy("gram")
@@ -171,7 +169,6 @@ def text_doc_duplication_profile(
     repeated within one doc AND shared across docs is weighted by its
     local multiplicity, matching the oracle's LEFT JOIN count.
     """
-    apply_engine_conf(spark)
     sampled = _sampled_grams(table_wide(spark, sf_dir, "documents"))
     dup = (
         sampled.groupBy("gram")
@@ -256,7 +253,6 @@ def text_boundary_continuation_pairs(
     both cap filters applied BEFORE the join, and everything after
     the first aggregate is boundary-gram-sized, not corpus-sized.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     w = F.split(F.col("text"), " ", -1)
     n = F.size(w)

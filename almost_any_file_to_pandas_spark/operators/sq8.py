@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 from almost_any_file_to_pandas_spark.operators.similarity import (
     IVF_NPROBE,
     KNN_K,
@@ -129,7 +128,6 @@ def _sq8_corpus_and_ranges(spark: SparkSession, sf_dir: str):
     quantizer-build spine shared by every SQ8 operator, factored so
     a future range change (e.g. percentile clipping) cannot fork the
     exactly-oracle-paired family."""
-    apply_engine_conf(spark)
     emb = table_wide(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )

@@ -30,7 +30,6 @@ from almost_any_file_to_pandas_spark.plans import (
     table,
     table_wide,
 )
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 ASOF_TOLERANCE_MINUTES = 30
 
@@ -119,7 +118,6 @@ def events_asof_view_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     view within the tolerance — the canonical as-of join, in the
     window-function formulation (one shuffle on user_id, no join
     node, no non-equi explosion)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return asof_join_last_before(
         ev, "click", "view", ASOF_TOLERANCE_MINUTES * 60 * 1_000_000
@@ -174,7 +172,6 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed from those same integers, so both engines compare
     against the bit-identical boundary.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     v6 = F.col("value").cast("decimal(18,6)")
     stats = ev.groupBy("event_type").agg(
@@ -297,7 +294,6 @@ def events_range_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its IEJoin handles it at oracle scale); Spark runs the
     bin + neighbor-replicate + equi-join plan that survives 100 TB.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return binned_range_join_count(
         ev, "purchase", "view", RANGE_JOIN_TOLERANCE_MINUTES * 60 * 1_000_000
@@ -341,7 +337,6 @@ def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dayofweek`` is 1=Sunday, so the Spark side subtracts 1 to align
     the encoding.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     cells = ev.groupBy(
         (F.dayofweek("ts") - 1).cast("int").alias("day_of_week"),
@@ -414,7 +409,6 @@ def events_late_arrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     math runs on integer microseconds (``unix_micros`` ↔ DuckDB
     ``epoch_us``) so both engines compare exact integers.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
@@ -497,7 +491,6 @@ def events_ab_cohort_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the tiny per-type table. No window, no second pass over data —
     the whole experiment readout costs one shuffle of partial sums.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     v = F.col("value").cast("decimal(25,6)")
     v6 = F.col("value").cast("decimal(18,6)")
@@ -572,7 +565,6 @@ def events_pivot_type_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conditional-sum semantics; revenue stays NULL-when-absent.
     Value sums fold in DECIMAL for order-independent hashes.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     wide = (
         ev.groupBy(F.to_date("ts").alias("day"))
@@ -621,7 +613,6 @@ def events_user_day_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by a user's events in one day — the same per-key
     boundedness argument as the sessionizer.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     packed = F.sort_array(
         F.collect_list(
@@ -674,7 +665,6 @@ def events_user_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon broadcast; day arithmetic on timestamps matches DuckDB's
     date_diff('day') via integer epoch-day subtraction.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     horizon = ev.agg(F.max("ts").alias("max_ts"))
     per_user = ev.groupBy("user_id").agg(
@@ -731,7 +721,6 @@ def orders_monthly_dense_spine(
     the rollup aggregates once; spine ⟕ rollup is a broadcast join of
     two month-sized frames. The fact table is read exactly once.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.date_trunc("month", F.min("o_orderdate"))
@@ -804,7 +793,6 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange. Gap seconds are exact integers (epoch-second
     subtraction); the mean is the all-integer _q6 recipe.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (
@@ -859,7 +847,6 @@ def events_dau_wau_stickiness(
     ``date_trunc('week', …)``, which is ISO-Monday in BOTH engines,
     so the join keys and ratios hash-match.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.countDistinct("user_id").alias("dau")
@@ -924,7 +911,6 @@ def events_user_type_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user rollup — both shuffles on the same user_id-prefixed key,
     the second over ≤ |types| rows per user.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     per = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
     agg = per.groupBy("user_id").agg(
@@ -978,7 +964,6 @@ def events_hourly_quantiles_by_type(
     integer metrics this form is one shuffle cheaper and fully
     declarative. All outputs integer — hash-stable by construction.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     hours = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
@@ -1059,7 +1044,6 @@ def events_bot_user_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     computing all three shares the exchange), folded to a per-user
     row then a one-row census.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_micros(F.col("ts")) - F.lag(
@@ -1126,7 +1110,6 @@ def events_new_vs_returning_daily(
     VARCHAR day rendering is a DATE cast (not a timestamp), identical
     across engines.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min("ts").cast("date").alias("first_day")
@@ -1197,7 +1180,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the initial (type, hour) aggregate. No driver loop, no
     per-group sort of observations.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     hours = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
@@ -1329,7 +1311,6 @@ def events_value_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-span scalar and per-type bounds broadcast back (dimension-
     sized). No window over raw rows anywhere.
     """
-    apply_engine_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -1515,7 +1496,6 @@ def events_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     by changing one constant). The daily rollup is a plain keyed
     aggregate.
     """
-    apply_engine_conf(spark)
     gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
     ev = table(spark, sf_dir, "events")
     order = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1704,7 +1684,6 @@ def orders_theilsen_trend_by_segment(
     |months|²/2 pairs per segment (thousands of rows at ANY corpus
     scale), the same boundedness argument as the CUSUM walk.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
     monthly = (
@@ -1808,7 +1787,6 @@ def events_time_weighted_value(
     undefined anyway. Note ``span_us = Σ dur_us`` telescopes to
     last−first exactly.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     stepped = ev.select(
         "user_id",
@@ -1903,7 +1881,6 @@ def events_user_balance_reflect(
     shares; events outside the two move types are filtered at the
     scan (predicate pushdown).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     moves = ev.filter(
         F.col("event_type").isin("purchase", "error")
@@ -2008,7 +1985,6 @@ def events_sliding_distinct_exact(
     deltas. Window width is a compile-time constant shared with the
     HLL twin, so the two stay comparable per round.
     """
-    apply_engine_conf(spark)
     k = SLIDING_DISTINCT_DAYS
     ev = table(spark, sf_dir, "events")
     member = ev.select(
@@ -2109,7 +2085,6 @@ def events_user_rolling_median7(
     dependent frame width would make state unbounded — that variant
     belongs to the sketch family, not here.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     cents = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
@@ -2198,7 +2173,6 @@ def orders_seasonal_naive_mase(
     rows at ANY corpus size); the unpartitioned lag window runs over
     that frame only — the module's bounded-model-state discipline.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias(
@@ -2336,7 +2310,6 @@ def events_bot_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses a second exchange. Deterministic lag order (us, event_id)
     pins equal-timestamp gaps on both engines.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -2444,7 +2417,6 @@ def events_dau_mau_stickiness(
     exchange exactly once. Calendar-bounded output (≤ months rows);
     no windows.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     du = ev.select(
         F.date_trunc("month", F.col("ts")).alias("mon"),
@@ -2544,7 +2516,6 @@ def events_watermark_tradeoff_curve(
     lands as integer micros; the 5-delay sweep is a broadcast join +
     one 5-group aggregate, one scan total.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -2646,7 +2617,6 @@ def events_hll_rsd_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact count is the correctness harness, production keeps the
     sketch); the 3-point frame assembles by broadcast join.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     agg = ev.agg(
         F.count_distinct("user_id").alias("exact_users"),
@@ -2739,7 +2709,6 @@ def events_session_gap_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-row assembly. Integer micros throughout — the identical
     gap arithmetic the frozen ``events_sessionization`` row uses.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros(F.col("ts")).alias("ts_us")
     )
@@ -2852,7 +2821,6 @@ def orders_holt_linear_smoothing(
     an inherently sequential scalar recursion does not distribute).
     Forecast/level/trend emit as FLOOR(x·100+0.5) cents.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     monthly = (
         orders.groupBy(
@@ -2971,7 +2939,6 @@ def orders_capacity_backlog_replay(
     the identical recursion as a recursive CTE over the
     generate_series spine.
     """
-    apply_engine_conf(spark)
     import datetime as _dt
 
     orders = table(spark, sf_dir, "orders")
@@ -3082,7 +3049,6 @@ def events_anomaly_threshold_curve(
     the |types|-row stats and {len(ANOMALY_CURVE_DECI)}-row threshold
     list broadcast — no per-threshold rescan.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     v6 = F.col("value").cast("decimal(18,6)")
     stats = ev.groupBy("event_type").agg(
@@ -3181,7 +3147,6 @@ def events_watermark_state_advisor(
     (horizon, band)-totals window — never a global single-partition
     ordered walk over the boundary stream.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as _W
 
     ev = table(spark, sf_dir, "events")
@@ -3282,7 +3247,6 @@ def events_ab_sample_size_chebyshev(
     ε-sweep is a |types|×{len(AB_EPS_DECI)} projection over the
     broadcast-scale stats frame — no second corpus pass.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     v6 = F.col("value").cast("decimal(18,6)")
     stats = ev.groupBy("event_type").agg(
@@ -3385,7 +3349,6 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     No window, no per-user state; the estimator costs two scans (the
     range fold + the cell aggregate) of pushdown-pruned columns.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("cohort"),
         F.unix_micros(F.col("ts")).alias("ts_us"),
@@ -3510,7 +3473,6 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the aggregate — the estimator's cost is the same shuffle
     the per-user metric already pays.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
@@ -3638,7 +3600,6 @@ def orders_jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     jackknife is resampling-free: the G leave-one-out estimates are
     closed-form from (Σ, n, Σ_g, n_g), never G re-scans.
     """
-    apply_engine_conf(spark)
     o = table(spark, sf_dir, "orders").select(
         F.date_trunc("month", F.col("o_orderdate").cast("date")).alias("g"),
         F.col("o_totalprice").cast("decimal(25,6)").alias("v"),
@@ -3763,7 +3724,6 @@ def orders_conformal_naive_interval(
     window and both folds run on that bounded frame (the module's
     bounded-model-state discipline).
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.datediff(
@@ -3915,7 +3875,6 @@ def events_uplift_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤{UPLIFT_BAND_CAP + 1}-row cell aggregate — the same
     single-shuffle cost as the per-user metric itself.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
@@ -4052,7 +4011,6 @@ def events_cuped_adjusted_lift(
     adjustment row — the per-cohort sums fold in a second tiny
     aggregate over the per-user frame; no extra corpus pass.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         (F.col("user_id") % 2).alias("cohort"),
@@ -4218,7 +4176,6 @@ def orders_tscv_fold_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly census; the fold×month cross product is
     {TSCV_N_FOLDS}×|months| ≤ a few hundred broadcast-scale rows.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias(
@@ -4343,7 +4300,6 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold. At 100 TB the fan-out cost is B× the user table, tunable by
     B, never B× the corpus.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     micros = (
         F.col("value").cast("decimal(18,6)") * 1_000_000
@@ -4498,7 +4454,6 @@ def orders_seasonal_decompose_additive(
     bounded-model-state pattern). The month windows run on the
     bounded frame with the non-foldable constant partition key.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
@@ -4655,7 +4610,6 @@ def part_demand_intermittency_census(
     part-keyed moment fold → a ≤5-row census. Two shuffles, both
     key-bounded; nothing driver-side.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
@@ -4752,7 +4706,6 @@ def events_ab_quantile_effects(
     cumulative count reaches ``ceil(n·q/100)`` — integer rank
     arithmetic, no interpolation, engine-identical. The 3-row
     quantile spine cross-joins the census walk; output is 3 rows."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     cells = (
         ev.select(
@@ -4859,7 +4812,6 @@ def events_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     hygiene-report precedent), and one FLOOR(·+0.5) quantization.
     Plan: one user-keyed aggregate (the only corpus shuffle) → a
     2-cell moment frame → a 1-row fold."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     micros = (
         F.col("value").cast("decimal(18,6)") * 1_000_000
@@ -4941,7 +4893,6 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one distinct-user aggregate (the only corpus shuffle) → a
     2-cell frame → a 1-row fold."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     sides = ev.select(
         (F.col("user_id") % 2).alias("side"), "user_id"
@@ -5063,7 +5014,6 @@ def orders_holt_winters_seasonal(
     list."""
     import math
 
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     monthly = (
         orders.groupBy(
@@ -5197,7 +5147,6 @@ def part_croston_forecast(
     ≤{CROSTON_MAX_EVENTS} calendar-bounded rows each, and a per-part
     fold. State per part is O(1); nothing sequential leaves the
     window frame."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_partkey",
@@ -5343,7 +5292,6 @@ def events_bot_regularity_census(
     pays) producing O(1) moments per user, then a users-sized
     aggregate to a 1-row census. Nothing is quadratic; nothing
     collects."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     gaps = ev.select(
         "user_id",
@@ -5452,7 +5400,6 @@ def events_sprt_click_rate_walk(
     runs over the CALENDAR-BOUNDED day series (the Holt/spine
     discipline — a cumulative hypothesis test is inherently
     sequential, and its sequence is dates, not data)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count("*").alias("n_t"),

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 # Tiny embedded stopword sets per language — enough for a determinstic
 # heuristic; production would swap in full lists (they stay a literal
@@ -65,7 +64,6 @@ def _occurrences_sql(expr: str, token: str) -> str:
 )
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count + measured char length per document."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -86,7 +84,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact-dedup key; also the grouping key for shard-local dedup
     at scale (hash-partition by fingerprint → all copies co-located).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", F.md5(F.lower(F.trim(F.col("text")))).alias("fingerprint")
@@ -140,7 +137,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio, stopword density. All replace/length arithmetic — portable
     and codegen-friendly; the standard pre-training quality filter
     shape (filter thresholds applied downstream)."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     return _quality_cols(docs)
 
@@ -182,7 +178,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-marker language ID — deterministic heuristic with a
     fixed precedence tie-break (en > de > fr > es). Returns prediction
     beside the label so accuracy is one aggregation away."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     lowered = F.lower(F.col("text"))
     scores = {}
@@ -226,7 +221,6 @@ def text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus statistics rollup — the monitoring aggregate a pipeline
     runs per ingest batch. Partial aggregation map-side; one shuffle
     on (lang, source)."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     return docs.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
@@ -258,7 +252,6 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-tokenization (letter runs / digit runs / punctuation). The
     ratio between the two is a standard tokenizer-cost estimator for
     training-data budgeting; everything stays a narrow projection."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -297,7 +290,6 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     results because f(0, x₀) = x₀ under this fold. acc·131 + x < 2³⁹
     never overflows the BIGINT lane, so ANSI mode stays happy.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
     codes = F.transform(
@@ -344,7 +336,6 @@ def text_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     length are all-integer (the house _q6 recipe, DECIMAL(38,0)/
     HUGEINT-widened products) — no float division in the output.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -434,7 +425,6 @@ def text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup is a small CASE expression (broadcast-map territory if the
     rate table were data-driven).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     unif = _doc_uniform(F.col("doc_id"))
     rate = F.lit(SAMPLE_RATE_DEFAULT)
@@ -494,7 +484,6 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, and word-level skew is irrelevant because the first
     grouping key includes doc_id.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     counts = (
         docs.select(
@@ -585,7 +574,6 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id-to-doc_id; at scale both sides are co-partitioned by the
     same key so AQE plans a local join after one shuffle.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     base = dup_ratio_metrics(docs)
     topw = (
@@ -663,7 +651,6 @@ def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from almost_any_file_to_pandas_spark.operators.dedup import _word_ngrams
 
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
     sh = docs.select(
@@ -700,7 +687,6 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning input for sequence packing and truncation budgets. One
     partial→final agg shuffle over ``n_buckets`` rows; the scan reads
     only ``n_chars`` (column pruning)."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     bucket = (
         F.floor(F.col("n_chars") / HIST_BUCKET).cast("bigint") * HIST_BUCKET
@@ -754,7 +740,6 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     unavoidable without dropping log-idf semantics; sqrt-based scores
     elsewhere carry no such risk (IEEE-exact).
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("term")
@@ -823,7 +808,6 @@ def text_mix_to_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a narrow deterministic filter. No shuffle touches the corpus
     beyond the counting aggregate's partials.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count("*").alias("n_docs"))
     tot = counts.agg(
@@ -878,7 +862,6 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus); the final top-k runs on the aggregated vocabulary with
     a TakeOrdered-style limit, never a global sort of the corpus.
     Deterministic tie-break on the term."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     counts = (
         docs.select(
@@ -952,7 +935,6 @@ def text_unigram_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions. At 100 TB the vocabulary table is the small side by
     orders of magnitude — Zipf keeps it sublinear in corpus size.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("term")
@@ -1013,7 +995,6 @@ def text_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigrams; this ranks the pairs a learned tokenizer would merge
     first.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     # Project the token array ONCE, then zip it against its own
     # 1-shifted slice: an indexed-lambda element_at(toks, i+2) form
@@ -1066,7 +1047,6 @@ def text_stratified_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     matters below k+1), but the window form is the oracle-matchable
     statement.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -1118,7 +1098,6 @@ def text_lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-normalizing window runs over that tiny matrix partitioned by
     label — no single-partition exchange over data.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     pred = text_lang_id(spark, sf_dir)
@@ -1164,7 +1143,6 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (like kmeans/Lloyd's); the unit test pins the textbook 'low
     lower' example instead.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     return bpe_train(spark, docs, BPE_TRAIN_ITERS)
 
@@ -1264,7 +1242,6 @@ def text_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort — and the rank window then runs over the K survivors only.
     Ranking on the ROUNDED key so both engines order identically.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
@@ -1333,7 +1310,6 @@ def text_bpe_train_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate can pin; full merge-sequence equality vs a pure-Python
     reference is in tests/test_operators.py.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     merges = sorted(
         bpe_train(spark, docs, BPE_TRAIN_ITERS).collect(),
@@ -1427,7 +1403,6 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass) → two vocabulary-sized count aggregates that AQE
     broadcasts back → one per-doc rollup. The tfidf plan shape.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     with_toks = docs.select(
         "doc_id", F.split(F.col("text"), " ", -1).alias("toks")
@@ -1531,7 +1506,6 @@ def text_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, a broadcast rate table, one narrow deterministic
     filter; the corpus never shuffles.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count("*").alias("n_docs"))
     wq = counts.select(
@@ -1626,7 +1600,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical semantics in both engines (empty unnest / empty
     explode).
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.operators.dedup import _word_ngrams
     from pyspark.sql import Window as W
 
@@ -1706,7 +1679,6 @@ def text_token_mass_concentration(
     engines take the identical cut by construction. Output share is
     the all-integer _q6 recipe.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     from pyspark.sql import Window as W
 
@@ -1798,7 +1770,6 @@ def text_cross_lang_contamination(
     one fingerprint-keyed aggregate with a two-phase distinct on the
     label, folded to a one-row census.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
@@ -1891,7 +1862,6 @@ def text_lm_perplexity_filter(
     bigram scoring pass itself (audited in text_bigram_lm_score);
     everything added here is level-sized.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as _W
 
     scores = text_bigram_lm_score(spark, sf_dir).select(
@@ -2005,7 +1975,6 @@ def text_source_token_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0)/HUGEINT BEFORE the sum (n_i·M passes int64 once
     M ~ 1e10 tokens), as are the coverage term and the final ratio.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
@@ -2082,7 +2051,6 @@ def text_bpe_fertility_by_lang(
     only if it has ≥1 document, and every document has ≥1 whitespace
     token by the split convention.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = F.size(F.split(F.col("text"), " ", -1)).cast("long")
     bpe = F.size(
@@ -2150,7 +2118,6 @@ def text_contamination_span_extent(
     shingle SET builds from the 1/{CONTAM_BENCH_MOD} pre-filtered scan
     and joins BROADCAST; one doc-keyed aggregate emits the extents.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
     n_sh = F.size(toks) - (CONTAM_NGRAM - 1)
@@ -2249,7 +2216,6 @@ def text_vocab_coverage_curve(
     """
     from pyspark.sql import Window as W
 
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     counts = (
         docs.select(
@@ -2350,7 +2316,6 @@ def text_filter_ablation_census(
     then an 8-cell groupBy. No per-rule rescan — the whole ablation
     matrix costs exactly one filter evaluation.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
     t = docs.select(
@@ -2444,7 +2409,6 @@ def text_script_mix_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside whole-stage codegen on the pre-split array (no explode, no
     per-char shuffle rows), then a |langs|-key aggregate.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
 
     def _cls(cond: str) -> str:
@@ -2523,7 +2487,6 @@ def text_hash_collision_census(
     aggregates over the bucket frame — everything after the distinct
     is broadcast-scale.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     vocab = docs.select(
         F.explode(F.split(F.col("text"), " ", -1)).alias("term")
@@ -2615,7 +2578,6 @@ def text_term_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per doc; the final top-k is TakeOrdered over the
     ≤C({LIFT_VOCAB_TOP},2)-row pair table.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     dt = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("term")
@@ -2717,7 +2679,6 @@ def text_langid_eval_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     class and by predicted class, each ≤ |langs| rows) joined at
     census scale.
     """
-    apply_engine_conf(spark)
     from almost_any_file_to_pandas_spark.plans import QUERIES
 
     pred = QUERIES["text_lang_id"](spark, sf_dir).select(
@@ -2828,7 +2789,6 @@ def text_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     second map-side-combined aggregate over per-doc projections; the
     max-doc scalar broadcasts.
     """
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     n = docs.agg((F.max("doc_id") + 1).alias("n"))
     tok = docs.select(
@@ -2992,7 +2952,6 @@ def text_rake_keyphrases_topk(
     )
     from pyspark.sql import Window as W
 
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -3117,7 +3076,6 @@ def text_langid_agreement_kappa(
 
     Scale shape: ONE corpus aggregate to the ≤|langs|² confusion
     cells; marginals, p_e and κ fold on that bounded frame."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     lowered = F.lower(F.col("text"))
     scores = {}
@@ -3245,7 +3203,6 @@ def text_readability_flesch_census(
     truncate), the subtraction is exact, and the per-lang mean uses
     the widened floor division (sums can be negative for long-winded
     corpora). One narrow projection + one ≤|langs|-cell aggregate."""
-    apply_engine_conf(spark)
     docs = table_wide(spark, sf_dir, "documents")
     words = F.size(F.split(F.col("text"), " ", -1))
     raw = lambda ch: (  # noqa: E731 — local character counter
@@ -3332,7 +3289,6 @@ def text_yule_k_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized frequency frame. Repeated heavy tokens concentrate
     into single partials before the shuffle — the classic Zipf skew
     is absorbed by the combiner, not the reducer."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     freqs = (
         docs.select(
@@ -3448,7 +3404,6 @@ def text_bigram_perplexity_filter(
     the combiner); scoring joins occurrences to the two count tables
     on their natural keys — the model join any LM-filter pipeline
     pays — and the vocab scalar broadcasts."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.split(F.col("text"), " ", -1).alias("w")
@@ -3578,7 +3533,6 @@ def text_zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one tokenize pass + the vocab groupBy (map-side
     combined); the rank window and the OLS folds run on the
     ≤{ZIPF_TOP_K}-row head of the frequency frame."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     docs = table(spark, sf_dir, "documents")

@@ -8,13 +8,22 @@ the driver hash-compares after sorting columns by name. Oracle output
 columns keep to the types in ``tools/check_oracle.ORACLE_TYPES``: an
 integer ``SUM`` is ``HUGEINT`` in DuckDB and must be cast to
 ``BIGINT``, or the driver renders it as a float.
+
+It is also the one per-query entry point: :func:`register` wraps each
+query so that every call, from the driver or from another module,
+first applies the engine's runtime conf
+(:func:`~almost_any_file_to_pandas_spark.session.apply_engine_conf`).
+Query bodies never apply it themselves.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -29,13 +38,27 @@ ORACLES: Dict[str, str] = {}
 
 
 def register(name: str, oracle: Optional[str] = None):
-    """Register a query callable, optionally with its DuckDB oracle."""
+    """Register a query callable, optionally with its DuckDB oracle.
+
+    The registry holds, and the decorator returns, a wrapper that
+    calls :func:`~almost_any_file_to_pandas_spark.session.apply_engine_conf`
+    on the session and then the body, passing any extra arguments
+    through. A direct module-level call (``q1_pricing_summary(spark,
+    sf_dir)``) therefore runs under the engine conf just as a driver
+    call through ``QUERIES`` does. ``functools.wraps`` keeps the body's
+    name and ``__module__`` and exposes it as ``__wrapped__``.
+    """
 
     def decorator(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def query(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            apply_engine_conf(spark)
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[name] = query
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return query
 
     return decorator
 
@@ -138,9 +161,6 @@ POST_GATE_PRIORITY = (
     "orders_rolling_7d_revenue",
     "events_user_type_gini",
     "part_supplier_concentration_hhi",
-    # 100 TB physical-strategy twin (r4 verdict #5): same output as
-    # text_token_budget_trim via the exact level-quantile cut
-    "text_token_budget_trim_twopass",
     # round-5 widening: semi-join census, returned-items top-k,
     # anti-join + grouped count-distinct, last-touch attribution,
     # watermarked-dedup restatement

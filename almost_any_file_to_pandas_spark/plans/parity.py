@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 
 @register(
@@ -37,7 +36,6 @@ def a1_max_split_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/D3 — max column count over rows (main.py:360-368), restated
     as max token-width over documents. Scan → map-side partial max →
     1-row reduce; no shuffle of data rows."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         F.max(F.size(F.split(F.col("text"), " ", -1))).alias("max_width")
@@ -57,7 +55,6 @@ def a1_max_split_width(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a2_mode_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2/D2 — the delimiter majority vote (main.py:235) as a mode
     aggregate: most frequent event_type, deterministic tie-break."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("event_type").agg(F.count("*").alias("n_votes"))
     w = W.orderBy(F.desc("n_votes"), F.asc("event_type"))
@@ -79,7 +76,6 @@ def a2_mode_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a3_shape_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — row counts + empty-detection bit (main.py:103, 110-111)."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.count("*").alias("n_rows"),
@@ -99,7 +95,6 @@ def f1_empty_row_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 — skip rows with zero data cells (main.py:320-323). Both
     predicates are Catalyst-pushable; n_chars > 0 reaches the parquet
     scan as a PushedFilter."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.filter(
         (F.col("n_chars") > 0) & (F.length(F.trim(F.col("text"))) > 0)
@@ -126,7 +121,6 @@ def f2_width_conditional_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 — PDF page-width valid/invalid split (main.py:384-390):
     rows whose width matches the group's first row → 'valid', else
     'invalid'; both outputs of the single predicate, tagged."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     width = F.size(F.split(F.col("text"), " ", -1))
     w = (
@@ -164,7 +158,6 @@ def t2_t4_split_pad_quote_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.py:344-351) over documents.text: first 4 tokens as c0..c3,
     missing → '' (ragged pad), quote runs stripped both ends.
     Pure narrow projection — no shuffle."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
 
@@ -191,7 +184,6 @@ def t2_t4_split_pad_quote_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t5_all_string_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 — all-string normalization (dtype=str, main.py:259/324/351):
     heterogeneous columns cast to string with positional names."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 100)
     cols = ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate"]
     return li.select(
@@ -211,7 +203,6 @@ def t5_all_string_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t7_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7 — row renumbering after concat (main.py:391-392), restated
     as a deterministic per-group row_number."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     w = W.partitionBy("source").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return docs.select(
@@ -230,7 +221,6 @@ def t7_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
 def u1_union_all_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1 — positional concat of same-width tables (main.py:388-390):
     union-all of two filtered projections, provenance-tagged."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     short = docs.filter(F.col("n_chars") < 200).select(
         F.lit("short").alias("part_tag"), "doc_id", "n_chars"
@@ -249,7 +239,6 @@ def u1_union_all_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s8_typed_scan_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 — typed parquet scan, types preserved (main.py:415-425)."""
-    apply_engine_conf(spark)
     return table(spark, sf_dir, "region").select("r_regionkey", "r_name")
 
 
@@ -268,7 +257,6 @@ def d2_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2 — per-group majority vote (the sniffing vote generalized):
     most frequent lang per source, deterministic tie-break. Two-stage:
     partial-agg shuffle then a tiny window over group counts."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     counts = docs.groupBy("source", "lang").agg(F.count("*").alias("n"))
     w = W.partitionBy("source").orderBy(F.desc("n"), F.asc("lang"))

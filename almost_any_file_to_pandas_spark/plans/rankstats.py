@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 CENTS = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
 
@@ -97,7 +96,6 @@ def orders_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     both rank windows and the final fold run over ≤ a few thousand
     rows. No corpus-sized sort anywhere.
     """
-    apply_engine_conf(spark)
     daily = _daily(spark, sf_dir)
     ranked = daily.select(
         (
@@ -179,7 +177,6 @@ def orders_mannwhitney_priority_shift(
     (probability a random URGENT order outprices a random LOW one,
     counting ties half) in exact q6.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     census = (
         orders.filter(
@@ -267,7 +264,6 @@ def orders_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2(C−D)·1e6) div (n(n−1))`` — exact integer, truncation toward
     zero identical in both engines (integer operands only).
     """
-    apply_engine_conf(spark)
     daily = _daily(spark, sf_dir)
     a = daily.select(
         F.col("d").alias("ad"), F.col("x").alias("ax"),
@@ -360,7 +356,6 @@ def orders_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar frame. ``expected_runs_q6 = 1 + 2·n₊·n₋/(n₊+n₋)`` in
     exact q6 for the z-free comparison.
     """
-    apply_engine_conf(spark)
     daily = _daily(spark, sf_dir).cache()
     census = daily.groupBy("y").agg(F.count("*").alias("cnt"))
     walk = census.select(
@@ -446,7 +441,6 @@ def events_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
     off ONE (type, hour) hash aggregate plus a per-type fold. The
     scalar span broadcasts; no window, no join on the fact table.
     """
-    apply_engine_conf(spark)
     events = table(spark, sf_dir, "events")
     hourly = events.groupBy(
         "event_type",
@@ -535,7 +529,6 @@ def orders_hodges_lehmann_shift(
     single-partition sort ever sees the multi-million-row census.
     The only fact-table pass is the (day, priority) hash aggregate.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     daily = (
         orders.filter(
@@ -696,7 +689,6 @@ def lineitem_isotonic_return_rate(
     integer quantization in both engines (deterministic even at
     sub-ulp gaps, the same discipline as the drift chi2).
     """
-    apply_engine_conf(spark)
     lineitem = table(spark, sf_dir, "lineitem")
     levels = lineitem.groupBy(
         F.expr("CAST(FLOOR(l_discount * 100 + 0.5) AS INT)").alias("pct")
@@ -801,7 +793,6 @@ def lineitem_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     every downstream aggregate is exact; the oracle's UNION ALL form
     is the semantic twin (DuckDB has no UNPIVOT-to-Expand contract).
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     m = li.select(
         "l_returnflag",
@@ -855,7 +846,6 @@ def orders_mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB ``//``-DECIMAL rounding trap), and the first month's NULL
     lag propagates to a NULL growth identically.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         F.expr(
@@ -926,7 +916,6 @@ def customer_abc_classification(
     The classification cuts compare exact integers (cum·5 ≤ T·4,
     cum·20 ≤ T·19); the output is the 3-row class rollup.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = (
         orders.groupBy("o_custkey")
@@ -1045,7 +1034,6 @@ def lineitem_trend_test_ca(spark: SparkSession, sf_dir: str) -> DataFrame:
     exemption). Degenerate inputs (no returns, all returns, a single
     level) yield NULL rather than a division fault.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     levels = li.groupBy(
         F.expr("CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)").alias(
@@ -1133,7 +1121,6 @@ def orders_mix_shift_decomposition(
     pass over orders (never two scans of the fact side for the two
     periods).
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     span = orders.agg(
         F.min("o_orderdate").alias("lo"),
@@ -1259,7 +1246,6 @@ def orders_ks_priority_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame only, the module's standing discipline. Products widen to
     DECIMAL(38,0)/HUGEINT before the final BIGINT cast.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     census = (
         orders.filter(
@@ -1359,7 +1345,6 @@ def customer_order_count_dispersion(
     |segments|-row aggregate. No windows, no global sorts; at 100 TB
     the only wide exchange is the orders groupBy.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -1456,7 +1441,6 @@ def supplier_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring projection, TakeOrderedAndProject top-k; the rank window
     sees ≤{TOPSIS_TOP} rows.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as W
 
     sup = table(spark, sf_dir, "supplier")
@@ -1586,7 +1570,6 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-band windows) — never a global single-partition walk —
     and the matrix is a ≤9-cell rollup.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     m = li.groupBy(
         "l_partkey",
@@ -1728,7 +1711,6 @@ def orders_value_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces orders to the ≤ ~500-cell bin census; the unpartitioned
     CDF window and the LEAD both run on that bounded frame only;
     totals broadcast via the 1-row cross join."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cells = (
         orders.select(
@@ -1830,7 +1812,6 @@ def lineitem_return_calibration_census(
     per-bin rates are single integer divisions of non-negative
     operands (floor == truncate both engines). One corpus-sized hash
     aggregate; the census is ≤ {CAL_BINS} rows."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     scored = li.select(
         F.least(
@@ -1888,7 +1869,6 @@ def lineitem_return_calibration_ece(
     bin-count-weighted gap), MCE = max_b gap. Same q6-integer
     discipline as the census; the weighted sum ≤ N·1e6 stays
     BIGINT-safe at any SF, with ONE final division."""
-    apply_engine_conf(spark)
     census = lineitem_return_calibration_census(spark, sf_dir)
     return census.agg(
         F.sum("n").cast("long").alias("n_rows"),
@@ -1984,7 +1964,6 @@ def orders_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     into B cells before any shuffle; the rank window runs on the
     B-row replicate frame. Cost is B× the narrow scan, tunable by B —
     the same declared-fan-out contract as events_permutation_test."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     # table_wide: the B-fold fan-out + per-row hash is compute-heavy
     # narrow work — without the fan-out guard the local single-row-

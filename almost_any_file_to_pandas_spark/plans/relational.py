@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 
 def _dec_sum(col, alias, scale="(25,6)"):
@@ -64,7 +63,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is scan → partial agg → one shuffle on (returnflag,
     linestatus) → final agg: the minimum possible data movement.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -110,7 +108,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders⋈lineitem shuffles on orderkey. Top-10 via global sort-limit
     (Spark's TakeOrderedAndProject — no full sort at scale).
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -168,7 +165,6 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered by date *before* the lineitem join so the pushed-down
     predicate shrinks the shuffle. Only orders⋈lineitem moves data.
     """
-    apply_engine_conf(spark)
     region = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = table(spark, sf_dir, "nation")
     cust = table(spark, sf_dir, "customer")
@@ -212,7 +208,6 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def monthly_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bucketed rollup — scan + two-int group-by, no join."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     return (
         orders.groupBy(
@@ -250,7 +245,6 @@ def top_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer), then window over the small aggregate, never over the
     raw fact table.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     spend = (
@@ -284,7 +278,6 @@ def top_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def supplier_part_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact + two broadcast dims + distinct aggregation."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     sup = table(spark, sf_dir, "supplier")
     part = table(spark, sf_dir, "part").filter(F.col("p_size") >= 25)
@@ -310,7 +303,6 @@ def supplier_part_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join (NOT EXISTS) — Spark left_anti, shuffle on orderkey."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem").select("l_orderkey")
     return (
@@ -341,7 +333,6 @@ def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass. Spark expands grouping sets map-side then shuffles once
     on the expanded key; no per-combination rescan of the fact table
     (the naive union-of-groupbys would scan 4×)."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     return (
         orders.cube(F.year("o_orderdate").alias("o_year"), "o_orderstatus")
@@ -370,7 +361,6 @@ def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def revenue_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP year→month: the time-hierarchy subtotal ladder (year-
     month, year, grand total) in one shuffle."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     return orders.rollup(
         F.year("o_orderdate").alias("o_year"),
@@ -395,7 +385,6 @@ def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs the group's values together (one shuffle); at 100 TB the
     approx_percentile sketch (t-digest, map-side mergeable) is the
     drop-in when ±ε is acceptable."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.percentile("o_totalprice", F.lit(0.5)).alias("p50"),
@@ -427,7 +416,6 @@ def orders_with_returns_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplicity). The returnflag filter is pushed to the lineitem
     parquet scan. Complements ``orders_without_lineitems`` (anti).
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     lineitem = table(spark, sf_dir, "lineitem")
     returned = lineitem.filter(F.col("l_returnflag") == "R").select(
@@ -472,7 +460,6 @@ def customer_order_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderpriority. Every ORDER BY carries o_orderkey as the
     deterministic tie-break so ranks hash-match across engines.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     w_seq = W.partitionBy("o_custkey").orderBy(
         F.asc("o_orderdate"), F.asc("o_orderkey")
@@ -525,7 +512,6 @@ def events_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect_list, exact distinct) where partials can't combine —
     this query pins the mechanics oracle-checked.
     """
-    apply_engine_conf(spark)
     events = table(spark, sf_dir, "events")
     partial = (
         events.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(N_SALT)))
@@ -572,7 +558,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part dimension broadcasts. The threshold is computed in decimal so
     the comparison cut is bit-identical across engines.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#9")
     part_avg = li.groupBy("l_partkey").agg(
@@ -630,7 +615,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     runtime. Top-20 is TakeOrderedAndProject (per-partition heaps), not
     a global sort.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     heavy = (
         table(spark, sf_dir, "lineitem")
@@ -685,7 +669,6 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row). The balance cut is decimal-computed, identical across
     engines.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     orders = (
         table(spark, sf_dir, "orders")
@@ -975,7 +958,6 @@ def events_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials merge associatively). Running both here is the
     correctness harness; production keeps the sketch.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("exact_users"),
@@ -1025,7 +1007,6 @@ def order_value_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFram
     whole table through one WindowExec partition, defeating the
     query's own point.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     agg = orders.agg(
         F.expr("percentile_approx(o_totalprice, 0.50, 10000)").alias("_p50a"),
@@ -1087,7 +1068,6 @@ def orders_merge_changeset(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice. The streaming twin is the replay-idempotent foreachBatch
     sink in ``streaming/events.py``.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderkey",
@@ -1153,7 +1133,6 @@ def orders_status_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning is the same hash exchange any per-entity history
     build pays, and AQE handles hot entities.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     nxt = F.lead("o_orderdate").over(w)
@@ -1205,7 +1184,6 @@ def events_salted_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums merge order-independently (bit-identical to the oracle's
     single-group sum).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
@@ -1278,7 +1256,6 @@ def order_value_decile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile = 1 + count of cut points strictly below the value, so
     boundary rows (value == cut) land in the lower bin.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cuts = exact_disc_quantiles(orders, "o_totalprice", DECILE_QS)
     ts = [cuts[q] for q in DECILE_QS]
@@ -1348,8 +1325,6 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side: at 100 TB each runs as its own bounded job over a
     pruned two-column scan.
     """
-    apply_engine_conf(spark)
-
     def audit(fk: str, child: DataFrame, key_col: str, parent: DataFrame,
               parent_key: str) -> DataFrame:
         # one pass per edge: left join against the distinct parent
@@ -1463,7 +1438,6 @@ def lineitem_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct term one pass with constant memory (documented swap;
     the exact form is the oracle-matchable statement).
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     aggs = []
     for name, kind in PROFILE_COLUMNS:
@@ -1545,7 +1519,6 @@ def lineitem_profile_approx_floor(
     but never past tolerance on a count it also bounds). The oracle
     pins both TRUE with independently computed exact values.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     # The exact anchor runs as its OWN single-column aggregate: mixing
     # one count_distinct into the HLL aggregate forces the planner
@@ -1709,7 +1682,6 @@ def lineitem_column_profile_approx(
     profile at 100 TB is `column_profile_approx_frame` alone —
     count/nulls/min/max are exact there too; only NDV is estimated.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     approx = column_profile_approx_frame(li)
     exact = li.agg(
@@ -1798,7 +1770,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical duplicate-cut binning in both engines because the rule
     is the same arithmetic, not engine ntile.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.datediff(
@@ -1882,7 +1853,6 @@ def orders_backlog_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     chronologically). Orders with no lineitems drop in the inner
     join, identically in both engines.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     per_order = (
@@ -1959,7 +1929,6 @@ def orders_incremental_agg_merge(
     reason the engine's sketches (HLL, GK, CMS) were chosen
     map-side-mergeable.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
 
     def partials(df: DataFrame) -> DataFrame:
@@ -2032,7 +2001,6 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(double,2) class is banned from registered outputs; the
     cast to VARCHAR pins month rendering across engines.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     firsts = orders.groupBy("o_custkey").agg(
         F.date_trunc("month", F.min("o_orderdate"))
@@ -2100,7 +2068,6 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Revenue sums in decimal per the q1 contract.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part")
     j = li.join(
@@ -2170,7 +2137,6 @@ def lineitem_scd2_point_in_time(
     binned range join for the keyless case). One extra shuffle
     attaches custkey to lineitem via the orderkey join first.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -2236,7 +2202,6 @@ def orders_rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     restatement exists to avoid. Decimal accumulation end to end;
     doubles only at the output boundary (the q1 contract).
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -2295,7 +2260,6 @@ def part_supplier_concentration_hhi(
     per-part rollup on the part-prefixed key — the two-level rollup
     every concentration/diversity metric compiles to.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     per = li.groupBy("l_partkey", "l_suppkey").agg(F.count("*").alias("c"))
     agg = per.groupBy("l_partkey").agg(
@@ -2342,7 +2306,6 @@ def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     many late lines it has (the semantics COUNT(*) over a join would
     get wrong). Aggregation is a ≤5-group map-side-partial fold.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
@@ -2391,7 +2354,6 @@ def q10_returned_items_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; top-20 via TakeOrderedAndProject (per-partition heaps,
     never a global sort). Revenue is the exact-integer cents recipe.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     nat = table(spark, sf_dir, "nation")
     orders = table(spark, sf_dir, "orders").select(
@@ -2445,7 +2407,6 @@ def q16_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan (partial distinct on (group, suppkey), then the count) —
     no Expand, no row explosion beyond the distinct pairs.
     """
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part").filter(
         F.col("p_brand") != "Brand#1"
     )
@@ -2484,7 +2445,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     must prune to the three referenced columns — at 100 TB this query
     IS its scan, so plan hygiene is the whole game.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     f = (
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -2543,7 +2503,6 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate computes both sums map-side-partial. Share is the
     exact-integer cents ratio (house recipe).
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
@@ -2605,7 +2564,6 @@ def supplier_balance_rank_in_nation(
     nation key over the supplier dimension; both window functions
     share the same sort, so Spark plans a single exchange + sort.
     """
-    apply_engine_conf(spark)
     sup = table(spark, sf_dir, "supplier")
     w = W.partitionBy("s_nationkey").orderBy(
         F.desc("s_acctbal"), F.asc("s_suppkey")
@@ -2659,7 +2617,6 @@ def q13_customer_order_distribution(
     the second aggregate runs over |distinct counts| rows. No window
     anywhere — both folds are hash aggregates with map-side partials.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey")
     orders = table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
@@ -2708,7 +2665,6 @@ def orders_fulfillment_latency_by_priority(
     ship date per order (the only corpus shuffle); the histogram and
     its window run over ≤ priorities × distinct-day-counts rows.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
     )
@@ -2793,7 +2749,6 @@ def orders_market_basket_pairs(
     one pair-keyed count and a TakeOrderedAndProject top-k. Two
     shuffles total, both on uniform keys.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -2865,7 +2820,6 @@ def q15_top_suppliers_by_quarter_revenue(
     1-row max crossJoin-broadcasts; the name lookup broadcasts the
     supplier dimension.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
@@ -2935,7 +2889,6 @@ def customer_reorder_gap_by_segment(
     value-histogram quantile pattern — integer day gaps, bounded
     distinct-value domain, no per-group sort of orders.
     """
-    apply_engine_conf(spark)
     from pyspark.sql import Window as _W
 
     orders = table(spark, sf_dir, "orders").select(
@@ -3023,7 +2976,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     (so most fact rows drop at the probe, before the groupBy's
     shuffle).  The shipdate range prunes at the parquet scan.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -3109,7 +3061,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio is one double division on identical operands in both
     engines.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     part = (
         table(spark, sf_dir, "part")
@@ -3189,7 +3140,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression is pure double IEEE arithmetic (identical across
     engines) cast to exact DECIMAL before the sum.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     part = (
         table(spark, sf_dir, "part")
@@ -3267,7 +3217,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ending in the unique (p_partkey, s_name) pair —
     TakeOrderedAndProject, not a global sort.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     cost = li.groupBy("l_partkey", "l_suppkey").agg(
         F.expr(
@@ -3350,7 +3299,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0)/HUGEINT (micros × 1000 overflows int64 at the
     100 TB corpus scale).
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = (
@@ -3413,7 +3361,6 @@ def q12_ship_latency_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-group conditional aggregate (map-side partial).  The date filter
     prunes the fact scan; outputs are all-integer counts.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -3489,7 +3436,6 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast supplier/nation decoration — the fact is never
     self-joined.
     """
-    apply_engine_conf(spark)
     fparts = (
         table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("small%"))
@@ -3579,7 +3525,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier/nation decoration broadcasts.  Deterministic top-100 via
     (numwait DESC, s_name).
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -3697,7 +3642,6 @@ def orders_pareto_concentration(
     """
     import math
 
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust_rev = (
         orders.groupBy("o_custkey")
@@ -3847,7 +3791,6 @@ def part_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one bounded-domain aggregate + one broadcast join; the
     part scan is read once per side, filters pushed.
     """
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     p = part.select(
         "p_partkey",
@@ -3928,7 +3871,6 @@ def orders_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar-sized daily frame — bounded at any corpus scale, the
     same argument as the rolling-7d and month-spine operators.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -4015,7 +3957,6 @@ def orders_benford_first_digit(
     spine is a 9-row literal frame left-joined so absent digits
     report share 0 (never silently vanish).
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     counts = orders.select(
         F.expr(
@@ -4090,7 +4031,6 @@ def orders_ewma_trailing_demand(
     distance weights, so the banded join IS the right plan, not a
     fallback.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -4176,7 +4116,6 @@ def orders_daily_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction an observed day (MIN comes from the data), so
     the fill never reads an empty preceding frame.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -4257,7 +4196,6 @@ def customer_decile_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer-sized frame, and the subtraction joins two
     decile-sized shortlists (≤ n/10 rows each side).
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     span = orders.agg(
         F.year(F.min("o_orderdate")).alias("y0"),
@@ -4356,7 +4294,6 @@ def orders_market_basket_lift(
     repeated pairs only), then two broadcast joins against the
     part-frequency aggregate and the one-row order count.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -4471,7 +4408,6 @@ def lineitem_return_rate_wilson(
     Plan: one month-keyed aggregate with map-side partials; the
     bound is a per-row projection over the calendar-sized frame.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     m = li.groupBy(
         F.date_trunc("month", F.col("l_shipdate"))
@@ -4553,7 +4489,6 @@ def orders_ship_latency_life_table(
     the DOMAIN-sized latency axis (days, not orders) — the CUSUM
     boundedness argument again.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     shipped = (
@@ -4674,7 +4609,6 @@ def orders_trimmed_mean_by_priority(
     division. Ties at the cut boundary resolve by count arithmetic
     (buckets are value-aggregated), identically in both engines.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     census = orders.groupBy(
         F.col("o_orderpriority").alias("pr"),
@@ -4767,7 +4701,6 @@ def part_brand_type_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     products, per-term truncating division. Plan: one (brand, type)
     aggregate, two marginal rollups broadcast back, a one-row total.
     """
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     o = part.groupBy("p_brand", "p_type").agg(F.count("*").alias("obs"))
     r = o.groupBy("p_brand").agg(F.sum("obs").alias("rn"))
@@ -4841,7 +4774,6 @@ def events_weekly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one day-keyed aggregate; the lag window and both sums run
     over the calendar-sized daily frame.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count("*").alias("x")
@@ -4928,7 +4860,6 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one custkey aggregate, one value census, one ordered walk
     over the value domain, a one-row fold.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     per = orders.groupBy("o_custkey").agg(
         F.sum(
@@ -5020,7 +4951,6 @@ def orders_join_ivm_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushed to parquet; customer delta side broadcast; one
     hash aggregate over the union.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -5131,7 +5061,6 @@ def lineitem_price_index_basket(
     classic two-CTE formulation reads lineitem twice); everything
     after is part-count-sized. One shuffle total.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     y0, y1 = PRICE_INDEX_BASE_YEAR, PRICE_INDEX_CURR_YEAR
     cents = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
@@ -5236,7 +5165,6 @@ def part_brand_type_cramers_v(
     aggregate, marginal rollups broadcast back, level counts from
     the SAME marginal frames (no extra corpus pass).
     """
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     o = part.groupBy("p_brand", "p_type").agg(F.count("*").alias("obs"))
     r = o.groupBy("p_brand").agg(F.sum("obs").alias("rn"))
@@ -5322,7 +5250,6 @@ def star_referential_integrity_audit(
     facts twice. DISTINCT on a single key avoids the multi-distinct
     Expand (each distinct count lives in its own pass).
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
     lineitem = table(spark, sf_dir, "lineitem")
@@ -5430,7 +5357,6 @@ def customer_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-length frame. Nothing here scales with row count past
     the two custkey-keyed passes.
     """
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     base = orders.select(
         "o_custkey",
@@ -5520,7 +5446,6 @@ def lineitem_bucket_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives by PREFIX ROLLUP of the 256-row frame — never a second
     scan; the totals fold back as a broadcast scalar.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     fine = (
         li.select(
@@ -5628,7 +5553,6 @@ def lineitem_join_order_advisor(
     counts are free observability off the same joins); nothing here
     is quadratic and every frame after the scans is one row.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
@@ -5727,7 +5651,6 @@ def star_denormalize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     full 16-column lineitem — asserted via ReadSchema in the plan
     test.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount",

@@ -18,9 +18,10 @@ def get_spark(app_name: str = "almost_any_file_to_pandas_spark") -> SparkSession
     """Build (or fetch) a SparkSession with engine defaults.
 
     The driver may hand us an existing session; engine code never
-    assumes it created the session — every query callable also calls
-    :func:`apply_engine_conf` to set the runtime-settable knobs it
-    relies on (UTC session timezone, AQE, Arrow).
+    assumes it created the session — the query registry's wrapper
+    (``plans.register``) calls :func:`apply_engine_conf` before every
+    query body to set the runtime-settable knobs it relies on (UTC
+    session timezone, AQE, Arrow).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -57,7 +58,8 @@ def get_spark(app_name: str = "almost_any_file_to_pandas_spark") -> SparkSession
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Set runtime-settable confs the engine's plans rely on.
 
-    Safe on any session (driver-provided or ours). UTC timezone keeps
+    Safe on any session (driver-provided or ours); ``plans.register``
+    calls it before every registered query. UTC timezone keeps
     timestamp semantics aligned with the DuckDB oracle; AQE gives
     runtime partition coalescing + skew-join handling at scale.
     """

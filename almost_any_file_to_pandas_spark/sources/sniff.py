@@ -17,11 +17,11 @@ Reference behavior (/root/reference/main.py):
   intended algorithm: one bounded read, k samples, both candidate
   chars stripped, stdlib ``Counter`` vote.
 - D3 ``max_cols_in_rows`` (main.py:360-368): max split-width over all
-  lines. At scale this must not be a driver pass — a distributed
-  restatement is provided for the full file; the driver-side helper
-  here works on the same bounded prefix used for sniffing (the schema
-  width is then validated/extended by the distributed pass when
-  requested).
+  lines. At scale this must not be a driver pass: the helper here
+  works on the bounded prefix used for sniffing, and the text reader
+  uses it only when that prefix is the whole file; otherwise it takes
+  the max with one distributed aggregate over the scan's own lines
+  (``sources.text._table_width``).
 """
 
 from __future__ import annotations
@@ -181,20 +181,3 @@ def max_columns_in_prefix(
             width = max(width, len(line.split(delimiter)))
     return width
 
-
-def max_columns_distributed(spark, path: Union[str, Path], delimiter: str) -> int:
-    """D3 as a distributed single-pass aggregate for files too large
-    for a driver scan: ``max(size(split(value, delim)))``.
-
-    This is the scale path — one spark.read.text scan, map-side
-    partial max, no shuffle beyond the final 1-row reduce.
-    """
-    from pyspark.sql import functions as F
-
-    import re
-
-    df = spark.read.text(str(path))
-    row = df.select(
-        F.max(F.size(F.split(F.col("value"), re.escape(delimiter)))).alias("w")
-    ).first()
-    return int(row["w"]) if row and row["w"] is not None else 0

@@ -6,8 +6,9 @@ strip (T1) → split (T2) → pad to max width with '' (T3) → per-cell
 quote strip (T4); all cells strings (T5), positional names (T6).
 
 Spark redesign: ONE driver-side bounded-prefix pass for encoding +
-delimiter + provisional width (the reference reads the file 4+ times,
-SURVEY.md §3.2), then a single distributed ``spark.read.text`` scan
+delimiter + width (the reference reads the file 4+ times, SURVEY.md
+§3.2; a file longer than the prefix adds one distributed max-width
+aggregate), then a single distributed ``spark.read.text`` scan
 with the T1-T4 pipeline as built-in column expressions (split /
 array_repeat / concat / regexp_replace — all JVM-side, codegen'd).
 We read via ``text`` + ``F.split`` rather than the CSV reader because
@@ -147,35 +148,48 @@ def _read_lines(spark, paths, encoding, prefix):
     return spark.read.text(paths), encoding
 
 
+def _table_width(lines, delimiter, prefix, encoding, n_files) -> int:
+    """D3 — the table width every row is padded to (main.py:360-368:
+    the max split-width over ALL lines).
+
+    One file whose bounded prefix is its whole logical content is
+    measured on the driver from that prefix, with no Spark job.
+    Anything larger, or more than one file, is measured by one
+    distributed ``max(size(split(value, delimiter, -1)))`` over the
+    same decoded ``lines`` frame the scan reads, so a wide row past
+    the prefix or in a later file keeps its cells.
+    """
+    if n_files == 1 and len(prefix) < sniff.DEFAULT_PREFIX_BYTES:
+        width = sniff.max_columns_in_prefix(
+            None, delimiter, prefix=prefix, encoding=encoding
+        )
+    else:
+        width = lines.select(
+            F.max(F.size(F.split("value", re.escape(delimiter), -1)))
+        ).first()[0]
+    return int(width or 0)
+
+
 def read_delimited(
     spark: SparkSession,
     path: Union[str, Path],
     delimiter: Optional[str] = None,
     width: Optional[int] = None,
-    exact_width: bool = False,
 ) -> ParseResult:
     """Full S5/S6 pipeline → one all-string, positionally-named table.
 
-    ``delimiter=None`` triggers the D2 sniff; ``width=None`` uses the
-    bounded-prefix estimate (D3) — pass ``exact_width=True`` to run the
-    distributed full-file max instead (the 100 TB-safe variant; one
-    extra scan, no driver materialization).
+    ``delimiter=None`` triggers the D2 sniff; ``width=None`` measures
+    the max line width (:func:`_table_width`).
     """
     path = str(path)
     prefix = sniff.read_prefix(path)
     encoding = sniff.detect_encoding(path, prefix=prefix)
     if delimiter is None:
         delimiter = sniff.sniff_delimiter(path, prefix=prefix, encoding=encoding)
-    if width is None:
-        if exact_width:
-            width = sniff.max_columns_distributed(spark, path, delimiter)
-        else:
-            width = sniff.max_columns_in_prefix(
-                path, delimiter, prefix=prefix, encoding=encoding
-            )
-    width = max(1, int(width))
-
     lines, encoding = _read_lines(spark, path, encoding, prefix)
+    if width is None:
+        width = _table_width(lines, delimiter, prefix, encoding, 1)
+    width = max(1, int(width))
 
     cells = pad_cells(cells_expr(F.col("value"), delimiter), width)
     columns = [
@@ -210,9 +224,10 @@ def read_delimited_many(
     ingestion shape (the per-file loop exists for metadata fidelity,
     not throughput).
 
-    Sniffing (encoding/delimiter/width) runs once on the first file's
+    Encoding and delimiter are sniffed once on the first file's
     bounded prefix — a homogeneous-corpus assumption that callers can
-    override by passing ``delimiter``/``width`` explicitly. Provenance
+    override by passing ``delimiter`` explicitly. The width is the max
+    over every file's lines (:func:`_table_width`). Provenance
     is preserved per row via ``source_file`` (input_file_name), the
     distributed analogue of per-file ParseResult metadata.
     """
@@ -229,13 +244,11 @@ def read_delimited_many(
     encoding = sniff.detect_encoding(first, prefix=prefix)
     if delimiter is None:
         delimiter = sniff.sniff_delimiter(first, prefix=prefix, encoding=encoding)
+    lines, encoding = _read_lines(spark, expanded, encoding, prefix)
     if width is None:
-        width = sniff.max_columns_in_prefix(
-            first, delimiter, prefix=prefix, encoding=encoding
-        )
+        width = _table_width(lines, delimiter, prefix, encoding, len(expanded))
     width = max(1, int(width))
 
-    lines, encoding = _read_lines(spark, expanded, encoding, prefix)
     cells = pad_cells(cells_expr(F.col("value"), delimiter), width)
     columns = [
         strip_quote_runs(F.element_at(cells, i + 1)).alias(f"c{i}")

@@ -25,7 +25,6 @@ from almost_any_file_to_pandas_spark.plans import (
     table,
     table_wide,
 )
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 WINDOW_MINUTES = 5
 
@@ -53,7 +52,6 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTEGER epoch micros (timezone- and precision-proof — never a
     rendered timestamp).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -163,7 +161,6 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal recipe on the driver generator's 2dp data; the integer
     sum is also order-independent) — no double ever reaches the
     hash."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     order = W.partitionBy("user_id").orderBy("ts", "event_id")
     # microsecond precision to match the oracle's INTERVAL comparison
@@ -240,7 +237,6 @@ def events_session_window_stream(
 def events_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user activity rollup with a post-aggregation filter —
     the profile-building aggregate; single shuffle on user_id."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
@@ -345,7 +341,6 @@ def events_sliding_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle on user_id, one per-partition sort, state bounded by
     the frame. Decimal accumulation keeps the running sums exact and
     engine-portable."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
@@ -392,7 +387,6 @@ def events_props_json_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     default), which SUM/AVG skip — same NULL semantics as the oracle's
     ``json_extract_string``.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     k = F.from_json("props", "k bigint")["k"]
     return ev.groupBy("event_type").agg(
@@ -436,7 +430,6 @@ def events_stream_enrich_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, on the low-cardinality segment key with map-side
     partials.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("dim_key"), "c_mktsegment"
@@ -498,7 +491,6 @@ def events_stream_upsert_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated at its scan, so ~1/3 of rows flow twice); both branches
     then share the single user_id shuffle.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "batch_id", F.col("event_id") % N_UPSERT_BATCHES
     )
@@ -549,7 +541,6 @@ def events_stream_redelivery_absorb(
     aggregate (duplicates co-locate; first-arrival-wins is value-
     indistinguishable because re-deliveries are byte-identical).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -637,7 +628,6 @@ def events_stream_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalization rule). Map-side partials absorb most duplicates
     before the shuffle at 100 TB.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     win = F.expr(
         f"unix_micros(ts) div ({DEDUP_WINDOW_MINUTES} * 60 * 1000000)"
@@ -731,7 +721,6 @@ def events_user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-aggregate for the listed users — no join; all counts are
     map-side-partial folds over a two-column read.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     listed = F.col("user_id") % ERASURE_MOD == 3
     kept = ev.filter(~listed)
@@ -786,7 +775,6 @@ def events_sessionization_incremental(
     is associative). This is also the repair step a Structured
     Streaming session store runs on late batches.
     """
-    apply_engine_conf(spark)
     gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
     ev = table(spark, sf_dir, "events")
     tus = F.unix_micros(F.col("ts"))
@@ -1204,7 +1192,6 @@ def events_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     column to float64/NaN and NaN != NaN would reset bucket state per
     row, where the old groupBy form treated nulls as one group.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
 
     def _audit_iter(batches):
@@ -1358,7 +1345,6 @@ def events_view_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band is a residual join predicate, so per-user fan-out is bounded
     by the user's in-window activity, never by bin replication.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id",
@@ -1493,7 +1479,6 @@ def events_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming form (:func:`events_windowed_topk_stream`) reuses the
     identical ranking kernel over the streamed counts.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     counts = (
         ev.groupBy(
@@ -1593,7 +1578,6 @@ def events_session_window_native(
     ``withWatermark``). Values use the round-7 hardened per-row
     FLOOR(value·1e6+0.5) BIGINT sum.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(

@@ -122,12 +122,11 @@ HEADLINE = [
     "part_supplier_concentration_hhi",
     # r05 additions, appended after every frozen slot: scan-bound Q6,
     # outer-join histogram Q13, conditional-agg Q14, window-carried
-    # attribution, level-quantile trim, fused IVFPQ search
+    # attribution, fused IVFPQ search
     "q6_forecast_revenue",
     "q13_customer_order_distribution",
     "q14_promo_revenue_share",
     "events_attribution_last_touch",
-    "text_token_budget_trim_twopass",
     "sim_ivfpq_topk",
     # late-r05 additions (appended; prior slots frozen)
     "mm_dedup_binary_exact",

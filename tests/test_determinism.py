@@ -42,10 +42,9 @@ QUERIES_UNDER_TEST = [
     "dedup_containment",
     "retrieval_hybrid_rrf_topk",
     # round-5 additions: fused IVFPQ local-cut (lexsort tie
-    # discipline), window-carried attribution, level-quantile trim
+    # discipline), window-carried attribution
     "sim_ivfpq_topk",
     "events_attribution_last_touch",
-    "text_token_budget_trim_twopass",
     # TPC-H shape completion: the three whose output passes through a
     # LIMIT cut or a broadcast scalar threshold (the value classes a
     # partitioning change could disturb); the plain group-bys

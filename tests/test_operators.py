@@ -233,33 +233,28 @@ def test_connected_components_min_label(spark):
 
 
 def test_shingled_matches_declarative_form(spark):
-    """_shingled (Arrow/Python fast path) and _word_ngrams (declarative
-    JVM form) must produce identical distinct shingle sets."""
+    """_shingle_set (the Python set every Arrow shingle kernel builds)
+    and _word_ngrams (declarative JVM form) must produce identical
+    distinct shingle sets."""
     from almost_any_file_to_pandas_spark.operators.dedup import (
-        _shingled,
+        _shingle_set,
         _word_ngrams,
     )
 
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e"),
-            (2, "x y"),  # shorter than n=3 → dropped / empty
-            (3, "p p p p"),  # repeated tokens → duplicate shingles collapse
-            (4, "one  two three"),  # double space → empty token preserved
-        ],
-        "doc_id long, text string",
-    )
-    fast = {
-        r["doc_id"]: sorted(r["toks"])
-        for r in _shingled(docs, 3).collect()
-    }
+    rows = [
+        (1, "a b c d e"),
+        (2, "x y"),  # shorter than n=3 → empty
+        (3, "p p p p"),  # repeated tokens → duplicate shingles collapse
+        (4, "one  two three"),  # double space → empty token preserved
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    fast = {d: sorted(_shingle_set(text, 3)) for d, text in rows}
     slow = {
         r["doc_id"]: sorted(r["toks"])
         for r in docs.select(
             "doc_id",
             _word_ngrams(F.split(F.col("text"), " ", -1), 3).alias("toks"),
         ).collect()
-        if r["toks"]
     }
     assert fast == slow
 

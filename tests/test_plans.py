@@ -405,6 +405,36 @@ def test_gate_order_covers_families_and_is_oracle_paired():
     assert all(keys.index(n) >= 50 for n in rows_only)
 
 
+def test_only_the_registry_applies_the_engine_conf():
+    """The registry's wrapper is the one place a query applies the
+    engine conf: no other module under the package names
+    ``apply_engine_conf`` (``session.py`` defines it)."""
+    pkg = Path(__file__).resolve().parents[1] / "almost_any_file_to_pandas_spark"
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "apply_engine_conf" in p.read_text(encoding="utf-8")
+    )
+    assert callers == ["plans/__init__.py", "session.py"]
+
+
+def test_every_query_runs_under_the_engine_conf(spark):
+    """Every registered query is the registry's wrapper, and building
+    one whose body never applies the conf itself still resets a
+    session time zone the caller changed."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    assert all(hasattr(fn, "__wrapped__") for fn in queries.values())
+    key = "spark.sql.session.timeZone"
+    spark.conf.set(key, "America/New_York")
+    try:
+        queries["events_session_stats"](spark, SF_DIR)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, "UTC")
+
+
 def test_oracle_output_types_are_hash_stable(spark):
     """Every oracle's output columns keep to check_oracle's type
     contract — a bare integer SUM yields HUGEINT, which the Arrow and

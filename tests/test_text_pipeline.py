@@ -17,6 +17,8 @@ from almost_any_file_to_pandas_spark.sources.text import (
     cells_expr,
     pad_cells,
     positional_names,
+    read_delimited,
+    read_delimited_many,
     strip_quote_runs,
 )
 
@@ -60,7 +62,28 @@ def test_max_columns_prefix_vs_distributed(spark, tmp_path):
     p = tmp_path / "w.txt"
     p.write_text("a\tb\na\tb\tc\td\na\n")
     assert sniff.max_columns_in_prefix(p, "\t") == 4
-    assert sniff.max_columns_distributed(spark, p, "\t") == 4
+
+
+def test_wide_row_past_the_prefix_keeps_its_cells(spark, tmp_path):
+    # 1.2 MB of 2-column lines, then one 3-column line past the 1 MiB
+    # sniffing prefix: the width comes from every line, not the prefix.
+    p = tmp_path / "long.tsv"
+    p.write_text("a\tb\n" * 300_000 + "x\ty\tz\n")
+    assert p.stat().st_size > sniff.DEFAULT_PREFIX_BYTES
+    df = read_delimited(spark, p).data
+    assert df.columns == ["c0", "c1", "c2"]
+    assert df.filter("c0 = 'x'").collect() == [("x", "y", "z")]
+
+
+def test_many_files_width_covers_every_file(spark, tmp_path):
+    # The first file is 2 columns wide, the second 3: the 3rd cell of
+    # the second file must survive the shared schema.
+    (tmp_path / "m_1.tsv").write_text("a\tb\nc\td\n")
+    (tmp_path / "m_2.tsv").write_text("p\tq\tr\n")
+    df = read_delimited_many(spark, str(tmp_path / "m_*.tsv")).data
+    assert df.columns == ["c0", "c1", "c2", "source_file"]
+    got = sorted(tuple(r)[:3] for r in df.collect())
+    assert got == [("a", "b", ""), ("c", "d", ""), ("p", "q", "r")]
 
 
 # ---------------------------------------------------------------------------
