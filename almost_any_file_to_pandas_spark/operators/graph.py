@@ -459,12 +459,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     community assignments, not just sizes.
 
     Plan/scale: the edge build is the shared capped-bucket machinery
-    (one shuffle, skew-capped hours). Each round is ONE shuffled join
-    on the symmetric edge list + a (node, label) census + a per-node
-    top-1 window — the Pregel message-pass compiled to DataFrame ops.
-    Labels localCheckpoint per round: constant-depth lineage, and the
-    next round's join starts from materialized (node, label) pairs —
-    the iterative-algorithm discipline PageRank set (graph.py).
+    (one shuffle, skew-capped hours). Round 1 is one ``min`` aggregate
+    over the symmetric edge list (identity labels make the smallest
+    neighbour the pick); each later round is ONE shuffled join on the
+    edge list + one per-node deterministic ``mode`` aggregate — the
+    Pregel message-pass compiled to DataFrame ops. The rounds chain in
+    one plan; only the final labels are checkpointed.
     """
     _, labels = _lpa_label_frames(spark, sf_dir)
     return labels.groupBy(F.col("lab").alias("community")).agg(
@@ -479,33 +479,31 @@ def _lpa_label_frames(spark: SparkSession, sf_dir: str):
     census query)."""
     _, _, edges = _coactivity_edges(spark, sf_dir)
     sym = _symmetric(edges).localCheckpoint(eager=True)
-    labels = sym.select("u").distinct().select(
-        "u", F.col("u").alias("lab")
-    )
-    for _ in range(LPA_ITERS):
-        census = (
+    # Round 1 starts from identity labels, and sym holds each (u, v)
+    # pair once, so every neighbour label counts 1 and the (count
+    # DESC, label ASC) pick is the smallest neighbour.
+    labels = sym.groupBy("u").agg(F.min("v").alias("lab"))
+    for _ in range(LPA_ITERS - 1):
+        # One aggregate per round: deterministic mode is the most
+        # frequent neighbour label, the smallest on ties — the row the
+        # oracle's row_number window picks. sym holds both directions
+        # of every edge, so every labelled node appears as ``u`` and
+        # the rule's isolated-node carry-over can never fire.
+        labels = (
             sym.join(
                 labels.select(
                     F.col("u").alias("v"), F.col("lab").alias("nlab")
                 ),
                 "v",
             )
-            .groupBy("u", F.col("nlab").alias("lab"))
-            .agg(F.count("*").alias("c"))
-        )
-        # argmax by (count DESC, label ASC) as ONE aggregate: max_by
-        # over the struct (c, -lab) picks the row the oracle's
-        # row_number window picks, without a per-round partition sort.
-        # sym holds both directions of every edge, so every labelled
-        # node appears as ``u`` in the census and the rule's isolated-
-        # node carry-over can never fire.
-        labels = census.groupBy("u").agg(
-            F.expr("max_by(lab, struct(c, -lab))").alias("lab")
+            .groupBy("u")
+            .agg(F.mode("nlab", deterministic=True).alias("lab"))
         )
     # The rounds chain inside one plan (each intermediate labels frame
     # has one consumer, the next round). Only the final labels are
     # materialized: the modularity consumer reads them from four
-    # places in one job.
+    # places in one job. Dropping this checkpoint, or all three
+    # eager ones on this path, measured slower (ROADMAP item 2).
     return sym, labels.localCheckpoint(eager=True)
 
 

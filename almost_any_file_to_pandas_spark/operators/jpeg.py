@@ -31,13 +31,20 @@ from __future__ import annotations
 
 import math
 import struct
+import sys
 from typing import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table
+
+# The Arrow kernels call this module's decoder helpers: ship them to
+# the Python workers by value, so a worker never has to import the
+# package (its path is on the driver's sys.path only).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # Zigzag order (T.81 Figure 5): index = zigzag position, value = raster
 ZIGZAG = [

@@ -32,14 +32,21 @@ load-bearing at scale:
 
 from __future__ import annotations
 
+import sys
 from typing import Iterator
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+
+# The Arrow kernels call this module's decoder helpers: ship them to
+# the Python workers by value, so a worker never has to import the
+# package (its path is on the driver's sys.path only).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 CHECKSUM_MOD = 997
 FRAME_STEP = 10

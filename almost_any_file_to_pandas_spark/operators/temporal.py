@@ -26,6 +26,8 @@ from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
     SESSION_GAP_MINUTES,
+    micro_units,
+    micro_units_sql,
     register,
     table,
     table_wide,
@@ -1743,11 +1745,11 @@ def orders_theilsen_trend_by_segment(
 
 @register(
     "events_time_weighted_value",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-             CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS v_micro
+             {micro_units_sql("value")} AS v_micro
       FROM events
     ), stepped AS (
       SELECT user_id, v_micro,
@@ -1790,9 +1792,7 @@ def events_time_weighted_value(
     ev = table(spark, sf_dir, "events")
     stepped = ev.select(
         "user_id",
-        F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias(
-            "v_micro"
-        ),
+        micro_units(F.col("value")).alias("v_micro"),
         (
             F.lead(F.unix_micros("ts")).over(
                 W.partitionBy("user_id").orderBy(

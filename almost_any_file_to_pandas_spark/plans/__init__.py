@@ -19,9 +19,11 @@ Query bodies never apply it themselves.
 from __future__ import annotations
 
 import functools
+from decimal import Decimal
 from typing import Callable, Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
@@ -35,6 +37,70 @@ SESSION_GAP_MINUTES = 30
 
 QUERIES: Dict[str, QueryFn] = {}
 ORACLES: Dict[str, str] = {}
+
+
+# Exact sums of doubles, bit-identical in Spark and DuckDB. Each row
+# becomes a BIGINT count of micro-units (millionths), FLOOR(x·1e6 +
+# 0.5): the same IEEE product and add on both engines, then an integer.
+# A per-row DECIMAL(25,6) cast instead costs a Double.toString and a
+# BigDecimal per value in Spark, and rounds an exact 6-decimal tie
+# differently on the two engines (Spark HALF_UP on the shortest repr,
+# DuckDB on the binary value). Each group's micro-units
+# add exactly in DECIMAL (a BIGINT sum would overflow near TPC-H
+# sf 100) and scale to a double once.
+#
+# Domain: a row must satisfy |x| < 9.2e12 (2^63 micro-units). Outside
+# it, and on NaN or ±inf, the BIGINT cast raises (CAST_OVERFLOW under
+# Spark's ANSI mode, the default; a conversion error in DuckDB) rather
+# than return a wrong sum. Spark's floor(double) is not used because it
+# saturates silently under ANSI: floor(1e20d) is 2^63 - 1 and
+# floor(NaN) is 0.
+
+
+def micro_units(col: Column) -> Column:
+    """``FLOOR(col·1e6 + 0.5)`` as BIGINT: ``t − (v < t)`` with
+    ``v = col·1e6 + 0.5`` and ``t = CAST(v AS BIGINT)`` (the cast
+    truncates toward zero). Raises for |col| ≥ 9.2e12, NaN or ±inf."""
+    v = col * F.lit(1_000_000.0) + F.lit(0.5)
+    t = v.cast("bigint")
+    return t - (v < t).cast("bigint")
+
+
+def micro_sum(col: Column) -> Column:
+    """Exact per-group sum of :func:`micro_units` as a DECIMAL; partial
+    sums of it re-aggregate losslessly with ``F.sum``."""
+    return F.sum(micro_units(col).cast("decimal(20,0)"))
+
+
+def from_micro(s: Column) -> Column:
+    """A (summed) micro-unit DECIMAL back to a double, scaled once."""
+    return (s * F.lit(Decimal("0.000001"))).cast("double")
+
+
+def exact_sum(col: Column) -> Column:
+    """``from_micro(micro_sum(col))``: the exact sum of a double
+    column, rounded to a double once."""
+    return from_micro(micro_sum(col))
+
+
+def micro_units_sql(expr: str) -> str:
+    """DuckDB twin of :func:`micro_units`."""
+    return f"CAST(FLOOR(({expr}) * 1000000 + 0.5) AS BIGINT)"
+
+
+def micro_sum_sql(expr: str) -> str:
+    """DuckDB twin of :func:`micro_sum`."""
+    return f"SUM(CAST({micro_units_sql(expr)} AS DECIMAL(20,0)))"
+
+
+def from_micro_sql(expr: str) -> str:
+    """DuckDB twin of :func:`from_micro`."""
+    return f"CAST(({expr}) * 0.000001 AS DOUBLE)"
+
+
+def exact_sum_sql(expr: str) -> str:
+    """DuckDB twin of :func:`exact_sum`."""
+    return from_micro_sql(micro_sum_sql(expr))
 
 
 def register(name: str, oracle: Optional[str] = None):
@@ -340,8 +406,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     64-bit; a double division would lose precision at 1e18 magnitudes)
     matching DuckDB's nanos→micros truncation.
     """
-    from pyspark.sql import functions as F
-
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     ts_type = dict(df.dtypes).get("ts")
     if name == "events" and ts_type == "bigint":

@@ -6,10 +6,17 @@ aggregations, windows, sorts, and set ops, each paired with a DuckDB
 oracle.
 
 Determinism across engines: double-typed SUM/AVG accumulate in an
-order Spark does not guarantee, so every money/quantity aggregate
-casts to an exact DECIMAL first (bit-for-bit identical in Spark and
-DuckDB), then casts the final value back to DOUBLE. Division happens
-in double on both sides.
+order Spark does not guarantee, so every money/quantity sum that ends
+as a double goes through the shared exact-sum recipe
+(:func:`~almost_any_file_to_pandas_spark.plans.exact_sum` and its
+DuckDB twin ``exact_sum_sql``): each row becomes a BIGINT count of
+micro-units, ``FLOOR(x·1e6 + 0.5)``, the group adds them exactly in
+DECIMAL and scales the sum to a DOUBLE once. That is bit-identical in
+Spark and DuckDB, costs no per-row BigDecimal, and holds for
+|x| < 9.2e12 per row (outside it the query raises). Division happens
+in double on both sides. The sites that keep computing on the decimal
+sum (q18's HAVING, the ×100 cent floors, q8's ratio, the running
+windows) still cast each row to DECIMAL(25,6).
 
 Scale notes (100 TB mindset): dimension joins (region/nation/customer
 /supplier/part) are explicitly broadcast — at production scale these
@@ -26,29 +33,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from almost_any_file_to_pandas_spark.plans import register, table
-
-
-def _dec_sum(col, alias, scale="(25,6)"):
-    """Exact decimal accumulation → double result (engine-portable)."""
-    return F.sum(col.cast(f"decimal{scale}")).cast("double").alias(alias)
+from almost_any_file_to_pandas_spark.plans import (
+    exact_sum,
+    exact_sum_sql,
+    from_micro,
+    micro_sum,
+    register,
+    table,
+)
 
 
 @register(
     "q1_pricing_summary",
-    oracle="""
+    oracle=f"""
     SELECT
       l_returnflag,
       l_linestatus,
-      CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE)        AS sum_qty,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) AS DOUBLE)   AS sum_base_price,
-      CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,6))) AS DOUBLE)
-                                                                    AS sum_disc_price,
-      CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(25,6))) AS DOUBLE)
-                                                                    AS sum_charge,
-      CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*)      AS avg_qty,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*) AS avg_price,
-      CAST(SUM(CAST(l_discount AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*)      AS avg_disc,
+      {exact_sum_sql("l_quantity")} AS sum_qty,
+      {exact_sum_sql("l_extendedprice")} AS sum_base_price,
+      {exact_sum_sql("l_extendedprice * (1 - l_discount)")}
+        AS sum_disc_price,
+      {exact_sum_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")}
+        AS sum_charge,
+      {exact_sum_sql("l_quantity")} / COUNT(*) AS avg_qty,
+      {exact_sum_sql("l_extendedprice")} / COUNT(*) AS avg_price,
+      {exact_sum_sql("l_discount")} / COUNT(*) AS avg_disc,
       COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -62,6 +71,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-by with map-side partial aggregation; no join. At 100 TB the
     plan is scan → partial agg → one shuffle on (returnflag,
     linestatus) → final agg: the minimum possible data movement.
+
+    Every sum and average is an exact micro-unit sum
+    (:func:`~almost_any_file_to_pandas_spark.plans.exact_sum`): one
+    BIGINT per row, no per-row BigDecimal. The averages divide that
+    double by the row count.
     """
     li = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -70,13 +84,15 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dec_sum(F.col("l_quantity"), "sum_qty"),
-            _dec_sum(F.col("l_extendedprice"), "sum_base_price"),
-            _dec_sum(disc_price, "sum_disc_price"),
-            _dec_sum(charge, "sum_charge"),
-            (F.sum(F.col("l_quantity").cast("decimal(25,6)")).cast("double") / F.count("*")).alias("avg_qty"),
-            (F.sum(F.col("l_extendedprice").cast("decimal(25,6)")).cast("double") / F.count("*")).alias("avg_price"),
-            (F.sum(F.col("l_discount").cast("decimal(25,6)")).cast("double") / F.count("*")).alias("avg_disc"),
+            exact_sum(F.col("l_quantity")).alias("sum_qty"),
+            exact_sum(F.col("l_extendedprice")).alias("sum_base_price"),
+            exact_sum(disc_price).alias("sum_disc_price"),
+            exact_sum(charge).alias("sum_charge"),
+            (exact_sum(F.col("l_quantity")) / F.count("*")).alias("avg_qty"),
+            (exact_sum(F.col("l_extendedprice")) / F.count("*")).alias(
+                "avg_price"
+            ),
+            (exact_sum(F.col("l_discount")) / F.count("*")).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
     )
@@ -84,10 +100,10 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
-    oracle="""
+    oracle=f"""
     SELECT
       l.l_orderkey AS o_orderkey,
-      CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(25,6))) AS DOUBLE)
+      {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)")}
         AS revenue,
       CAST(o.o_orderdate AS VARCHAR) AS o_orderdate
     FROM customer c
@@ -129,7 +145,11 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.l_orderkey == F.col("o_orderkey"),
         )
         .groupBy(li.l_orderkey.alias("o_orderkey"), F.col("o_orderdate"))
-        .agg(_dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(
+            exact_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
+        )
         .select(
             "o_orderkey",
             "revenue",
@@ -142,10 +162,10 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_region_revenue",
-    oracle="""
+    oracle=f"""
     SELECT
       n.n_name,
-      CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(25,6))) AS DOUBLE)
+      {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)")}
         AS revenue
     FROM region r
     JOIN nation n   ON n.n_regionkey = r.r_regionkey
@@ -190,18 +210,22 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(ord_dim, li.l_orderkey == ord_dim.o_orderkey)
         .groupBy("n_name")
-        .agg(_dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(
+            exact_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
+        )
     )
 
 
 @register(
     "monthly_revenue_rollup",
-    oracle="""
+    oracle=f"""
     SELECT
       year(o_orderdate)  AS o_year,
       month(o_orderdate) AS o_month,
       COUNT(*) AS n_orders,
-      CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
+      {exact_sum_sql("o_totalprice")} AS total_price
     FROM orders
     GROUP BY 1, 2
     """,
@@ -216,17 +240,17 @@ def monthly_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_orders"),
-            _dec_sum(F.col("o_totalprice"), "total_price"),
+            exact_sum(F.col("o_totalprice")).alias("total_price"),
         )
     )
 
 
 @register(
     "top_customers_per_segment",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
       SELECT c.c_mktsegment, c.c_custkey, c.c_name,
-             CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_spend
+             {exact_sum_sql("o.o_totalprice")} AS total_spend
       FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
       GROUP BY 1, 2, 3
     ), ranked AS (
@@ -250,7 +274,7 @@ def top_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("c_mktsegment", "c_custkey", "c_name")
-        .agg(_dec_sum(F.col("o_totalprice"), "total_spend"))
+        .agg(exact_sum(F.col("o_totalprice")).alias("total_spend"))
     )
     w = W.partitionBy("c_mktsegment").orderBy(
         F.desc("total_spend"), F.asc("c_custkey")
@@ -263,11 +287,11 @@ def top_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "supplier_part_volume",
-    oracle="""
+    oracle=f"""
     SELECT
       s.s_name,
       p.p_brand,
-      CAST(SUM(CAST(l.l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS total_qty,
+      {exact_sum_sql("l.l_quantity")} AS total_qty,
       COUNT(DISTINCT l.l_orderkey) AS n_orders
     FROM lineitem l
     JOIN supplier s ON s.s_suppkey = l.l_suppkey
@@ -286,7 +310,7 @@ def supplier_part_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("s_name", "p_brand")
         .agg(
-            _dec_sum(F.col("l_quantity"), "total_qty"),
+            exact_sum(F.col("l_quantity")).alias("total_qty"),
             F.countDistinct("l_orderkey").alias("n_orders"),
         )
     )
@@ -314,12 +338,12 @@ def orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "revenue_cube",
-    oracle="""
+    oracle=f"""
     SELECT
       year(o_orderdate) AS o_year,
       o_orderstatus,
       COUNT(*) AS n_orders,
-      CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
+      {exact_sum_sql("o_totalprice")} AS total_price
     FROM orders
     GROUP BY CUBE (year(o_orderdate), o_orderstatus)
     -- observed-groups semantics: Spark's CUBE over an EMPTY scan
@@ -338,7 +362,7 @@ def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.cube(F.year("o_orderdate").alias("o_year"), "o_orderstatus")
         .agg(
             F.count("*").alias("n_orders"),
-            _dec_sum(F.col("o_totalprice"), "total_price"),
+            exact_sum(F.col("o_totalprice")).alias("total_price"),
         )
     )
 
@@ -488,9 +512,9 @@ N_SALT = 8
 
 @register(
     "events_salted_agg",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
-           CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS total_value,
+           {exact_sum_sql("value")} AS total_value,
            COUNT(*) AS n_events
     FROM events
     GROUP BY event_type
@@ -504,40 +528,39 @@ def events_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Phase 1 groups by (key, salt) with salt = id mod N_SALT, spreading
     each hot key over N_SALT reducers; phase 2 merges the N_SALT
     partials per key — a shuffle of only keys×N_SALT rows. SUM and
-    COUNT re-aggregate losslessly (decimal keeps the double sum
-    order-independent). Same result as the direct groupBy, which is
-    what the oracle states. Spark's own map-side partial aggregation
-    makes explicit salting redundant for *algebraic* aggregates like
-    these; the pattern is load-bearing for holistic ones
-    (collect_list, exact distinct) where partials can't combine —
-    this query pins the mechanics oracle-checked.
+    COUNT re-aggregate losslessly (the partials are exact micro-unit
+    sums, :func:`~almost_any_file_to_pandas_spark.plans.micro_sum`,
+    scaled to a double once after the merge). Same result as the
+    direct groupBy, which is what the oracle states. Spark's own
+    map-side partial aggregation makes explicit salting redundant for
+    *algebraic* aggregates like these; the pattern is load-bearing for
+    holistic ones (collect_list, exact distinct) where partials can't
+    combine — this query pins the mechanics oracle-checked.
     """
     events = table(spark, sf_dir, "events")
     partial = (
         events.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(N_SALT)))
         .groupBy("event_type", "_salt")
         .agg(
-            F.sum(F.col("value").cast("decimal(25,6)")).alias("_sum"),
+            micro_sum(F.col("value")).alias("_sum"),
             F.count("*").alias("_cnt"),
         )
     )
     return partial.groupBy("event_type").agg(
-        F.sum("_sum").cast("double").alias("total_value"),
+        from_micro(F.sum("_sum")).alias("total_value"),
         F.sum("_cnt").alias("n_events"),
     )
 
 
 @register(
     "q17_small_quantity_revenue",
-    oracle="""
+    oracle=f"""
     WITH part_avg AS (
       SELECT l_partkey,
-             0.2 * (CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE)
-                    / COUNT(*)) AS qty_threshold
+             0.2 * ({exact_sum_sql("l_quantity")} / COUNT(*)) AS qty_threshold
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(25,6))) AS DOUBLE) / 7.0
-             AS avg_yearly
+    SELECT {exact_sum_sql("l.l_extendedprice")} / 7.0 AS avg_yearly
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
     JOIN part_avg a ON a.l_partkey = l.l_partkey
@@ -555,32 +578,22 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both the threshold aggregate and the probe shuffle on
     l_partkey — ONE hash partitioning reused across the aggregate and
     the join (no second Exchange of the big side); the brand-filtered
-    part dimension broadcasts. The threshold is computed in decimal so
-    the comparison cut is bit-identical across engines.
+    part dimension broadcasts. The threshold and the revenue are exact
+    micro-unit sums (:func:`~almost_any_file_to_pandas_spark.plans.exact_sum`),
+    so the comparison cut is bit-identical across engines.
     """
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#9")
     part_avg = li.groupBy("l_partkey").agg(
-        (
-            0.2
-            * (
-                F.sum(F.col("l_quantity").cast("decimal(25,6)")).cast("double")
-                / F.count("*")
-            )
-        ).alias("qty_threshold")
+        (0.2 * (exact_sum(F.col("l_quantity")) / F.count("*"))).alias(
+            "qty_threshold"
+        )
     ).withColumnRenamed("l_partkey", "a_partkey")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(part_avg, li.l_partkey == F.col("a_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(25,6)")).cast(
-                    "double"
-                )
-                / 7.0
-            ).alias("avg_yearly")
-        )
+        .agg((exact_sum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly"))
     )
 
 
@@ -637,15 +650,14 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q22_idle_rich_customers",
-    oracle="""
+    oracle=f"""
     WITH avg_bal AS (
-      SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) AS DOUBLE)
-               / COUNT(*) AS v
+      SELECT {exact_sum_sql("c_acctbal")} / COUNT(*) AS v
       FROM customer WHERE c_acctbal > 0
     )
     SELECT c.c_nationkey,
            COUNT(*) AS numcust,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(25,6))) AS DOUBLE) AS totacctbal
+           {exact_sum_sql("c.c_acctbal")} AS totacctbal
     FROM customer c, avg_bal
     WHERE c.c_acctbal > avg_bal.v
       AND NOT EXISTS (
@@ -666,8 +678,9 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_custkey (at scale: shuffle on custkey with AQE skew handling —
     anti joins can't broadcast the fact side, and the orders side only
     needs its join column, which column pruning reduces to one long
-    per row). The balance cut is decimal-computed, identical across
-    engines.
+    per row). The balance cut and the totals are exact micro-unit sums
+    (:func:`~almost_any_file_to_pandas_spark.plans.exact_sum`),
+    identical across engines.
     """
     cust = table(spark, sf_dir, "customer")
     orders = (
@@ -676,10 +689,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey")
     )
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
-        (
-            F.sum(F.col("c_acctbal").cast("decimal(25,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
+        (exact_sum(F.col("c_acctbal")) / F.count("*")).alias("v")
     )
     return (
         cust.crossJoin(F.broadcast(avg_bal))
@@ -688,9 +698,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count("*").alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("totacctbal"),
+            exact_sum(F.col("c_acctbal")).alias("totacctbal"),
         )
     )
 
@@ -1152,11 +1160,10 @@ JOIN_SALT = 8
 
 @register(
     "events_salted_selfjoin",
-    oracle="""
+    oracle=f"""
     SELECT p.user_id,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CAST(p.value + s.value AS DECIMAL(25,6))) AS DOUBLE)
-             AS sum_pair_value
+           {exact_sum_sql("p.value + s.value")} AS sum_pair_value
     FROM events p
     JOIN events s ON p.user_id = s.user_id
     WHERE p.event_type = 'purchase' AND s.event_type = 'signup'
@@ -1180,9 +1187,9 @@ def events_salted_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     query pins its exactly-once pairing algebra against the unsalted
     oracle join.
 
-    The pair-value sum accumulates in decimal so the per-salt partial
-    sums merge order-independently (bit-identical to the oracle's
-    single-group sum).
+    The pair-value sum is an exact micro-unit sum, so the join's
+    partial sums merge order-independently (bit-identical to the
+    oracle's single-group sum).
     """
     ev = table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
@@ -1205,11 +1212,9 @@ def events_salted_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.count("*").cast("bigint").alias("n_pairs"),
-            F.sum(
-                (F.col("p_value") + F.col("s_value")).cast("decimal(25,6)")
-            )
-            .cast("double")
-            .alias("sum_pair_value"),
+            exact_sum(F.col("p_value") + F.col("s_value")).alias(
+                "sum_pair_value"
+            ),
         )
     )
 
@@ -1903,11 +1908,10 @@ def orders_backlog_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_incremental_agg_merge",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS month,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-             AS revenue
+           {exact_sum_sql("o_totalprice")} AS revenue
     FROM orders GROUP BY 1
     """,
 )
@@ -1920,12 +1924,14 @@ def orders_incremental_agg_merge(
     and the oracle recomputes from scratch, proving merge ≡ recompute.
 
     This is the algebra every streaming/batch materialized view
-    relies on: keep (count, decimal-sum) partial state per group; a new
+    relies on: keep (count, micro-unit sum) partial state per group; a new
     batch folds to the same shape; the merge is a union + one
     re-aggregation over GROUP-sized (not fact-sized) frames. The
     deterministic base/delta split (o_orderkey % 10) stands in for
-    yesterday's snapshot + today's arrivals. Decimal sums make the
-    partial state re-aggregatable without float drift — the same
+    yesterday's snapshot + today's arrivals. Exact micro-unit sums
+    (:func:`~almost_any_file_to_pandas_spark.plans.micro_sum`, scaled
+    to a double once after the merge) make the partial state
+    re-aggregatable without float drift — the same
     reason the engine's sketches (HLL, GK, CMS) were chosen
     map-side-mergeable.
     """
@@ -1936,7 +1942,7 @@ def orders_incremental_agg_merge(
             F.date_format("o_orderdate", "yyyy-MM").alias("month")
         ).agg(
             F.count("*").alias("_n"),
-            F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("_s"),
+            micro_sum(F.col("o_totalprice")).alias("_s"),
         )
 
     base = partials(orders.filter(F.col("o_orderkey") % 10 != 0))
@@ -1946,7 +1952,7 @@ def orders_incremental_agg_merge(
         .groupBy("month")
         .agg(
             F.sum("_n").alias("n_orders"),
-            F.sum("_s").cast("double").alias("revenue"),
+            from_micro(F.sum("_s")).alias("revenue"),
         )
     )
 
@@ -2037,9 +2043,8 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q19_disjunctive_revenue",
-    oracle="""
-    SELECT CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(25,6))) AS DOUBLE) AS revenue,
+    oracle=f"""
+    SELECT {exact_sum_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
            COUNT(*) AS n_lines
     FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     WHERE
@@ -2066,7 +2071,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds to lineitem); the small filtered part side broadcasts, so
     at 100 TB the fact table never shuffles for the join.
 
-    Revenue sums in decimal per the q1 contract.
+    Revenue is an exact micro-unit sum per the q1 contract.
     """
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part")
@@ -2086,16 +2091,14 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return j.filter(cond).agg(
-        F.sum(disc_price.cast("decimal(25,6)"))
-        .cast("double")
-        .alias("revenue"),
+        exact_sum(disc_price).alias("revenue"),
         F.count("*").alias("n_lines"),
     )
 
 
 @register(
     "lineitem_scd2_point_in_time",
-    oracle="""
+    oracle=f"""
     WITH dim AS (
       SELECT o_custkey, o_orderstatus,
              o_orderdate AS valid_from,
@@ -2109,8 +2112,8 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.o_orderstatus AS status_at_ship,
            COUNT(*) AS n_lines,
-           CAST(SUM(CAST(f.l_extendedprice * (1 - f.l_discount)
-                         AS DECIMAL(25,6))) AS DOUBLE) AS revenue
+           {exact_sum_sql("f.l_extendedprice * (1 - f.l_discount)")}
+             AS revenue
     FROM fact f JOIN dim d
       ON d.o_custkey = f.o_custkey
      AND f.l_shipdate >= d.valid_from
@@ -2163,9 +2166,7 @@ def lineitem_scd2_point_in_time(
         F.col("o_orderstatus").alias("status_at_ship")
     ).agg(
         F.count("*").alias("n_lines"),
-        F.sum(disc_price.cast("decimal(25,6)"))
-        .cast("double")
-        .alias("revenue"),
+        exact_sum(disc_price).alias("revenue"),
     )
 
 
@@ -2947,12 +2948,12 @@ def customer_reorder_gap_by_segment(
 
 @register(
     "q7_volume_shipping",
-    oracle="""
+    oracle=f"""
     SELECT n1.n_name AS supp_nation,
            n2.n_name AS cust_nation,
            CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS l_year,
-           CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                         AS DECIMAL(25,6))) AS DOUBLE) AS revenue
+           {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)")}
+             AS revenue
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
@@ -3012,9 +3013,9 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("bigint").alias("l_year"),
         )
         .agg(
-            _dec_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"
-            )
+            exact_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
         )
     )
 
@@ -3111,14 +3112,18 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_Q9_PROFIT = (
+    "l.l_extendedprice * (1 - l.l_discount)"
+    " - p.p_retailprice * l.l_quantity * 0.1"
+)
+
+
 @register(
     "q9_product_profit",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
-           CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                         - p.p_retailprice * l.l_quantity * 0.1
-                         AS DECIMAL(25,6))) AS DOUBLE) AS sum_profit
+           {exact_sum_sql(_Q9_PROFIT)} AS sum_profit
     FROM lineitem l
     JOIN part p     ON p.p_partkey = l.l_partkey
                    AND p.p_name LIKE '%red%'
@@ -3138,7 +3143,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: part (name-filtered), supplier, and nation broadcast;
     orders⋈lineitem is the one big shuffle.  The per-row profit
     expression is pure double IEEE arithmetic (identical across
-    engines) cast to exact DECIMAL before the sum.
+    engines), summed exactly as micro-units
+    (:func:`~almost_any_file_to_pandas_spark.plans.exact_sum`).
     """
     li = table(spark, sf_dir, "lineitem")
     part = (
@@ -3165,7 +3171,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "nation", F.year("o_orderdate").cast("bigint").alias("o_year")
         )
-        .agg(_dec_sum(profit, "sum_profit"))
+        .agg(exact_sum(profit).alias("sum_profit"))
     )
 
 

@@ -15,16 +15,26 @@ shuffle on user_id, windows sorted within partition.
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
     SESSION_GAP_MINUTES,
+    micro_units,
+    micro_units_sql,
     register,
     table,
     table_wide,
 )
+
+# The pandas and Arrow kernels below reference this module's helpers:
+# ship them to the Python workers by value, so a worker never has to
+# import the package (its path is on the driver's sys.path only).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 WINDOW_MINUTES = 5
 
@@ -125,15 +135,10 @@ SESSIONIZATION_ORACLE = f"""
     SELECT user_id, session_id,
            COUNT(*) AS n_events,
            epoch_us(CAST(MIN(ts) AS TIMESTAMP)) AS session_start_us,
-           -- per-row FLOOR(value*1e6 + 0.5) BIGINT, THEN an integer
-           -- sum (round-7 hardening): FLOOR over the identical IEEE
-           -- double product is bit-identical across engines, unlike
-           -- the double->DECIMAL(25,6) cast, where Spark rounds the
-           -- SHORTEST decimal repr and DuckDB the exact binary
-           -- expansion (they split on exact 6dp ties — the
-           -- characterized r5 divergence, test_adversarial_inputs.py).
-           -- Value-identical to the decimal recipe on all 2dp data.
-           CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
+           -- per-row micro-units FLOOR(value*1e6 + 0.5) as BIGINT, THEN
+           -- an integer sum: the shared exact-sum recipe
+           -- (plans.micro_units), bit-identical across engines
+           CAST(SUM({micro_units_sql("value")}) AS BIGINT)
              AS total_value_q6
     FROM sessions
     GROUP BY user_id, session_id
@@ -154,13 +159,13 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates to 6). ``CAST(ts AS TIMESTAMP)`` in the oracle truncates
     DuckDB's TIMESTAMP_NS to micros exactly as Spark's ``DIV 1000``
     nanos branch does (plans/__init__.py table()). ``total_value_q6``
-    quantizes each row to an integer (``FLOOR(value*1e6 + 0.5)``)
-    BEFORE the sum — pure IEEE ×/+ then FLOOR, bit-identical across
-    engines on ANY double, closing the decimal-cast shortest-repr tie
-    divergence characterized in round 5 (value-identical to the old
-    decimal recipe on the driver generator's 2dp data; the integer
-    sum is also order-independent) — no double ever reaches the
-    hash."""
+    is the integer sum of each row's micro-units, ``FLOOR(value·1e6 +
+    0.5)`` as BIGINT — the shared exact-sum recipe
+    (:func:`~almost_any_file_to_pandas_spark.plans.micro_units`): pure
+    IEEE ×/+ then an integer, bit-identical across engines on any
+    double with |value| < 9.2e12, and the query raises on a value
+    outside that domain or on NaN, as the oracle does. The integer
+    sum is order-independent, and no double ever reaches the hash."""
     ev = table(spark, sf_dir, "events")
     order = W.partitionBy("user_id").orderBy("ts", "event_id")
     # microsecond precision to match the oracle's INTERVAL comparison
@@ -184,13 +189,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessions.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         F.unix_micros(F.min("ts")).alias("session_start_us"),
-        F.sum(
-            F.floor(F.col("value") * F.lit(1_000_000.0) + F.lit(0.5)).cast(
-                "long"
-            )
-        )
-        .cast("long")
-        .alias("total_value_q6"),
+        F.sum(micro_units(F.col("value"))).alias("total_value_q6"),
     )
 
 
@@ -805,14 +804,10 @@ def events_sessionization_incremental(
             F.count("*").alias("n"),
             F.unix_micros(F.min("ts")).alias("first_us"),
             F.unix_micros(F.max("ts")).alias("last_us"),
-            # same per-row q6 quantization as the direct form: integer
+            # same per-row micro-units as the direct form: integer
             # partials reassociate losslessly across the day/boundary
-            # merge (the decimal recipe's hardened round-7 replacement)
-            F.sum(
-                F.floor(
-                    F.col("value") * F.lit(1_000_000.0) + F.lit(0.5)
-                ).cast("long")
-            ).alias("val_q6"),
+            # merge
+            F.sum(micro_units(F.col("value"))).alias("val_q6"),
         )
     )
     # level 2: the same gap rule over session rows only
@@ -1550,8 +1545,8 @@ def events_windowed_topk_stream(
     SELECT user_id,
            epoch_us(CAST(MIN(ts) AS TIMESTAMP)) AS session_start_us,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT))
-                AS BIGINT) AS total_value_q6
+           CAST(SUM({micro_units_sql("value")}) AS BIGINT)
+             AS total_value_q6
     FROM sessions
     GROUP BY user_id, session_id
     """,
@@ -1575,8 +1570,8 @@ def events_session_window_native(
     window at all — session merging happens inside the aggregation
     operator, which is also what makes this form STREAMING-READY
     (the stateful sessionizer row uses the same operator under
-    ``withWatermark``). Values use the round-7 hardened per-row
-    FLOOR(value·1e6+0.5) BIGINT sum.
+    ``withWatermark``). Values use the shared per-row micro-unit
+    BIGINT sum (:func:`~almost_any_file_to_pandas_spark.plans.micro_units`).
     """
     ev = table(spark, sf_dir, "events")
     return (
@@ -1586,11 +1581,7 @@ def events_session_window_native(
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(
-                F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast(
-                    "long"
-                )
-            ).alias("total_value_q6"),
+            F.sum(micro_units(F.col("value"))).alias("total_value_q6"),
             F.min("ts").alias("first_ts"),
         )
         .select(

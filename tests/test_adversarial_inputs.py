@@ -12,8 +12,9 @@ exercises that the clean synthetic testdata never does:
 - **empty tables**: zero-row inputs through one representative of
   each family — the contract is no exception and engine/oracle
   agreement on the (often NULL-bearing) aggregate row;
-- **residues**: ``value`` doubles on decimal(25,6) rounding ties
-  through the sessionizer, hostile whitespace through the
+- **residues**: doubles on decimal(25,6) rounding ties through the
+  sessionizer and q1, values outside the exact-sum domain (1e13,
+  NaN), hostile whitespace through the
   ``_occurrences`` stopword scan, cumulative token sums landing
   exactly on the budget line, and a corrupt embedding corpus through
   the hygiene report;
@@ -464,6 +465,76 @@ def test_sessionization_shortest_repr_tie_now_hardened(
     before any rounding, so the input hash-matches."""
     sf = _events_dir(spark, tmp_path, [123456789.0000005, 185.22])
     gate_compare(sf, "events_sessionization")
+
+
+@pytest.mark.parametrize("bad", [1e13, float("nan")], ids=["1e13", "nan"])
+def test_sessionization_raises_outside_the_micro_unit_domain(
+    spark, tmp_path, bad
+):
+    """A value of 1e13 is 1e19 micro-units, past 2^63, and NaN has
+    none: the per-row BIGINT cast raises on both engines instead of
+    summing to 2^63 - 1 or 0 (what Spark's ``floor(double)`` returns
+    under ANSI)."""
+    import duckdb
+
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    sf = _events_dir(spark, tmp_path, [bad, 185.22])
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        plans.QUERIES["events_sessionization"](spark, sf).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM"
+        f" read_parquet('{sf}/events.parquet/*.parquet')"
+    )
+    with pytest.raises(duckdb.ConversionException):
+        con.execute(plans.ORACLES["events_sessionization"]).fetchall()
+
+
+def _lineitem_dir(spark, tmp_path, values):
+    """A lineitem corpus holding the q1 columns, with ``values`` as
+    both quantity and price (no discount, no tax) in one group."""
+    ship = datetime.datetime(1998, 1, 1)
+    rows = [
+        ("N", "O", v, v, 0.0, 0.0, ship) for v in values
+    ] + [("A", "F", 17.0, 185.22, 0.05, 0.08, ship)]
+    spark.createDataFrame(
+        rows,
+        "l_returnflag string, l_linestatus string, l_quantity double,"
+        " l_extendedprice double, l_discount double, l_tax double,"
+        " l_shipdate timestamp",
+    ).coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    return str(tmp_path)
+
+
+def test_q1_shortest_repr_tie_matches_oracle(spark, gate_compare, tmp_path):
+    """The tie from the sessionization test, through q1's money sums:
+    a per-row DECIMAL(25,6) cast gives …000001 in Spark and …000000 in
+    DuckDB; the shared micro-unit sum gives …000001 on both."""
+    from almost_any_file_to_pandas_spark import plans
+
+    sf = _lineitem_dir(spark, tmp_path, [123456789.0000005, 185.22])
+    gate_compare(sf, "q1_pricing_summary")
+    row = (
+        plans.QUERIES["q1_pricing_summary"](spark, sf)
+        .filter("l_returnflag = 'N'")
+        .first()
+    )
+    assert row["sum_base_price"] == 123456974.220001
+
+
+def test_q1_raises_outside_the_micro_unit_domain(spark, tmp_path):
+    """A lineitem row of 1e13 is past the exact-sum domain
+    (|x| < 9.2e12): q1 raises rather than return a sum."""
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    sf = _lineitem_dir(spark, tmp_path, [1e13])
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        plans.QUERIES["q1_pricing_summary"](spark, sf).collect()
 
 
 @pytest.fixture()

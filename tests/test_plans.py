@@ -1604,3 +1604,73 @@ def test_coactivity_query_matches_oracle(
         else request.getfixturevalue("edgeless_events_dir")
     )
     gate_compare(sf, name)
+
+
+# The sum-to-double sites on the shared micro-unit exact sum.
+EXACT_SUM_QUERIES = (
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_region_revenue",
+    "monthly_revenue_rollup",
+    "top_customers_per_segment",
+    "supplier_part_volume",
+    "revenue_cube",
+    "events_salted_agg",
+    "q17_small_quantity_revenue",
+    "q22_idle_rich_customers",
+    "events_salted_selfjoin",
+    "orders_incremental_agg_merge",
+    "q19_disjunctive_revenue",
+    "lineitem_scd2_point_in_time",
+    "q7_volume_shipping",
+    "q9_product_profit",
+)
+
+
+@pytest.mark.parametrize("name", EXACT_SUM_QUERIES)
+def test_exact_sums_cast_no_row_to_decimal(spark, name):
+    """A per-row DECIMAL(25,6) cast is a Double.toString and a
+    BigDecimal per value; the exact sums cast each row to BIGINT
+    micro-units instead, on both sides of the oracle pair."""
+    from almost_any_file_to_pandas_spark.plans import ORACLES, QUERIES, load_all
+
+    load_all()
+    df = QUERIES[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "decimal(25,6)" not in plan
+    assert "DECIMAL(25,6)" not in ORACLES[name]
+
+
+def test_udf_modules_run_without_the_package_on_the_worker_path(tmp_path):
+    """Python workers import only what is on the JVM's PYTHONPATH or
+    in its working directory. The modules whose UDF closures call
+    their own helpers ship themselves by value, so their queries run
+    from any directory with the repository on the driver's sys.path
+    only."""
+    import os
+    import subprocess
+
+    repo = str(Path(__file__).resolve().parents[1])
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+from almost_any_file_to_pandas_spark import plans
+plans.load_all()
+for name in ("mm_bmp_decode_census", "events_rate_limit_audit"):
+    print(name, len(plans.QUERIES[name](spark, {SF_DIR!r}).collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ModuleNotFoundError" not in proc.stderr
