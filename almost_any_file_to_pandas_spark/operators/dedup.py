@@ -8,8 +8,9 @@ against a DuckDB oracle at test scale:
 - **MinHash + LSH** — shingle → minhash signature → banded bucket
   join for candidates → *exact Jaccard verification*. The verified
   output is hash-function-independent (all pairs with true Jaccard ≥
-  threshold), so the oracle is a brute-force pair scan — feasible at
-  oracle scale, while the Spark path never goes quadratic.
+  threshold), so the oracle scores every pair that shares a shingle
+  exactly (:data:`_SHINGLE_JACCARD_ORACLE`, shared with the n-gram
+  variant), while the Spark path never goes quadratic.
 - **N-gram Jaccard** — same verified-pair contract over word-3-gram
   shingles, candidates from a shared-shingle inverted index
   (explode → self-join on shingle → distinct pair).
@@ -51,7 +52,7 @@ cloudpickle.register_pickle_by_value(sys.modules[__name__])
 # MinHash parameters: 128 hashes in 32 bands × 4 rows. At Jaccard 0.8
 # the per-band collision prob is 0.8^4 ≈ 0.41 → miss prob across 32
 # bands ≈ (1-0.41)^32 ≈ 5e-8: recall ~1, so the verified output equals
-# the brute-force oracle.
+# the exact oracle.
 N_HASHES = 128
 N_BANDS = 32
 ROWS_PER_BAND = N_HASHES // N_BANDS
@@ -257,6 +258,10 @@ def _pairs_within_buckets(
     return pairs.distinct() if distinct else pairs
 
 
+# Document pairs at word-3-shingle Jaccard >= {threshold}, for a
+# threshold > 0: such a pair shares at least one shingle, so only
+# the pairs joined on a shared shingle are scored, not all n² pairs.
+# Two empty shingle sets score 0/0, which is NULL and never passes.
 _SHINGLE_JACCARD_ORACLE = """
     WITH base AS (
       SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -266,13 +271,19 @@ _SHINGLE_JACCARD_ORACLE = """
                range(1, greatest(len(w) - 2, 0) + 1),
                i -> array_to_string(w[i:i+2], ' '))) AS toks
       FROM base
+    ), tok AS (
+      SELECT doc_id, unnest(toks) AS tok FROM t
+    ), cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
     )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+    SELECT c.doc_a, c.doc_b,
            ROUND(len(list_intersect(a.toks, b.toks))::DOUBLE
                  / len(list_distinct(a.toks || b.toks)), 6) AS jaccard
-    FROM t a JOIN t b ON a.doc_id < b.doc_id
-    WHERE len(a.toks) > 0 AND len(b.toks) > 0
-      AND len(list_intersect(a.toks, b.toks))::DOUBLE
+    FROM cand c
+    JOIN t a ON a.doc_id = c.doc_a
+    JOIN t b ON b.doc_id = c.doc_b
+    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
           / len(list_distinct(a.toks || b.toks)) >= {threshold}
 """
 
@@ -321,9 +332,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: linear signature pass → explode 32 band keys →
     shuffle on (band, key) → within-bucket pairs → distinct →
-    re-join shingle arrays → exact Jaccard filter. The oracle is the
-    brute-force O(n²) statement of the same contract (feasible only
-    at oracle scale — the Spark path is the one that survives 100 TB).
+    re-join shingle arrays → exact Jaccard filter. The oracle scores
+    exactly every pair that shares a shingle (a superset of the
+    pairs at Jaccard ≥ 0.8; feasible at oracle scale — the Spark path
+    is the one that survives 100 TB).
     """
     docs = table_wide(spark, sf_dir, "documents")
     # Materialize the candidate set ONCE (it's tiny — LSH output) so
@@ -426,25 +438,6 @@ def _word_ngrams(toks, n: int = 3):
     ).otherwise(F.array().cast("array<string>"))
 
 
-_NGRAM_ORACLE = """
-    WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' '))) AS toks
-      FROM base
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(len(list_intersect(a.toks, b.toks))::DOUBLE
-                 / len(list_distinct(a.toks || b.toks)), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-          / len(list_distinct(a.toks || b.toks)) >= {threshold}
-"""
-
-
 def _prefix_index(
     docs: DataFrame, n: int, threshold: float, k_prefix: int = 2
 ) -> DataFrame:
@@ -506,7 +499,7 @@ def _prefix_index(
 
 @register(
     "dedup_ngram_jaccard",
-    oracle=_NGRAM_ORACLE.format(threshold=NGRAM_THRESHOLD),
+    oracle=_SHINGLE_JACCARD_ORACLE.format(threshold=NGRAM_THRESHOLD),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard near-dup pairs (≥ 0.6) via prefix-filtered
@@ -575,7 +568,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     must collapse to ONE keeper, not two).
 
     Edges are the verified MinHash-LSH pairs (hash-independent, so the
-    oracle restates them brute-force and closes them with a recursive
+    oracle restates them exactly and closes them with a recursive
     CTE). Output: every clustered doc with its cluster id, cluster
     size, and a canonical flag; the retained corpus = canonical rows
     plus all unclustered docs (anti-join on doc_id).

@@ -31,7 +31,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from almost_any_file_to_pandas_spark.plans import register, table
+from almost_any_file_to_pandas_spark.plans import (
+    exact_sum,
+    exact_sum_sql,
+    from_micro,
+    from_micro_sql,
+    micro_cents,
+    micro_cents_sql,
+    micro_sum,
+    micro_sum_sql,
+    micro_units,
+    micro_units_sql,
+    register,
+    table,
+)
 
 HASH_BUCKETS = 1024
 
@@ -164,10 +177,10 @@ TARGET_ENCODE_ALPHA = 20  # smoothing pseudo-count toward the global mean
     "feat_segment_target_encode",
     oracle=f"""
     WITH joined AS (
-      SELECT c.c_mktsegment, CAST(o.o_totalprice AS DECIMAL(25,6)) AS t
+      SELECT c.c_mktsegment, o.o_totalprice AS t
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ), gprior AS (
-      SELECT SUM(CAST(t * 1000000 AS HUGEINT)) AS gsum_u,
+      SELECT CAST({micro_sum_sql("t")} AS HUGEINT) AS gsum_u,
              COUNT(*) AS gn
       FROM joined
     )
@@ -176,7 +189,7 @@ TARGET_ENCODE_ALPHA = 20  # smoothing pseudo-count toward the global mean
     -- every term an exact HUGEINT — no float ever enters the output
     SELECT c_mktsegment,
            COUNT(*) AS n_orders,
-           CAST((SUM(CAST(t * 1000000 AS HUGEINT)) * ANY_VALUE(gn)
+           CAST((CAST({micro_sum_sql("t")} AS HUGEINT) * ANY_VALUE(gn)
                  + {TARGET_ENCODE_ALPHA} * ANY_VALUE(gsum_u))
                 // (ANY_VALUE(gn) * (COUNT(*) + {TARGET_ENCODE_ALPHA}))
                 AS BIGINT) AS target_enc_q6
@@ -192,24 +205,26 @@ def feat_segment_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     thin categories toward the global mean).
 
     Plan: one broadcast-dim join (customer side carries only the
-    segment), decimal-accumulated sums (order-independent → hash
+    segment), exact micro-unit sums (order-independent → hash
     parity), a 1-row global prior broadcast back onto the 5-row
     category aggregate. Two shuffles total, both over partial sums.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    t = F.col("o_totalprice").cast("decimal(25,6)")
     joined = orders.join(
         F.broadcast(cust), orders.o_custkey == cust.c_custkey
-    ).select("c_mktsegment", t.alias("t"))
-    micros = F.expr("CAST(t * 1000000 AS DECIMAL(38,0))")
+    ).select("c_mktsegment", F.col("o_totalprice").alias("t"))
     glob = joined.agg(
-        F.sum(micros).alias("gsum_u"), F.count("*").alias("gn")
+        micro_sum(F.col("t")).alias("gsum_u"), F.count("*").alias("gn")
     )
     per_seg = joined.groupBy("c_mktsegment").agg(
-        F.count("*").alias("n_orders"), F.sum(micros).alias("_sum_u")
+        F.count("*").alias("n_orders"),
+        micro_sum(F.col("t")).alias("_sum_u"),
     )
     return per_seg.crossJoin(F.broadcast(glob)).select(
         "c_mktsegment",
@@ -322,27 +337,28 @@ def feat_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "feat_segment_ols_trend",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
       SELECT c.c_mktsegment,
              date_diff('day', DATE '1992-01-01', o.o_orderdate) AS x,
-             CAST(o.o_totalprice AS DECIMAL(25,6)) AS y
+             CAST({micro_units_sql("o.o_totalprice")} AS DECIMAL(20,0))
+               AS y_u
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ), sums AS (
       SELECT c_mktsegment,
              COUNT(*) AS n,
              SUM(x) AS sx,
              SUM(CAST(x AS BIGINT) * x) AS sxx,
-             SUM(y) AS sy,
-             SUM(y * x) AS sxy
+             {from_micro_sql("SUM(y_u)")} AS sy,
+             {from_micro_sql("SUM(y_u * x)")} AS sxy
       FROM obs GROUP BY c_mktsegment
     )
     SELECT c_mktsegment, n,
-           ROUND((n * CAST(sxy AS DOUBLE) - sx * CAST(sy AS DOUBLE))
+           ROUND((n * sxy - sx * sy)
                  / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx), 6)
              AS slope_per_day,
-           ROUND((CAST(sy AS DOUBLE)
-                  - ((n * CAST(sxy AS DOUBLE) - sx * CAST(sy AS DOUBLE))
+           ROUND((sy
+                  - ((n * sxy - sx * sy)
                      / (n * CAST(sxx AS DOUBLE)
                         - CAST(sx AS DOUBLE) * sx)) * sx) / n, 6)
              AS intercept
@@ -360,35 +376,38 @@ def feat_segment_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal in tests/test_operators.py as the escape hatch for models
     with no sufficient-statistic form.
 
-    Determinism: x is exact integer days, y exact decimal cents —
-    both sums are order-independent, and the doubles are derived from
-    them with the identical expression shape as the oracle.
+    Determinism: x is exact integer days, y exact micro-units
+    (:func:`~almost_any_file_to_pandas_spark.plans.micro_units`) —
+    both sums are order-independent DECIMALs, and the doubles are
+    derived from them with the identical expression shape as the
+    oracle. A row must satisfy |o_totalprice| < 9.2e12 (was 1e19 on
+    the per-row DECIMAL cast); outside it the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     x = F.datediff(F.col("o_orderdate"), F.lit("1992-01-01").cast("date"))
-    y = F.col("o_totalprice").cast("decimal(25,6)")
+    y_u = micro_units(F.col("o_totalprice")).cast("decimal(20,0)")
     obs = orders.join(
         F.broadcast(cust), orders.o_custkey == cust.c_custkey
     ).select(
         "c_mktsegment",
         x.cast("bigint").alias("x"),
-        y.alias("y"),
+        y_u.alias("y_u"),
     )
     sums = obs.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("y") * F.col("x")).alias("sxy"),
+        F.sum("y_u").alias("sy_u"),
+        F.sum(F.col("y_u") * F.col("x")).alias("sxy_u"),
     )
     n = F.col("n")
     sx = F.col("sx").cast("double")
     sxx = F.col("sxx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
+    sy = from_micro(F.col("sy_u"))
+    sxy = from_micro(F.col("sxy_u"))
     slope = (n * sxy - F.col("sx") * sy) / (n * sxx - sx * F.col("sx"))
     return sums.select(
         "c_mktsegment",
@@ -454,8 +473,8 @@ WINSOR_HI = 0.99
            CAST(COALESCE(SUM(CASE WHEN l_extendedprice > hi
                                   THEN 1 ELSE 0 END), 0) AS BIGINT)
              AS n_clipped_high,
-           CAST(SUM(CAST(GREATEST(LEAST(l_extendedprice, hi), lo)
-                         AS DECIMAL(25,6))) AS DOUBLE) AS clipped_sum
+           {exact_sum_sql("GREATEST(LEAST(l_extendedprice, hi), lo)")}
+             AS clipped_sum
     FROM lineitem CROSS JOIN bounds
     """,
 )
@@ -464,7 +483,7 @@ def feat_price_winsorize_census(
 ) -> DataFrame:
     """Winsorization pass for a heavy-tailed numeric feature: exact
     p01/p99 bounds, outliers clipped to them, census row with clip
-    counts and the clipped decimal sum (the audit a pipeline logs
+    counts and the exact clipped sum (the audit a pipeline logs
     before feeding scaled features to training).
 
     Plan: ``F.percentile`` computes both exact interpolated quantiles
@@ -473,6 +492,9 @@ def feat_price_winsorize_census(
     relational queries); the 1-row bounds broadcast onto the scan and
     the clip census folds map-side. Two passes over the column, no
     corpus-wide sort — the win over naive rank-based winsorizing.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     li = table(spark, sf_dir, "lineitem")
     bounds = li.agg(
@@ -495,9 +517,7 @@ def feat_price_winsorize_census(
             F.count_if(F.col("l_extendedprice") > F.col("hi")).alias(
                 "n_clipped_high"
             ),
-            F.sum(clipped.cast("decimal(25,6)"))
-            .cast("double")
-            .alias("clipped_sum"),
+            exact_sum(clipped).alias("clipped_sum"),
         )
     )
 
@@ -696,11 +716,11 @@ _FOLD_SQL = (
     oracle=f"""
     WITH joined AS (
       SELECT c.c_mktsegment AS seg, {_FOLD_SQL} AS fold,
-             CAST(CAST(o.o_totalprice AS DECIMAL(25,6)) * 1000000
-                  AS HUGEINT) AS t_u
+             o.o_totalprice AS t
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ), cells AS (
-      SELECT seg, fold, COUNT(*) AS n_cell, SUM(t_u) AS sum_cell
+      SELECT seg, fold, COUNT(*) AS n_cell,
+             CAST({micro_sum_sql("t")} AS HUGEINT) AS sum_cell
       FROM joined GROUP BY seg, fold
     ), walked AS (
       SELECT seg, fold, n_cell,
@@ -741,6 +761,9 @@ def feat_target_encode_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast dim join + ONE map-side-combinable shuffle
     to the cell grid; windows touch only the grid. Same cost shape as
     the in-fold encoder — leakage-freedom is free at scale.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer").select(
@@ -751,19 +774,15 @@ def feat_target_encode_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         % KFOLDS
     )
-    t_u = F.expr(
-        "CAST(CAST(o_totalprice AS DECIMAL(25,6)) * 1000000"
-        " AS DECIMAL(38,0))"
-    )
     joined = orders.join(
         F.broadcast(cust), orders.o_custkey == cust.c_custkey
     ).select(
         F.col("c_mktsegment").alias("seg"),
         fold.alias("fold"),
-        t_u.alias("t_u"),
+        F.col("o_totalprice").alias("t"),
     )
     cells = joined.groupBy("seg", "fold").agg(
-        F.count("*").alias("n_cell"), F.sum("t_u").alias("sum_cell")
+        F.count("*").alias("n_cell"), micro_sum(F.col("t")).alias("sum_cell")
     )
     by_seg = W.partitionBy("seg")
     by_fold = W.partitionBy("fold")
@@ -804,7 +823,8 @@ RFM_K = 4  # customer segments trained by the deterministic quantizer
 # Lloyd chain inherits the embeddings recipe's determinism. Raw
 # double ratios here (messy dividends like 37/89) surfaced last-ulp
 # ROUND(x,12) divergence in the elbow curve's distance sums.
-_RFM_E_SQL = """SELECT b.vec_id,
+_RFM_SPEND_CENTS_SQL = micro_cents_sql(micro_sum_sql("o_totalprice"))
+_RFM_E_SQL = f"""SELECT b.vec_id,
              [CASE WHEN m.max_r = 0 THEN 0.0
                    ELSE (b.r_days * 1000000 // m.max_r) / 1000000.0 END,
               CASE WHEN m.max_n = 0 THEN 0.0
@@ -817,12 +837,12 @@ _RFM_E_SQL = """SELECT b.vec_id,
         SELECT i.o_custkey AS vec_id,
                date_diff('day', i.last_d, g.gmax) AS r_days,
                i.n_orders,
-               CAST(FLOOR(i.spend * 100 + 0.5) AS BIGINT) AS spend_c
+               i.spend_c
         FROM (
           SELECT o_custkey,
                  MAX(CAST(o_orderdate AS DATE)) AS last_d,
                  COUNT(*) AS n_orders,
-                 SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS spend
+                 {_RFM_SPEND_CENTS_SQL} AS spend_c
           FROM orders GROUP BY o_custkey
         ) i CROSS JOIN (
           SELECT MAX(CAST(o_orderdate AS DATE)) AS gmax FROM orders
@@ -833,11 +853,11 @@ _RFM_E_SQL = """SELECT b.vec_id,
         FROM (
           SELECT date_diff('day', i.last_d, g.gmax) AS r_days,
                  i.n_orders,
-                 CAST(FLOOR(i.spend * 100 + 0.5) AS BIGINT) AS spend_c
+                 i.spend_c
           FROM (
             SELECT o_custkey, MAX(CAST(o_orderdate AS DATE)) AS last_d,
                    COUNT(*) AS n_orders,
-                   SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS spend
+                   {_RFM_SPEND_CENTS_SQL} AS spend_c
             FROM orders GROUP BY o_custkey
           ) i CROSS JOIN (
             SELECT MAX(CAST(o_orderdate AS DATE)) AS gmax FROM orders
@@ -865,8 +885,7 @@ def _rfm_kmeans_oracle() -> str:
     ), raw AS (
       SELECT o_custkey AS vec_id,
              COUNT(*) AS n_orders,
-             CAST(FLOOR(SUM(CAST(o_totalprice AS DECIMAL(25,6))) * 100
-                        + 0.5) AS BIGINT) AS spend_cents
+             {_RFM_SPEND_CENTS_SQL} AS spend_cents
       FROM orders GROUP BY o_custkey
     )
     SELECT CAST(a.cid AS BIGINT) AS segment,
@@ -902,6 +921,9 @@ def customer_rfm_kmeans_segments(
     assignment reuses the same broadcast pattern, and the census is a
     {RFM_K}-row aggregate. q12 contract holds by construction:
     features live in [0, 1].
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
         _argmin_cid,
@@ -912,7 +934,7 @@ def customer_rfm_kmeans_segments(
     inner = orders.groupBy(F.col("o_custkey").alias("vec_id")).agg(
         F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
         F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("spend"),
+        micro_cents(micro_sum(F.col("o_totalprice"))).alias("spend_c"),
     )
     g = orders.agg(
         F.max(F.col("o_orderdate").cast("date")).alias("gmax")
@@ -924,9 +946,7 @@ def customer_rfm_kmeans_segments(
         # (a standard TPC-H span is 2405) — widen BEFORE the scale
         F.datediff("gmax", "last_d").cast("long").alias("r_days"),
         "n_orders",
-        F.floor(F.col("spend") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("spend_c"),
+        "spend_c",
     )
     m = b.agg(
         F.max("r_days").alias("max_r"),
@@ -967,12 +987,7 @@ def customer_rfm_kmeans_segments(
     )
     raw = orders.groupBy(F.col("o_custkey").alias("vec_id")).agg(
         F.count("*").alias("n_orders"),
-        F.floor(
-            F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("spend_cents"),
+        micro_cents(micro_sum(F.col("o_totalprice"))).alias("spend_cents"),
     )
     return (
         assigned.join(raw, "vec_id")
@@ -1044,6 +1059,9 @@ def customer_rfm_kmeans_elbow_curve(
     |ks| bounded trainings, no per-k corpus rescan beyond the
     trainer's fixed passes; at production scale the trainer runs on
     a bounded sample exactly like the IVF quantizer.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
         _sqdist_q12,
@@ -1054,7 +1072,7 @@ def customer_rfm_kmeans_elbow_curve(
     inner = orders.groupBy(F.col("o_custkey").alias("vec_id")).agg(
         F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
         F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("spend"),
+        micro_cents(micro_sum(F.col("o_totalprice"))).alias("spend_c"),
     )
     g = orders.agg(
         F.max(F.col("o_orderdate").cast("date")).alias("gmax")
@@ -1065,9 +1083,7 @@ def customer_rfm_kmeans_elbow_curve(
         # overflow at >= 2148 days recency; see the segments twin)
         F.datediff("gmax", "last_d").cast("long").alias("r_days"),
         "n_orders",
-        F.floor(F.col("spend") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("spend_c"),
+        "spend_c",
     )
     m = b.agg(
         F.max("r_days").alias("max_r"),

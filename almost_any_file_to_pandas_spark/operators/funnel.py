@@ -29,7 +29,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    micro_cents,
+    micro_cents_sql,
+    micro_sum,
+    micro_sum_sql,
+    register,
+    table,
+    table_wide,
+)
 
 FUNNEL_STEPS = ("view", "click", "purchase")
 
@@ -362,8 +370,7 @@ ATTRIB_WINDOW_DAYS = 7  # last-touch lookback
     )
     SELECT touch_type,
            COUNT(*) AS n_purchases,
-           CAST(FLOOR(SUM(CAST(value AS DECIMAL(25,6))) * 100 + 0.5)
-                AS BIGINT) AS value_cents
+           {micro_cents_sql(micro_sum_sql("value"))} AS value_cents
     FROM attributed
     GROUP BY touch_type
     """,
@@ -386,6 +393,9 @@ def events_attribution_last_touch(
     partitioning every per-user operator shares. The oracle's
     row_number form is value-identical because attribution only
     compares events WITHIN a user.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     is_touch = F.col("event_type").isin("view", "click")
@@ -428,12 +438,7 @@ def events_attribution_last_touch(
         .groupBy("touch_type")
         .agg(
             F.count("*").alias("n_purchases"),
-            F.floor(
-                F.sum(F.col("value").cast("decimal(25,6)")) * 100
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("value_cents"),
+            micro_cents(micro_sum(F.col("value"))).alias("value_cents"),
         )
     )
 

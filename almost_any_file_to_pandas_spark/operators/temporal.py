@@ -26,6 +26,14 @@ from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
     SESSION_GAP_MINUTES,
+    exact_sum,
+    exact_sum_sql,
+    from_micro,
+    from_micro_sql,
+    micro_cents,
+    micro_cents_sql,
+    micro_sum,
+    micro_sum_sql,
     micro_units,
     micro_units_sql,
     register,
@@ -135,7 +143,7 @@ ZSCORE_THRESHOLD = 3.0
     WITH stats AS (
       SELECT event_type,
              COUNT(*) AS n_events,
-             CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_v,
+             {exact_sum_sql("value")} AS sum_v,
              CAST(SUM(CAST(
                CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
                AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
@@ -161,9 +169,10 @@ ZSCORE_THRESHOLD = 3.0
 def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type z-score anomaly counts — the monitoring pass of an
     event pipeline. Two aggregates: per-type sufficient statistics
-    (decimal sums — exact and order-independent; v² rescaled to
-    scale 6 so the decimal→double conversion stays under 2⁵³ unscaled
-    and converts identically on both engines), broadcast back over
+    (exact micro-unit value sums and DECIMAL v² sums —
+    order-independent; v² rescaled to scale 6 so the decimal→double
+    conversion stays under 2⁵³ unscaled and converts identically on
+    both engines), broadcast back over
     the stream for the outlier count. The corpus shuffles only for
     the per-type partials; the stats side is |event_types| rows at
     any scale.
@@ -173,14 +182,15 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     never ROUND(double)ed — and the anomaly threshold cuts on values
     recomputed from those same integers, so both engines compare
     against the bit-identical boundary.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     v6 = F.col("value").cast("decimal(18,6)")
     stats = ev.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(25,6)"))
-        .cast("double")
-        .alias("sum_v"),
+        exact_sum(F.col("value")).alias("sum_v"),
         F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_vsq"),
     )
     mean = F.col("sum_v") / F.col("n_events")
@@ -304,22 +314,21 @@ def events_range_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_seasonality_profile",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
       SELECT date_part('dow', ts) AS day_of_week,
              date_part('hour', ts) AS hour_of_day,
              COUNT(*) AS n_events,
              COUNT(DISTINCT user_id) AS n_users,
-             SUM(CAST(value AS DECIMAL(25,6))) AS sum_value
+             {micro_sum_sql("value")} AS sum_value_u
       FROM events GROUP BY 1, 2
     )
     SELECT CAST(day_of_week AS INT) AS day_of_week,
            CAST(hour_of_day AS INT) AS hour_of_day,
            n_events, n_users,
            -- exact integer cents / all-integer share (house recipe):
-           -- ROUND over a decimal->double sum is the banned class
-           CAST(FLOOR(sum_value * 100 + 0.5) AS BIGINT)
-             AS sum_value_cents,
+           -- ROUND over a double sum is the banned class
+           {micro_cents_sql("sum_value_u")} AS sum_value_cents,
            CAST((CAST(n_events AS HUGEINT) * 1000000)
                 // SUM(n_events) OVER () AS BIGINT) AS share_q6
     FROM cells
@@ -338,6 +347,9 @@ def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     never grow with the data. DuckDB's ``dow`` is 0=Sunday; Spark's
     ``dayofweek`` is 1=Sunday, so the Spark side subtracts 1 to align
     the encoding.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     cells = ev.groupBy(
@@ -346,7 +358,7 @@ def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count("*").alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
-        F.sum(F.col("value").cast("decimal(25,6)")).alias("sum_value"),
+        micro_sum(F.col("value")).alias("sum_value_u"),
     )
     w = W.partitionBy(F.pmod(F.col("n_events"), F.lit(1)))
     return cells.select(
@@ -354,9 +366,7 @@ def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hour_of_day",
         "n_events",
         "n_users",
-        F.floor(F.col("sum_value") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("sum_value_cents"),
+        micro_cents(F.col("sum_value_u")).alias("sum_value_cents"),
         F.expr(
             "CAST(CAST(n_events AS DECIMAL(38,0)) * 1000000 div"
             " SUM(n_events) OVER (PARTITION BY n_events % 1)"
@@ -445,16 +455,15 @@ def events_late_arrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_ab_cohort_compare",
-    oracle="""
+    oracle=f"""
     WITH tagged AS (
-      SELECT event_type, user_id % 2 AS cohort,
-             CAST(value AS DECIMAL(25,6)) AS v,
+      SELECT event_type, user_id % 2 AS cohort, value,
              CAST(value AS DECIMAL(18,6)) AS v6
       FROM events
     ), stats AS (
       SELECT event_type, cohort,
              COUNT(*) AS n,
-             CAST(SUM(v) AS DOUBLE) AS sum_v,
+             {exact_sum_sql("value")} AS sum_v,
              CAST(SUM(CAST(v6 * v6 AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
       FROM tagged GROUP BY event_type, cohort
     ), sides AS (
@@ -487,20 +496,23 @@ def events_ab_cohort_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the sufficient statistics n/Σv/Σv²).
 
     Scale shape: ONE aggregate over (event_type, cohort) computes all
-    sufficient statistics with map-side partials (sums accumulate in
-    DECIMAL so both engines fold order-independently; moments divide
-    in double at the end); the cohort pivot and the z arithmetic run
-    on the tiny per-type table. No window, no second pass over data —
-    the whole experiment readout costs one shuffle of partial sums.
+    sufficient statistics with map-side partials (exact micro-unit
+    and DECIMAL sums, so both engines fold order-independently;
+    moments divide in double at the end); the cohort pivot and the z
+    arithmetic run on the tiny per-type table. No window, no second
+    pass over data — the whole experiment readout costs one shuffle
+    of partial sums.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
-    v = F.col("value").cast("decimal(25,6)")
     v6 = F.col("value").cast("decimal(18,6)")
     stats = ev.groupBy(
         "event_type", (F.col("user_id") % 2).alias("cohort")
     ).agg(
         F.count("*").alias("n"),
-        F.sum(v).cast("double").alias("sum_v"),
+        exact_sum(F.col("value")).alias("sum_v"),
         F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_vsq"),
     )
     sides = stats.groupBy("event_type").agg(
@@ -543,9 +555,9 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
                f" AS BIGINT) AS {t}"
                for t in EVENT_TYPES
            )},
-           CAST(SUM(CASE WHEN event_type = 'purchase'
-                    THEN CAST(value AS DECIMAL(25,6)) END) AS DOUBLE)
-             AS purchase_value
+           {exact_sum_sql(
+               "CASE WHEN event_type = 'purchase' THEN value END"
+           )} AS purchase_value
     FROM events GROUP BY 1
     """,
 )
@@ -565,7 +577,9 @@ def events_pivot_type_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation; no extra shuffle, no discovery job). Missing
     day×type cells surface as NULL counts → coalesced to 0 to match
     the conditional-sum semantics; revenue stays NULL-when-absent.
-    Value sums fold in DECIMAL for order-independent hashes.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     wide = (
@@ -574,7 +588,7 @@ def events_pivot_type_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.struct(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(25,6)")).alias("s"),
+                micro_sum(F.col("value")).alias("s"),
             )
         )
     )
@@ -583,9 +597,7 @@ def events_pivot_type_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         cols.append(
             F.coalesce(F.col(f"{t}.n"), F.lit(0)).alias(t)
         )
-    cols.append(
-        F.col("purchase.s").cast("double").alias("purchase_value")
-    )
+    cols.append(from_micro(F.col("purchase.s")).alias("purchase_value"))
     return wide.select(*cols)
 
 
@@ -687,7 +699,7 @@ def events_user_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_monthly_dense_spine",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
       SELECT date_trunc('month', MIN(o_orderdate)) AS lo,
              date_trunc('month', MAX(o_orderdate)) AS hi
@@ -699,8 +711,7 @@ def events_user_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), monthly AS (
       SELECT date_trunc('month', o_orderdate) AS month_start,
              COUNT(*) AS n_orders,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-               AS revenue
+             {exact_sum_sql("o_totalprice")} AS revenue
       FROM orders GROUP BY 1
     )
     SELECT CAST(s.month_start AS VARCHAR) AS month_start,
@@ -722,6 +733,9 @@ def orders_monthly_dense_spine(
     EXPLODED FROM THAT ONE ROW (a generated dimension, never a scan);
     the rollup aggregates once; spine ⟕ rollup is a broadcast join of
     two month-sized frames. The fact table is read exactly once.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     bounds = orders.agg(
@@ -745,9 +759,7 @@ def orders_monthly_dense_spine(
         .alias("month_start")
     ).agg(
         F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-        .cast("double")
-        .alias("revenue"),
+        exact_sum(F.col("o_totalprice")).alias("revenue"),
     )
     return (
         spine.join(F.broadcast(monthly), "month_start", "left")
@@ -2772,8 +2784,7 @@ HOLT_BETA = 0.25  # trend gain — exact binary rational
     oracle=f"""
     WITH RECURSIVE s AS (
       SELECT year(o_orderdate) * 100 + month(o_orderdate) AS ym,
-             CAST(FLOOR(SUM(CAST(o_totalprice AS DECIMAL(25,6))) * 100
-                        + 0.5) AS BIGINT) AS y_cents
+             {micro_cents_sql(micro_sum_sql("o_totalprice"))} AS y_cents
       FROM orders GROUP BY 1
     ), idx AS (
       SELECT ym, y_cents, ROW_NUMBER() OVER (ORDER BY ym) AS t FROM s
@@ -2812,7 +2823,8 @@ def orders_holt_linear_smoothing(
     β={HOLT_BETA} (exact binary rationals — every recursion step is
     ±*/ on doubles, bit-identical cross-engine; the oracle restates
     the identical recursion as a recursive CTE). Monthly y is the
-    exact DECIMAL cents sum, so both engines smooth identical inputs.
+    exact micro-unit sum floored to cents, so both engines smooth
+    identical inputs.
 
     100 TB shape: the corpus-sized work is ONE (year, month) groupBy
     with map-side combine; the recursion then runs driver-side over
@@ -2820,6 +2832,9 @@ def orders_holt_linear_smoothing(
     state pattern — a calendar has ~8 rows per PB-year of data, and
     an inherently sequential scalar recursion does not distribute).
     Forecast/level/trend emit as FLOOR(x·100+0.5) cents.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     monthly = (
@@ -2829,12 +2844,7 @@ def orders_holt_linear_smoothing(
             .alias("ym")
         )
         .agg(
-            F.floor(
-                F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("y_cents")
+            micro_cents(micro_sum(F.col("o_totalprice"))).alias("y_cents")
         )
         .orderBy("ym")
     )
@@ -3002,7 +3012,7 @@ ANOMALY_CURVE_DECI = (15, 20, 30, 40)  # σ-multiplier tenths
     WITH stats AS (
       SELECT event_type,
              COUNT(*) AS n_events,
-             CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_v,
+             {exact_sum_sql("value")} AS sum_v,
              CAST(SUM(CAST(
                CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
                AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
@@ -3043,19 +3053,20 @@ def events_anomaly_threshold_curve(
     monitoring rollout reads before picking its threshold.
 
     100 TB shape: the sufficient statistics are ONE per-type
-    aggregate (exact decimal sums, integer-quantized boundaries —
+    aggregate (exact sums, integer-quantized boundaries —
     the audited ``events_anomaly_zscore`` recipe); the sweep is
     conditional counts inside ONE second pass over the stream with
     the |types|-row stats and {len(ANOMALY_CURVE_DECI)}-row threshold
     list broadcast — no per-threshold rescan.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     v6 = F.col("value").cast("decimal(18,6)")
     stats = ev.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(25,6)"))
-        .cast("double")
-        .alias("sum_v"),
+        exact_sum(F.col("value")).alias("sum_v"),
         F.sum((v6 * v6).cast("decimal(30,6)"))
         .cast("double")
         .alias("sum_vsq"),
@@ -3207,7 +3218,7 @@ AB_DELTA_INV = 20  # failure probability δ = 1/20 = 5%
     WITH stats AS (
       SELECT event_type,
              COUNT(*) AS n_events,
-             CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sum_v,
+             {exact_sum_sql("value")} AS sum_v,
              CAST(SUM(CAST(
                CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
                AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
@@ -3238,22 +3249,23 @@ def events_ab_sample_size_chebyshev(
     cross-engine float contract forbids): the conservative,
     transcendental-free planning number, next to the experimentation
     rows (`events_ab_cohort_compare` reads results; this plans the
-    run). Variance comes from the exact order-independent DECIMAL
-    moments (the anomaly-zscore recipe); CEIL on the identical IEEE
+    run). Variance comes from the exact order-independent moments
+    (the anomaly-zscore recipe); CEIL on the identical IEEE
     double is identical on both engines; feasibility compares the
     available event count against the requirement.
 
     100 TB shape: one per-type sufficient-statistics aggregate; the
     ε-sweep is a |types|×{len(AB_EPS_DECI)} projection over the
     broadcast-scale stats frame — no second corpus pass.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     v6 = F.col("value").cast("decimal(18,6)")
     stats = ev.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(25,6)"))
-        .cast("double")
-        .alias("sum_v"),
+        exact_sum(F.col("value")).alias("sum_v"),
         F.sum((v6 * v6).cast("decimal(30,6)"))
         .cast("double")
         .alias("sum_vsq"),
@@ -3289,18 +3301,18 @@ def events_ab_sample_size_chebyshev(
 
 @register(
     "events_did_estimator",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id % 2 AS cohort,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             CAST(value AS DECIMAL(25,6)) AS v
+             value AS v
       FROM events
     ), lim AS (
       SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS mid_us FROM ev
     ), cell AS (
       SELECT cohort,
              CASE WHEN ts_us < mid_us THEN 0 ELSE 1 END AS period,
-             COUNT(*) AS n, CAST(SUM(v) AS DOUBLE) AS sv
+             COUNT(*) AS n, {exact_sum_sql("v")} AS sv
       FROM ev CROSS JOIN lim GROUP BY 1, 2
     ), p AS (
       SELECT
@@ -3341,18 +3353,21 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: the period boundary is 64-bit integer arithmetic on
     the min/max epoch-µs (1-row broadcast); cell sums accumulate in
-    DECIMAL (order-independent); the four means and the DiD are one
-    identical double expression on both engines, quantized q6.
+    exact micro-units (order-independent); the four means and the DiD
+    are one identical double expression on both engines, quantized q6.
 
     100 TB shape: ONE aggregate over (cohort, period) — 4 cells of
     map-side partial sums — after a 1-row min/max fold broadcast back.
     No window, no per-user state; the estimator costs two scans (the
     range fold + the cell aggregate) of pushdown-pruned columns.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("cohort"),
         F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("value").cast("decimal(25,6)").alias("v"),
+        F.col("value").alias("v"),
     )
     lim = ev.agg(
         F.expr("(MIN(ts_us) + MAX(ts_us)) DIV 2").alias("mid_us")
@@ -3367,7 +3382,7 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n"),
-            F.sum("v").cast("double").alias("sv"),
+            exact_sum(F.col("v")).alias("sv"),
         )
     )
 
@@ -3538,21 +3553,21 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_jackknife_mean_ci",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS g,
-             CAST(o_totalprice AS DECIMAL(25,6)) AS v
+             o_totalprice AS v
       FROM orders
     ), per_g AS (
-      SELECT g, COUNT(*) AS n_g, SUM(v) AS s_g FROM o GROUP BY g
+      SELECT g, COUNT(*) AS n_g, {micro_sum_sql("v")} AS s_g
+      FROM o GROUP BY g
     ), tot AS (
-      SELECT COUNT(*) AS gg, SUM(n_g) AS n,
-             CAST(SUM(s_g) AS DECIMAL(38,6)) AS s
+      SELECT COUNT(*) AS gg, SUM(n_g) AS n, SUM(s_g) AS s
       FROM per_g
     ), loo AS (
       -- degenerate guard: with ONE group, deleting it leaves nothing
       -- (n = n_g) -> the leave-one-out estimate is undefined -> NULL
-      SELECT CAST(FLOOR(CAST(s - s_g AS DOUBLE)
+      SELECT CAST(FLOOR({from_micro_sql("s - s_g")}
                         / NULLIF(n - n_g, 0)
                         * 1000000 + 0.5) AS BIGINT) AS loo_q6
       FROM per_g CROSS JOIN tot
@@ -3565,14 +3580,14 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(gg AS BIGINT) AS n_groups,
            CAST(n AS BIGINT) AS n_orders,
-           CAST(FLOOR(CAST(s AS DOUBLE) / n * 1000000 + 0.5) AS BIGINT)
+           CAST(FLOOR({from_micro_sql("s")} / n * 1000000 + 0.5) AS BIGINT)
              AS mean_q6,
            CAST(FLOOR(sqrt(CAST(ss2 AS DOUBLE) * (gg - 1) / gg) + 0.5)
                 AS BIGINT) AS jk_se_q6,
-           CAST(FLOOR(CAST(s AS DOUBLE) / n * 1000000 + 0.5)
+           CAST(FLOOR({from_micro_sql("s")} / n * 1000000 + 0.5)
                 - 2 * FLOOR(sqrt(CAST(ss2 AS DOUBLE) * (gg - 1) / gg)
                             + 0.5) AS BIGINT) AS ci_lo_q6,
-           CAST(FLOOR(CAST(s AS DOUBLE) / n * 1000000 + 0.5)
+           CAST(FLOOR({from_micro_sql("s")} / n * 1000000 + 0.5)
                 + 2 * FLOOR(sqrt(CAST(ss2 AS DOUBLE) * (gg - 1) / gg)
                             + 0.5) AS BIGINT) AS ci_hi_q6
     FROM ss CROSS JOIN tot
@@ -3599,24 +3614,27 @@ def orders_jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) and everything after runs on the group census — the
     jackknife is resampling-free: the G leave-one-out estimates are
     closed-form from (Σ, n, Σ_g, n_g), never G re-scans.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     o = table(spark, sf_dir, "orders").select(
         F.date_trunc("month", F.col("o_orderdate").cast("date")).alias("g"),
-        F.col("o_totalprice").cast("decimal(25,6)").alias("v"),
+        F.col("o_totalprice").alias("v"),
     )
     per_g = o.groupBy("g").agg(
-        F.count("*").alias("n_g"), F.sum("v").alias("s_g")
+        F.count("*").alias("n_g"), micro_sum(F.col("v")).alias("s_g")
     )
     tot = per_g.agg(
         F.count("*").alias("gg"),
         F.sum("n_g").alias("n"),
-        F.sum("s_g").cast("decimal(38,6)").alias("s"),
+        F.sum("s_g").alias("s"),
     )
     # degenerate guard (single-row corpus sweep): one group -> the
     # leave-one-out denominator is zero -> NULL, not an ANSI error
     loo = per_g.crossJoin(F.broadcast(tot)).select(
         F.floor(
-            (F.col("s") - F.col("s_g")).cast("double")
+            from_micro(F.col("s") - F.col("s_g"))
             / F.nullif(F.col("n") - F.col("n_g"), F.lit(0))
             * 1_000_000
             + F.lit(0.5)
@@ -3630,7 +3648,7 @@ def orders_jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ss2")
     )
     mean_q6 = F.floor(
-        F.col("s").cast("double") / F.col("n") * 1_000_000 + F.lit(0.5)
+        from_micro(F.col("s")) / F.col("n") * 1_000_000 + F.lit(0.5)
     )
     se_q6 = F.floor(
         F.sqrt(
@@ -4388,11 +4406,10 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_seasonal_decompose_additive",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
       SELECT year(o_orderdate) * 100 + month(o_orderdate) AS ym,
-             CAST(FLOOR(SUM(CAST(o_totalprice AS DECIMAL(25,6))) * 100
-                        + 0.5) AS BIGINT) AS y_cents
+             {micro_cents_sql(micro_sum_sql("o_totalprice"))} AS y_cents
       FROM orders GROUP BY 1
     ), trended AS (
       SELECT ym, y_cents,
@@ -4453,6 +4470,9 @@ def orders_seasonal_decompose_additive(
     window and join after that runs on ≤ ~100 rows (the Holt/Markov
     bounded-model-state pattern). The month windows run on the
     bounded frame with the non-foldable constant partition key.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
@@ -4460,12 +4480,7 @@ def orders_seasonal_decompose_additive(
         .cast("long")
         .alias("ym")
     ).agg(
-        F.floor(
-            F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("y_cents")
+        micro_cents(micro_sum(F.col("o_totalprice"))).alias("y_cents")
     )
     # bounded month spine: constant-but-non-foldable partition key
     # (see text_vocab_topk) keeps the single partition intended
@@ -4938,8 +4953,7 @@ _HW_LNEW = (
     oracle=f"""
     WITH RECURSIVE s AS (
       SELECT year(o_orderdate) * 100 + month(o_orderdate) AS ym,
-             CAST(FLOOR(SUM(CAST(o_totalprice AS DECIMAL(25,6))) * 100
-                        + 0.5) AS BIGINT) AS y_cents
+             {micro_cents_sql(micro_sum_sql("o_totalprice"))} AS y_cents
       FROM orders GROUP BY 1
     ), idx AS (
       SELECT ym, y_cents, ROW_NUMBER() OVER (ORDER BY ym) AS t FROM s
@@ -5011,7 +5025,10 @@ def orders_holt_winters_seasonal(
     sequential 3-state recursion runs driver-side over the BOUNDED
     month spine (calendar-sized at any corpus scale), with the oracle
     restating it as a recursive CTE carrying the 12-slot seasonal
-    list."""
+    list.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises."""
     import math
 
     orders = table(spark, sf_dir, "orders")
@@ -5022,12 +5039,7 @@ def orders_holt_winters_seasonal(
             .alias("ym")
         )
         .agg(
-            F.floor(
-                F.sum(F.col("o_totalprice").cast("decimal(25,6)")) * 100
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("y_cents")
+            micro_cents(micro_sum(F.col("o_totalprice"))).alias("y_cents")
         )
         .orderBy("ym")
     )

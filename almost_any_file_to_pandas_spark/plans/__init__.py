@@ -47,7 +47,10 @@ ORACLES: Dict[str, str] = {}
 # differently on the two engines (Spark HALF_UP on the shortest repr,
 # DuckDB on the binary value). Each group's micro-units
 # add exactly in DECIMAL (a BIGINT sum would overflow near TPC-H
-# sf 100) and scale to a double once.
+# sf 100) and scale to a double once, or floor to whole cents once.
+# Every money or quantity sum in the package goes through these
+# helpers, so this is the one place that decides how a double is
+# summed exactly.
 #
 # Domain: a row must satisfy |x| < 9.2e12 (2^63 micro-units). Outside
 # it, and on NaN or ±inf, the BIGINT cast raises (CAST_OVERFLOW under
@@ -83,6 +86,13 @@ def exact_sum(col: Column) -> Column:
     return from_micro(micro_sum(col))
 
 
+def micro_cents(s: Column) -> Column:
+    """A (summed) micro-unit DECIMAL to whole cents as BIGINT,
+    ``⌊(s + 5000) / 10000⌋`` — ``FLOOR(x·100 + 0.5)`` of the exact
+    sum, floored toward −∞ in exact DECIMAL arithmetic."""
+    return F.floor((s + F.lit(5000)) * F.lit(Decimal("0.0001"))).cast("bigint")
+
+
 def micro_units_sql(expr: str) -> str:
     """DuckDB twin of :func:`micro_units`."""
     return f"CAST(FLOOR(({expr}) * 1000000 + 0.5) AS BIGINT)"
@@ -101,6 +111,13 @@ def from_micro_sql(expr: str) -> str:
 def exact_sum_sql(expr: str) -> str:
     """DuckDB twin of :func:`exact_sum`."""
     return from_micro_sql(micro_sum_sql(expr))
+
+
+def micro_cents_sql(expr: str) -> str:
+    """DuckDB twin of :func:`micro_cents`. The multiply by 0.0001
+    stays in DECIMAL; DuckDB's DECIMAL ``/`` and ``//`` go through
+    DOUBLE, and HUGEINT ``//`` truncates toward zero."""
+    return f"CAST(FLOOR((({expr}) + 5000) * 0.0001) AS BIGINT)"
 
 
 def register(name: str, oracle: Optional[str] = None):

@@ -33,7 +33,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    exact_sum,
+    exact_sum_sql,
+    micro_cents,
+    micro_cents_sql,
+    micro_sum,
+    micro_sum_sql,
+    micro_units,
+    micro_units_sql,
+    register,
+    table,
+    table_wide,
+)
 
 CENTS = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
 
@@ -757,13 +769,12 @@ def lineitem_isotonic_return_rate(
 
 @register(
     "lineitem_unpivot_measures",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT l_returnflag,
-             CAST(FLOOR(l_quantity * 1000000 + 0.5) AS BIGINT) AS qty,
-             CAST(FLOOR(l_extendedprice * 1000000 + 0.5) AS BIGINT)
-               AS price,
-             CAST(FLOOR(l_discount * 1000000 + 0.5) AS BIGINT) AS disc
+             {micro_units_sql("l_quantity")} AS qty,
+             {micro_units_sql("l_extendedprice")} AS price,
+             {micro_units_sql("l_discount")} AS disc
       FROM lineitem
     ), long AS (
       SELECT l_returnflag, 'qty' AS measure, qty AS val_micro FROM m
@@ -789,22 +800,19 @@ def lineitem_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable hash aggregate, so the shuffle carries only
     (flag, measure) partials — the column-profile Expand argument).
 
-    Measures quantize to integer micro-units BEFORE the expand so
-    every downstream aggregate is exact; the oracle's UNION ALL form
-    is the semantic twin (DuckDB has no UNPIVOT-to-Expand contract).
+    Measures quantize to integer micro-units
+    (:func:`~almost_any_file_to_pandas_spark.plans.micro_units`) BEFORE
+    the expand so every downstream aggregate is exact; the oracle's
+    UNION ALL form is the semantic twin (DuckDB has no
+    UNPIVOT-to-Expand contract). A measure must satisfy |x| < 9.2e12;
+    outside it, or on NaN, the query raises.
     """
     li = table(spark, sf_dir, "lineitem")
     m = li.select(
         "l_returnflag",
-        F.expr(
-            "CAST(FLOOR(l_quantity * 1000000 + 0.5) AS BIGINT)"
-        ).alias("qty"),
-        F.expr(
-            "CAST(FLOOR(l_extendedprice * 1000000 + 0.5) AS BIGINT)"
-        ).alias("price"),
-        F.expr(
-            "CAST(FLOOR(l_discount * 1000000 + 0.5) AS BIGINT)"
-        ).alias("disc"),
+        micro_units(F.col("l_quantity")).alias("qty"),
+        micro_units(F.col("l_extendedprice")).alias("price"),
+        micro_units(F.col("l_discount")).alias("disc"),
     )
     long = m.unpivot(
         ["l_returnflag"], ["qty", "price", "disc"], "measure", "val_micro"
@@ -1384,9 +1392,7 @@ TOPSIS_TOP = 20  # suppliers in the final ranking
     oracle=f"""
     WITH crit AS (
       SELECT s.s_suppkey,
-             CAST(COALESCE(SUM(CAST(l.l_extendedprice
-                                    AS DECIMAL(25,6))), 0) AS DOUBLE)
-               AS rev,
+             COALESCE({exact_sum_sql("l.l_extendedprice")}, 0.0) AS rev,
              CAST(COUNT(DISTINCT l.l_partkey) AS DOUBLE) AS parts,
              CAST(COUNT(DISTINCT l.l_orderkey) AS DOUBLE) AS ords
       FROM supplier s JOIN lineitem l ON l.l_suppkey = s.s_suppkey
@@ -1440,6 +1446,9 @@ def supplier_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     with two exact distinct counts), 1-row min/max broadcast, narrow
     scoring projection, TakeOrderedAndProject top-k; the rank window
     sees ≤{TOPSIS_TOP} rows.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     from pyspark.sql import Window as W
 
@@ -1450,11 +1459,8 @@ def supplier_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_suppkey")
         .agg(
             F.coalesce(
-                F.sum(F.col("l_extendedprice").cast("decimal(25,6)")),
-                F.lit(0),
-            )
-            .cast("double")
-            .alias("rev"),
+                exact_sum(F.col("l_extendedprice")), F.lit(0.0)
+            ).alias("rev"),
             F.countDistinct("l_partkey").cast("double").alias("parts"),
             F.countDistinct("l_orderkey").cast("double").alias("ords"),
         )
@@ -1505,10 +1511,6 @@ def supplier_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 XYZ_CUT_X_Q6 = 550_000  # demand CV below → X (stable)
 XYZ_CUT_Y_Q6 = 700_000  # ... below → Y; else Z (erratic)
-_LCENTS = (
-    "CAST(FLOOR(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) * 100 + 0.5)"
-    " AS BIGINT)"
-)
 ABC_PART_SHIFT = 18  # part-revenue band width (the customer-ABC trick)
 
 
@@ -1519,7 +1521,7 @@ ABC_PART_SHIFT = 18  # part-revenue band width (the customer-ABC trick)
       SELECT l_partkey,
              year(l_shipdate) * 100 + month(l_shipdate) AS ym,
              CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q,
-             {_LCENTS} AS cents
+             {micro_cents_sql(micro_sum_sql("l_extendedprice"))} AS cents
       FROM lineitem GROUP BY 1, 2
     ), p AS (
       SELECT l_partkey,
@@ -1569,6 +1571,9 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (revenue bands by arithmetic shift, broadcast band bases,
     within-band windows) — never a global single-partition walk —
     and the matrix is a ≤9-cell rollup.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     li = table(spark, sf_dir, "lineitem")
     m = li.groupBy(
@@ -1578,7 +1583,7 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ym"),
     ).agg(
         F.sum(F.col("l_quantity").cast("bigint")).alias("q"),
-        F.expr(_LCENTS).alias("cents"),
+        micro_cents(micro_sum(F.col("l_extendedprice"))).alias("cents"),
     )
     p = (
         m.groupBy("l_partkey")

@@ -14,9 +14,12 @@ micro-units, ``FLOOR(x·1e6 + 0.5)``, the group adds them exactly in
 DECIMAL and scales the sum to a DOUBLE once. That is bit-identical in
 Spark and DuckDB, costs no per-row BigDecimal, and holds for
 |x| < 9.2e12 per row (outside it the query raises). Division happens
-in double on both sides. The sites that keep computing on the decimal
-sum (q18's HAVING, the ×100 cent floors, q8's ratio, the running
-windows) still cast each row to DECIMAL(25,6).
+in double on both sides. The sites that keep computing on the sum
+stay on micro-units too: q18's HAVING compares the micro-unit sum,
+the running windows sum micro-units before one ``from_micro``, and
+the ×100 cent floors take
+:func:`~almost_any_file_to_pandas_spark.plans.micro_cents` of the
+micro-unit sum.
 
 Scale notes (100 TB mindset): dimension joins (region/nation/customer
 /supplier/part) are explicitly broadcast — at production scale these
@@ -37,7 +40,11 @@ from almost_any_file_to_pandas_spark.plans import (
     exact_sum,
     exact_sum_sql,
     from_micro,
+    from_micro_sql,
+    micro_cents,
+    micro_cents_sql,
     micro_sum,
+    micro_sum_sql,
     register,
     table,
 )
@@ -606,13 +613,12 @@ Q18_QTY_THRESHOLD = 250
     SELECT o.o_orderkey,
            CAST(o.o_orderdate AS VARCHAR) AS o_orderdate,
            o.o_totalprice,
-           CAST(s.sum_qty AS DOUBLE) AS sum_qty
+           {from_micro_sql("s.sum_qty")} AS sum_qty
     FROM orders o
     JOIN (
-      SELECT l_orderkey,
-             SUM(CAST(l_quantity AS DECIMAL(25,6))) AS sum_qty
+      SELECT l_orderkey, {micro_sum_sql("l_quantity")} AS sum_qty
       FROM lineitem GROUP BY l_orderkey
-      HAVING SUM(CAST(l_quantity AS DECIMAL(25,6))) > {Q18_QTY_THRESHOLD}
+      HAVING {micro_sum_sql("l_quantity")} > {Q18_QTY_THRESHOLD * 1_000_000}
     ) s ON o.o_orderkey = s.l_orderkey
     ORDER BY sum_qty DESC, o.o_orderkey
     LIMIT 20
@@ -626,14 +632,18 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HAVING filter collapses it to the rare heavy orders *before*
     the join — the join's build side is tiny and AQE broadcasts it at
     runtime. Top-20 is TakeOrderedAndProject (per-partition heaps), not
-    a global sort.
+    a global sort. The HAVING compares the exact micro-unit sum
+    against the threshold in micro-units.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     heavy = (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(25,6)")).alias("sum_qty"))
-        .filter(F.col("sum_qty") > Q18_QTY_THRESHOLD)
+        .agg(micro_sum(F.col("l_quantity")).alias("sum_qty"))
+        .filter(F.col("sum_qty") > Q18_QTY_THRESHOLD * 1_000_000)
     )
     return (
         orders.join(heavy, orders.o_orderkey == heavy.l_orderkey)
@@ -641,7 +651,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             F.col("o_orderdate").cast("string").alias("o_orderdate"),
             "o_totalprice",
-            F.col("sum_qty").cast("double").alias("sum_qty"),
+            from_micro(F.col("sum_qty")).alias("sum_qty"),
         )
         .orderBy(F.desc("sum_qty"), F.asc("o_orderkey"))
         .limit(20)
@@ -1238,10 +1248,9 @@ DECILE_QS = tuple(round(0.1 * i, 1) for i in range(1, 10))
            COUNT(*) AS n_orders,
            ROUND(MIN(v), 2) AS min_value,
            ROUND(MAX(v), 2) AS max_value,
-           -- integer cents of the exact decimal sum (house recipe):
+           -- integer cents of the exact sum (house recipe):
            -- ROUND(CAST(sum AS DOUBLE), 2) is the banned fragile class
-           CAST(FLOOR(SUM(CAST(v AS DECIMAL(25,6))) * 100 + 0.5)
-                AS BIGINT) AS sum_value_cents
+           {micro_cents_sql(micro_sum_sql("v"))} AS sum_value_cents
     FROM binned
     GROUP BY decile
     """,
@@ -1260,6 +1269,9 @@ def order_value_decile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bin rule matches ``quantile_disc`` semantics on both sides:
     decile = 1 + count of cut points strictly below the value, so
     boundary rows (value == cut) land in the lower bin.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     cuts = exact_disc_quantiles(orders, "o_totalprice", DECILE_QS)
@@ -1276,11 +1288,7 @@ def order_value_decile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             F.round(F.min("v"), 2).alias("min_value"),
             F.round(F.max("v"), 2).alias("max_value"),
-            F.floor(
-                F.sum(F.col("v").cast("decimal(25,6)")) * 100 + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("sum_value_cents"),
+            micro_cents(micro_sum(F.col("v"))).alias("sum_value_cents"),
         )
     )
 
@@ -1749,10 +1757,10 @@ RFM_REF_DATE = "1998-12-31"
     )
     SELECT r_bin, f_bin, m_bin,
            COUNT(*) AS n_customers,
-           -- integer cents of the exact decimal sum (house recipe):
+           -- integer cents of the exact sum (house recipe):
            -- ROUND(CAST(sum AS DOUBLE), 2) is the banned fragile class
-           CAST(FLOOR(SUM(CAST(monetary AS DECIMAL(25,6))) * 100 + 0.5)
-                AS BIGINT) AS total_monetary_cents
+           {micro_cents_sql(micro_sum_sql("monetary"))}
+             AS total_monetary_cents
     FROM scored
     GROUP BY r_bin, f_bin, m_bin
     """,
@@ -1774,6 +1782,9 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells. Tied cut values (frequency is small-integer) produce the
     identical duplicate-cut binning in both engines because the rule
     is the same arithmetic, not engine ntile.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
@@ -1804,12 +1815,9 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_bin", "f_bin", "m_bin")
         .agg(
             F.count("*").alias("n_customers"),
-            F.floor(
-                F.sum(F.col("monetary").cast("decimal(25,6)")) * 100
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("total_monetary_cents"),
+            micro_cents(micro_sum(F.col("monetary"))).alias(
+                "total_monetary_cents"
+            ),
         )
     )
 
@@ -1959,7 +1967,7 @@ def orders_incremental_agg_merge(
 
 @register(
     "orders_cohort_ltv",
-    oracle="""
+    oracle=f"""
     WITH firsts AS (
       SELECT o_custkey,
              date_trunc('month', MIN(o_orderdate)) AS cohort_month
@@ -1970,24 +1978,27 @@ def orders_incremental_agg_merge(
               - date_part('year', f.cohort_month)) * 12
              + (date_part('month', o.o_orderdate)
                 - date_part('month', f.cohort_month)) AS age_months,
-             CAST(o.o_totalprice AS DECIMAL(25,6)) AS rev
+             o.o_totalprice AS rev
       FROM orders o JOIN firsts f ON o.o_custkey = f.o_custkey
     ), cells AS (
       SELECT cohort_month, CAST(age_months AS INT) AS age_months,
              COUNT(*) AS n_orders,
-             SUM(rev) AS rev
+             {micro_sum_sql("rev")} AS rev_u
       FROM aged GROUP BY 1, 2
+    ), running AS (
+      SELECT cohort_month, age_months, n_orders,
+             SUM(rev_u) OVER (
+               PARTITION BY cohort_month ORDER BY age_months
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+             ) AS cum_u
+      FROM cells
     )
     SELECT CAST(cohort_month AS VARCHAR) AS cohort_month, age_months,
            n_orders,
-           -- integer cents, not ROUND(double): the running decimal
-           -- sum is exact and o_totalprice has 2 decimals, so ×100
-           -- is integer-valued — no float ever enters the output
-           CAST(FLOOR(SUM(rev) OVER (
-             PARTITION BY cohort_month ORDER BY age_months
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) * 100 + 0.5) AS BIGINT) AS cum_revenue_cents
-    FROM cells
+           -- integer cents, not ROUND(double): the running micro-unit
+           -- sum is exact — no float ever enters the output
+           {micro_cents_sql("cum_u")} AS cum_revenue_cents
+    FROM running
     """,
 )
 def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2001,11 +2012,13 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit, shuffle-joins otherwise); the cohort × age rollup is the
     only corpus-keyed shuffle; the cumulative window runs over the
     cohort × age CELL table (months², never row-scale) partitioned by
-    cohort — no global window. Decimal sums keep the running revenue
-    exact, and the output is integer CENTS (sum·100 is exactly
-    integer-valued since o_totalprice has 2 decimals) — the fragile
-    ROUND(double,2) class is banned from registered outputs; the
-    cast to VARCHAR pins month rendering across engines.
+    cohort — no global window. The running revenue is a window sum
+    of exact micro-unit cell sums, floored once to integer CENTS
+    (:func:`~almost_any_file_to_pandas_spark.plans.micro_cents`) —
+    the fragile ROUND(double,2) class is banned from registered
+    outputs; the cast to VARCHAR pins month rendering across engines.
+    A row must satisfy |o_totalprice| < 9.2e12 (was 1e19 on the
+    per-row DECIMAL cast); outside it the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     firsts = orders.groupBy("o_custkey").agg(
@@ -2021,10 +2034,10 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("int")
         .alias("age_months"),
-        F.col("o_totalprice").cast("decimal(25,6)").alias("rev"),
+        F.col("o_totalprice").alias("rev"),
     )
     cells = aged.groupBy("cohort_month", "age_months").agg(
-        F.count("*").alias("n_orders"), F.sum("rev").alias("rev")
+        F.count("*").alias("n_orders"), micro_sum(F.col("rev")).alias("rev_u")
     )
     w = (
         W.partitionBy("cohort_month")
@@ -2035,9 +2048,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cohort_month").cast("string").alias("cohort_month"),
         "age_months",
         "n_orders",
-        F.floor(F.sum("rev").over(w) * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cum_revenue_cents"),
+        micro_cents(F.sum("rev_u").over(w)).alias("cum_revenue_cents"),
     )
 
 
@@ -2138,13 +2149,16 @@ def lineitem_scd2_point_in_time(
     residual scan per probe row is bounded; no non-equi explosion, no
     nested loop (the trap a bare interval join falls into, cf. the
     binned range join for the keyless case). One extra shuffle
-    attaches custkey to lineitem via the orderkey join first.
+    attaches custkey to lineitem via the orderkey join first. Both
+    sides read the same ``orders`` scan, so the dimension's key is
+    renamed (``d_custkey``): the equi-join then compares two distinct
+    attributes instead of one column with itself.
     """
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     dim = orders.select(
-        "o_custkey",
+        F.col("o_custkey").alias("d_custkey"),
         "o_orderstatus",
         F.col("o_orderdate").alias("valid_from"),
         F.lead("o_orderdate").over(w).alias("valid_to"),
@@ -2157,7 +2171,7 @@ def lineitem_scd2_point_in_time(
     )
     joined = fact.join(
         dim,
-        (fact.o_custkey == dim.o_custkey)
+        (F.col("o_custkey") == F.col("d_custkey"))
         & (F.col("l_shipdate") >= F.col("valid_from"))
         & (F.col("valid_to").isNull() | (F.col("l_shipdate") < F.col("valid_to"))),
     )
@@ -2172,21 +2186,25 @@ def lineitem_scd2_point_in_time(
 
 @register(
     "orders_rolling_7d_revenue",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
              COUNT(*) AS n_orders,
-             SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS revenue
+             {micro_sum_sql("o_totalprice")} AS revenue_u
       FROM orders GROUP BY 1
+    ), rolled AS (
+      SELECT day, n_orders, revenue_u,
+             SUM(revenue_u) OVER (
+               ORDER BY day
+               RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW
+             ) AS revenue_7d_u
+      FROM daily
     )
     SELECT CAST(day AS VARCHAR) AS day,
            n_orders,
-           CAST(revenue AS DOUBLE) AS revenue,
-           CAST(SUM(revenue) OVER (
-             ORDER BY day
-             RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS revenue_7d
-    FROM daily
+           {from_micro_sql("revenue_u")} AS revenue,
+           {from_micro_sql("revenue_7d_u")} AS revenue_7d
+    FROM rolled
     """,
 )
 def orders_rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2200,15 +2218,17 @@ def orders_rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~365/year at ANY corpus scale), the same boundedness argument as
     the dense month spine. Running a global window over raw orders
     instead would single-thread the corpus — the anti-pattern this
-    restatement exists to avoid. Decimal accumulation end to end;
-    doubles only at the output boundary (the q1 contract).
+    restatement exists to avoid. Exact micro-unit sums end to end
+    (the daily sums and their window sum); doubles only at the output
+    boundary (the q1 contract). A row must satisfy
+    |o_totalprice| < 9.2e12 (was 1e19); outside it the query raises.
     """
     orders = table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
         F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("revenue"),
+        micro_sum(F.col("o_totalprice")).alias("revenue_u"),
     )
     w = (
         W.orderBy(F.unix_date(F.col("day")))
@@ -2217,8 +2237,8 @@ def orders_rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.select(
         F.col("day").cast("string").alias("day"),
         "n_orders",
-        F.col("revenue").cast("double").alias("revenue"),
-        F.sum("revenue").over(w).cast("double").alias("revenue_7d"),
+        from_micro(F.col("revenue_u")).alias("revenue"),
+        from_micro(F.sum("revenue_u").over(w)).alias("revenue_7d"),
     )
 
 
@@ -2329,11 +2349,11 @@ def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q10_returned_items_topk",
-    oracle="""
+    oracle=f"""
     SELECT c.c_custkey, c.c_name, n.n_name,
-           CAST(FLOOR(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                              AS DECIMAL(25,6))) * 100 + 0.5) AS BIGINT)
-             AS revenue_cents
+           {micro_cents_sql(
+               micro_sum_sql("l.l_extendedprice * (1 - l.l_discount)")
+           )} AS revenue_cents
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -2354,6 +2374,9 @@ def q10_returned_items_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem⋈orders shuffles on orderkey, then ONE customer-keyed
     aggregate; top-20 via TakeOrderedAndProject (per-partition heaps,
     never a global sort). Revenue is the exact-integer cents recipe.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     cust = table(spark, sf_dir, "customer")
     nat = table(spark, sf_dir, "nation")
@@ -2369,13 +2392,7 @@ def q10_returned_items_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.floor(
-                F.sum(rev.cast("decimal(25,6)")) * 100 + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("revenue_cents")
-        )
+        .agg(micro_cents(micro_sum(rev)).alias("revenue_cents"))
         .orderBy(F.desc("revenue_cents"), F.asc("c_custkey"))
         .limit(20)
     )
@@ -2425,10 +2442,9 @@ def q16_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q6_forecast_revenue",
-    oracle="""
+    oracle=f"""
     SELECT
-      CAST(FLOOR(SUM(CAST(l_extendedprice * l_discount
-                         AS DECIMAL(25,6))) * 100 + 0.5) AS BIGINT)
+      {micro_cents_sql(micro_sum_sql("l_extendedprice * l_discount"))}
         AS revenue_cents,
       COUNT(*) AS n_lines
     FROM lineitem
@@ -2445,6 +2461,9 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity cap) must reach the parquet scan, and the read schema
     must prune to the three referenced columns — at 100 TB this query
     IS its scan, so plan hygiene is the whole game.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     li = table(spark, sf_dir, "lineitem")
     f = (
@@ -2455,43 +2474,36 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 10)
     )
     return li.filter(f).agg(
-        F.floor(
-            F.sum(
-                (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                    "decimal(25,6)"
-                )
-            )
-            * 100
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("revenue_cents"),
+        micro_cents(
+            micro_sum(F.col("l_extendedprice") * F.col("l_discount"))
+        ).alias("revenue_cents"),
         F.count("*").alias("n_lines"),
     )
 
 
 @register(
     "q14_promo_revenue_share",
-    oracle="""
+    oracle=f"""
     WITH j AS (
-      SELECT CAST(l.l_extendedprice * (1 - l.l_discount)
-                  AS DECIMAL(25,6)) AS rev,
+      SELECT l.l_extendedprice * (1 - l.l_discount) AS rev,
              p.p_type LIKE 'PROMO%' AS is_promo
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
       WHERE l.l_shipdate >= TIMESTAMP '1997-09-01'
         AND l.l_shipdate < TIMESTAMP '1997-10-01'
+    ), c AS (
+      SELECT
+        {micro_cents_sql(
+            micro_sum_sql("CASE WHEN is_promo THEN rev ELSE 0 END")
+        )} AS promo_revenue_cents,
+        {micro_cents_sql(micro_sum_sql("rev"))} AS total_revenue_cents
+      FROM j
     )
-    SELECT
-      CAST(FLOOR(SUM(CASE WHEN is_promo THEN rev ELSE 0 END) * 100 + 0.5)
-           AS BIGINT) AS promo_revenue_cents,
-      CAST(FLOOR(SUM(rev) * 100 + 0.5) AS BIGINT) AS total_revenue_cents,
+    SELECT promo_revenue_cents, total_revenue_cents,
       -- all-integer share: cents already exact, so the ratio is a
       -- HUGEINT division of two exact integers
-      CAST((CAST(FLOOR(SUM(CASE WHEN is_promo THEN rev ELSE 0 END)
-                       * 100 + 0.5) AS HUGEINT) * 1000000)
-           // CAST(FLOOR(SUM(rev) * 100 + 0.5) AS HUGEINT)
-           AS BIGINT) AS promo_share_q6
-    FROM j
+      CAST((CAST(promo_revenue_cents AS HUGEINT) * 1000000)
+           // total_revenue_cents AS BIGINT) AS promo_share_q6
+    FROM c
     """,
 )
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2503,6 +2515,9 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast dimension carrying only (partkey, is_promo); ONE
     aggregate computes both sums map-side-partial. Share is the
     exact-integer cents ratio (house recipe).
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
@@ -2511,17 +2526,14 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part").select(
         "p_partkey", F.col("p_type").startswith("PROMO").alias("is_promo")
     )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(25,6)"
-    )
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
         rev.alias("rev"), "is_promo"
     )
-    promo_cents = F.floor(
-        F.sum(F.when(F.col("is_promo"), F.col("rev")).otherwise(0)) * 100
-        + F.lit(0.5)
-    ).cast("bigint")
-    total_cents = F.floor(F.sum("rev") * 100 + F.lit(0.5)).cast("bigint")
+    promo_cents = micro_cents(
+        micro_sum(F.when(F.col("is_promo"), F.col("rev")).otherwise(0))
+    )
+    total_cents = micro_cents(micro_sum(F.col("rev")))
     return j.agg(
         promo_cents.alias("promo_revenue_cents"),
         total_cents.alias("total_revenue_cents"),
@@ -2790,12 +2802,12 @@ def orders_market_basket_pairs(
 
 @register(
     "q15_top_suppliers_by_quarter_revenue",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
       SELECT l_suppkey,
-             CAST(FLOOR(SUM(CAST(l_extendedprice * (1 - l_discount)
-                                AS DECIMAL(25,6))) * 100 + 0.5)
-                  AS BIGINT) AS total_cents
+             {micro_cents_sql(
+                 micro_sum_sql("l_extendedprice * (1 - l_discount)")
+             )} AS total_cents
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         AND l_shipdate < TIMESTAMP '1997-04-01'
@@ -2820,23 +2832,18 @@ def q15_top_suppliers_by_quarter_revenue(
     aggregate (exact integer cents) is the only corpus shuffle; the
     1-row max crossJoin-broadcasts; the name lookup broadcasts the
     supplier dimension.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     rev = li.groupBy("l_suppkey").agg(
-        F.floor(
-            F.sum(
-                (
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                ).cast("decimal(25,6)")
-            )
-            * 100
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("total_cents")
+        micro_cents(
+            micro_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        ).alias("total_cents")
     )
     rev = rev.localCheckpoint(eager=True)  # feeds max + filter
     mx = rev.agg(F.max("total_cents").alias("_mx"))
@@ -3022,11 +3029,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q8_market_share",
-    oracle="""
+    oracle=f"""
     WITH flat AS (
       SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
-             CAST(l.l_extendedprice * (1 - l.l_discount)
-                  AS DECIMAL(25,6)) AS vol,
+             l.l_extendedprice * (1 - l.l_discount) AS vol,
              n2.n_name AS supp_nation
       FROM lineitem l
       JOIN part p     ON p.p_partkey = l.l_partkey AND p.p_type = 'ECONOMY'
@@ -3041,10 +3047,9 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND o.o_orderdate <  TIMESTAMP '1998-01-01'
     )
     SELECT o_year,
-           CAST(SUM(CASE WHEN supp_nation = 'NATION_5'
-                         THEN vol ELSE CAST(0 AS DECIMAL(25,6)) END)
-                AS DOUBLE)
-             / CAST(SUM(vol) AS DOUBLE) AS mkt_share
+           {exact_sum_sql(
+               "CASE WHEN supp_nation = 'NATION_5' THEN vol ELSE 0 END"
+           )} / {exact_sum_sql("vol")} AS mkt_share
     FROM flat
     GROUP BY o_year
     """,
@@ -3057,10 +3062,11 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: every dimension (part filtered to one type, customer
     keyed map, supplier, nation ×2, region) broadcasts; the single
     fact-fact shuffle is orders⋈lineitem.  Both the numerator and
-    denominator accumulate in exact DECIMAL inside ONE aggregate (a
+    denominator are exact micro-unit sums inside ONE aggregate (a
     conditional sum — no second pass, no self-join), and the final
     ratio is one double division on identical operands in both
-    engines.
+    engines. A row must satisfy |volume| < 9.2e12 (was 1e19);
+    outside it the query raises.
     """
     li = table(spark, sf_dir, "lineitem")
     part = (
@@ -3087,9 +3093,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("sn_key"),
         F.col("n_name").alias("supp_nation"),
     )
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(25,6)"
-    )
+    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -3101,12 +3105,11 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
         .agg(
             (
-                F.sum(
-                    F.when(F.col("supp_nation") == "NATION_5", vol).otherwise(
-                        F.lit(0).cast("decimal(25,6)")
-                    )
-                ).cast("double")
-                / F.sum(vol).cast("double")
+                exact_sum(
+                    F.when(F.col("supp_nation") == "NATION_5", vol)
+                    .otherwise(0)
+                )
+                / exact_sum(vol)
             ).alias("mkt_share")
         )
     )
@@ -3177,10 +3180,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q2_min_cost_supplier",
-    oracle="""
+    oracle=f"""
     WITH cost AS (
       SELECT l_partkey, l_suppkey,
-             SUM(CAST(FLOOR(l_extendedprice * 1000000 + 0.5) AS BIGINT))
+             CAST({micro_sum_sql("l_extendedprice")} AS HUGEINT)
                // SUM(CAST(l_quantity AS BIGINT)) AS unit_cost_q6
       FROM lineitem
       GROUP BY l_partkey, l_suppkey
@@ -3208,9 +3211,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q2-style minimum-cost supplier, restated: no partsupp
     table exists, so "supply cost" is the observed unit sell price —
     total extended price over total quantity per (part, supplier),
-    quantized to exact integer micros (``Σ price_micros // Σ qty``,
-    integer operands on BOTH engines so the floor-division semantics
-    agree).  The Q2 correlated-MIN subquery is decorrelated into an
+    quantized to exact integer micros (``Σ price_micros // Σ qty``
+    over the shared micro-unit sum, integer operands on BOTH engines
+    so the floor-division semantics agree). A row must satisfy
+    |l_extendedprice| < 9.2e12; outside it the query raises. The Q2
+    correlated-MIN subquery is decorrelated into an
     aggregate joined back on (partkey, min_cost) — the rewrite
     Catalyst itself applies.
 
@@ -3224,11 +3229,17 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject, not a global sort.
     """
     li = table(spark, sf_dir, "lineitem")
-    cost = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.expr(
-            "sum(CAST(FLOOR(l_extendedprice * 1000000 + 0.5) AS BIGINT))"
-            " div sum(CAST(l_quantity AS BIGINT))"
-        ).alias("unit_cost_q6")
+    cost = (
+        li.groupBy("l_partkey", "l_suppkey")
+        .agg(
+            micro_sum(F.col("l_extendedprice")).alias("_price_u"),
+            F.sum(F.col("l_quantity").cast("bigint")).alias("_qty"),
+        )
+        .select(
+            "l_partkey",
+            "l_suppkey",
+            F.expr("_price_u div _qty").alias("unit_cost_q6"),
+        )
     )
     best = cost.groupBy(F.col("l_partkey").alias("b_partkey")).agg(
         F.min("unit_cost_q6").alias("min_cost")
@@ -3273,11 +3284,10 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q11_important_parts",
-    oracle="""
+    oracle=f"""
     WITH val AS (
       SELECT l.l_partkey,
-             SUM(CAST(FLOOR(l.l_extendedprice * 1000000 + 0.5) AS BIGINT))
-               AS value_micros
+             {micro_sum_sql("l.l_extendedprice")} AS value_micros
       FROM lineitem l
       JOIN supplier s ON l.l_suppkey = s.s_suppkey
       JOIN nation n   ON s.s_nationkey = n.n_nationkey
@@ -3286,9 +3296,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tot AS (SELECT SUM(value_micros) AS t FROM val)
     SELECT v.l_partkey AS p_partkey,
-           CAST(v.value_micros AS DOUBLE) / 1000000 AS value
+           {from_micro_sql("v.value_micros")} AS value
     FROM val v, tot
-    WHERE CAST(v.value_micros AS HUGEINT) * 1000 > tot.t
+    WHERE v.value_micros * 1000 > tot.t
     """,
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3301,9 +3311,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global total folds that (tiny) table to one row, which
     broadcasts back as a cross-joined scalar — the Q11 HAVING-scalar
     shape with zero extra passes over the fact.  The threshold
-    comparison is exact integer arithmetic, widened to
-    DECIMAL(38,0)/HUGEINT (micros × 1000 overflows int64 at the
-    100 TB corpus scale).
+    comparison is exact DECIMAL(38,0) arithmetic on the shared
+    micro-unit sums (micros × 1000 overflows int64 at the 100 TB
+    corpus scale). A row must satisfy |l_extendedprice| < 9.2e12;
+    outside it the query raises.
     """
     li = table(spark, sf_dir, "lineitem")
     supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
@@ -3316,25 +3327,15 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(nat), F.col("s_nationkey") == nat.n_nationkey)
         .groupBy("l_partkey")
-        .agg(
-            F.sum(
-                F.expr(
-                    "CAST(FLOOR(l_extendedprice * 1000000 + 0.5) AS BIGINT)"
-                )
-            ).alias("value_micros")
-        )
+        .agg(micro_sum(F.col("l_extendedprice")).alias("value_micros"))
     )
-    tot = val.agg(
-        F.sum(F.col("value_micros").cast("decimal(38,0)")).alias("t")
-    )
+    tot = val.agg(F.sum("value_micros").alias("t"))
     return (
         val.crossJoin(F.broadcast(tot))
-        .filter(
-            F.col("value_micros").cast("decimal(38,0)") * 1000 > F.col("t")
-        )
+        .filter(F.col("value_micros") * 1000 > F.col("t"))
         .select(
             F.col("l_partkey").alias("p_partkey"),
-            (F.col("value_micros").cast("double") / 1000000).alias("value"),
+            from_micro(F.col("value_micros")).alias("value"),
         )
     )
 

@@ -79,6 +79,10 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
         # the data-skipping layouts the sinks build (and breaks
         # DuckDB/Arrow interop).
         ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
+        # ANSI mode is Spark 4's default; pinned because the exact
+        # sums (plans.micro_units) rely on the BIGINT cast raising on
+        # overflow and NaN, where a non-ANSI cast saturates silently.
+        ("spark.sql.ansi.enabled", "true"),
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.adaptive.skewJoin.enabled", "true"),

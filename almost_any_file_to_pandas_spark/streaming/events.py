@@ -24,6 +24,12 @@ from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
     SESSION_GAP_MINUTES,
+    exact_sum,
+    exact_sum_sql,
+    from_micro,
+    from_micro_sql,
+    micro_sum,
+    micro_sum_sql,
     micro_units,
     micro_units_sql,
     register,
@@ -49,7 +55,7 @@ WINDOW_MINUTES = 5
         AS window_start_us,
       event_type,
       COUNT(*) AS n_events,
-      CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS total_value
+      {exact_sum_sql("value")} AS total_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -61,6 +67,9 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-aligned tumbling windows; the window start is emitted as
     INTEGER epoch micros (timezone- and precision-proof — never a
     rendered timestamp).
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     return (
@@ -69,9 +78,7 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias(
-                "total_value"
-            ),
+            exact_sum(F.col("value")).alias("total_value"),
         )
         .select(
             F.unix_micros(F.col("w.start")).alias("window_start_us"),
@@ -96,9 +103,7 @@ def events_tumbling_window_stream(
         .groupBy(F.window("ts", f"{WINDOW_MINUTES} minutes"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias(
-                "total_value"
-            ),
+            exact_sum(F.col("value")).alias("total_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -207,9 +212,7 @@ def events_session_window_stream(
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias(
-                "total_value"
-            ),
+            exact_sum(F.col("value")).alias("total_value"),
         )
         .select(
             F.col("session_window.start").alias("session_start"),
@@ -222,11 +225,11 @@ def events_session_window_stream(
 
 @register(
     "events_user_activity",
-    oracle="""
+    oracle=f"""
     SELECT user_id,
            COUNT(*) AS n_events,
            COUNT(DISTINCT event_type) AS n_types,
-           CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS total_value,
+           {exact_sum_sql("value")} AS total_value,
            epoch_us(CAST(MAX(ts) AS TIMESTAMP)) AS last_seen_us
     FROM events
     GROUP BY user_id
@@ -235,16 +238,17 @@ def events_session_window_stream(
 )
 def events_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user activity rollup with a post-aggregation filter —
-    the profile-building aggregate; single shuffle on user_id."""
+    the profile-building aggregate; single shuffle on user_id.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises."""
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.countDistinct("event_type").alias("n_types"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias(
-                "total_value"
-            ),
+            exact_sum(F.col("value")).alias("total_value"),
             F.unix_micros(F.max("ts")).alias("last_seen_us"),
         )
         .filter(F.col("n_events") >= 5)
@@ -319,18 +323,22 @@ def events_stream_dedup(
 
 @register(
     "events_sliding_user_value",
-    oracle="""
+    oracle=f"""
     WITH ev_us AS (
       SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
       FROM events
+    ), slid AS (
+      SELECT event_id, user_id, ts,
+             {micro_sum_sql("value")} OVER (
+               PARTITION BY user_id ORDER BY ts
+               RANGE BETWEEN INTERVAL '1 hour' PRECEDING AND CURRENT ROW
+             ) AS value_1h_u
+      FROM ev_us
     )
     SELECT event_id, user_id,
            epoch_us(ts) AS ts_us,
-           CAST(SUM(CAST(value AS DECIMAL(25,6))) OVER (
-             PARTITION BY user_id ORDER BY ts
-             RANGE BETWEEN INTERVAL '1 hour' PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS value_1h
-    FROM ev_us
+           {from_micro_sql("value_1h_u")} AS value_1h
+    FROM slid
     """,
 )
 def events_sliding_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,8 +346,10 @@ def events_sliding_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rolling-feature shape (fraud scores, rate limits). RANGE
     frames bound by a time interval need no self-join and no explode:
     one shuffle on user_id, one per-partition sort, state bounded by
-    the frame. Decimal accumulation keeps the running sums exact and
-    engine-portable."""
+    the frame. Micro-unit window sums
+    (:func:`~almost_any_file_to_pandas_spark.plans.micro_sum`) keep the
+    running sums exact and engine-portable; a row must satisfy
+    |value| < 9.2e12 (was 1e19), outside it the query raises."""
     ev = table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
@@ -350,10 +360,7 @@ def events_sliding_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.sum(F.col("value").cast("decimal(25,6)"))
-        .over(w)
-        .cast("double")
-        .alias("value_1h"),
+        from_micro(micro_sum(F.col("value")).over(w)).alias("value_1h"),
     )
 
 
@@ -406,11 +413,11 @@ def events_props_json_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_stream_enrich_batch",
-    oracle="""
+    oracle=f"""
     SELECT c.c_mktsegment,
            COUNT(*) AS n_events,
            COUNT(DISTINCT e.user_id) AS n_users,
-           CAST(SUM(CAST(e.value AS DECIMAL(25,6))) AS DOUBLE) AS total_value
+           {exact_sum_sql("e.value")} AS total_value
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
@@ -428,6 +435,9 @@ def events_stream_enrich_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles for the join — only the post-enrichment aggregation
     shuffles, on the low-cardinality segment key with map-side
     partials.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
+    (was 1e19), or the query raises.
     """
     ev = table(spark, sf_dir, "events")
     dim = table(spark, sf_dir, "customer").select(
@@ -439,9 +449,7 @@ def events_stream_enrich_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_events"),
             F.count_distinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("total_value"),
+            exact_sum(F.col("value")).alias("total_value"),
         )
     )
 

@@ -13,8 +13,9 @@ exercises that the clean synthetic testdata never does:
   each family — the contract is no exception and engine/oracle
   agreement on the (often NULL-bearing) aggregate row;
 - **residues**: doubles on decimal(25,6) rounding ties through the
-  sessionizer and q1, values outside the exact-sum domain (1e13,
-  NaN), hostile whitespace through the
+  sessionizer, q1, the tumbling window and a whole-cents sum, values
+  outside the exact-sum domain (1e13, NaN; also on a session handed
+  in with ANSI off), hostile whitespace through the
   ``_occurrences`` stopword scan, cumulative token sums landing
   exactly on the budget line, and a corrupt embedding corpus through
   the hygiene report;
@@ -535,6 +536,115 @@ def test_q1_raises_outside_the_micro_unit_domain(spark, tmp_path):
     sf = _lineitem_dir(spark, tmp_path, [1e13])
     with pytest.raises(Exception, match="CAST_OVERFLOW"):
         plans.QUERIES["q1_pricing_summary"](spark, sf).collect()
+
+
+def test_engine_conf_pins_ansi_so_micro_units_raise(spark, tmp_path):
+    """A session handed in with ANSI off: the registry's wrapper turns
+    ANSI back on, so the micro-unit cast still raises on 1e13 instead
+    of saturating to 2^63 - 1."""
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    sf = _events_dir(spark, tmp_path, [1e13, 185.22])
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            plans.QUERIES["events_sessionization"](spark, sf).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+
+
+def test_tumbling_window_shortest_repr_tie_matches_oracle(
+    spark, gate_compare, tmp_path
+):
+    """The q1 tie through the streaming module's batch window sums: a
+    per-row DECIMAL(25,6) cast gives …000001 in Spark and …000000 in
+    DuckDB; the shared micro-unit sum gives …000001 on both."""
+    sf = _events_dir(spark, tmp_path, [123456789.0000005, 185.22])
+    gate_compare(sf, "events_tumbling_window")
+
+
+def test_cents_shortest_repr_ties_match_oracle(spark, gate_compare, tmp_path):
+    """The same tie class through a whole-cents sum. Each value's
+    IEEE product with 1e6 is exactly n + 0.5 with n even, so a per-row
+    DECIMAL(25,6) cast rounds it up in Spark (HALF_UP on the shortest
+    repr) and down in DuckDB (half-even). The hour-0 cell sums
+    2·123456789.0000005 + 123456789.0049985: 3 micro-units apart, across
+    a half-cent, so the two engines' cents differed by one. The shared
+    micro-unit sum and ``micro_cents`` agree."""
+    sf = _events_dir(spark, tmp_path, [123456789.0000005, 123456789.0049985])
+    gate_compare(sf, "events_seasonality_profile")
+
+
+def test_micro_cents_floors_toward_negative_infinity(spark):
+    """Cents of a micro-unit sum are ⌊(s + 5000) / 10000⌋, as
+    ``FLOOR(SUM(x) * 100 + 0.5)`` was: a group summing to −0.016 is
+    −2 cents on both engines (a truncating division gives −1). A sum
+    past 2^53 micro-units stays exact (DuckDB's DECIMAL division
+    would go through DOUBLE)."""
+    from decimal import Decimal
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from almost_any_file_to_pandas_spark.plans import (
+        micro_cents,
+        micro_cents_sql,
+        micro_sum,
+        micro_sum_sql,
+    )
+
+    rows = [(1, -0.01), (1, -0.006), (2, -0.015), (3, 0.015)]
+    want = {1: -2, 2: -1, 3: 2}
+    got = spark.createDataFrame(rows, "g int, v double").groupBy("g").agg(
+        micro_cents(micro_sum(F.col("v"))).alias("c")
+    )
+    assert {r["g"]: r["c"] for r in got.collect()} == want
+    values = ", ".join(f"({g}, {v}::DOUBLE)" for g, v in rows)
+    duck = duckdb.sql(
+        f"SELECT g, {micro_cents_sql(micro_sum_sql('v'))}"
+        f" FROM (VALUES {values}) t(g, v) GROUP BY g"
+    ).fetchall()
+    assert dict(duck) == want
+
+    big = 123456789012345678
+    spark_big = spark.range(1).select(
+        micro_cents(F.lit(Decimal(big)).cast("decimal(38,0)")).alias("c")
+    ).first()["c"]
+    duck_big = duckdb.sql(
+        f"SELECT {micro_cents_sql(f'CAST({big} AS DECIMAL(38,0))')}"
+    ).fetchone()[0]
+    assert spark_big == duck_big == 12345678901235
+
+
+def test_q11_raises_outside_the_micro_unit_domain(spark, tmp_path):
+    """q11's per-part value sums are micro-unit sums: a lineitem row of
+    1e13 raises on both engines instead of summing to 2^63 - 1."""
+    import duckdb
+
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    tables = {
+        "lineitem": (
+            [(1, 1, 1e13), (2, 1, 185.22)],
+            "l_partkey long, l_suppkey long, l_extendedprice double",
+        ),
+        "supplier": ([(1, 3)], "s_suppkey long, s_nationkey long"),
+        "nation": ([(3, "NATION_3")], "n_nationkey long, n_name string"),
+    }
+    con = duckdb.connect()
+    for name, (rows, schema) in tables.items():
+        path = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM"
+            f" read_parquet('{path}/*.parquet')"
+        )
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        plans.QUERIES["q11_important_parts"](spark, str(tmp_path)).collect()
+    with pytest.raises(duckdb.ConversionException):
+        con.execute(plans.ORACLES["q11_important_parts"]).fetchall()
 
 
 @pytest.fixture()

@@ -1624,6 +1624,46 @@ EXACT_SUM_QUERIES = (
     "lineitem_scd2_point_in_time",
     "q7_volume_shipping",
     "q9_product_profit",
+    # the money and quantity sums outside the 16 above: HAVING on a
+    # sum, ratios, window sums, whole-cents sums, micro-unit columns
+    "q18_large_orders",
+    "q8_market_share",
+    "orders_cohort_ltv",
+    "orders_rolling_7d_revenue",
+    "order_value_decile_binning",
+    "customer_rfm_segments",
+    "q10_returned_items_topk",
+    "q6_forecast_revenue",
+    "q14_promo_revenue_share",
+    "q15_top_suppliers_by_quarter_revenue",
+    "q2_min_cost_supplier",
+    "q11_important_parts",
+    "supplier_topsis_ranking",
+    "part_abc_xyz_matrix",
+    "lineitem_unpivot_measures",
+    "events_anomaly_zscore",
+    "events_seasonality_profile",
+    "events_ab_cohort_compare",
+    "events_pivot_type_by_day",
+    "orders_monthly_dense_spine",
+    "orders_holt_linear_smoothing",
+    "events_anomaly_threshold_curve",
+    "events_ab_sample_size_chebyshev",
+    "events_did_estimator",
+    "orders_jackknife_mean_ci",
+    "orders_seasonal_decompose_additive",
+    "orders_holt_winters_seasonal",
+    "feat_segment_target_encode",
+    "feat_segment_ols_trend",
+    "feat_price_winsorize_census",
+    "feat_target_encode_oof",
+    "customer_rfm_kmeans_segments",
+    "customer_rfm_kmeans_elbow_curve",
+    "events_attribution_last_touch",
+    "events_tumbling_window",
+    "events_user_activity",
+    "events_sliding_user_value",
+    "events_stream_enrich_batch",
 )
 
 
@@ -1639,6 +1679,36 @@ def test_exact_sums_cast_no_row_to_decimal(spark, name):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "decimal(25,6)" not in plan
     assert "DECIMAL(25,6)" not in ORACLES[name]
+
+
+def test_scd2_point_in_time_join_keys_are_distinct_columns(
+    spark, gate_compare
+):
+    """Fact and dimension both come from one ``orders`` scan. The
+    point-in-time join must compare two distinct key attributes, not
+    one column with itself (a trivially true predicate that only
+    Spark's self-join auto-resolution turns into a real key). With
+    that auto-resolution off, the analyzed join still compares
+    distinct attribute ids and the query still matches its oracle."""
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    conf = "spark.sql.selfJoinAutoResolveAmbiguity"
+    spark.conf.set(conf, "false")
+    try:
+        df = plans.QUERIES["lineitem_scd2_point_in_time"](spark, SF_DIR)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        joins = [ln for ln in plan.split("\n") if "Join Inner" in ln]
+        pairs = [
+            eq
+            for ln in joins
+            for eq in re.findall(r"\w+#(\d+)L? = \w+#(\d+)L?", ln)
+        ]
+        assert len(joins) == 2 and len(pairs) == 2
+        assert all(a != b for a, b in pairs), pairs
+        gate_compare(SF_DIR, "lineitem_scd2_point_in_time")
+    finally:
+        spark.conf.unset(conf)
 
 
 def test_udf_modules_run_without_the_package_on_the_worker_path(tmp_path):
