@@ -32,14 +32,16 @@ from __future__ import annotations
 import math
 import struct
 import sys
-from typing import Iterator
 
-import pandas as pd
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table
+from almost_any_file_to_pandas_spark.operators.multimodal import (
+    _bmp_wrap,
+    decode_census,
+)
+from almost_any_file_to_pandas_spark.plans import register
 
 # The Arrow kernels call this module's decoder helpers: ship them to
 # the Python workers by value, so a worker never has to import the
@@ -640,16 +642,7 @@ def synth_bmp_jpeg(width: int, height: int) -> bytes:
     """BI_JPEG BMP (compression method 4): BMP headers wrapping the
     complete :func:`synth_jpeg` stream as the pixel data — the JPEG
     twin of ``synth_bmp_png``."""
-    jpg = synth_jpeg(width, height)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 0, 4,
-        len(jpg), 2835, 2835, 0, 0,
-    )
-    head = struct.pack(
-        "<2sIHHI", b"BM", 14 + len(info) + len(jpg), 0, 0,
-        14 + len(info),
-    )
-    return head + info + jpg
+    return _bmp_wrap(width, height, 0, 4, synth_jpeg(width, height))
 
 
 def decode_bmp_jpeg(content: bytes):
@@ -714,39 +707,20 @@ def mm_jpeg_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     level-shifted by :func:`decode_jpeg` inside ``mapInPandas``; the
     census sums the DECODED pixels against the closed-form oracle, so
     a regression anywhere in the entropy/IDCT chain breaks parity.
-
-    100 TB shape: identical to the other codec censuses — blobs exist
-    only inside Python worker batches; four integers per asset
-    shuffle; the census is ≤ {JPEG_WB_MOD}·{JPEG_HB_MOD} cells.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [], "height": [], "mode": [], "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_jpeg(
-                    8 * (did % JPEG_WB_MOD + 1),
-                    8 * (did % JPEG_HB_MOD + 1),
-                )
-                w, h, mode, pixels = decode_jpeg(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append(mode)
-                out["pixel_sum"].append(sum(pixels))
-            yield pd.DataFrame(out)
+    def row(did):
+        w, h, mode, pixels = decode_jpeg(
+            synth_jpeg(
+                8 * (did % JPEG_WB_MOD + 1), 8 * (did % JPEG_HB_MOD + 1)
+            )
+        )
+        return w, h, mode, sum(pixels)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, mode string, pixel_sum long",
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 3, 1, row,
+        "width long, height long, mode string, pixel_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")

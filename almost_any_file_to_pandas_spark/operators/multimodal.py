@@ -13,16 +13,18 @@ that needs it.
 The testdata has no real media, so ``content`` is derived
 deterministically from ``documents.text`` (utf-8 bytes) and the
 "decode" in mm_decode_features is a deterministic fake over those
-bytes. :func:`decode_image` DOES parse real uncompressed + BI_RLE8
-BMP stdlib-side (round-tripped in pytest and exercised distributed
-by ``mm_bmp_decode_census`` / ``mm_bmp_rle8_decode_census``),
-:func:`decode_png` covers the ENTIRE legal PNG IHDR matrix (all
-color types × spec depths 1–16, progressive + Adam7), and
-:func:`decode_wav` decodes 16-bit PCM plus the ITU-T G.711
-telephony codecs; the remaining codecs (BI_RLE4/bitfields BMP,
-IEEE-float/ADPCM WAV, JPEG...) stay gated behind Pillow/soundfile
-(``NotImplementedError`` without them). What IS real and
-load-bearing at scale:
+bytes. The codec decoders themselves are real and stdlib-only: BMP
+in every spec compression method (BI_RGB, BI_RLE8, BI_RLE4,
+BI_BITFIELDS, BI_PNG, and BI_JPEG through :mod:`operators.jpeg`'s
+baseline decoder), :func:`decode_png` over the ENTIRE legal IHDR
+matrix (all color types × spec depths 1–16, progressive + Adam7),
+:func:`decode_wav` over 16-bit PCM, 32-bit IEEE float, G.711 A/µ-law
+and IMA/MS ADPCM, plus GIF, TIFF (raw + LZW) and PNG-member ICO.
+Each codec has a ``*_decode_census`` query on the shared
+:func:`decode_census` kernel. Only formats outside that list
+(MP3-in-WAV, DIB icon members, other image containers) still need
+Pillow/soundfile (``NotImplementedError`` without them). What IS real
+and load-bearing at scale:
 
 - the binary column schema and its all-metadata companion columns,
 - the ``mapInPandas`` stage shape: Arrow-batched, per-batch vectorized
@@ -231,13 +233,13 @@ def decode_image(content: bytes):
     the call-site shape `mm_decode_features`'s batch loop would
     invoke per blob.
 
-    Uncompressed BMP (the one raster format the stdlib can both WRITE
-    byte-by-byte and verify — round-tripped in pytest against a
-    hand-built fixture) is parsed here directly from the ISO/IEC
-    29500-8-documented BITMAPFILEHEADER + BITMAPINFOHEADER layout; it
-    exercises the real decode arm end-to-end. Every other format
-    (PNG/JPEG/...) still requires Pillow, which this environment does
-    not ship — that gate stays honest."""
+    BMP headers are parsed natively (BITMAPFILEHEADER +
+    BITMAPINFOHEADER) for every spec compression method — BI_RGB,
+    BI_RLE8, BI_RLE4, BI_BITFIELDS, BI_JPEG and BI_PNG, whose pixel
+    decoders are the ``decode_bmp_*`` functions and
+    ``operators.jpeg.decode_bmp_jpeg`` — and PNG headers through
+    :func:`decode_png`. Any other container still requires Pillow,
+    which this environment does not ship."""
     import struct
 
     if len(content) >= 30 and content[:2] == b"BM":
@@ -283,18 +285,14 @@ def decode_image(content: bytes):
         # height < 0 encodes top-down row order; dimensions are |h|
         return width, abs(height), mode
     if content[:8] == PNG_SIGNATURE:
-        w, h, _ = decode_png_gray(content, want_pixels=False)
+        w, h, _ = decode_png(content, want_pixels=False)
         return w, h, "L"
     try:
         from PIL import Image  # noqa: F401
     except ImportError as exc:  # pragma: no cover
         raise NotImplementedError(
-            "image decoding beyond uncompressed BMP and 8-bit "
-            "grayscale PNG requires Pillow; install it in a real "
-            "deployment — the engine-side plumbing (binary column, "
-            "mapInPandas batch shape) is exercised by "
-            "mm_decode_features with a deterministic fake, and the "
-            "BMP/PNG arms above run the real decode paths in pytest"
+            "image containers other than BMP and PNG require Pillow; "
+            "install it in a real deployment"
         ) from exc
     import io
 
@@ -513,24 +511,57 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def decode_census(spark, sf_dir, mod, rem, row, schema, keys, *aggs):
+    """Per-asset codec census, shared by every ``*_decode_census``
+    query: the ``pmod(doc_id, mod) == rem`` slice of ``documents``
+    runs ``row(doc_id)`` — synthesize one asset, decode it, return one
+    tuple in ``schema`` order — inside one Arrow-batched
+    ``mapInPandas`` stage, then ``groupBy(*keys).agg(*aggs)``.
+
+    100 TB shape: blobs exist only inside the Python worker batches
+    (the synthesis stands in for a blob-store read), so content bytes
+    never shuffle; each asset ships a handful of scalar columns, and
+    the census frame is bounded by the synthesized dims and codec
+    variants, never by the corpus.
+    """
+    names = [field.split()[0] for field in schema.split(",")]
+    assets = table(spark, sf_dir, "documents").filter(
+        F.pmod(F.col("doc_id"), F.lit(mod)) == rem
+    ).select("doc_id")
+
+    def census_rows(batches: Iterator[pd.DataFrame]):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [row(int(did)) for did in pdf["doc_id"]], columns=names
+            )
+
+    decoded = assets.mapInPandas(census_rows, schema=schema)
+    return decoded.groupBy(*keys).agg(*aggs)
+
+
+def _bmp_wrap(width: int, height: int, bpp: int, compression: int,
+              pixels: bytes, extra: bytes = b"", colors: int = 0) -> bytes:
+    """Assemble BITMAPFILEHEADER + 40-byte BITMAPINFOHEADER + ``extra``
+    (palette or channel masks) + the pixel payload; the data offset
+    and both sizes follow from the parts."""
+    import struct
+
+    info = struct.pack(
+        "<IiiHHIIiiII", 40, width, height, 1, bpp, compression,
+        len(pixels), 2835, 2835, colors, 0,
+    )
+    off = 14 + len(info) + len(extra)
+    head = struct.pack("<2sIHHI", b"BM", off + len(pixels), 0, 0, off)
+    return head + info + extra + bytes(pixels)
+
+
 def synth_bmp(width: int, height: int, bpp: int = 24) -> bytes:
     """Deterministically assemble a minimal uncompressed BMP
     (BITMAPFILEHEADER + BITMAPINFOHEADER + zeroed pixel rows with the
     format's 4-byte row padding). Shared by the pytest fixture and
     :func:`mm_bmp_decode_census`'s distributed synthesis stage."""
-    import struct
-
     row = (width * (bpp // 8) + 3) & ~3
-    pixels = b"\x00" * (row * abs(height))
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, bpp, 0,
-        len(pixels), 2835, 2835, 0, 0,
-    )
-    head = struct.pack(
-        "<2sIHHI", b"BM", 14 + len(info) + len(pixels), 0, 0,
-        14 + len(info),
-    )
-    return head + info + pixels
+    return _bmp_wrap(width, height, bpp, 0, b"\x00" * (row * abs(height)))
 
 
 BMP_W_MOD = 16  # synthesized width  = doc_id % 16 + 1
@@ -564,40 +595,16 @@ def mm_bmp_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression breaks oracle parity, which restates the dims
     arithmetically plus the exact BMP byte-size formula
     (54-byte headers + 4-byte-padded rows).
-
-    This closes the round-6 'untested decode arm' gap END-TO-END in a
-    distributed plan: binary payloads live only inside the Python
-    worker batches (at 100 TB the decode stage streams Arrow batches
-    and ships back a handful of integer columns — content bytes never
-    shuffle), and the census aggregate is a ≤ {BMP_W_MOD}·{BMP_H_MOD}
-    cell frame. The synthesis stands in for a real blob-store read;
-    the decode is the real parser shared with the Pillow-gated
-    general arm.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {"width": [], "height": [], "mode": [], "nbytes": []}
-            for did in pdf["doc_id"]:
-                blob = synth_bmp(
-                    int(did) % BMP_W_MOD + 1, int(did) % BMP_H_MOD + 1
-                )
-                w, h, mode = decode_image(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append(mode)
-                out["nbytes"].append(len(blob))
-            yield pd.DataFrame(out)
+    def row(did):
+        blob = synth_bmp(did % BMP_W_MOD + 1, did % BMP_H_MOD + 1)
+        return (*decode_image(blob), len(blob))
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, mode string, nbytes long",
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 3, 0, row,
+        "width long, height long, mode string, nbytes long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -678,8 +685,6 @@ def synth_bmp_rle8(width: int, height: int) -> bytes:
     closed by the end-of-line escape and the stream by end-of-bitmap.
     Includes the 256-entry grayscale palette the format requires, so
     the data offset in the file header is load-bearing."""
-    import struct
-
     enc = bytearray()
     for j in range(height):  # stored bottom-up
         y = height - 1 - j
@@ -705,18 +710,8 @@ def synth_bmp_rle8(width: int, height: int) -> bytes:
                     x += n
         enc += b"\x00\x00"  # end of line
     enc += b"\x00\x01"  # end of bitmap
-    palette = b"".join(
-        struct.pack("<BBBB", j, j, j, 0) for j in range(256)
-    )
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 8, 1,
-        len(enc), 2835, 2835, 256, 0,
-    )
-    data_off = 14 + len(info) + len(palette)
-    head = struct.pack(
-        "<2sIHHI", b"BM", data_off + len(enc), 0, 0, data_off
-    )
-    return head + info + palette + bytes(enc)
+    palette = bytes(v for j in range(256) for v in (j, j, j, 0))
+    return _bmp_wrap(width, height, 8, 1, enc, palette, 256)
 
 
 @register(
@@ -764,45 +759,19 @@ def mm_bmp_rle8_decode_census(
     alignment, or row-order bug breaks parity. Uses the ``doc_id %
     5 = 4`` asset slice. The delta escape is pinned by a pytest hand
     fixture (rarely emitted by encoders, never by this synth).
-
-    100 TB shape: identical to the other codec censuses — blobs stay
-    inside worker batches, five integers per asset shuffle, the
-    census frame is ≤{BMP_W_MOD}·{BMP_H_MOD} cells.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 4).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_bmp_rle8(
-                    did % BMP_W_MOD + 1, did % BMP_H_MOD + 1
-                )
-                w, h, px = decode_bmp_rle8(blob)
-                mw, mh, mode = decode_image(blob)
-                assert (mw, mh) == (w, h)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append(mode)
-                out["pixel_sum"].append(sum(px))
-            yield pd.DataFrame(out)
+    def row(did):
+        blob = synth_bmp_rle8(did % BMP_W_MOD + 1, did % BMP_H_MOD + 1)
+        w, h, px = decode_bmp_rle8(blob)
+        mw, mh, mode = decode_image(blob)
+        assert (mw, mh) == (w, h)
+        return w, h, mode, sum(px)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, mode string, pixel_sum long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 5, 4, row,
+        "width long, height long, mode string, pixel_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -894,8 +863,6 @@ def synth_bmp_rle4(width: int, height: int) -> bytes:
     with end-of-line, the stream with end-of-bitmap; the 16-entry
     palette the 4-bit format requires makes the header's data offset
     load-bearing."""
-    import struct
-
     enc = bytearray()
     for j in range(height):  # stored bottom-up
         y = height - 1 - j
@@ -929,18 +896,8 @@ def synth_bmp_rle4(width: int, height: int) -> bytes:
                     x += n
         enc += b"\x00\x00"  # end of line
     enc += b"\x00\x01"  # end of bitmap
-    palette = b"".join(
-        struct.pack("<BBBB", j * 17, j * 17, j * 17, 0) for j in range(16)
-    )
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 4, 2,
-        len(enc), 2835, 2835, 16, 0,
-    )
-    data_off = 14 + len(info) + len(palette)
-    head = struct.pack(
-        "<2sIHHI", b"BM", data_off + len(enc), 0, 0, data_off
-    )
-    return head + info + palette + bytes(enc)
+    palette = bytes(v for j in range(16) for v in (17 * j, 17 * j, 17 * j, 0))
+    return _bmp_wrap(width, height, 4, 2, enc, palette, 16)
 
 
 @register(
@@ -991,45 +948,19 @@ def mm_bmp_rle4_decode_census(
     alignment, or row-order bug breaks parity. Uses the ``doc_id %
     5 = 2`` asset slice; the delta escape and malformed streams are
     pinned by pytest hand fixtures.
-
-    100 TB shape: identical to the other codec censuses — blobs stay
-    inside worker batches, five integers per asset shuffle, the
-    census frame is ≤{BMP_W_MOD}·{BMP_H_MOD} cells.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 2).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_bmp_rle4(
-                    did % BMP_W_MOD + 1, did % BMP_H_MOD + 1
-                )
-                w, h, px = decode_bmp_rle4(blob)
-                mw, mh, mode = decode_image(blob)
-                assert (mw, mh) == (w, h)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append(mode)
-                out["pixel_sum"].append(sum(px))
-            yield pd.DataFrame(out)
+    def row(did):
+        blob = synth_bmp_rle4(did % BMP_W_MOD + 1, did % BMP_H_MOD + 1)
+        w, h, px = decode_bmp_rle4(blob)
+        mw, mh, mode = decode_image(blob)
+        assert (mw, mh) == (w, h)
+        return w, h, mode, sum(px)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, mode string, pixel_sum long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 5, 2, row,
+        "width long, height long, mode string, pixel_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -1129,16 +1060,7 @@ def synth_bmp_bitfields(width: int, height: int, bpp: int) -> bytes:
             )
         row += b"\x00" * (stride - len(row))
         rows += row
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, bpp, 3,
-        len(rows), 2835, 2835, 0, 0,
-    )
-    mask_blk = struct.pack("<III", *masks)
-    data_off = 14 + len(info) + len(mask_blk)
-    head = struct.pack(
-        "<2sIHHI", b"BM", data_off + len(rows), 0, 0, data_off
-    )
-    return head + info + mask_blk + bytes(rows)
+    return _bmp_wrap(width, height, bpp, 3, rows, struct.pack("<III", *masks))
 
 
 @register(
@@ -1186,51 +1108,23 @@ def mm_bmp_bitfields_decode_census(
     enumerates each grid and restates the three gradients — a mask,
     shift, stride, or endianness bug breaks parity on one depth or
     both. Uses the ``doc_id % 5 = 3`` asset slice.
-
-    100 TB shape: identical to the other codec censuses — blobs stay
-    inside worker batches, six integers per asset shuffle, the census
-    frame is ≤2·{BMP_W_MOD}·{BMP_H_MOD} cells.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 3).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "bpp": [],
-                "r_sum": [],
-                "g_sum": [],
-                "b_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                depth = 16 if did % 2 == 0 else 32
-                blob = synth_bmp_bitfields(
-                    did % BMP_W_MOD + 1, did % BMP_H_MOD + 1, depth
-                )
-                w, h, bpp, (r, g, b) = decode_bmp_bitfields(blob)
-                mw, mh, mode = decode_image(blob)
-                assert (mw, mh) == (w, h) and mode == f"BF{bpp}"
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bpp"].append(bpp)
-                out["r_sum"].append(sum(r))
-                out["g_sum"].append(sum(g))
-                out["b_sum"].append(sum(b))
-            yield pd.DataFrame(out)
+    def row(did):
+        depth = 16 if did % 2 == 0 else 32
+        blob = synth_bmp_bitfields(
+            did % BMP_W_MOD + 1, did % BMP_H_MOD + 1, depth
+        )
+        w, h, bpp, (r, g, b) = decode_bmp_bitfields(blob)
+        mw, mh, mode = decode_image(blob)
+        assert (mw, mh) == (w, h) and mode == f"BF{bpp}"
+        return w, h, bpp, sum(r), sum(g), sum(b)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, bpp long, "
-            "r_sum long, g_sum long, b_sum long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "bpp").agg(
+    return decode_census(
+        spark, sf_dir, 5, 3, row,
+        "width long, height long, bpp long, "
+        "r_sum long, g_sum long, b_sum long",
+        ("width", "height", "bpp"),
         F.count("*").alias("n_images"),
         F.sum("r_sum").cast("long").alias("r_sum_total"),
         F.sum("g_sum").cast("long").alias("g_sum_total"),
@@ -1247,18 +1141,7 @@ def synth_bmp_png(width: int, height: int) -> bytes:
     round-8 'methods 4/5 require Pillow' gate on the PNG half — the
     engine already ships a full spec PNG decoder, so BI_PNG is just
     container routing."""
-    import struct
-
-    png = synth_png(width, height)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 0, 5,
-        len(png), 2835, 2835, 0, 0,
-    )
-    head = struct.pack(
-        "<2sIHHI", b"BM", 14 + len(info) + len(png), 0, 0,
-        14 + len(info),
-    )
-    return head + info + png
+    return _bmp_wrap(width, height, 0, 5, synth_png(width, height))
 
 
 def decode_bmp_png(content: bytes):
@@ -1325,49 +1208,59 @@ def mm_bmp_png_decode_census(
     oracle parity (the oracle restates the gradient's closed-form
     sum; byte size is deliberately not censused — deflate length is
     zlib-version detail).
-
-    100 TB shape: identical to the other codec censuses — nested
-    blobs live only inside Python worker batches, four integers per
-    asset shuffle, the census is a ≤{BMP_W_MOD}·{BMP_H_MOD}-cell
-    frame. Remaining honest gate: BI_JPEG (method 4) requires a JPEG
-    decoder.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_bmp_png(
-                    did % BMP_W_MOD + 1, did % BMP_H_MOD + 1
-                )
-                w, h, pixels = decode_bmp_png(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("PNG")
-                out["pixel_sum"].append(sum(pixels))
-            yield pd.DataFrame(out)
+    def row(did):
+        blob = synth_bmp_png(did % BMP_W_MOD + 1, did % BMP_H_MOD + 1)
+        w, h, pixels = decode_bmp_png(blob)
+        return w, h, "PNG", sum(pixels)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, mode string, pixel_sum long",
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 3, 2, row,
+        "width long, height long, mode string, pixel_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
         .alias("total_pixels"),
         F.sum("pixel_sum").cast("long").alias("total_pixel_sum"),
     )
+
+
+def _wav_wrap(fmt: bytes, data: bytes) -> bytes:
+    """Assemble a RIFF/WAVE container of one ``fmt `` and one ``data``
+    chunk; the RIFF size counts everything after its own field,
+    ``4 + (8 + len(fmt)) + (8 + len(data))``."""
+    import struct
+
+    return (
+        struct.pack("<4sI4s", b"RIFF", 20 + len(fmt) + len(data), b"WAVE")
+        + struct.pack("<4sI", b"fmt ", len(fmt))
+        + fmt
+        + struct.pack("<4sI", b"data", len(data))
+        + bytes(data)
+    )
+
+
+def _wav_chunks(content: bytes):
+    """Walk a RIFF/WAVE chunk list (id + little-endian size,
+    word-aligned) → (``fmt `` body, ``data`` body)."""
+    import struct
+
+    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE container")
+    pos, fmt, data = 12, None, None
+    while pos + 8 <= len(content):
+        cid, size = struct.unpack_from("<4sI", content, pos)
+        body = content[pos + 8 : pos + 8 + size]
+        if cid == b"fmt ":
+            fmt = body
+        elif cid == b"data":
+            data = body
+        pos += 8 + size + (size & 1)  # chunks are word-aligned
+    if fmt is None or data is None:
+        raise ValueError("missing fmt/data chunk")
+    return fmt, data
 
 
 def synth_wav(rate: int, channels: int, n_frames: int) -> bytes:
@@ -1385,13 +1278,7 @@ def synth_wav(rate: int, channels: int, n_frames: int) -> bytes:
     fmt = struct.pack(
         "<HHIIHH", 1, channels, rate, rate * channels * 2, channels * 2, 16
     )
-    return (
-        struct.pack("<4sI4s", b"RIFF", 36 + len(frame), b"WAVE")
-        + struct.pack("<4sI", b"fmt ", len(fmt))
-        + fmt
-        + struct.pack("<4sI", b"data", len(frame))
-        + frame
-    )
+    return _wav_wrap(fmt, frame)
 
 
 def _g711_tables():
@@ -1416,38 +1303,25 @@ _ULAW_TABLE, _ALAW_TABLE = _g711_tables()
 
 def decode_wav(content: bytes):
     """Real audio decode: (bytes in → (rate, channels, n_frames,
-    sum_sq) out). Walks the RIFF chunk list per the WAVE container
-    spec (id + little-endian size, word-aligned), parses the ``fmt ``
-    chunk, and decodes the ``data`` payload into samples whose energy
-    (Σ value²) is computed from the DECODED ints — so a decoder
-    regression breaks census parity. Four real codec arms: 16-bit
-    PCM (format 1), 32-bit IEEE float (format 3, energy rounded to
-    the nearest integer — exact for integer-valued samples), and
-    ITU-T G.711 A-law (format 6) / µ-law (format 7) — the telephony
-    codecs, expanded through the spec's integer segment tables — and
-    IMA/DVI ADPCM (format 0x11, via
-    :func:`decode_wav_ima_adpcm`'s block/step-table recurrence). The
-    remaining codecs (MS-ADPCM, MP3-in-WAV...) raise the honest
-    ``NotImplementedError`` gate, mirroring :func:`decode_image`'s
-    compressed-BMP arm."""
+    sum_sq) out). Walks the RIFF chunk list (:func:`_wav_chunks`),
+    parses the ``fmt `` chunk, and decodes the ``data`` payload into
+    samples whose energy (Σ value²) is computed from the DECODED ints
+    — so a decoder regression breaks census parity. Real codec arms:
+    16-bit PCM (format 1), 32-bit IEEE float (format 3, energy rounded
+    to the nearest integer — exact for integer-valued samples), ITU-T
+    G.711 A-law (format 6) / µ-law (format 7) — the telephony codecs,
+    expanded through the spec's integer segment tables — and IMA/DVI
+    ADPCM (format 0x11) and MS-ADPCM (format 2) through their block
+    decoders. Other codecs (MP3-in-WAV...) raise
+    ``NotImplementedError``."""
     import array
     import struct
     import sys
 
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE container")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(content):
-        cid, size = struct.unpack_from("<4sI", content, pos)
-        body = content[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, channels, rate, _, _, bits = fmt
+    fmt, data = _wav_chunks(content)
+    audio_format, channels, rate, _, _, bits = struct.unpack_from(
+        "<HHIIHH", fmt, 0
+    )
     if audio_format in (6, 7) and bits == 8:
         tbl = _ALAW_TABLE if audio_format == 6 else _ULAW_TABLE
         n_frames = len(data) // channels
@@ -1545,19 +1419,7 @@ def decode_wav_ima_adpcm(content: bytes):
     block align) raises ValueError."""
     import struct
 
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE container")
-    pos, fmt_body, data = 12, None, None
-    while pos + 8 <= len(content):
-        cid, size = struct.unpack_from("<4sI", content, pos)
-        body = content[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt_body = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if fmt_body is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt_body, data = _wav_chunks(content)
     audio_format, channels, rate, _, block_align, bits = struct.unpack_from(
         "<HHIIHH", fmt_body, 0
     )
@@ -1635,13 +1497,7 @@ def synth_wav_ima_adpcm(
         "<HHIIHHHH", 0x11, channels, rate,
         (rate * block_align) // spb, block_align, 4, 2, spb,
     )
-    return (
-        struct.pack("<4sI4s", b"RIFF", 28 + len(fmt) + len(blocks), b"WAVE")
-        + struct.pack("<4sI", b"fmt ", len(fmt))
-        + fmt
-        + struct.pack("<4sI", b"data", len(blocks))
-        + bytes(blocks)
-    )
+    return _wav_wrap(fmt, blocks)
 
 
 _IMA_STEP_SQL = "[" + ",".join(str(v) for v in _IMA_STEP_TABLE) + "]"
@@ -1714,50 +1570,26 @@ def mm_wav_adpcm_decode_census(
     the recurrence in a recursive CTE over an independently restated
     step table — a table, clamp, nibble-order, interleave, or
     truncation bug (the shift-sum diff is NOT ``((2m+1)s)>>3``)
-    breaks parity. Uses the ``doc_id % 5 = 1`` asset slice.
-
-    100 TB shape: identical to the other codec censuses — blobs stay
-    inside worker batches, five integers per asset shuffle, the
-    census frame is ≤8 cells; the oracle's recursion is
-    samples-per-block-bounded (≤33 levels), never corpus-bounded.
+    breaks parity. Uses the ``doc_id % 5 = 1`` asset slice. The
+    oracle's recursion is samples-per-block-bounded (≤33 levels),
+    never corpus-bounded.
     """
-    docs = table(spark, sf_dir, "documents")
-    assets = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 1).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "channels": [],
-                "samples_per_block": [],
-                "n_samples": [],
-                "sample_sum": [],
-                "energy": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ch = 1 + (did % 2)
-                spb = 8 * ((did % 4) + 1) + 1
-                blob = synth_wav_ima_adpcm(did, ch, spb)
-                rate, dch, chans = decode_wav_ima_adpcm(blob)
-                assert (rate, dch) == (8000, ch)
-                flat = [v for c in chans for v in c]
-                out["channels"].append(ch)
-                out["samples_per_block"].append(spb)
-                out["n_samples"].append(len(flat))
-                out["sample_sum"].append(sum(flat))
-                out["energy"].append(sum(v * v for v in flat))
-            yield pd.DataFrame(out)
+    def row(did):
+        ch = 1 + (did % 2)
+        spb = 8 * ((did % 4) + 1) + 1
+        rate, dch, chans = decode_wav_ima_adpcm(
+            synth_wav_ima_adpcm(did, ch, spb)
+        )
+        assert (rate, dch) == (8000, ch)
+        flat = [v for c in chans for v in c]
+        return ch, spb, len(flat), sum(flat), sum(v * v for v in flat)
 
-    decoded = assets.mapInPandas(
-        decode_batches,
-        schema=(
-            "channels long, samples_per_block long, n_samples long, "
-            "sample_sum long, energy long"
-        ),
-    )
-    return decoded.groupBy("channels", "samples_per_block").agg(
+    return decode_census(
+        spark, sf_dir, 5, 1, row,
+        "channels long, samples_per_block long, n_samples long, "
+        "sample_sum long, energy long",
+        ("channels", "samples_per_block"),
         F.count("*").alias("n_assets"),
         F.sum("n_samples").cast("long").alias("total_samples"),
         F.sum("sample_sum").cast("long").alias("total_sample_sum"),
@@ -1806,52 +1638,25 @@ def mm_wav_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     2·channels bytes per frame) and the ramp's closed-form sum of
     squares (q full 17-sample cycles of {_WAV_RAMP_CYCLE_SSQ} plus the
     partial-cycle square pyramid), so a header-walk or PCM-decode
-    regression breaks oracle parity.
-
-    100 TB shape: audio blobs live only inside the Python worker
-    batches (the synthesis stands in for a blob-store read); the
-    shuffle carries four integer columns per asset, and the census
-    aggregate is a ≤4-cell frame (2 rates × 2 channel layouts).
-    Duration is exact integer microseconds — frame counts are
-    multiples of 8, so nf·10⁶ divides evenly by both 8000 and 16000.
+    regression breaks oracle parity. Duration is exact integer
+    microseconds — frame counts are multiples of 8, so nf·10⁶ divides
+    evenly by both 8000 and 16000.
     """
-    docs = table(spark, sf_dir, "documents")
-    auds = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "sample_rate": [],
-                "channels": [],
-                "n_frames": [],
-                "nbytes": [],
-                "energy": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_wav(
-                    8000 * (did % 2 + 1),
-                    1 if did % 4 < 2 else 2,
-                    (did % WAV_FRAMES_MOD + 1) * 8,
-                )
-                rate, ch, nf, ssq = decode_wav(blob)
-                out["sample_rate"].append(rate)
-                out["channels"].append(ch)
-                out["n_frames"].append(nf)
-                out["nbytes"].append(len(blob))
-                out["energy"].append(ssq)
-            yield pd.DataFrame(out)
+    def row(did):
+        blob = synth_wav(
+            8000 * (did % 2 + 1),
+            1 if did % 4 < 2 else 2,
+            (did % WAV_FRAMES_MOD + 1) * 8,
+        )
+        rate, ch, nf, ssq = decode_wav(blob)
+        return rate, ch, nf, len(blob), ssq
 
-    decoded = auds.mapInPandas(
-        decode_batches,
-        schema=(
-            "sample_rate long, channels long, n_frames long, "
-            "nbytes long, energy long"
-        ),
-    )
-    return decoded.groupBy("sample_rate", "channels").agg(
+    return decode_census(
+        spark, sf_dir, 3, 1, row,
+        "sample_rate long, channels long, n_frames long, "
+        "nbytes long, energy long",
+        ("sample_rate", "channels"),
         F.count("*").alias("n_assets"),
         F.sum("n_frames").alias("total_frames"),
         F.sum("nbytes").alias("total_bytes"),
@@ -1878,13 +1683,7 @@ def synth_wav_float(rate: int, channels: int, n_frames: int) -> bytes:
         "<HHIIHH", 3, channels, rate, rate * channels * 4,
         channels * 4, 32,
     )
-    return (
-        struct.pack("<4sI4s", b"RIFF", 36 + len(frame), b"WAVE")
-        + struct.pack("<4sI", b"fmt ", len(fmt))
-        + fmt
-        + struct.pack("<4sI", b"data", len(frame))
-        + frame
-    )
+    return _wav_wrap(fmt, frame)
 
 
 @register(
@@ -1922,47 +1721,22 @@ def mm_wav_float_decode_census(
     while the byte-size arithmetic pins the 4-byte sample width.
     Decoded by :func:`decode_wav`'s float arm. Uses the ``doc_id %
     3 = 2`` asset slice (both rates × both channel layouts).
-
-    100 TB shape: identical to the PCM census — blobs stay inside
-    worker batches, five integers per asset shuffle, ≤4-cell census.
     """
-    docs = table(spark, sf_dir, "documents")
-    auds = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "sample_rate": [],
-                "channels": [],
-                "n_frames": [],
-                "nbytes": [],
-                "energy": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_wav_float(
-                    8000 * (did % 2 + 1),
-                    1 if did % 4 < 2 else 2,
-                    (did % WAV_FRAMES_MOD + 1) * 8,
-                )
-                rate, ch, nf, ssq = decode_wav(blob)
-                out["sample_rate"].append(rate)
-                out["channels"].append(ch)
-                out["n_frames"].append(nf)
-                out["nbytes"].append(len(blob))
-                out["energy"].append(ssq)
-            yield pd.DataFrame(out)
+    def row(did):
+        blob = synth_wav_float(
+            8000 * (did % 2 + 1),
+            1 if did % 4 < 2 else 2,
+            (did % WAV_FRAMES_MOD + 1) * 8,
+        )
+        rate, ch, nf, ssq = decode_wav(blob)
+        return rate, ch, nf, len(blob), ssq
 
-    decoded = auds.mapInPandas(
-        decode_batches,
-        schema=(
-            "sample_rate long, channels long, n_frames long, "
-            "nbytes long, energy long"
-        ),
-    )
-    return decoded.groupBy("sample_rate", "channels").agg(
+    return decode_census(
+        spark, sf_dir, 3, 2, row,
+        "sample_rate long, channels long, n_frames long, "
+        "nbytes long, energy long",
+        ("sample_rate", "channels"),
         F.count("*").alias("n_assets"),
         F.sum("n_frames").alias("total_frames"),
         F.sum("nbytes").alias("total_bytes"),
@@ -1988,13 +1762,7 @@ def synth_wav_g711(channels: int, n_frames: int, law: str) -> bytes:
     fmt = struct.pack(
         "<HHIIHH", tag, channels, rate, rate * channels, channels, 8
     )
-    return (
-        struct.pack("<4sI4s", b"RIFF", 36 + len(frame), b"WAVE")
-        + struct.pack("<4sI", b"fmt ", len(fmt))
-        + fmt
-        + struct.pack("<4sI", b"data", len(frame))
-        + frame
-    )
+    return _wav_wrap(fmt, frame)
 
 
 @register(
@@ -2067,49 +1835,21 @@ def mm_wav_g711_decode_census(
     never exceed one 256-code cycle) — so a table, sign, or segment
     bug in EITHER derivation breaks parity. Uses the ``doc_id % 5 =
     3`` asset slice.
-
-    100 TB shape: identical to the PCM census — blobs live only
-    inside Python worker batches; five integers per asset shuffle;
-    the census frame is ≤4 cells (2 codecs × 2 channel layouts).
     """
-    docs = table(spark, sf_dir, "documents")
-    auds = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 3).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "codec": [],
-                "channels": [],
-                "n_frames": [],
-                "nbytes": [],
-                "energy": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                law = "ulaw" if did % 2 == 0 else "alaw"
-                blob = synth_wav_g711(
-                    1 if did % 4 < 2 else 2,
-                    (did % WAV_FRAMES_MOD + 1) * 8,
-                    law,
-                )
-                _, ch, nf, ssq = decode_wav(blob)
-                out["codec"].append(law)
-                out["channels"].append(ch)
-                out["n_frames"].append(nf)
-                out["nbytes"].append(len(blob))
-                out["energy"].append(ssq)
-            yield pd.DataFrame(out)
+    def row(did):
+        law = "ulaw" if did % 2 == 0 else "alaw"
+        blob = synth_wav_g711(
+            1 if did % 4 < 2 else 2, (did % WAV_FRAMES_MOD + 1) * 8, law
+        )
+        _, ch, nf, ssq = decode_wav(blob)
+        return law, ch, nf, len(blob), ssq
 
-    decoded = auds.mapInPandas(
-        decode_batches,
-        schema=(
-            "codec string, channels long, n_frames long, "
-            "nbytes long, energy long"
-        ),
-    )
-    return decoded.groupBy("codec", "channels").agg(
+    return decode_census(
+        spark, sf_dir, 5, 3, row,
+        "codec string, channels long, n_frames long, "
+        "nbytes long, energy long",
+        ("codec", "channels"),
         F.count("*").alias("n_assets"),
         F.sum("n_frames").alias("total_frames"),
         F.sum("nbytes").alias("total_bytes"),
@@ -2235,13 +1975,42 @@ def mm_video_shot_boundaries(
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
-def synth_png(width: int, height: int) -> bytes:
-    """Deterministically assemble a REAL 8-bit grayscale PNG
-    (ISO/IEC 15948): IHDR + zlib-deflated IDAT (filter 0 scanlines,
-    pixel value = (x+y) % 256 — whose sum has the closed form the
-    census oracle restates) + IEND, chunk CRCs per spec. Shared by
-    the pytest round-trip fixture and
-    :func:`mm_png_decode_census`'s distributed synthesis stage."""
+def _png_forward_filter(rows, bpp: int) -> bytes:
+    """Forward-filter raw scanlines with type ``j % 5`` (row index
+    within the group), the synth-side inverse of
+    :func:`_png_defilter` — shared by the filtered synths so every
+    decode exercises all five filters."""
+    enc = bytearray()
+    prev = bytes(len(rows[0])) if rows else b""
+    for j, row in enumerate(rows):
+        ft = j % 5
+        line = bytearray(len(row))
+        for x in range(len(row)):
+            a = row[x - bpp] if x >= bpp else 0
+            b = prev[x]
+            c = prev[x - bpp] if x >= bpp else 0
+            if ft == 0:
+                pred = 0
+            elif ft == 1:
+                pred = a
+            elif ft == 2:
+                pred = b
+            elif ft == 3:
+                pred = (a + b) // 2
+            else:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = (
+                    a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+                )
+            line[x] = (row[x] - pred) & 0xFF
+        enc += bytes([ft]) + bytes(line)
+        prev = bytes(row)
+    return bytes(enc)
+
+
+def _png_wrap(ihdr_fields, idat_raw: bytes, plte: bytes = b"") -> bytes:
+    """Assemble signature + IHDR (+PLTE) + deflated IDAT + IEND."""
     import struct
     import zlib
 
@@ -2253,18 +2022,28 @@ def synth_png(width: int, height: int) -> bytes:
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+    out = PNG_SIGNATURE + chunk(
+        b"IHDR", struct.pack(">IIBBBBB", *ihdr_fields)
+    )
+    if plte:
+        out += chunk(b"PLTE", plte)
+    return out + chunk(b"IDAT", zlib.compress(idat_raw)) + chunk(
+        b"IEND", b""
+    )
+
+
+def synth_png(width: int, height: int) -> bytes:
+    """Deterministically assemble a REAL 8-bit grayscale PNG
+    (ISO/IEC 15948): IHDR + zlib-deflated IDAT (filter 0 scanlines,
+    pixel value = (x+y) % 256 — whose sum has the closed form the
+    census oracle restates) + IEND, chunk CRCs per spec. Shared by
+    the pytest round-trip fixture and
+    :func:`mm_png_decode_census`'s distributed synthesis stage."""
     raw = b"".join(
-        b"\x00"
-        + bytes((x + y) % 256 for x in range(width))
+        b"\x00" + bytes((x + y) % 256 for x in range(width))
         for y in range(height)
     )
-    return (
-        PNG_SIGNATURE
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
+    return _png_wrap((width, height, 8, 0, 0, 0, 0), raw)
 
 
 # channels per pixel by color type (3 = palette: 1-byte indices)
@@ -2459,119 +2238,19 @@ def decode_png(content: bytes, want_pixels: bool = True):
     return width, height, bytes(out)
 
 
-# historical name (the round-7 grayscale-only decoder) — same function
-decode_png_gray = decode_png
-
-
 def synth_png_gray16(width: int, height: int) -> bytes:
     """Deterministically assemble a REAL 16-bit grayscale PNG: sample
     value (x+y)·257 (the 8→16-bit replication constant; < 65536 at
     census dims), big-endian per spec, scanlines forward-filtered
     ``y % 5`` at bpp 2."""
     import struct
-    import zlib
 
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    bpp = 2
-    ihdr = struct.pack(">IIBBBBB", width, height, 16, 0, 0, 0, 0)
-    enc = bytearray()
-    prev = bytes(width * bpp)
-    for y in range(height):
-        row = b"".join(
-            struct.pack(">H", (x + y) * 257) for x in range(width)
-        )
-        ft = y % 5
-        line = bytearray(len(row))
-        for x in range(len(row)):
-            a = row[x - bpp] if x >= bpp else 0
-            b = prev[x]
-            c = prev[x - bpp] if x >= bpp else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = (
-                    a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                )
-            line[x] = (row[x] - pred) & 0xFF
-        enc += bytes([ft]) + bytes(line)
-        prev = row
-    return (
-        PNG_SIGNATURE
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(enc)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _png_forward_filter(rows, bpp: int) -> bytes:
-    """Forward-filter raw scanlines with type ``j % 5`` (row index
-    within the group), the synth-side inverse of
-    :func:`_png_defilter` — shared by the RGBA and Adam7 synths so
-    every decode exercises all five filters."""
-    enc = bytearray()
-    prev = bytes(len(rows[0])) if rows else b""
-    for j, row in enumerate(rows):
-        ft = j % 5
-        line = bytearray(len(row))
-        for x in range(len(row)):
-            a = row[x - bpp] if x >= bpp else 0
-            b = prev[x]
-            c = prev[x - bpp] if x >= bpp else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = (
-                    a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                )
-            line[x] = (row[x] - pred) & 0xFF
-        enc += bytes([ft]) + bytes(line)
-        prev = bytes(row)
-    return bytes(enc)
-
-
-def _png_wrap(ihdr_fields, idat_raw: bytes, plte: bytes = b"") -> bytes:
-    """Assemble signature + IHDR (+PLTE) + deflated IDAT + IEND."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    out = PNG_SIGNATURE + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", *ihdr_fields)
-    )
-    if plte:
-        out += chunk(b"PLTE", plte)
-    return out + chunk(b"IDAT", zlib.compress(idat_raw)) + chunk(
-        b"IEND", b""
+    rows = [
+        b"".join(struct.pack(">H", (x + y) * 257) for x in range(width))
+        for y in range(height)
+    ]
+    return _png_wrap(
+        (width, height, 16, 0, 0, 0, 0), _png_forward_filter(rows, 2)
     )
 
 
@@ -2628,56 +2307,15 @@ def synth_png_palette(width: int, height: int) -> bytes:
     gradient (x+y) % {PLTE_ENTRIES}, scanlines forward-filtered
     ``y % 5`` at bpp 1 — every spec filter exercised on the index
     plane of any image ≥ 5 rows."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 3, 0, 0, 0)
     plte = bytes(
-        v
-        for j in range(PLTE_ENTRIES)
-        for v in (7 * j, 11 * j, 13 * j)
+        v for j in range(PLTE_ENTRIES) for v in (7 * j, 11 * j, 13 * j)
     )
-    enc = bytearray()
-    prev = bytes(width)
-    for y in range(height):
-        row = bytes((x + y) % PLTE_ENTRIES for x in range(width))
-        ft = y % 5
-        line = bytearray(width)
-        for x in range(width):
-            a = row[x - 1] if x else 0
-            b = prev[x]
-            c = prev[x - 1] if x else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = (
-                    a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                )
-            line[x] = (row[x] - pred) & 0xFF
-        enc += bytes([ft]) + bytes(line)
-        prev = row
-    return (
-        PNG_SIGNATURE
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", plte)
-        + chunk(b"IDAT", zlib.compress(bytes(enc)))
-        + chunk(b"IEND", b"")
+    rows = [
+        bytes((x + y) % PLTE_ENTRIES for x in range(width))
+        for y in range(height)
+    ]
+    return _png_wrap(
+        (width, height, 8, 3, 0, 0, 0), _png_forward_filter(rows, 1), plte
     )
 
 
@@ -2689,55 +2327,16 @@ def synth_png_rgb(width: int, height: int) -> bytes:
     so a decode of any image ≥ 5 rows exercises every spec filter at
     bpp 3 (the gray synth is filter-0 only; pytest covers its filter
     variants separately)."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+    rows = [
+        bytes(
+            v
+            for x in range(width)
+            for v in ((x + y) % 256, (2 * x + y) % 256, (x + 3 * y) % 256)
         )
-
-    bpp = 3
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    enc = bytearray()
-    prev = bytes(width * bpp)
-    for y in range(height):
-        row = bytearray()
-        for x in range(width):
-            row += bytes(
-                ((x + y) % 256, (2 * x + y) % 256, (x + 3 * y) % 256)
-            )
-        ft = y % 5
-        line = bytearray(len(row))
-        for x in range(len(row)):
-            a = row[x - bpp] if x >= bpp else 0
-            b = prev[x]
-            c = prev[x - bpp] if x >= bpp else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = (
-                    a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                )
-            line[x] = (row[x] - pred) & 0xFF
-        enc += bytes([ft]) + bytes(line)
-        prev = bytes(row)
-    return (
-        PNG_SIGNATURE
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(enc)))
-        + chunk(b"IEND", b"")
+        for y in range(height)
+    ]
+    return _png_wrap(
+        (width, height, 8, 2, 0, 0, 0), _png_forward_filter(rows, 3)
     )
 
 
@@ -2820,48 +2419,24 @@ def mm_png_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     a genuinely COMPRESSED format): every image-modality asset is
     materialized as a true zlib-deflated grayscale PNG inside
     ``mapInPandas``, then chunk-walked, CRC-checked, INFLATED and
-    de-filtered by :func:`decode_png_gray`; the census sums the
+    de-filtered by :func:`decode_png`; the census sums the
     DECODED pixel values, so a regression anywhere in the inflate /
     de-filter path breaks oracle parity (the oracle restates the
     gradient's closed-form pixel sum — byte size is deliberately NOT
     censused: deflate output length is zlib-version detail, not
     spec).
-
-    100 TB shape: identical to the BMP/WAV censuses — compressed
-    blobs live only inside the Python worker batches; the shuffle
-    carries four integers per asset and the census is a
-    ≤{PNG_W_MOD}·{PNG_H_MOD}-cell frame.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_png(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, pixels = decode_png_gray(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("L")
-                out["pixel_sum"].append(sum(pixels))
-            yield pd.DataFrame(out)
+    def row(did):
+        w, h, px = decode_png(
+            synth_png(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        return w, h, "L", sum(px)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, mode string, pixel_sum long",
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 3, 0, row,
+        "width long, height long, mode string, pixel_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -2909,49 +2484,19 @@ def mm_png_rgb_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Uses the ``doc_id % 3 = 1`` asset slice (the gray census owns
     ``% 3 = 0``), keeping the two censuses disjoint evidence.
-
-    100 TB shape: identical to the gray/BMP/WAV censuses — blobs live
-    only inside Python worker batches, the shuffle carries six
-    integers per asset, the census is a ≤{PNG_W_MOD}·{PNG_H_MOD}-cell
-    frame.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_png_rgb(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, px = decode_png(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("RGB")
-                out["sum_r"].append(sum(px[0::3]))
-                out["sum_g"].append(sum(px[1::3]))
-                out["sum_b"].append(sum(px[2::3]))
-            yield pd.DataFrame(out)
+    def row(did):
+        w, h, px = decode_png(
+            synth_png_rgb(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        return w, h, "RGB", sum(px[0::3]), sum(px[1::3]), sum(px[2::3])
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, mode string,"
-            " sum_r long, sum_g long, sum_b long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 3, 1, row,
+        "width long, height long, mode string,"
+        " sum_r long, sum_g long, sum_b long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -3012,48 +2557,19 @@ def mm_png_palette_decode_census(
 
     (By session end :func:`decode_png` covers the entire legal IHDR
     matrix — no Pillow gate remains on PNG.)
-
-    100 TB shape: identical to the gray/RGB censuses — blobs live
-    only inside Python worker batches; six integers per asset
-    shuffle; ≤{PNG_W_MOD}·{PNG_H_MOD}-cell census.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_png_palette(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, px = decode_png(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("P")
-                out["sum_r"].append(sum(px[0::3]))
-                out["sum_g"].append(sum(px[1::3]))
-                out["sum_b"].append(sum(px[2::3]))
-            yield pd.DataFrame(out)
+    def row(did):
+        w, h, px = decode_png(
+            synth_png_palette(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        return w, h, "P", sum(px[0::3]), sum(px[1::3]), sum(px[2::3])
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, mode string,"
-            " sum_r long, sum_g long, sum_b long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 3, 2, row,
+        "width long, height long, mode string,"
+        " sum_r long, sum_g long, sum_b long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -3098,42 +2614,19 @@ def mm_png_gray16_decode_census(
     decoded by :func:`decode_png` and re-assembled to sample values;
     the census sums the DECODED 16-bit samples against the closed
     form 257·(h·Sx + w·Sy).
-
-    100 TB shape: identical to the other codec censuses.
     """
-    import struct as _struct
+    import struct
 
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 3).select(
-        "doc_id"
-    )
+    def row(did):
+        w, h, px = decode_png(
+            synth_png_gray16(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        return w, h, "I;16", sum(struct.unpack(f">{w * h}H", px))
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "sample_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_png_gray16(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, px = decode_png(blob)
-                vals = _struct.unpack(f">{w * h}H", px)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("I;16")
-                out["sample_sum"].append(sum(vals))
-            yield pd.DataFrame(out)
-
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, mode string, sample_sum long",
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 4, 3, row,
+        "width long, height long, mode string, sample_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -3179,48 +2672,19 @@ def mm_png_rgba_decode_census(
     decoder covers every BYTE-ALIGNED baseline color type (the
     sub-byte and 16-bit-color censuses then close the rest of the
     legal matrix).
-
-    100 TB shape: identical to the other codec censuses.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 2).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-                "sum_a": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_png_rgba(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, px = decode_png(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("RGBA")
-                out["sum_r"].append(sum(px[0::4]))
-                out["sum_g"].append(sum(px[1::4]))
-                out["sum_b"].append(sum(px[2::4]))
-                out["sum_a"].append(sum(px[3::4]))
-            yield pd.DataFrame(out)
+    def row(did):
+        w, h, px = decode_png(
+            synth_png_rgba(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        return (w, h, "RGBA", *(sum(px[c::4]) for c in range(4)))
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, mode string, sum_r long,"
-            " sum_g long, sum_b long, sum_a long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 4, 2, row,
+        "width long, height long, mode string, sum_r long,"
+        " sum_g long, sum_b long, sum_a long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -3262,39 +2726,18 @@ def mm_png_adam7_decode_census(
     de-interlaced gradient against the same closed form as the
     progressive gray census, so a pass-offset or pass-order bug —
     the only new failure class interlace introduces — breaks parity.
-
-    100 TB shape: identical to the other codec censuses.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_png_gray_adam7(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, px = decode_png(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("L-adam7")
-                out["pixel_sum"].append(sum(px))
-            yield pd.DataFrame(out)
+    def row(did):
+        w, h, px = decode_png(
+            synth_png_gray_adam7(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        return w, h, "L-adam7", sum(px)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, mode string, pixel_sum long",
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 5, 0, row,
+        "width long, height long, mode string, pixel_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -3353,42 +2796,21 @@ def mm_png_subbyte_decode_census(
     and restates the sum of (x+y) mod 2^depth, so a packing-order,
     mask, or filter-unit bug breaks parity. Uses the ``doc_id % 5 =
     1`` asset slice.
-
-    100 TB shape: identical to the other codec censuses — blobs live
-    only inside Python worker batches; five integers per asset
-    shuffle; the census frame is depth×dims-bounded.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 1).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "depth": [],
-                "sample_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                depth = (1, 2, 4)[did % 3]
-                blob = synth_png_gray_subbyte(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1, depth
-                )
-                w, h, px = decode_png(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["depth"].append(depth)
-                out["sample_sum"].append(sum(px))
-            yield pd.DataFrame(out)
+    def row(did):
+        depth = (1, 2, 4)[did % 3]
+        w, h, px = decode_png(
+            synth_png_gray_subbyte(
+                did % PNG_W_MOD + 1, did % PNG_H_MOD + 1, depth
+            )
+        )
+        return w, h, depth, sum(px)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, depth long, sample_sum long",
-    )
-    return decoded.groupBy("width", "height", "depth").agg(
+    return decode_census(
+        spark, sf_dir, 5, 1, row,
+        "width long, height long, depth long, sample_sum long",
+        ("width", "height", "depth"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -3438,49 +2860,21 @@ def mm_png_rgb16_decode_census(
     channel against the closed forms 257·(h·Sx + w·Sy) /
     257·(2h·Sx + w·Sy) / 257·(h·Sx + 3w·Sy). Uses the ``doc_id % 5 =
     2`` asset slice.
-
-    100 TB shape: identical to the other codec censuses.
     """
-    import struct as _struct
+    import struct
 
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 2).select(
-        "doc_id"
-    )
+    def row(did):
+        w, h, px = decode_png(
+            synth_png_rgb16(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        vals = struct.unpack(f">{w * h * 3}H", px)
+        return (w, h, "RGB;16", *(sum(vals[c::3]) for c in range(3)))
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_png_rgb16(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, px = decode_png(blob)
-                vals = _struct.unpack(f">{w * h * 3}H", px)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("RGB;16")
-                out["sum_r"].append(sum(vals[0::3]))
-                out["sum_g"].append(sum(vals[1::3]))
-                out["sum_b"].append(sum(vals[2::3]))
-            yield pd.DataFrame(out)
-
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, mode string,"
-            " sum_r long, sum_g long, sum_b long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 5, 2, row,
+        "width long, height long, mode string,"
+        " sum_r long, sum_g long, sum_b long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -3534,7 +2928,7 @@ def mm_tile_patch_dedup_census(
     """Patch-level image dedup — the tile-granular near-storage
     optimization image corpora run below whole-asset dedup
     (`mm_dedup_binary_exact`): every image decodes (REAL zlib PNG
-    decode via :func:`decode_png_gray`), slices into non-overlapping
+    decode via :func:`decode_png`), slices into non-overlapping
     {PATCH}×{PATCH} patches, fingerprints the DECODED patch bytes
     (md5), and the corpus-wide census reports duplicate-class sizes
     — how many identical patches a content-addressed tile store
@@ -3565,7 +2959,7 @@ def mm_tile_patch_dedup_census(
                 w, h = did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
                 if w < PATCH or h < PATCH:
                     continue
-                _, _, px = decode_png_gray(synth_png(w, h))
+                _, _, px = decode_png(synth_png(w, h))
                 for y0 in range(0, h - PATCH + 1, PATCH):
                     for x0 in range(0, w - PATCH + 1, PATCH):
                         tile = bytes(
@@ -3632,19 +3026,7 @@ def decode_wav_ms_adpcm(content: bytes):
     table, or inconsistent block geometry raise ValueError."""
     import struct
 
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE container")
-    pos, fmt_body, data = 12, None, None
-    while pos + 8 <= len(content):
-        cid, size = struct.unpack_from("<4sI", content, pos)
-        body = content[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt_body = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if fmt_body is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt_body, data = _wav_chunks(content)
     audio_format, channels, rate, _, block_align, bits = struct.unpack_from(
         "<HHIIHH", fmt_body, 0
     )
@@ -3757,13 +3139,7 @@ def synth_wav_ms_adpcm(
         (rate * block_align) // spb, block_align, 4,
         2 + 2 + len(coef_blk), spb, len(_MS_ADPCM_COEFS),
     ) + coef_blk
-    return (
-        struct.pack("<4sI4s", b"RIFF", 28 + len(fmt) + len(blocks), b"WAVE")
-        + struct.pack("<4sI", b"fmt ", len(fmt))
-        + fmt
-        + struct.pack("<4sI", b"data", len(blocks))
-        + bytes(blocks)
-    )
+    return _wav_wrap(fmt, blocks)
 
 
 _MS_C1_SQL = "[" + ",".join(str(c1) for c1, _ in _MS_ADPCM_COEFS) + "]"
@@ -3853,50 +3229,26 @@ def mm_wav_ms_adpcm_decode_census(
     coefficient/adaptation tables, including the C ``>> 8`` FLOOR
     shift stated sign-safely (SQL ``//`` truncates toward zero — a
     one-off predictor difference on any negative product breaks the
-    hash). Uses the ``doc_id % 5 = 0`` asset slice.
-
-    100 TB shape: identical to the other codec censuses — blobs stay
-    inside worker batches, five integers per asset shuffle, the
-    census frame is ≤6 cells; the oracle recursion is bounded by
-    samples-per-block (≤26 levels), never the corpus.
+    hash). Uses the ``doc_id % 5 = 0`` asset slice. The oracle
+    recursion is bounded by samples-per-block (≤26 levels), never the
+    corpus.
     """
-    docs = table(spark, sf_dir, "documents")
-    assets = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "channels": [],
-                "samples_per_block": [],
-                "n_samples": [],
-                "sample_sum": [],
-                "energy": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ch = 1 + (did % 2)
-                spb = 2 + 8 * ((did % 3) + 1)
-                blob = synth_wav_ms_adpcm(did, ch, spb)
-                rate, dch, chans = decode_wav_ms_adpcm(blob)
-                assert (rate, dch) == (8000, ch)
-                flat = [v for c in chans for v in c]
-                out["channels"].append(ch)
-                out["samples_per_block"].append(spb)
-                out["n_samples"].append(len(flat))
-                out["sample_sum"].append(sum(flat))
-                out["energy"].append(sum(v * v for v in flat))
-            yield pd.DataFrame(out)
+    def row(did):
+        ch = 1 + (did % 2)
+        spb = 2 + 8 * ((did % 3) + 1)
+        rate, dch, chans = decode_wav_ms_adpcm(
+            synth_wav_ms_adpcm(did, ch, spb)
+        )
+        assert (rate, dch) == (8000, ch)
+        flat = [v for c in chans for v in c]
+        return ch, spb, len(flat), sum(flat), sum(v * v for v in flat)
 
-    decoded = assets.mapInPandas(
-        decode_batches,
-        schema=(
-            "channels long, samples_per_block long, n_samples long, "
-            "sample_sum long, energy long"
-        ),
-    )
-    return decoded.groupBy("channels", "samples_per_block").agg(
+    return decode_census(
+        spark, sf_dir, 5, 0, row,
+        "channels long, samples_per_block long, n_samples long, "
+        "sample_sum long, energy long",
+        ("channels", "samples_per_block"),
         F.count("*").alias("n_assets"),
         F.sum("n_samples").cast("long").alias("total_samples"),
         F.sum("sample_sum").cast("long").alias("total_sample_sum"),
@@ -4164,41 +3516,18 @@ def mm_gif_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette mapping — and the census sums the DECODED gray values
     against the gradient's closed form. Byte length is deliberately
     not censused (code-packing detail), mirroring the PNG census.
-
-    100 TB shape: blobs exist only inside worker batches; the
-    shuffle carries four integers per asset; the census is a
-    ≤{PNG_W_MOD}·{PNG_H_MOD}-cell frame.
     """
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 1).select(
-        "doc_id"
-    )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "mode": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blob = synth_gif(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
-                )
-                w, h, values = decode_gif_gray(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append("P")
-                out["pixel_sum"].append(sum(values))
-            yield pd.DataFrame(out)
+    def row(did):
+        w, h, values = decode_gif_gray(
+            synth_gif(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1)
+        )
+        return w, h, "P", sum(values)
 
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema="width long, height long, mode string, pixel_sum long",
-    )
-    return decoded.groupBy("width", "height", "mode").agg(
+    return decode_census(
+        spark, sf_dir, 4, 1, row,
+        "width long, height long, mode string, pixel_sum long",
+        ("width", "height", "mode"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -4499,47 +3828,19 @@ def mm_tiff_decode_census(
     sums decoded pixels against the gradient closed form. The two
     dialect censuses land as separate rows, so a regression in
     either arm (or in the early-change rule specifically) breaks
-    parity visibly.
+    parity visibly."""
 
-    100 TB shape: identical to the GIF/PNG censuses — blobs only in
-    worker batches, four integers + a dialect tag per asset on the
-    shuffle, bounded census frame."""
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 2).select(
-        "doc_id"
-    )
+    def row(did):
+        comp = 5 if did % 2 == 0 else 1
+        w, h, vals = decode_tiff_gray(
+            synth_tiff(did % PNG_W_MOD + 1, did % PNG_H_MOD + 1, comp)
+        )
+        return w, h, "lzw" if comp == 5 else "raw", sum(vals)
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "compression": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                comp = 5 if did % 2 == 0 else 1
-                blob = synth_tiff(
-                    did % PNG_W_MOD + 1, did % PNG_H_MOD + 1, comp
-                )
-                w, h, vals = decode_tiff_gray(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["compression"].append(
-                    "lzw" if comp == 5 else "raw"
-                )
-                out["pixel_sum"].append(sum(vals))
-            yield pd.DataFrame(out)
-
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, compression string,"
-            " pixel_sum long"
-        ),
-    )
-    return decoded.groupBy("width", "height", "compression").agg(
+    return decode_census(
+        spark, sf_dir, 4, 2, row,
+        "width long, height long, compression string, pixel_sum long",
+        ("width", "height", "compression"),
         F.count("*").alias("n_images"),
         F.sum(F.col("width") * F.col("height"))
         .cast("long")
@@ -4586,7 +3887,7 @@ def synth_ico(sizes) -> bytes:
 def decode_ico(blob: bytes):
     """Decode every member of an ICO; returns a list of
     ``(width, height, pixel_sum)``. PNG members decode through
-    :func:`decode_png_gray`; DIB members hit the documented gate."""
+    :func:`decode_png`; DIB members hit the documented gate."""
     import struct
 
     if len(blob) < 6:
@@ -4608,7 +3909,7 @@ def decode_ico(blob: bytes):
             raise ValueError("ICO member out of range")
         payload = blob[offset : offset + size]
         if payload[:8] == PNG_SIGNATURE:
-            w, h, pixels = decode_png_gray(payload)
+            w, h, pixels = decode_png(payload)
             out.append((w, h, sum(pixels)))
         else:
             raise NotImplementedError(
@@ -4646,45 +3947,17 @@ def mm_ico_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the directory walk + the full PNG path inside
     ``mapInPandas``; the census sums the decoded gray values of BOTH
     members against the closed form (the gradient sum is symmetric
-    in (w, h), so the transpose doubles it exactly).
+    in (w, h), so the transpose doubles it exactly)."""
 
-    100 TB shape: identical to the other codec censuses — blobs in
-    worker batches only, four integers per asset on the shuffle,
-    bounded census frame."""
-    docs = table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 3).select(
-        "doc_id"
-    )
+    def row(did):
+        w, h = did % PNG_W_MOD + 1, did % PNG_H_MOD + 1
+        members = decode_ico(synth_ico([(w, h), (h, w)]))
+        return w, h, len(members), sum(s for _, _, s in members)
 
-    def decode_batches(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            out = {
-                "width": [],
-                "height": [],
-                "n_members": [],
-                "pixel_sum": [],
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = did % PNG_W_MOD + 1
-                h = did % PNG_H_MOD + 1
-                blob = synth_ico([(w, h), (h, w)])
-                members = decode_ico(blob)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_members"].append(len(members))
-                out["pixel_sum"].append(
-                    sum(s for _, _, s in members)
-                )
-            yield pd.DataFrame(out)
-
-    decoded = imgs.mapInPandas(
-        decode_batches,
-        schema=(
-            "width long, height long, n_members long, pixel_sum long"
-        ),
-    )
-    return decoded.groupBy("width", "height").agg(
+    return decode_census(
+        spark, sf_dir, 4, 3, row,
+        "width long, height long, n_members long, pixel_sum long",
+        ("width", "height"),
         F.count("*").alias("n_icons"),
         F.sum("n_members").cast("long").alias("n_members"),
         F.sum("pixel_sum").cast("long").alias("total_pixel_sum"),

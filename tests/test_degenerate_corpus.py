@@ -87,6 +87,9 @@ BATTERY = [
     "events_props_schema_census",
     "pipeline_repeat_epochs_advisor",
     "mm_wav_ms_adpcm_decode_census",
+    # a census with a string key: the decode kernel's empty batch
+    # must still carry the declared string column
+    "mm_wav_g711_decode_census",
     # round-9 continuation: all-zero-spend Gini (guarded s0=0),
     # pair-less ACF, empty basket/HITS frames, single-token Yule
     # guards

@@ -111,11 +111,60 @@ def test_decode_wav_real_pcm_roundtrip():
     struct.pack_into("<H", floaty, 20, 3)  # WAVE_FORMAT_IEEE_FLOAT
     with pytest.raises(NotImplementedError):
         decode_wav(bytes(floaty))
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxJUNK")
-    with pytest.raises(ValueError):
+
+
+@pytest.mark.parametrize(
+    "decoder", ["decode_wav", "decode_wav_ima_adpcm", "decode_wav_ms_adpcm"]
+)
+def test_wav_decoders_reject_malformed_riff(decoder):
+    """Every WAV decoder walks the RIFF chunk list through the same
+    walker, so each rejects a non-RIFF blob and a fmt-less shell with
+    the walker's own ValueError."""
+    import struct
+
+    from almost_any_file_to_pandas_spark.operators import multimodal
+
+    decode = getattr(multimodal, decoder)
+    with pytest.raises(ValueError, match="not a RIFF/WAVE container"):
+        decode(b"RIFFxxxxJUNK")
+    with pytest.raises(ValueError, match="missing fmt/data chunk"):
         # RIFF/WAVE shell with no fmt/data chunks
-        decode_wav(struct.pack("<4sI4s", b"RIFF", 4, b"WAVE"))
+        decode(struct.pack("<4sI4s", b"RIFF", 4, b"WAVE"))
+
+
+_WAV_SYNTH_ARGS = {
+    "synth_wav": (8000, 2, 24),
+    "synth_wav_float": (16000, 1, 16),
+    "synth_wav_g711": (2, 8, "alaw"),
+    "synth_wav_ima_adpcm": (7, 2, 17),
+    "synth_wav_ms_adpcm": (7, 2, 18),
+}
+
+
+@pytest.mark.parametrize("synth", list(_WAV_SYNTH_ARGS))
+def test_wav_synths_write_the_riff_size(synth):
+    """The RIFF size field counts every byte after itself:
+    ``len(blob) - 8``."""
+    import struct
+
+    from almost_any_file_to_pandas_spark.operators import multimodal
+
+    blob = getattr(multimodal, synth)(*_WAV_SYNTH_ARGS[synth])
+    assert struct.unpack_from("<I", blob, 4)[0] == len(blob) - 8
+
+
+def _decode_census_names():
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    return sorted(n for n in plans.QUERIES if n.endswith("_decode_census"))
+
+
+@pytest.mark.parametrize("name", _decode_census_names())
+def test_decode_census_matches_oracle(gate_compare, name):
+    """Every codec census (all on the shared ``decode_census`` kernel)
+    matches its arithmetic DuckDB oracle on the sf0.001 corpus."""
+    gate_compare("/root/testdata/sf0.001", name)
 
 
 def test_pairs_within_buckets_expansion(spark):
@@ -2085,13 +2134,13 @@ def test_decode_png_real_roundtrip_all_filters():
     from almost_any_file_to_pandas_spark.operators.multimodal import (
         PNG_SIGNATURE,
         decode_image,
-        decode_png_gray,
+        decode_png,
         synth_png,
     )
 
     for w, h in [(1, 1), (3, 2), (16, 8)]:
         blob = synth_png(w, h)
-        dw, dh, px = decode_png_gray(blob)
+        dw, dh, px = decode_png(blob)
         assert (dw, dh) == (w, h)
         assert sum(px) == h * w * (w - 1) // 2 + w * h * (h - 1) // 2
         assert decode_image(blob) == (w, h, "L")
@@ -2138,7 +2187,7 @@ def test_decode_png_real_roundtrip_all_filters():
             + chunk(b"IDAT", zlib.compress(rows))
             + chunk(b"IEND", b"")
         )
-        _, _, px = decode_png_gray(blob)
+        _, _, px = decode_png(blob)
         assert list(px) == [v for row in pix for v in row], f"filter {f}"
 
     # the ENTIRE legal IHDR matrix decodes for real since round 8 —
@@ -2146,13 +2195,13 @@ def test_decode_png_real_roundtrip_all_filters():
     # (the full illegal-combo matrix is pinned in test_round8.py)
     ihdr_bad = struct.pack(">IIBBBBB", 2, 2, 4, 2, 0, 0, 0)
     with pytest.raises(ValueError, match="legal"):
-        decode_png_gray(
+        decode_png(
             PNG_SIGNATURE + chunk(b"IHDR", ihdr_bad) + chunk(b"IEND", b"")
         )
     bad = bytearray(synth_png(3, 2))
     bad[20] ^= 0xFF
     with pytest.raises(ValueError):
-        decode_png_gray(bytes(bad))
+        decode_png(bytes(bad))
 
 
 def test_unimax_waterfill_hand_allocation(spark, tmp_path):
