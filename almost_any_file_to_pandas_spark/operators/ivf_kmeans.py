@@ -55,11 +55,15 @@ from almost_any_file_to_pandas_spark.operators.similarity import (
     KNN_K,
     N_QUERIES,
     NPROBE_CURVE,
+    _NPROBE_CURVE_SQL,
     _cosine_sql,
-    _dot,
-    _norm,
+    _list_balance_sql,
+    _probed_cand_sql,
+    _top_k,
     ivf_k_for_corpus,
-    sim_knn_batch,
+    list_balance,
+    nprobe_recall_curve,
+    probed_candidates,
 )
 
 LLOYD_ROUNDS = 2
@@ -424,14 +428,11 @@ def kmeans_ivf_candidates(
     - **probe**: each of the first ``N_QUERIES`` vectors probes its
       ``nprobe`` nearest centroids by integer-q12 L2 (tie-break
       bucket), ranked 1..nprobe;
-    - **candidates**: every other vector in a probed list, scored by
-      cosine to the query rounded to 6 places.
+    - **candidates**: :func:`similarity.probed_candidates` over the
+      one-pass assigned corpus.
 
-    Returns ``(query_id, probe_rank, bucket, vec_id, cosine)``; a
-    vector sits in one list, so each (query, vector) pair appears at
-    most once. Plan: a bucket-keyed join of the broadcast
-    ≤|queries|·nprobe probe table against the one-pass assigned
-    corpus. :func:`_kmeans_ivf_cand_sql` is the DuckDB twin.
+    Returns ``(query_id, probe_rank, bucket, vec_id, cosine)``.
+    :func:`_kmeans_ivf_cand_sql` is the DuckDB twin.
     """
     emb, cents, assigned = _kmeans_ivf_index(spark, sf_dir)
     wp = W.partitionBy("query_id").orderBy(F.asc("d"), F.asc("bucket"))
@@ -444,21 +445,7 @@ def kmeans_ivf_candidates(
         .filter(F.col("probe_rank") <= nprobe)
         .select("query_id", "qvec", "bucket", "probe_rank")
     )
-    return (
-        assigned.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "probe_rank",
-            "bucket",
-            "vec_id",
-            F.round(
-                _dot(F.col("v"), F.col("qvec"))
-                / (_norm(F.col("v")) * _norm(F.col("qvec"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
+    return probed_candidates(assigned, probes, "v")
 
 
 def _kmeans_ivf_cand_sql(nprobe: int) -> str:
@@ -473,13 +460,8 @@ def _kmeans_ivf_cand_sql(nprobe: int) -> str:
                AS probe_rank
       FROM e q CROSS JOIN c2 c
       WHERE q.vec_id < {N_QUERIES}
-    ), cand AS (
-      SELECT p.query_id, p.probe_rank, p.bucket, x.vec_id,
-             ROUND({_cosine_sql('x.v', 'p.qvec')}, 6) AS cosine
-      FROM probes p JOIN assigned x ON x.bucket = p.bucket
-      WHERE p.probe_rank <= {nprobe}
-        AND x.vec_id <> p.query_id
-    )"""
+      QUALIFY probe_rank <= {nprobe}
+    ), {_probed_cand_sql('assigned', 'v')}"""
 
 
 @register(
@@ -509,51 +491,15 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data. Search cost drops ~k/nprobe-fold vs brute force at the
     recall the probe count buys.
     """
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        kmeans_ivf_candidates(spark, sf_dir, IVF_NPROBE)
-        .withColumn("ivf_rank", F.row_number().over(w))
-        .filter(F.col("ivf_rank") <= KNN_K)
-        .select("query_id", "vec_id", "bucket", "cosine", "ivf_rank")
-    )
+    return _top_k(
+        kmeans_ivf_candidates(spark, sf_dir, IVF_NPROBE), KNN_K, "ivf_rank"
+    ).select("query_id", "vec_id", "bucket", "cosine", "ivf_rank")
 
 
 @register(
     "sim_ivf_kmeans_nprobe_curve",
     oracle=f"""
-    WITH {_kmeans_ivf_cand_sql(max(NPROBE_CURVE))}, exact AS (
-      SELECT q.vec_id AS query_id, x.vec_id
-      FROM e q JOIN e x ON x.vec_id <> q.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY q.vec_id
-        ORDER BY ROUND({_cosine_sql('x.v', 'q.v')}, 6) DESC,
-                 x.vec_id) <= {KNN_K}
-    ), picks AS (
-      SELECT np.nprobe, c.query_id, c.vec_id
-      FROM (VALUES {', '.join(f'({v})' for v in NPROBE_CURVE)})
-           np(nprobe), cand c
-      WHERE c.probe_rank <= np.nprobe
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY np.nprobe, c.query_id
-        ORDER BY c.cosine DESC, c.vec_id) <= {KNN_K}
-    ), hits AS (
-      SELECT p.nprobe, COUNT(*) AS n_hits
-      FROM picks p JOIN exact e2
-        ON p.query_id = e2.query_id AND p.vec_id = e2.vec_id
-      GROUP BY p.nprobe
-    ), denom AS (
-      SELECT COUNT(*) AS n_exact FROM exact
-    )
-    SELECT CAST(v.nprobe AS INTEGER) AS nprobe,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           CAST(d.n_exact AS BIGINT) AS n_exact,
-           CAST(CASE WHEN d.n_exact = 0 THEN 0
-                ELSE COALESCE(h.n_hits, 0) * 1000000 // d.n_exact
-                END AS BIGINT) AS recall_q6
-    FROM (VALUES {', '.join(f'({v})' for v in NPROBE_CURVE)}) v(nprobe)
-    LEFT JOIN hits h ON v.nprobe = h.nprobe, denom d
-    """,
+    WITH {_kmeans_ivf_cand_sql(max(NPROBE_CURVE))}, {_NPROBE_CURVE_SQL}""",
 )
 def sim_ivf_kmeans_nprobe_curve(
     spark: SparkSession, sf_dir: str
@@ -572,63 +518,19 @@ def sim_ivf_kmeans_nprobe_curve(
     macro recall.
 
     Plan: :func:`kmeans_ivf_candidates` generates candidates ONCE at
-    the widest probe depth; every curve point re-ranks that scored
-    frame through a (nprobe, query) window.
+    the widest probe depth; :func:`similarity.nprobe_recall_curve`,
+    shared with the sign-bit curve, re-ranks that scored frame
+    through a (nprobe, query) window for every point.
     """
-    cand = kmeans_ivf_candidates(spark, sf_dir, max(NPROBE_CURVE))
-    nprobes = spark.createDataFrame(
-        [(v,) for v in NPROBE_CURVE], "nprobe int"
-    )
-    wk = W.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    picks = (
-        cand.join(
-            F.broadcast(nprobes),
-            F.col("probe_rank") <= F.col("nprobe"),
-        )
-        .withColumn("_r", F.row_number().over(wk))
-        .filter(F.col("_r") <= KNN_K)
-        .select("nprobe", "query_id", "vec_id")
-    )
-    exact = sim_knn_batch(spark, sf_dir).select("query_id", "vec_id")
-    hits = (
-        picks.join(exact, ["query_id", "vec_id"])
-        .groupBy("nprobe")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    denom = exact.agg(F.count("*").alias("n_exact"))
-    return (
-        nprobes.join(F.broadcast(hits), "nprobe", "left")
-        .crossJoin(F.broadcast(denom))
-        .selectExpr(
-            "nprobe",
-            "CAST(COALESCE(n_hits, 0) AS BIGINT) AS n_hits",
-            "CAST(n_exact AS BIGINT) AS n_exact",
-            "CAST(CASE WHEN n_exact = 0 THEN 0"
-            " ELSE COALESCE(n_hits, 0) * 1000000 div n_exact"
-            " END AS BIGINT) AS recall_q6",
-        )
-        .orderBy("nprobe")
+    return nprobe_recall_curve(
+        spark, sf_dir, kmeans_ivf_candidates(spark, sf_dir, max(NPROBE_CURVE))
     )
 
 
 @register(
     "sim_ivf_kmeans_bucket_balance",
     oracle=f"""
-    WITH {_kmeans_ivf_assigned_sql()}, sz AS (
-      SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vecs
-      FROM assigned GROUP BY bucket
-    ), tot AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n FROM assigned
-    )
-    SELECT s.bucket, s.n_vecs,
-           CAST(s.n_vecs * 1000000 // t.n AS BIGINT) AS share_q6,
-           -- factored share_q6 * nb form: see sim_ivf_bucket_balance
-           CAST(s.n_vecs * 1000000 // t.n
-                * (SELECT COUNT(*) FROM sz) AS BIGINT) AS load_factor_q6
-    FROM sz s, tot t
-    """,
+    WITH {_kmeans_ivf_assigned_sql()}, {_list_balance_sql('assigned')}""",
 )
 def sim_ivf_kmeans_bucket_balance(
     spark: SparkSession, sf_dir: str
@@ -642,28 +544,11 @@ def sim_ivf_kmeans_bucket_balance(
     probe-cost and skew-join risk of that choice get measured rather
     than assumed.
 
-    Plan: the one-broadcast-row argmin assignment (narrow), a bucket
-    count, and two broadcast scalars — the operator's cost is the
-    assignment scan.
+    Plan: the one-broadcast-row argmin assignment (narrow), then
+    :func:`similarity.list_balance`, shared with the sign-bit twin —
+    the operator's cost is the assignment scan.
     """
-    _, _, assigned = _kmeans_ivf_index(spark, sf_dir)
-    sz = (
-        assigned.groupBy("bucket")
-        .agg(F.count("*").cast("long").alias("n_vecs"))
-    )
-    tot = sz.agg(F.sum("n_vecs").cast("long").alias("n"))
-    nb = sz.agg(F.count("*").cast("long").alias("nb"))
-    return (
-        sz.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(nb))
-        .selectExpr(
-            "bucket",
-            "n_vecs",
-            "CAST(n_vecs * 1000000 div n AS BIGINT) AS share_q6",
-            "CAST(n_vecs * 1000000 div n * nb AS BIGINT)"
-            " AS load_factor_q6",
-        )
-    )
+    return list_balance(_kmeans_ivf_index(spark, sf_dir)[2])
 
 
 _SEM_SQDIST_F = (

@@ -1244,7 +1244,11 @@ def _wav_wrap(fmt: bytes, data: bytes) -> bytes:
 
 def _wav_chunks(content: bytes):
     """Walk a RIFF/WAVE chunk list (id + little-endian size,
-    word-aligned) → (``fmt `` body, ``data`` body)."""
+    word-aligned) → (``fmt `` header fields ``(format, channels, rate,
+    byte rate, block align, bits)``, ``fmt `` body, ``data`` body).
+    A header declaring 0 channels raises ValueError: every decoder
+    divides by the channel count, and an ADPCM block align that
+    matches its geometry check at 0 channels is 0 as well."""
     import struct
 
     if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
@@ -1260,7 +1264,10 @@ def _wav_chunks(content: bytes):
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("missing fmt/data chunk")
-    return fmt, data
+    head = struct.unpack_from("<HHIIHH", fmt, 0)
+    if head[1] == 0:
+        raise ValueError("fmt chunk declares 0 channels")
+    return head, fmt, data
 
 
 def synth_wav(rate: int, channels: int, n_frames: int) -> bytes:
@@ -1318,9 +1325,8 @@ def decode_wav(content: bytes):
     import struct
     import sys
 
-    fmt, data = _wav_chunks(content)
-    audio_format, channels, rate, _, _, bits = struct.unpack_from(
-        "<HHIIHH", fmt, 0
+    (audio_format, channels, rate, _, _, bits), _, data = _wav_chunks(
+        content
     )
     if audio_format in (6, 7) and bits == 8:
         tbl = _ALAW_TABLE if audio_format == 6 else _ULAW_TABLE
@@ -1419,10 +1425,8 @@ def decode_wav_ima_adpcm(content: bytes):
     block align) raises ValueError."""
     import struct
 
-    fmt_body, data = _wav_chunks(content)
-    audio_format, channels, rate, _, block_align, bits = struct.unpack_from(
-        "<HHIIHH", fmt_body, 0
-    )
+    head, fmt_body, data = _wav_chunks(content)
+    audio_format, channels, rate, _, block_align, bits = head
     if audio_format != 0x11 or bits != 4:
         raise ValueError(
             f"decode_wav_ima_adpcm expects IMA ADPCM 4-bit (got format "
@@ -3026,10 +3030,8 @@ def decode_wav_ms_adpcm(content: bytes):
     table, or inconsistent block geometry raise ValueError."""
     import struct
 
-    fmt_body, data = _wav_chunks(content)
-    audio_format, channels, rate, _, block_align, bits = struct.unpack_from(
-        "<HHIIHH", fmt_body, 0
-    )
+    head, fmt_body, data = _wav_chunks(content)
+    audio_format, channels, rate, _, block_align, bits = head
     if audio_format != 2 or bits != 4:
         raise ValueError(
             f"decode_wav_ms_adpcm expects MS-ADPCM 4-bit (got format "

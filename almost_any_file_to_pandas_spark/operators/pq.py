@@ -29,7 +29,8 @@ Spark shape:
 
 All Lloyd's-based queries are rows-only for the driver gate (k-means
 is not SQL-expressible); recall is measured against the exact
-``sim_knn_batch`` baseline, mirroring ``sim_ivf_recall``.
+``sim_knn_batch`` baseline by the recall harness ``sim_ivf_recall``
+also runs on (``similarity.ann_recall``, ``ann_recall_floor``).
 """
 
 from __future__ import annotations
@@ -41,10 +42,16 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.operators.similarity import (
+    IVF_BITS,
     KNN_K,
     N_QUERIES,
+    _RECALL_FLOOR_ORACLE,
+    _top_k,
+    ann_recall,
+    ann_recall_floor,
+    rounded_cosine,
 )
-from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+from almost_any_file_to_pandas_spark.plans import register, table_wide
 
 PQ_M = 8  # subspaces
 PQ_K = 256  # codes per subspace (8 bits, the standard PQ setting)
@@ -242,39 +249,9 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("sim_pq_recall")  # rows-only: composes sim_pq_topk
 def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of PQ/ADC search against the exact kNN baseline, per
-    query — the acceptance metric for any quantized index rollout."""
-    from almost_any_file_to_pandas_spark.operators.similarity import (
-        sim_knn_batch,
-    )
-
-    exact = sim_knn_batch(spark, sf_dir).select(
-        "query_id", F.col("vec_id").alias("exact_id")
-    )
-    approx = sim_pq_topk(spark, sf_dir).select(
-        "query_id", F.col("vec_id").alias("approx_id")
-    )
-    hits = (
-        exact.join(
-            approx,
-            (exact.query_id == approx.query_id)
-            & (exact.exact_id == approx.approx_id),
-        )
-        .groupBy(exact.query_id.alias("qid"))
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        exact.groupBy("query_id")
-        .agg(F.count("*").alias("k"))
-        .join(hits, F.col("query_id") == F.col("qid"), "left")
-        .select(
-            "query_id",
-            "k",
-            F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("k")).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+    query (:func:`similarity.ann_recall`) — the acceptance metric for
+    any quantized index rollout."""
+    return ann_recall(spark, sf_dir, sim_pq_topk(spark, sf_dir))
 
 
 @register("sim_pq_reconstruction")  # rows-only: k-means codebooks
@@ -336,34 +313,12 @@ PQ_RECALL_FLOOR = 0.4  # macro recall@5 observed 0.62 at sf0.01
 PQ_MSE_CEIL = 0.5  # mean squared reconstruction error observed 0.108
 
 
-@register(
-    "sim_pq_recall_floor",
-    oracle=f"""
-    -- n_queries counts EVALUABLE queries: a query vector with no
-    -- possible neighbor (corpus of one) has no recall to measure
-    SELECT CASE WHEN (SELECT COUNT(*) FROM embeddings) > 1
-                THEN COUNT(*) ELSE 0 END AS n_queries,
-           CAST({KNN_K} AS BIGINT) AS k,
-           TRUE AS recall_floor_met
-    FROM embeddings WHERE vec_id < {N_QUERIES}
-    """,
-)
+@register("sim_pq_recall_floor", oracle=_RECALL_FLOOR_ORACLE)
 def sim_pq_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked acceptance gate over :func:`sim_pq_recall`: one row
     claiming macro recall@k ≥ PQ_RECALL_FLOOR, anchored to the query
     count the oracle derives independently."""
-    per_query = sim_pq_recall(spark, sf_dir)
-    return per_query.agg(
-        F.count("*").alias("n_queries"),
-        # engine-side empty alignment (frozen oracle states constants):
-        # zero evaluable queries -> nominal k, vacuously-met floor
-        F.coalesce(F.max("k").cast("bigint"), F.lit(KNN_K)).alias(
-            "k"
-        ),
-        F.coalesce(
-            F.avg("recall_at_k") >= F.lit(PQ_RECALL_FLOOR), F.lit(True)
-        ).alias("recall_floor_met"),
-    )
+    return ann_recall_floor(sim_pq_recall(spark, sf_dir), PQ_RECALL_FLOOR)
 
 
 @register(
@@ -433,11 +388,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are read a second time only for shortlist members — the IVFPQ
     memory contract (full vectors never co-resident with the index).
     """
-    from almost_any_file_to_pandas_spark.operators.similarity import (
-        IVF_BITS,
-        cosine_expr,
-    )
-
     emb = table_wide(spark, sf_dir, "embeddings")
     sample = _train_sample(emb)  # one job serves codebooks AND queries
     if len(sample) == 0:  # empty corpus: nothing to index or query
@@ -555,31 +505,13 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            F.round(cosine_expr(F.col("v"), F.col("qvec")), 6).alias(
-                "cosine"
-            ),
+            rounded_cosine(F.col("v"), F.col("qvec")).alias("cosine"),
         )
     )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return rerank.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= KNN_K
-    )
+    return _top_k(rerank, KNN_K, "rank")
 
 
-@register(
-    "sim_ivfpq_recall_floor",
-    oracle=f"""
-    -- n_queries counts EVALUABLE queries: a query vector with no
-    -- possible neighbor (corpus of one) has no recall to measure
-    SELECT CASE WHEN (SELECT COUNT(*) FROM embeddings) > 1
-                THEN COUNT(*) ELSE 0 END AS n_queries,
-           CAST({KNN_K} AS BIGINT) AS k,
-           TRUE AS recall_floor_met
-    FROM embeddings WHERE vec_id < {N_QUERIES}
-    """,
-)
+@register("sim_ivfpq_recall_floor", oracle=_RECALL_FLOOR_ORACLE)
 def sim_ivfpq_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked acceptance gate for the composed IVFPQ index:
     macro recall@k of :func:`sim_ivfpq_topk` against the exact kNN
@@ -588,45 +520,7 @@ def sim_ivfpq_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplane splits), anchored to the query count the oracle derives
     independently — the same contract as the IVF and PQ floors it
     composes."""
-    from almost_any_file_to_pandas_spark.operators.similarity import (
-        sim_knn_batch,
-    )
-
-    exact = sim_knn_batch(spark, sf_dir).select(
-        "query_id", F.col("vec_id").alias("exact_id")
-    )
-    approx = sim_ivfpq_topk(spark, sf_dir).select(
-        "query_id", F.col("vec_id").alias("approx_id")
-    )
-    hits = (
-        exact.join(
-            approx,
-            (exact.query_id == approx.query_id)
-            & (exact.exact_id == approx.approx_id),
-        )
-        .groupBy(exact.query_id.alias("qid"))
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_q = (
-        exact.groupBy("query_id")
-        .agg(F.count("*").alias("k"))
-        .join(hits, F.col("query_id") == F.col("qid"), "left")
-        .select(
-            "query_id",
-            "k",
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("k")
-            ).alias("recall"),
-        )
-    )
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        # degenerate alignment: with zero queries the oracle states
-        # the constant k and a vacuously-true floor; MAX/AVG over no
-        # rows would say NULL
-        F.coalesce(F.max("k").cast("bigint"), F.lit(KNN_K)).alias("k"),
-        F.coalesce(
-            F.avg("recall") >= F.lit(IVFPQ_RECALL_FLOOR),
-            F.lit(True),
-        ).alias("recall_floor_met"),
+    return ann_recall_floor(
+        ann_recall(spark, sf_dir, sim_ivfpq_topk(spark, sf_dir)),
+        IVFPQ_RECALL_FLOOR,
     )

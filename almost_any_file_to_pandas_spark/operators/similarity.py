@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+from almost_any_file_to_pandas_spark.plans import register, table_wide
 
 TOP_K = 20
 QUERY_VEC_ID = 0
@@ -78,6 +78,25 @@ def _cosine_sql(a: str, b: str) -> str:
     return f"({dot} / ({na} * {nb}))"
 
 
+def rounded_cosine(a, b):
+    """Cosine rounded to 6 places: the score every search here ranks
+    and compares on, so both engines tie-break on identical values."""
+    return F.round(cosine_expr(a, b), 6)
+
+
+def _rounded_cosine_sql(a: str, b: str) -> str:
+    return f"ROUND({_cosine_sql(a, b)}, 6)"
+
+
+def _top_k(scored: DataFrame, k: int, rank: str, by=("query_id",)):
+    """The rows of ``scored`` ranked 1..k (column ``rank``) by cosine
+    descending, ties to the smaller vec_id, within each ``by`` group."""
+    w = W.partitionBy(*by).orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
 @register(
     "sim_bruteforce_topk",
     oracle=f"""
@@ -85,7 +104,7 @@ def _cosine_sql(a: str, b: str) -> str:
       SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
     )
     SELECT e.vec_id, e.label,
-           ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) AS cosine
+           {_rounded_cosine_sql('e.embedding', 'q.qvec')} AS cosine
     FROM embeddings e CROSS JOIN q
     WHERE e.vec_id <> {QUERY_VEC_ID}
     ORDER BY {_cosine_sql('e.embedding', 'q.qvec')} DESC, e.vec_id
@@ -170,24 +189,66 @@ KNN_K = 5
 IVF_BITS = 4  # 16 coarse buckets
 
 
+def _score_query_batch(
+    emb: DataFrame, n_queries: int, q_cols=None, c_cols=None
+) -> DataFrame:
+    """``(query_id, *q_cols, vec_id, *c_cols, cosine)`` for every pair
+    of a query (the first ``n_queries`` vec_ids) and another corpus
+    vector, scored by rounded cosine. ``q_cols``/``c_cols`` map an
+    output name to the ``embeddings`` column carried from the query or
+    corpus side. Plan: the broadcast query batch against one narrow
+    corpus pass, each side's norm computed once per vector, not once
+    per pair."""
+    q_cols, c_cols = q_cols or {}, c_cols or {}
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(src).alias(name) for name, src in q_cols.items()],
+        F.col("embedding").alias("qvec"),
+        _norm(F.col("embedding")).alias("qnrm"),
+    )
+    corpus = emb.select(
+        "vec_id",
+        *[F.col(src).alias(name) for name, src in c_cols.items()],
+        "embedding",
+        _norm(F.col("embedding")).alias("nrm"),
+    )
+    return (
+        corpus.crossJoin(F.broadcast(queries))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            *q_cols,
+            "vec_id",
+            *c_cols,
+            F.round(
+                _dot(F.col("embedding"), F.col("qvec"))
+                / (F.col("nrm") * F.col("qnrm")),
+                6,
+            ).alias("cosine"),
+        )
+    )
+
+
+# The exact top-k of the query batch — sim_knn_batch's oracle and the
+# denominator CTE of every recall oracle
+_EXACT_TOPK_SQL = f"""exact AS (
+      SELECT q.vec_id AS query_id, e.vec_id,
+             {_rounded_cosine_sql('e.embedding', 'q.embedding')} AS cosine,
+             ROW_NUMBER() OVER (
+               PARTITION BY q.vec_id
+               ORDER BY {_rounded_cosine_sql('e.embedding', 'q.embedding')}
+                          DESC, e.vec_id) AS knn_rank
+      FROM embeddings e JOIN embeddings q ON e.vec_id <> q.vec_id
+      WHERE q.vec_id < {N_QUERIES}
+      QUALIFY knn_rank <= {KNN_K}
+    )"""
+
+
 @register(
     "sim_knn_batch",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qvec
-      FROM embeddings WHERE vec_id < {N_QUERIES}
-    ), scored AS (
-      SELECT q.query_id, e.vec_id,
-             ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) AS cosine,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.query_id
-               ORDER BY ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) DESC,
-                        e.vec_id) AS knn_rank
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.query_id
-    )
-    SELECT query_id, vec_id, cosine, knn_rank
-    FROM scored WHERE knn_rank <= {KNN_K}
+    WITH {_EXACT_TOPK_SQL}
+    SELECT query_id, vec_id, cosine, knn_rank FROM exact
     """,
 )
 def sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,30 +261,7 @@ def sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rounded cosine so ordering is identical across engines.
     """
     emb = table_wide(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        _norm(F.col("embedding")).alias("qnrm"),
-    )
-    corpus = emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    scored = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qvec"))
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= KNN_K)
-    )
+    return _top_k(_score_query_batch(emb, N_QUERIES), KNN_K, "knn_rank")
 
 
 IVF_TARGET_BUCKET_ROWS = 4096  # per-bucket size the quantizer aims for
@@ -341,10 +379,10 @@ def ivf_score_bucket(pdf: pd.DataFrame, tile: int = IVF_SCORE_TILE) -> pd.DataFr
       FROM embeddings
     ), scored AS (
       SELECT a.vec_id, a.bucket, x.vec_id AS neighbor_id,
-             ROUND({_cosine_sql('a.embedding', 'x.embedding')}, 6) AS cosine,
+             {_rounded_cosine_sql('a.embedding', 'x.embedding')} AS cosine,
              ROW_NUMBER() OVER (
                PARTITION BY a.vec_id
-               ORDER BY ROUND({_cosine_sql('a.embedding', 'x.embedding')}, 6) DESC,
+               ORDER BY {_rounded_cosine_sql('a.embedding', 'x.embedding')} DESC,
                         x.vec_id) AS rn
       FROM b a JOIN b x ON a.bucket = x.bucket AND a.vec_id <> x.vec_id
     )
@@ -632,41 +670,143 @@ def ivf_k_for_corpus(n_vectors: int, target: int = IVF_TARGET_BUCKET_ROWS) -> in
     return max(IVF_K, -(-n_vectors // target))
 
 
+# ---------------------------------------------------------------------------
+# The recall harness: every ANN recall, recall-floor and nprobe-curve row
+# scores its picks (query_id, vec_id[, nprobe]) through ONE hit join
+# against sim_knn_batch's exact top-k; each row is an aggregate of it.
+# The *_SQL twins restate each piece for the DuckDB oracles.
+# ---------------------------------------------------------------------------
+
+
+def _exact_hits(spark: SparkSession, sf_dir: str, picks: DataFrame):
+    """``(exact, hits)``: the exact top-k ``(query_id, vec_id)`` of
+    :func:`sim_knn_batch`, and the ANN ``picks`` rows that sit in it —
+    the one hit join of the harness (twin: ``_HITS_SQL``)."""
+    exact = sim_knn_batch(spark, sf_dir).select("query_id", "vec_id")
+    return exact, picks.join(exact, ["query_id", "vec_id"])
+
+
+def ann_recall(
+    spark: SparkSession, sf_dir: str, picks: DataFrame
+) -> DataFrame:
+    """Per-query recall@k of ANN ``picks``: ``(query_id, k, n_hits,
+    recall_at_k)``, one row per query with an exact top-k, ``k`` its
+    exact row count."""
+    exact, hits = _exact_hits(spark, sf_dir, picks)
+    n_hits = F.coalesce(F.col("n_hits"), F.lit(0))
+    return (
+        exact.groupBy("query_id")
+        .agg(F.count("*").alias("k"))
+        .join(
+            hits.groupBy("query_id").agg(F.count("*").alias("n_hits")),
+            "query_id",
+            "left",
+        )
+        .select(
+            "query_id",
+            "k",
+            n_hits.alias("n_hits"),
+            (n_hits / F.col("k")).alias("recall_at_k"),
+        )
+    )
+
+
+def ann_recall_floor(per_query: DataFrame, floor: float) -> DataFrame:
+    """One row over :func:`ann_recall` rows claiming macro recall@k ≥
+    ``floor``, anchored to the evaluable-query count. Zero evaluable
+    queries give the nominal k and a vacuously-met floor, the
+    constants :data:`_RECALL_FLOOR_ORACLE` states."""
+    return per_query.agg(
+        F.count("*").alias("n_queries"),
+        F.coalesce(F.max("k").cast("bigint"), F.lit(KNN_K)).alias("k"),
+        F.coalesce(
+            F.avg("recall_at_k") >= F.lit(floor), F.lit(True)
+        ).alias("recall_floor_met"),
+    )
+
+
+# The floor rows' oracle (the ``events_approx_distinct`` tolerance
+# pattern): the engine's floor claim is pinned TRUE, anchored to the
+# query count. n_queries counts EVALUABLE queries: a query vector with
+# no possible neighbor (corpus of one) has no recall to measure.
+_RECALL_FLOOR_ORACLE = f"""
+    SELECT CASE WHEN (SELECT COUNT(*) FROM embeddings) > 1
+                THEN COUNT(*) ELSE 0 END AS n_queries,
+           CAST({KNN_K} AS BIGINT) AS k,
+           TRUE AS recall_floor_met
+    FROM embeddings WHERE vec_id < {N_QUERIES}
+    """
+
+
+def _with_recall_q6(counts: DataFrame, exact: DataFrame) -> DataFrame:
+    """``counts`` (``n_hits`` plus any keys; NULL counts as 0) with the
+    exact-row and evaluable-query counts and the all-integer macro
+    recall ``recall_q6 = n_hits·1e6 div n_exact`` (0 when nothing is
+    evaluable). Twin: :func:`_recall_q6_sql`."""
+    denom = exact.agg(
+        F.count("*").alias("n_exact"),
+        F.countDistinct("query_id").alias("n_queries"),
+    )
+    return counts.crossJoin(F.broadcast(denom)).withColumns(
+        {
+            "n_hits": F.coalesce(F.col("n_hits"), F.lit(0)).cast("long"),
+            "recall_q6": F.expr(
+                "CAST(CASE WHEN n_exact = 0 THEN 0"
+                " ELSE COALESCE(n_hits, 0) * 1000000 div n_exact"
+                " END AS BIGINT)"
+            ),
+        }
+    )
+
+
+def ann_recall_q6(
+    spark: SparkSession, sf_dir: str, picks: DataFrame
+) -> DataFrame:
+    """One row of exact-integer macro recall for ANN ``picks``:
+    ``(n_hits, n_exact, n_queries, recall_q6)``. Twin:
+    ``_ANN_RECALL_Q6_SQL``."""
+    exact, hits = _exact_hits(spark, sf_dir, picks)
+    return _with_recall_q6(hits.agg(F.count("*").alias("n_hits")), exact)
+
+
+_HITS_SQL = (
+    "picks p JOIN exact x ON p.query_id = x.query_id"
+    " AND p.vec_id = x.vec_id"
+)
+
+
+def _recall_q6_sql(counts: str) -> str:
+    """CTEs ``denom`` and ``recall`` over the ``counts`` relation and
+    the ``exact`` CTE — the DuckDB twin of :func:`_with_recall_q6`."""
+    return f"""denom AS (
+      SELECT COUNT(*) AS n_exact, COUNT(DISTINCT query_id) AS n_queries
+      FROM exact
+    ), recall AS (
+      SELECT * REPLACE (CAST(COALESCE(n_hits, 0) AS BIGINT) AS n_hits),
+             CAST(CASE WHEN n_exact = 0 THEN 0
+                  ELSE COALESCE(n_hits, 0) * 1000000 // n_exact
+                  END AS BIGINT) AS recall_q6
+      FROM {counts}, denom
+    )"""
+
+
+# twin of ann_recall_q6, after a ``picks`` CTE
+_ANN_RECALL_Q6_SQL = f"""{_EXACT_TOPK_SQL}, hits AS (
+      SELECT COUNT(*) AS n_hits FROM {_HITS_SQL}
+    ), {_recall_q6_sql('hits')}"""
+
+
 @register("sim_ivf_recall")  # rows-only: its floor row is the pin
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the k-means IVF search against the exact kNN
     baseline — the measurement loop every ANN deployment needs (tune
-    nprobe/K against it). Output: one row per query with hit count
-    and recall, plus ordering info to spot rank inversions."""
+    nprobe/K against it). Output: one row per query with its exact
+    row count ``k``, hit count and recall (:func:`ann_recall`)."""
     from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
         sim_ivf_kmeans_topk,
     )
 
-    exact = sim_knn_batch(spark, sf_dir).select(
-        "query_id", F.col("vec_id").alias("exact_id")
-    )
-    approx = sim_ivf_kmeans_topk(spark, sf_dir).select(
-        "query_id", F.col("vec_id").alias("approx_id")
-    )
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.query_id)
-        & (exact.exact_id == approx.approx_id),
-    ).groupBy(exact.query_id.alias("qid")).agg(F.count("*").alias("n_hits"))
-    per_query = (
-        exact.groupBy("query_id")
-        .agg(F.count("*").alias("k"))
-        .join(hits, F.col("query_id") == F.col("qid"), "left")
-        .select(
-            "query_id",
-            "k",
-            F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("k")).alias(
-                "recall_at_k"
-            ),
-        )
-    )
-    return per_query
+    return ann_recall(spark, sf_dir, sim_ivf_kmeans_topk(spark, sf_dir))
 
 
 # macro recall@5 of the learned IVF at IVF_NPROBE observed 0.90 at
@@ -674,18 +814,7 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_RECALL_FLOOR = 0.3
 
 
-@register(
-    "sim_ivf_recall_floor",
-    oracle=f"""
-    -- n_queries counts EVALUABLE queries: a query vector with no
-    -- possible neighbor (corpus of one) has no recall to measure
-    SELECT CASE WHEN (SELECT COUNT(*) FROM embeddings) > 1
-                THEN COUNT(*) ELSE 0 END AS n_queries,
-           CAST({KNN_K} AS BIGINT) AS k,
-           TRUE AS recall_floor_met
-    FROM embeddings WHERE vec_id < {N_QUERIES}
-    """,
-)
+@register("sim_ivf_recall_floor", oracle=_RECALL_FLOOR_ORACLE)
 def sim_ivf_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked acceptance gate over :func:`sim_ivf_recall` (the
     ``events_approx_distinct`` tolerance pattern): one row claiming
@@ -693,18 +822,7 @@ def sim_ivf_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchored to the query-batch count the oracle derives
     independently. Converts the rows-only recall loop into a row the
     driver's hash gate can pin."""
-    per_query = sim_ivf_recall(spark, sf_dir)
-    return per_query.agg(
-        F.count("*").alias("n_queries"),
-        # engine-side empty alignment (frozen oracle states constants):
-        # zero evaluable queries -> nominal k, vacuously-met floor
-        F.coalesce(F.max("k").cast("bigint"), F.lit(KNN_K)).alias(
-            "k"
-        ),
-        F.coalesce(
-            F.avg("recall_at_k") >= F.lit(IVF_RECALL_FLOOR), F.lit(True)
-        ).alias("recall_floor_met"),
-    )
+    return ann_recall_floor(sim_ivf_recall(spark, sf_dir), IVF_RECALL_FLOOR)
 
 
 RANGE_SEARCH_THRESHOLD = 0.3  # max query↔corpus cosine is 0.493 at sf0.01
@@ -718,10 +836,10 @@ RANGE_SEARCH_THRESHOLD = 0.3  # max query↔corpus cosine is 0.493 at sf0.01
       FROM embeddings WHERE vec_id < {N_QUERIES}
     )
     SELECT q.query_id, e.vec_id,
-           ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) AS cosine
+           {_rounded_cosine_sql('e.embedding', 'q.qvec')} AS cosine
     FROM embeddings e CROSS JOIN q
     WHERE e.vec_id <> q.query_id
-      AND ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6)
+      AND {_rounded_cosine_sql('e.embedding', 'q.qvec')}
           >= {RANGE_SEARCH_THRESHOLD}
     """,
 )
@@ -741,27 +859,8 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary rows (the zscore-pattern rounding contract).
     """
     emb = table_wide(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        _norm(F.col("embedding")).alias("qnrm"),
-    )
-    corpus = emb.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    return (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qvec"))
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= RANGE_SEARCH_THRESHOLD)
+    return _score_query_batch(emb, N_QUERIES).filter(
+        F.col("cosine") >= RANGE_SEARCH_THRESHOLD
     )
 
 
@@ -778,10 +877,10 @@ HARD_NEG_K = 5
     ), scored AS (
       SELECT q.anchor_id, q.anchor_label, e.vec_id AS negative_id,
              e.label AS negative_label,
-             ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) AS cosine,
+             {_rounded_cosine_sql('e.embedding', 'q.qvec')} AS cosine,
              ROW_NUMBER() OVER (
                PARTITION BY q.anchor_id
-               ORDER BY ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) DESC,
+               ORDER BY {_rounded_cosine_sql('e.embedding', 'q.qvec')} DESC,
                         e.vec_id) AS neg_rank
       FROM embeddings e CROSS JOIN q
       WHERE e.vec_id <> q.anchor_id AND e.label <> q.anchor_label
@@ -802,41 +901,16 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking, so the window ranks only eligible negatives.
     """
     emb = table_wide(spark, sf_dir, "embeddings")
-    anchors = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        F.col("embedding").alias("qvec"),
-        _norm(F.col("embedding")).alias("qnrm"),
-    )
-    corpus = emb.select(
+    scored = _score_query_batch(
+        emb, N_QUERIES, {"anchor_label": "label"}, {"negative_label": "label"}
+    ).filter(F.col("negative_label") != F.col("anchor_label"))
+    return _top_k(scored, HARD_NEG_K, "neg_rank").select(
+        F.col("query_id").alias("anchor_id"),
+        "anchor_label",
         F.col("vec_id").alias("negative_id"),
-        F.col("label").alias("negative_label"),
-        "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
-    )
-    scored = (
-        corpus.crossJoin(F.broadcast(anchors))
-        .filter(
-            (F.col("negative_id") != F.col("anchor_id"))
-            & (F.col("negative_label") != F.col("anchor_label"))
-        )
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            F.round(
-                _dot(F.col("embedding"), F.col("qvec"))
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("anchor_id").orderBy(
-        F.desc("cosine"), F.asc("negative_id")
-    )
-    return scored.withColumn("neg_rank", F.row_number().over(w)).filter(
-        F.col("neg_rank") <= HARD_NEG_K
+        "negative_label",
+        "cosine",
+        "neg_rank",
     )
 
 
@@ -854,7 +928,7 @@ KNN_EVAL_N = 50  # anchors in the leave-one-out label-accuracy eval
       SELECT q.anchor_id, q.true_label, e.label AS pred_label,
              ROW_NUMBER() OVER (
                PARTITION BY q.anchor_id
-               ORDER BY ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) DESC,
+               ORDER BY {_rounded_cosine_sql('e.embedding', 'q.qvec')} DESC,
                         e.vec_id) AS rnk
       FROM embeddings e CROSS JOIN q
       WHERE e.vec_id <> q.anchor_id
@@ -878,37 +952,12 @@ def sim_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     row out.
     """
     emb = table_wide(spark, sf_dir, "embeddings")
-    anchors = emb.filter(F.col("vec_id") < KNN_EVAL_N).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("true_label"),
-        F.col("embedding").alias("qvec"),
-        _norm(F.col("embedding")).alias("qnrm"),
-    )
-    corpus = emb.select(
-        "vec_id",
-        F.col("label").alias("pred_label"),
-        "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
-    )
-    w = W.partitionBy("anchor_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    top1 = (
-        corpus.crossJoin(F.broadcast(anchors))
-        .filter(F.col("vec_id") != F.col("anchor_id"))
-        .select(
-            "anchor_id",
-            "true_label",
-            "pred_label",
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qvec"))
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cosine"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
+    top1 = _top_k(
+        _score_query_batch(
+            emb, KNN_EVAL_N, {"true_label": "label"}, {"pred_label": "label"}
+        ),
+        1,
+        "rnk",
     )
     hit = F.when(F.col("pred_label") == F.col("true_label"), 1).otherwise(0)
     return top1.agg(
@@ -934,10 +983,10 @@ MRL_RECALL_FLOOR = 0.3  # macro recall@KNN_K of rerank-of-shortlist
       FROM embeddings WHERE vec_id < {N_QUERIES}
     ), scored AS (
       SELECT q.query_id, e.vec_id,
-             ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) AS cf,
-             ROUND({_cosine_sql(
+             {_rounded_cosine_sql('e.embedding', 'q.qvec')} AS cf,
+             {_rounded_cosine_sql(
                  f'list_slice(e.embedding, 1, {MRL_PREFIX_DIMS})',
-                 f'list_slice(q.qvec, 1, {MRL_PREFIX_DIMS})')}, 6) AS cp
+                 f'list_slice(q.qvec, 1, {MRL_PREFIX_DIMS})')} AS cp
       FROM embeddings e CROSS JOIN q
       WHERE e.vec_id <> q.query_id
     ), ranked AS (
@@ -1006,12 +1055,10 @@ def sim_matryoshka_prefix_floor(
         .select(
             "query_id",
             "vec_id",
-            F.round(
-                cosine_expr(F.col("embedding"), F.col("qvec")), 6
-            ).alias("cf"),
-            F.round(
-                cosine_expr(pre(F.col("embedding")), pre(F.col("qvec"))), 6
-            ).alias("cp"),
+            rounded_cosine(F.col("embedding"), F.col("qvec")).alias("cf"),
+            rounded_cosine(pre(F.col("embedding")), pre(F.col("qvec"))).alias(
+                "cp"
+            ),
         )
     )
     wf = W.partitionBy("query_id").orderBy(F.desc("cf"), F.asc("vec_id"))
@@ -1054,10 +1101,10 @@ FILTERED_LABEL = 3  # attribute predicate for the filtered search
       SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
     )
     SELECT e.vec_id, e.label,
-           ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) AS cosine
+           {_rounded_cosine_sql('e.embedding', 'q.qvec')} AS cosine
     FROM embeddings e CROSS JOIN q
     WHERE e.vec_id <> {QUERY_VEC_ID} AND e.label = {FILTERED_LABEL}
-    ORDER BY ROUND({_cosine_sql('e.embedding', 'q.qvec')}, 6) DESC, e.vec_id
+    ORDER BY {_rounded_cosine_sql('e.embedding', 'q.qvec')} DESC, e.vec_id
     LIMIT {TOP_K}
     """,
 )
@@ -1089,9 +1136,7 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(
-                cosine_expr(F.col("embedding"), F.col("qvec")), 6
-            ).alias("cosine"),
+            rounded_cosine(F.col("embedding"), F.col("qvec")).alias("cosine"),
         )
     )
     return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(TOP_K)
@@ -1477,7 +1522,7 @@ MUTUAL_K = 3  # in-bucket kNN width for the mutual filter
       FROM embeddings
     ), scored AS (
       SELECT a.vec_id AS src, c.vec_id AS dst,
-             ROUND({_cosine_sql('a.embedding', 'c.embedding')}, 6)
+             {_rounded_cosine_sql('a.embedding', 'c.embedding')}
                AS cosine
       FROM b a JOIN b c
         ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
@@ -1544,11 +1589,7 @@ def sim_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "src",
             "dst",
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb"))),
-                6,
-            ).alias("cosine"),
+            rounded_cosine(F.col("va"), F.col("vb")).alias("cosine"),
         )
     )
     w = W.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
@@ -1576,6 +1617,135 @@ def sim_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NPROBE_CURVE = (1, 2, 4, 8)
+_NPROBE_VALUES_SQL = (
+    f"(VALUES {', '.join(f'({v})' for v in NPROBE_CURVE)}) v(nprobe)"
+)
+
+
+def sign_bit_probes(b: DataFrame, vec: str, nprobe: int) -> DataFrame:
+    """``(query_id, qvec, bucket, probe_rank)``: each of the first
+    ``N_QUERIES`` vectors of ``b`` (``vec_id``, ``vec``, ``bucket``)
+    ranks the non-empty sign-bit buckets by Hamming distance from its
+    own (tie-break bucket id) and keeps the ``nprobe`` nearest. Static
+    integer arithmetic, so the probe ORDER is oracle-checkable. Twin:
+    :func:`_sign_bit_probes_sql`."""
+    nq = b.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col(vec).alias("qvec"),
+        F.col("bucket").alias("qbucket"),
+    )
+    wp = W.partitionBy("query_id").orderBy(
+        F.bit_count(
+            F.expr("CAST(qbucket AS BIGINT) ^ CAST(bucket AS BIGINT)")
+        ),
+        F.asc("bucket"),
+    )
+    return (
+        nq.crossJoin(F.broadcast(b.select("bucket").distinct()))
+        .withColumn("probe_rank", F.row_number().over(wp))
+        .filter(F.col("probe_rank") <= nprobe)
+        .select("query_id", "qvec", "bucket", "probe_rank")
+    )
+
+
+def _sign_bit_probes_sql(b: str, vec: str, nprobe: int) -> str:
+    """CTE ``probes`` over the relation ``b`` — the DuckDB twin of
+    :func:`sign_bit_probes`."""
+    return f"""probes AS (
+      SELECT q.vec_id AS query_id, q.{vec} AS qvec, k.bucket,
+             ROW_NUMBER() OVER (
+               PARTITION BY q.vec_id
+               ORDER BY bit_count(xor(CAST(q.bucket AS BIGINT),
+                                      CAST(k.bucket AS BIGINT))),
+                        k.bucket) AS probe_rank
+      FROM {b} q, (SELECT DISTINCT bucket FROM {b}) k
+      WHERE q.vec_id < {N_QUERIES}
+      QUALIFY probe_rank <= {nprobe}
+    )"""
+
+
+def probed_candidates(
+    lists: DataFrame, probes: DataFrame, vec: str
+) -> DataFrame:
+    """``(query_id, probe_rank, bucket, vec_id, cosine)``: every vector
+    of a probed inverted list (``lists``: ``vec_id``, ``vec``,
+    ``bucket``) other than the query, scored by rounded cosine to it.
+    A vector sits in one list, so each (query, vector) pair appears at
+    most once. Plan: a bucket-keyed join of the broadcast
+    ≤|queries|·nprobe probe table against the corpus. Twin:
+    :func:`_probed_cand_sql`."""
+    return (
+        lists.join(F.broadcast(probes), "bucket")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "probe_rank",
+            "bucket",
+            "vec_id",
+            rounded_cosine(F.col(vec), F.col("qvec")).alias("cosine"),
+        )
+    )
+
+
+def _probed_cand_sql(lists: str, vec: str) -> str:
+    """CTE ``cand`` over a ``probes`` CTE and the relation ``lists`` —
+    the DuckDB twin of :func:`probed_candidates`."""
+    return f"""cand AS (
+      SELECT p.query_id, p.probe_rank, p.bucket, x.vec_id,
+             {_rounded_cosine_sql(f'x.{vec}', 'p.qvec')} AS cosine
+      FROM probes p JOIN {lists} x ON x.bucket = p.bucket
+      WHERE x.vec_id <> p.query_id
+    )"""
+
+
+def nprobe_recall_curve(
+    spark: SparkSession, sf_dir: str, cand: DataFrame
+) -> DataFrame:
+    """Recall@k per nprobe ∈ ``NPROBE_CURVE`` from IVF candidates
+    ``(query_id, probe_rank, vec_id, cosine)`` generated ONCE at the
+    widest probe depth: every curve point re-ranks that scored frame
+    through a (nprobe, query) window — one corpus pass for the whole
+    curve, not one search per point. Output ``(nprobe, n_hits,
+    n_exact, recall_q6)``, one row per point. Twin:
+    ``_NPROBE_CURVE_SQL``."""
+    nprobes = spark.createDataFrame(
+        [(v,) for v in NPROBE_CURVE], "nprobe int"
+    )
+    picks = _top_k(
+        cand.join(
+            F.broadcast(nprobes), F.col("probe_rank") <= F.col("nprobe")
+        ),
+        KNN_K,
+        "_r",
+        ("nprobe", "query_id"),
+    )
+    exact, hits = _exact_hits(spark, sf_dir, picks)
+    counts = nprobes.join(
+        F.broadcast(hits.groupBy("nprobe").agg(F.count("*").alias("n_hits"))),
+        "nprobe",
+        "left",
+    )
+    return (
+        _with_recall_q6(counts, exact)
+        .select("nprobe", "n_hits", "n_exact", "recall_q6")
+        .orderBy("nprobe")
+    )
+
+
+# twin of nprobe_recall_curve: the whole oracle after a ``cand`` CTE
+_NPROBE_CURVE_SQL = f"""{_EXACT_TOPK_SQL}, picks AS (
+      SELECT v.nprobe, c.query_id, c.vec_id
+      FROM {_NPROBE_VALUES_SQL}, cand c
+      WHERE c.probe_rank <= v.nprobe
+      QUALIFY ROW_NUMBER() OVER (
+        PARTITION BY v.nprobe, c.query_id
+        ORDER BY c.cosine DESC, c.vec_id) <= {KNN_K}
+    ), hits AS (
+      SELECT p.nprobe, COUNT(*) AS n_hits FROM {_HITS_SQL} GROUP BY p.nprobe
+    ), {_recall_q6_sql(f'{_NPROBE_VALUES_SQL} LEFT JOIN hits USING (nprobe)')}
+    SELECT CAST(nprobe AS INTEGER) AS nprobe, n_hits, n_exact, recall_q6
+    FROM recall
+    """
 
 
 @register(
@@ -1585,57 +1755,8 @@ NPROBE_CURVE = (1, 2, 4, 8)
       SELECT vec_id, embedding,
              {_ivf_bucket_sql('embedding')} AS bucket
       FROM embeddings
-    ), nq AS (
-      SELECT vec_id AS query_id, embedding AS qvec, bucket AS qbucket
-      FROM b WHERE vec_id < {N_QUERIES}
-    ), buckets AS (
-      SELECT DISTINCT bucket FROM b
-    ), probes AS (
-      SELECT query_id, qvec, bucket,
-             ROW_NUMBER() OVER (
-               PARTITION BY query_id
-               ORDER BY bit_count(xor(CAST(qbucket AS BIGINT),
-                                      CAST(bucket AS BIGINT))),
-                        bucket) AS probe_rank
-      FROM nq, buckets
-    ), cand AS (
-      SELECT p.query_id, p.probe_rank, x.vec_id,
-             ROUND({_cosine_sql('x.embedding', 'p.qvec')}, 6) AS cosine
-      FROM probes p JOIN b x ON x.bucket = p.bucket
-      WHERE p.probe_rank <= {max(NPROBE_CURVE)}
-        AND x.vec_id <> p.query_id
-    ), exact AS (
-      SELECT q.query_id, x.vec_id
-      FROM nq q JOIN b x ON x.vec_id <> q.query_id
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY q.query_id
-        ORDER BY ROUND({_cosine_sql('x.embedding', 'q.qvec')}, 6) DESC,
-                 x.vec_id) <= {KNN_K}
-    ), picks AS (
-      SELECT np.nprobe, c.query_id, c.vec_id
-      FROM (VALUES {', '.join(f'({v})' for v in NPROBE_CURVE)})
-           np(nprobe), cand c
-      WHERE c.probe_rank <= np.nprobe
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY np.nprobe, c.query_id
-        ORDER BY c.cosine DESC, c.vec_id) <= {KNN_K}
-    ), hits AS (
-      SELECT p.nprobe, COUNT(*) AS n_hits
-      FROM picks p JOIN exact e
-        ON p.query_id = e.query_id AND p.vec_id = e.vec_id
-      GROUP BY p.nprobe
-    ), denom AS (
-      SELECT COUNT(*) AS n_exact FROM exact
-    )
-    SELECT CAST(v.nprobe AS INTEGER) AS nprobe,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           CAST(d.n_exact AS BIGINT) AS n_exact,
-           CAST(CASE WHEN d.n_exact = 0 THEN 0
-                ELSE COALESCE(h.n_hits, 0) * 1000000 // d.n_exact
-                END AS BIGINT) AS recall_q6
-    FROM (VALUES {', '.join(f'({v})' for v in NPROBE_CURVE)}) v(nprobe)
-    LEFT JOIN hits h ON v.nprobe = h.nprobe, denom d
-    """,
+    ), {_sign_bit_probes_sql('b', 'embedding', max(NPROBE_CURVE))},
+    {_probed_cand_sql('b', 'embedding')}, {_NPROBE_CURVE_SQL}""",
 )
 def sim_ivf_nprobe_recall_curve(
     spark: SparkSession, sf_dir: str
@@ -1652,14 +1773,9 @@ def sim_ivf_nprobe_recall_curve(
     Output: one row per nprobe with hit/evaluable counts and the
     integer q6 macro recall.
 
-    Plan (100 TB shape): candidates are generated ONCE at the widest
-    probe depth (one bucket-keyed join of the ≤|queries|·nprobe_max
-    broadcast probe table against the corpus), then every curve point
-    reuses that scored frame through a (nprobe, query) window — the
-    curve costs one corpus pass plus rank windows over candidate
-    rows, not one search per point. The exact baseline is the already
-    audited broadcast-scoring pass; the final fixed 4-row frame
-    assembles driver-side-free via broadcast joins.
+    Plan (100 TB shape): :func:`sign_bit_probes` at the widest depth,
+    :func:`probed_candidates`, then :func:`nprobe_recall_curve`
+    re-ranks that one scored frame for every point.
     """
     emb = table_wide(spark, sf_dir, "embeddings")
     b = emb.select(
@@ -1667,83 +1783,41 @@ def sim_ivf_nprobe_recall_curve(
         "embedding",
         _ivf_bucket_expr(F.col("embedding")).alias("bucket"),
     )
-    nq = b.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-    )
-    buckets = b.select("bucket").distinct()
-    wp = W.partitionBy("query_id").orderBy(
-        F.bit_count(
-            F.expr("CAST(qbucket AS BIGINT) ^ CAST(bucket AS BIGINT)")
-        ),
-        F.asc("bucket"),
-    )
-    probes = (
-        nq.crossJoin(F.broadcast(buckets))
-        .withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= max(NPROBE_CURVE))
-        .select("query_id", "qvec", "bucket", "probe_rank")
-    )
-    cand = (
-        b.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "probe_rank",
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qvec"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qvec"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    nprobes = spark.createDataFrame(
-        [(v,) for v in NPROBE_CURVE], "nprobe int"
-    )
-    wk = W.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    picks = (
-        cand.join(
-            F.broadcast(nprobes),
-            F.col("probe_rank") <= F.col("nprobe"),
-        )
-        .withColumn("_r", F.row_number().over(wk))
-        .filter(F.col("_r") <= KNN_K)
-        .select("nprobe", "query_id", "vec_id")
-    )
-    exact = sim_knn_batch(spark, sf_dir).select("query_id", "vec_id")
-    hits = picks.join(exact, ["query_id", "vec_id"]).groupBy(
-        "nprobe"
-    ).agg(F.count("*").alias("n_hits"))
-    denom = exact.agg(F.count("*").alias("n_exact"))
-    return (
-        nprobes.join(F.broadcast(hits), "nprobe", "left")
-        .crossJoin(F.broadcast(denom))
-        .selectExpr(
-            "nprobe",
-            "CAST(COALESCE(n_hits, 0) AS BIGINT) AS n_hits",
-            "CAST(n_exact AS BIGINT) AS n_exact",
-            "CAST(CASE WHEN n_exact = 0 THEN 0"
-            " ELSE COALESCE(n_hits, 0) * 1000000 div n_exact"
-            " END AS BIGINT) AS recall_q6",
-        )
-        .orderBy("nprobe")
+    probes = sign_bit_probes(b, "embedding", max(NPROBE_CURVE))
+    return nprobe_recall_curve(
+        spark, sf_dir, probed_candidates(b, probes, "embedding")
     )
 
 
-@register(
-    "sim_ivf_bucket_balance",
-    oracle=f"""
-    WITH b AS (
-      SELECT {_ivf_bucket_sql('embedding')} AS bucket FROM embeddings
-    ), sz AS (
+def list_balance(assigned: DataFrame) -> DataFrame:
+    """Inverted-list balance over any ``bucket`` assignment: per
+    occupied list its size, corpus share (q6) and LOAD FACTOR = size /
+    mean size (q6; 1e6 ⇔ perfectly balanced lists). Plan: one count
+    per list and one broadcast row of scalars (total, list count).
+    Twin: :func:`_list_balance_sql`."""
+    sz = assigned.groupBy("bucket").agg(
+        F.count("*").cast("long").alias("n_vecs")
+    )
+    tot = sz.agg(
+        F.sum("n_vecs").cast("long").alias("n"),
+        F.count("*").cast("long").alias("nb"),
+    )
+    return sz.crossJoin(F.broadcast(tot)).selectExpr(
+        "bucket",
+        "n_vecs",
+        "CAST(n_vecs * 1000000 div n AS BIGINT) AS share_q6",
+        "CAST(n_vecs * 1000000 div n * nb AS BIGINT) AS load_factor_q6",
+    )
+
+
+def _list_balance_sql(assigned: str) -> str:
+    """The balance query over the relation ``assigned`` — the DuckDB
+    twin of :func:`list_balance`."""
+    return f"""sz AS (
       SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vecs
-      FROM b GROUP BY bucket
+      FROM {assigned} GROUP BY bucket
     ), tot AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n FROM b
+      SELECT CAST(COUNT(*) AS BIGINT) AS n FROM {assigned}
     )
     SELECT s.bucket, s.n_vecs,
            CAST(s.n_vecs * 1000000 // t.n AS BIGINT) AS share_q6,
@@ -1753,7 +1827,15 @@ def sim_ivf_nprobe_recall_curve(
            CAST(s.n_vecs * 1000000 // t.n
                 * (SELECT COUNT(*) FROM sz) AS BIGINT) AS load_factor_q6
     FROM sz s, tot t
-    """,
+    """
+
+
+@register(
+    "sim_ivf_bucket_balance",
+    oracle=f"""
+    WITH b AS (
+      SELECT {_ivf_bucket_sql('embedding')} AS bucket FROM embeddings
+    ), {_list_balance_sql('b')}""",
 )
 def sim_ivf_bucket_balance(
     spark: SparkSession, sf_dir: str
@@ -1765,29 +1847,14 @@ def sim_ivf_bucket_balance(
     probe latency and the skew-join risk both track its max).
 
     Plan: one narrow pass computes the bucket id (sign bits — no
-    shuffle wider than the ≤2^bits-row count frame), then two tiny
-    broadcast scalars (total, bucket count). The operator's cost IS
-    the scan; it exists so the quantizer's balance is measured, not
-    assumed, before committing a 100 TB corpus to those lists.
+    shuffle wider than the ≤2^bits-row count frame), then
+    :func:`list_balance`. The operator's cost IS the scan; it exists
+    so the quantizer's balance is measured, not assumed, before
+    committing a 100 TB corpus to those lists.
     """
     emb = table_wide(spark, sf_dir, "embeddings")
-    sz = (
+    return list_balance(
         emb.select(_ivf_bucket_expr(F.col("embedding")).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").cast("long").alias("n_vecs"))
-    )
-    tot = emb.agg(F.count("*").cast("long").alias("n"))
-    nb = sz.agg(F.count("*").cast("long").alias("nb"))
-    return (
-        sz.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(nb))
-        .selectExpr(
-            "bucket",
-            "n_vecs",
-            "CAST(n_vecs * 1000000 div n AS BIGINT) AS share_q6",
-            "CAST(n_vecs * 1000000 div n * nb AS BIGINT)"
-            " AS load_factor_q6",
-        )
     )
 
 
@@ -1896,11 +1963,7 @@ def emb_label_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(_dot(F.col("cv"), F.col("cv")) > 0)
     )
-    cos = F.round(
-        _dot(F.col("v"), F.col("cv"))
-        / (_norm(F.col("v")) * _norm(F.col("cv"))),
-        6,
-    )
+    cos = rounded_cosine(F.col("v"), F.col("cv"))
     scored = (
         e.crossJoin(F.broadcast(cent))
         .groupBy("vec_id", "label")

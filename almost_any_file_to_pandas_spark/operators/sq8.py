@@ -21,8 +21,16 @@ produce ±inf and an overflowing FLOOR cast.
 Scale shape: the range pass is one (d)-key aggregation; encode and
 reconstruct are NARROW maps against a single broadcast row carrying
 the d (lo, hi) pairs — no shuffle, no UDF; the asymmetric search
-(raw query × reconstructed corpus) is the same broadcast-query
-scoring spine as ``sim_knn_batch``.
+(raw query × reconstructed corpus) scores with the shared rounded
+cosine and top-k window of ``similarity.py`` (``rounded_cosine``,
+``_top_k``). The raw query and the reconstructed corpus are different
+vectors, so ``sim_knn_batch``'s query-batch scorer
+(``_score_query_batch``, one embedding column on both sides) does not
+apply. The recall rows go through the shared recall harness
+(``ann_recall_q6``: one hit join against ``sim_knn_batch``'s exact
+top-k) and IVFSQ8 through the shared sign-bit probe ranker
+(``sign_bit_probes``, ``probed_candidates``), each with its DuckDB
+twin.
 
 Reference parity: extends the reference's aggregate surface
 (main.py:416-466) with the similarity operators a training-data
@@ -33,19 +41,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import register, table_wide
 from almost_any_file_to_pandas_spark.operators.similarity import (
     IVF_NPROBE,
     KNN_K,
     N_QUERIES,
-    _cosine_sql,
-    _dot,
+    _ANN_RECALL_Q6_SQL,
     _ivf_bucket_expr,
     _ivf_bucket_sql,
-    _norm,
-    sim_knn_batch,
+    _probed_cand_sql,
+    _rounded_cosine_sql,
+    _sign_bit_probes_sql,
+    _top_k,
+    ann_recall_q6,
+    probed_candidates,
+    rounded_cosine,
+    sign_bit_probes,
 )
 
 # macro recall@5 of SQ8 asymmetric search measured 1.0 at sf0.01 —
@@ -111,15 +123,19 @@ _SQ8_CTES = f"""
     ), recon AS (
       SELECT e.vec_id, {_sq8_recon_sql('e.v', 'l.lh')} AS rv
       FROM e, lh l
-    ), cand AS (
+    )"""
+
+# twin of _sq8_topk: the SQ8 top-k as CTE ``picks``
+_SQ8_TOPK_SQL = f"""{_SQ8_CTES}, picks AS (
       SELECT q.vec_id AS query_id, x.vec_id,
-             ROUND({_cosine_sql('x.rv', 'q.v')}, 6) AS cosine,
+             {_rounded_cosine_sql('x.rv', 'q.v')} AS cosine,
              ROW_NUMBER() OVER (
                PARTITION BY q.vec_id
-               ORDER BY ROUND({_cosine_sql('x.rv', 'q.v')}, 6) DESC,
+               ORDER BY {_rounded_cosine_sql('x.rv', 'q.v')} DESC,
                         x.vec_id) AS rank
       FROM e q JOIN recon x ON x.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES}
+      QUALIFY rank <= {KNN_K}
     )"""
 
 
@@ -145,10 +161,11 @@ def _sq8_corpus_and_ranges(spark: SparkSession, sf_dir: str):
     return emb, lh_row
 
 
-def _sq8_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared engine spine: per query (vec_id < N_QUERIES), every
-    corpus vector scored by asymmetric cosine (raw query ×
-    reconstructed corpus), ranked."""
+def _sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared engine spine: per query (vec_id < N_QUERIES), the KNN_K
+    corpus vectors nearest by asymmetric cosine (raw query ×
+    reconstructed corpus), ranked in ``rank``. Twin:
+    ``_SQ8_TOPK_SQL``."""
     emb, lh_row = _sq8_corpus_and_ranges(spark, sf_dir)
     recon = emb.crossJoin(F.broadcast(lh_row)).select(
         "vec_id", _sq8_recon(F.col("v"), F.col("lh")).alias("rv")
@@ -156,28 +173,48 @@ def _sq8_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
     )
-    wr = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        recon.join(F.broadcast(q), recon.vec_id != q.query_id)
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("rv"), F.col("qvec"))
-                / (_norm(F.col("rv")) * _norm(F.col("qvec"))),
-                6,
-            ).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(wr))
+    scored = recon.join(F.broadcast(q), recon.vec_id != q.query_id).select(
+        "query_id",
+        "vec_id",
+        rounded_cosine(F.col("rv"), F.col("qvec")).alias("cosine"),
     )
+    return _top_k(scored, KNN_K, "rank")
+
+
+def _sq8_recall_row(
+    spark: SparkSession, sf_dir: str, picks: DataFrame, floor_q6: int
+) -> DataFrame:
+    """The SQ8 recall row: :func:`similarity.ann_recall_q6` of
+    ``picks`` plus the claim ``recall_q6 ≥ floor_q6``. Empty/singleton
+    corpora yield zero evaluable queries → recall 0, floor vacuously
+    true. Twin: :func:`_sq8_recall_sql`."""
+    return ann_recall_q6(spark, sf_dir, picks).selectExpr(
+        "n_queries",
+        f"CAST({KNN_K} AS BIGINT) AS k",
+        "n_hits",
+        "recall_q6",
+        f"CASE WHEN n_exact = 0 THEN TRUE ELSE recall_q6 >= {floor_q6}"
+        " END AS recall_floor_met",
+    )
+
+
+def _sq8_recall_sql(floor_q6: int) -> str:
+    """The oracle tail after a ``picks`` CTE — the DuckDB twin of
+    :func:`_sq8_recall_row`."""
+    return f"""{_ANN_RECALL_Q6_SQL}
+    SELECT n_queries, CAST({KNN_K} AS BIGINT) AS k, n_hits, recall_q6,
+           CASE WHEN n_exact = 0 THEN TRUE
+                ELSE recall_q6 >= {floor_q6} END AS recall_floor_met
+    FROM recall
+    """
 
 
 @register(
     "sim_sq8_topk",
     oracle=f"""
-    WITH {_SQ8_CTES}
+    WITH {_SQ8_TOPK_SQL}
     SELECT query_id, vec_id, cosine, CAST(rank AS BIGINT) AS rank
-    FROM cand WHERE rank <= {KNN_K}
+    FROM picks
     """,
 )
 def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,78 +224,24 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quantization noise for free). Exact oracle parity end-to-end:
     the quantizer is deterministic, so the oracle reproduces codes,
     reconstructions, cosines, and ranks bit-for-bit."""
-    return (
-        _sq8_candidates(spark, sf_dir)
-        .filter(F.col("rank") <= KNN_K)
-        .select("query_id", "vec_id", "cosine", F.col("rank").cast("long"))
+    return _sq8_topk(spark, sf_dir).select(
+        "query_id", "vec_id", "cosine", F.col("rank").cast("long")
     )
 
 
 @register(
     "sim_sq8_recall",
     oracle=f"""
-    WITH {_SQ8_CTES}, picks AS (
-      SELECT query_id, vec_id FROM cand WHERE rank <= {KNN_K}
-    ), exact AS (
-      SELECT q.vec_id AS query_id, x.vec_id
-      FROM e q JOIN e x ON x.vec_id <> q.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY q.vec_id
-        ORDER BY ROUND({_cosine_sql('x.v', 'q.v')}, 6) DESC,
-                 x.vec_id) <= {KNN_K}
-    ), hits AS (
-      SELECT COUNT(*) AS n_hits
-      FROM picks p JOIN exact e2
-        ON p.query_id = e2.query_id AND p.vec_id = e2.vec_id
-    ), denom AS (
-      SELECT COUNT(*) AS n_exact,
-             COUNT(DISTINCT query_id) AS n_queries
-      FROM exact
-    )
-    SELECT CAST(d.n_queries AS BIGINT) AS n_queries,
-           CAST({KNN_K} AS BIGINT) AS k,
-           CAST(h.n_hits AS BIGINT) AS n_hits,
-           CAST(CASE WHEN d.n_exact = 0 THEN 0
-                ELSE h.n_hits * 1000000 // d.n_exact
-                END AS BIGINT) AS recall_q6,
-           CASE WHEN d.n_exact = 0 THEN TRUE
-                ELSE h.n_hits * 1000000 // d.n_exact
-                     >= {SQ8_RECALL_FLOOR_Q6}
-                END AS recall_floor_met
-    FROM hits h, denom d
-    """,
+    WITH {_SQ8_TOPK_SQL}, {_sq8_recall_sql(SQ8_RECALL_FLOOR_Q6)}""",
 )
 def sim_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Macro recall@k of SQ8 asymmetric search against the exact kNN
     baseline (:func:`sim_knn_batch` — same batch, same rounding) —
     EXACTLY oracle-paired, stronger than the IVF/PQ floor rows: both
     engines recompute the quantizer, the search, the hit counts, and
-    the integer q6 recall. Empty/singleton corpora yield zero
-    evaluable queries → recall 0, floor vacuously true, on both
-    sides by the same CASE."""
-    picks = _sq8_candidates(spark, sf_dir).filter(F.col("rank") <= KNN_K)
-    exact = sim_knn_batch(spark, sf_dir).select("query_id", "vec_id")
-    hits = picks.join(exact, ["query_id", "vec_id"]).agg(
-        F.count("*").alias("n_hits")
-    )
-    denom = exact.agg(
-        F.count("*").alias("n_exact"),
-        F.countDistinct("query_id").alias("n_queries"),
-    )
-    return (
-        hits.crossJoin(F.broadcast(denom))
-        .selectExpr(
-            "CAST(n_queries AS BIGINT) AS n_queries",
-            f"CAST({KNN_K} AS BIGINT) AS k",
-            "CAST(n_hits AS BIGINT) AS n_hits",
-            "CAST(CASE WHEN n_exact = 0 THEN 0"
-            " ELSE n_hits * 1000000 div n_exact END AS BIGINT)"
-            " AS recall_q6",
-            "CASE WHEN n_exact = 0 THEN TRUE"
-            f" ELSE n_hits * 1000000 div n_exact >= {SQ8_RECALL_FLOOR_Q6}"
-            " END AS recall_floor_met",
-        )
+    the integer q6 recall (:func:`_sq8_recall_row`)."""
+    return _sq8_recall_row(
+        spark, sf_dir, _sq8_topk(spark, sf_dir), SQ8_RECALL_FLOOR_Q6
     )
 
 
@@ -276,59 +259,12 @@ IVFSQ8_RECALL_FLOOR_Q6 = 300_000
       SELECT e.vec_id, e.v, r.rv,
              {_ivf_bucket_sql('e.v')} AS bucket
       FROM e JOIN recon r USING (vec_id)
-    ), nq AS (
-      SELECT vec_id AS query_id, v AS qvec, bucket AS qbucket
-      FROM b WHERE vec_id < {N_QUERIES}
-    ), buckets AS (
-      SELECT DISTINCT bucket FROM b
-    ), probes AS (
-      SELECT query_id, qvec, bucket
-      FROM (
-        SELECT query_id, qvec, bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY query_id
-                 ORDER BY bit_count(xor(CAST(qbucket AS BIGINT),
-                                        CAST(bucket AS BIGINT))),
-                          bucket) AS probe_rank
-        FROM nq, buckets
-      ) WHERE probe_rank <= {IVF_NPROBE}
-    ), picks AS (
-      SELECT p.query_id, x.vec_id
-      FROM probes p JOIN b x ON x.bucket = p.bucket
-      WHERE x.vec_id <> p.query_id
+    ), {_sign_bit_probes_sql('b', 'v', IVF_NPROBE)},
+    {_probed_cand_sql('b', 'rv')}, picks AS (
+      SELECT query_id, vec_id FROM cand
       QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY p.query_id
-        ORDER BY ROUND({_cosine_sql('x.rv', 'p.qvec')}, 6) DESC,
-                 x.vec_id) <= {KNN_K}
-    ), exact AS (
-      SELECT q.vec_id AS query_id, x.vec_id
-      FROM e q JOIN e x ON x.vec_id <> q.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY q.vec_id
-        ORDER BY ROUND({_cosine_sql('x.v', 'q.v')}, 6) DESC,
-                 x.vec_id) <= {KNN_K}
-    ), hits AS (
-      SELECT COUNT(*) AS n_hits
-      FROM picks p JOIN exact e2
-        ON p.query_id = e2.query_id AND p.vec_id = e2.vec_id
-    ), denom AS (
-      SELECT COUNT(*) AS n_exact,
-             COUNT(DISTINCT query_id) AS n_queries
-      FROM exact
-    )
-    SELECT CAST(d.n_queries AS BIGINT) AS n_queries,
-           CAST({KNN_K} AS BIGINT) AS k,
-           CAST(h.n_hits AS BIGINT) AS n_hits,
-           CAST(CASE WHEN d.n_exact = 0 THEN 0
-                ELSE h.n_hits * 1000000 // d.n_exact
-                END AS BIGINT) AS recall_q6,
-           CASE WHEN d.n_exact = 0 THEN TRUE
-                ELSE h.n_hits * 1000000 // d.n_exact
-                     >= {IVFSQ8_RECALL_FLOOR_Q6}
-                END AS recall_floor_met
-    FROM hits h, denom d
-    """,
+        PARTITION BY query_id ORDER BY cosine DESC, vec_id) <= {KNN_K}
+    ), {_sq8_recall_sql(IVFSQ8_RECALL_FLOOR_Q6)}""",
 )
 def sim_ivfsq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFSQ8 — the FAISS-default index shape (IVF coarse lists +
@@ -356,60 +292,7 @@ def sim_ivfsq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sq8_recon(F.col("v"), F.col("lh")).alias("rv"),
         _ivf_bucket_expr(F.col("v")).alias("bucket"),
     )
-    nq = b.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-    )
-    buckets = b.select("bucket").distinct()
-    wp = W.partitionBy("query_id").orderBy(
-        F.bit_count(
-            F.expr("CAST(qbucket AS BIGINT) ^ CAST(bucket AS BIGINT)")
-        ),
-        F.asc("bucket"),
-    )
-    probes = (
-        nq.crossJoin(F.broadcast(buckets))
-        .withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= IVF_NPROBE)
-        .select("query_id", "qvec", "bucket")
-    )
-    wk = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    picks = (
-        b.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("rv"), F.col("qvec"))
-                / (_norm(F.col("rv")) * _norm(F.col("qvec"))),
-                6,
-            ).alias("cosine"),
-        )
-        .withColumn("_r", F.row_number().over(wk))
-        .filter(F.col("_r") <= KNN_K)
-        .select("query_id", "vec_id")
-    )
-    exact = sim_knn_batch(spark, sf_dir).select("query_id", "vec_id")
-    hits = picks.join(exact, ["query_id", "vec_id"]).agg(
-        F.count("*").alias("n_hits")
-    )
-    denom = exact.agg(
-        F.count("*").alias("n_exact"),
-        F.countDistinct("query_id").alias("n_queries"),
-    )
-    return (
-        hits.crossJoin(F.broadcast(denom))
-        .selectExpr(
-            "CAST(n_queries AS BIGINT) AS n_queries",
-            f"CAST({KNN_K} AS BIGINT) AS k",
-            "CAST(n_hits AS BIGINT) AS n_hits",
-            "CAST(CASE WHEN n_exact = 0 THEN 0"
-            " ELSE n_hits * 1000000 div n_exact END AS BIGINT)"
-            " AS recall_q6",
-            "CASE WHEN n_exact = 0 THEN TRUE"
-            f" ELSE n_hits * 1000000 div n_exact >= {IVFSQ8_RECALL_FLOOR_Q6}"
-            " END AS recall_floor_met",
-        )
+    cand = probed_candidates(b, sign_bit_probes(b, "v", IVF_NPROBE), "rv")
+    return _sq8_recall_row(
+        spark, sf_dir, _top_k(cand, KNN_K, "_r"), IVFSQ8_RECALL_FLOOR_Q6
     )

@@ -131,6 +131,16 @@ BATTERY = [
     "privacy_dp_clipped_mean",
     # empty corpus → no centroids; one vector → no neighbor but itself
     "sim_ivf_kmeans_topk",
+    # the recall harness's zero-denominator branch (n_exact = 0: recall
+    # 0, vacuously-met floor) and the list-balance twins on no/one list
+    "sim_sq8_recall",
+    "sim_ivfsq8_recall",
+    "sim_ivf_nprobe_recall_curve",
+    "sim_ivf_kmeans_nprobe_curve",
+    "sim_ivf_bucket_balance",
+    "sim_ivf_kmeans_bucket_balance",
+    "sim_ivf_recall_floor",
+    "sim_ivfpq_recall_floor",
 ]
 
 # Rows-only repaired queries (no oracle): crash-freedom is the pin.
@@ -140,6 +150,7 @@ ROWS_ONLY_BATTERY = [
     "sim_pq_recall",
     "sim_pq_reconstruction",
     "sim_ivfpq_topk",
+    "sim_ivf_recall",
 ]
 
 

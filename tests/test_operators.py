@@ -118,8 +118,8 @@ def test_decode_wav_real_pcm_roundtrip():
 )
 def test_wav_decoders_reject_malformed_riff(decoder):
     """Every WAV decoder walks the RIFF chunk list through the same
-    walker, so each rejects a non-RIFF blob and a fmt-less shell with
-    the walker's own ValueError."""
+    walker, so each rejects a non-RIFF blob, a fmt-less shell and a
+    fmt declaring 0 channels with the walker's own ValueError."""
     import struct
 
     from almost_any_file_to_pandas_spark.operators import multimodal
@@ -130,6 +130,19 @@ def test_wav_decoders_reject_malformed_riff(decoder):
     with pytest.raises(ValueError, match="missing fmt/data chunk"):
         # RIFF/WAVE shell with no fmt/data chunks
         decode(struct.pack("<4sI4s", b"RIFF", 4, b"WAVE"))
+    # 0 channels and 0 block align in the decoder's own format, with
+    # an extension (1 sample per block, no MS coefficients) that
+    # passes both ADPCM geometry checks
+    tag, bits = {
+        "decode_wav": (1, 16),
+        "decode_wav_ima_adpcm": (0x11, 4),
+        "decode_wav_ms_adpcm": (2, 4),
+    }[decoder]
+    fmt = struct.pack("<HHIIHH", tag, 0, 8000, 0, 0, bits)
+    with pytest.raises(ValueError, match="0 channels"):
+        decode(
+            multimodal._wav_wrap(fmt + struct.pack("<HHH", 4, 1, 0), b"\0" * 4)
+        )
 
 
 _WAV_SYNTH_ARGS = {
@@ -164,6 +177,29 @@ def _decode_census_names():
 def test_decode_census_matches_oracle(gate_compare, name):
     """Every codec census (all on the shared ``decode_census`` kernel)
     matches its arithmetic DuckDB oracle on the sf0.001 corpus."""
+    gate_compare("/root/testdata/sf0.001", name)
+
+
+def _vector_search_names():
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    modules = {
+        f"almost_any_file_to_pandas_spark.operators.{m}"
+        for m in ("similarity", "sq8", "pq", "ivf_kmeans")
+    }
+    return sorted(
+        n
+        for n, fn in plans.QUERIES.items()
+        if fn.__wrapped__.__module__ in modules and n in plans.ORACLES
+    )
+
+
+@pytest.mark.parametrize("name", _vector_search_names())
+def test_vector_search_matches_oracle(gate_compare, name):
+    """Every oracle-paired query of the vector-search modules (the
+    recall harness, probe ranker and list-balance twins among them)
+    matches its DuckDB oracle on the sf0.001 corpus."""
     gate_compare("/root/testdata/sf0.001", name)
 
 
