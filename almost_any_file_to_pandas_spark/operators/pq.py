@@ -35,8 +35,11 @@ also runs on (``similarity.ann_recall``, ``ann_recall_floor``).
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -52,6 +55,11 @@ from almost_any_file_to_pandas_spark.operators.similarity import (
     rounded_cosine,
 )
 from almost_any_file_to_pandas_spark.plans import register, table_wide
+
+# The Arrow kernels call this module's encode and local top-k helpers:
+# ship them to the Python workers by value, so a worker never has to
+# import the package (its path is on the driver's sys.path only).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 PQ_M = 8  # subspaces
 PQ_K = 256  # codes per subspace (8 bits, the standard PQ setting)
@@ -127,38 +135,84 @@ def _fit_codebooks(X: np.ndarray) -> np.ndarray:
     return books
 
 
+def _matrix(frame: pd.DataFrame) -> np.ndarray:
+    """The ``embedding`` column of a pandas frame as a float64 matrix."""
+    return np.stack(frame["embedding"].to_numpy()).astype(np.float64)
+
+
 def _train_codebooks(emb: DataFrame):
     """Codebooks straight from the DataFrame (one fetch + fit);
     ``None`` when the corpus is empty — callers short-circuit."""
     sample = _train_sample(emb)
     if len(sample) == 0:
         return None
-    return _fit_codebooks(
-        np.stack(sample["embedding"].to_numpy()).astype(np.float64)
+    return _fit_codebooks(_matrix(sample))
+
+
+def _pq_index(emb: DataFrame):
+    """What both ADC searches score with, from ONE training fetch (the
+    query batch is a slice of it): ``(books, q_ids, Q, q_norms, lut,
+    cn2)`` — the codebooks, the first N_QUERIES vec_ids and their
+    vectors and norms, the dot LUT (nq, M, K) and the code-norm² LUT
+    (M, K). ``None`` when the corpus is empty."""
+    sample = _train_sample(emb)
+    if len(sample) == 0:
+        return None
+    books = _fit_codebooks(_matrix(sample))
+    queries = sample[sample["vec_id"] < N_QUERIES].sort_values("vec_id")
+    Q = _matrix(queries)
+    lut = np.einsum(
+        "qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, books.shape[2]), books
+    )
+    return (
+        books,
+        queries["vec_id"].to_numpy(),
+        Q,
+        np.linalg.norm(Q, axis=1),
+        lut,
+        (books**2).sum(axis=2),
+    )
+
+
+def pq_codes(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Each row's nearest centroid per subspace, shape (n, M)."""
+    sub = books.shape[2]
+    codes = np.empty((len(X), PQ_M), dtype=np.int32)
+    for m in range(PQ_M):
+        S = X[:, m * sub : (m + 1) * sub]
+        # argmin of ‖s−c‖² needs only −2s·c + ‖c‖² (GEMM form)
+        d2 = (books[m] ** 2).sum(axis=1)[None, :] - 2.0 * (S @ books[m].T)
+        codes[:, m] = d2.argmin(axis=1)
+    return codes
+
+
+def _local_top(q_id, vec_ids, cos, k: int) -> pd.DataFrame:
+    """One query's ``k`` best candidates of a batch. The local top-k
+    bounds the shuffle volume; its (rounded cosine desc, vec_id asc)
+    total order matches the global window's, so the local cut can
+    never drop a global winner on a rounded-cosine tie — results stay
+    partitioning-independent."""
+    top = np.lexsort((vec_ids, -np.round(cos, 6)))[:k]
+    return pd.DataFrame(
+        {
+            "query_id": q_id,
+            "vec_id": vec_ids[top],
+            "pq_cosine": np.round(cos[top], 6),
+        }
     )
 
 
 def pq_encode(emb: DataFrame, books: np.ndarray) -> DataFrame:
     """Encode each vector to M subspace codes (one narrow Arrow stage)."""
-    sub = books.shape[2]
 
     def _encode(batches):
         for batch in batches:
             if len(batch) == 0:
                 continue
-            X = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-            codes = np.empty((len(X), PQ_M), dtype=np.int32)
-            for m in range(PQ_M):
-                S = X[:, m * sub : (m + 1) * sub]
-                # argmin of ‖s−c‖² needs only −2s·c + ‖c‖² (GEMM form)
-                d2 = (books[m] ** 2).sum(axis=1)[None, :] - 2.0 * (
-                    S @ books[m].T
-                )
-                codes[:, m] = d2.argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": batch["vec_id"].to_numpy(),
-                    "codes": list(codes),
+                    "codes": list(pq_codes(_matrix(batch), books)),
                 }
             )
 
@@ -180,61 +234,33 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector read after encoding.
     """
     emb = table_wide(spark, sf_dir, "embeddings")
-    sample = _train_sample(emb)  # one job serves codebooks AND queries
-    if len(sample) == 0:  # empty corpus: nothing to index or query
+    index = _pq_index(emb)
+    if index is None:  # empty corpus: nothing to index or query
         return spark.createDataFrame(
             [],
             "query_id bigint, vec_id bigint, pq_cosine double,"
             " pq_rank int",
         )
-    books = _fit_codebooks(
-        np.stack(sample["embedding"].to_numpy()).astype(np.float64)
-    )
-    sub = books.shape[2]
-
-    queries = (
-        sample[sample["vec_id"] < N_QUERIES]
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )  # N_QUERIES rows — bounded query batch, same as sim_knn_batch
-    q_ids = queries["vec_id"].to_numpy()
-    Q = np.stack(queries["embedding"].to_numpy()).astype(np.float64)
-    q_norms = np.linalg.norm(Q, axis=1)
-    # ADC lookup tables: dot LUT (nq, M, K) and code-norm² LUT (M, K)
-    lut = np.einsum(
-        "qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, sub), books
-    )
-    cn2 = (books**2).sum(axis=2)  # (M, K)
+    books, q_ids, _, q_norms, lut, cn2 = index
 
     def _score(batches):
+        col = np.arange(PQ_M)
         for batch in batches:
             if len(batch) == 0:
                 continue
             vec_ids = batch["vec_id"].to_numpy()
             codes = np.stack(batch["codes"].to_numpy())  # (n, M)
-            col = np.arange(PQ_M)
             dots = lut[:, col, codes[:, col]].sum(axis=2)  # (nq, n)
             norms = np.sqrt(cn2[col, codes[:, col]].sum(axis=1))  # (n,)
             cos = dots / (q_norms[:, None] * norms[None, :])
-            out = []
             k = min(KNN_K + 1, cos.shape[1])
-            for qi in range(len(q_ids)):
-                # local top-k per batch bounds the shuffle volume;
-                # the (cosine desc, vec_id asc) total order matches
-                # the global window's, so the local cut can never
-                # drop a global winner on a rounded-cosine tie —
-                # results stay partitioning-independent
-                top = np.lexsort((vec_ids, -np.round(cos[qi], 6)))[:k]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": q_ids[qi],
-                            "vec_id": vec_ids[top],
-                            "pq_cosine": np.round(cos[qi][top], 6),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
+            yield pd.concat(
+                [
+                    _local_top(q_id, vec_ids, cos[qi], k)
+                    for qi, q_id in enumerate(q_ids)
+                ],
+                ignore_index=True,
+            )
 
     codes = pq_encode(emb, books)
     scored = codes.mapInPandas(
@@ -275,7 +301,7 @@ def sim_pq_reconstruction(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in batches:
             if len(batch) == 0:
                 continue
-            X = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
+            X = _matrix(batch)
             err = np.zeros(len(X))
             for m in range(PQ_M):
                 S = X[:, m * sub : (m + 1) * sub]
@@ -389,27 +415,13 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory contract (full vectors never co-resident with the index).
     """
     emb = table_wide(spark, sf_dir, "embeddings")
-    sample = _train_sample(emb)  # one job serves codebooks AND queries
-    if len(sample) == 0:  # empty corpus: nothing to index or query
+    index = _pq_index(emb)
+    if index is None:  # empty corpus: nothing to index or query
         return spark.createDataFrame(
             [],
             "query_id bigint, vec_id bigint, cosine double, rank int",
         )
-    books = _fit_codebooks(
-        np.stack(sample["embedding"].to_numpy()).astype(np.float64)
-    )
-    sub = books.shape[2]
-
-    queries = (
-        sample[sample["vec_id"] < N_QUERIES]
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    q_ids = queries["vec_id"].to_numpy()
-    Q = np.stack(queries["embedding"].to_numpy()).astype(np.float64)
-    q_norms = np.linalg.norm(Q, axis=1)
-    lut = np.einsum("qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, sub), books)
-    cn2 = (books**2).sum(axis=2)
+    books, q_ids, Q, q_norms, lut, cn2 = index
 
     # Hamming-1 multi-probe: each query probes its own bucket plus
     # every single-bit flip — (IVF_BITS+1) of the 2^IVF_BITS buckets
@@ -431,16 +443,9 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in batches:
             if len(batch) == 0:
                 continue
-            X = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
+            X = _matrix(batch)
             vec_ids_all = batch["vec_id"].to_numpy()
-            codes = np.empty((len(X), PQ_M), dtype=np.int64)
-            for m in range(PQ_M):
-                S = X[:, m * sub : (m + 1) * sub]
-                # argmin of ‖s−c‖² needs only −2s·c + ‖c‖² (GEMM form)
-                d2 = (books[m] ** 2).sum(axis=1)[None, :] - 2.0 * (
-                    S @ books[m].T
-                )
-                codes[:, m] = d2.argmin(axis=1)
+            codes = pq_codes(X, books)
             buckets = (
                 (X[:, :IVF_BITS] > 0.0) * (1 << np.arange(IVF_BITS))
             ).sum(axis=1)
@@ -456,18 +461,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for qi in qis:
                     dots = lut[qi, col, c[:, col]].sum(axis=1)
                     cos = dots / (q_norms[qi] * norms)
-                    k = min(IVFPQ_SHORTLIST, len(cos))
-                    # deterministic local cut: same (rounded cosine
-                    # desc, vec_id asc) total order as the global
-                    # shortlist window — partitioning-independent
-                    top = np.lexsort((vec_ids, -np.round(cos, 6)))[:k]
                     out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": q_ids[qi],
-                                "vec_id": vec_ids[top],
-                                "pq_cosine": np.round(cos[top], 6),
-                            }
+                        _local_top(
+                            q_ids[qi],
+                            vec_ids,
+                            cos,
+                            min(IVFPQ_SHORTLIST, len(cos)),
                         )
                     )
             if out:

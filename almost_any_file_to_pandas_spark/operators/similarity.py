@@ -229,19 +229,37 @@ def _score_query_batch(
     )
 
 
+def _score_query_batch_sql(
+    n_queries: int, q_cols=None, c_cols=None
+) -> str:
+    """DuckDB twin of :func:`_score_query_batch`: a SELECT of the same
+    columns over ``embeddings``."""
+    q_cols, c_cols = q_cols or {}, c_cols or {}
+    cols = [
+        "q.vec_id AS query_id",
+        *[f"q.{src} AS {name}" for name, src in q_cols.items()],
+        "e.vec_id",
+        *[f"e.{src} AS {name}" for name, src in c_cols.items()],
+        f"{_rounded_cosine_sql('e.embedding', 'q.embedding')} AS cosine",
+    ]
+    return f"""SELECT {", ".join(cols)}
+      FROM embeddings e JOIN embeddings q ON e.vec_id <> q.vec_id
+      WHERE q.vec_id < {n_queries}"""
+
+
+def _top_k_sql(rel: str, k: int, rank: str) -> str:
+    """DuckDB twin of :func:`_top_k` over the relation ``rel`` (a CTE
+    name or a parenthesized SELECT), per ``query_id``."""
+    return f"""SELECT *, ROW_NUMBER() OVER (
+        PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS {rank}
+      FROM {rel} QUALIFY {rank} <= {k}"""
+
+
 # The exact top-k of the query batch — sim_knn_batch's oracle and the
 # denominator CTE of every recall oracle
-_EXACT_TOPK_SQL = f"""exact AS (
-      SELECT q.vec_id AS query_id, e.vec_id,
-             {_rounded_cosine_sql('e.embedding', 'q.embedding')} AS cosine,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {_rounded_cosine_sql('e.embedding', 'q.embedding')}
-                          DESC, e.vec_id) AS knn_rank
-      FROM embeddings e JOIN embeddings q ON e.vec_id <> q.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-      QUALIFY knn_rank <= {KNN_K}
-    )"""
+_EXACT_TOPK_SQL = f"""exact AS ({_top_k_sql(
+    f"({_score_query_batch_sql(N_QUERIES)})", KNN_K, "knn_rank"
+)})"""
 
 
 @register(
@@ -831,16 +849,9 @@ RANGE_SEARCH_THRESHOLD = 0.3  # max query↔corpus cosine is 0.493 at sf0.01
 @register(
     "sim_range_search",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qvec
-      FROM embeddings WHERE vec_id < {N_QUERIES}
-    )
-    SELECT q.query_id, e.vec_id,
-           {_rounded_cosine_sql('e.embedding', 'q.qvec')} AS cosine
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id
-      AND {_rounded_cosine_sql('e.embedding', 'q.qvec')}
-          >= {RANGE_SEARCH_THRESHOLD}
+    SELECT query_id, vec_id, cosine
+    FROM ({_score_query_batch_sql(N_QUERIES)})
+    WHERE cosine >= {RANGE_SEARCH_THRESHOLD}
     """,
 )
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -870,24 +881,15 @@ HARD_NEG_K = 5
 @register(
     "sim_hard_negatives",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS anchor_id, label AS anchor_label,
-             embedding AS qvec
-      FROM embeddings WHERE vec_id < {N_QUERIES}
-    ), scored AS (
-      SELECT q.anchor_id, q.anchor_label, e.vec_id AS negative_id,
-             e.label AS negative_label,
-             {_rounded_cosine_sql('e.embedding', 'q.qvec')} AS cosine,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.anchor_id
-               ORDER BY {_rounded_cosine_sql('e.embedding', 'q.qvec')} DESC,
-                        e.vec_id) AS neg_rank
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.anchor_id AND e.label <> q.anchor_label
-    )
-    SELECT anchor_id, anchor_label, negative_id, negative_label,
-           cosine, neg_rank
-    FROM scored WHERE neg_rank <= {HARD_NEG_K}
+    WITH scored AS ({_score_query_batch_sql(
+        N_QUERIES, {"anchor_label": "label"}, {"negative_label": "label"}
+    )}
+    ), eligible AS (
+      SELECT * FROM scored WHERE negative_label <> anchor_label
+    ), ranked AS ({_top_k_sql("eligible", HARD_NEG_K, "neg_rank")})
+    SELECT query_id AS anchor_id, anchor_label, vec_id AS negative_id,
+           negative_label, cosine, neg_rank
+    FROM ranked
     """,
 )
 def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -920,19 +922,10 @@ KNN_EVAL_N = 50  # anchors in the leave-one-out label-accuracy eval
 @register(
     "sim_knn_label_accuracy",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS anchor_id, label AS true_label,
-             embedding AS qvec
-      FROM embeddings WHERE vec_id < {KNN_EVAL_N}
-    ), ranked AS (
-      SELECT q.anchor_id, q.true_label, e.label AS pred_label,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.anchor_id
-               ORDER BY {_rounded_cosine_sql('e.embedding', 'q.qvec')} DESC,
-                        e.vec_id) AS rnk
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.anchor_id
-    )
+    WITH scored AS ({_score_query_batch_sql(
+        KNN_EVAL_N, {"true_label": "label"}, {"pred_label": "label"}
+    )}
+    ), ranked AS ({_top_k_sql("scored", 1, "rnk")})
     SELECT COUNT(*) AS n_anchors,
            CAST(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_correct,
@@ -940,7 +933,7 @@ KNN_EVAL_N = 50  # anchors in the leave-one-out label-accuracy eval
            -- ROUND-ed float division
            CAST((SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
                  * 1000000) // COUNT(*) AS BIGINT) AS accuracy_q6
-    FROM ranked WHERE rnk = 1
+    FROM ranked
     """,
 )
 def sim_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,13 +20,15 @@ identical algorithm on identical types.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
     SESSION_GAP_MINUTES,
     exact_sum,
+    exact_sum_sq,
+    exact_sum_sq_sql,
     exact_sum_sql,
     from_micro,
     from_micro_sql,
@@ -134,48 +136,215 @@ def events_asof_view_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# The experiment kernel. The A/B and anomaly rows share one
+# implementation of each piece below, with its DuckDB twin beside it:
+# the q6 quantizer, the cohort pivot, the moment fold and its mean/std
+# step, the cohort/period split, and the two per-user micro-unit
+# frames. Every ``value`` sum and sum of squares runs on the exact-sum
+# recipe (``plans.micro_units``), so both engines compute the same
+# integers and a row must satisfy |x| < 9.2e12 on both, or the query
+# raises.
+# ---------------------------------------------------------------------------
+
+
+def _q6(x: Column) -> Column:
+    """``FLOOR(x·1e6 + 0.5)``: a derived statistic quantized to q6."""
+    return F.floor(x * 1_000_000 + F.lit(0.5))
+
+
+def _q6_sql(x: str) -> str:
+    """DuckDB twin of :func:`_q6`."""
+    return f"CAST(FLOOR(({x}) * 1000000 + 0.5) AS BIGINT)"
+
+
+def cohort_pivot_sql(col: str, **keys: int) -> str:
+    """``MAX(CASE WHEN k = v AND … THEN col END)``: the cell of a keyed
+    frame where every key matches, as one column."""
+    cond = " AND ".join(f"{k} = {v}" for k, v in keys.items())
+    return f"MAX(CASE WHEN {cond} THEN {col} END)"
+
+
+def cohort_pivot(col: str, **keys: int) -> Column:
+    """:func:`cohort_pivot_sql` on the Spark side (the same SQL text)."""
+    return F.expr(cohort_pivot_sql(col, **keys))
+
+
+def moment_fold(ev: DataFrame, *keys) -> DataFrame:
+    """``(keys…, n, sum_v, sum_vsq)``: per key, the row count and the
+    exact Σvalue and Σvalue² (``exact_sum``, ``exact_sum_sq``)."""
+    return ev.groupBy(*keys).agg(
+        F.count("*").alias("n"),
+        exact_sum(F.col("value")).alias("sum_v"),
+        exact_sum_sq(F.col("value")).alias("sum_vsq"),
+    )
+
+
+def _moment_fold_sql(*keys: str) -> str:
+    """DuckDB twin of :func:`moment_fold` over ``events``; each key is
+    a select expression."""
+    return f"""SELECT {", ".join(keys)}, COUNT(*) AS n,
+             {exact_sum_sql("value")} AS sum_v,
+             {exact_sum_sq_sql("value")} AS sum_vsq
+      FROM events GROUP BY ALL"""
+
+
+def mean_std_q6(ev: DataFrame, key: str) -> DataFrame:
+    """``(key, n_events, mean_q6, std_q6)``: the population mean and
+    standard deviation of ``value`` per key, from :func:`moment_fold`,
+    quantized q6."""
+    mean = F.col("sum_v") / F.col("n")
+    var = F.col("sum_vsq") / F.col("n") - mean * mean
+    return moment_fold(ev, key).select(
+        key,
+        F.col("n").alias("n_events"),
+        _q6(mean).alias("mean_q6"),
+        _q6(F.sqrt(var)).alias("std_q6"),
+    )
+
+
+def _mean_std_q6_sql(key: str) -> str:
+    """DuckDB twin of :func:`mean_std_q6`: the CTEs ``stats`` and
+    ``quant``."""
+    return f"""stats AS ({_moment_fold_sql(key)}
+    ), quant AS (
+      SELECT {key}, n AS n_events, {_q6_sql("sum_v / n")} AS mean_q6,
+             {_q6_sql("sqrt(sum_vsq / n - (sum_v / n) * (sum_v / n))")}
+               AS std_q6
+      FROM stats
+    )"""
+
+
+def period_split(ev: DataFrame) -> DataFrame:
+    """``ev`` plus ``ts_us``, ``cohort`` (``user_id % 2``) and
+    ``period``: 0 before the integer midpoint of the stream's epoch-µs
+    range, 1 from it. The midpoint is 64-bit integer arithmetic on a
+    1-row min/max fold, broadcast back."""
+    ev = ev.withColumn("ts_us", F.unix_micros(F.col("ts")))
+    lim = ev.agg(F.expr("(MIN(ts_us) + MAX(ts_us)) DIV 2").alias("mid_us"))
+    return ev.crossJoin(F.broadcast(lim)).select(
+        *ev.columns,
+        (F.col("user_id") % 2).alias("cohort"),
+        F.when(F.col("ts_us") < F.col("mid_us"), 0)
+        .otherwise(1)
+        .alias("period"),
+    )
+
+
+# DuckDB twin of period_split: the CTEs ``ev`` and ``split``
+_PERIOD_SPLIT_SQL = """ev AS (
+      SELECT *, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events
+    ), split AS (
+      SELECT ev.*, user_id % 2 AS cohort,
+             CASE WHEN ts_us < mid_us THEN 0 ELSE 1 END AS period
+      FROM ev CROSS JOIN (
+        SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS mid_us FROM ev) lim
+    )"""
+
+
+def user_pre_post(split: DataFrame) -> DataFrame:
+    """``(user_id, cohort, x, y)``: each user's pre- and post-period
+    value sums of a :func:`period_split` frame, in exact micro-units
+    (0 for an empty period)."""
+    return split.groupBy("user_id", "cohort").agg(
+        *[
+            F.coalesce(
+                micro_sum(F.when(F.col("period") == p, F.col("value"))),
+                F.lit(0),
+            ).alias(xy)
+            for xy, p in (("x", 0), ("y", 1))
+        ]
+    )
+
+
+# DuckDB twin of user_pre_post: _PERIOD_SPLIT_SQL plus the CTE ``u``
+# (HUGEINT micro-unit sums)
+_USER_PRE_POST_SQL = f"""{_PERIOD_SPLIT_SQL}, u AS (
+      SELECT user_id, cohort,
+        COALESCE(SUM(CASE WHEN period = 0
+                          THEN {micro_units_sql("value")} END), 0) AS x,
+        COALESCE(SUM(CASE WHEN period = 1
+                          THEN {micro_units_sql("value")} END), 0) AS y
+      FROM split GROUP BY user_id, cohort
+    )"""
+
+
+def cuped_moments(u: DataFrame) -> DataFrame:
+    """The 1-row pooled fold of a :func:`user_pre_post` frame: ``n``
+    and Σx, Σy, Σxy, Σx², Σy² as ``sx`` … ``syy``, each an exact
+    integer sum cast to a double once."""
+    x, y = F.col("x"), F.col("y")
+    sums = {"sx": x, "sy": y, "sxy": x * y, "sxx": x * x, "syy": y * y}
+    return u.agg(
+        F.count("*").alias("n"),
+        *[F.sum(e).cast("double").alias(name) for name, e in sums.items()],
+    )
+
+
+# DuckDB twin of cuped_moments: _USER_PRE_POST_SQL plus the CTE ``g``
+_CUPED_MOMENTS_SQL = f"""{_USER_PRE_POST_SQL}, g AS (
+      SELECT COUNT(*) AS n,
+        CAST(SUM(x) AS DOUBLE) AS sx,
+        CAST(SUM(y) AS DOUBLE) AS sy,
+        CAST(SUM(x * y) AS DOUBLE) AS sxy,
+        CAST(SUM(x * x) AS DOUBLE) AS sxx,
+        CAST(SUM(y * y) AS DOUBLE) AS syy
+      FROM u
+    )"""
+
+# CUPED θ = cov(X,Y)/var(X) over cuped_moments, one SQL text for both
+# engines. Zero pre-period variance (a single user, a constant X) makes
+# θ undefined: NULL, never a division error.
+_CUPED_COV = "(n * sxy - sx * sy)"
+_CUPED_VARX = "(n * sxx - sx * sx)"
+_CUPED_THETA = f"{_CUPED_COV} / NULLIF({_CUPED_VARX}, 0)"
+# corr²(X,Y) = cov² / (var_X·var_Y), NULL on a zero variance
+_CUPED_CORR2 = (
+    f"{_CUPED_COV} * {_CUPED_COV}"
+    f" / NULLIF({_CUPED_VARX} * (n * syy - sy * sy), 0)"
+)
+
+
+def user_totals(ev: DataFrame) -> DataFrame:
+    """``(user_id, cohort, tot)``: each user's value sum in exact
+    micro-units, as BIGINT."""
+    return ev.groupBy("user_id", (F.col("user_id") % 2).alias("cohort")).agg(
+        micro_sum(F.col("value")).cast("bigint").alias("tot")
+    )
+
+
+# DuckDB twin of user_totals: the CTE ``users``
+_USER_TOTALS_SQL = f"""users AS (
+      SELECT user_id, user_id % 2 AS cohort,
+             CAST({micro_sum_sql("value")} AS BIGINT) AS tot
+      FROM events GROUP BY ALL
+    )"""
+
+
 ZSCORE_THRESHOLD = 3.0
 
 
 @register(
     "events_anomaly_zscore",
     oracle=f"""
-    WITH stats AS (
-      SELECT event_type,
-             COUNT(*) AS n_events,
-             {exact_sum_sql("value")} AS sum_v,
-             CAST(SUM(CAST(
-               CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-               AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
-      FROM events GROUP BY event_type
-    ), quant AS (
-      SELECT event_type, n_events,
-             CAST(FLOOR(sum_v / n_events * 1000000 + 0.5) AS BIGINT)
-               AS mean_value_q6,
-             CAST(FLOOR(sqrt(sum_vsq / n_events
-                             - (sum_v / n_events) * (sum_v / n_events))
-                        * 1000000 + 0.5) AS BIGINT) AS std_value_q6
-      FROM stats
-    )
-    SELECT s.event_type, s.n_events, s.mean_value_q6, s.std_value_q6,
+    WITH {_mean_std_q6_sql("event_type")}
+    SELECT s.event_type, s.n_events,
+           s.mean_q6 AS mean_value_q6, s.std_q6 AS std_value_q6,
            COUNT(*) FILTER (
-             WHERE abs(e.value - s.mean_value_q6 / 1000000.0)
-                   > {ZSCORE_THRESHOLD} * (s.std_value_q6 / 1000000.0)
+             WHERE abs(e.value - s.mean_q6 / 1000000.0)
+                   > {ZSCORE_THRESHOLD} * (s.std_q6 / 1000000.0)
            ) AS n_anomalies
     FROM events e JOIN quant s USING (event_type)
-    GROUP BY s.event_type, s.n_events, s.mean_value_q6, s.std_value_q6
+    GROUP BY s.event_type, s.n_events, s.mean_q6, s.std_q6
     """,
 )
 def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type z-score anomaly counts — the monitoring pass of an
-    event pipeline. Two aggregates: per-type sufficient statistics
-    (exact micro-unit value sums and DECIMAL v² sums —
-    order-independent; v² rescaled to scale 6 so the decimal→double
-    conversion stays under 2⁵³ unscaled and converts identically on
-    both engines), broadcast back over
-    the stream for the outlier count. The corpus shuffles only for
-    the per-type partials; the stats side is |event_types| rows at
-    any scale.
+    event pipeline. Two aggregates: the per-type moment fold
+    (:func:`mean_std_q6`: exact micro-unit Σv and Σv², order-
+    independent), broadcast back over the stream for the outlier
+    count. The corpus shuffles only for the per-type partials; the
+    stats side is |event_types| rows at any scale.
 
     Canonicalization-proof moments (r03 fragile-class sweep): the
     reported mean/std are INTEGER-quantized (``floor(x·1e6+0.5)``),
@@ -183,38 +352,25 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed from those same integers, so both engines compare
     against the bit-identical boundary.
 
-    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
-    (was 1e19), or the query raises.
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12,
+    or the query raises.
     """
     ev = table(spark, sf_dir, "events")
-    v6 = F.col("value").cast("decimal(18,6)")
-    stats = ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        exact_sum(F.col("value")).alias("sum_v"),
-        F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_vsq"),
-    )
-    mean = F.col("sum_v") / F.col("n_events")
-    var = F.col("sum_vsq") / F.col("n_events") - mean * mean
-    quant = stats.select(
-        "event_type",
-        "n_events",
-        F.floor(mean * 1_000_000 + F.lit(0.5)).alias("mean_value_q6"),
-        F.floor(F.sqrt(var) * 1_000_000 + F.lit(0.5)).alias("std_value_q6"),
-    )
+    quant = mean_std_q6(ev, "event_type")
     return (
         ev.join(F.broadcast(quant), "event_type")
-        .groupBy("event_type", "n_events", "mean_value_q6", "std_value_q6")
+        .groupBy("event_type", "n_events", "mean_q6", "std_q6")
         .agg(
             F.count_if(
-                F.abs(F.col("value") - F.col("mean_value_q6") / 1_000_000.0)
-                > ZSCORE_THRESHOLD * (F.col("std_value_q6") / 1_000_000.0)
+                F.abs(F.col("value") - F.col("mean_q6") / 1_000_000.0)
+                > ZSCORE_THRESHOLD * (F.col("std_q6") / 1_000_000.0)
             ).alias("n_anomalies")
         )
         .select(
             "event_type",
             "n_events",
-            "mean_value_q6",
-            "std_value_q6",
+            F.col("mean_q6").alias("mean_value_q6"),
+            F.col("std_q6").alias("std_value_q6"),
             "n_anomalies",
         )
     )
@@ -456,35 +612,27 @@ def events_late_arrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_ab_cohort_compare",
     oracle=f"""
-    WITH tagged AS (
-      SELECT event_type, user_id % 2 AS cohort, value,
-             CAST(value AS DECIMAL(18,6)) AS v6
-      FROM events
-    ), stats AS (
-      SELECT event_type, cohort,
-             COUNT(*) AS n,
-             {exact_sum_sql("value")} AS sum_v,
-             CAST(SUM(CAST(v6 * v6 AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
-      FROM tagged GROUP BY event_type, cohort
+    WITH stats AS (
+      {_moment_fold_sql("event_type", "user_id % 2 AS cohort")}
     ), sides AS (
       SELECT event_type,
-             MAX(CASE WHEN cohort = 0 THEN n END) AS n_a,
-             MAX(CASE WHEN cohort = 1 THEN n END) AS n_b,
-             MAX(CASE WHEN cohort = 0 THEN sum_v END) AS sum_a,
-             MAX(CASE WHEN cohort = 1 THEN sum_v END) AS sum_b,
-             MAX(CASE WHEN cohort = 0 THEN sum_vsq END) AS sum2_a,
-             MAX(CASE WHEN cohort = 1 THEN sum_vsq END) AS sum2_b
+             {cohort_pivot_sql("n", cohort=0)} AS n_a,
+             {cohort_pivot_sql("n", cohort=1)} AS n_b,
+             {cohort_pivot_sql("sum_v", cohort=0)} AS sum_a,
+             {cohort_pivot_sql("sum_v", cohort=1)} AS sum_b,
+             {cohort_pivot_sql("sum_vsq", cohort=0)} AS sum2_a,
+             {cohort_pivot_sql("sum_vsq", cohort=1)} AS sum2_b
       FROM stats GROUP BY event_type
     )
     SELECT event_type, n_a, n_b,
-           CAST(FLOOR(sum_a / n_a * 1000000 + 0.5) AS BIGINT) AS mean_a_q6,
-           CAST(FLOOR(sum_b / n_b * 1000000 + 0.5) AS BIGINT) AS mean_b_q6,
-           CAST(FLOOR((sum_b / n_b - sum_a / n_a) * 1000000 + 0.5)
-                AS BIGINT) AS lift_q6,
-           CAST(FLOOR((sum_b / n_b - sum_a / n_a)
-                 / sqrt( (sum2_a / n_a - (sum_a / n_a) * (sum_a / n_a)) / n_a
-                       + (sum2_b / n_b - (sum_b / n_b) * (sum_b / n_b)) / n_b
-                       ) * 1000000 + 0.5) AS BIGINT) AS z_score_q6
+           {_q6_sql("sum_a / n_a")} AS mean_a_q6,
+           {_q6_sql("sum_b / n_b")} AS mean_b_q6,
+           {_q6_sql("sum_b / n_b - sum_a / n_a")} AS lift_q6,
+           {_q6_sql(
+               "(sum_b / n_b - sum_a / n_a)"
+               " / sqrt((sum2_a / n_a - (sum_a / n_a) * (sum_a / n_a)) / n_a"
+               " + (sum2_b / n_b - (sum_b / n_b) * (sum_b / n_b)) / n_b)"
+           )} AS z_score_q6
     FROM sides
     """,
 )
@@ -496,32 +644,28 @@ def events_ab_cohort_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the sufficient statistics n/Σv/Σv²).
 
     Scale shape: ONE aggregate over (event_type, cohort) computes all
-    sufficient statistics with map-side partials (exact micro-unit
-    and DECIMAL sums, so both engines fold order-independently;
+    sufficient statistics with map-side partials (:func:`moment_fold`:
+    exact micro-unit sums, so both engines fold order-independently;
     moments divide in double at the end); the cohort pivot and the z
     arithmetic run on the tiny per-type table. No window, no second
     pass over data — the whole experiment readout costs one shuffle
     of partial sums.
 
-    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
-    (was 1e19), or the query raises.
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12,
+    or the query raises.
     """
-    ev = table(spark, sf_dir, "events")
-    v6 = F.col("value").cast("decimal(18,6)")
-    stats = ev.groupBy(
-        "event_type", (F.col("user_id") % 2).alias("cohort")
-    ).agg(
-        F.count("*").alias("n"),
-        exact_sum(F.col("value")).alias("sum_v"),
-        F.sum((v6 * v6).cast("decimal(30,6)")).cast("double").alias("sum_vsq"),
+    stats = moment_fold(
+        table(spark, sf_dir, "events"),
+        "event_type",
+        (F.col("user_id") % 2).alias("cohort"),
     )
     sides = stats.groupBy("event_type").agg(
-        F.max(F.when(F.col("cohort") == 0, F.col("n"))).alias("n_a"),
-        F.max(F.when(F.col("cohort") == 1, F.col("n"))).alias("n_b"),
-        F.max(F.when(F.col("cohort") == 0, F.col("sum_v"))).alias("sum_a"),
-        F.max(F.when(F.col("cohort") == 1, F.col("sum_v"))).alias("sum_b"),
-        F.max(F.when(F.col("cohort") == 0, F.col("sum_vsq"))).alias("sum2_a"),
-        F.max(F.when(F.col("cohort") == 1, F.col("sum_vsq"))).alias("sum2_b"),
+        cohort_pivot("n", cohort=0).alias("n_a"),
+        cohort_pivot("n", cohort=1).alias("n_b"),
+        cohort_pivot("sum_v", cohort=0).alias("sum_a"),
+        cohort_pivot("sum_v", cohort=1).alias("sum_b"),
+        cohort_pivot("sum_vsq", cohort=0).alias("sum2_a"),
+        cohort_pivot("sum_vsq", cohort=1).alias("sum2_b"),
     )
     mean_a = F.col("sum_a") / F.col("n_a")
     mean_b = F.col("sum_b") / F.col("n_b")
@@ -531,14 +675,12 @@ def events_ab_cohort_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_a",
         "n_b",
-        F.floor(mean_a * 1_000_000 + F.lit(0.5)).alias("mean_a_q6"),
-        F.floor(mean_b * 1_000_000 + F.lit(0.5)).alias("mean_b_q6"),
-        F.floor((mean_b - mean_a) * 1_000_000 + F.lit(0.5)).alias("lift_q6"),
-        F.floor(
+        _q6(mean_a).alias("mean_a_q6"),
+        _q6(mean_b).alias("mean_b_q6"),
+        _q6(mean_b - mean_a).alias("lift_q6"),
+        _q6(
             (mean_b - mean_a)
             / F.sqrt(var_a / F.col("n_a") + var_b / F.col("n_b"))
-            * 1_000_000
-            + F.lit(0.5)
         ).alias("z_score_q6"),
     )
 
@@ -1011,7 +1153,7 @@ def events_hourly_quantiles_by_type(
     )
 
 
-BOT_MIN_EVENTS = 50  # volume floor before a user can be flagged
+BOT_CENSUS_MIN_EVENTS = 50  # volume floor before a user can be flagged
 BOT_FAST_GAP_US = 1_000_000  # "machine-speed" inter-event gap: <1s
 
 
@@ -1034,7 +1176,7 @@ BOT_FAST_GAP_US = 1_000_000  # "machine-speed" inter-event gap: <1s
       FROM gaps GROUP BY user_id
     ), flagged AS (
       SELECT user_id, n_events,
-             (n_events >= {BOT_MIN_EVENTS}
+             (n_events >= {BOT_CENSUS_MIN_EVENTS}
               AND n_fast * 2 > n_gaps) AS is_bot
       FROM per_user
     )
@@ -1049,8 +1191,8 @@ def events_bot_user_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic bot filter census — the traffic-hygiene step a
     training-data pipeline runs before any behavioral feature is
     trusted: a user is flagged when they are high-volume
-    (≥ BOT_MIN_EVENTS) AND a majority of their inter-event gaps are
-    machine-speed (< 1s). All-integer decision (gap micros, count
+    (≥ BOT_CENSUS_MIN_EVENTS) AND a majority of their inter-event gaps
+    are machine-speed (< 1s). All-integer decision (gap micros, count
     comparisons ×2 — no ratio floats), so the flag is hash-stable.
 
     Plan: the same ONE user-keyed window shuffle the sessionizer and
@@ -1074,7 +1216,7 @@ def events_bot_user_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("gap_us").alias("n_gaps"),
         )
     )
-    is_bot = (F.col("n_events") >= BOT_MIN_EVENTS) & (
+    is_bot = (F.col("n_events") >= BOT_CENSUS_MIN_EVENTS) & (
         F.col("n_fast") * 2 > F.col("n_gaps")
     )
     return per_user.select(
@@ -2232,14 +2374,14 @@ def orders_seasonal_naive_mase(
 # Bot screen model parameters — explicit, documented thresholds (the
 # cap-is-a-model-parameter discipline): a user is suspect if ANY of
 # (1) any single hour holds >= BOT_RATE_HOURLY events, (2) they emit
-# <= BOT_MIN_TYPES distinct event types over >= BOT_MIN_EVENTS
+# <= BOT_MIN_TYPES distinct event types over >= BOT_SCREEN_MIN_EVENTS
 # events, (3) their inter-event gaps are metronomic — squared
 # coefficient of variation at or below BOT_CV2_MAX_Q6 (human traffic
 # is bursty, CV^2 ~ 1 for Poisson arrivals; scripted traffic is
 # near-periodic, CV^2 -> 0). Gaps are measured in MILLISECONDS so the
 # widened integer CV^2 arithmetic keeps ~10x span headroom inside
 # DECIMAL(38,0)/HUGEINT.
-BOT_MIN_EVENTS = 5
+BOT_SCREEN_MIN_EVENTS = 5
 BOT_RATE_HOURLY = 10
 BOT_MIN_TYPES = 2
 BOT_CV2_MAX_Q6 = 250_000  # CV^2 <= 0.25
@@ -2285,7 +2427,7 @@ BOT_CV2_MAX_Q6 = 250_000  # CV^2 <= 0.25
       FROM per p
       JOIN hourly h ON p.user_id = h.user_id
       JOIN gstat g ON p.user_id = g.user_id
-      WHERE p.n_events >= {BOT_MIN_EVENTS} AND g.n1 >= 2
+      WHERE p.n_events >= {BOT_SCREEN_MIN_EVENTS} AND g.n1 >= 2
     )
     SELECT user_id, n_events, n_types, max_hourly, cv2_q6,
            CAST(CASE WHEN max_hourly >= {BOT_RATE_HOURLY}
@@ -2301,7 +2443,7 @@ def events_bot_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule-based bot/automation screen over per-user behavior — the
     events-side sibling of the Gopher text rules (quality.py): a
     training-data pipeline drops scripted traffic BEFORE any model
-    sees it. One row per evaluable user (≥ {BOT_MIN_EVENTS} events,
+    sees it. One row per evaluable user (≥ {BOT_SCREEN_MIN_EVENTS} events,
     ≥ 2 gaps) with three integer-exact signals and a flag bitmask
     (1 = hourly burst ≥ {BOT_RATE_HOURLY}, 2 = type diversity ≤
     {BOT_MIN_TYPES}, 4 = metronomic gaps CV² ≤ 0.25):
@@ -2359,7 +2501,8 @@ def events_bot_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         per.join(hourly, "user_id")
         .join(gstat, "user_id")
         .filter(
-            (F.col("n_events") >= BOT_MIN_EVENTS) & (F.col("n1") >= 2)
+            (F.col("n_events") >= BOT_SCREEN_MIN_EVENTS)
+            & (F.col("n1") >= 2)
         )
         .selectExpr(
             "user_id",
@@ -3009,23 +3152,8 @@ ANOMALY_CURVE_DECI = (15, 20, 30, 40)  # σ-multiplier tenths
 @register(
     "events_anomaly_threshold_curve",
     oracle=f"""
-    WITH stats AS (
-      SELECT event_type,
-             COUNT(*) AS n_events,
-             {exact_sum_sql("value")} AS sum_v,
-             CAST(SUM(CAST(
-               CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-               AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
-      FROM events GROUP BY event_type
-    ), quant AS (
-      SELECT event_type, n_events,
-             CAST(FLOOR(sum_v / n_events * 1000000 + 0.5) AS BIGINT)
-               AS mean_q6,
-             CAST(FLOOR(sqrt(sum_vsq / n_events
-                             - (sum_v / n_events) * (sum_v / n_events))
-                        * 1000000 + 0.5) AS BIGINT) AS std_q6
-      FROM stats
-    ), ts(t) AS (VALUES {", ".join(f"({t})" for t in ANOMALY_CURVE_DECI)})
+    WITH {_mean_std_q6_sql("event_type")},
+    ts(t) AS (VALUES {", ".join(f"({t})" for t in ANOMALY_CURVE_DECI)})
     SELECT s.event_type,
            CAST(ts.t AS BIGINT) AS threshold_deci,
            s.n_events,
@@ -3053,32 +3181,17 @@ def events_anomaly_threshold_curve(
     monitoring rollout reads before picking its threshold.
 
     100 TB shape: the sufficient statistics are ONE per-type
-    aggregate (exact sums, integer-quantized boundaries —
-    the audited ``events_anomaly_zscore`` recipe); the sweep is
-    conditional counts inside ONE second pass over the stream with
-    the |types|-row stats and {len(ANOMALY_CURVE_DECI)}-row threshold
-    list broadcast — no per-threshold rescan.
+    aggregate (:func:`mean_std_q6`, shared with
+    ``events_anomaly_zscore``); the sweep is conditional counts inside
+    ONE second pass over the stream with the |types|-row stats and
+    {len(ANOMALY_CURVE_DECI)}-row threshold list broadcast — no
+    per-threshold rescan.
 
-    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
-    (was 1e19), or the query raises.
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12,
+    or the query raises.
     """
     ev = table(spark, sf_dir, "events")
-    v6 = F.col("value").cast("decimal(18,6)")
-    stats = ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        exact_sum(F.col("value")).alias("sum_v"),
-        F.sum((v6 * v6).cast("decimal(30,6)"))
-        .cast("double")
-        .alias("sum_vsq"),
-    )
-    mean = F.col("sum_v") / F.col("n_events")
-    var = F.col("sum_vsq") / F.col("n_events") - mean * mean
-    quant = stats.select(
-        "event_type",
-        "n_events",
-        F.floor(mean * 1_000_000 + F.lit(0.5)).alias("mean_q6"),
-        F.floor(F.sqrt(var) * 1_000_000 + F.lit(0.5)).alias("std_q6"),
-    )
+    quant = mean_std_q6(ev, "event_type")
     ts = spark.createDataFrame(
         [(t,) for t in ANOMALY_CURVE_DECI], "t long"
     )
@@ -3215,25 +3328,16 @@ AB_DELTA_INV = 20  # failure probability δ = 1/20 = 5%
 @register(
     "events_ab_sample_size_chebyshev",
     oracle=f"""
-    WITH stats AS (
-      SELECT event_type,
-             COUNT(*) AS n_events,
-             {exact_sum_sql("value")} AS sum_v,
-             CAST(SUM(CAST(
-               CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-               AS DECIMAL(30,6))) AS DOUBLE) AS sum_vsq
-      FROM events GROUP BY event_type
+    WITH stats AS ({_moment_fold_sql("event_type")}
     ), es(e) AS (VALUES {", ".join(f"({e})" for e in AB_EPS_DECI)})
     SELECT s.event_type,
            CAST(es.e AS BIGINT) AS eps_deci,
-           CAST(s.n_events AS BIGINT) AS n_available,
-           CAST(CEIL((s.sum_vsq / s.n_events
-                      - (s.sum_v / s.n_events) * (s.sum_v / s.n_events))
+           CAST(s.n AS BIGINT) AS n_available,
+           CAST(CEIL((s.sum_vsq / s.n - (s.sum_v / s.n) * (s.sum_v / s.n))
                      * {AB_DELTA_INV} * 100 / (es.e * es.e))
                 AS BIGINT) AS n_required,
-           CAST(CASE WHEN s.n_events >= CEIL(
-                  (s.sum_vsq / s.n_events
-                   - (s.sum_v / s.n_events) * (s.sum_v / s.n_events))
+           CAST(CASE WHEN s.n >= CEIL(
+                  (s.sum_vsq / s.n - (s.sum_v / s.n) * (s.sum_v / s.n))
                   * {AB_DELTA_INV} * 100 / (es.e * es.e))
                 THEN 1 ELSE 0 END AS BIGINT) AS feasible
     FROM stats s CROSS JOIN es
@@ -3250,39 +3354,29 @@ def events_ab_sample_size_chebyshev(
     transcendental-free planning number, next to the experimentation
     rows (`events_ab_cohort_compare` reads results; this plans the
     run). Variance comes from the exact order-independent moments
-    (the anomaly-zscore recipe); CEIL on the identical IEEE
-    double is identical on both engines; feasibility compares the
-    available event count against the requirement.
+    (:func:`moment_fold`); CEIL on the identical IEEE double is
+    identical on both engines; feasibility compares the available
+    event count against the requirement.
 
     100 TB shape: one per-type sufficient-statistics aggregate; the
     ε-sweep is a |types|×{len(AB_EPS_DECI)} projection over the
     broadcast-scale stats frame — no second corpus pass.
 
-    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
-    (was 1e19), or the query raises.
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12,
+    or the query raises.
     """
-    ev = table(spark, sf_dir, "events")
-    v6 = F.col("value").cast("decimal(18,6)")
-    stats = ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        exact_sum(F.col("value")).alias("sum_v"),
-        F.sum((v6 * v6).cast("decimal(30,6)"))
-        .cast("double")
-        .alias("sum_vsq"),
-    )
+    stats = moment_fold(table(spark, sf_dir, "events"), "event_type")
     es = spark.createDataFrame([(e,) for e in AB_EPS_DECI], "e long")
-    var = (
-        "(sum_vsq / n_events - (sum_v / n_events) * (sum_v / n_events))"
-    )
+    var = "(sum_vsq / n - (sum_v / n) * (sum_v / n))"
     nreq = f"CEIL({var} * {AB_DELTA_INV} * 100 / (e * e))"
     return (
         stats.crossJoin(F.broadcast(es))
         .selectExpr(
             "event_type",
             "CAST(e AS BIGINT) AS eps_deci",
-            "CAST(n_events AS BIGINT) AS n_available",
+            "CAST(n AS BIGINT) AS n_available",
             f"CAST({nreq} AS BIGINT) AS n_required",
-            f"CAST(CASE WHEN n_events >= {nreq} THEN 1 ELSE 0 END"
+            f"CAST(CASE WHEN n >= {nreq} THEN 1 ELSE 0 END"
             " AS BIGINT) AS feasible",
         )
     )
@@ -3299,45 +3393,33 @@ def events_ab_sample_size_chebyshev(
 # ---------------------------------------------------------------------------
 
 
+# The four (cohort, period) cells of the DiD estimator
+_DID_CELLS = {
+    "a_pre": (0, 0), "a_post": (0, 1), "b_pre": (1, 0), "b_post": (1, 1)
+}
+
+
 @register(
     "events_did_estimator",
     oracle=f"""
-    WITH ev AS (
-      SELECT user_id % 2 AS cohort,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             value AS v
-      FROM events
-    ), lim AS (
-      SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS mid_us FROM ev
-    ), cell AS (
-      SELECT cohort,
-             CASE WHEN ts_us < mid_us THEN 0 ELSE 1 END AS period,
-             COUNT(*) AS n, {exact_sum_sql("v")} AS sv
-      FROM ev CROSS JOIN lim GROUP BY 1, 2
+    WITH {_PERIOD_SPLIT_SQL}, cell AS (
+      SELECT cohort, period, COUNT(*) AS n, {exact_sum_sql("value")} AS sv
+      FROM split GROUP BY cohort, period
     ), p AS (
-      SELECT
-        MAX(CASE WHEN cohort = 0 AND period = 0 THEN n END) AS n_a_pre,
-        MAX(CASE WHEN cohort = 0 AND period = 1 THEN n END) AS n_a_post,
-        MAX(CASE WHEN cohort = 1 AND period = 0 THEN n END) AS n_b_pre,
-        MAX(CASE WHEN cohort = 1 AND period = 1 THEN n END) AS n_b_post,
-        MAX(CASE WHEN cohort = 0 AND period = 0 THEN sv END) AS s_a_pre,
-        MAX(CASE WHEN cohort = 0 AND period = 1 THEN sv END) AS s_a_post,
-        MAX(CASE WHEN cohort = 1 AND period = 0 THEN sv END) AS s_b_pre,
-        MAX(CASE WHEN cohort = 1 AND period = 1 THEN sv END) AS s_b_post
+      SELECT {", ".join(
+          f"{cohort_pivot_sql(col, cohort=c, period=t)} AS {col}_{k}"
+          for col in ("n", "sv") for k, (c, t) in _DID_CELLS.items()
+      )}
       FROM cell
     )
-    SELECT n_a_pre, n_a_post, n_b_pre, n_b_post,
-      CAST(FLOOR(s_a_pre / n_a_pre * 1000000 + 0.5) AS BIGINT)
-        AS mean_a_pre_q6,
-      CAST(FLOOR(s_a_post / n_a_post * 1000000 + 0.5) AS BIGINT)
-        AS mean_a_post_q6,
-      CAST(FLOOR(s_b_pre / n_b_pre * 1000000 + 0.5) AS BIGINT)
-        AS mean_b_pre_q6,
-      CAST(FLOOR(s_b_post / n_b_post * 1000000 + 0.5) AS BIGINT)
-        AS mean_b_post_q6,
-      CAST(FLOOR(((s_b_post / n_b_post - s_b_pre / n_b_pre)
-                - (s_a_post / n_a_post - s_a_pre / n_a_pre))
-                * 1000000 + 0.5) AS BIGINT) AS did_q6
+    SELECT {", ".join(f"n_{k}" for k in _DID_CELLS)},
+      {", ".join(
+          f"{_q6_sql(f'sv_{k} / n_{k}')} AS mean_{k}_q6" for k in _DID_CELLS
+      )},
+      {_q6_sql(
+          "(sv_b_post / n_b_post - sv_b_pre / n_b_pre)"
+          " - (sv_a_post / n_a_post - sv_a_pre / n_a_pre)"
+      )} AS did_q6
     FROM p
     """,
 )
@@ -3346,10 +3428,10 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     causal estimator, Card & Krueger 1994 form): cohorts are the
     deterministic ``user_id % 2`` split of `events_ab_cohort_compare`;
     periods split the stream at the INTEGER midpoint of its epoch-µs
-    range (data-derived, so the query is meaningful at every SF).
-    DiD = (B_post − B_pre) − (A_post − A_pre) of per-cell mean value —
-    the treatment lift net of the shared time trend under the
-    parallel-trends assumption.
+    range (:func:`period_split`; data-derived, so the query is
+    meaningful at every SF). DiD = (B_post − B_pre) − (A_post − A_pre)
+    of per-cell mean value — the treatment lift net of the shared time
+    trend under the parallel-trends assumption.
 
     Determinism: the period boundary is 64-bit integer arithmetic on
     the min/max epoch-µs (1-row broadcast); cell sums accumulate in
@@ -3361,110 +3443,39 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     No window, no per-user state; the estimator costs two scans (the
     range fold + the cell aggregate) of pushdown-pruned columns.
 
-    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12
-    (was 1e19), or the query raises.
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12,
+    or the query raises.
     """
-    ev = table(spark, sf_dir, "events").select(
-        (F.col("user_id") % 2).alias("cohort"),
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("value").alias("v"),
-    )
-    lim = ev.agg(
-        F.expr("(MIN(ts_us) + MAX(ts_us)) DIV 2").alias("mid_us")
-    )
     cell = (
-        ev.crossJoin(F.broadcast(lim))
-        .groupBy(
-            "cohort",
-            F.when(F.col("ts_us") < F.col("mid_us"), 0)
-            .otherwise(1)
-            .alias("period"),
-        )
-        .agg(
-            F.count("*").alias("n"),
-            exact_sum(F.col("v")).alias("sv"),
-        )
+        period_split(table(spark, sf_dir, "events"))
+        .groupBy("cohort", "period")
+        .agg(F.count("*").alias("n"), exact_sum(F.col("value")).alias("sv"))
     )
-
-    def pick(c, p, col):
-        return F.max(
-            F.when((F.col("cohort") == c) & (F.col("period") == p), F.col(col))
-        )
-
     p = cell.agg(
-        pick(0, 0, "n").alias("n_a_pre"),
-        pick(0, 1, "n").alias("n_a_post"),
-        pick(1, 0, "n").alias("n_b_pre"),
-        pick(1, 1, "n").alias("n_b_post"),
-        pick(0, 0, "sv").alias("s_a_pre"),
-        pick(0, 1, "sv").alias("s_a_post"),
-        pick(1, 0, "sv").alias("s_b_pre"),
-        pick(1, 1, "sv").alias("s_b_post"),
+        *[
+            cohort_pivot(col, cohort=c, period=t).alias(f"{col}_{k}")
+            for col in ("n", "sv")
+            for k, (c, t) in _DID_CELLS.items()
+        ]
     )
-    q6 = lambda e: F.floor(e * 1_000_000 + F.lit(0.5))  # noqa: E731
+    mean = {k: F.col(f"sv_{k}") / F.col(f"n_{k}") for k in _DID_CELLS}
     return p.select(
-        "n_a_pre",
-        "n_a_post",
-        "n_b_pre",
-        "n_b_post",
-        q6(F.col("s_a_pre") / F.col("n_a_pre")).alias("mean_a_pre_q6"),
-        q6(F.col("s_a_post") / F.col("n_a_post")).alias("mean_a_post_q6"),
-        q6(F.col("s_b_pre") / F.col("n_b_pre")).alias("mean_b_pre_q6"),
-        q6(F.col("s_b_post") / F.col("n_b_post")).alias("mean_b_post_q6"),
-        q6(
-            (
-                F.col("s_b_post") / F.col("n_b_post")
-                - F.col("s_b_pre") / F.col("n_b_pre")
-            )
-            - (
-                F.col("s_a_post") / F.col("n_a_post")
-                - F.col("s_a_pre") / F.col("n_a_pre")
-            )
+        *[f"n_{k}" for k in _DID_CELLS],
+        *[_q6(mean[k]).alias(f"mean_{k}_q6") for k in _DID_CELLS],
+        _q6(
+            (mean["b_post"] - mean["b_pre"]) - (mean["a_post"] - mean["a_pre"])
         ).alias("did_q6"),
     )
 
 
 @register(
     "events_cuped_adjustment",
-    oracle="""
-    WITH ev AS (
-      SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             CAST(value AS DECIMAL(18,6)) AS v
-      FROM events
-    ), lim AS (
-      SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS mid_us FROM ev
-    ), u AS (
-      -- per-user sums as exact integer MICROS (HUGEINT): theta and
-      -- corr^2 are invariant under common scaling of X and Y, so the
-      -- moment formulas below need no rescale and every product is
-      -- exact 128-bit integer arithmetic (no decimal-width overflow)
-      SELECT user_id,
-        CAST(COALESCE(SUM(CASE WHEN ts_us <  mid_us THEN v END), 0)
-             * 1000000 AS HUGEINT) AS x,
-        CAST(COALESCE(SUM(CASE WHEN ts_us >= mid_us THEN v END), 0)
-             * 1000000 AS HUGEINT) AS y
-      FROM ev CROSS JOIN lim GROUP BY user_id
-    ), s AS (
-      SELECT COUNT(*) AS n,
-        CAST(SUM(x) AS DOUBLE) AS sx,
-        CAST(SUM(y) AS DOUBLE) AS sy,
-        CAST(SUM(x * y) AS DOUBLE) AS sxy,
-        CAST(SUM(x * x) AS DOUBLE) AS sxx,
-        CAST(SUM(y * y) AS DOUBLE) AS syy
-      FROM u
-    )
+    oracle=f"""
+    WITH {_CUPED_MOMENTS_SQL}
     SELECT CAST(n AS BIGINT) AS n_users,
-      -- degenerate guard: a single user (or constant X/Y) zeroes the
-      -- variance terms; theta/corr^2 are undefined -> NULL, not a
-      -- division error (the 100 TB one-record-backfill shape)
-      CAST(FLOOR((n * sxy - sx * sy)
-                 / NULLIF(n * sxx - sx * sx, 0)
-                 * 1000000 + 0.5) AS BIGINT) AS theta_q6,
-      CAST(FLOOR((n * sxy - sx * sy) * (n * sxy - sx * sy)
-                 / NULLIF((n * sxx - sx * sx) * (n * syy - sy * sy), 0)
-                 * 1000000 + 0.5) AS BIGINT) AS variance_reduction_q6
-    FROM s
+      {_q6_sql(_CUPED_THETA)} AS theta_q6,
+      {_q6_sql(_CUPED_CORR2)} AS variance_reduction_q6
+    FROM g
     """,
 )
 def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3476,78 +3487,27 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov²/(var_X·var_Y) — the fraction of metric variance the
     experimenter removes by analyzing Y − θ·X instead of Y.
 
-    Determinism: per-user sums quantize to exact integer MICROS
-    before any second moment — θ = cov/var and corr² are invariant
-    under the common ×1e6 scaling, so every product and sum is exact
-    integer arithmetic (DECIMAL(38,0) / HUGEINT), order-independent;
-    θ and corr² are one identical double expression over those exact
-    sums, quantized q6.
+    Determinism: per-user sums are exact integer micro-units
+    (:func:`user_pre_post`) before any second moment — θ = cov/var
+    and corr² are invariant under the common ×1e6 scaling, so every
+    product and sum is exact integer arithmetic (DECIMAL(38,0) /
+    HUGEINT), order-independent; θ and corr² are one identical double
+    expression over those exact sums (:func:`cuped_moments`),
+    quantized q6.
 
     100 TB shape: ONE user-keyed shuffle builds (X, Y); the moment
     fold is a 1-row map-side-partial aggregate. No user-level data
     leaves the aggregate — the estimator's cost is the same shuffle
     the per-user metric already pays.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12,
+    or the query raises.
     """
-    ev = table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("value").cast("decimal(18,6)").alias("v"),
-    )
-    lim = ev.agg(
-        F.expr("(MIN(ts_us) + MAX(ts_us)) DIV 2").alias("mid_us")
-    )
-    u = (
-        ev.crossJoin(F.broadcast(lim))
-        .groupBy("user_id")
-        .agg(
-            (
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("ts_us") < F.col("mid_us"), F.col("v"))
-                    ),
-                    F.lit(0),
-                )
-                * 1_000_000
-            )
-            .cast("decimal(19,0)")
-            .alias("x"),
-            (
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("ts_us") >= F.col("mid_us"), F.col("v"))
-                    ),
-                    F.lit(0),
-                )
-                * 1_000_000
-            )
-            .cast("decimal(19,0)")
-            .alias("y"),
-        )
-    )
-    s = u.agg(
-        F.count("*").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("double").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    cov = n * F.col("sxy") - sx * sy
-    varx = n * F.col("sxx") - sx * sx
-    vary = n * F.col("syy") - sy * sy
-    # degenerate guard (single-row corpus sweep): zero variance makes
-    # theta/corr^2 undefined -> NULL on both engines, never an ANSI
-    # division error
-    return s.select(
-        n.cast("long").alias("n_users"),
-        F.floor(
-            cov / F.nullif(varx, F.lit(0.0)) * 1_000_000 + F.lit(0.5)
-        ).alias("theta_q6"),
-        F.floor(
-            cov * cov / F.nullif(varx * vary, F.lit(0.0)) * 1_000_000
-            + F.lit(0.5)
-        ).alias("variance_reduction_q6"),
+    u = user_pre_post(period_split(table(spark, sf_dir, "events")))
+    return cuped_moments(u).select(
+        F.col("n").cast("long").alias("n_users"),
+        _q6(F.expr(_CUPED_THETA)).alias("theta_q6"),
+        _q6(F.expr(_CUPED_CORR2)).alias("variance_reduction_q6"),
     )
 
 
@@ -3834,21 +3794,12 @@ def _uplift_band_case(col: str) -> str:
 @register(
     "events_uplift_by_band",
     oracle=f"""
-    WITH ev AS (
-      SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             event_type
-      FROM events
-    ), lim AS (
-      SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS mid_us FROM ev
-    ), u AS (
-      SELECT user_id, user_id % 2 AS treated,
-             COALESCE(SUM(CASE WHEN ts_us < mid_us THEN 1 END), 0)
-               AS pre_n,
-             MAX(CASE WHEN ts_us >= mid_us
-                       AND event_type = 'purchase'
+    WITH {_PERIOD_SPLIT_SQL}, u AS (
+      SELECT user_id, cohort AS treated,
+             COALESCE(SUM(CASE WHEN period = 0 THEN 1 END), 0) AS pre_n,
+             MAX(CASE WHEN period = 1 AND event_type = 'purchase'
                       THEN 1 ELSE 0 END) AS converted
-      FROM ev CROSS JOIN lim GROUP BY 1, 2
+      FROM split GROUP BY 1, 2
     ), banded AS (
       SELECT {_uplift_band_case("pre_n")} AS band, treated, converted
       FROM u
@@ -3884,34 +3835,26 @@ def events_uplift_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     an experimenter learns WHICH users the treatment moves (the
     qini/uplift-curve input).
 
-    Cohort and period follow the family conventions (user_id % 2;
-    integer epoch-µs midpoint). All-integer output: conversion rates
-    are q6 integer divisions, the uplift their difference.
+    Cohort and period follow the family conventions
+    (:func:`period_split`: user_id % 2; integer epoch-µs midpoint).
+    All-integer output: conversion rates are q6 integer divisions, the
+    uplift their difference.
 
     100 TB shape: ONE user-keyed aggregate (pre-count + post-convert
     fold together), a narrow band projection, and a
     ≤{UPLIFT_BAND_CAP + 1}-row cell aggregate — the same
     single-shuffle cost as the per-user metric itself.
     """
-    ev = table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "event_type",
-    )
-    lim = ev.agg(
-        F.expr("(MIN(ts_us) + MAX(ts_us)) DIV 2").alias("mid_us")
-    )
     u = (
-        ev.crossJoin(F.broadcast(lim))
-        .groupBy("user_id", (F.col("user_id") % 2).alias("treated"))
+        period_split(table(spark, sf_dir, "events"))
+        .groupBy("user_id", F.col("cohort").alias("treated"))
         .agg(
             F.coalesce(
-                F.sum(F.when(F.col("ts_us") < F.col("mid_us"), 1)),
-                F.lit(0),
+                F.sum(F.when(F.col("period") == 0, 1)), F.lit(0)
             ).alias("pre_n"),
             F.max(
                 F.when(
-                    (F.col("ts_us") >= F.col("mid_us"))
+                    (F.col("period") == 1)
                     & (F.col("event_type") == "purchase"),
                     1,
                 ).otherwise(0)
@@ -3952,60 +3895,30 @@ def events_uplift_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_cuped_adjusted_lift",
-    oracle="""
-    WITH ev AS (
-      SELECT user_id, user_id % 2 AS cohort,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             CAST(value AS DECIMAL(18,6)) AS v
-      FROM events
-    ), lim AS (
-      SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS mid_us FROM ev
-    ), u AS (
-      SELECT user_id, cohort,
-        CAST(COALESCE(SUM(CASE WHEN ts_us <  mid_us THEN v END), 0)
-             * 1000000 AS HUGEINT) AS x,
-        CAST(COALESCE(SUM(CASE WHEN ts_us >= mid_us THEN v END), 0)
-             * 1000000 AS HUGEINT) AS y
-      FROM ev CROSS JOIN lim GROUP BY 1, 2
-    ), g AS (
-      SELECT COUNT(*) AS n,
-        CAST(SUM(x) AS DOUBLE) AS sx,
-        CAST(SUM(y) AS DOUBLE) AS sy,
-        CAST(SUM(x * y) AS DOUBLE) AS sxy,
-        CAST(SUM(x * x) AS DOUBLE) AS sxx
-      FROM u
-    ), c AS (
+    oracle=f"""
+    WITH {_CUPED_MOMENTS_SQL}, c AS (
       SELECT cohort, COUNT(*) AS nc,
         CAST(SUM(x) AS DOUBLE) AS scx,
         CAST(SUM(y) AS DOUBLE) AS scy
       FROM u GROUP BY cohort
     ), t AS (
-      -- degenerate guard: zero pre-period variance -> theta NULL
-      -- (adjusted means/lift go NULL, never a division error)
-      SELECT (n * sxy - sx * sy) / NULLIF(n * sxx - sx * sx, 0)
-               AS theta,
-             sx / n AS xbar
-      FROM g
+      SELECT {_CUPED_THETA} AS theta, sx / n AS xbar FROM g
     ), adj AS (
       SELECT cohort, nc,
         (scy / nc - theta * (scx / nc - xbar)) / 1000000.0 AS adj_mean
       FROM c CROSS JOIN t
     ), p AS (
-      SELECT
-        MAX(CASE WHEN cohort = 0 THEN nc END) AS n_ctrl,
-        MAX(CASE WHEN cohort = 1 THEN nc END) AS n_treat,
-        MAX(CASE WHEN cohort = 0 THEN adj_mean END) AS m_ctrl,
-        MAX(CASE WHEN cohort = 1 THEN adj_mean END) AS m_treat
+      SELECT {cohort_pivot_sql("nc", cohort=0)} AS n_ctrl,
+             {cohort_pivot_sql("nc", cohort=1)} AS n_treat,
+             {cohort_pivot_sql("adj_mean", cohort=0)} AS m_ctrl,
+             {cohort_pivot_sql("adj_mean", cohort=1)} AS m_treat
       FROM adj
     )
     SELECT CAST(n_ctrl AS BIGINT) AS n_ctrl,
            CAST(n_treat AS BIGINT) AS n_treat,
-           CAST(FLOOR(m_ctrl * 1000000 + 0.5) AS BIGINT)
-             AS adj_mean_ctrl_q6,
-           CAST(FLOOR(m_treat * 1000000 + 0.5) AS BIGINT)
-             AS adj_mean_treat_q6,
-           CAST(FLOOR((m_treat - m_ctrl) * 1000000 + 0.5) AS BIGINT)
-             AS adj_lift_q6
+           {_q6_sql("m_ctrl")} AS adj_mean_ctrl_q6,
+           {_q6_sql("m_treat")} AS adj_mean_treat_q6,
+           {_q6_sql("m_treat - m_ctrl")} AS adj_lift_q6
     FROM p
     """,
 )
@@ -4017,8 +3930,10 @@ def events_cuped_adjusted_lift(
     cohort the adjusted mean  ȳ_c − θ·(x̄_c − x̄)  (Deng et al. 2013
     eq. 4 — the x̄ re-centering keeps the adjusted metric on the raw
     scale) and the treatment lift on the adjusted metric. Same θ as
-    the adjustment row (global pooled fit, exact integer-micros
-    moments), same cohort/period conventions as the family.
+    the adjustment row (:func:`cuped_moments`: global pooled fit,
+    exact integer-micros moments), same cohort/period conventions as
+    the family. Zero pre-period variance leaves θ, the adjusted means
+    and the lift NULL, never a division error.
 
     Determinism: the per-user (X, Y) micros are exact integers; the
     pooled moments and per-cohort sums are exact; θ, the two adjusted
@@ -4028,69 +3943,22 @@ def events_cuped_adjusted_lift(
     100 TB shape: the SAME single user-keyed shuffle as the
     adjustment row — the per-cohort sums fold in a second tiny
     aggregate over the per-user frame; no extra corpus pass.
+
+    Sums are exact micro-unit sums: a row must satisfy |x| < 9.2e12,
+    or the query raises.
     """
-    ev = table(spark, sf_dir, "events").select(
-        "user_id",
-        (F.col("user_id") % 2).alias("cohort"),
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("value").cast("decimal(18,6)").alias("v"),
-    )
-    lim = ev.agg(
-        F.expr("(MIN(ts_us) + MAX(ts_us)) DIV 2").alias("mid_us")
-    )
-    u = (
-        ev.crossJoin(F.broadcast(lim))
-        .groupBy("user_id", "cohort")
-        .agg(
-            (
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("ts_us") < F.col("mid_us"), F.col("v"))
-                    ),
-                    F.lit(0),
-                )
-                * 1_000_000
-            )
-            .cast("decimal(19,0)")
-            .alias("x"),
-            (
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("ts_us") >= F.col("mid_us"), F.col("v"))
-                    ),
-                    F.lit(0),
-                )
-                * 1_000_000
-            )
-            .cast("decimal(19,0)")
-            .alias("y"),
-        )
-    )
+    u = user_pre_post(period_split(table(spark, sf_dir, "events")))
     # the per-user frame feeds BOTH the pooled-moment fold and the
     # per-cohort sums — materialize once (the shared-scan discipline)
     u = u.localCheckpoint(eager=True)
-    g = u.agg(
-        F.count("*").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("double").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
+    t = cuped_moments(u).select(
+        F.expr(_CUPED_THETA).alias("theta"),
+        (F.col("sx") / F.col("n")).alias("xbar"),
     )
     c = u.groupBy("cohort").agg(
         F.count("*").alias("nc"),
         F.sum("x").cast("double").alias("scx"),
         F.sum("y").cast("double").alias("scy"),
-    )
-    # degenerate guard: zero pre-period variance -> theta NULL
-    t = g.select(
-        (
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / F.nullif(
-                F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"),
-                F.lit(0.0),
-            )
-        ).alias("theta"),
-        (F.col("sx") / F.col("n")).alias("xbar"),
     )
     adj = c.crossJoin(F.broadcast(t)).select(
         "cohort",
@@ -4105,27 +3973,17 @@ def events_cuped_adjusted_lift(
         ).alias("adj_mean"),
     )
     p = adj.agg(
-        F.max(F.when(F.col("cohort") == 0, F.col("nc"))).alias("n_ctrl"),
-        F.max(F.when(F.col("cohort") == 1, F.col("nc"))).alias("n_treat"),
-        F.max(F.when(F.col("cohort") == 0, F.col("adj_mean"))).alias(
-            "m_ctrl"
-        ),
-        F.max(F.when(F.col("cohort") == 1, F.col("adj_mean"))).alias(
-            "m_treat"
-        ),
+        cohort_pivot("nc", cohort=0).alias("n_ctrl"),
+        cohort_pivot("nc", cohort=1).alias("n_treat"),
+        cohort_pivot("adj_mean", cohort=0).alias("m_ctrl"),
+        cohort_pivot("adj_mean", cohort=1).alias("m_treat"),
     )
     return p.select(
         F.col("n_ctrl").cast("long").alias("n_ctrl"),
         F.col("n_treat").cast("long").alias("n_treat"),
-        F.floor(F.col("m_ctrl") * 1_000_000 + F.lit(0.5)).alias(
-            "adj_mean_ctrl_q6"
-        ),
-        F.floor(F.col("m_treat") * 1_000_000 + F.lit(0.5)).alias(
-            "adj_mean_treat_q6"
-        ),
-        F.floor(
-            (F.col("m_treat") - F.col("m_ctrl")) * 1_000_000 + F.lit(0.5)
-        ).alias("adj_lift_q6"),
+        _q6(F.col("m_ctrl")).alias("adj_mean_ctrl_q6"),
+        _q6(F.col("m_treat")).alias("adj_mean_treat_q6"),
+        _q6(F.col("m_treat") - F.col("m_ctrl")).alias("adj_lift_q6"),
     )
 
 
@@ -4257,16 +4115,11 @@ PERM_TEST_B = 32  # pseudo-permutation replicates
 @register(
     "events_permutation_test",
     oracle=f"""
-    WITH users AS (
-      SELECT user_id,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(18,6)) * 1000000
-                           AS BIGINT)) AS BIGINT) AS tot
-      FROM events GROUP BY user_id
-    ), spine AS (
+    WITH {_USER_TOTALS_SQL}, spine AS (
       SELECT unnest(range(-1, {PERM_TEST_B})) AS b
     ), assigned AS (
       SELECT s.b,
-             CASE WHEN s.b = -1 THEN u.user_id % 2
+             CASE WHEN s.b = -1 THEN u.cohort
                   ELSE ('0x' || substr(md5(CAST(u.user_id AS VARCHAR)
                         || ':' || CAST(s.b AS VARCHAR)), 1, 8))::BIGINT
                        % 2 END AS side,
@@ -4277,10 +4130,10 @@ PERM_TEST_B = 32  # pseudo-permutation replicates
       FROM assigned GROUP BY b, side
     ), diffs AS (
       SELECT b,
-             MAX(CASE WHEN side = 1 THEN s END)
-               // MAX(CASE WHEN side = 1 THEN n END)
-             - MAX(CASE WHEN side = 0 THEN s END)
-               // MAX(CASE WHEN side = 0 THEN n END) AS diff
+             {cohort_pivot_sql("s", side=1)}
+               // {cohort_pivot_sql("n", side=1)}
+             - {cohort_pivot_sql("s", side=0)}
+               // {cohort_pivot_sql("n", side=0)} AS diff
       FROM sides GROUP BY b
     ), obs AS (SELECT diff AS observed FROM diffs WHERE b = -1)
     SELECT CAST((SELECT COUNT(*) FROM users) AS BIGINT) AS n_users,
@@ -4311,25 +4164,22 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros, so no double crosses an engine boundary.
 
     Plan: ONE user-keyed aggregate reduces the corpus to per-user
-    totals (the only corpus-sized shuffle); the replicate fan-out
-    multiplies the USER frame — already aggregated — by {PERM_TEST_B}
-    + 1 narrow rows whose re-aggregation has map-side combine into
-    2·({PERM_TEST_B} + 1) cells; everything after is a bounded-frame
-    fold. At 100 TB the fan-out cost is B× the user table, tunable by
-    B, never B× the corpus.
+    totals (:func:`user_totals`, the only corpus-sized shuffle); the
+    replicate fan-out multiplies the USER frame — already aggregated —
+    by {PERM_TEST_B} + 1 narrow rows whose re-aggregation has map-side
+    combine into 2·({PERM_TEST_B} + 1) cells; everything after is a
+    bounded-frame fold. At 100 TB the fan-out cost is B× the user
+    table, tunable by B, never B× the corpus.
+
+    Per-user totals are exact micro-unit sums: a row must satisfy
+    |x| < 9.2e12, or the query raises.
     """
-    ev = table(spark, sf_dir, "events")
-    micros = (
-        F.col("value").cast("decimal(18,6)") * 1_000_000
-    ).cast("bigint")
-    users = ev.groupBy("user_id").agg(
-        F.sum(micros).cast("bigint").alias("tot")
-    )
+    users = user_totals(table(spark, sf_dir, "events"))
     spine = spark.range(-1, PERM_TEST_B).select(F.col("id").alias("b"))
     assigned = users.crossJoin(F.broadcast(spine)).select(
         "b",
         "tot",
-        F.when(F.col("b") == -1, F.col("user_id") % 2)
+        F.when(F.col("b") == -1, F.col("cohort"))
         .otherwise(
             F.conv(
                 F.substring(
@@ -4360,21 +4210,17 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integers on the Spark side (n is a COUNT, always > 0), so
     # parity holds for any sign of `value` instead of silently
     # assuming a non-negative corpus.
-    def _floor_div(s_expr: str, n_expr: str) -> str:
+    def _floor_div(side: int) -> str:
+        s = cohort_pivot_sql("s", side=side)
+        n = cohort_pivot_sql("n", side=side)
         return (
-            f"CASE WHEN ({s_expr}) % ({n_expr}) = 0 OR ({s_expr}) >= 0 "
-            f"THEN ({s_expr}) div ({n_expr}) "
-            f"ELSE ({s_expr}) div ({n_expr}) - 1 END"
+            f"CASE WHEN ({s}) % ({n}) = 0 OR ({s}) >= 0 "
+            f"THEN ({s}) div ({n}) "
+            f"ELSE ({s}) div ({n}) - 1 END"
         )
 
-    _s1 = "MAX(CASE WHEN side = 1 THEN s END)"
-    _n1 = "MAX(CASE WHEN side = 1 THEN n END)"
-    _s0 = "MAX(CASE WHEN side = 0 THEN s END)"
-    _n0 = "MAX(CASE WHEN side = 0 THEN n END)"
     diffs = sides.groupBy("b").agg(
-        (
-            F.expr(_floor_div(_s1, _n1)) - F.expr(_floor_div(_s0, _n0))
-        ).alias("diff")
+        (F.expr(_floor_div(1)) - F.expr(_floor_div(0))).alias("diff")
     )
     n_users = users.agg(F.count("*").cast("long").alias("n_users"))
     obs = diffs.filter(F.col("b") == -1).select(
@@ -4694,13 +4540,10 @@ QTE_PCTS = (25, 50, 75)  # quartile treatment effects
       GROUP BY s.q_pct, w.side
     )
     SELECT CAST(q_pct AS BIGINT) AS q_pct,
-           CAST(MAX(CASE WHEN side = 0 THEN v END) AS BIGINT)
-             AS control_cents,
-           CAST(MAX(CASE WHEN side = 1 THEN v END) AS BIGINT)
-             AS treat_cents,
-           CAST(MAX(CASE WHEN side = 1 THEN v END)
-                - MAX(CASE WHEN side = 0 THEN v END) AS BIGINT)
-             AS qte_cents
+           CAST({cohort_pivot_sql("v", side=0)} AS BIGINT) AS control_cents,
+           CAST({cohort_pivot_sql("v", side=1)} AS BIGINT) AS treat_cents,
+           CAST({cohort_pivot_sql("v", side=1)}
+                - {cohort_pivot_sql("v", side=0)} AS BIGINT) AS qte_cents
     FROM picked GROUP BY q_pct
     """,
 )
@@ -4752,12 +4595,8 @@ def events_ab_quantile_effects(
     return (
         picked.groupBy("q_pct")
         .agg(
-            F.max(F.when(F.col("side") == 0, F.col("v")))
-            .cast("long")
-            .alias("control_cents"),
-            F.max(F.when(F.col("side") == 1, F.col("v")))
-            .cast("long")
-            .alias("treat_cents"),
+            cohort_pivot("v", side=0).cast("long").alias("control_cents"),
+            cohort_pivot("v", side=1).cast("long").alias("treat_cents"),
         )
         .select(
             F.col("q_pct").cast("long").alias("q_pct"),
@@ -4775,31 +4614,27 @@ def events_ab_quantile_effects(
 MDE_Z_SUM_Q6 = 2_801_585
 
 
+# A cohort's sample variance of per-user totals from its moments (one
+# SQL text for both engines); a single-user cohort has none: NULL
+_MDE_VAR = (
+    "CASE WHEN n > 1 THEN CAST(n * s2 - s1 * s1 AS DOUBLE)"
+    " / (CAST(n AS DOUBLE) * (n - 1)) END"
+)
+
+
 @register(
     "events_ab_power_mde",
     oracle=f"""
-    WITH users AS (
-      SELECT user_id,
-             user_id % 2 AS side,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(18,6)) * 1000000
-                           AS BIGINT)) AS BIGINT) AS tot
-      FROM events GROUP BY user_id
-    ), moments AS (
-      SELECT side, COUNT(*) AS n,
+    WITH {_USER_TOTALS_SQL}, moments AS (
+      SELECT cohort, COUNT(*) AS n,
              SUM(CAST(tot AS HUGEINT)) AS s1,
              SUM(CAST(tot AS HUGEINT) * tot) AS s2
-      FROM users GROUP BY side
+      FROM users GROUP BY cohort
     ), folded AS (
-      SELECT MAX(CASE WHEN side = 0 THEN n END) AS n_a,
-             MAX(CASE WHEN side = 1 THEN n END) AS n_b,
-             -- a single-user cohort has no sample variance: NULL,
-             -- not div-by-zero (the singleton degenerate corpus)
-             MAX(CASE WHEN side = 0 AND n > 1 THEN
-                 CAST(n * s2 - s1 * s1 AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * (n - 1)) END) AS var_a,
-             MAX(CASE WHEN side = 1 AND n > 1 THEN
-                 CAST(n * s2 - s1 * s1 AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * (n - 1)) END) AS var_b
+      SELECT {cohort_pivot_sql("n", cohort=0)} AS n_a,
+             {cohort_pivot_sql("n", cohort=1)} AS n_b,
+             {cohort_pivot_sql(_MDE_VAR, cohort=0)} AS var_a,
+             {cohort_pivot_sql(_MDE_VAR, cohort=1)} AS var_b
       FROM moments
     )
     SELECT CAST(n_a AS BIGINT) AS n_a,
@@ -4820,40 +4655,32 @@ def events_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the experiment to know what lift is even observable at the
     current cohort sizes.
 
-    Determinism: per-user totals quantize to exact integer micros;
-    per-cohort first/second moments fold in HUGEINT/DECIMAL(38,0);
-    the ONLY doubles are the final variance divisions, sqrt
-    (correctly-rounded IEEE, identical on identical inputs — the
-    hygiene-report precedent), and one FLOOR(·+0.5) quantization.
+    Determinism: per-user totals are exact integer micro-units
+    (:func:`user_totals`); per-cohort first/second moments fold in
+    HUGEINT/DECIMAL(38,0); the ONLY doubles are the final variance
+    divisions, sqrt (correctly-rounded IEEE, identical on identical
+    inputs — the hygiene-report precedent), and one FLOOR(·+0.5)
+    quantization. A single-user cohort has no sample variance: NULL,
+    not a division by zero.
     Plan: one user-keyed aggregate (the only corpus shuffle) → a
-    2-cell moment frame → a 1-row fold."""
-    ev = table(spark, sf_dir, "events")
-    micros = (
-        F.col("value").cast("decimal(18,6)") * 1_000_000
-    ).cast("bigint")
-    users = ev.groupBy("user_id").agg(
-        F.sum(micros).cast("bigint").alias("tot")
-    ).select(
-        (F.col("user_id") % 2).alias("side"), "tot"
-    )
-    moments = users.groupBy("side").agg(
+    2-cell moment frame → a 1-row fold.
+
+    Per-user totals are exact micro-unit sums: a row must satisfy
+    |x| < 9.2e12, or the query raises."""
+    moments = user_totals(table(spark, sf_dir, "events")).groupBy(
+        "cohort"
+    ).agg(
         F.count("*").alias("n"),
         F.expr("SUM(CAST(tot AS DECIMAL(38,0)))").alias("s1"),
         F.expr(
             "SUM(CAST(tot AS DECIMAL(38,0)) * tot)"
         ).alias("s2"),
     )
-    # a single-user cohort has no sample variance: NULL, not
-    # div-by-zero (the singleton degenerate corpus)
-    var = (
-        "CASE WHEN n > 1 THEN CAST(n * s2 - s1 * s1 AS DOUBLE)"
-        " / (CAST(n AS DOUBLE) * (n - 1)) END"
-    )
     return moments.agg(
-        F.expr("MAX(CASE WHEN side = 0 THEN n END)").alias("_na"),
-        F.expr("MAX(CASE WHEN side = 1 THEN n END)").alias("_nb"),
-        F.expr(f"MAX(CASE WHEN side = 0 THEN {var} END)").alias("_va"),
-        F.expr(f"MAX(CASE WHEN side = 1 THEN {var} END)").alias("_vb"),
+        cohort_pivot("n", cohort=0).alias("_na"),
+        cohort_pivot("n", cohort=1).alias("_nb"),
+        cohort_pivot(_MDE_VAR, cohort=0).alias("_va"),
+        cohort_pivot(_MDE_VAR, cohort=1).alias("_vb"),
     ).selectExpr(
         "CAST(_na AS BIGINT) AS n_a",
         "CAST(_nb AS BIGINT) AS n_b",
@@ -4876,8 +4703,8 @@ SRM_CHI2_CRIT_Q6 = 3_841_459  # χ²₁ at α=0.05 (stdlib NormalDist:
       SELECT user_id % 2 AS side, COUNT(DISTINCT user_id) AS n
       FROM events GROUP BY 1
     ), folded AS (
-      SELECT COALESCE(MAX(CASE WHEN side = 0 THEN n END), 0) AS n_a,
-             COALESCE(MAX(CASE WHEN side = 1 THEN n END), 0) AS n_b
+      SELECT COALESCE({cohort_pivot_sql("n", side=0)}, 0) AS n_a,
+             COALESCE({cohort_pivot_sql("n", side=1)}, 0) AS n_b
       FROM sides
     )
     SELECT CAST(n_a AS BIGINT) AS n_a,
@@ -4915,12 +4742,8 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("user_id").alias("n")
     )
     return sides.agg(
-        F.coalesce(
-            F.max(F.when(F.col("side") == 0, F.col("n"))), F.lit(0)
-        ).alias("_na"),
-        F.coalesce(
-            F.max(F.when(F.col("side") == 1, F.col("n"))), F.lit(0)
-        ).alias("_nb"),
+        F.coalesce(cohort_pivot("n", side=0), F.lit(0)).alias("_na"),
+        F.coalesce(cohort_pivot("n", side=1), F.lit(0)).alias("_nb"),
     ).selectExpr(
         "CAST(_na AS BIGINT) AS n_a",
         "CAST(_nb AS BIGINT) AS n_b",
@@ -5242,7 +5065,7 @@ def part_croston_forecast(
     )
 
 
-BOT_MIN_EVENTS = 5  # score users with ≥ 4 inter-event gaps
+BOT_REGULARITY_MIN_EVENTS = 5  # score users with ≥ 4 inter-event gaps
 BOT_CV2_THRESHOLD_Q6 = 10_000  # CV² < 0.01 (CV < 0.1) → metronome
 
 
@@ -5262,7 +5085,7 @@ BOT_CV2_THRESHOLD_Q6 = 10_000  # CV² < 0.01 (CV < 0.1) → metronome
              CAST(SUM(CAST(g AS HUGEINT)) AS HUGEINT) AS s,
              CAST(SUM(CAST(g AS HUGEINT) * g) AS HUGEINT) AS q
       FROM gaps GROUP BY user_id
-      HAVING COUNT(g) >= {BOT_MIN_EVENTS - 1}
+      HAVING COUNT(g) >= {BOT_REGULARITY_MIN_EVENTS - 1}
     ), scored AS (
       SELECT user_id, n_gaps,
              CASE WHEN s = 0 THEN 0
@@ -5321,7 +5144,7 @@ def events_bot_regularity_census(
             F.sum(F.expr("CAST(g AS DECIMAL(38,0))")).alias("s"),
             F.sum(F.expr("CAST(g AS DECIMAL(38,0)) * g")).alias("q"),
         )
-        .where(F.col("n_gaps") >= BOT_MIN_EVENTS - 1)
+        .where(F.col("n_gaps") >= BOT_REGULARITY_MIN_EVENTS - 1)
     )
     scored = per_user.select(
         "n_gaps",

@@ -93,6 +93,24 @@ def micro_cents(s: Column) -> Column:
     return F.floor((s + F.lit(5000)) * F.lit(Decimal("0.0001"))).cast("bigint")
 
 
+# Sums of squares run on the same micro-units: m = micro_units(x) is
+# squared exactly in DECIMAL(38,0) (|m| < 2^63, so m² < 8.6e37), each
+# square is rounded half-up to micro-units once, ⌊(m² + 500000) /
+# 10^6⌋, and the group's sum scales to a double once. On values with
+# at most six decimals this is the exact Σx² a per-row
+# CAST(x AS DECIMAL(18,6)) squared into DECIMAL(30,6) gave, without
+# that cast's domain (|x| < ~3037 before DuckDB's DECIMAL(18)
+# product overflows) or its shortest-repr tie.
+
+
+def exact_sum_sq(col: Column) -> Column:
+    """Exact per-group Σ col² as a double (same domain as
+    :func:`micro_units`)."""
+    m = micro_units(col).cast("decimal(19,0)")
+    sq = F.floor((m * m + F.lit(500_000)) * F.lit(Decimal("0.000001")))
+    return from_micro(F.sum(sq))
+
+
 def micro_units_sql(expr: str) -> str:
     """DuckDB twin of :func:`micro_units`."""
     return f"CAST(FLOOR(({expr}) * 1000000 + 0.5) AS BIGINT)"
@@ -118,6 +136,15 @@ def micro_cents_sql(expr: str) -> str:
     stays in DECIMAL; DuckDB's DECIMAL ``/`` and ``//`` go through
     DOUBLE, and HUGEINT ``//`` truncates toward zero."""
     return f"CAST(FLOOR((({expr}) + 5000) * 0.0001) AS BIGINT)"
+
+
+def exact_sum_sq_sql(expr: str) -> str:
+    """DuckDB twin of :func:`exact_sum_sq`. HUGEINT squares exactly;
+    its ``//`` truncates, which floors the non-negative m² + 500000."""
+    m = f"CAST({micro_units_sql(expr)} AS HUGEINT)"
+    return from_micro_sql(
+        f"CAST(SUM(({m} * {m} + 500000) // 1000000) AS DECIMAL(38,0))"
+    )
 
 
 def register(name: str, oracle: Optional[str] = None):

@@ -408,7 +408,7 @@ def test_skyline_price_collision_across_sizes(
     gate_compare(skyline_parts_dir, "part_skyline_frontier")
 
 
-def _events_dir(spark, tmp_path, values):
+def _events_dir(spark, tmp_path, values, extra=()):
     base = datetime.datetime(2024, 1, 1)
     rows = [
         (i, base + datetime.timedelta(minutes=i), 1, "view", v, None)
@@ -419,6 +419,7 @@ def _events_dir(spark, tmp_path, values):
         (100, base, 2, "view", values[0], None),
         (101, base + datetime.timedelta(hours=9), 2, "view", values[-1], None),
     ]
+    rows += list(extra)
     df = spark.createDataFrame(
         rows,
         "event_id long, ts timestamp, user_id long, event_type string,"
@@ -554,14 +555,54 @@ def test_engine_conf_pins_ansi_so_micro_units_raise(spark, tmp_path):
         spark.conf.set("spark.sql.ansi.enabled", "true")
 
 
-def test_tumbling_window_shortest_repr_tie_matches_oracle(
-    spark, gate_compare, tmp_path
+@pytest.mark.parametrize(
+    "name",
+    [
+        "events_tumbling_window",
+        # the experiment kernel: moment fold (Σv²), per-user pre/post
+        # and total micro-units
+        "events_anomaly_zscore",
+        "events_ab_cohort_compare",
+        "events_anomaly_threshold_curve",
+        "events_ab_sample_size_chebyshev",
+        "events_cuped_adjustment",
+        "events_cuped_adjusted_lift",
+        "events_permutation_test",
+        "events_ab_power_mde",
+        "events_bot_user_census",
+    ],
+)
+def test_shortest_repr_tie_and_wide_values_match_oracle(
+    spark, gate_compare, tmp_path, name
 ):
-    """The q1 tie through the streaming module's batch window sums: a
-    per-row DECIMAL(25,6) cast gives …000001 in Spark and …000000 in
-    DuckDB; the shared micro-unit sum gives …000001 on both."""
-    sf = _events_dir(spark, tmp_path, [123456789.0000005, 185.22])
-    gate_compare(sf, "events_tumbling_window")
+    """The q1 tie (123456789.0000005) and values far past the repo
+    corpora's (max 560.21) through every per-row value path. A per-row
+    DECIMAL(25,6) or DECIMAL(18,6) cast gives …000001 in Spark and
+    …000000 in DuckDB, and DuckDB's DECIMAL(18,6) square overflows
+    from |x| ≈ 3037 on (5000.25 here); the shared micro-unit sums and
+    sums of squares agree. A third user's three clicks, a day apart
+    and ending where the other users start, move the period midpoint
+    so the tie lands in the CUPED rows' post-period sums against a
+    0.5-unit pre-period sum, where θ resolves a single micro-unit. A
+    fourth user's ten events 0.5 s apart sit between the bot census'
+    volume floor (50) and the other bot screens' floors (5)."""
+    base = datetime.datetime(2024, 1, 1)
+    clicks = [
+        (200 + d, base + datetime.timedelta(days=d - 2), 3, "click", v, None)
+        for d, v in enumerate((0.25, 0.25, 185.22))
+    ]
+    burst = [
+        (300 + i, base + datetime.timedelta(seconds=i / 2), 4, "view",
+         1.5, None)
+        for i in range(10)
+    ]
+    sf = _events_dir(
+        spark,
+        tmp_path,
+        [123456789.0000005, 5000.25, 185.22],
+        extra=clicks + burst,
+    )
+    gate_compare(sf, name)
 
 
 def test_cents_shortest_repr_ties_match_oracle(spark, gate_compare, tmp_path):

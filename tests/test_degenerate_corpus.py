@@ -141,6 +141,16 @@ BATTERY = [
     "sim_ivf_kmeans_bucket_balance",
     "sim_ivf_recall_floor",
     "sim_ivfpq_recall_floor",
+    # the rest of the experiment kernel's rows (moment fold, period
+    # split, per-user totals, cohort pivot) on no/one event
+    "events_anomaly_zscore",
+    "events_ab_cohort_compare",
+    "events_anomaly_threshold_curve",
+    "events_ab_sample_size_chebyshev",
+    "events_uplift_by_band",
+    "events_ab_quantile_effects",
+    "events_ab_power_mde",
+    "events_ab_srm_check",
 ]
 
 # Rows-only repaired queries (no oracle): crash-freedom is the pin.

@@ -1664,21 +1664,29 @@ EXACT_SUM_QUERIES = (
     "events_user_activity",
     "events_sliding_user_value",
     "events_stream_enrich_batch",
+    # per-user micro-unit frames of the experiment kernel
+    "events_cuped_adjustment",
+    "events_cuped_adjusted_lift",
+    "events_permutation_test",
+    "events_ab_power_mde",
 )
 
 
 @pytest.mark.parametrize("name", EXACT_SUM_QUERIES)
 def test_exact_sums_cast_no_row_to_decimal(spark, name):
-    """A per-row DECIMAL(25,6) cast is a Double.toString and a
-    BigDecimal per value; the exact sums cast each row to BIGINT
-    micro-units instead, on both sides of the oracle pair."""
+    """A per-row DECIMAL(25,6) or DECIMAL(18,6) cast is a
+    Double.toString and a BigDecimal per value, and rounds a
+    shortest-repr tie differently on the two engines; the exact sums
+    and sums of squares cast each row to BIGINT micro-units instead,
+    on both sides of the oracle pair."""
     from almost_any_file_to_pandas_spark.plans import ORACLES, QUERIES, load_all
 
     load_all()
     df = QUERIES[name](spark, SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "decimal(25,6)" not in plan
-    assert "DECIMAL(25,6)" not in ORACLES[name]
+    for scale in ("25,6", "18,6", "30,6"):
+        assert f"decimal({scale})" not in plan
+        assert f"DECIMAL({scale})" not in ORACLES[name]
 
 
 def test_scd2_point_in_time_join_keys_are_distinct_columns(
@@ -1729,7 +1737,8 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.ui.enabled", "false").getOrCreate())
 from almost_any_file_to_pandas_spark import plans
 plans.load_all()
-for name in ("mm_bmp_decode_census", "events_rate_limit_audit"):
+for name in ("mm_bmp_decode_census", "events_rate_limit_audit",
+             "sim_pq_topk"):
     print(name, len(plans.QUERIES[name](spark, {SF_DIR!r}).collect()))
 spark.stop()
 """
@@ -1744,3 +1753,35 @@ spark.stop()
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "ModuleNotFoundError" not in proc.stderr
+
+
+def test_no_module_binds_a_top_level_name_twice():
+    """A module-level constant bound twice silently serves whichever
+    binding runs last: an oracle f-string reads the value at import,
+    the engine body reads it at call time, and the two can disagree.
+    Every top-level def, class, assignment and import name in the
+    package is bound once."""
+    import ast
+    from collections import Counter
+
+    repo = Path(__file__).resolve().parents[1]
+    package = repo / "almost_any_file_to_pandas_spark"
+    twice = {}
+    for path in sorted(package.rglob("*.py")):
+        names = Counter()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names[node.name] += 1
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(node, "targets", None) or [node.target]
+                for target in targets:
+                    for leaf in ast.walk(target):
+                        if isinstance(leaf, ast.Name):
+                            names[leaf.id] += 1
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                for alias in node.names:
+                    names[(alias.asname or alias.name).split(".")[0]] += 1
+        dups = sorted(n for n, c in names.items() if c > 1)
+        if dups:
+            twice[str(path.relative_to(package))] = dups
+    assert not twice, twice
