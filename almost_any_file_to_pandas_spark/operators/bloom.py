@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.operators.textstats import (
+    _CONTAM_SHINGLES_SQL,
     CONTAM_BENCH_MOD,
     CONTAM_NGRAM,
 )
@@ -100,16 +101,7 @@ def _make_probe(bits: np.ndarray):
 @register(
     "text_contamination_bloom",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - {CONTAM_NGRAM - 1}, 0) + 1),
-               i -> array_to_string(w[i:i+{CONTAM_NGRAM - 1}], ' ')))) AS s
-      FROM base
-    ), bench AS (
-      SELECT doc_id AS bench_id, s FROM sh WHERE doc_id % {CONTAM_BENCH_MOD} = 0
-    )
+    WITH {_CONTAM_SHINGLES_SQL}
     SELECT COUNT(DISTINCT t.doc_id) AS n_exact_contaminated,
            TRUE AS bloom_superset
     FROM sh t JOIN bench b ON t.s = b.s AND t.doc_id <> b.bench_id
@@ -178,17 +170,7 @@ BLOOM_SIZE_CURVE_BITS = (1 << 16, 1 << 20, 1 << 24)
 @register(
     "text_bloom_size_curve",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - {CONTAM_NGRAM - 1}, 0) + 1),
-               i -> array_to_string(w[i:i+{CONTAM_NGRAM - 1}], ' ')))) AS s
-      FROM base
-    ), bench AS (
-      SELECT doc_id AS bench_id, s FROM sh
-      WHERE doc_id % {CONTAM_BENCH_MOD} = 0
-    ), exact AS (
+    WITH {_CONTAM_SHINGLES_SQL}, exact AS (
       SELECT COUNT(DISTINCT t.doc_id) AS n_exact_contaminated
       FROM sh t JOIN bench b ON t.s = b.s AND t.doc_id <> b.bench_id
     )

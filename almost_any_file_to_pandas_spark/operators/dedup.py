@@ -86,6 +86,37 @@ def _shingle_set(text: str, n: int = 3) -> set:
     return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
 
 
+def _word_ngrams(toks, n: int = 3):
+    """Word n-gram shingles: concat_ws of each length-n slice.
+
+    Guarded for short docs: Spark's ``sequence(1, 0)`` *descends* —
+    an unguarded call would fabricate shingles for docs with < n
+    tokens, so emit an empty array there instead.
+    """
+    n_shingles = F.size(toks) - (n - 1)
+    return F.when(
+        n_shingles >= 1,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), n_shingles),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            )
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _word_ngrams_sql(w: str, n: int = 3) -> str:
+    """DuckDB twin of :func:`_word_ngrams` before its distinct: the
+    word n-grams of the VARCHAR list ``w`` in order, with
+    multiplicity, empty below ``n`` words (wrap it in
+    ``list_distinct`` for the set)."""
+    return (
+        "list_transform(\n"
+        f"               range(1, greatest(len({w}) - {n - 1}, 0) + 1),\n"
+        f"               i -> array_to_string({w}[i:i+{n - 1}], ' '))"
+    )
+
+
 # The N_HASHES affine maps h -> (a·h + b) mod MERSENNE_PRIME of the
 # MinHash family, drawn once from a fixed seed.
 _MINHASH_RNG = random.Random(42)
@@ -262,14 +293,12 @@ def _pairs_within_buckets(
 # threshold > 0: such a pair shares at least one shingle, so only
 # the pairs joined on a shared shingle are scored, not all n² pairs.
 # Two empty shingle sets score 0/0, which is NULL and never passes.
-_SHINGLE_JACCARD_ORACLE = """
+_SHINGLE_JACCARD_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ), t AS (
       SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' '))) AS toks
+             list_distinct({_word_ngrams_sql('w')}) AS toks
       FROM base
     ), tok AS (
       SELECT doc_id, unnest(toks) AS tok FROM t
@@ -284,7 +313,7 @@ _SHINGLE_JACCARD_ORACLE = """
     JOIN t a ON a.doc_id = c.doc_a
     JOIN t b ON b.doc_id = c.doc_b
     WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-          / len(list_distinct(a.toks || b.toks)) >= {threshold}
+          / len(list_distinct(a.toks || b.toks)) >= {{threshold}}
 """
 
 # Component closure over a ``pairs(u, v)`` CTE: ``comp(u, lbl)`` labels
@@ -417,25 +446,6 @@ def _verify_pairs(
     return verified.select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
-
-
-def _word_ngrams(toks, n: int = 3):
-    """Word n-gram shingles: concat_ws of each length-n slice.
-
-    Guarded for short docs: Spark's ``sequence(1, 0)`` *descends* —
-    an unguarded call would fabricate shingles for docs with < n
-    tokens, so emit an empty array there instead.
-    """
-    n_shingles = F.size(toks) - (n - 1)
-    return F.when(
-        n_shingles >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n_shingles),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def _prefix_index(
@@ -1774,9 +1784,7 @@ CONTAINMENT_THRESHOLD_Q6 = 800_000  # |A∩B| / min(|A|,|B|) ≥ 0.8
     WITH base AS (
       SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ), sh AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' ')))) AS shingle
+      SELECT doc_id, unnest(list_distinct({_word_ngrams_sql('w')})) AS shingle
       FROM base
     ), kept AS (
       SELECT doc_id, shingle FROM (
@@ -2354,9 +2362,7 @@ def _shingle_sig_cte() -> str:
       SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ), sh0 AS (
       SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' ')))) AS g
+             unnest(list_distinct({_word_ngrams_sql('w')})) AS g
       FROM base
     ), dfok AS (
       SELECT g FROM sh0 GROUP BY g HAVING COUNT(*) <= {MAX_SHINGLE_DF}
@@ -2804,14 +2810,12 @@ def dedup_minhash_estimate_calibration(
 
 @register(
     "dedup_cross_source_matrix",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ), sh AS (
       SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' '))) AS toks
+             list_distinct({_word_ngrams_sql('w')}) AS toks
       FROM base
     ), pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,

@@ -297,8 +297,9 @@ def text_quality_threshold_curve(
     shares of the corpus.
 
     Plan: the per-doc metrics are one narrow projection over the scan
-    (split + array_distinct — no shuffle, the same expressions as
-    ``text_quality_filter``); the 5-row threshold frame joins
+    (``textstats.dup_ratio_metrics``: split + array_distinct, no
+    shuffle, the same values ``text_quality_filter`` decides on);
+    the 5-row threshold frame joins
     BROADCAST, and the sweep aggregates with map-side partial
     aggregation into 5 groups. The curve costs one scan regardless of
     how many thresholds are swept. Integer q6 arithmetic end-to-end.
@@ -309,7 +310,7 @@ def text_quality_threshold_curve(
     )
 
     docs = table_wide(spark, sf_dir, "documents")
-    # the SAME long-arithmetic kernel text_quality_filter decides on
+    # the long-arithmetic dup ratio text_quality_filter also reports
     # (the earlier local re-derivation multiplied int32 sizes by 1e6
     # before casting — wrapping negative past 2148 duplicated words)
     m = dup_ratio_metrics(docs).select(

@@ -4203,24 +4203,15 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides = assigned.groupBy("b", "side").agg(
         F.count("*").alias("n"), F.sum("tot").alias("s")
     )
-    # Sign-safe FLOOR division (r8 ADVICE): Spark's `div` truncates
-    # toward zero while the oracle's DuckDB `//` floors — they split
-    # exactly when a cohort's summed value is negative and not an
-    # exact multiple. The CASE restates floor semantics in exact
-    # integers on the Spark side (n is a COUNT, always > 0), so
-    # parity holds for any sign of `value` instead of silently
-    # assuming a non-negative corpus.
-    def _floor_div(side: int) -> str:
+    # Each cohort mean is an integer division truncated toward zero,
+    # as the oracle's DuckDB // truncates (n is a COUNT, always > 0).
+    def _mean_div(side: int) -> str:
         s = cohort_pivot_sql("s", side=side)
         n = cohort_pivot_sql("n", side=side)
-        return (
-            f"CASE WHEN ({s}) % ({n}) = 0 OR ({s}) >= 0 "
-            f"THEN ({s}) div ({n}) "
-            f"ELSE ({s}) div ({n}) - 1 END"
-        )
+        return f"({s}) div ({n})"
 
     diffs = sides.groupBy("b").agg(
-        (F.expr(_floor_div(1)) - F.expr(_floor_div(0))).alias("diff")
+        (F.expr(_mean_div(1)) - F.expr(_mean_div(0))).alias("diff")
     )
     n_users = users.agg(F.count("*").cast("long").alias("n_users"))
     obs = diffs.filter(F.col("b") == -1).select(

@@ -6,9 +6,29 @@ expression (JVM-side, whole-stage codegen, zero shuffle until the
 final aggregate where present). Each is registered with a DuckDB
 oracle.
 
-Engine-portable building blocks (identical semantics in Spark SQL and
-DuckDB):
-- token count: ``size(split(text, ' '))`` ↔ ``len(string_split(...))``
+The family reads one token table. Each shared kernel has its DuckDB
+twin beside it, and no row splits or counts text itself:
+- :func:`words` / :func:`words_sql`: the one whitespace tokenizer,
+  ``split(text, ' ', -1)`` ↔ ``string_split(text, ' ')`` (an empty
+  document is one ``''`` token);
+- :func:`term_counts` / :func:`term_counts_sql`: ``(keys…, term, n)``
+  over the exploded words. No key is the vocabulary, ``doc_id`` is tf
+  and ``source`` is the per-source table;
+- :func:`doc_word_stats` / :data:`_DOC_WORDS_SQL`: per document
+  ``(n_words, n_distinct, top_cnt)`` in one aggregate over the tf rows,
+  the repetition fold of the repetition, filter and ablation rows;
+- :func:`_bigrams`: adjacent word pairs with multiplicity; the DuckDB
+  word n-gram list is ``dedup._word_ngrams_sql`` (bigrams are n = 2);
+- :func:`lang_pred` / :data:`_LANG_PRED_SQL`: the marker scores and
+  the en > de > fr > es precedence;
+- :data:`_BIGRAM_LM_SQL`: the bigram-LM score, shared by the LM
+  perplexity filter.
+
+Integer division truncates toward zero on both engines: Spark ``div``
+and DuckDB ``//`` on integer operands (see the recipe comment in
+``plans/__init__.py``), so a negative quotient needs no sign CASE.
+
+Other engine-portable building blocks:
 - substring occurrence count: ``(length(s) - length(replace(s, pat, '')))
   / length(pat)`` — avoids regex-dialect mismatches entirely
 - fingerprint: ``md5(...)`` → lowercase hex in both engines
@@ -16,9 +36,13 @@ DuckDB):
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import add
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from almost_any_file_to_pandas_spark.operators.dedup import _word_ngrams_sql
 from almost_any_file_to_pandas_spark.plans import register, table, table_wide
 
 # Tiny embedded stopword sets per language — enough for a determinstic
@@ -53,11 +77,137 @@ def _occurrences_sql(expr: str, token: str) -> str:
     )
 
 
+def words(col):
+    """The one whitespace tokenizer: ``col`` split on single spaces,
+    empty tokens kept (``''`` is one token, ``'a  b'`` three)."""
+    return F.split(col, " ", -1)
+
+
+def words_sql(expr: str = "text") -> str:
+    """DuckDB twin of :func:`words`."""
+    return f"string_split({expr}, ' ')"
+
+
+def term_counts(docs: DataFrame, *keys: str) -> DataFrame:
+    """``(keys…, term, n)``: how often each word of ``docs.text``
+    occurs under each key — the vocabulary for no key, tf for
+    ``doc_id``. Map-side partial counts, one shuffle on (keys, term)."""
+    return (
+        docs.select(*keys, F.explode(words(F.col("text"))).alias("term"))
+        .groupBy(*keys, "term")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def term_counts_sql(*keys: str) -> str:
+    """DuckDB twin of :func:`term_counts` over ``documents``."""
+    k = "".join(f"{c}, " for c in keys)
+    return (
+        f"SELECT {k}term, COUNT(*) AS n FROM ("
+        f"SELECT {k}unnest({words_sql()}) AS term FROM documents)"
+        f" GROUP BY {k}term"
+    )
+
+
+def doc_word_stats(docs: DataFrame) -> DataFrame:
+    """``(doc_id, n_words, n_distinct, top_cnt)``: word count,
+    distinct words and the most frequent word's count per document,
+    one aggregate over the tf rows (the Gopher repetition fold). A
+    document with NULL text has no row."""
+    return (
+        term_counts(docs, "doc_id")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n").alias("n_words"),
+            F.count("*").alias("n_distinct"),
+            F.max("n").alias("top_cnt"),
+        )
+    )
+
+
+# CTE twin of doc_word_stats, named ``doc_words``.
+_DOC_WORDS_SQL = f"""doc_words AS (
+      SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_words,
+             COUNT(*) AS n_distinct, MAX(n) AS top_cnt
+      FROM ({term_counts_sql('doc_id')}) GROUP BY doc_id
+    )"""
+
+# Per-document repetition ratios over doc_word_stats' columns; the SQL
+# twin spells ``div`` as ``//``.
+_DUP_RATIO_Q6 = "(n_words - n_distinct) * 1000000 div n_words"
+_TOP_FRACTION_Q6 = "top_cnt * 1000000 div n_words"
+
+
+def _sql_div(expr: str) -> str:
+    return expr.replace(" div ", " // ")
+
+
+def _bigrams(arr):
+    """Adjacent pairs of ``arr`` as ``'a b'`` strings, with
+    multiplicity. ``arr`` should be a projected column: ``zip_with``
+    walks the two shifted slices once, where an indexed
+    ``element_at(arr, i + 2)`` lambda re-evaluated the split per
+    element (interpreted HOFs share no subexpressions across lambda
+    calls — measured 6.4 s vs 0.6 s at sf0.1)."""
+    m = F.greatest(F.size(arr) - 1, F.lit(0))
+    return F.zip_with(
+        F.slice(arr, 1, m),
+        F.slice(arr, 2, m),
+        lambda a, b: F.concat_ws(" ", a, b),
+    )
+
+
+def lang_pred(text):
+    """Stopword-marker language of ``text``: the language whose
+    markers occur most often, ties broken en > de > fr > es."""
+    lowered = F.lower(text)
+    s = {
+        lang: reduce(add, (_occurrences(lowered, m) for m in markers))
+        for lang, markers in _LANG_MARKERS.items()
+    }
+    return (
+        F.when(
+            (s["en"] >= s["de"]) & (s["en"] >= s["fr"]) & (s["en"] >= s["es"]),
+            "en",
+        )
+        .when((s["de"] >= s["fr"]) & (s["de"] >= s["es"]), "de")
+        .when(s["fr"] >= s["es"], "fr")
+        .otherwise("es")
+    )
+
+
+def _lang_score_sql(lang: str) -> str:
+    return " + ".join(
+        _occurrences_sql("lower(text)", marker) for marker in _LANG_MARKERS[lang]
+    )
+
+
+# CTE twin of lang_pred: ``lang_pred(doc_id, lang, predicted_lang)``.
+_LANG_PRED_SQL = f"""lang_pred AS (
+      SELECT doc_id, lang,
+             CASE
+               WHEN score_en >= score_de AND score_en >= score_fr
+                    AND score_en >= score_es THEN 'en'
+               WHEN score_de >= score_fr AND score_de >= score_es THEN 'de'
+               WHEN score_fr >= score_es THEN 'fr'
+               ELSE 'es'
+             END AS predicted_lang
+      FROM (
+        SELECT doc_id, lang,
+          {_lang_score_sql('en')} AS score_en,
+          {_lang_score_sql('de')} AS score_de,
+          {_lang_score_sql('fr')} AS score_fr,
+          {_lang_score_sql('es')} AS score_es
+        FROM documents
+      )
+    )"""
+
+
 @register(
     "text_token_count",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           len(string_split(text, ' ')) AS n_tokens,
+           len({words_sql()}) AS n_tokens,
            length(text) AS n_chars_measured
     FROM documents
     """,
@@ -67,7 +217,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table_wide(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(F.split(F.col("text"), " ", -1)).alias("n_tokens"),
+        F.size(words(F.col("text"))).alias("n_tokens"),
         F.length("text").alias("n_chars_measured"),
     )
 
@@ -92,8 +242,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _quality_cols(docs: DataFrame) -> DataFrame:
     text = F.col("text")
-    toks = F.split(text, " ", -1)
-    n_tokens = F.size(toks)
+    n_tokens = F.size(words(text))
     stop_hits = None
     for tok in _STOPWORDS:
         term = _occurrences(text, tok)
@@ -122,12 +271,12 @@ _QUALITY_STOP_SQL = " + ".join(
     oracle=f"""
     SELECT doc_id,
       length(text) AS n_chars_measured,
-      len(string_split(text, ' ')) AS n_tokens,
-      length(text) / len(string_split(text, ' ')) AS avg_token_len,
+      len({words_sql()}) AS n_tokens,
+      length(text) / len({words_sql()}) AS avg_token_len,
       (length(text) - length(replace(text, ' ', ''))) / CAST(length(text) AS DOUBLE)
         AS space_ratio,
       {_QUALITY_STOP_SQL} AS stopword_hits,
-      ({_QUALITY_STOP_SQL}) / CAST(len(string_split(text, ' ')) AS DOUBLE)
+      ({_QUALITY_STOP_SQL}) / CAST(len({words_sql()}) AS DOUBLE)
         AS stopword_ratio
     FROM documents
     """,
@@ -141,37 +290,11 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _quality_cols(docs)
 
 
-def _lang_score_sql(lang: str) -> str:
-    return " + ".join(
-        _occurrences_sql("lower(text)", marker) for marker in _LANG_MARKERS[lang]
-    )
-
-
-_LANG_CASE_SQL = """
-    CASE
-      WHEN score_en >= score_de AND score_en >= score_fr AND score_en >= score_es
-        THEN 'en'
-      WHEN score_de >= score_fr AND score_de >= score_es THEN 'de'
-      WHEN score_fr >= score_es THEN 'fr'
-      ELSE 'es'
-    END
-"""
-
-
 @register(
     "text_lang_id",
     oracle=f"""
-    WITH scored AS (
-      SELECT doc_id, lang,
-        {_lang_score_sql('en')} AS score_en,
-        {_lang_score_sql('de')} AS score_de,
-        {_lang_score_sql('fr')} AS score_fr,
-        {_lang_score_sql('es')} AS score_es
-      FROM documents
-    )
-    SELECT doc_id, lang AS labeled_lang,
-           {_LANG_CASE_SQL} AS predicted_lang
-    FROM scored
+    WITH {_LANG_PRED_SQL}
+    SELECT doc_id, lang AS labeled_lang, predicted_lang FROM lang_pred
     """,
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,40 +302,20 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed precedence tie-break (en > de > fr > es). Returns prediction
     beside the label so accuracy is one aggregation away."""
     docs = table_wide(spark, sf_dir, "documents")
-    lowered = F.lower(F.col("text"))
-    scores = {}
-    for lang, markers in _LANG_MARKERS.items():
-        total = None
-        for marker in markers:
-            term = _occurrences(lowered, marker)
-            total = term if total is None else (total + term)
-        scores[lang] = total
-    predicted = (
-        F.when(
-            (scores["en"] >= scores["de"])
-            & (scores["en"] >= scores["fr"])
-            & (scores["en"] >= scores["es"]),
-            "en",
-        )
-        .when((scores["de"] >= scores["fr"]) & (scores["de"] >= scores["es"]), "de")
-        .when(scores["fr"] >= scores["es"], "fr")
-        .otherwise("es")
-    )
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        predicted.alias("predicted_lang"),
+        lang_pred(F.col("text")).alias("predicted_lang"),
     )
 
 
 @register(
     "text_stats_by_lang",
-    oracle="""
+    oracle=f"""
     SELECT lang, source,
       COUNT(*) AS n_docs,
-      CAST(SUM(CAST(n_chars AS DECIMAL(25,4))) AS DOUBLE) AS total_chars,
-      CAST(SUM(CAST(len(string_split(text, ' ')) AS DECIMAL(25,4))) AS DOUBLE)
-        AS total_tokens
+      CAST(SUM(n_chars) AS DOUBLE) AS total_chars,
+      CAST(SUM(len({words_sql()})) AS DOUBLE) AS total_tokens
     FROM documents
     GROUP BY lang, source
     """,
@@ -220,14 +323,13 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus statistics rollup — the monitoring aggregate a pipeline
     runs per ingest batch. Partial aggregation map-side; one shuffle
-    on (lang, source)."""
+    on (lang, source). The integer counts sum exactly as BIGINT and
+    cast to DOUBLE once (exact below 2^53)."""
     docs = table_wide(spark, sf_dir, "documents")
     return docs.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.col("n_chars").cast("decimal(25,4)")).cast("double").alias("total_chars"),
-        F.sum(F.size(F.split(F.col("text"), " ", -1)).cast("decimal(25,4)"))
-        .cast("double")
-        .alias("total_tokens"),
+        F.sum("n_chars").cast("double").alias("total_chars"),
+        F.sum(F.size(words(F.col("text")))).cast("double").alias("total_tokens"),
     )
 
 
@@ -241,7 +343,7 @@ BPE_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
     "text_token_count_bpe",
     oracle=f"""
     SELECT doc_id,
-           len(string_split(text, ' ')) AS n_ws_tokens,
+           len({words_sql()}) AS n_ws_tokens,
            len(regexp_extract_all(lower(text), '{BPE_PATTERN}'))
              AS n_bpe_tokens
     FROM documents
@@ -255,7 +357,7 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table_wide(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(F.split(F.col("text"), " ", -1)).alias("n_ws_tokens"),
+        F.size(words(F.col("text"))).alias("n_ws_tokens"),
         F.size(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_PATTERN), 0)
         ).alias("n_bpe_tokens"),
@@ -271,12 +373,12 @@ ROLLING_BASE = 131
     oracle=f"""
     SELECT doc_id,
            list_reduce(
-             list_transform(string_split(text, ' '),
+             list_transform({words_sql()},
                             w -> ascii(substr(w, 1, 1)) * 31 + length(w)),
              (acc, x) -> (acc * {ROLLING_BASE} + x) % {ROLLING_MOD}
            ) AS rolling_hash
     FROM documents
-    WHERE len(string_split(text, ' ')) >= 1
+    WHERE len({words_sql()}) >= 1
     """,
 )
 def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,7 +393,7 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     never overflows the BIGINT lane, so ANSI mode stays happy.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
+    toks = words(F.col("text"))
     codes = F.transform(
         toks,
         lambda w: (F.ascii(F.substring(w, 1, 1)) * 31 + F.length(w)).cast(
@@ -453,22 +555,14 @@ def text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_repetition_stats",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ), c AS (
-      SELECT doc_id, tok, COUNT(*) AS cnt FROM w GROUP BY 1, 2
-    )
-    SELECT doc_id,
-           CAST(SUM(cnt) AS BIGINT) AS n_words,
-           COUNT(*) AS n_distinct,
+    oracle=f"""
+    WITH {_DOC_WORDS_SQL}
+    SELECT doc_id, n_words, n_distinct,
            -- all-integer ratios (house _q6 recipe); per-doc counts
            -- keep the products far inside int64
-           ((CAST(SUM(cnt) AS BIGINT) - COUNT(*)) * 1000000)
-             // CAST(SUM(cnt) AS BIGINT) AS dup_word_ratio_q6,
-           (MAX(cnt) * 1000000) // CAST(SUM(cnt) AS BIGINT)
-             AS top_word_fraction_q6
-    FROM c GROUP BY doc_id
+           {_sql_div(_DUP_RATIO_Q6)} AS dup_word_ratio_q6,
+           {_sql_div(_TOP_FRACTION_Q6)} AS top_word_fraction_q6
+    FROM doc_words
     """,
 )
 def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -477,30 +571,20 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction — the signals used to drop boilerplate and keyword-stuffed
     pages before training.
 
-    Plan: explode words → two-level aggregation ((doc, word) counts,
-    then per-doc rollup), both with map-side partials — the classic
-    two-shuffle word-count shape, no joins, no arrays shipped between
-    stages. At 100 TB both shuffles carry only (doc_id, word/cnt)
-    pairs, and word-level skew is irrelevant because the first
-    grouping key includes doc_id.
+    Plan: :func:`doc_word_stats` — explode words → two-level
+    aggregation ((doc, word) counts, then per-doc rollup), both with
+    map-side partials — the classic two-shuffle word-count shape, no
+    joins, no arrays shipped between stages. At 100 TB both shuffles
+    carry only (doc_id, word/cnt) pairs, and word-level skew is
+    irrelevant because the first grouping key includes doc_id.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    counts = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("tok")
-        )
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("cnt"))
-    )
-    return counts.groupBy("doc_id").agg(
-        F.sum("cnt").alias("n_words"),
-        F.count("*").alias("n_distinct"),
-        F.expr("(sum(cnt) - count(*)) * 1000000 div sum(cnt)").alias(
-            "dup_word_ratio_q6"
-        ),
-        F.expr("max(cnt) * 1000000 div sum(cnt)").alias(
-            "top_word_fraction_q6"
-        ),
+    return doc_word_stats(docs).select(
+        "doc_id",
+        "n_words",
+        "n_distinct",
+        F.expr(_DUP_RATIO_Q6).alias("dup_word_ratio_q6"),
+        F.expr(_TOP_FRACTION_Q6).alias("top_word_fraction_q6"),
     )
 
 
@@ -511,54 +595,56 @@ QF_MAX_DUP_RATIO = 0.6
 QF_MAX_TOP_FRACTION = 0.2
 
 
+def _qf_rules() -> dict:
+    """The quality filter's three keep rules over
+    :func:`doc_word_stats`' columns, by ablation flag name: minimum
+    length, duplicate-word cap, top-word cap. Each is a float
+    comparison — a single IEEE division is correctly rounded on both
+    engines."""
+    n = F.col("n_words")
+    return {
+        "words_ok": n >= QF_MIN_WORDS,
+        "dup_ok": 1 - F.col("n_distinct") / n <= QF_MAX_DUP_RATIO,
+        "top_ok": F.col("top_cnt") / n <= QF_MAX_TOP_FRACTION,
+    }
+
+
+_QF_RULES_SQL = {
+    "words_ok": f"n_words >= {QF_MIN_WORDS}",
+    "dup_ok": f"1 - n_distinct::DOUBLE / n_words <= {QF_MAX_DUP_RATIO}",
+    "top_ok": f"top_cnt::DOUBLE / n_words <= {QF_MAX_TOP_FRACTION}",
+}
+
+
 def dup_ratio_metrics(docs: DataFrame) -> DataFrame:
     """Per-doc (n_words, n_distinct, dup_word_ratio_q6) on LONG
-    arithmetic — the ONE kernel both the filter decision
-    (``text_quality_filter``) and the threshold sweep
-    (``text_quality_threshold_curve``) consume. The sizes must cast
-    to long BEFORE the ×1e6: int32 ``size()`` products wrap once a
-    document carries ≥2148 duplicated words (invisible on the short
-    synthetic docs, real on a crawl)."""
-    toks = F.split(F.col("text"), " ", -1)
+    arithmetic, as one narrow projection (no shuffle) — the
+    threshold sweep ``text_quality_threshold_curve`` reads it. Its
+    values equal :func:`doc_word_stats`' on every document with
+    text. The sizes must cast to long BEFORE the ×1e6: int32
+    ``size()`` products wrap once a document carries ≥2148
+    duplicated words (invisible on the short synthetic docs, real on
+    a crawl)."""
+    toks = words(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_words"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
-    ).withColumn(
-        "dup_word_ratio_q6",
-        F.expr("(n_words - n_distinct) * 1000000 div n_words"),
-    )
+    ).withColumn("dup_word_ratio_q6", F.expr(_DUP_RATIO_Q6))
 
 
 @register(
     "text_quality_filter",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id,
-             len(string_split(text, ' ')) AS n_words,
-             len(list_distinct(string_split(text, ' '))) AS n_distinct
-      FROM documents
-    ), w AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ), topw AS (
-      SELECT doc_id, MAX(cnt) AS top_cnt FROM (
-        SELECT doc_id, tok, COUNT(*) AS cnt FROM w GROUP BY 1, 2
-      ) GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           t.n_words,
+    WITH {_DOC_WORDS_SQL}
+    SELECT doc_id, n_words,
            -- reported ratios are all-integer (house _q6 recipe); the
-           -- keep DECISION stays the float comparison — a single IEEE
-           -- division is correctly rounded on both engines, and
-           -- pipeline_corpus_prep (frozen gate row) composes it
-           ((t.n_words - t.n_distinct) * 1000000) // t.n_words
-             AS dup_word_ratio_q6,
-           (topw.top_cnt * 1000000) // t.n_words AS top_word_fraction_q6,
-           (t.n_words >= {QF_MIN_WORDS}
-            AND 1 - t.n_distinct::DOUBLE / t.n_words <= {QF_MAX_DUP_RATIO}
-            AND topw.top_cnt::DOUBLE / t.n_words <= {QF_MAX_TOP_FRACTION})
-             AS keep
-    FROM t JOIN topw ON t.doc_id = topw.doc_id
+           -- keep DECISION stays the float comparison, and
+           -- pipeline_corpus_prep composes it
+           {_sql_div(_DUP_RATIO_Q6)} AS dup_word_ratio_q6,
+           {_sql_div(_TOP_FRACTION_Q6)} AS top_word_fraction_q6,
+           ({" AND ".join(_QF_RULES_SQL.values())}) AS keep
+    FROM doc_words
     """,
 )
 def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,65 +653,42 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage actually applies; metrics are emitted alongside the flag so
     threshold sweeps don't re-scan.
 
-    Plan: the narrow per-doc metrics (word count, distinct count) are
-    pure column expressions over the scan; only the top-word fraction
-    needs the word-count aggregation, reused from
-    :func:`text_repetition_stats`'s lineage shape. The final join is
-    doc_id-to-doc_id; at scale both sides are co-partitioned by the
-    same key so AQE plans a local join after one shuffle.
+    Plan: every metric comes from the one :func:`doc_word_stats`
+    aggregate (word count, distinct count and top-word count), so
+    there is no join: one word-count shuffle on (doc, word), then the
+    per-doc rollup.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    base = dup_ratio_metrics(docs)
-    topw = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("tok")
-        )
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(F.max("cnt").alias("top_cnt"))
-    )
-    return (
-        base.join(topw, "doc_id")
-        .select(
-            "doc_id",
-            "n_words",
-            "dup_word_ratio_q6",
-            F.expr("top_cnt * 1000000 div n_words").alias(
-                "top_word_fraction_q6"
-            ),
-            (
-                (F.col("n_words") >= QF_MIN_WORDS)
-                & (
-                    1 - F.col("n_distinct") / F.col("n_words")
-                    <= QF_MAX_DUP_RATIO
-                )
-                & (
-                    F.col("top_cnt") / F.col("n_words")
-                    <= QF_MAX_TOP_FRACTION
-                )
-            ).alias("keep"),
-        )
+    words_ok, dup_ok, top_ok = _qf_rules().values()
+    return doc_word_stats(docs).select(
+        "doc_id",
+        "n_words",
+        F.expr(_DUP_RATIO_Q6).alias("dup_word_ratio_q6"),
+        F.expr(_TOP_FRACTION_Q6).alias("top_word_fraction_q6"),
+        (words_ok & dup_ok & top_ok).alias("keep"),
     )
 
 
 CONTAM_NGRAM = 4
 CONTAM_BENCH_MOD = 97  # doc_id % 97 == 0 plays the held-out benchmark
 
+# Every document's distinct CONTAM_NGRAM-gram shingles ``sh(doc_id, s)``
+# and the benchmark slice's ``bench(bench_id, s)``; the Bloom rows'
+# oracles read the same CTEs.
+_CONTAM_SHINGLES_SQL = f"""base AS (
+      SELECT doc_id, {words_sql()} AS w FROM documents
+    ), sh AS (
+      SELECT doc_id, unnest(list_distinct({_word_ngrams_sql('w', CONTAM_NGRAM)})) AS s
+      FROM base
+    ), bench AS (
+      SELECT doc_id AS bench_id, s FROM sh WHERE doc_id % {CONTAM_BENCH_MOD} = 0
+    )"""
+
 
 @register(
     "text_contamination_ngram",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - {CONTAM_NGRAM - 1}, 0) + 1),
-               i -> array_to_string(w[i:i+{CONTAM_NGRAM - 1}], ' ')))) AS s
-      FROM base
-    ), bench AS (
-      SELECT doc_id AS bench_id, s FROM sh WHERE doc_id % {CONTAM_BENCH_MOD} = 0
-    )
+    WITH {_CONTAM_SHINGLES_SQL}
     SELECT t.doc_id,
            COUNT(DISTINCT b.bench_id) AS n_contaminated_refs,
            COUNT(DISTINCT t.s) AS n_shared_shingles
@@ -652,7 +715,7 @@ def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from almost_any_file_to_pandas_spark.operators.dedup import _word_ngrams
 
     docs = table_wide(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
+    toks = words(F.col("text"))
     sh = docs.select(
         "doc_id", F.explode(_word_ngrams(toks, CONTAM_NGRAM)).alias("s")
     )
@@ -701,10 +764,8 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_tfidf_topterms",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-    ), tf AS (
-      SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term
+    WITH tf AS (
+      SELECT doc_id, term, n AS tf FROM ({term_counts_sql('doc_id')})
     ), idf AS (
       SELECT term, COUNT(*) AS df FROM tf GROUP BY term
     ), n AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -741,10 +802,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     elsewhere carry no such risk (IEEE-exact).
     """
     docs = table_wide(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = term_counts(docs, "doc_id").withColumnRenamed("n", "tf")
     idf = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
     scored = (
@@ -844,11 +902,7 @@ VOCAB_TOP = 20
 @register(
     "text_vocab_topk",
     oracle=f"""
-    WITH tok AS (
-      SELECT unnest(string_split(text, ' ')) AS term FROM documents
-    ), counts AS (
-      SELECT term, COUNT(*) AS n FROM tok GROUP BY term
-    ), ranked AS (
+    WITH counts AS ({term_counts_sql()}), ranked AS (
       SELECT term, n, row_number() OVER (ORDER BY n DESC, term ASC) AS rnk
       FROM counts
     )
@@ -863,13 +917,7 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a TakeOrdered-style limit, never a global sort of the corpus.
     Deterministic tie-break on the term."""
     docs = table_wide(spark, sf_dir, "documents")
-    counts = (
-        docs.select(
-            F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-        )
-        .groupBy("term")
-        .agg(F.count("*").alias("n"))
-    )
+    counts = term_counts(docs)
     # orderBy+limit plans as TakeOrderedAndProject — per-partition
     # heaps + a k-row merge, never a single-partition sort of the
     # vocabulary. The rank window then runs over k rows only.
@@ -897,11 +945,8 @@ RARE_TOKEN_MAX_COUNT = 2  # corpus count at or below which a token is "rare"
     "text_unigram_freq_score",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS term
-      FROM documents
-    ), freq AS (
-      SELECT term, COUNT(*) AS n FROM toks GROUP BY term
-    ), scored AS (
+      SELECT doc_id, unnest({words_sql()}) AS term FROM documents
+    ), freq AS ({term_counts_sql()}), scored AS (
       SELECT t.doc_id,
              COUNT(*) AS n_tokens,
              SUM(f.n) AS sum_n,
@@ -936,10 +981,8 @@ def text_unigram_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders of magnitude — Zipf keeps it sublinear in corpus size.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-    )
-    freq = toks.groupBy("term").agg(F.count("*").alias("n"))
+    toks = docs.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
+    freq = term_counts(docs)
     return (
         toks.join(freq, "term")
         .groupBy("doc_id")
@@ -970,12 +1013,9 @@ BPE_MERGE_TOP_K = 30
     "text_bpe_merge_candidates",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      SELECT {words_sql()} AS w FROM documents
     ), bigrams AS (
-      SELECT unnest(list_transform(
-               range(1, greatest(len(w) - 1, 0) + 1),
-               i -> w[i] || ' ' || w[i+1])) AS pair
-      FROM toks
+      SELECT unnest({_word_ngrams_sql('w', 2)}) AS pair FROM toks
     )
     SELECT pair, CAST(COUNT(*) AS BIGINT) AS n_occurrences
     FROM bigrams
@@ -996,20 +1036,9 @@ def text_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     first.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    # Project the token array ONCE, then zip it against its own
-    # 1-shifted slice: an indexed-lambda element_at(toks, i+2) form
-    # re-evaluates the split per element (interpreted HOFs do no
-    # common-subexpression reuse across lambda invocations — measured
-    # 6.4s vs 0.6s at sf0.1), while zip_with walks both slices once.
-    with_toks = docs.select(F.split(F.col("text"), " ", -1).alias("toks"))
-    n = F.size(F.col("toks"))
-    bigram = F.zip_with(
-        F.slice(F.col("toks"), 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(F.col("toks"), 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
+    with_toks = docs.select(words(F.col("text")).alias("toks"))
     return (
-        with_toks.select(F.explode(bigram).alias("pair"))
+        with_toks.select(F.explode(_bigrams(F.col("toks"))).alias("pair"))
         .groupBy("pair")
         .agg(F.count("*").cast("bigint").alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), F.asc("pair"))
@@ -1064,19 +1093,9 @@ def text_stratified_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_lang_confusion_matrix",
     oracle=f"""
-    WITH scored AS (
-      SELECT doc_id, lang,
-        {_lang_score_sql('en')} AS score_en,
-        {_lang_score_sql('de')} AS score_de,
-        {_lang_score_sql('fr')} AS score_fr,
-        {_lang_score_sql('es')} AS score_es
-      FROM documents
-    ), pred AS (
-      SELECT lang AS labeled_lang, {_LANG_CASE_SQL} AS predicted_lang
-      FROM scored
-    ), cells AS (
-      SELECT labeled_lang, predicted_lang, COUNT(*) AS n_docs
-      FROM pred GROUP BY labeled_lang, predicted_lang
+    WITH {_LANG_PRED_SQL}, cells AS (
+      SELECT lang AS labeled_lang, predicted_lang, COUNT(*) AS n_docs
+      FROM lang_pred GROUP BY lang, predicted_lang
     )
     SELECT labeled_lang, predicted_lang, n_docs,
            -- all-integer row share (house _q6 recipe, HUGEINT-widened)
@@ -1151,23 +1170,16 @@ def bpe_train(spark: SparkSession, docs: DataFrame, iters: int) -> DataFrame:
     """The trainer over any (…, text) frame — unit tests pin the
     textbook 'low low lower' merge sequence."""
     vocab = (
-        docs.select(F.explode(F.split(F.col("text"), " ", -1)).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count("*").alias("n"))
-        .select(F.split(F.col("w"), "").alias("syms"), "n")
+        term_counts(docs)
+        .filter(F.col("term") != "")
+        .select(F.split(F.col("term"), "").alias("syms"), "n")
     )
+    # class (d): feeds the first iteration's argmax collect
     vocab = vocab.localCheckpoint()
     merges = []
     for it in range(1, iters + 1):
-        m = F.size(F.col("syms"))
-        pair = F.zip_with(
-            F.slice(F.col("syms"), 1, F.greatest(m - 1, F.lit(0))),
-            F.slice(F.col("syms"), 2, F.greatest(m - 1, F.lit(0))),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
         top = (
-            vocab.select(F.explode(pair).alias("pair"), "n")
+            vocab.select(F.explode(_bigrams(F.col("syms"))).alias("pair"), "n")
             .groupBy("pair")
             .agg(F.sum("n").alias("n_occurrences"))
             .orderBy(F.desc("n_occurrences"), F.asc("pair"))
@@ -1198,7 +1210,7 @@ def bpe_train(spark: SparkSession, docs: DataFrame, iters: int) -> DataFrame:
                 ).otherwise(F.concat(acc, F.array(x))),
             ).alias("syms"),
             "n",
-        ).localCheckpoint()
+        ).localCheckpoint()  # class (c): truncates the loop's lineage
     return spark.createDataFrame(
         merges,
         "iteration int, left string, right string, "
@@ -1270,9 +1282,7 @@ def text_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bpe_train_floor",
     oracle=f"""
     WITH words AS (
-      SELECT w, COUNT(*) AS n FROM (
-        SELECT unnest(string_split(text, ' ')) AS w FROM documents
-      ) WHERE len(w) > 0 GROUP BY w
+      SELECT term AS w, n FROM ({term_counts_sql()}) WHERE len(term) > 0
     ), pairs AS (
       SELECT unnest(list_transform(
                range(1, greatest(len(w) - 1, 0) + 1),
@@ -1346,18 +1356,12 @@ def text_bpe_train_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BIGRAM_Q = 1_000_000_000  # exact integer quantization of c2/c1 ratios
 
-
-@register(
-    "text_bigram_lm_score",
-    oracle=f"""
+# text_bigram_lm_score's oracle; the LM perplexity filter's reads it.
+_BIGRAM_LM_SQL = f"""
     WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      SELECT doc_id, {words_sql()} AS w FROM documents
     ), doc_bigrams AS (
-      SELECT doc_id,
-             unnest(list_transform(
-               range(1, greatest(len(w) - 1, 0) + 1),
-               i -> w[i] || ' ' || w[i+1])) AS pair
-      FROM toks
+      SELECT doc_id, unnest({_word_ngrams_sql('w', 2)}) AS pair FROM toks
     ), bigram_counts AS (
       SELECT pair, COUNT(*) AS c2 FROM doc_bigrams GROUP BY pair
     ), unigram_counts AS (
@@ -1373,8 +1377,10 @@ BIGRAM_Q = 1_000_000_000  # exact integer quantization of c2/c1 ratios
     JOIN bigram_counts b USING (pair)
     JOIN unigram_counts u ON split_part(d.pair, ' ', 1) = u.w1
     GROUP BY d.doc_id
-    """,
-)
+    """
+
+
+@register("text_bigram_lm_score", oracle=_BIGRAM_LM_SQL)
 def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM fluency score — the conditional sibling of
     ``text_unigram_freq_score``: per document, the mean corpus
@@ -1404,17 +1410,10 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts back → one per-doc rollup. The tfidf plan shape.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    with_toks = docs.select(
-        "doc_id", F.split(F.col("text"), " ", -1).alias("toks")
-    )
-    n = F.size(F.col("toks"))
-    bigram = F.zip_with(
-        F.slice(F.col("toks"), 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(F.col("toks"), 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
+    with_toks = docs.select("doc_id", words(F.col("text")).alias("toks"))
+    # class (b): both count tables and the per-doc join read it
     doc_bigrams = with_toks.select(
-        "doc_id", F.explode(bigram).alias("pair")
+        "doc_id", F.explode(_bigrams(F.col("toks"))).alias("pair")
     ).localCheckpoint(eager=True)
     bigram_counts = doc_bigrams.groupBy("pair").agg(
         F.count("*").alias("c2")
@@ -1559,13 +1558,11 @@ def text_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_ngram_novelty",
-    oracle="""
+    oracle=f"""
     WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      SELECT doc_id, {words_sql()} AS w FROM documents
     ), sh AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' ')))) AS shingle
+      SELECT doc_id, unnest(list_distinct({_word_ngrams_sql('w')})) AS shingle
       FROM base
     ), dfc AS (
       SELECT doc_id, shingle,
@@ -1604,7 +1601,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
+    toks = words(F.col("text"))
     sh = docs.select(
         "doc_id", F.explode(_word_ngrams(toks, 3)).alias("shingle")
     )
@@ -1624,9 +1621,9 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_mass_concentration",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
-      SELECT source, len(string_split(text, ' ')) AS n_tokens
+      SELECT source, len({words_sql()}) AS n_tokens
       FROM documents
     ), hist AS (
       SELECT source, n_tokens, COUNT(*) AS c,
@@ -1684,7 +1681,7 @@ def text_token_mass_concentration(
 
     scored = docs.select(
         "source",
-        F.size(F.split(F.col("text"), " ", -1)).alias("n_tokens"),
+        F.size(words(F.col("text"))).alias("n_tokens"),
     )
     hist = scored.groupBy("source", "n_tokens").agg(
         F.count("*").alias("c"),
@@ -1796,31 +1793,11 @@ def text_cross_lang_contamination(
 @register(
     "text_lm_perplexity_filter",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), doc_bigrams AS (
-      SELECT doc_id,
-             unnest(list_transform(
-               range(1, greatest(len(w) - 1, 0) + 1),
-               i -> w[i] || ' ' || w[i+1])) AS pair
-      FROM toks
-    ), bigram_counts AS (
-      SELECT pair, COUNT(*) AS c2 FROM doc_bigrams GROUP BY pair
-    ), unigram_counts AS (
-      SELECT w1, COUNT(*) AS c1 FROM (
-        SELECT split_part(pair, ' ', 1) AS w1 FROM doc_bigrams
-      ) GROUP BY w1
-    ), scores AS (
-      SELECT d.doc_id,
-             CAST(SUM((CAST(b.c2 AS HUGEINT) * {BIGRAM_Q}) // u.c1)
-                  // COUNT(*) AS BIGINT) AS score
-      FROM doc_bigrams d
-      JOIN bigram_counts b USING (pair)
-      JOIN unigram_counts u ON split_part(d.pair, ' ', 1) = u.w1
-      GROUP BY d.doc_id
+    WITH scores AS (
+      SELECT doc_id, mean_cond_prob_q9 AS score FROM ({_BIGRAM_LM_SQL})
     ), labelled AS (
       SELECT s.score, doc.lang,
-             len(string_split(doc.text, ' ')) AS n_tokens
+             len({words_sql('doc.text')}) AS n_tokens
       FROM scores s JOIN documents doc USING (doc_id)
     ), med AS (
       SELECT lang,
@@ -1870,8 +1847,9 @@ def text_lm_perplexity_filter(
     docs = table_wide(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split(F.col("text"), " ", -1)).alias("n_tokens"),
+        F.size(words(F.col("text"))).alias("n_tokens"),
     )
+    # class (b): the median and the census both read it
     labelled = scores.join(docs, "doc_id").localCheckpoint(eager=True)
     levels = labelled.groupBy("lang", "score").agg(
         F.count("*").alias("c")
@@ -1921,17 +1899,11 @@ def text_lm_perplexity_filter(
 
 @register(
     "text_source_token_tvd",
-    oracle="""
-    WITH tok AS (
-      SELECT source, unnest(string_split(text, ' ')) AS term
-      FROM documents
-    ), st AS (
-      SELECT source, term, COUNT(*) AS n
-      FROM tok GROUP BY source, term
-    ), ct AS (
-      SELECT term, COUNT(*) AS m FROM tok GROUP BY term
+    oracle=f"""
+    WITH st AS ({term_counts_sql('source')}), ct AS (
+      SELECT term, n AS m FROM ({term_counts_sql()})
     ), corpus AS (
-      SELECT COUNT(*) AS mm FROM tok
+      SELECT CAST(SUM(m) AS BIGINT) AS mm FROM ct
     ), ns AS (
       SELECT source, CAST(SUM(n) AS BIGINT) AS n_tokens,
              CAST(COUNT(*) AS BIGINT) AS n_distinct_terms
@@ -1967,22 +1939,18 @@ def text_source_token_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRESENT in each source (a term-keyed join of the per-source and
     corpus count frames), never the |sources|×|vocab| cross product.
 
-    Plan: one corpus tokenize pass feeds both count frames (the
-    (source, term) shuffle subsumes the term shuffle's work), the
-    per-source totals broadcast, the corpus total is a one-row cross
-    join. At 100 TB everything wide is keyed on term or (source,
-    term); the per-term products n_i·M / m_i·N_s are widened to
-    DECIMAL(38,0)/HUGEINT BEFORE the sum (n_i·M passes int64 once
-    M ~ 1e10 tokens), as are the coverage term and the final ratio.
+    Plan: two :func:`term_counts` frames, per (source, term) and per
+    term; the per-source totals broadcast, and the corpus total (the
+    sum of the term counts) is a one-row cross join. At 100 TB
+    everything wide is keyed on term or (source, term); the per-term
+    products n_i·M / m_i·N_s are widened to DECIMAL(38,0)/HUGEINT
+    BEFORE the sum (n_i·M passes int64 once M ~ 1e10 tokens), as are
+    the coverage term and the final ratio.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source",
-        F.explode(F.split(F.col("text"), " ", -1)).alias("term"),
-    )
-    st = tok.groupBy("source", "term").agg(F.count("*").alias("n"))
-    ct = tok.groupBy("term").agg(F.count("*").alias("m"))
-    corpus = tok.agg(F.count("*").alias("mm"))
+    st = term_counts(docs, "source")
+    ct = term_counts(docs).withColumnRenamed("n", "m")
+    corpus = ct.agg(F.sum("m").alias("mm"))
     ns = st.groupBy("source").agg(
         F.sum("n").alias("n_tokens"),
         F.count("*").cast("long").alias("n_distinct_terms"),
@@ -2023,13 +1991,12 @@ def text_source_token_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(len(string_split(text, ' '))) AS BIGINT)
-             AS n_words,
+           CAST(SUM(len({words_sql()})) AS BIGINT) AS n_words,
            CAST(SUM(len(regexp_extract_all(lower(text), '{BPE_PATTERN}')))
              AS BIGINT) AS n_bpe_tokens,
            CAST(SUM(len(regexp_extract_all(lower(text), '{BPE_PATTERN}')))
                 * 1000000
-                // SUM(len(string_split(text, ' '))) AS BIGINT)
+                // SUM(len({words_sql()})) AS BIGINT)
              AS fertility_q6
     FROM documents
     GROUP BY lang
@@ -2052,7 +2019,7 @@ def text_bpe_fertility_by_lang(
     token by the split convention.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.col("text"), " ", -1)).cast("long")
+    toks = F.size(words(F.col("text"))).cast("long")
     bpe = F.size(
         F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_PATTERN), 0)
     ).cast("long")
@@ -2079,7 +2046,7 @@ def text_bpe_fertility_by_lang(
     "text_contamination_span_extent",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      SELECT doc_id, {words_sql()} AS w FROM documents
     ), pos_sh AS (
       -- positioned (NOT deduped) shingles: position matters here
       SELECT doc_id, u.i AS pos, array_to_string(w[u.i:u.i+{CONTAM_NGRAM - 1}], ' ') AS s
@@ -2119,7 +2086,7 @@ def text_contamination_span_extent(
     and joins BROADCAST; one doc-keyed aggregate emits the extents.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
+    toks = words(F.col("text"))
     n_sh = F.size(toks) - (CONTAM_NGRAM - 1)
     pos_sh = docs.select(
         "doc_id",
@@ -2162,11 +2129,7 @@ VOCAB_COVERAGE_SIZES = (8, 16, 32)
 @register(
     "text_vocab_coverage_curve",
     oracle=f"""
-    WITH tok AS (
-      SELECT unnest(string_split(text, ' ')) AS term FROM documents
-    ), counts AS (
-      SELECT term, COUNT(*) AS n FROM tok GROUP BY term
-    ), ranked AS (
+    WITH counts AS ({term_counts_sql()}), ranked AS (
       SELECT n, row_number() OVER (ORDER BY n DESC, term ASC) AS rnk
       FROM counts
     ), tot AS (
@@ -2217,13 +2180,7 @@ def text_vocab_coverage_curve(
     from pyspark.sql import Window as W
 
     docs = table_wide(spark, sf_dir, "documents")
-    counts = (
-        docs.select(
-            F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-        )
-        .groupBy("term")
-        .agg(F.count("*").alias("n"))
-    )
+    counts = term_counts(docs)
     top = counts.orderBy(F.desc("n"), F.asc("term")).limit(
         max(VOCAB_COVERAGE_SIZES)
     )
@@ -2267,27 +2224,11 @@ def text_vocab_coverage_curve(
 @register(
     "text_filter_ablation_census",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id,
-             len(string_split(text, ' ')) AS n_words,
-             len(list_distinct(string_split(text, ' '))) AS n_distinct
-      FROM documents
-    ), w AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ), topw AS (
-      SELECT doc_id, MAX(cnt) AS top_cnt FROM (
-        SELECT doc_id, tok, COUNT(*) AS cnt FROM w GROUP BY 1, 2
-      ) GROUP BY doc_id
-    ), flags AS (
-      SELECT t.doc_id, t.n_words,
-             CASE WHEN t.n_words >= {QF_MIN_WORDS} THEN 1 ELSE 0 END
-               AS words_ok,
-             CASE WHEN 1 - t.n_distinct::DOUBLE / t.n_words
-                       <= {QF_MAX_DUP_RATIO} THEN 1 ELSE 0 END AS dup_ok,
-             CASE WHEN topw.top_cnt::DOUBLE / t.n_words
-                       <= {QF_MAX_TOP_FRACTION} THEN 1 ELSE 0 END
-               AS top_ok
-      FROM t JOIN topw ON t.doc_id = topw.doc_id
+    WITH {_DOC_WORDS_SQL}, flags AS (
+      SELECT n_words, {", ".join(
+          f"CASE WHEN {rule} THEN 1 ELSE 0 END AS {flag}"
+          for flag, rule in _QF_RULES_SQL.items())}
+      FROM doc_words
     )
     SELECT CAST(words_ok AS BIGINT) AS words_ok,
            CAST(dup_ok AS BIGINT) AS dup_ok,
@@ -2311,50 +2252,19 @@ def text_filter_ablation_census(
     table a removal decision actually needs (a doc failing two rules
     is not saved by relaxing one).
 
-    100 TB shape: ONE token-census pass (the same doc-keyed top-token
-    aggregate the filter row runs), flags as narrow JVM projections,
-    then an 8-cell groupBy. No per-rule rescan — the whole ablation
-    matrix costs exactly one filter evaluation.
+    100 TB shape: ONE token-census pass (the same
+    :func:`doc_word_stats` aggregate the filter row runs), flags as
+    narrow JVM projections, then an 8-cell groupBy. No per-rule
+    rescan — the whole ablation matrix costs exactly one filter
+    evaluation.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
-    t = docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_words"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
-    )
-    w = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("tok")
-    )
-    topw = (
-        w.groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(F.max("cnt").alias("top_cnt"))
-    )
-    flags = t.join(topw, "doc_id").select(
+    flags = doc_word_stats(docs).select(
         "n_words",
-        F.when(F.col("n_words") >= QF_MIN_WORDS, 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("words_ok"),
-        F.when(
-            1
-            - F.col("n_distinct").cast("double") / F.col("n_words")
-            <= QF_MAX_DUP_RATIO,
-            1,
-        )
-        .otherwise(0)
-        .cast("long")
-        .alias("dup_ok"),
-        F.when(
-            F.col("top_cnt").cast("double") / F.col("n_words")
-            <= QF_MAX_TOP_FRACTION,
-            1,
-        )
-        .otherwise(0)
-        .cast("long")
-        .alias("top_ok"),
+        *(
+            F.when(rule, 1).otherwise(0).cast("long").alias(flag)
+            for flag, rule in _qf_rules().items()
+        ),
     )
     return flags.groupBy("words_ok", "dup_ok", "top_ok").agg(
         F.count("*").alias("n_docs"),
@@ -2448,10 +2358,7 @@ HASH_AUDIT_BUCKETS = 1024  # the DSIR/feature-hash bucket space
 @register(
     "text_hash_collision_census",
     oracle=f"""
-    WITH vocab AS (
-      SELECT DISTINCT unnest(string_split(text, ' ')) AS term
-      FROM documents
-    ), b AS (
+    WITH vocab AS (SELECT term FROM ({term_counts_sql()})), b AS (
       SELECT (('0x' || substr(md5(term), 1, 8))::BIGINT
               % {HASH_AUDIT_BUCKETS}) AS bucket,
              COUNT(*) AS load
@@ -2488,9 +2395,7 @@ def text_hash_collision_census(
     is broadcast-scale.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    vocab = docs.select(
-        F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-    ).distinct()
+    vocab = term_counts(docs).select("term")
     b = vocab.groupBy(
         (
             F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast(
@@ -2524,10 +2429,7 @@ LIFT_TOP_PAIRS = 25
 @register(
     "text_term_lift_topk",
     oracle=f"""
-    WITH dt AS (
-      SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS term
-      FROM documents
-    ), df AS (
+    WITH dt AS (SELECT doc_id, term FROM ({term_counts_sql('doc_id')})), df AS (
       SELECT term, COUNT(*) AS df FROM dt GROUP BY term
     ), vocab AS (
       SELECT term, df FROM df
@@ -2579,11 +2481,9 @@ def text_term_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤C({LIFT_VOCAB_TOP},2)-row pair table.
     """
     docs = table_wide(spark, sf_dir, "documents")
-    dt = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-    ).distinct()
-    # the (doc, term) distinct stream feeds the df aggregate AND the
-    # vocab-filtered pair join — materialize once
+    # class (b): the (doc, term) distinct stream feeds the df aggregate
+    # AND the vocab-filtered pair join — materialize once
+    dt = term_counts(docs, "doc_id").select("doc_id", "term")
     dt = dt.localCheckpoint(eager=True)
     df_t = dt.groupBy("term").agg(F.count("*").alias("df"))
     vocab = df_t.orderBy(F.desc("df"), F.asc("term")).limit(
@@ -2630,15 +2530,8 @@ def text_term_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_langid_eval_census",
     oracle=f"""
-    WITH scored AS (
-      SELECT doc_id, lang,
-        {_lang_score_sql('en')} AS score_en,
-        {_lang_score_sql('de')} AS score_de,
-        {_lang_score_sql('fr')} AS score_fr,
-        {_lang_score_sql('es')} AS score_es
-      FROM documents
-    ), pred AS (
-      SELECT lang AS labeled, {_LANG_CASE_SQL} AS predicted FROM scored
+    WITH {_LANG_PRED_SQL}, pred AS (
+      SELECT lang AS labeled, predicted_lang AS predicted FROM lang_pred
     ), by_true AS (
       SELECT labeled, COUNT(*) AS n_labeled,
              SUM(CASE WHEN predicted = labeled THEN 1 ELSE 0 END)
@@ -2685,8 +2578,8 @@ def text_langid_eval_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("labeled_lang").alias("labeled"),
         F.col("predicted_lang").alias("predicted"),
     )
-    # the marker scan is the expensive projection and BOTH censuses
-    # read it — materialize once
+    # class (b): the marker scan is the expensive projection and BOTH
+    # censuses read it — materialize once
     pred = pred.localCheckpoint(eager=True)
     by_true = pred.groupBy("labeled").agg(
         F.count("*").alias("n_labeled"),
@@ -2732,11 +2625,9 @@ HEAPS_CHECKPOINTS = 10  # corpus-prefix deciles the growth curve samples
     "text_heaps_vocab_growth",
     oracle=f"""
     WITH nn AS (SELECT MAX(doc_id) + 1 AS n FROM documents),
-    tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS term
-      FROM documents
-    ), firsts AS (
-      SELECT term, MIN(doc_id) AS first_doc FROM tok GROUP BY term
+    firsts AS (
+      SELECT term, MIN(doc_id) AS first_doc
+      FROM ({term_counts_sql('doc_id')}) GROUP BY term
     ), vocab_by_decile AS (
       SELECT (first_doc * {HEAPS_CHECKPOINTS}) // nn.n AS decile,
              COUNT(*) AS new_terms
@@ -2744,7 +2635,7 @@ HEAPS_CHECKPOINTS = 10  # corpus-prefix deciles the growth curve samples
     ), docstats AS (
       SELECT (doc_id * {HEAPS_CHECKPOINTS}) // nn.n AS decile,
              COUNT(*) AS n_docs,
-             SUM(len(string_split(text, ' '))) AS n_tokens
+             SUM(len({words_sql()})) AS n_tokens
       FROM documents, nn GROUP BY 1
     ), spine AS (
       SELECT unnest(range({HEAPS_CHECKPOINTS})) AS checkpoint
@@ -2791,10 +2682,11 @@ def text_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table_wide(spark, sf_dir, "documents")
     n = docs.agg((F.max("doc_id") + 1).alias("n"))
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ", -1)).alias("term")
+    firsts = (
+        term_counts(docs, "doc_id")
+        .groupBy("term")
+        .agg(F.min("doc_id").alias("first_doc"))
     )
-    firsts = tok.groupBy("term").agg(F.min("doc_id").alias("first_doc"))
     vocab_dec = (
         firsts.crossJoin(F.broadcast(n))
         .selectExpr(
@@ -2806,7 +2698,7 @@ def text_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_dec = (
         docs.select(
             "doc_id",
-            F.size(F.split(F.col("text"), " ", -1)).alias("n_tokens"),
+            F.size(words(F.col("text"))).alias("n_tokens"),
         )
         .crossJoin(F.broadcast(n))
         .selectExpr(
@@ -2880,7 +2772,7 @@ _RAKE_STOP_SQL = (
     WITH toks AS (
       -- index-join ordinality (DuckDB lacks WITH ORDINALITY)
       SELECT doc_id, u.ord, l[u.ord] AS term
-      FROM (SELECT doc_id, string_split(text, ' ') AS l
+      FROM (SELECT doc_id, {words_sql()} AS l
             FROM documents),
       LATERAL (SELECT unnest(range(1, len(l) + 1)) AS ord) u
     ), marked AS (
@@ -2955,9 +2847,7 @@ def text_rake_keyphrases_topk(
     docs = table_wide(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col("text"), " ", -1)).alias(
-            "ord", "term"
-        ),
+        F.posexplode(words(F.col("text"))).alias("ord", "term"),
     )
     is_stop = F.col("term").isin(*STOPWORDS) | (F.col("term") == "")
     marked = toks.select(
@@ -2969,6 +2859,7 @@ def text_rake_keyphrases_topk(
         .alias("run_id"),
         is_stop.alias("is_stop"),
     )
+    # class (b): phrase lengths, word scores and phrases all read it
     content = marked.filter(~F.col("is_stop")).localCheckpoint(
         eager=True
     )
@@ -3018,15 +2909,8 @@ def text_rake_keyphrases_topk(
 @register(
     "text_langid_agreement_kappa",
     oracle=f"""
-    WITH scored AS (
-      SELECT lang AS a1,
-        {_lang_score_sql('en')} AS score_en,
-        {_lang_score_sql('de')} AS score_de,
-        {_lang_score_sql('fr')} AS score_fr,
-        {_lang_score_sql('es')} AS score_es
-      FROM documents
-    ), pairs AS (
-      SELECT a1, {_LANG_CASE_SQL} AS a2 FROM scored
+    WITH {_LANG_PRED_SQL}, pairs AS (
+      SELECT lang AS a1, predicted_lang AS a2 FROM lang_pred
     ), cells AS (
       SELECT a1, a2, COUNT(*) AS c FROM pairs GROUP BY a1, a2
     ), marg AS (
@@ -3048,11 +2932,10 @@ def text_rake_keyphrases_topk(
            CAST(agree * 1000000 // n AS BIGINT) AS po_q6,
            CAST(pe_num * 1000000 // (CAST(n AS HUGEINT) * n)
                 AS BIGINT) AS pe_q6,
-           -- kappa = (N·agree − pe_num) / (N² − pe_num); DuckDB //
-           -- floors, matched by the CASE on the Spark side. A
-           -- degenerate corpus where p_e = 1 (e.g. one doc whose
-           -- label equals the prediction) leaves kappa undefined —
-           -- NULL, not a div-by-zero
+           -- kappa = (N·agree − pe_num) / (N² − pe_num), truncated
+           -- toward zero like Spark's div. A degenerate corpus where
+           -- p_e = 1 (e.g. one doc whose label equals the prediction)
+           -- leaves kappa undefined — NULL, not a div-by-zero
            CAST(CASE WHEN CAST(n AS HUGEINT) * n - pe_num > 0 THEN
                 (CAST(n AS HUGEINT) * agree - pe_num) * 1000000
                 // (CAST(n AS HUGEINT) * n - pe_num) END AS BIGINT)
@@ -3069,39 +2952,18 @@ def text_langid_agreement_kappa(
     upstream labeler vs the engine's heuristic; swap in any two label
     columns). κ = (p_o − p_e)/(1 − p_e) over the confusion matrix,
     stated in exact integers: κ_q6 = (N·agree − Σ_k row_k·col_k)·1e6
-    floor-div (N² − Σ_k row_k·col_k) — numerator can be NEGATIVE
-    (worse-than-chance), so the Spark side restates DuckDB's floor
-    `//` with the sign-safe CASE; widened DECIMAL(38,0)/HUGEINT keeps
-    N²·1e6 exact at any SF.
+    div (N² − Σ_k row_k·col_k). The numerator can be NEGATIVE
+    (worse-than-chance); Spark ``div`` and DuckDB ``//`` both truncate
+    it toward zero. Widened DECIMAL(38,0)/HUGEINT keeps N²·1e6 exact
+    at any SF.
 
     Scale shape: ONE corpus aggregate to the ≤|langs|² confusion
     cells; marginals, p_e and κ fold on that bounded frame."""
     docs = table_wide(spark, sf_dir, "documents")
-    lowered = F.lower(F.col("text"))
-    scores = {}
-    for lang, markers in _LANG_MARKERS.items():
-        total = None
-        for marker in markers:
-            term = _occurrences(lowered, marker)
-            total = term if total is None else (total + term)
-        scores[lang] = total
-    predicted = (
-        F.when(
-            (scores["en"] >= scores["de"])
-            & (scores["en"] >= scores["fr"])
-            & (scores["en"] >= scores["es"]),
-            "en",
-        )
-        .when(
-            (scores["de"] >= scores["fr"])
-            & (scores["de"] >= scores["es"]),
-            "de",
-        )
-        .when(scores["fr"] >= scores["es"], "fr")
-        .otherwise("es")
-    )
     cells = (
-        docs.select(F.col("lang").alias("a1"), predicted.alias("a2"))
+        docs.select(
+            F.col("lang").alias("a1"), lang_pred(F.col("text")).alias("a2")
+        )
         .groupBy("a1", "a2")
         .agg(F.count("*").alias("c"))
     )
@@ -3134,20 +2996,11 @@ def text_langid_agreement_kappa(
             "CAST(agree * 1000000 div n AS BIGINT) AS po_q6",
             "CAST(pe_num * 1000000"
             " div (CAST(n AS DECIMAL(38,0)) * n) AS BIGINT) AS pe_q6",
-            # sign-safe floor division (numerator may be negative);
             # p_e = 1 (degenerate) leaves kappa NULL, not div-by-zero
             "CAST(CASE"
-            " WHEN CAST(n AS DECIMAL(38,0)) * n - pe_num <= 0 THEN NULL"
-            " WHEN (CAST(n AS DECIMAL(38,0)) * agree - pe_num)"
-            " >= 0 OR ((CAST(n AS DECIMAL(38,0)) * agree - pe_num)"
-            "          * 1000000)"
-            "         % (CAST(n AS DECIMAL(38,0)) * n - pe_num) = 0"
-            " THEN ((CAST(n AS DECIMAL(38,0)) * agree - pe_num)"
-            "       * 1000000)"
+            " WHEN CAST(n AS DECIMAL(38,0)) * n - pe_num > 0"
+            " THEN (CAST(n AS DECIMAL(38,0)) * agree - pe_num) * 1000000"
             "      div (CAST(n AS DECIMAL(38,0)) * n - pe_num)"
-            " ELSE ((CAST(n AS DECIMAL(38,0)) * agree - pe_num)"
-            "       * 1000000)"
-            "      div (CAST(n AS DECIMAL(38,0)) * n - pe_num) - 1"
             " END AS BIGINT) AS kappa_q6",
         )
     )
@@ -3167,7 +3020,7 @@ def _raw_count_sql(expr: str, ch: str) -> str:
     oracle=f"""
     WITH per_doc AS (
       SELECT lang,
-             len(string_split(text, ' ')) AS words,
+             len({words_sql()}) AS words,
              GREATEST(1, {_raw_count_sql('text', '.')}
                          + {_raw_count_sql('text', '!')}
                          + {_raw_count_sql('text', '?')}) AS sents,
@@ -3184,8 +3037,8 @@ def _raw_count_sql(expr: str, ch: str) -> str:
     SELECT lang, COUNT(*) AS n_docs,
            CAST(MIN(flesch_q6) AS BIGINT) AS min_q6,
            CAST(MAX(flesch_q6) AS BIGINT) AS max_q6,
-           -- mean can be negative: DuckDB // floors natively; the
-           -- Spark side restates the floor with the sign-safe CASE
+           -- the mean can be negative; // truncates it toward zero,
+           -- as Spark's div does
            CAST(SUM(CAST(flesch_q6 AS HUGEINT)) // COUNT(*)
                 AS BIGINT) AS mean_q6
     FROM scored GROUP BY lang
@@ -3199,12 +3052,13 @@ def text_readability_flesch_census(
     84.6·syllables/word) with the standard cheap proxies: sentences =
     terminal-punctuation count (min 1), syllables = vowel-group count
     (``[aeiouy]+`` runs). All-integer: the two per-doc ratios are
-    non-negative integer divisions of q6-scaled constants (floor ==
-    truncate), the subtraction is exact, and the per-lang mean uses
-    the widened floor division (sums can be negative for long-winded
-    corpora). One narrow projection + one ≤|langs|-cell aggregate."""
+    non-negative integer divisions of q6-scaled constants, the
+    subtraction is exact, and the per-lang mean is a widened integer
+    division that truncates toward zero on both engines (sums can be
+    negative for long-winded corpora). One narrow projection + one
+    ≤|langs|-cell aggregate."""
     docs = table_wide(spark, sf_dir, "documents")
-    words = F.size(F.split(F.col("text"), " ", -1))
+    n_words = F.size(words(F.col("text")))
     raw = lambda ch: (  # noqa: E731 — local character counter
         F.length(F.col("text"))
         - F.length(F.replace(F.col("text"), F.lit(ch), F.lit("")))
@@ -3219,7 +3073,7 @@ def text_readability_flesch_census(
     # the q6 ratio expressions reference named columns
     scored = docs.select(
         "lang",
-        words.cast("long").alias("words"),
+        n_words.cast("long").alias("words"),
         sents.cast("long").alias("sents"),
         sylls.cast("long").alias("sylls"),
     ).select(
@@ -3235,23 +3089,16 @@ def text_readability_flesch_census(
         F.min("flesch_q6").cast("long").alias("min_q6"),
         F.max("flesch_q6").cast("long").alias("max_q6"),
         F.expr(
-            "CAST(CASE WHEN SUM(CAST(flesch_q6 AS DECIMAL(38,0))) >= 0"
-            " OR SUM(CAST(flesch_q6 AS DECIMAL(38,0))) % COUNT(*) = 0"
-            " THEN SUM(CAST(flesch_q6 AS DECIMAL(38,0))) div COUNT(*)"
-            " ELSE SUM(CAST(flesch_q6 AS DECIMAL(38,0))) div COUNT(*)"
-            " - 1 END AS BIGINT)"
+            "CAST(SUM(CAST(flesch_q6 AS DECIMAL(38,0))) div COUNT(*)"
+            " AS BIGINT)"
         ).alias("mean_q6"),
     )
 
 
 @register(
     "text_yule_k_census",
-    oracle="""
-    WITH tok AS (
-      SELECT unnest(string_split(text, ' ')) AS term FROM documents
-    ), freqs AS (
-      SELECT term, CAST(COUNT(*) AS BIGINT) AS f FROM tok GROUP BY term
-    ), agg AS (
+    oracle=f"""
+    WITH freqs AS (SELECT term, n AS f FROM ({term_counts_sql()})), agg AS (
       SELECT CAST(SUM(f) AS HUGEINT) AS n_tok,
              CAST(COUNT(*) AS BIGINT) AS n_types,
              CAST(SUM(CAST(f AS HUGEINT) * f) AS HUGEINT) AS s2,
@@ -3290,13 +3137,7 @@ def text_yule_k_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     into single partials before the shuffle — the classic Zipf skew
     is absorbed by the combiner, not the reducer."""
     docs = table(spark, sf_dir, "documents")
-    freqs = (
-        docs.select(
-            F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-        )
-        .groupBy("term")
-        .agg(F.count("*").alias("f"))
-    )
+    freqs = term_counts(docs).withColumnRenamed("n", "f")
     agg = freqs.agg(
         F.sum(F.expr("CAST(f AS DECIMAL(38,0))")).alias("n_tok"),
         F.count("*").cast("long").alias("n_types"),
@@ -3333,7 +3174,7 @@ PPLX_KEEP_THRESHOLD_Q6 = -7_000_000  # keep docs with avg logprob > −7 nats
     "text_bigram_perplexity_filter",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      SELECT doc_id, {words_sql()} AS w FROM documents
     ), bigrams AS (
       SELECT doc_id,
              unnest(list_transform(
@@ -3369,14 +3210,11 @@ PPLX_KEEP_THRESHOLD_Q6 = -7_000_000  # keep docs with avg logprob > −7 nats
     )
     SELECT doc_id, n_bigrams, logprob_sum_q6,
            CAST(CASE WHEN n_bigrams = 0 THEN 0
-                WHEN logprob_sum_q6 >= 0
-                  THEN logprob_sum_q6 // n_bigrams
-                ELSE -((-logprob_sum_q6) // n_bigrams)
-                END AS BIGINT) AS avg_logprob_q6,
-           (n_bigrams > 0 AND (CASE WHEN logprob_sum_q6 >= 0
-                THEN logprob_sum_q6 // n_bigrams
-                ELSE -((-logprob_sum_q6) // n_bigrams) END)
-             > {PPLX_KEEP_THRESHOLD_Q6}) AS keep
+                ELSE logprob_sum_q6 // n_bigrams END AS BIGINT)
+             AS avg_logprob_q6,
+           (n_bigrams > 0
+            AND logprob_sum_q6 // n_bigrams > {PPLX_KEEP_THRESHOLD_Q6})
+             AS keep
     FROM per_doc
     """,
 )
@@ -3395,9 +3233,9 @@ def text_bigram_perplexity_filter(
 
     Determinism: each occurrence's log-prob quantizes to integer
     micro-nats BEFORE the per-doc fold (ln on exact-integer inputs,
-    one FLOOR), per-doc sums are exact integers, and the average uses
-    the symmetric-truncation CASE (log-probs are negative). Docs with
-    fewer than two tokens score 0 / drop.
+    one FLOOR), per-doc sums are exact integers, and the average
+    (negative: log-probs are) truncates toward zero on both engines.
+    Docs with fewer than two tokens score 0 / drop.
 
     Scale: one tokenize pass; bigram and context counts are map-side-
     combined vocab²-/vocab-keyed aggregates (Zipf heads absorbed by
@@ -3405,9 +3243,7 @@ def text_bigram_perplexity_filter(
     on their natural keys — the model join any LM-filter pipeline
     pays — and the vocab scalar broadcasts."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.split(F.col("text"), " ", -1).alias("w")
-    )
+    toks = docs.select("doc_id", words(F.col("text")).alias("w"))
     occ = toks.select(
         "doc_id",
         F.explode(
@@ -3453,21 +3289,16 @@ def text_bigram_perplexity_filter(
             .alias("logprob_sum_q6"),
         )
     )
-    avg_expr = (
-        "CASE WHEN logprob_sum_q6 >= 0"
-        " THEN logprob_sum_q6 div n_bigrams"
-        " ELSE -((-logprob_sum_q6) div n_bigrams) END"
-    )
     return per_doc.select(
         "doc_id",
         "n_bigrams",
         "logprob_sum_q6",
         F.expr(
-            f"CAST(CASE WHEN n_bigrams = 0 THEN 0 ELSE {avg_expr} END"
-            " AS BIGINT)"
+            "CAST(CASE WHEN n_bigrams = 0 THEN 0"
+            " ELSE logprob_sum_q6 div n_bigrams END AS BIGINT)"
         ).alias("avg_logprob_q6"),
         F.expr(
-            f"n_bigrams > 0 AND ({avg_expr})"
+            "n_bigrams > 0 AND logprob_sum_q6 div n_bigrams"
             f" > {PPLX_KEEP_THRESHOLD_Q6}"
         ).alias("keep"),
     )
@@ -3479,11 +3310,7 @@ ZIPF_TOP_K = 1000
 @register(
     "text_zipf_slope_fit",
     oracle=f"""
-    WITH tok AS (
-      SELECT unnest(string_split(text, ' ')) AS term FROM documents
-    ), freqs AS (
-      SELECT term, CAST(COUNT(*) AS BIGINT) AS f FROM tok GROUP BY term
-    ), ranked AS (
+    WITH freqs AS (SELECT term, n AS f FROM ({term_counts_sql()})), ranked AS (
       SELECT f, ROW_NUMBER() OVER (ORDER BY f DESC, term) AS r
       FROM freqs
     ), pts AS (
@@ -3501,11 +3328,8 @@ ZIPF_TOP_K = 1000
     )
     SELECT CAST(k AS BIGINT) AS n_terms,
            CAST(CASE WHEN k < 2 OR k * sxx - sx * sx = 0 THEN 0
-                WHEN (k * sxy - sx * sy) >= 0
-                  THEN (k * sxy - sx * sy) * 1000000
-                       // (k * sxx - sx * sx)
-                ELSE -((-(k * sxy - sx * sy)) * 1000000
-                       // (k * sxx - sx * sx))
+                ELSE (k * sxy - sx * sy) * 1000000
+                     // (k * sxx - sx * sx)
                 END AS BIGINT) AS slope_q6,
            CAST(CASE WHEN k < 2 OR k * sxx - sx * sx = 0
                        OR k * syy - sy * sy = 0 THEN 0
@@ -3525,9 +3349,9 @@ def text_zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each (ln r, ln f) point quantizes to integer micro-nats BEFORE
     the OLS folds (ln on exact integers), so Σx/Σy/Σxy/Σx²/Σy² are
-    exact HUGEINT/DECIMAL(38,0) sums; the slope uses the
-    symmetric-truncation CASE (it is negative on natural text) and
-    R²'s operands are squares (non-negative). Degenerate vocab
+    exact HUGEINT/DECIMAL(38,0) sums; the slope (negative on natural
+    text) truncates toward zero on both engines and R²'s operands are
+    squares (non-negative). Degenerate vocab
     (k<2, zero variance) guards to 0.
 
     Scale: one tokenize pass + the vocab groupBy (map-side
@@ -3536,13 +3360,7 @@ def text_zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = table(spark, sf_dir, "documents")
-    freqs = (
-        docs.select(
-            F.explode(F.split(F.col("text"), " ", -1)).alias("term")
-        )
-        .groupBy("term")
-        .agg(F.count("*").alias("f"))
-    )
+    freqs = term_counts(docs).withColumnRenamed("n", "f")
     ranked = freqs.withColumn(
         "r",
         F.row_number().over(W.orderBy(F.desc("f"), F.asc("term"))),
@@ -3570,8 +3388,7 @@ def text_zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k").alias("n_terms"),
         F.expr(
             f"CAST(CASE WHEN k < 2 OR {den} = 0 THEN 0"
-            f" WHEN {num} >= 0 THEN ({num} * 1000000) div {den}"
-            f" ELSE -((-{num} * 1000000) div {den}) END AS BIGINT)"
+            f" ELSE ({num} * 1000000) div {den} END AS BIGINT)"
         ).alias("slope_q6"),
         F.expr(
             f"CAST(CASE WHEN k < 2 OR {den} = 0 OR {deny} = 0 THEN 0"

@@ -58,6 +58,14 @@ ORACLES: Dict[str, str] = {}
 # than return a wrong sum. Spark's floor(double) is not used because it
 # saturates silently under ANSI: floor(1e20d) is 2^63 - 1 and
 # floor(NaN) is 0.
+#
+# Integer division truncates toward zero on both engines: Spark `div`
+# (on BIGINT and on DECIMAL(38,0) alike) and DuckDB `//` on integer
+# operands (BIGINT, HUGEINT) both give -7 div 2 = -3. A twin pair
+# therefore needs no sign CASE around a quotient that can be negative.
+# The contract holds for integer operands only: DuckDB's `//` on a
+# DECIMAL goes through DOUBLE, which is why micro_cents floors in
+# exact DECIMAL instead.
 
 
 def micro_units(col: Column) -> Column:

@@ -151,6 +151,26 @@ BATTERY = [
     "events_ab_quantile_effects",
     "events_ab_power_mde",
     "events_ab_srm_check",
+    # the text family's shared kernels on no/one document: the
+    # repetition fold, the term counts, the bigram list, the n-gram
+    # twin and the lang-ID scorer
+    "text_repetition_stats",
+    "text_quality_filter",
+    "text_filter_ablation_census",
+    "text_tfidf_topterms",
+    "text_vocab_topk",
+    "text_vocab_coverage_curve",
+    "text_unigram_freq_score",
+    "text_source_token_tvd",
+    "text_term_lift_topk",
+    "text_hash_collision_census",
+    "text_bigram_lm_score",
+    "text_lm_perplexity_filter",
+    "text_bpe_merge_candidates",
+    "text_contamination_ngram",
+    "text_ngram_novelty",
+    "text_lang_id",
+    "text_lang_confusion_matrix",
 ]
 
 # Rows-only repaired queries (no oracle): crash-freedom is the pin.

@@ -203,6 +203,26 @@ def test_vector_search_matches_oracle(gate_compare, name):
     gate_compare("/root/testdata/sf0.001", name)
 
 
+def _text_family_names():
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    module = "almost_any_file_to_pandas_spark.operators.textstats"
+    return sorted(
+        n
+        for n, fn in plans.QUERIES.items()
+        if fn.__wrapped__.__module__ == module and n in plans.ORACLES
+    )
+
+
+@pytest.mark.parametrize("name", _text_family_names())
+def test_text_family_matches_oracle(gate_compare, name):
+    """Every oracle-paired text-family query (all on the shared
+    tokenizer, term-count, repetition, n-gram and lang-ID kernels and
+    their DuckDB twins) matches its oracle on the sf0.001 corpus."""
+    gate_compare("/root/testdata/sf0.001", name)
+
+
 def test_pairs_within_buckets_expansion(spark):
     from almost_any_file_to_pandas_spark.operators.dedup import (
         _pairs_within_buckets,

@@ -494,44 +494,6 @@ def test_t_closeness_monotone_in_threshold(spark):
         assert r.n_groups_exceeding <= r.n_groups_total
 
 
-def test_term_lift_hand_corpus(spark, tmp_path):
-    """3 docs: 'a b', 'a b', 'a c'. df(a)=3, df(b)=2, df(c)=1, N=3.
-    lift(a,b) = 2*3e6/(3*2) = 1e6; lift(a,c) = 1*3e6/(3*1) = 1e6;
-    (b,c) never co-occur -> absent."""
-    spark.createDataFrame(
-        [(0, "a b", "s"), (1, "a b", "s"), (2, "a c", "s")],
-        "doc_id long, text string, source string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    qs = _queries()
-    rows = {
-        (r.term_a, r.term_b): r
-        for r in qs["text_term_lift_topk"](spark, str(tmp_path)).collect()
-    }
-    assert set(rows) == {("a", "b"), ("a", "c")}
-    assert rows[("a", "b")].n_ab == 2
-    assert rows[("a", "b")].lift_q6 == 1_000_000
-    assert rows[("a", "c")].lift_q6 == 1_000_000
-
-
-def test_langid_eval_census_consistency(spark):
-    """The eval census must tie out against the per-doc lang-id rows:
-    supports sum to the corpus, F1 = 2c/(L+P) exactly, and the
-    synthetic corpus's labeled langs all appear."""
-    qs = _queries()
-    rows = qs["text_langid_eval_census"](spark, SF_DIR).collect()
-    pairs = qs["text_lang_id"](spark, SF_DIR).collect()
-    assert sum(r.n_labeled for r in rows) == len(pairs)
-    assert sum(r.n_correct for r in rows) == sum(
-        1 for p in pairs if p.predicted_lang == p.labeled_lang
-    )
-    for r in rows:
-        assert 0 <= r.recall_q6 <= 1_000_000
-        denom = r.n_labeled + r.n_predicted
-        assert r.f1_q6 == 2 * r.n_correct * 1_000_000 // denom
-
-
 def test_knn_loo_accuracy_bounds_and_panel_size(spark):
     from almost_any_file_to_pandas_spark.operators.similarity import (
         LOO_N_PROBES,

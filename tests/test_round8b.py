@@ -1,6 +1,6 @@
 """Round-8 second-session operator tests: the small-files compaction
-advisor (greedy start-offset binning), the Heaps'-law vocabulary
-growth curve, and the hash-randomized permutation test."""
+advisor (greedy start-offset binning) and the hash-randomized
+permutation test."""
 
 from __future__ import annotations
 
@@ -78,36 +78,6 @@ def test_compaction_plan_testdata_invariants(spark):
         per_src[r.source].append(r.out_file)
     for src, bins in per_src.items():
         assert sorted(bins) == list(range(len(bins))), src
-
-
-def test_heaps_growth_monotone_and_totals(spark):
-    """The growth curve must be monotone in docs/tokens/vocab, end at
-    the full corpus totals, and carry exactly HEAPS_CHECKPOINTS
-    rows."""
-    from almost_any_file_to_pandas_spark.operators.textstats import (
-        HEAPS_CHECKPOINTS,
-    )
-    from almost_any_file_to_pandas_spark.plans import table
-
-    qs = _queries()
-    rows = sorted(
-        qs["text_heaps_vocab_growth"](spark, SF_DIR).collect(),
-        key=lambda r: r.checkpoint,
-    )
-    assert len(rows) == HEAPS_CHECKPOINTS
-    for a, b in zip(rows, rows[1:]):
-        assert a.cum_docs <= b.cum_docs
-        assert a.cum_tokens <= b.cum_tokens
-        assert a.vocab_size <= b.vocab_size
-    docs = table(spark, SF_DIR, "documents").toPandas()
-    total_docs = len(docs)
-    total_tokens = int(docs.text.str.split(" ").str.len().sum())
-    vocab = len({t for s in docs.text for t in s.split(" ")})
-    last = rows[-1]
-    assert last.cum_docs == total_docs
-    assert last.cum_tokens == total_tokens
-    assert last.vocab_size == vocab
-    assert last.ttr_q6 == vocab * 1_000_000 // total_tokens
 
 
 @pytest.fixture()
@@ -593,37 +563,6 @@ def test_avro_many_unions_files_block_parallel(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="schema mismatch"):
         read_avro_many(spark, str(tmp_path / "*.avro"))
-
-
-def test_rake_hand_scores(spark, tmp_path):
-    """RAKE on a hand corpus: 'training and deep learning models of
-    deep learning' splits at the stopwords into three phrases with
-    exactly computable degree/frequency scores."""
-    text = "training and deep learning models of deep learning"
-    rows = [(0, text, "en", "s", len(text)), (1, text, "en", "s", len(text))]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    qs = _queries()
-    out = {
-        r.phrase: r
-        for r in qs["text_rake_keyphrases_topk"](
-            spark, str(tmp_path)
-        ).collect()
-    }
-    # per doc (x2 docs, global word stats double but ratios hold):
-    # training: freq 2, degree 2 -> 1e6
-    # deep/learning: freq 4, degree 10 -> 2.5e6 ; models: freq 2,
-    # degree 6 -> 3e6
-    assert out["training"].score_q6 == 1_000_000
-    assert out["deep learning"].score_q6 == 5_000_000
-    assert out["deep learning models"].score_q6 == 8_000_000
-    assert out["deep learning models"].n_words == 3
-    assert all(r.n_occ == 2 for r in out.values())
 
 
 def test_avro_sink_roundtrip_and_gate(spark, tmp_path):

@@ -272,8 +272,11 @@ def test_avro_sink_save_mode(spark, tmp_path):
 
 def test_permutation_test_sign_safe_division(spark, tmp_path):
     """events_permutation_test parity on a corpus with NEGATIVE values
-    (r8 ADVICE: Spark `div` truncates toward zero, DuckDB `//` floors
-    — the old plan silently assumed non-negative sums)."""
+    (r8 ADVICE: the plan must not assume non-negative sums). Spark
+    `div` and DuckDB `//` both truncate toward zero; these cohort sums
+    divide evenly, and
+    ``tests/test_textstats.py::test_negative_integer_division_matches_oracle``
+    pins a remainder."""
     import datetime
     import sys
 
@@ -665,59 +668,6 @@ def test_bootstrap_mean_ci_properties(spark):
     assert r1.n_orders > 0
 
 
-def test_kappa_hand_corpus(spark, tmp_path):
-    """Cohen's kappa pinned by hand on a 2×2 confusion matrix with a
-    NEGATIVE κ (worse-than-chance agreement) — the sign-safe floor
-    division must match DuckDB's // exactly."""
-    from almost_any_file_to_pandas_spark.plans import QUERIES
-
-    # annotator 2 (the marker classifier) will predict 'en' for docs
-    # full of english stopwords, 'de' for german ones. Build labels
-    # that mostly DISAGREE with the prediction.
-    en_text = "the of and to in is was he for it " * 5
-    de_text = "der die und in den von zu das mit sich " * 5
-    rows = (
-        [("en", en_text)] * 2 + [("de", en_text)] * 8   # pred en
-        + [("de", de_text)] * 2 + [("en", de_text)] * 8  # pred de
-    )
-    sf = tmp_path / "kap"
-    sf.mkdir()
-    spark.createDataFrame(
-        [(i, lang, t, "s") for i, (lang, t) in enumerate(rows)],
-        "doc_id bigint, lang string, text string, source string",
-    ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
-
-    r = QUERIES["text_langid_agreement_kappa"](spark, str(sf)).collect()[0]
-    # confusion: rows en: (pred en 2, pred de 8); de: (pred en 8, de 2)
-    # N=20, agree=4, pe_num = 10*10 + 10*10 = 200
-    # kappa = (20*4 - 200) / (400 - 200) = -120/200 = -0.6
-    assert (r.n_docs, r.n_agree) == (20, 4)
-    assert r.po_q6 == 200_000
-    assert r.pe_q6 == 500_000
-    assert r.kappa_q6 == -600_000
-
-
-def test_flesch_hand_corpus(spark, tmp_path):
-    """Flesch census pinned by hand: known word/sentence/syllable
-    counts give the exact q6 score through the integer ratio path."""
-    from almost_any_file_to_pandas_spark.plans import QUERIES
-
-    # "go now. stop it." → words=4 (split on ' ' → ['go','now.','stop',
-    # 'it.']), sentences=2, vowel groups: o, o, o, i = 4
-    text = "go now. stop it."
-    sf = tmp_path / "fle"
-    sf.mkdir()
-    spark.createDataFrame(
-        [(1, "en", text, "s")],
-        "doc_id bigint, lang string, text string, source string",
-    ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
-
-    r = QUERIES["text_readability_flesch_census"](spark, str(sf)).collect()[0]
-    expected = 206_835_000 - (1_015_000 * 4) // 2 - (84_600_000 * 4) // 4
-    assert r.n_docs == 1
-    assert r.min_q6 == r.max_q6 == r.mean_q6 == expected
-
-
 def test_hyperball_matches_exact_on_small_graph(spark):
     """One HyperBall round at lgK=14 on the sf0.01 coactivity graph
     (sf0.001's thresholded graph is empty): sparse-mode HLL is
@@ -767,23 +717,6 @@ def test_qte_hand_corpus(spark, tmp_path):
     assert got[25].control_cents == 25 and got[25].qte_cents == 0
     assert got[50].control_cents == 50 and got[50].qte_cents == 0
     assert got[75].control_cents == 75 and got[75].qte_cents == 10
-
-
-def test_kappa_degenerate_pe_one_yields_null(spark, tmp_path):
-    """A corpus where p_e = 1 (one doc, label == prediction) leaves
-    kappa UNDEFINED — the guard returns NULL instead of div-by-zero
-    (found by the degenerate-corpus sweep on the EMD twin)."""
-    from almost_any_file_to_pandas_spark.plans import QUERIES
-
-    sf = tmp_path / "kpe"
-    sf.mkdir()
-    spark.createDataFrame(
-        [(1, "en", "the of and to in is was he for it", "s")],
-        "doc_id bigint, lang string, text string, source string",
-    ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
-    r = QUERIES["text_langid_agreement_kappa"](spark, str(sf)).collect()[0]
-    assert (r.n_docs, r.n_agree, r.po_q6) == (1, 1, 1_000_000)
-    assert r.kappa_q6 is None
 
 
 def test_emd_empty_cohort_yields_null(spark, tmp_path):

@@ -1,7 +1,6 @@
 """Hand-corpus pins for the round-9 association/link-analysis batch
-(operators/association.py) and the Yule's K lexical-diversity census
-(textstats.py). Expected values are computed by hand in the
-docstrings.
+(operators/association.py). Expected values are computed by hand in
+the docstrings.
 """
 
 from __future__ import annotations
@@ -73,33 +72,6 @@ def test_hits_hand_corpus(spark, tmp_path):
     assert [
         (r.suppkey, r.authority_1, r.authority_2) for r in rows
     ] == [(22, 2, 5), (11, 1, 3)]
-
-
-def test_yule_k_hand_corpus(spark, tmp_path):
-    """Docs 'a a b' + 'a' → freqs a:3, b:1; N=4, V=2, Σf²=10,
-    Σf(f−1)=6. K·1e6 = (10−4)·1e10 // 16 = 3 750 000 000;
-    D·1e9 = 6·1e9 // 12 = 500 000 000."""
-    sf = tmp_path / "yule"
-    sf.mkdir()
-    spark.createDataFrame(
-        [("a a b",), ("a",)], "text string"
-    ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
-    r = QUERIES["text_yule_k_census"](spark, str(sf)).collect()[0]
-    assert r.n_tokens == 4 and r.n_types == 2
-    assert r.sum_freq_sq == 10
-    assert r.yule_k_q6 == 3_750_000_000
-    assert r.simpson_d_q9 == 500_000_000
-
-
-def test_yule_k_single_token_guard(spark, tmp_path):
-    sf = tmp_path / "yule1"
-    sf.mkdir()
-    spark.createDataFrame(
-        [("solo",)], "text string"
-    ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
-    r = QUERIES["text_yule_k_census"](spark, str(sf)).collect()[0]
-    assert r.n_tokens == 1 and r.n_types == 1
-    assert r.yule_k_q6 == 0 and r.simpson_d_q9 == 0
 
 
 def test_countsketch_hand_corpus(spark, tmp_path):
@@ -179,31 +151,6 @@ def test_holt_winters_requires_two_years(spark, tmp_path):
         ).count()
         == 0
     )
-
-
-def test_bigram_perplexity_hand_corpus(spark, tmp_path):
-    """Two docs 'a b' plus 'solo': the only bigram has c_bi=2,
-    c_ctx(a)=2, V=3 (solo joins the vocab) → P = 3/5, lp = ln3 − ln5
-    → −510826 micro-nats; single-token docs score 0 and drop."""
-    sf = tmp_path / "pplx"
-    sf.mkdir()
-    spark.createDataFrame(
-        [(0, "a b"), (1, "a b"), (2, "solo")],
-        "doc_id bigint, text string",
-    ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
-    rows = {
-        r.doc_id: r
-        for r in QUERIES["text_bigram_perplexity_filter"](
-            spark, str(sf)
-        ).collect()
-    }
-    assert rows[0].n_bigrams == 1
-    assert rows[0].logprob_sum_q6 == -510_826
-    assert rows[0].avg_logprob_q6 == -510_826
-    assert rows[0].keep is True
-    assert rows[1].logprob_sum_q6 == -510_826
-    assert rows[2].n_bigrams == 0
-    assert rows[2].avg_logprob_q6 == 0 and rows[2].keep is False
 
 
 def test_croston_hand_corpus(spark, tmp_path):
@@ -427,39 +374,6 @@ def test_markov_entropy_rate_hand_corpus(spark, tmp_path):
     assert r.branching_q6 == math.floor(
         math.exp(h / 1_000_000.0) * 1_000_000 + 0.5
     )
-
-
-def test_zipf_slope_hand_corpus(spark, tmp_path):
-    """Frequencies 12, 6, 4 = 12/r for ranks 1..3 — an exact Zipf
-    curve, so slope ≈ −1 and R² ≈ 1 on the q6 lattice; both values
-    recomputed independently from the same integer folds."""
-    import math
-
-    sf = tmp_path / "zipf"
-    sf.mkdir()
-    text = " ".join(["a"] * 12 + ["b"] * 6 + ["c"] * 4)
-    spark.createDataFrame(
-        [(0, text)], "doc_id bigint, text string"
-    ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
-    r = QUERIES["text_zipf_slope_fit"](spark, str(sf)).collect()[0]
-    assert r.n_terms == 3
-
-    def q(v):
-        return math.floor(math.log(v) * 1_000_000 + 0.5)
-
-    xs = [q(i) for i in (1, 2, 3)]
-    ys = [q(f) for f in (12, 6, 4)]
-    k = 3
-    sx, sy = sum(xs), sum(ys)
-    sxy = sum(a * b for a, b in zip(xs, ys))
-    sxx = sum(a * a for a in xs)
-    syy = sum(b * b for b in ys)
-    num, den, deny = k * sxy - sx * sy, k * sxx - sx * sx, k * syy - sy * sy
-    slope = -((-num * 1_000_000) // den) if num < 0 else (num * 1_000_000) // den
-    assert r.slope_q6 == slope
-    assert -1_000_100 < r.slope_q6 < -999_900  # ≈ −1
-    assert r.r2_q6 == (num * num * 1_000_000) // (den * deny)
-    assert r.r2_q6 >= 999_999  # ≈ 1 on the lattice
 
 
 def test_sprt_walk_hand_corpora(spark, tmp_path):
