@@ -25,7 +25,7 @@ from typing import Callable, Dict, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.session import apply_engine_conf
+from almost_any_file_to_pandas_spark.session import apply_engine_conf, split_bytes
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -494,17 +494,13 @@ def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df
 
 
-def _max_partition_bytes(spark: SparkSession) -> int:
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    return int("".join(ch for ch in raw if ch.isdigit()) or "134217728")
-
-
 def table_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """:func:`table` + the fan-out guard, decided by an O(1) driver
     ``stat`` of the parquet file instead of compiling the physical
     plan (``df.rdd`` costs a full plan compile per call — measurably
     ~0.3-0.5 s of driver time per query at bench scale). Estimated
-    split count = ``bytes / maxPartitionBytes``; below
+    split count = ``bytes / maxPartitionBytes`` (Spark's parsed value,
+    :func:`~almost_any_file_to_pandas_spark.session.split_bytes`); below
     ``defaultParallelism`` the scan is under-parallel (the local
     testdata shape) and gets one round-robin exchange. At 100 TB the
     estimate is ≫ cores and the guard is a no-op.
@@ -517,7 +513,7 @@ def table_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except OSError:
         return fan_out_scan(df, spark)
     target = spark.sparkContext.defaultParallelism
-    if size // _max_partition_bytes(spark) < target:
+    if size // split_bytes(spark)[0] < target:
         return df.repartition(target)
     return df
 

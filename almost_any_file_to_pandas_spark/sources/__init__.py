@@ -2,21 +2,41 @@
 
 Native Spark readers cover parquet/JSON/delimited text/ORC. Every
 source that decodes rows in Python hands them to Spark as Arrow
-through the helpers below: driver-decoded string grids (xlsx and the
-other workbook formats, SpreadsheetML, HTML) go through
-:func:`grid_frame`; range-parallel executor scans (SQLite, DBF) start
-from :func:`range_frame` and yield :func:`arrow_batch` batches from
-``mapInArrow``. The one Python DataSource left is the many-workbooks
-corpus reader (``excel.read_excel_many``). Pickle and PDF are
-driver-side bridges (pickle is an inherently single-blob format; PDF
-requires tabula-java, gated behind an import-try).
+through the helpers below, sized by one cut: the session's parsed
+``spark.sql.files.openCostInBytes`` (4 MB by default;
+:func:`~almost_any_file_to_pandas_spark.session.split_bytes`). That is
+Spark's own price for opening one more file, and a Python worker task
+pays a fixed floor of ~0.1 s before it decodes a row, so a SQLite or
+DBF file under the cut is decoded where it already is, on the driver,
+and a bigger one in executor tasks, which also bounds what the driver
+decodes of such a file. Workbook and HTML grids are parsed on the
+driver at any size.
+
+* :func:`arrow_frame` hands a driver-built Arrow batch over as
+  ``clamp(ceil(nbytes / cut), 1, defaultParallelism)`` partitions, rows
+  in order. Driver-decoded string grids (xlsx and the other workbook
+  formats, SpreadsheetML, HTML) go through :func:`grid_frame`.
+* :func:`decoded_frame` is the rule for range-addressable formats
+  (SQLite rowids, DBF records): each supplies ``decode(lo, hi) ->
+  RecordBatch``; at or under the cut the whole table is one driver
+  call, over it :func:`range_frame` feeds a ``mapInArrow`` scan that
+  decodes one range per task.
+
+The one Python DataSource left is the many-workbooks corpus reader
+(``excel.read_excel_many``). Pickle and PDF are driver-side bridges
+(pickle is an inherently single-blob format; PDF requires
+tabula-java, gated behind an import-try).
 """
 
 from __future__ import annotations
 
+from typing import Callable, Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from almost_any_file_to_pandas_spark.session import split_bytes
 
 # Upper bound on scan ranges per table: enough tasks to keep a cluster
 # busy without issuing thousands of probes against one small file. At
@@ -24,9 +44,26 @@ from pyspark.sql import types as T
 _MAX_RANGES = 64
 
 
+def _mb(nbytes: int) -> str:
+    return f"{nbytes / 2**20:.3g} MB"
+
+
+def arrow_frame(spark: SparkSession, batch) -> DataFrame:
+    """A driver-built ``pyarrow.RecordBatch`` as a DataFrame of
+    ``clamp(ceil(nbytes / openCostInBytes), 1, defaultParallelism)``
+    partitions. The hand-off slices the batch into
+    ``defaultParallelism`` pieces in order; the coalesce merges
+    neighbours, so rows stay in batch order. No Python worker runs."""
+    import pyarrow as pa
+
+    cut = split_bytes(spark)[1]
+    n = max(1, min(-(-batch.nbytes // cut), spark.sparkContext.defaultParallelism))
+    return spark.createDataFrame(pa.Table.from_batches([batch])).coalesce(n)
+
+
 def grid_frame(spark: SparkSession, grid: list[list[str]]) -> DataFrame:
     """A padded all-string grid as a DataFrame with columns ``c0..``,
-    handed over as one ``pyarrow.Table``: no per-row Python pickling,
+    handed over by :func:`arrow_frame`: no per-row Python pickling,
     rows stay in grid order across partitions. Zero width gives the
     empty, column-less frame."""
     import pyarrow as pa
@@ -34,13 +71,14 @@ def grid_frame(spark: SparkSession, grid: list[list[str]]) -> DataFrame:
     width = len(grid[0]) if grid else 0
     if width == 0:
         return spark.createDataFrame([], T.StructType([]))
-    return spark.createDataFrame(
-        pa.table(
+    return arrow_frame(
+        spark,
+        pa.record_batch(
             {
                 f"c{i}": pa.array([row[i] for row in grid], pa.string())
                 for i in range(width)
             }
-        )
+        ),
     )
 
 
@@ -64,6 +102,40 @@ def range_frame(spark: SparkSession, lo: int, hi: int) -> DataFrame:
     return spark.range(0, len(los), 1, len(los)).select(
         pick(los).alias("lo"), pick(his).alias("hi")
     )
+
+
+def decoded_frame(
+    spark: SparkSession,
+    nbytes: int,
+    lo: int,
+    hi: int,
+    decode: Callable,
+    schema: T.StructType,
+    unit: str,
+) -> tuple[DataFrame, str]:
+    """The table of a ``nbytes`` file whose rows ``decode(lo, hi)``
+    returns as one Arrow batch of ``schema`` for any inclusive range
+    of its ``unit`` addresses (``rowid``, ``record``), and the regime
+    that built it, for ``ParseResult.engine``.
+
+    At or under the cut (and for an empty range) ``decode(lo, hi)``
+    runs once on the driver and :func:`arrow_frame` hands the batch
+    over; over it each task of a :func:`range_frame` scan decodes its
+    ranges. ``decode`` then travels to executors by pickle."""
+    cut = split_bytes(spark)[1]
+    if hi < lo or nbytes <= cut:
+        regime = f"{_mb(nbytes)} ≤ {_mb(cut)}" if nbytes <= cut else "no rows"
+        return arrow_frame(spark, decode(lo, hi)), f"driver, {regime}"
+
+    def scan(batches: Iterator) -> Iterator:
+        for batch in batches:
+            for r_lo, r_hi in zip(
+                batch.column("lo").to_pylist(), batch.column("hi").to_pylist()
+            ):
+                yield decode(r_lo, r_hi)
+
+    df = range_frame(spark, lo, hi).mapInArrow(scan, schema)
+    return df, f"{unit}-range parallel, {_mb(nbytes)} > {_mb(cut)}"
 
 
 def arrow_batch(columns: list[list], schema: T.StructType):

@@ -4,12 +4,16 @@ legacy business exports still ship (extension beyond the reference,
 SURVEY.md §7; spiritually it is EXACTLY the reference's kind of
 format: one file, one table).
 
-Distributed by construction: DBF records are FIXED WIDTH, so the
-driver reads only the 32-byte header + field descriptors and every
-task locates its records by pure offset arithmetic
-(``header_size + i·record_size``) — the same rowid-range pattern as
-the SQLite arm (``sources.range_frame`` feeding ``mapInArrow``, one
-typed Arrow batch per range), with zero per-task catalog work.
+Decoded where the input is, by record ranges above the cut
+(``sources.decoded_frame``): DBF records are FIXED WIDTH, so the
+driver reads only the 32-byte header + field descriptors and any
+range of records sits at pure offset arithmetic
+(``header_size + i·record_size``). A file at or under the session's
+``spark.sql.files.openCostInBytes`` (4 MB by default) is a driver
+slurp: one ``_decode`` of every record, one typed Arrow batch, no
+Python worker. Over the cut it is the same rowid-range pattern as the
+SQLite arm (``sources.range_frame`` feeding ``mapInArrow``, one
+``_decode`` per range), with zero per-task catalog work.
 Deleted records (``*`` flag) are skipped per spec. Shared-filesystem
 requirement as with the other by-path arms.
 
@@ -22,15 +26,16 @@ whole table.
 
 from __future__ import annotations
 
+import functools
 import struct
 from pathlib import Path
-from typing import Iterator, List, Tuple, Union
+from typing import List, Tuple, Union
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
-from almost_any_file_to_pandas_spark.sources import arrow_batch, range_frame
+from almost_any_file_to_pandas_spark.sources import arrow_batch, decoded_frame
 
 _DBF_VERSIONS = {0x02, 0x03, 0x04, 0x05, 0x30, 0x31, 0x83, 0x8B}
 
@@ -121,6 +126,31 @@ def _convert(raw: bytes, f: _Field):
     return raw.decode("ascii", "replace").rstrip()
 
 
+def _decode(
+    path: str,
+    header_size: int,
+    record_size: int,
+    fields: List[_Field],
+    schema: T.StructType,
+    lo: int,
+    hi: int,
+):
+    """Records ``lo..hi`` (inclusive, deleted ones skipped) as one
+    typed Arrow batch; runs on the driver or in a range-scan task."""
+    cols: List[list] = [[] for _ in fields]
+    with open(path, "rb") as fh:
+        fh.seek(header_size + lo * record_size)
+        for _ in range(hi - lo + 1):
+            rec = fh.read(record_size)
+            if len(rec) < record_size:
+                break
+            if rec[0:1] == b"*":  # deleted record
+                continue
+            for col, f in zip(cols, fields):
+                col.append(_convert(rec[f.offset : f.offset + f.length], f))
+    return arrow_batch(cols, schema)
+
+
 def read_dbf(
     spark: SparkSession, path: Union[str, Path], **options
 ) -> List[ParseResult]:
@@ -148,40 +178,17 @@ def read_dbf(
         [T.StructField(f.name, _spark_type(f), True) for f in fields]
     )
     abspath = str(p.absolute())
-    field_specs = [
-        (f.name, f.ftype, f.length, f.decimals, f.offset)
-        for f in fields
-    ]
-
-    def scan(batches: Iterator) -> Iterator:
-        specs = [_Field(*s) for s in field_specs]
-        for batch in batches:
-            for lo, hi in zip(
-                batch.column("lo").to_pylist(), batch.column("hi").to_pylist()
-            ):
-                cols: List[list] = [[] for _ in specs]
-                with open(abspath, "rb") as fh:
-                    fh.seek(header_size + lo * record_size)
-                    for _ in range(hi - lo + 1):
-                        rec = fh.read(record_size)
-                        if len(rec) < record_size:
-                            break
-                        if rec[0:1] == b"*":  # deleted record
-                            continue
-                        for col, f in zip(cols, specs):
-                            raw = rec[f.offset : f.offset + f.length]
-                            col.append(_convert(raw, f))
-                yield arrow_batch(cols, schema)
-
-    if n_records:
-        df = range_frame(spark, 0, n_records - 1).mapInArrow(scan, schema)
-    else:
-        df = spark.createDataFrame([], schema)
+    decode = functools.partial(
+        _decode, abspath, header_size, record_size, fields, schema
+    )
+    df, regime = decoded_frame(
+        spark, p.stat().st_size, 0, n_records - 1, decode, schema, "record"
+    )
     return [
         ParseResult(
             data=df,
             sheet_name="DBF table content",
-            engine="dbf (stdlib, fixed-width record-range parallel)",
+            engine=f"dbf (stdlib, fixed-width; {regime})",
             file_path=abspath,
         )
     ]

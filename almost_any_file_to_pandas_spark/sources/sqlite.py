@@ -8,26 +8,31 @@ arm (S2/F3): enumerate members on the driver, fan out, never raise —
 wrong magic, zero user tables, or an unreadable file yield failed
 results.
 
-Spark design — distributed ROWID-RANGE scan, not a driver slurp:
+Spark design — decode where the input is, ROWID ranges above the cut
+(``sources.decoded_frame``):
 
 * the driver opens the file READ-ONLY (``mode=ro&immutable=1`` URI)
-  and reads only catalog metadata: ``sqlite_master`` table names,
+  and reads catalog metadata: ``sqlite_master`` table names,
   ``PRAGMA table_info`` column declarations, and per-table
-  ``MIN(rowid)/MAX(rowid)`` bounds — O(tables), never row data;
-* each table scan is ``mapInArrow`` over ``sources.range_frame``, a
-  ``spark.range`` of rowid ranges with one range per partition and no
-  repartition (so a scan is one stage): every task opens the SQLite
-  file itself, pulls only ``WHERE rowid BETWEEN lo AND hi`` and yields
-  one typed Arrow batch per range. SQLite's
-  rowid is the clustered btree key, so a range probe is a contiguous
-  btree walk, not a table scan per task. Like the Avro/driver-side
-  arms, executors re-open the path by name — a shared filesystem is
+  ``MIN(rowid)/MAX(rowid)`` bounds;
+* a file at or under the session's ``spark.sql.files.openCostInBytes``
+  (4 MB by default) is a driver slurp: each table is one
+  ``_decode`` call on the driver, one typed Arrow batch handed to the
+  JVM, and no Python worker starts;
+* over the cut each table scan is ``mapInArrow`` over
+  ``sources.range_frame``, a ``spark.range`` of rowid ranges with one
+  range per partition and no repartition (so a scan is one stage):
+  every task opens the SQLite file itself and runs the same
+  ``_decode`` on ``WHERE rowid BETWEEN lo AND hi``. SQLite's rowid is
+  the clustered btree key, so a range probe is a contiguous btree
+  walk, not a table scan per task. Like the Avro/driver-side arms,
+  executors re-open the path by name — a shared filesystem is
   required (document'd contract, sources/avro.py has the same one);
-* ``WITHOUT ROWID`` tables have no rowid to range over — those fall
-  back to a single-task scan (flagged in ``engine``), which is the
-  honest shape: SQLite files are single-writer local artifacts, and
-  a WITHOUT ROWID table large enough to need parallel scan should be
-  exported to a splittable format first.
+* ``WITHOUT ROWID`` tables have no rowid to range over — those are
+  one driver ``_decode`` at any size (flagged in ``engine``), which is
+  the honest shape: SQLite files are single-writer local artifacts,
+  and a WITHOUT ROWID table large enough to need parallel scan should
+  be exported to a splittable format first.
 
 Typing: SQLite columns are dynamically typed; we map each column's
 DECLARED affinity (sqlite.org/datatype3.html §3.1 rules) to a Spark
@@ -41,15 +46,20 @@ an int64 above 2**53 does not round it through float64.
 
 from __future__ import annotations
 
+import functools
 import sqlite3
 from pathlib import Path
-from typing import Iterator, List, Optional, Tuple, Union
+from typing import List, Optional, Tuple, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
-from almost_any_file_to_pandas_spark.sources import arrow_batch, range_frame
+from almost_any_file_to_pandas_spark.sources import (
+    arrow_batch,
+    arrow_frame,
+    decoded_frame,
+)
 
 SQLITE_MAGIC = b"SQLite format 3\x00"
 
@@ -154,49 +164,15 @@ def _select(tbl: str, src_names: List[str]) -> str:
     return f'SELECT {cols} FROM "{qt}"'
 
 
-def _scan_ranged(
-    spark: SparkSession,
-    path: str,
-    tbl: str,
-    schema: T.StructType,
-    src_names: List[str],
-    bounds: Tuple[int, int],
-) -> DataFrame:
-    query = _select(tbl, src_names) + " WHERE rowid BETWEEN ? AND ?"
-
-    def scan(batches: Iterator) -> Iterator:
-        for batch in batches:
-            for r_lo, r_hi in zip(
-                batch.column("lo").to_pylist(), batch.column("hi").to_pylist()
-            ):
-                con = _connect_ro(path)
-                try:
-                    rows = con.execute(query, (r_lo, r_hi)).fetchall()
-                finally:
-                    con.close()
-                yield _batch(rows, schema)
-
-    return range_frame(spark, *bounds).mapInArrow(scan, schema)
-
-
-def _scan_single(
-    spark: SparkSession,
-    path: str,
-    tbl: str,
-    schema: T.StructType,
-    src_names: List[str],
-) -> DataFrame:
-    """WITHOUT ROWID fallback: one driver-side read."""
-    import pyarrow as pa
-
+def _decode(path: str, query: str, schema: T.StructType, *bounds):
+    """The rows ``query`` selects (bound to ``bounds``) as one typed
+    Arrow batch; runs on the driver or in a range-scan task."""
     con = _connect_ro(path)
     try:
-        rows = con.execute(_select(tbl, src_names)).fetchall()
+        rows = con.execute(query, bounds).fetchall()
     finally:
         con.close()
-    return spark.createDataFrame(
-        pa.Table.from_batches([_batch(rows, schema)]), schema
-    )
+    return _batch(rows, schema)
 
 
 def read_sqlite(
@@ -238,27 +214,28 @@ def read_sqlite(
     if not tables:
         return _failed(spark, str(path))
 
+    nbytes = p.stat().st_size
     results: List[ParseResult] = []
     for tbl in tables:
         schema, src_names, bounds = plans[tbl]
         if not schema.fields:
             continue
+        query = _select(tbl, src_names)
         if bounds is None:
-            df = _scan_single(spark, abspath, tbl, schema, src_names)
-            engine = "sqlite3 (stdlib, single-task: WITHOUT ROWID)"
-        elif bounds[1] < bounds[0]:
-            df = spark.createDataFrame([], schema)
-            engine = "sqlite3 (stdlib)"
+            df = arrow_frame(spark, _decode(abspath, query, schema))
+            regime = "driver, WITHOUT ROWID"
         else:
-            df = _scan_ranged(
-                spark, abspath, tbl, schema, src_names, bounds
+            decode = functools.partial(
+                _decode, abspath, query + " WHERE rowid BETWEEN ? AND ?", schema
             )
-            engine = "sqlite3 (stdlib, rowid-range parallel)"
+            df, regime = decoded_frame(
+                spark, nbytes, *bounds, decode, schema, "rowid"
+            )
         results.append(
             ParseResult(
                 data=df,
                 sheet_name=tbl,
-                engine=engine,
+                engine=f"sqlite3 (stdlib; {regime})",
                 file_path=abspath,
             )
         )

@@ -12,7 +12,7 @@ from pathlib import Path
 import pytest
 
 from almost_any_file_to_pandas_spark.parse import parse
-from tests.conftest import EXPECTED, GRID, _write_minimal_xlsx
+from tests.conftest import EXPECTED, GRID, _write_minimal_xlsx, open_cost
 
 # the reference project's checkout, next to this repository's
 REFERENCE_DIR = Path(__file__).resolve().parents[2] / "reference"
@@ -1035,6 +1035,8 @@ def test_grid_row_order_across_partitions(spark, tmp_path, suffix):
         path.write_text(_xmlss_table(grid))
     else:
         path.write_text(_html_table(grid))
-    (res,) = parse(spark, path)
-    assert res.data.rdd.getNumPartitions() > 1
-    assert grid_of(res.data) == grid
+    # the grid is ~12 KB of Arrow: a 1 KB cut spreads it over every core
+    with open_cost(spark, 1024):
+        (res,) = parse(spark, path)
+        assert res.data.rdd.getNumPartitions() > 1
+        assert grid_of(res.data) == grid

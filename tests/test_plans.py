@@ -1785,3 +1785,21 @@ def test_no_module_binds_a_top_level_name_twice():
         if dups:
             twice[str(path.relative_to(package))] = dups
     assert not twice, twice
+
+
+def test_table_wide_reads_byte_size_suffixes(spark, tmp_path):
+    """``maxPartitionBytes=64m`` is 67,108,864 bytes, as Spark parses
+    it, so a table far under one split is under-parallel and fans out
+    to ``defaultParallelism`` partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from almost_any_file_to_pandas_spark.plans import table_wide
+    from tests.conftest import session_conf
+
+    pq.write_table(
+        pa.table({"doc_id": list(range(1000))}), tmp_path / "documents.parquet"
+    )
+    with session_conf(spark, "spark.sql.files.maxPartitionBytes", "64m"):
+        df = table_wide(spark, str(tmp_path), "documents")
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
