@@ -281,8 +281,9 @@ def parse(
             return read_npz(spark, p, **options)
         if extension == ".dbf":
             # extension beyond the reference (SURVEY.md §7): dBase
-            # fixed-width table — record-range parallel by offset
-            # arithmetic (see sources/dbf.py)
+            # fixed-width table — decoded on the driver at or under
+            # the cut, by record ranges in tasks above it
+            # (sources.decoded_frame; see sources/dbf.py)
             from almost_any_file_to_pandas_spark.sources.dbf import (
                 read_dbf,
             )
@@ -292,9 +293,10 @@ def parse(
             # extension beyond the reference (SURVEY.md §7): SQLite
             # container — every user table fans out as its own result
             # (the database sibling of the Excel sheet fan-out), each
-            # scanned in parallel by rowid range. '.db' is claimed by
-            # many formats; the magic probe inside read_sqlite turns
-            # non-SQLite payloads into failed answers.
+            # decoded on the driver at or under the cut and by rowid
+            # ranges in tasks above it (sources.decoded_frame). '.db'
+            # is claimed by many formats; the magic probe inside
+            # read_sqlite turns non-SQLite payloads into failed answers.
             from almost_any_file_to_pandas_spark.sources.sqlite import (
                 read_sqlite,
             )

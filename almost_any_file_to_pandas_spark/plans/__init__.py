@@ -25,7 +25,7 @@ from typing import Callable, Dict, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.session import apply_engine_conf, split_bytes
+from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -494,13 +494,18 @@ def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df
 
 
+def _max_partition_bytes(spark: SparkSession) -> int:
+    """Spark's own parsed ``spark.sql.files.maxPartitionBytes``, so
+    ``64m`` is 67,108,864."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
 def table_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """:func:`table` + the fan-out guard, decided by an O(1) driver
     ``stat`` of the parquet file instead of compiling the physical
     plan (``df.rdd`` costs a full plan compile per call — measurably
     ~0.3-0.5 s of driver time per query at bench scale). Estimated
-    split count = ``bytes / maxPartitionBytes`` (Spark's parsed value,
-    :func:`~almost_any_file_to_pandas_spark.session.split_bytes`); below
+    split count = ``bytes / maxPartitionBytes``; below
     ``defaultParallelism`` the scan is under-parallel (the local
     testdata shape) and gets one round-robin exchange. At 100 TB the
     estimate is ≫ cores and the guard is a no-op.
@@ -513,7 +518,7 @@ def table_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except OSError:
         return fan_out_scan(df, spark)
     target = spark.sparkContext.defaultParallelism
-    if size // split_bytes(spark)[0] < target:
+    if size // _max_partition_bytes(spark) < target:
         return df.repartition(target)
     return df
 

@@ -55,15 +55,6 @@ def get_spark(app_name: str = "almost_any_file_to_pandas_spark") -> SparkSession
     return spark
 
 
-def split_bytes(spark: SparkSession) -> tuple[int, int]:
-    """Spark's own parsed ``(spark.sql.files.maxPartitionBytes,
-    spark.sql.files.openCostInBytes)``: the most bytes one file split
-    holds, and the bytes Spark charges for opening one more file.
-    Read from the session's SQL conf, so ``64m`` is 67,108,864."""
-    conf = spark._jsparkSession.sessionState().conf()
-    return int(conf.filesMaxPartitionBytes()), int(conf.filesOpenCostInBytes())
-
-
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Set runtime-settable confs the engine's plans rely on.
 

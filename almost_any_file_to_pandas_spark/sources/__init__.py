@@ -2,15 +2,12 @@
 
 Native Spark readers cover parquet/JSON/delimited text/ORC. Every
 source that decodes rows in Python hands them to Spark as Arrow
-through the helpers below, sized by one cut: the session's parsed
-``spark.sql.files.openCostInBytes`` (4 MB by default;
-:func:`~almost_any_file_to_pandas_spark.session.split_bytes`). That is
-Spark's own price for opening one more file, and a Python worker task
-pays a fixed floor of ~0.1 s before it decodes a row, so a SQLite or
-DBF file under the cut is decoded where it already is, on the driver,
-and a bigger one in executor tasks, which also bounds what the driver
-decodes of such a file. Workbook and HTML grids are parsed on the
-driver at any size.
+through the helpers below, sized by one cut, :data:`DRIVER_DECODE_BYTES`.
+A Python worker task pays a fixed floor of ~0.1 s before it decodes a
+row, so a SQLite or DBF file at or under the cut is decoded where it
+already is, on the driver, and a bigger one in executor tasks, which
+also bounds what the driver decodes of such a file. Workbook and HTML
+grids are parsed on the driver at any size.
 
 * :func:`arrow_frame` hands a driver-built Arrow batch over as
   ``clamp(ceil(nbytes / cut), 1, defaultParallelism)`` partitions, rows
@@ -36,12 +33,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from almost_any_file_to_pandas_spark.session import split_bytes
-
 # Upper bound on scan ranges per table: enough tasks to keep a cluster
 # busy without issuing thousands of probes against one small file. At
 # local[32] this is one range per core.
 _MAX_RANGES = 64
+
+# Bytes of input a SQLite or DBF file may have and still be decoded
+# in one driver pass; also the bytes per partition of an Arrow
+# hand-off. Measured at local[4], parse plus a noop write of a
+# generated four-column table (median of 5): the driver pass wins
+# below ~1.5 MB (0.5 MB: 0.08 s vs 0.19 s for the range scan; 1 MB:
+# 0.12 s vs 0.18 s) and loses above it (4 MB: 0.36-0.44 s vs 0.21 s).
+# The cut sits under that crossover; more cores move it lower.
+DRIVER_DECODE_BYTES = 2**20
 
 
 def _mb(nbytes: int) -> str:
@@ -50,14 +54,14 @@ def _mb(nbytes: int) -> str:
 
 def arrow_frame(spark: SparkSession, batch) -> DataFrame:
     """A driver-built ``pyarrow.RecordBatch`` as a DataFrame of
-    ``clamp(ceil(nbytes / openCostInBytes), 1, defaultParallelism)``
+    ``clamp(ceil(nbytes / DRIVER_DECODE_BYTES), 1, defaultParallelism)``
     partitions. The hand-off slices the batch into
     ``defaultParallelism`` pieces in order; the coalesce merges
     neighbours, so rows stay in batch order. No Python worker runs."""
     import pyarrow as pa
 
-    cut = split_bytes(spark)[1]
-    n = max(1, min(-(-batch.nbytes // cut), spark.sparkContext.defaultParallelism))
+    n = -(-batch.nbytes // DRIVER_DECODE_BYTES)
+    n = max(1, min(n, spark.sparkContext.defaultParallelism))
     return spark.createDataFrame(pa.Table.from_batches([batch])).coalesce(n)
 
 
@@ -122,7 +126,7 @@ def decoded_frame(
     runs once on the driver and :func:`arrow_frame` hands the batch
     over; over it each task of a :func:`range_frame` scan decodes its
     ranges. ``decode`` then travels to executors by pickle."""
-    cut = split_bytes(spark)[1]
+    cut = DRIVER_DECODE_BYTES
     if hi < lo or nbytes <= cut:
         regime = f"{_mb(nbytes)} ≤ {_mb(cut)}" if nbytes <= cut else "no rows"
         return arrow_frame(spark, decode(lo, hi)), f"driver, {regime}"

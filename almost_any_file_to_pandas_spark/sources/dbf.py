@@ -8,12 +8,12 @@ Decoded where the input is, by record ranges above the cut
 (``sources.decoded_frame``): DBF records are FIXED WIDTH, so the
 driver reads only the 32-byte header + field descriptors and any
 range of records sits at pure offset arithmetic
-(``header_size + i·record_size``). A file at or under the session's
-``spark.sql.files.openCostInBytes`` (4 MB by default) is a driver
-slurp: one ``_decode`` of every record, one typed Arrow batch, no
-Python worker. Over the cut it is the same rowid-range pattern as the
-SQLite arm (``sources.range_frame`` feeding ``mapInArrow``, one
-``_decode`` per range), with zero per-task catalog work.
+(``header_size + i·record_size``). A file at or under
+``sources.DRIVER_DECODE_BYTES`` (1 MB) is a driver slurp: one
+``_decode`` of every record, one typed Arrow batch, no Python worker.
+Over the cut it is the same rowid-range pattern as the SQLite arm
+(``sources.range_frame`` feeding ``mapInArrow``, one ``_decode`` per
+range), with zero per-task catalog work.
 Deleted records (``*`` flag) are skipped per spec. Shared-filesystem
 requirement as with the other by-path arms.
 

@@ -15,10 +15,9 @@ Spark design — decode where the input is, ROWID ranges above the cut
   and reads catalog metadata: ``sqlite_master`` table names,
   ``PRAGMA table_info`` column declarations, and per-table
   ``MIN(rowid)/MAX(rowid)`` bounds;
-* a file at or under the session's ``spark.sql.files.openCostInBytes``
-  (4 MB by default) is a driver slurp: each table is one
-  ``_decode`` call on the driver, one typed Arrow batch handed to the
-  JVM, and no Python worker starts;
+* a file at or under ``sources.DRIVER_DECODE_BYTES`` (1 MB) is a
+  driver slurp: each table is one ``_decode`` call on the driver, one
+  typed Arrow batch handed to the JVM, and no Python worker starts;
 * over the cut each table scan is ``mapInArrow`` over
   ``sources.range_frame``, a ``spark.range`` of rowid ranges with one
   range per partition and no repartition (so a scan is one stage):
@@ -138,8 +137,11 @@ def _table_plan(
     ]
     schema = T.StructType(fields)
     try:
+        # one scalar subquery per bound: each is a btree seek, where
+        # MIN and MAX in one SELECT scan the whole table
         lo, hi = con.execute(
-            f'SELECT MIN(rowid), MAX(rowid) FROM "{qt}"'
+            f'SELECT (SELECT MIN(rowid) FROM "{qt}"),'
+            f' (SELECT MAX(rowid) FROM "{qt}")'
         ).fetchone()
     except sqlite3.OperationalError:
         return schema, src_names, None  # WITHOUT ROWID table
@@ -182,9 +184,12 @@ def read_sqlite(
 
     Never raises on format problems: wrong magic, no user tables, or
     a catalog read error each yield a single failed result (the S11 /
-    F3 contract the Excel arm follows for missing sheets).
+    F3 contract the Excel arm follows for missing sheets). A table
+    whose driver decode fails (corrupt or cut-off pages under an
+    intact catalog) is one failed result beside the healthy tables;
+    over the cut such a table fails when a Spark action scans it.
     """
-    from almost_any_file_to_pandas_spark.parse import _failed
+    from almost_any_file_to_pandas_spark.parse import _empty_df, _failed
 
     p = Path(path)
     try:
@@ -221,16 +226,29 @@ def read_sqlite(
         if not schema.fields:
             continue
         query = _select(tbl, src_names)
-        if bounds is None:
-            df = arrow_frame(spark, _decode(abspath, query, schema))
-            regime = "driver, WITHOUT ROWID"
-        else:
-            decode = functools.partial(
-                _decode, abspath, query + " WHERE rowid BETWEEN ? AND ?", schema
+        try:
+            if bounds is None:
+                df = arrow_frame(spark, _decode(abspath, query, schema))
+                regime = "driver, WITHOUT ROWID"
+            else:
+                decode = functools.partial(
+                    _decode, abspath, query + " WHERE rowid BETWEEN ? AND ?", schema
+                )
+                df, regime = decoded_frame(
+                    spark, nbytes, *bounds, decode, schema, "rowid"
+                )
+        except sqlite3.Error:
+            # a driver decode that hits corrupt pages fails this
+            # table only; the file's other tables still parse
+            results.append(
+                ParseResult(
+                    data=_empty_df(spark),
+                    sheet_name=tbl,
+                    engine="sqlite3 (stdlib; driver decode failed)",
+                    file_path=abspath,
+                ).mark_failed()
             )
-            df, regime = decoded_frame(
-                spark, nbytes, *bounds, decode, schema, "rowid"
-            )
+            continue
         results.append(
             ParseResult(
                 data=df,

@@ -13,7 +13,6 @@ import datetime
 import os
 import sys
 import zipfile
-from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -44,28 +43,6 @@ def assert_range_scan_plan(df, n_ranges: int) -> None:
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert df.rdd.getNumPartitions() == n_ranges
-
-
-@contextmanager
-def session_conf(spark, key: str, value):
-    """Run the block with the SQL conf ``key`` at ``value``, then
-    restore (or unset) it."""
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, str(value))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-def open_cost(spark, nbytes: int):
-    """``spark.sql.files.openCostInBytes`` at ``nbytes`` for a block.
-    Below a fixture's size this pins the sources' executor regime:
-    SQLite/DBF range scans and Arrow grids of several partitions."""
-    return session_conf(spark, "spark.sql.files.openCostInBytes", nbytes)
 
 
 @pytest.fixture(scope="session")

@@ -10,9 +10,10 @@ import struct
 
 import pytest
 
+from almost_any_file_to_pandas_spark import sources
 from almost_any_file_to_pandas_spark.parse import parse
 from almost_any_file_to_pandas_spark.sources.dbf import read_dbf
-from tests.conftest import assert_range_scan_plan, open_cost
+from tests.conftest import assert_range_scan_plan
 
 
 def _make_dbf(fields, records, deleted=()):
@@ -66,39 +67,41 @@ def typed_dbf(tmp_path):
     return str(path)
 
 
-def test_dbf_typing_and_deleted_skip(spark, typed_dbf):
-    with open_cost(spark, os.path.getsize(typed_dbf) - 1):
-        res = read_dbf(spark, typed_dbf)[0]
-        assert dict(res.data.dtypes) == {
-            "ID": "bigint",
-            "NAME": "string",
-            "PRICE": "double",
-            "ACTIVE": "boolean",
-            "BORN": "date",
-        }
-        rows = {r.ID: r for r in res.data.collect()}
-        assert sorted(rows) == [1, 2, 3]  # record 9 deleted
-        assert rows[1].NAME == "ada" and rows[1].PRICE == 12.50
-        assert rows[1].ACTIVE is True
-        assert str(rows[1].BORN) == "1999-01-31"
-        assert rows[2].PRICE is None and rows[2].BORN is None
-        assert rows[3].PRICE == -0.25
-        assert rows[3].ACTIVE is None  # '?' is neither true nor false
-        assert str(rows[3].BORN) == "2024-02-29"
-        assert res.parse_info == "OK"
-        assert "record-range parallel" in res.engine
+def test_dbf_typing_and_deleted_skip(spark, typed_dbf, monkeypatch):
+    monkeypatch.setattr(
+        sources, "DRIVER_DECODE_BYTES", os.path.getsize(typed_dbf) - 1
+    )
+    res = read_dbf(spark, typed_dbf)[0]
+    assert dict(res.data.dtypes) == {
+        "ID": "bigint",
+        "NAME": "string",
+        "PRICE": "double",
+        "ACTIVE": "boolean",
+        "BORN": "date",
+    }
+    rows = {r.ID: r for r in res.data.collect()}
+    assert sorted(rows) == [1, 2, 3]  # record 9 deleted
+    assert rows[1].NAME == "ada" and rows[1].PRICE == 12.50
+    assert rows[1].ACTIVE is True
+    assert str(rows[1].BORN) == "1999-01-31"
+    assert rows[2].PRICE is None and rows[2].BORN is None
+    assert rows[3].PRICE == -0.25
+    assert rows[3].ACTIVE is None  # '?' is neither true nor false
+    assert str(rows[3].BORN) == "2024-02-29"
+    assert res.parse_info == "OK"
+    assert "record-range parallel" in res.engine
 
 
-def test_dbf_many_records_all_ranges_covered(spark, tmp_path):
+def test_dbf_many_records_all_ranges_covered(spark, tmp_path, monkeypatch):
     fields = [("N", "N", 6, 0)]
     records = [[f"{i:6d}"] for i in range(500)]
     path = tmp_path / "big.dbf"
     path.write_bytes(_make_dbf(fields, records))
-    with open_cost(spark, path.stat().st_size - 1):
-        df = read_dbf(spark, str(path))[0].data
-        assert_range_scan_plan(df, min(64, spark.sparkContext.defaultParallelism))
-        got = sorted(r.N for r in df.collect())
-        assert got == list(range(500))
+    monkeypatch.setattr(sources, "DRIVER_DECODE_BYTES", path.stat().st_size - 1)
+    df = read_dbf(spark, str(path))[0].data
+    assert_range_scan_plan(df, min(64, spark.sparkContext.defaultParallelism))
+    got = sorted(r.N for r in df.collect())
+    assert got == list(range(500))
 
 
 def test_dbf_float_field_without_decimals_is_bigint(spark, tmp_path):

@@ -11,8 +11,9 @@ from pathlib import Path
 
 import pytest
 
+from almost_any_file_to_pandas_spark import sources
 from almost_any_file_to_pandas_spark.parse import parse
-from tests.conftest import EXPECTED, GRID, _write_minimal_xlsx, open_cost
+from tests.conftest import EXPECTED, GRID, _write_minimal_xlsx
 
 # the reference project's checkout, next to this repository's
 REFERENCE_DIR = Path(__file__).resolve().parents[2] / "reference"
@@ -1024,7 +1025,7 @@ def _xmlss_table(grid: list[list[str]]) -> str:
 
 
 @pytest.mark.parametrize("suffix", [".xlsx", ".xml", ".html"])
-def test_grid_row_order_across_partitions(spark, tmp_path, suffix):
+def test_grid_row_order_across_partitions(spark, tmp_path, suffix, monkeypatch):
     """A driver-parsed grid spans several partitions; collect() must
     still return document order, header row first."""
     grid = [["id", "word"]] + [[str(i), f"w{i}"] for i in range(999)]
@@ -1036,7 +1037,7 @@ def test_grid_row_order_across_partitions(spark, tmp_path, suffix):
     else:
         path.write_text(_html_table(grid))
     # the grid is ~12 KB of Arrow: a 1 KB cut spreads it over every core
-    with open_cost(spark, 1024):
-        (res,) = parse(spark, path)
-        assert res.data.rdd.getNumPartitions() > 1
-        assert grid_of(res.data) == grid
+    monkeypatch.setattr(sources, "DRIVER_DECODE_BYTES", 1024)
+    (res,) = parse(spark, path)
+    assert res.data.rdd.getNumPartitions() > 1
+    assert grid_of(res.data) == grid

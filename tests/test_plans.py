@@ -1795,11 +1795,18 @@ def test_table_wide_reads_byte_size_suffixes(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from almost_any_file_to_pandas_spark.plans import table_wide
-    from tests.conftest import session_conf
 
     pq.write_table(
         pa.table({"doc_id": list(range(1000))}), tmp_path / "documents.parquet"
     )
-    with session_conf(spark, "spark.sql.files.maxPartitionBytes", "64m"):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "64m")
+    try:
         df = table_wide(spark, str(tmp_path), "documents")
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

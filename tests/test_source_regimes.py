@@ -1,7 +1,7 @@
 """The two decode regimes of the SQLite and DBF sources
 (``sources.decoded_frame``): a file at or under
-``spark.sql.files.openCostInBytes`` decodes on the driver, a bigger one
-in range-scan tasks. Both must give the same tables; the driver one
+``sources.DRIVER_DECODE_BYTES`` decodes on the driver, a bigger one in
+range-scan tasks. Both must give the same tables; the driver one
 must start no Python worker and write as one file.
 """
 
@@ -12,10 +12,9 @@ import sqlite3
 
 import pytest
 
-from almost_any_file_to_pandas_spark import sinks
+from almost_any_file_to_pandas_spark import sinks, sources
 from almost_any_file_to_pandas_spark.sources.dbf import read_dbf
 from almost_any_file_to_pandas_spark.sources.sqlite import read_sqlite
-from tests.conftest import open_cost
 from tests.test_dbf_source import _make_dbf
 
 
@@ -30,10 +29,11 @@ def _tables(results) -> list:
     ]
 
 
-def _both_regimes(spark, read, path: str):
+def _both_regimes(spark, monkeypatch, read, path: str):
     """(driver tables, range tables, driver engines, range engines)."""
     driver = read(spark, path)
-    with open_cost(spark, os.path.getsize(path) - 1):
+    with monkeypatch.context() as m:
+        m.setattr(sources, "DRIVER_DECODE_BYTES", os.path.getsize(path) - 1)
         ranged = read(spark, path)
         ranged_tables = _tables(ranged)
     return (
@@ -81,8 +81,10 @@ def mixed_db(tmp_path):
     return str(path)
 
 
-def test_sqlite_regimes_agree(spark, mixed_db):
-    driver, ranged, d_eng, r_eng = _both_regimes(spark, read_sqlite, mixed_db)
+def test_sqlite_regimes_agree(spark, mixed_db, monkeypatch):
+    driver, ranged, d_eng, r_eng = _both_regimes(
+        spark, monkeypatch, read_sqlite, mixed_db
+    )
     assert [t[0] for t in driver] == ["big", "empty_t", "kv", "sparse", "typed"]
     assert driver == ranged
     by_name = {name: rows for name, _, rows in driver}
@@ -98,7 +100,7 @@ def test_sqlite_regimes_agree(spark, mixed_db):
     # big, sparse and typed changed regime; the empty and WITHOUT ROWID
     # tables decode on the driver under both
     assert all("; driver, " in e for e in d_eng), d_eng
-    assert "≤ 4 MB)" in d_eng[0]
+    assert "≤ 1 MB)" in d_eng[0]
     assert [e.split("; ")[1].rsplit(",", 1)[0] for e in r_eng] == [
         "rowid-range parallel",
         "driver",
@@ -109,7 +111,7 @@ def test_sqlite_regimes_agree(spark, mixed_db):
     assert r_eng[1].endswith("no rows)") and r_eng[2].endswith("WITHOUT ROWID)")
 
 
-def test_dbf_regimes_agree(spark, tmp_path):
+def test_dbf_regimes_agree(spark, tmp_path, monkeypatch):
     fields = [
         ("ID", "N", 19, 0),
         ("NAME", "C", 6, 0),
@@ -125,7 +127,9 @@ def test_dbf_regimes_agree(spark, tmp_path):
     ] + [[str(i).rjust(19), "x     ", "    0.50", "Y", "20000101"] for i in range(40)]
     path = tmp_path / "table.dbf"
     path.write_bytes(_make_dbf(fields, records, deleted={3, 10, 11}))
-    driver, ranged, d_eng, r_eng = _both_regimes(spark, read_dbf, str(path))
+    driver, ranged, d_eng, r_eng = _both_regimes(
+        spark, monkeypatch, read_dbf, str(path)
+    )
     assert driver == ranged
     ids = [row[0] for row in driver[0][2]]
     assert ids == [2**60 + 1, None, 3] + [i for i in range(40) if i not in (6, 7)]
@@ -133,13 +137,15 @@ def test_dbf_regimes_agree(spark, tmp_path):
 
     empty = tmp_path / "empty.dbf"
     empty.write_bytes(_make_dbf(fields, []))
-    driver, ranged, _, r_eng = _both_regimes(spark, read_dbf, str(empty))
+    driver, ranged, _, r_eng = _both_regimes(
+        spark, monkeypatch, read_dbf, str(empty)
+    )
     assert driver == ranged and driver[0][2] == []
     assert "driver, no rows" in r_eng[0]
 
 
 def test_small_sqlite_decodes_on_the_driver_and_writes_one_file(
-    spark, mixed_db, tmp_path
+    spark, mixed_db, tmp_path, monkeypatch
 ):
     """Under the cut no ``MapInArrow`` is planned (no Python worker
     starts) and the table is one partition, so the sink writes one
@@ -149,6 +155,33 @@ def test_small_sqlite_decodes_on_the_driver_and_writes_one_file(
     out = sinks.write(sparse.data, tmp_path / "sparse.csv", mode="overwrite")
     assert len(list((tmp_path / "sparse.csv").glob("part-*"))) == 1, out
 
-    with open_cost(spark, os.path.getsize(mixed_db) - 1):
-        ranged = {r.sheet_name: r for r in read_sqlite(spark, mixed_db)}
-        assert "MapInArrow" in _plan(ranged["sparse"].data)
+    monkeypatch.setattr(sources, "DRIVER_DECODE_BYTES", os.path.getsize(mixed_db) - 1)
+    ranged = {r.sheet_name: r for r in read_sqlite(spark, mixed_db)}
+    assert "MapInArrow" in _plan(ranged["sparse"].data)
+
+
+def test_corrupt_table_fails_alone_on_the_driver(spark, tmp_path):
+    """A table whose pages are corrupt under an intact catalog (its
+    rowid bounds still read) is one failed result; the file's healthy
+    table still parses, and nothing raises."""
+    path = tmp_path / "hurt.sqlite"
+    con = sqlite3.connect(path)
+    con.execute("PRAGMA page_size = 4096")
+    con.execute("CREATE TABLE big (n INTEGER, pad TEXT)")
+    con.executemany(
+        "INSERT INTO big VALUES (?,?)", [(i, "x" * 100) for i in range(2000)]
+    )
+    con.execute("CREATE TABLE ok (n INTEGER)")
+    con.executemany("INSERT INTO ok VALUES (?)", [(i,) for i in range(5)])
+    con.commit()
+    con.close()
+    blob = bytearray(path.read_bytes())
+    blob[20 * 4096 : 21 * 4096] = bytes(4096)  # page 21, a leaf mid-"big"
+    path.write_bytes(bytes(blob))
+
+    by_name = {r.sheet_name: r for r in read_sqlite(spark, str(path))}
+    assert sorted(by_name) == ["big", "ok"]
+    assert by_name["big"].parse_info == "Failed"
+    assert "decode failed" in by_name["big"].engine
+    assert by_name["ok"].parse_info == "OK"
+    assert sorted(n for (n,) in by_name["ok"].data.collect()) == list(range(5))

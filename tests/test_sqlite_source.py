@@ -10,9 +10,10 @@ import sqlite3
 
 import pytest
 
+from almost_any_file_to_pandas_spark import sources
 from almost_any_file_to_pandas_spark.parse import parse
 from almost_any_file_to_pandas_spark.sources.sqlite import read_sqlite
-from tests.conftest import assert_range_scan_plan, open_cost
+from tests.conftest import assert_range_scan_plan
 
 
 @pytest.fixture()
@@ -37,30 +38,32 @@ def two_table_db(tmp_path):
     return str(path)
 
 
-def test_table_fan_out_and_types(spark, two_table_db):
-    with open_cost(spark, os.path.getsize(two_table_db) - 1):
-        results = read_sqlite(spark, two_table_db)
-        assert [r.sheet_name for r in results] == ["empty_t", "people"]
-        people = next(r for r in results if r.sheet_name == "people")
-        assert dict(people.data.dtypes) == {
-            "id": "bigint",
-            "name": "string",
-            "score": "double",
-            "photo": "binary",
-            "note": "binary",  # untyped column → BLOB affinity
-        }
-        rows = {r.id: r for r in people.data.collect()}
-        assert rows[1].name == "ada" and rows[1].score == 9.5
-        assert rows[1].photo == bytearray(b"\x01\x02")
-        assert rows[2].score is None and rows[2].photo is None
-        assert rows[3].name is None and rows[3].score == -0.5
-        assert people.parse_info == "OK"
-        assert "rowid-range" in people.engine
-        # empty table: present in the fan-out, Failed per the reference's
-        # empty-data rule (main.py:99-103)
-        empty = next(r for r in results if r.sheet_name == "empty_t")
-        assert empty.data.count() == 0
-        assert empty.parse_info == "Failed"
+def test_table_fan_out_and_types(spark, two_table_db, monkeypatch):
+    monkeypatch.setattr(
+        sources, "DRIVER_DECODE_BYTES", os.path.getsize(two_table_db) - 1
+    )
+    results = read_sqlite(spark, two_table_db)
+    assert [r.sheet_name for r in results] == ["empty_t", "people"]
+    people = next(r for r in results if r.sheet_name == "people")
+    assert dict(people.data.dtypes) == {
+        "id": "bigint",
+        "name": "string",
+        "score": "double",
+        "photo": "binary",
+        "note": "binary",  # untyped column → BLOB affinity
+    }
+    rows = {r.id: r for r in people.data.collect()}
+    assert rows[1].name == "ada" and rows[1].score == 9.5
+    assert rows[1].photo == bytearray(b"\x01\x02")
+    assert rows[2].score is None and rows[2].photo is None
+    assert rows[3].name is None and rows[3].score == -0.5
+    assert people.parse_info == "OK"
+    assert "rowid-range" in people.engine
+    # empty table: present in the fan-out, Failed per the reference's
+    # empty-data rule (main.py:99-103)
+    empty = next(r for r in results if r.sheet_name == "empty_t")
+    assert empty.data.count() == 0
+    assert empty.parse_info == "Failed"
 
 
 def test_affinity_coercion_of_smuggled_values(spark, tmp_path):
@@ -103,7 +106,7 @@ def test_without_rowid_fallback(spark, tmp_path):
     ]
 
 
-def test_range_scan_covers_sparse_rowids(spark, tmp_path):
+def test_range_scan_covers_sparse_rowids(spark, tmp_path, monkeypatch):
     """Deleted rows leave rowid gaps; the range union must still
     return every surviving row exactly once."""
     path = tmp_path / "sparse.db"
@@ -116,11 +119,11 @@ def test_range_scan_covers_sparse_rowids(spark, tmp_path):
     con.execute("DELETE FROM t WHERE n % 3 = 0")
     con.commit()
     con.close()
-    with open_cost(spark, path.stat().st_size - 1):
-        df = read_sqlite(spark, str(path))[0].data
-        assert_range_scan_plan(df, min(64, spark.sparkContext.defaultParallelism))
-        got = sorted(r.n for r in df.collect())
-        assert got == [i for i in range(200) if i % 3 != 0]
+    monkeypatch.setattr(sources, "DRIVER_DECODE_BYTES", path.stat().st_size - 1)
+    df = read_sqlite(spark, str(path))[0].data
+    assert_range_scan_plan(df, min(64, spark.sparkContext.defaultParallelism))
+    got = sorted(r.n for r in df.collect())
+    assert got == [i for i in range(200) if i % 3 != 0]
 
 
 def test_facade_dispatch_and_error_paths(spark, two_table_db, tmp_path):
