@@ -42,7 +42,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    micro_units,
+    micro_units_sql,
+    register,
+    table,
+    table_wide,
+)
 
 # The Arrow kernels call this module's shingle and MinHash helpers:
 # ship them to the Python workers by value, so a worker never has to
@@ -2827,7 +2833,7 @@ def dedup_minhash_estimate_calibration(
     ), tagged AS (
       SELECT LEAST(da.source, db.source) AS source_a,
              GREATEST(da.source, db.source) AS source_b,
-             CAST(FLOOR(p.jaccard * 1000000 + 0.5) AS BIGINT) AS j_q6
+             {micro_units_sql("p.jaccard")} AS j_q6
       FROM pairs p
       JOIN documents da ON da.doc_id = p.doc_a
       JOIN documents db ON db.doc_id = p.doc_b
@@ -2879,9 +2885,7 @@ def dedup_cross_source_matrix(
         .select(
             F.least("_sa", "_sb").alias("source_a"),
             F.greatest("_sa", "_sb").alias("source_b"),
-            F.floor(F.col("jaccard") * 1_000_000 + F.lit(0.5)).alias(
-                "j_q6"
-            ),
+            micro_units(F.col("jaccard")).alias("j_q6"),
         )
     )
     return tagged.groupBy("source_a", "source_b").agg(

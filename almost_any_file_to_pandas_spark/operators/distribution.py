@@ -29,13 +29,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table
+from almost_any_file_to_pandas_spark.plans import (
+    cents_units,
+    cents_units_sql,
+    micro_units_sql,
+    register,
+    table,
+)
 
-_GINI_ORACLE = """
+_GINI_ORACLE = f"""
     WITH spend AS (
       SELECT c.c_custkey,
-             CAST(COALESCE(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5)
-                                    AS BIGINT)), 0) AS BIGINT) AS spend_c
+             CAST(COALESCE(SUM({cents_units_sql("o.o_totalprice")}), 0)
+                  AS BIGINT) AS spend_c
       FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
       GROUP BY c.c_custkey
     ), ranked AS (
@@ -95,9 +101,7 @@ def customer_spend_gini_lorenz(
     cust = table(spark, sf_dir, "customer").select("c_custkey")
     orders = table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
-        ).alias("cents"),
+        cents_units(F.col("o_totalprice")).alias("cents"),
     )
     spend = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
@@ -333,26 +337,25 @@ def orders_acf_daily_counts(
 
 @register(
     "events_type_entropy_census",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
       FROM events GROUP BY event_type
     ), agg AS (
       SELECT CAST(SUM(n) AS BIGINT) AS nn,
              CAST(COUNT(*) AS BIGINT) AS k,
-             CAST(SUM(CAST(FLOOR(n * ln(n) * 1000000 + 0.5)
-                           AS BIGINT)) AS BIGINT) AS sum_nln
+             CAST(SUM({micro_units_sql("n * ln(n)")}) AS BIGINT) AS sum_nln
       FROM counts
     )
     SELECT nn AS n_events,
            k AS n_types,
            CAST(CASE WHEN nn < 1 THEN 0
-                ELSE CAST(FLOOR(ln(nn) * 1000000 + 0.5) AS BIGINT)
+                ELSE {micro_units_sql("ln(nn)")}
                      - sum_nln // nn END AS BIGINT) AS entropy_q6,
            CAST(CASE WHEN k < 2 OR nn < 1 THEN 0
-                ELSE (CAST(FLOOR(ln(nn) * 1000000 + 0.5) AS BIGINT)
+                ELSE ({micro_units_sql("ln(nn)")}
                       - sum_nln // nn) * 1000000
-                     // CAST(FLOOR(ln(k) * 1000000 + 0.5) AS BIGINT)
+                     // {micro_units_sql("ln(k)")}
                 END AS BIGINT) AS norm_entropy_q6
     FROM agg
     """,
@@ -378,23 +381,21 @@ def events_type_entropy_census(
     agg = counts.agg(
         F.sum("n").cast("long").alias("nn"),
         F.count("*").cast("long").alias("k"),
-        F.sum(
-            F.expr("CAST(FLOOR(n * ln(n) * 1000000 + 0.5) AS BIGINT)")
-        ).alias("sum_nln"),
+        F.sum(F.expr(micro_units_sql("n * ln(n)"))).alias("sum_nln"),
     )
     return agg.select(
         F.col("nn").alias("n_events"),
         F.col("k").alias("n_types"),
         F.expr(
             "CAST(CASE WHEN nn < 1 THEN 0"
-            " ELSE CAST(FLOOR(ln(nn) * 1000000 + 0.5) AS BIGINT)"
+            f" ELSE {micro_units_sql('ln(nn)')}"
             " - sum_nln div nn END AS BIGINT)"
         ).alias("entropy_q6"),
         F.expr(
             "CAST(CASE WHEN k < 2 OR nn < 1 THEN 0"
-            " ELSE (CAST(FLOOR(ln(nn) * 1000000 + 0.5) AS BIGINT)"
+            f" ELSE ({micro_units_sql('ln(nn)')}"
             " - sum_nln div nn) * 1000000"
-            " div CAST(FLOOR(ln(k) * 1000000 + 0.5) AS BIGINT)"
+            f" div {micro_units_sql('ln(k)')}"
             " END AS BIGINT)"
         ).alias("norm_entropy_q6"),
     )
@@ -626,14 +627,14 @@ def orders_weekday_spectrum(
 
 @register(
     "orders_price_index_fisher",
-    oracle="""
+    oracle=f"""
     WITH yrs AS (
       SELECT MIN(year(o_orderdate)) AS y0, MAX(year(o_orderdate)) AS y1
       FROM orders
     ), py AS (
       SELECT l.l_partkey AS pk, year(o.o_orderdate) AS y,
-             CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
-                           AS BIGINT)) AS BIGINT) AS ext_c,
+             CAST(SUM({cents_units_sql("l.l_extendedprice")}) AS BIGINT)
+               AS ext_c,
              CAST(SUM(CAST(FLOOR(l.l_quantity + 0.5) AS BIGINT))
                   AS BIGINT) AS qty
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -701,9 +702,7 @@ def orders_price_index_fisher(
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_partkey",
-        F.expr(
-            "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
-        ).alias("ext_c"),
+        cents_units(F.col("l_extendedprice")).alias("ext_c"),
         F.expr("CAST(FLOOR(l_quantity + 0.5) AS BIGINT)").alias(
             "qty1"
         ),

@@ -30,13 +30,14 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import (
+    cents_units_sql,
     micro_cents,
     micro_cents_sql,
     micro_sum,
     micro_sum_sql,
+    micro_units_sql,
     register,
     table,
-    table_wide,
 )
 
 FUNNEL_STEPS = ("view", "click", "purchase")
@@ -774,7 +775,7 @@ ATTRIB_WINDOW_US = ATTRIB_WINDOW_DAYS * 86_400_000_000
       FROM events
     ), purch AS (
       SELECT user_id, event_id, us,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+             {cents_units_sql("value")} AS cents
       FROM ev WHERE event_type = 'purchase'
     ), touch AS (
       SELECT user_id, event_type, us FROM ev
@@ -832,7 +833,7 @@ def events_attribution_linear(
         "user_id",
         "event_type",
         F.unix_micros("ts").alias("us"),
-        F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").alias(
+        F.expr(cents_units_sql("value")).alias(
             "cents"
         ),
     )
@@ -1150,7 +1151,7 @@ _DAY_US = 86_400_000_000
       FROM events
     ), purch AS (
       SELECT user_id, event_id, us,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+             {cents_units_sql("value")} AS cents
       FROM ev WHERE event_type = 'purchase'
     ), touch AS (
       SELECT user_id, event_type, us FROM ev
@@ -1216,7 +1217,7 @@ def events_attribution_time_decay(
         "user_id",
         "event_type",
         F.unix_micros("ts").alias("us"),
-        F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").alias(
+        F.expr(cents_units_sql("value")).alias(
             "cents"
         ),
     )
@@ -1732,7 +1733,7 @@ def events_cep_pattern_census(
 
 @register(
     "events_markov_entropy_rate",
-    oracle="""
+    oracle=f"""
     WITH seq AS (
       SELECT user_id,
              array_agg(event_type
@@ -1741,7 +1742,7 @@ def events_cep_pattern_census(
     ), bi AS (
       SELECT unnest(list_transform(
                range(1, greatest(len(types) - 1, 0) + 1),
-               i -> {'src': types[i], 'dst': types[i+1]})) AS pair
+               i -> {{'src': types[i], 'dst': types[i+1]}})) AS pair
       FROM seq
     ), counts AS (
       SELECT pair.src AS src, pair.dst AS dst,
@@ -1756,11 +1757,9 @@ def events_cep_pattern_census(
                AS n_pairs,
              CAST(COALESCE((SELECT COUNT(*) FROM rsums), 0) AS BIGINT)
                AS n_states,
-             CAST(COALESCE((SELECT SUM(
-               CAST(FLOOR(r * ln(r) * 1000000 + 0.5) AS BIGINT))
+             CAST(COALESCE((SELECT SUM({micro_units_sql("r * ln(r)")})
                FROM rsums), 0) AS BIGINT) AS t_rows,
-             CAST(COALESCE((SELECT SUM(
-               CAST(FLOOR(c * ln(c) * 1000000 + 0.5) AS BIGINT))
+             CAST(COALESCE((SELECT SUM({micro_units_sql("c * ln(c)")})
                FROM counts), 0) AS BIGINT) AS t_cells
     )
     SELECT n_trans, n_states, n_pairs,
@@ -1768,8 +1767,9 @@ def events_cep_pattern_census(
                 ELSE (t_rows - t_cells) // n_trans END AS BIGINT)
              AS entropy_rate_q6,
            CAST(CASE WHEN n_trans < 1 THEN 1000000
-                ELSE FLOOR(exp(((t_rows - t_cells) // n_trans)
-                               / 1000000.0) * 1000000 + 0.5)
+                ELSE {micro_units_sql(
+                    "exp(((t_rows - t_cells) // n_trans) / 1000000.0)"
+                )}
                 END AS BIGINT) AS branching_q6
     FROM folds
     """,
@@ -1825,22 +1825,14 @@ def events_markov_entropy_rate(
         .alias("n_trans"),
         F.count("*").cast("long").alias("n_pairs"),
         F.coalesce(
-            F.sum(
-                F.expr(
-                    "CAST(FLOOR(c * ln(c) * 1000000 + 0.5) AS BIGINT)"
-                )
-            ),
+            F.sum(F.expr(micro_units_sql("c * ln(c)"))),
             F.lit(0),
         ).alias("t_cells"),
     )
     row_folds = rsums.agg(
         F.count("*").cast("long").alias("n_states"),
         F.coalesce(
-            F.sum(
-                F.expr(
-                    "CAST(FLOOR(r * ln(r) * 1000000 + 0.5) AS BIGINT)"
-                )
-            ),
+            F.sum(F.expr(micro_units_sql("r * ln(r)"))),
             F.lit(0),
         ).alias("t_rows"),
     )
@@ -1853,8 +1845,10 @@ def events_markov_entropy_rate(
             " ELSE (t_rows - t_cells) div n_trans END AS BIGINT)"
         ).alias("entropy_rate_q6"),
         F.expr(
-            "CAST(CASE WHEN n_trans < 1 THEN 1000000"
-            " ELSE FLOOR(exp(((t_rows - t_cells) div n_trans)"
-            " / 1000000.0) * 1000000 + 0.5) END AS BIGINT)"
+            "CAST(CASE WHEN n_trans < 1 THEN 1000000 ELSE "
+            + micro_units_sql(
+                "exp(((t_rows - t_cells) div n_trans) / 1000000.0)"
+            )
+            + " END AS BIGINT)"
         ).alias("branching_q6"),
     )

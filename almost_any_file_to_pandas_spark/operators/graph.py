@@ -44,7 +44,12 @@ from almost_any_file_to_pandas_spark.operators.dedup import (
     _pairs_within_buckets,
     connected_components,
 )
-from almost_any_file_to_pandas_spark.plans import register, table
+from almost_any_file_to_pandas_spark.plans import (
+    micro_units,
+    micro_units_sql,
+    register,
+    table,
+)
 
 EDGE_FACTOR = 2.0  # edge iff co-count > EDGE_FACTOR * mean co-count
 
@@ -319,11 +324,11 @@ def graph_pagerank_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(n // 2 AS BIGINT) AS n_edges,
            CASE WHEN (n*sxx - sx*sx) = 0 OR (n*syy - sy*sy) = 0
                 THEN NULL
-                ELSE CAST(FLOOR(
-                  CAST(n*sxy - sx*sy AS DOUBLE)
-                  / (SQRT(CAST(n*sxx - sx*sx AS DOUBLE))
-                     * SQRT(CAST(n*syy - sy*sy AS DOUBLE)))
-                  * 1000000 + 0.5) AS BIGINT)
+                ELSE {micro_units_sql(
+                    "CAST(n*sxy - sx*sy AS DOUBLE)"
+                    " / (SQRT(CAST(n*sxx - sx*sx AS DOUBLE))"
+                    " * SQRT(CAST(n*syy - sy*sy AS DOUBLE)))"
+                )}
            END AS assortativity_q6
     FROM s
     """,
@@ -386,12 +391,10 @@ def graph_degree_assortativity(
         F.expr("CAST(n div 2 AS BIGINT)").alias("n_edges"),
         F.when((vx == 0) | (vy == 0), F.lit(None).cast("bigint"))
         .otherwise(
-            F.floor(
+            micro_units(
                 num.cast("double")
                 / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-                * 1_000_000
-                + F.lit(0.5)
-            ).cast("bigint")
+            )
         )
         .alias("assortativity_q6"),
     )
@@ -536,10 +539,10 @@ def _lpa_label_frames(spark: SparkSession, sf_dir: str):
            CAST(n_communities AS BIGINT) AS n_communities,
            CAST(intra2 // 2 AS BIGINT) AS intra_edges,
            CASE WHEN two_m = 0 THEN NULL
-                ELSE CAST(FLOOR(
-                  (intra2 * two_m - sum_dc2)::DOUBLE
-                  / (two_m::DOUBLE * two_m::DOUBLE)
-                  * 1000000 + 0.5) AS BIGINT)
+                ELSE {micro_units_sql(
+                    "(intra2 * two_m - sum_dc2)::DOUBLE"
+                    " / (two_m::DOUBLE * two_m::DOUBLE)"
+                )}
            END AS modularity_q6
     FROM nodes CROSS JOIN intra CROSS JOIN dc CROSS JOIN m
     """,
@@ -604,12 +607,12 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(two_m div 2 AS BIGINT) AS n_edges",
             "CAST(n_communities AS BIGINT) AS n_communities",
             "CAST(intra2 div 2 AS BIGINT) AS intra_edges",
-            "CASE WHEN two_m = 0 THEN NULL"
-            " ELSE CAST(FLOOR("
-            " CAST(intra2 * two_m - sum_dc2 AS DOUBLE)"
-            " / (CAST(two_m AS DOUBLE) * CAST(two_m AS DOUBLE))"
-            " * 1000000 + 0.5) AS BIGINT)"
-            " END AS modularity_q6",
+            "CASE WHEN two_m = 0 THEN NULL ELSE "
+            + micro_units_sql(
+                "CAST(intra2 * two_m - sum_dc2 AS DOUBLE)"
+                " / (CAST(two_m AS DOUBLE) * CAST(two_m AS DOUBLE))"
+            )
+            + " END AS modularity_q6",
         )
     )
 

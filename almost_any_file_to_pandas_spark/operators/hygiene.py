@@ -32,12 +32,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    micro_units,
+    micro_units_sql,
+    register,
+    table_wide,
+)
 
 
 @register(
     "embedding_hygiene_report",
-    oracle="""
+    oracle=f"""
     WITH per_vec AS (
       SELECT vec_id,
              embedding IS NULL AS is_null,
@@ -66,15 +71,16 @@ from almost_any_file_to_pandas_spark.plans import register, table_wide
              AS n_nonfinite,
            CAST(SUM(CASE WHEN NOT is_null AND NOT nonfinite AND sumsq = 0
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_norm,
-           CAST(FLOOR(sqrt(MIN(CASE WHEN NOT is_null AND NOT nonfinite
-                                    THEN sumsq END)) * 1000000 + 0.5)
-                AS BIGINT) AS min_norm_q6,
-           CAST(FLOOR(sqrt(MAX(CASE WHEN NOT is_null AND NOT nonfinite
-                                    THEN sumsq END)) * 1000000 + 0.5)
-                AS BIGINT) AS max_norm_q6,
+           {micro_units_sql(
+               "sqrt(MIN(CASE WHEN NOT is_null AND NOT nonfinite"
+               " THEN sumsq END))"
+           )} AS min_norm_q6,
+           {micro_units_sql(
+               "sqrt(MAX(CASE WHEN NOT is_null AND NOT nonfinite"
+               " THEN sumsq END))"
+           )} AS max_norm_q6,
            CAST(SUM(CASE WHEN NOT is_null AND NOT nonfinite
-                         THEN CAST(FLOOR(sqrt(sumsq) * 1000000 + 0.5)
-                                   AS BIGINT)
+                         THEN {micro_units_sql("sqrt(sumsq)")}
                     END)
                 // SUM(CASE WHEN NOT is_null AND NOT nonfinite
                             THEN 1 ELSE 0 END)
@@ -149,17 +155,15 @@ def hygiene_report(emb: DataFrame) -> DataFrame:
             F.sum(F.when(clean & (F.col("sumsq") == 0), 1).otherwise(0)).alias(
                 "n_zero_norm"
             ),
-            F.floor(
-                F.sqrt(F.min(F.when(clean, F.col("sumsq")))) * 1_000_000
-                + F.lit(0.5)
-            ).alias("min_norm_q6"),
-            F.floor(
-                F.sqrt(F.max(F.when(clean, F.col("sumsq")))) * 1_000_000
-                + F.lit(0.5)
-            ).alias("max_norm_q6"),
+            micro_units(F.sqrt(F.min(F.when(clean, F.col("sumsq"))))).alias(
+                "min_norm_q6"
+            ),
+            micro_units(F.sqrt(F.max(F.when(clean, F.col("sumsq"))))).alias(
+                "max_norm_q6"
+            ),
             F.expr(
                 "CAST(SUM(CASE WHEN NOT is_null AND NOT nonfinite THEN "
-                "CAST(FLOOR(sqrt(sumsq) * 1000000 + 0.5) AS DECIMAL(38,0)) "
+                f"CAST({micro_units_sql('sqrt(sumsq)')} AS DECIMAL(38,0)) "
                 "END) div SUM(CASE WHEN NOT is_null AND NOT nonfinite "
                 "THEN 1 ELSE 0 END) AS BIGINT)"
             ).alias("avg_norm_q6"),

@@ -28,30 +28,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    micro_sum,
+    micro_sum_sql,
+    micro_units_sql,
+    register,
+    table_wide,
+)
 
 SRC_DIMS = 64  # embeddings table dimensionality (TESTDATA.md)
 COV_DIMS = 8  # leading block emitted by emb_covariance_block
 QSCALE = 1_000_000  # integer quantization: floor(x * QSCALE + 0.5)
-
-
-def _q(col):
-    """Quantize a double to an exact int64: floor(x·QSCALE + 0.5).
-
-    floor(+0.5) rounds half-up toward +∞ in BOTH engines (Spark
-    ``floor`` and DuckDB ``floor`` are the same IEEE operation), so
-    the quantized grid is engine-portable — unlike ROUND, whose
-    half-way tie rule differs across engines/types.
-    """
-    return F.floor(col * F.lit(float(QSCALE)) + F.lit(0.5)).cast(
-        "decimal(28,0)"
-    )
-
-
-def _q_sql(expr: str) -> str:
-    return (
-        f"CAST(FLOOR(({expr}) * {QSCALE} + 0.5) AS DECIMAL(28,0))"
-    )
 
 
 @register(
@@ -68,8 +55,8 @@ def _q_sql(expr: str) -> str:
     ), moments AS (
       SELECT dim_idx,
              COUNT(*) AS n,
-             SUM({_q_sql('val')}) AS s1,
-             SUM({_q_sql('val * val')}) AS s2,
+             {micro_sum_sql('val')} AS s1,
+             {micro_sum_sql('val * val')} AS s2,
              MIN(val) AS mn,
              MAX(val) AS mx
       FROM expanded GROUP BY dim_idx
@@ -105,8 +92,8 @@ def emb_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n = F.count("*").alias("n")
-    s1 = F.sum(_q(F.col("val"))).alias("s1")
-    s2 = F.sum(_q(F.col("val") * F.col("val"))).alias("s2")
+    s1 = micro_sum(F.col("val")).alias("s1")
+    s2 = micro_sum(F.col("val") * F.col("val")).alias("s2")
     agg = el.groupBy("dim_idx").agg(
         n, s1, s2, F.min("val").alias("mn"), F.max("val").alias("mx")
     )
@@ -139,9 +126,9 @@ def _cov_oracle() -> str:
     ), sums AS (
       SELECT p.di, p.dj,
              COUNT(*) AS n,
-             SUM({_q_sql('e.v[p.di + 1] * e.v[p.dj + 1]')}) AS sprod,
-             SUM({_q_sql('e.v[p.di + 1]')}) AS si,
-             SUM({_q_sql('e.v[p.dj + 1]')}) AS sj
+             {micro_sum_sql('e.v[p.di + 1] * e.v[p.dj + 1]')} AS sprod,
+             {micro_sum_sql('e.v[p.di + 1]')} AS si,
+             {micro_sum_sql('e.v[p.dj + 1]')} AS sj
       FROM e CROSS JOIN pairs p
       GROUP BY p.di, p.dj
     )
@@ -174,11 +161,11 @@ def emb_covariance_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("embedding").cast("array<double>")
     aggs = [F.count("*").alias("n")]
     for i in range(COV_DIMS):
-        aggs.append(F.sum(_q(v.getItem(i))).alias(f"s_{i}"))
+        aggs.append(micro_sum(v.getItem(i)).alias(f"s_{i}"))
     for i in range(COV_DIMS):
         for j in range(i, COV_DIMS):
             aggs.append(
-                F.sum(_q(v.getItem(i) * v.getItem(j))).alias(f"p_{i}_{j}")
+                micro_sum(v.getItem(i) * v.getItem(j)).alias(f"p_{i}_{j}")
             )
     one = emb.agg(*aggs)
 
@@ -375,8 +362,8 @@ def emb_pca_power_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), per_dim AS (
       SELECT dim_idx,
              COUNT(*) AS n,
-             SUM({_q_sql('val')}) AS s1,
-             SUM({_q_sql('val * val')}) AS s2
+             {micro_sum_sql('val')} AS s1,
+             {micro_sum_sql('val * val')} AS s2
       FROM expanded GROUP BY dim_idx
     ), folded AS (
       -- cross-row sums stay EXACT integers (s1^2 and s2 in
@@ -402,8 +389,7 @@ def emb_pca_power_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_dims AS BIGINT) AS n_dims,
            ROUND(mean_norm2, 9) AS mean_norm2,
            ROUND(center_norm2, 9) AS center_norm2,
-           CAST(FLOOR(center_norm2 / mean_norm2 * 1000000 + 0.5)
-                AS BIGINT) AS anisotropy_q6
+           {micro_units_sql("center_norm2 / mean_norm2")} AS anisotropy_q6
     FROM shaped
     """,
 )
@@ -436,8 +422,8 @@ def emb_anisotropy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("dim_idx", F.col("val_f").cast("double").alias("val"))
     per_dim = expanded.groupBy("dim_idx").agg(
         F.count("*").alias("n"),
-        F.sum(_q(F.col("val"))).alias("s1"),
-        F.sum(_q(F.col("val") * F.col("val"))).alias("s2"),
+        micro_sum(F.col("val")).alias("s1"),
+        micro_sum(F.col("val") * F.col("val")).alias("s2"),
     )
     nn = per_dim.agg(F.max("n").alias("mx"))
     folded = per_dim.crossJoin(F.broadcast(nn)).agg(
@@ -461,8 +447,7 @@ def emb_anisotropy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_dims",
         "ROUND(mean_norm2, 9) AS mean_norm2",
         "ROUND(center_norm2, 9) AS center_norm2",
-        "CAST(FLOOR(center_norm2 / mean_norm2 * 1000000 + 0.5)"
-        " AS BIGINT) AS anisotropy_q6",
+        micro_units_sql("center_norm2 / mean_norm2") + " AS anisotropy_q6",
     )
 
 
@@ -475,15 +460,13 @@ def _pr_oracle() -> str:
     ), nn AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n FROM e),
     s1 AS (
       SELECT u.i AS a,
-             CAST(SUM(CAST(FLOOR(v[u.i] * {QSCALE} + 0.5) AS HUGEINT))
-                  AS HUGEINT) AS s
+             CAST({micro_sum_sql("v[u.i]")} AS HUGEINT) AS s
       FROM e, LATERAL (
         SELECT unnest(generate_series(1, {d})) AS i) u
       GROUP BY u.i
     ), gram AS (
       SELECT p.i AS a, p.j AS b,
-             CAST(SUM(CAST(FLOOR(v[p.i] * v[p.j] * {QSCALE} + 0.5)
-                           AS HUGEINT)) AS HUGEINT) AS g
+             CAST({micro_sum_sql("v[p.i] * v[p.j]")} AS HUGEINT) AS g
       FROM e, LATERAL (
         SELECT u1.i AS i, u2.j AS j
         FROM (SELECT unnest(generate_series(1, {d})) AS i) u1,
@@ -500,9 +483,7 @@ def _pr_oracle() -> str:
       CROSS JOIN nn
     ), lattice AS (
       SELECT a, b, n,
-             CASE WHEN n = 0 THEN 0
-                  WHEN cen >= 0 THEN cen // (n * n * 1000)
-                  ELSE -((-cen) // (n * n * 1000)) END AS dcell
+             CASE WHEN n = 0 THEN 0 ELSE cen // (n * n * 1000) END AS dcell
       FROM cells
     ), folds AS (
       SELECT CAST(COALESCE(MAX(n), 0) AS BIGINT) AS n_vecs,
@@ -534,10 +515,11 @@ def emb_effective_rank_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the anisotropy row's companion, from second moments).
 
     Exactness: the centered covariance lattice is ``n·G·10⁶ − s_a·s_b``
-    from :func:`gram_moments`'s integer cells, divided (sign-safe
-    symmetric truncation) by n² so cells stay ~cov·10¹² at ANY corpus
-    size — traces and Frobenius folds then fit DECIMAL(38,0)/HUGEINT
-    at every SF, and PR is one integer division of exact folds.
+    from :func:`gram_moments`'s integer cells, divided (integer
+    division, truncating toward zero on both engines) by n² so cells
+    stay ~cov·10¹² at ANY corpus size — traces and Frobenius folds
+    then fit DECIMAL(38,0)/HUGEINT at every SF, and PR is one integer
+    division of exact folds.
 
     Scale: inherits gram_moments' shape — per-task O(d²) integer
     partials via the Arrow fold, one d²-cell shuffle, then arithmetic
@@ -582,11 +564,9 @@ def emb_effective_rank_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         # div returns BIGINT — the (n²·1000) scale keeps every
         # downstream product inside DECIMAL(38,0) AND every div
         # result inside int64 at any corpus size
-        F.expr(
-            "CASE WHEN n = 0 THEN 0"
-            " WHEN cen >= 0 THEN cen div (n * n * 1000)"
-            " ELSE -((-cen) div (n * n * 1000)) END"
-        ).alias("dcell"),
+        F.expr("CASE WHEN n = 0 THEN 0 ELSE cen div (n * n * 1000) END").alias(
+            "dcell"
+        ),
     )
     folds = lattice.agg(
         F.max("n").cast("long").alias("n_vecs"),

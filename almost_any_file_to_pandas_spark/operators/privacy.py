@@ -19,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table
+from almost_any_file_to_pandas_spark.plans import (
+    cents_units_sql,
+    register,
+    table,
+)
 
 K_ANONYMITY_LEVELS = (2, 5, 10, 25)
 ACCTBAL_BUCKET = 1000  # quasi-identifier coarsening for the balance
@@ -653,7 +657,7 @@ def _dp_geo_scaled_spark(arm: str) -> str:
     oracle=f"""
     WITH per_user AS (
       SELECT user_id,
-             CAST(FLOOR(SUM(value) * 100 + 0.5) AS BIGINT) AS s_c
+             {cents_units_sql("SUM(value)")} AS s_c
       FROM events GROUP BY user_id
     ), clipped AS (
       SELECT user_id,
@@ -673,17 +677,9 @@ def _dp_geo_scaled_spark(arm: str) -> str:
                 - {_dp_geo_scaled_sql("neg")} AS BIGINT)
              AS noisy_sum_c,
            CAST(CASE WHEN n_users = 0 THEN 0
-                ELSE CASE WHEN (clipped_sum_c
-                                + {_dp_geo_scaled_sql("pos")}
-                                - {_dp_geo_scaled_sql("neg")}) >= 0
-                  THEN (clipped_sum_c + {_dp_geo_scaled_sql("pos")}
-                        - {_dp_geo_scaled_sql("neg")}) * 10000
-                       // n_users
-                  ELSE -((-(clipped_sum_c
-                            + {_dp_geo_scaled_sql("pos")}
-                            - {_dp_geo_scaled_sql("neg")})) * 10000
-                         // n_users) END END AS BIGINT)
-             AS noisy_mean_q6,
+                ELSE (clipped_sum_c + {_dp_geo_scaled_sql("pos")}
+                      - {_dp_geo_scaled_sql("neg")}) * 10000 // n_users
+                END AS BIGINT) AS noisy_mean_q6,
            CAST(1000000 AS BIGINT) AS epsilon_q6,
            CAST({DP_CLIP_CENTS} AS BIGINT) AS clip_c
     FROM folds
@@ -707,9 +703,7 @@ def privacy_dp_clipped_mean(
     pays) then a 1-row fold; noise is constant-time arithmetic."""
     ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
-        F.expr("CAST(FLOOR(SUM(value) * 100 + 0.5) AS BIGINT)").alias(
-            "s_c"
-        )
+        F.expr(cents_units_sql("SUM(value)")).alias("s_c")
     )
     clipped = per_user.select(
         "s_c",
@@ -737,10 +731,7 @@ def privacy_dp_clipped_mean(
         F.expr(f"CAST({noisy} AS BIGINT)").alias("noisy_sum_c"),
         F.expr(
             "CAST(CASE WHEN n_users = 0 THEN 0"
-            f" ELSE CASE WHEN {noisy} >= 0"
-            f" THEN {noisy} * 10000 div n_users"
-            f" ELSE -((-{noisy}) * 10000 div n_users) END END"
-            " AS BIGINT)"
+            f" ELSE {noisy} * 10000 div n_users END AS BIGINT)"
         ).alias("noisy_mean_q6"),
         F.lit(1_000_000).cast("long").alias("epsilon_q6"),
         F.lit(DP_CLIP_CENTS).cast("long").alias("clip_c"),

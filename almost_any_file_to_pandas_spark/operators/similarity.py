@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from almost_any_file_to_pandas_spark.plans import register, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    micro_units,
+    micro_units_sql,
+    register,
+    table_wide,
+)
 
 TOP_K = 20
 QUERY_VEC_ID = 0
@@ -1209,7 +1214,7 @@ def sim_ivf_incremental_assign(
 
 @register(
     "sim_label_affinity_matrix",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT label, embedding::DOUBLE[] AS v FROM embeddings
     ), expanded AS (
@@ -1219,8 +1224,9 @@ def sim_ivf_incremental_assign(
       ) u
     ), cent AS (
       SELECT label, dim_idx,
-             CAST(FLOOR(CAST(SUM(CAST(val AS DECIMAL(30,15))) AS DOUBLE)
-                        / COUNT(*) * 1000000 + 0.5) AS BIGINT) AS c_q6
+             {micro_units_sql(
+                 "CAST(SUM(CAST(val AS DECIMAL(30,15))) AS DOUBLE) / COUNT(*)"
+             )} AS c_q6
       FROM expanded GROUP BY label, dim_idx
     ), norms AS (
       SELECT label, SUM(c_q6 * c_q6) AS n2 FROM cent GROUP BY label
@@ -1232,10 +1238,10 @@ def sim_ivf_incremental_assign(
       GROUP BY 1, 2
     )
     SELECT d.label_a, d.label_b,
-           CAST(FLOOR(CAST(d.dot AS DOUBLE)
-                      / (SQRT(CAST(na.n2 AS DOUBLE))
-                         * SQRT(CAST(nb.n2 AS DOUBLE)))
-                      * 1000000 + 0.5) AS BIGINT) AS cosine_q6
+           {micro_units_sql(
+               "CAST(d.dot AS DOUBLE)"
+               " / (SQRT(CAST(na.n2 AS DOUBLE)) * SQRT(CAST(nb.n2 AS DOUBLE)))"
+           )} AS cosine_q6
     FROM dots d
     JOIN norms na ON na.label = d.label_a
     JOIN norms nb ON nb.label = d.label_b
@@ -1272,14 +1278,10 @@ def sim_label_affinity_matrix(
         .select("label", (F.col("pos") + 1).alias("dim_idx"), "val")
         .groupBy("label", "dim_idx")
         .agg(
-            F.floor(
+            micro_units(
                 F.sum(F.col("val").cast("decimal(30,15)")).cast("double")
                 / F.count("*")
-                * 1_000_000
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("c_q6")
+            ).alias("c_q6")
         )
     )
     norms = cent.groupBy(F.col("label").alias("n_label")).agg(
@@ -1316,30 +1318,19 @@ def sim_label_affinity_matrix(
         .select(
             "label_a",
             "label_b",
-            F.floor(
+            micro_units(
                 F.col("dot").cast("double")
                 / (
                     F.sqrt(F.col("na2").cast("double"))
                     * F.sqrt(F.col("nb2").cast("double"))
                 )
-                * 1_000_000
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cosine_q6"),
+            ).alias("cosine_q6"),
         )
     )
 
 
 BQ_DIMS = 64  # corpus embedding width; generalizes to ceil(d/32) words
 BQ_SHORTLIST = 50
-
-
-def _bq_q6(cell: str) -> str:
-    """Exact q6 quantization of one float cell, engine-portable: the
-    float→double widening is value-exact and FLOOR(double·1e6+0.5)
-    computes bit-identically in Spark and DuckDB."""
-    return f"CAST(FLOOR(CAST({cell} AS DOUBLE) * 1000000 + 0.5) AS BIGINT)"
 
 
 def _bq_word_sql(col: str, lo: int, spark_side: bool) -> str:
@@ -1374,7 +1365,11 @@ def _bq_dot_sql(a: str, b: str, spark_side: bool) -> str:
         cb = (
             f"element_at({b}, {i + 1})" if spark_side else f"{b}[{i + 1}]"
         )
-        terms.append(f"{_bq_q6(ca)} * {_bq_q6(cb)}")
+        terms.append(
+            micro_units_sql(f"CAST({ca} AS DOUBLE)")
+            + " * "
+            + micro_units_sql(f"CAST({cb} AS DOUBLE)")
+        )
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 

@@ -26,6 +26,8 @@ from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
     SESSION_GAP_MINUTES,
+    cents_units,
+    cents_units_sql,
     exact_sum,
     exact_sum_sq,
     exact_sum_sq_sql,
@@ -40,7 +42,6 @@ from almost_any_file_to_pandas_spark.plans import (
     micro_units_sql,
     register,
     table,
-    table_wide,
 )
 
 ASOF_TOLERANCE_MINUTES = 30
@@ -148,16 +149,6 @@ def events_asof_view_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _q6(x: Column) -> Column:
-    """``FLOOR(x·1e6 + 0.5)``: a derived statistic quantized to q6."""
-    return F.floor(x * 1_000_000 + F.lit(0.5))
-
-
-def _q6_sql(x: str) -> str:
-    """DuckDB twin of :func:`_q6`."""
-    return f"CAST(FLOOR(({x}) * 1000000 + 0.5) AS BIGINT)"
-
-
 def cohort_pivot_sql(col: str, **keys: int) -> str:
     """``MAX(CASE WHEN k = v AND … THEN col END)``: the cell of a keyed
     frame where every key matches, as one column."""
@@ -198,8 +189,8 @@ def mean_std_q6(ev: DataFrame, key: str) -> DataFrame:
     return moment_fold(ev, key).select(
         key,
         F.col("n").alias("n_events"),
-        _q6(mean).alias("mean_q6"),
-        _q6(F.sqrt(var)).alias("std_q6"),
+        micro_units(mean).alias("mean_q6"),
+        micro_units(F.sqrt(var)).alias("std_q6"),
     )
 
 
@@ -208,8 +199,8 @@ def _mean_std_q6_sql(key: str) -> str:
     ``quant``."""
     return f"""stats AS ({_moment_fold_sql(key)}
     ), quant AS (
-      SELECT {key}, n AS n_events, {_q6_sql("sum_v / n")} AS mean_q6,
-             {_q6_sql("sqrt(sum_vsq / n - (sum_v / n) * (sum_v / n))")}
+      SELECT {key}, n AS n_events, {micro_units_sql("sum_v / n")} AS mean_q6,
+             {micro_units_sql("sqrt(sum_vsq / n - (sum_v / n) * (sum_v / n))")}
                AS std_q6
       FROM stats
     )"""
@@ -625,10 +616,10 @@ def events_late_arrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM stats GROUP BY event_type
     )
     SELECT event_type, n_a, n_b,
-           {_q6_sql("sum_a / n_a")} AS mean_a_q6,
-           {_q6_sql("sum_b / n_b")} AS mean_b_q6,
-           {_q6_sql("sum_b / n_b - sum_a / n_a")} AS lift_q6,
-           {_q6_sql(
+           {micro_units_sql("sum_a / n_a")} AS mean_a_q6,
+           {micro_units_sql("sum_b / n_b")} AS mean_b_q6,
+           {micro_units_sql("sum_b / n_b - sum_a / n_a")} AS lift_q6,
+           {micro_units_sql(
                "(sum_b / n_b - sum_a / n_a)"
                " / sqrt((sum2_a / n_a - (sum_a / n_a) * (sum_a / n_a)) / n_a"
                " + (sum2_b / n_b - (sum_b / n_b) * (sum_b / n_b)) / n_b)"
@@ -675,10 +666,10 @@ def events_ab_cohort_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_a",
         "n_b",
-        _q6(mean_a).alias("mean_a_q6"),
-        _q6(mean_b).alias("mean_b_q6"),
-        _q6(mean_b - mean_a).alias("lift_q6"),
-        _q6(
+        micro_units(mean_a).alias("mean_a_q6"),
+        micro_units(mean_b).alias("mean_b_q6"),
+        micro_units(mean_b - mean_a).alias("lift_q6"),
+        micro_units(
             (mean_b - mean_a)
             / F.sqrt(var_a / F.col("n_a") + var_b / F.col("n_b"))
         ).alias("z_score_q6"),
@@ -1782,12 +1773,12 @@ def events_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_theilsen_trend_by_segment",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
       SELECT c.c_mktsegment AS segment,
              (EXTRACT(YEAR FROM o.o_orderdate) * 12
               + EXTRACT(MONTH FROM o.o_orderdate)) AS m,
-             SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
+             SUM({cents_units_sql("o.o_totalprice")})
                AS rev
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
       GROUP BY 1, 2
@@ -1855,7 +1846,7 @@ def orders_theilsen_trend_by_segment(
         )
         .agg(
             F.sum(
-                F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
+                F.expr(cents_units_sql("o_totalprice"))
             ).alias("rev")
         )
     )
@@ -1977,14 +1968,14 @@ def events_time_weighted_value(
 
 @register(
     "events_user_balance_reflect",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS us,
              CASE WHEN event_type = 'purchase'
-                  THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                  THEN {cents_units_sql("value")}
                   WHEN event_type = 'error'
-                  THEN -CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                  THEN -{cents_units_sql("value")}
                   ELSE 0 END AS delta
       FROM events
       WHERE event_type IN ('purchase', 'error')
@@ -2044,10 +2035,10 @@ def events_user_balance_reflect(
         F.unix_micros("ts").alias("us"),
         F.when(
             F.col("event_type") == "purchase",
-            F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"),
+            F.expr(cents_units_sql("value")),
         )
         .otherwise(
-            -F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)")
+            -F.expr(cents_units_sql("value"))
         )
         .alias("delta"),
     )
@@ -2201,7 +2192,7 @@ ROLLING_MEDIAN_N = 7  # trailing-frame width (this event + 6 prior)
     WITH cents AS (
       SELECT user_id, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
+             {cents_units_sql("value")} AS v
       FROM events WHERE event_type = 'purchase'
     ), framed AS (
       SELECT user_id, event_id,
@@ -2244,7 +2235,7 @@ def events_user_rolling_median7(
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("us"),
-        F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").alias("v"),
+        F.expr(cents_units_sql("value")).alias("v"),
     )
     w = (
         W.partitionBy("user_id")
@@ -2273,7 +2264,7 @@ MASE_SEASON_LAG = 12  # months; naive competitor is lag-1
     oracle=f"""
     WITH monthly AS (
       SELECT year(o_orderdate) * 12 + month(o_orderdate) AS mkey,
-             CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(SUM({cents_units_sql("o_totalprice")})
                   AS BIGINT) AS rev
       FROM orders GROUP BY 1
     ), lagged AS (
@@ -2334,7 +2325,7 @@ def orders_seasonal_naive_mase(
         )
     ).agg(
         F.expr(
-            "CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))"
+            f"CAST(SUM({cents_units_sql('o_totalprice')})"
             " AS BIGINT)"
         ).alias("rev")
     )
@@ -2947,9 +2938,9 @@ HOLT_BETA = 0.25  # trend gain — exact binary rational
       FROM h JOIN idx i ON i.t = h.t + 1
     )
     SELECT CAST(ym AS BIGINT) AS ym, y_cents,
-           CAST(FLOOR(l * 100 + 0.5) AS BIGINT) AS level_cents,
-           CAST(FLOOR(b * 100 + 0.5) AS BIGINT) AS trend_cents,
-           CAST(FLOOR(fc * 100 + 0.5) AS BIGINT) AS forecast_cents
+           {cents_units_sql("l")} AS level_cents,
+           {cents_units_sql("b")} AS trend_cents,
+           {cents_units_sql("fc")} AS forecast_cents
     FROM h
     """,
 )
@@ -3414,9 +3405,10 @@ _DID_CELLS = {
     )
     SELECT {", ".join(f"n_{k}" for k in _DID_CELLS)},
       {", ".join(
-          f"{_q6_sql(f'sv_{k} / n_{k}')} AS mean_{k}_q6" for k in _DID_CELLS
+          f"{micro_units_sql(f'sv_{k} / n_{k}')} AS mean_{k}_q6"
+          for k in _DID_CELLS
       )},
-      {_q6_sql(
+      {micro_units_sql(
           "(sv_b_post / n_b_post - sv_b_pre / n_b_pre)"
           " - (sv_a_post / n_a_post - sv_a_pre / n_a_pre)"
       )} AS did_q6
@@ -3461,8 +3453,8 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean = {k: F.col(f"sv_{k}") / F.col(f"n_{k}") for k in _DID_CELLS}
     return p.select(
         *[f"n_{k}" for k in _DID_CELLS],
-        *[_q6(mean[k]).alias(f"mean_{k}_q6") for k in _DID_CELLS],
-        _q6(
+        *[micro_units(mean[k]).alias(f"mean_{k}_q6") for k in _DID_CELLS],
+        micro_units(
             (mean["b_post"] - mean["b_pre"]) - (mean["a_post"] - mean["a_pre"])
         ).alias("did_q6"),
     )
@@ -3473,8 +3465,8 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_CUPED_MOMENTS_SQL}
     SELECT CAST(n AS BIGINT) AS n_users,
-      {_q6_sql(_CUPED_THETA)} AS theta_q6,
-      {_q6_sql(_CUPED_CORR2)} AS variance_reduction_q6
+      {micro_units_sql(_CUPED_THETA)} AS theta_q6,
+      {micro_units_sql(_CUPED_CORR2)} AS variance_reduction_q6
     FROM g
     """,
 )
@@ -3506,9 +3498,12 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = user_pre_post(period_split(table(spark, sf_dir, "events")))
     return cuped_moments(u).select(
         F.col("n").cast("long").alias("n_users"),
-        _q6(F.expr(_CUPED_THETA)).alias("theta_q6"),
-        _q6(F.expr(_CUPED_CORR2)).alias("variance_reduction_q6"),
+        micro_units(F.expr(_CUPED_THETA)).alias("theta_q6"),
+        micro_units(F.expr(_CUPED_CORR2)).alias("variance_reduction_q6"),
     )
+
+
+_JK_MEAN_Q6_SQL = micro_units_sql(from_micro_sql("s") + " / n")
 
 
 @register(
@@ -3527,9 +3522,9 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), loo AS (
       -- degenerate guard: with ONE group, deleting it leaves nothing
       -- (n = n_g) -> the leave-one-out estimate is undefined -> NULL
-      SELECT CAST(FLOOR({from_micro_sql("s - s_g")}
-                        / NULLIF(n - n_g, 0)
-                        * 1000000 + 0.5) AS BIGINT) AS loo_q6
+      SELECT {micro_units_sql(
+                 from_micro_sql("s - s_g") + " / NULLIF(n - n_g, 0)"
+             )} AS loo_q6
       FROM per_g CROSS JOIN tot
     ), bar AS (
       SELECT SUM(loo_q6) // COUNT(*) AS bar_q6 FROM loo
@@ -3540,14 +3535,13 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(gg AS BIGINT) AS n_groups,
            CAST(n AS BIGINT) AS n_orders,
-           CAST(FLOOR({from_micro_sql("s")} / n * 1000000 + 0.5) AS BIGINT)
-             AS mean_q6,
+           {_JK_MEAN_Q6_SQL} AS mean_q6,
            CAST(FLOOR(sqrt(CAST(ss2 AS DOUBLE) * (gg - 1) / gg) + 0.5)
                 AS BIGINT) AS jk_se_q6,
-           CAST(FLOOR({from_micro_sql("s")} / n * 1000000 + 0.5)
+           CAST({_JK_MEAN_Q6_SQL}
                 - 2 * FLOOR(sqrt(CAST(ss2 AS DOUBLE) * (gg - 1) / gg)
                             + 0.5) AS BIGINT) AS ci_lo_q6,
-           CAST(FLOOR({from_micro_sql("s")} / n * 1000000 + 0.5)
+           CAST({_JK_MEAN_Q6_SQL}
                 + 2 * FLOOR(sqrt(CAST(ss2 AS DOUBLE) * (gg - 1) / gg)
                             + 0.5) AS BIGINT) AS ci_hi_q6
     FROM ss CROSS JOIN tot
@@ -3593,11 +3587,9 @@ def orders_jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degenerate guard (single-row corpus sweep): one group -> the
     # leave-one-out denominator is zero -> NULL, not an ANSI error
     loo = per_g.crossJoin(F.broadcast(tot)).select(
-        F.floor(
+        micro_units(
             from_micro(F.col("s") - F.col("s_g"))
             / F.nullif(F.col("n") - F.col("n_g"), F.lit(0))
-            * 1_000_000
-            + F.lit(0.5)
         ).alias("loo_q6")
     )
     bar = loo.agg(F.expr("SUM(loo_q6) DIV COUNT(*)").alias("bar_q6"))
@@ -3607,9 +3599,7 @@ def orders_jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.col("loo_q6") - F.col("bar_q6")).cast("decimal(19,0)")
         ).alias("ss2")
     )
-    mean_q6 = F.floor(
-        from_micro(F.col("s")) / F.col("n") * 1_000_000 + F.lit(0.5)
-    )
+    mean_q6 = micro_units(from_micro(F.col("s")) / F.col("n"))
     se_q6 = F.floor(
         F.sqrt(
             F.col("ss2").cast("double") * (F.col("gg") - 1) / F.col("gg")
@@ -3636,7 +3626,7 @@ CONFORMAL_LEVEL_PCT = 90  # 90% split-conformal interval
     WITH daily AS (
       SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                AS dkey,
-             CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(SUM({cents_units_sql("o_totalprice")})
                   AS BIGINT) AS rev
       FROM orders GROUP BY 1
     ), lagged AS (
@@ -3711,7 +3701,7 @@ def orders_conformal_naive_interval(
         .alias("dkey")
     ).agg(
         F.expr(
-            "CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))"
+            f"CAST(SUM({cents_units_sql('o_totalprice')})"
             " AS BIGINT)"
         ).alias("rev")
     )
@@ -3916,9 +3906,9 @@ def events_uplift_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(n_ctrl AS BIGINT) AS n_ctrl,
            CAST(n_treat AS BIGINT) AS n_treat,
-           {_q6_sql("m_ctrl")} AS adj_mean_ctrl_q6,
-           {_q6_sql("m_treat")} AS adj_mean_treat_q6,
-           {_q6_sql("m_treat - m_ctrl")} AS adj_lift_q6
+           {micro_units_sql("m_ctrl")} AS adj_mean_ctrl_q6,
+           {micro_units_sql("m_treat")} AS adj_mean_treat_q6,
+           {micro_units_sql("m_treat - m_ctrl")} AS adj_lift_q6
     FROM p
     """,
 )
@@ -3981,9 +3971,9 @@ def events_cuped_adjusted_lift(
     return p.select(
         F.col("n_ctrl").cast("long").alias("n_ctrl"),
         F.col("n_treat").cast("long").alias("n_treat"),
-        _q6(F.col("m_ctrl")).alias("adj_mean_ctrl_q6"),
-        _q6(F.col("m_treat")).alias("adj_mean_treat_q6"),
-        _q6(F.col("m_treat") - F.col("m_ctrl")).alias("adj_lift_q6"),
+        micro_units(F.col("m_ctrl")).alias("adj_mean_ctrl_q6"),
+        micro_units(F.col("m_treat")).alias("adj_mean_treat_q6"),
+        micro_units(F.col("m_treat") - F.col("m_ctrl")).alias("adj_lift_q6"),
     )
 
 
@@ -3997,7 +3987,7 @@ TSCV_TEST_MONTHS = 3
     WITH monthly AS (
       SELECT year(o_orderdate) * 12 + month(o_orderdate) AS mkey,
              COUNT(*) AS n_orders,
-             CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(SUM({cents_units_sql("o_totalprice")})
                   AS BIGINT) AS rev_cents
       FROM orders GROUP BY 1
     ), lim AS (
@@ -4060,7 +4050,7 @@ def orders_tscv_fold_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count("*").alias("n_orders"),
         F.expr(
-            "CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))"
+            f"CAST(SUM({cents_units_sql('o_totalprice')})"
             " AS BIGINT)"
         ).alias("rev_cents"),
     )
@@ -4514,7 +4504,7 @@ QTE_PCTS = (25, 50, 75)  # quartile treatment effects
     oracle=f"""
     WITH cells AS (
       SELECT user_id % 2 AS side,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
+             {cents_units_sql("value")} AS cents,
              COUNT(*) AS c
       FROM events GROUP BY 1, 2
     ), walk AS (
@@ -4559,9 +4549,7 @@ def events_ab_quantile_effects(
     cells = (
         ev.select(
             (F.col("user_id") % 2).alias("side"),
-            F.expr(
-                "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-            ).alias("cents"),
+            cents_units(F.col("value")).alias("cents"),
         )
         .groupBy("side", "cents")
         .agg(F.count("*").alias("c"))
@@ -4806,10 +4794,10 @@ _HW_LNEW = (
     )
     SELECT CAST(h.ym AS BIGINT) AS ym,
            h.y_cents,
-           CAST(FLOOR(h.l * 100 + 0.5) AS BIGINT) AS level_cents,
-           CAST(FLOOR(h.b * 100 + 0.5) AS BIGINT) AS trend_cents,
-           CAST(FLOOR(h.s_cur * 100 + 0.5) AS BIGINT) AS season_cents,
-           CAST(FLOOR(h.fc * 100 + 0.5) AS BIGINT) AS forecast_cents
+           {cents_units_sql("h.l")} AS level_cents,
+           {cents_units_sql("h.b")} AS trend_cents,
+           {cents_units_sql("h.s_cur")} AS season_cents,
+           {cents_units_sql("h.fc")} AS forecast_cents
     FROM h CROSS JOIN nn
     WHERE h.t > {HW_PERIOD} AND nn.n >= {2 * HW_PERIOD}
     """,

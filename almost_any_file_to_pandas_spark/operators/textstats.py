@@ -43,7 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.operators.dedup import _word_ngrams_sql
-from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    micro_units,
+    micro_units_sql,
+    register,
+    table,
+    table_wide,
+)
 
 # Tiny embedded stopword sets per language — enough for a determinstic
 # heuristic; production would swap in full lists (they stay a literal
@@ -771,8 +777,9 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), n AS (SELECT COUNT(*) AS n_docs FROM documents),
     scored AS (
       SELECT tf.doc_id, tf.term, tf.tf,
-             CAST(FLOOR(tf.tf * ln((n.n_docs + 1.0) / (idf.df + 1.0))
-                        * 1000000 + 0.5) AS BIGINT) AS tfidf_q6
+             {micro_units_sql(
+                 "tf.tf * ln((n.n_docs + 1.0) / (idf.df + 1.0))"
+             )} AS tfidf_q6
       FROM tf JOIN idf USING (term) CROSS JOIN n
     ), ranked AS (
       SELECT *, row_number() OVER (
@@ -812,11 +819,9 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "term",
             "tf",
-            F.floor(
+            micro_units(
                 F.col("tf")
                 * F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0))
-                * 1_000_000
-                + F.lit(0.5)
             ).alias("tfidf_q6"),
         )
     )
@@ -1457,7 +1462,7 @@ MIX_BUDGET_DEN = 2  # keep ~half the corpus, temperature-reweighted
       SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
     ), wq AS (
       SELECT source, n_docs,
-             CAST(FLOOR(sqrt(n_docs) * 1000000 + 0.5) AS BIGINT) AS w_q
+             {micro_units_sql("sqrt(n_docs)")} AS w_q
       FROM counts
     ), tot AS (
       SELECT SUM(n_docs) AS total, SUM(w_q) AS sum_wq FROM wq
@@ -1510,9 +1515,7 @@ def text_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = counts.select(
         "source",
         "n_docs",
-        F.floor(F.sqrt(F.col("n_docs")) * 1_000_000 + F.lit(0.5)).alias(
-            "w_q"
-        ),
+        micro_units(F.sqrt(F.col("n_docs"))).alias("w_q"),
     )
     tot = wq.agg(
         F.sum("n_docs").alias("total"), F.sum("w_q").alias("sum_wq")
@@ -3195,8 +3198,9 @@ PPLX_KEEP_THRESHOLD_Q6 = -7_000_000  # keep docs with avg logprob > −7 nats
       )
     ), scored AS (
       SELECT o.doc_id,
-             CAST(FLOOR((ln(b.c_bi + 1) - ln(c.c_ctx + vb.v))
-                        * 1000000 + 0.5) AS BIGINT) AS lp_q6
+             {micro_units_sql(
+                 "ln(b.c_bi + 1) - ln(c.c_ctx + vb.v)"
+             )} AS lp_q6
       FROM occ o
       JOIN big_counts b ON b.prev = o.prev AND b.nxt = o.nxt
       JOIN ctx_counts c ON c.prev = o.prev
@@ -3272,10 +3276,9 @@ def text_bigram_perplexity_filter(
         .crossJoin(F.broadcast(vocab))
         .select(
             "doc_id",
-            F.expr(
-                "CAST(FLOOR((ln(c_bi + 1) - ln(c_ctx + v))"
-                " * 1000000 + 0.5) AS BIGINT)"
-            ).alias("lp_q6"),
+            F.expr(micro_units_sql("ln(c_bi + 1) - ln(c_ctx + v)")).alias(
+                "lp_q6"
+            ),
         )
     )
     per_doc = (
@@ -3314,8 +3317,8 @@ ZIPF_TOP_K = 1000
       SELECT f, ROW_NUMBER() OVER (ORDER BY f DESC, term) AS r
       FROM freqs
     ), pts AS (
-      SELECT CAST(FLOOR(ln(r) * 1000000 + 0.5) AS BIGINT) AS x,
-             CAST(FLOOR(ln(f) * 1000000 + 0.5) AS BIGINT) AS y
+      SELECT {micro_units_sql("ln(r)")} AS x,
+             {micro_units_sql("ln(f)")} AS y
       FROM ranked WHERE r <= {ZIPF_TOP_K}
     ), folds AS (
       SELECT CAST(COUNT(*) AS HUGEINT) AS k,
@@ -3366,10 +3369,10 @@ def text_zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(W.orderBy(F.desc("f"), F.asc("term"))),
     ).where(F.col("r") <= ZIPF_TOP_K)
     pts = ranked.select(
-        F.expr("CAST(FLOOR(ln(r) * 1000000 + 0.5) AS BIGINT)").alias(
+        F.expr(micro_units_sql("ln(r)")).alias(
             "x"
         ),
-        F.expr("CAST(FLOOR(ln(f) * 1000000 + 0.5) AS BIGINT)").alias(
+        F.expr(micro_units_sql("ln(f)")).alias(
             "y"
         ),
     )

@@ -20,7 +20,6 @@ from pathlib import Path
 from typing import List, Union
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
 
@@ -100,12 +99,6 @@ def _xz_decompress_to_temp(p: Path, inner_suffix: str):
     return tmp.name
 
 
-def _empty_df(spark: SparkSession):
-    return spark.createDataFrame([], T.StructType([]))
-
-
-def _failed(spark: SparkSession, path: str) -> List[ParseResult]:
-    return [ParseResult(data=_empty_df(spark), file_path=path).mark_failed()]
 
 
 def parse(
@@ -141,7 +134,7 @@ def parse(
     )
     if is_tar:
         if not p.is_file():
-            return _failed(spark, str(path))
+            return [ParseResult.failed(spark, str(path))]
         from almost_any_file_to_pandas_spark.sources.archive import read_tar
 
         return read_tar(spark, p, **options)
@@ -164,7 +157,7 @@ def parse(
         ):
             tmp_name = _xz_decompress_to_temp(p, inner)
             if tmp_name is None:
-                return _failed(spark, str(path))
+                return [ParseResult.failed(spark, str(path))]
             results = parse(spark, tmp_name, **options)
             for r in results:
                 r.file_path = str(Path(path).absolute())
@@ -178,13 +171,13 @@ def parse(
     if p.is_dir() and extension in (".parquet", ".orc"):
         pass
     elif not p.is_file():
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
     else:
         try:
             with open(p, "rb"):
                 pass
         except (PermissionError, OSError):
-            return _failed(spark, str(path))
+            return [ParseResult.failed(spark, str(path))]
 
     try:
         if extension in EXCEL_SUFFIXES:
@@ -305,7 +298,7 @@ def parse(
     except Exception:
         # Importer blow-ups degrade to a failed answer, as the
         # reference's logging-and-continue philosophy dictates.
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
 
     # Unknown extension (main.py:163-165).
-    return _failed(spark, str(path))
+    return [ParseResult.failed(spark, str(path))]

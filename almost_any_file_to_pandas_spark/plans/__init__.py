@@ -59,6 +59,14 @@ ORACLES: Dict[str, str] = {}
 # saturates silently under ANSI: floor(1e20d) is 2^63 - 1 and
 # floor(NaN) is 0.
 #
+# One half-up step serves every integer unit: micro-units (10^6, also
+# the q6 quantizer of a derived statistic) and per-row whole cents
+# (100). With v = x·scale + 0.5 and t = CAST(v AS BIGINT), the floor
+# is t − (v < t). Spark's cast truncates toward zero and DuckDB 1.0's
+# rounds to nearest, but either way t is ⌊v⌋ or ⌈v⌉, so t − (v < t)
+# is ⌊v⌋ on both engines: one SQL text, valid in DuckDB and in Spark
+# SQL, that raises wherever the cast does.
+#
 # Integer division truncates toward zero on both engines: Spark `div`
 # (on BIGINT and on DECIMAL(38,0) alike) and DuckDB `//` on integer
 # operands (BIGINT, HUGEINT) both give -7 div 2 = -3. A twin pair
@@ -68,13 +76,31 @@ ORACLES: Dict[str, str] = {}
 # exact DECIMAL instead.
 
 
-def micro_units(col: Column) -> Column:
-    """``FLOOR(col·1e6 + 0.5)`` as BIGINT: ``t − (v < t)`` with
-    ``v = col·1e6 + 0.5`` and ``t = CAST(v AS BIGINT)`` (the cast
-    truncates toward zero). Raises for |col| ≥ 9.2e12, NaN or ±inf."""
-    v = col * F.lit(1_000_000.0) + F.lit(0.5)
+def _half_up(col: Column, scale: int) -> Column:
+    """``FLOOR(col·scale + 0.5)`` as BIGINT, raising outside BIGINT."""
+    v = col * F.lit(float(scale)) + F.lit(0.5)
     t = v.cast("bigint")
     return t - (v < t).cast("bigint")
+
+
+def _half_up_sql(expr: str, scale: int) -> str:
+    """Twin of :func:`_half_up`, valid in DuckDB and in Spark SQL."""
+    v = f"(({expr}) * {scale} + 0.5)"
+    t = f"CAST({v} AS BIGINT)"
+    return f"({t} - CAST({v} < {t} AS BIGINT))"
+
+
+def micro_units(col: Column) -> Column:
+    """``FLOOR(col·1e6 + 0.5)`` as BIGINT: micro-units of a summand,
+    or the q6 quantization of a derived statistic. Raises for
+    |col| ≥ 9.2e12, NaN or ±inf."""
+    return _half_up(col, 1_000_000)
+
+
+def cents_units(col: Column) -> Column:
+    """``FLOOR(col·100 + 0.5)`` as BIGINT: one row's whole cents.
+    Raises for |col| ≥ 9.2e16, NaN or ±inf."""
+    return _half_up(col, 100)
 
 
 def micro_sum(col: Column) -> Column:
@@ -120,8 +146,13 @@ def exact_sum_sq(col: Column) -> Column:
 
 
 def micro_units_sql(expr: str) -> str:
-    """DuckDB twin of :func:`micro_units`."""
-    return f"CAST(FLOOR(({expr}) * 1000000 + 0.5) AS BIGINT)"
+    """Twin of :func:`micro_units`."""
+    return _half_up_sql(expr, 1000000)
+
+
+def cents_units_sql(expr: str) -> str:
+    """Twin of :func:`cents_units`."""
+    return _half_up_sql(expr, 100)
 
 
 def micro_sum_sql(expr: str) -> str:

@@ -10,11 +10,11 @@ minimax closed form.
 
 Engine-portability discipline (SURVEY.md invariants): every statistic
 is computed in EXACT integer arithmetic — cents quantization via
-``FLOOR(x*100+0.5)``, doubled ranks so tie-averaged ranks stay
-integral, q6/q12 fixed-point ratios via widened integer division
-(``DECIMAL(38,0)`` on Spark, ``HUGEINT`` on DuckDB — integer
-operands only, because DuckDB ``//`` on DECIMAL rounds first), no
-transcendentals, no ORDER-sensitive double sums.
+``cents_units`` (``FLOOR(x·100 + 0.5)``), doubled ranks so
+tie-averaged ranks stay integral, q6/q12 fixed-point ratios via
+widened integer division (``DECIMAL(38,0)`` on Spark, ``HUGEINT`` on
+DuckDB — integer operands only, because DuckDB ``//`` on DECIMAL
+rounds first), no transcendentals, no ORDER-sensitive double sums.
 
 Scale notes (100 TB mindset): every operator here reduces the fact
 table to a BOUNDED intermediate before any global-order window runs —
@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
+    cents_units,
+    cents_units_sql,
     exact_sum,
     exact_sum_sql,
     micro_cents,
@@ -47,7 +49,7 @@ from almost_any_file_to_pandas_spark.plans import (
     table_wide,
 )
 
-CENTS = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
+CENTS = cents_units_sql("o_totalprice")
 
 # Shared daily-orders frame: one corpus-sized hash aggregate reduces
 # orders to (day, order count, revenue cents) — calendar-bounded
@@ -647,9 +649,9 @@ def orders_hodges_lehmann_shift(
 
 @register(
     "lineitem_isotonic_return_rate",
-    oracle="""
+    oracle=f"""
     WITH levels AS (
-      SELECT CAST(FLOOR(l_discount * 100 + 0.5) AS INT) AS pct,
+      SELECT CAST({cents_units_sql("l_discount")} AS INT) AS pct,
              COUNT(*) AS n,
              SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS r
       FROM lineitem GROUP BY 1
@@ -703,7 +705,7 @@ def lineitem_isotonic_return_rate(
     """
     lineitem = table(spark, sf_dir, "lineitem")
     levels = lineitem.groupBy(
-        F.expr("CAST(FLOOR(l_discount * 100 + 0.5) AS INT)").alias("pct")
+        cents_units(F.col("l_discount")).cast("int").alias("pct")
     ).agg(
         F.count("*").alias("n"),
         F.sum(
@@ -1010,7 +1012,7 @@ _CA_Z2 = (
     "lineitem_trend_test_ca",
     oracle=f"""
     WITH levels AS (
-      SELECT CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT) AS w,
+      SELECT {cents_units_sql("l_discount")} AS w,
              COUNT(*) AS nk,
              SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS rk
       FROM lineitem GROUP BY 1
@@ -1044,7 +1046,7 @@ def lineitem_trend_test_ca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = table(spark, sf_dir, "lineitem")
     levels = li.groupBy(
-        F.expr("CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)").alias(
+        F.expr(cents_units_sql("l_discount")).alias(
             "w"
         )
     ).agg(
@@ -1416,8 +1418,7 @@ TOPSIS_TOP = 20  # suppliers in the final ranking
     ), q AS (
       SELECT s_suppkey,
              CASE WHEN dp + dm = 0 THEN 500000
-                  ELSE CAST(FLOOR(dm / (dp + dm) * 1000000 + 0.5)
-                            AS BIGINT) END AS topsis_q6
+                  ELSE {micro_units_sql("dm / (dp + dm)")} END AS topsis_q6
       FROM scored
     )
     SELECT s_suppkey, topsis_q6, rnk FROM (
@@ -1494,8 +1495,7 @@ def supplier_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "s_suppkey",
             "CASE WHEN dp + dm = 0 THEN 500000"
-            " ELSE CAST(FLOOR(dm / (dp + dm) * 1000000 + 0.5)"
-            " AS BIGINT) END AS topsis_q6",
+            f" ELSE {micro_units_sql('dm / (dp + dm)')} END AS topsis_q6",
         )
     )
     top = q.orderBy(F.desc("topsis_q6"), F.asc("s_suppkey")).limit(
@@ -1512,6 +1512,7 @@ def supplier_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 XYZ_CUT_X_Q6 = 550_000  # demand CV below → X (stable)
 XYZ_CUT_Y_Q6 = 700_000  # ... below → Y; else Z (erratic)
 ABC_PART_SHIFT = 18  # part-revenue band width (the customer-ABC trick)
+_XYZ_CV_Q6_SQL = micro_units_sql("sqrt(n * s2 - s * s) / s")
 
 
 @register(
@@ -1540,12 +1541,8 @@ ABC_PART_SHIFT = 18  # part-revenue band width (the customer-ABC trick)
                   WHEN cum * 20 <= t * 19 THEN 'B'
                   ELSE 'C' END AS abc_class,
              CASE WHEN s = 0 THEN 'Z'
-                  WHEN CAST(FLOOR(sqrt(n * s2 - s * s) / s * 1000000
-                                  + 0.5) AS BIGINT) < {XYZ_CUT_X_Q6}
-                    THEN 'X'
-                  WHEN CAST(FLOOR(sqrt(n * s2 - s * s) / s * 1000000
-                                  + 0.5) AS BIGINT) < {XYZ_CUT_Y_Q6}
-                    THEN 'Y'
+                  WHEN {_XYZ_CV_Q6_SQL} < {XYZ_CUT_X_Q6} THEN 'X'
+                  WHEN {_XYZ_CV_Q6_SQL} < {XYZ_CUT_Y_Q6} THEN 'Y'
                   ELSE 'Z' END AS xyz_class
       FROM walk
     )
@@ -1618,10 +1615,7 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("t"),
     )
-    cv_q6 = (
-        "CAST(FLOOR(sqrt(CAST(n * s2 - s * s AS DOUBLE)) / s * 1000000"
-        " + 0.5) AS BIGINT)"
-    )
+    cv_q6 = micro_units_sql("sqrt(CAST(n * s2 - s * s AS DOUBLE)) / s")
     classed = (
         p.join(F.broadcast(bwalk), "band")
         .withColumn(

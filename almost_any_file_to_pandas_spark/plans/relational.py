@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from almost_any_file_to_pandas_spark.plans import (
+    cents_units,
+    cents_units_sql,
     exact_sum,
     exact_sum_sql,
     from_micro,
@@ -45,6 +47,7 @@ from almost_any_file_to_pandas_spark.plans import (
     micro_cents_sql,
     micro_sum,
     micro_sum_sql,
+    micro_units_sql,
     register,
     table,
 )
@@ -3587,10 +3590,10 @@ PARETO_NB = 4096  # histogram buckets per refinement pass
 
 @register(
     "orders_pareto_concentration",
-    oracle="""
+    oracle=f"""
     WITH cust_rev AS (
       SELECT o_custkey,
-             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+             SUM({cents_units_sql("o_totalprice")})
                AS rev
       FROM orders GROUP BY o_custkey
     ), tot AS (
@@ -3654,7 +3657,7 @@ def orders_pareto_concentration(
         orders.groupBy("o_custkey")
         .agg(
             F.sum(
-                F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
+                F.expr(cents_units_sql("o_totalprice"))
             ).alias("rev")
         )
         .select(F.col("rev").cast("decimal(38,0)").alias("rev"))
@@ -3757,10 +3760,10 @@ def orders_pareto_concentration(
 
 @register(
     "part_skyline_frontier",
-    oracle="""
+    oracle=f"""
     WITH p AS (
       SELECT p_partkey, p_size,
-             CAST(FLOOR(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
+             {cents_units_sql("p_retailprice")} AS price_cents
       FROM part
     )
     SELECT a.p_partkey, a.p_size, a.price_cents
@@ -3802,9 +3805,7 @@ def part_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = part.select(
         "p_partkey",
         "p_size",
-        F.expr(
-            "CAST(FLOOR(p_retailprice * 100 + 0.5) AS BIGINT)"
-        ).alias("price_cents"),
+        cents_units(F.col("p_retailprice")).alias("price_cents"),
     )
     per_size = p.groupBy("p_size").agg(
         F.min("price_cents").alias("min_cents")
@@ -3835,10 +3836,10 @@ def part_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_cusum_changepoint",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
-             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev
+             SUM({cents_units_sql("o_totalprice")}) AS rev
       FROM orders GROUP BY 1
     ), tot AS (
       SELECT COUNT(*) AS n, SUM(CAST(rev AS HUGEINT)) AS total FROM daily
@@ -3883,7 +3884,7 @@ def orders_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
         F.sum(
-            F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
+            F.expr(cents_units_sql("o_totalprice"))
         ).alias("rev")
     )
     w_all = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -3929,7 +3930,7 @@ _BENFORD_Q6 = {
       {", ".join(f"({d}, {q})" for d, q in sorted(_BENFORD_Q6.items()))}
     ), c AS (
       SELECT CAST(SUBSTR(CAST(
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
+               {cents_units_sql("o_totalprice")}
              AS VARCHAR), 1, 1) AS INT) AS digit,
              COUNT(*) AS n
       FROM orders GROUP BY 1
@@ -3966,10 +3967,11 @@ def orders_benford_first_digit(
     """
     orders = table(spark, sf_dir, "orders")
     counts = orders.select(
-        F.expr(
-            "CAST(SUBSTR(CAST(CAST(FLOOR(o_totalprice * 100 + 0.5)"
-            " AS BIGINT) AS STRING), 1, 1) AS INT)"
-        ).alias("digit")
+        cents_units(F.col("o_totalprice"))
+        .cast("string")
+        .substr(1, 1)
+        .cast("int")
+        .alias("digit")
     ).groupBy("digit").agg(F.count("*").alias("n"))
     total = counts.agg(F.sum("n").alias("total"))
     spine = spark.createDataFrame(
@@ -4000,7 +4002,7 @@ EWMA_LAGS = 40  # α=1/2 EWMA truncated to 40 calendar lags (tail < 2⁻⁴⁰)
     oracle=f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
-             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev
+             SUM({cents_units_sql("o_totalprice")}) AS rev
       FROM orders GROUP BY 1
     )
     SELECT CAST(a.day AS VARCHAR) AS day,
@@ -4043,7 +4045,7 @@ def orders_ewma_trailing_demand(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
         F.sum(
-            F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
+            F.expr(cents_units_sql("o_totalprice"))
         ).alias("rev")
     ).localCheckpoint(eager=True)  # calendar-sized; feeds both join sides
     a = daily.select(
@@ -4081,11 +4083,11 @@ def orders_ewma_trailing_demand(
 
 @register(
     "orders_daily_gap_fill",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
              COUNT(*) AS n_orders,
-             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev
+             SUM({cents_units_sql("o_totalprice")}) AS rev
       FROM orders GROUP BY 1
     ), spine AS (
       SELECT CAST(UNNEST(generate_series(
@@ -4129,7 +4131,7 @@ def orders_daily_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count("*").alias("n_orders"),
         F.sum(
-            F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
+            F.expr(cents_units_sql("o_totalprice"))
         ).alias("rev"),
     )
     bounds = daily.agg(
@@ -4156,14 +4158,14 @@ def orders_daily_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_decile_churn",
-    oracle="""
+    oracle=f"""
     WITH span AS (
       SELECT EXTRACT(YEAR FROM MIN(o_orderdate)) AS y0,
              EXTRACT(YEAR FROM MAX(o_orderdate)) AS y1
       FROM orders
     ), per AS (
       SELECT o_custkey AS c, EXTRACT(YEAR FROM o_orderdate) AS y,
-             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev
+             SUM({cents_units_sql("o_totalprice")}) AS rev
       FROM orders, span
       WHERE EXTRACT(YEAR FROM o_orderdate) IN (span.y0, span.y1)
       GROUP BY 1, 2
@@ -4222,7 +4224,7 @@ def customer_decile_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
+                F.expr(cents_units_sql("o_totalprice"))
             ).alias("rev")
         )
     )
@@ -4362,15 +4364,14 @@ def orders_market_basket_lift(
 # IEEE correctly-rounded, so identical text on identical integer
 # inputs yields bit-identical doubles — the quantized bound hashes.
 # Constants are exact decimal squares of z = 1.96.
-_WILSON_LO = (
-    "CAST(FLOOR((("
+_WILSON_LO = micro_units_sql(
+    "("
     "(CAST(k AS DOUBLE) / CAST(n AS DOUBLE))"
     " + 1.9208 / CAST(n AS DOUBLE)"
     " - 1.96 * sqrt((((CAST(k AS DOUBLE) / CAST(n AS DOUBLE))"
     " * (1.0 - (CAST(k AS DOUBLE) / CAST(n AS DOUBLE))))"
     " + 0.9604 / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE))"
-    ") / (1.0 + 3.8416 / CAST(n AS DOUBLE)))"
-    " * 1000000 + 0.5) AS BIGINT)"
+    ") / (1.0 + 3.8416 / CAST(n AS DOUBLE))"
 )
 
 
@@ -4565,7 +4566,7 @@ TRIM_DENOM = 20  # drop n div 20 (5%) from each tail
     oracle=f"""
     WITH census AS (
       SELECT o_orderpriority AS pr,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+             {cents_units_sql("o_totalprice")} AS cents,
              COUNT(*) AS cnt
       FROM orders GROUP BY 1, 2
     ), walk AS (
@@ -4619,9 +4620,7 @@ def orders_trimmed_mean_by_priority(
     orders = table(spark, sf_dir, "orders")
     census = orders.groupBy(
         F.col("o_orderpriority").alias("pr"),
-        F.expr(
-            "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
-        ).alias("cents"),
+        cents_units(F.col("o_totalprice")).alias("cents"),
     ).agg(F.count("*").alias("cnt"))
     w_pr = W.partitionBy("pr")
     walk = census.select(
@@ -4821,10 +4820,10 @@ def events_weekly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_revenue_gini",
-    oracle="""
+    oracle=f"""
     WITH per AS (
       SELECT o_custkey,
-             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS x
+             SUM({cents_units_sql("o_totalprice")}) AS x
       FROM orders GROUP BY 1
     ), census AS (
       SELECT x, COUNT(*) AS cnt FROM per GROUP BY x
@@ -4870,7 +4869,7 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     per = orders.groupBy("o_custkey").agg(
         F.sum(
-            F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
+            F.expr(cents_units_sql("o_totalprice"))
         ).alias("x")
     )
     census = per.groupBy("x").agg(F.count("*").alias("cnt"))
@@ -4919,7 +4918,7 @@ IVM_CUST_MOD = 13
       SELECT c.c_mktsegment AS segment,
              (o.o_orderkey % {IVM_ORDER_MOD} = 0) AS d_o,
              (c.c_custkey % {IVM_CUST_MOD} = 0) AS d_c,
-             CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_units_sql("o.o_totalprice")} AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     )
     SELECT segment,
@@ -4961,7 +4960,7 @@ def orders_join_ivm_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
+        F.expr(cents_units_sql("o_totalprice")).alias(
             "cents"
         ),
     )
@@ -5017,13 +5016,13 @@ PRICE_INDEX_CURR_YEAR = 2001
     WITH per_part AS (
       SELECT l_partkey,
              SUM(CASE WHEN year(l_shipdate) = {PRICE_INDEX_BASE_YEAR}
-                 THEN CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+                 THEN {cents_units_sql("l_extendedprice")}
                  ELSE 0 END) AS p0_cents,
              SUM(CASE WHEN year(l_shipdate) = {PRICE_INDEX_BASE_YEAR}
                  THEN CAST(FLOOR(l_quantity + 0.5) AS BIGINT)
                  ELSE 0 END) AS q0,
              SUM(CASE WHEN year(l_shipdate) = {PRICE_INDEX_CURR_YEAR}
-                 THEN CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+                 THEN {cents_units_sql("l_extendedprice")}
                  ELSE 0 END) AS p1_cents,
              SUM(CASE WHEN year(l_shipdate) = {PRICE_INDEX_CURR_YEAR}
                  THEN CAST(FLOOR(l_quantity + 0.5) AS BIGINT)
@@ -5070,7 +5069,7 @@ def lineitem_price_index_basket(
     """
     li = table(spark, sf_dir, "lineitem")
     y0, y1 = PRICE_INDEX_BASE_YEAR, PRICE_INDEX_CURR_YEAR
-    cents = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
+    cents = cents_units_sql("l_extendedprice")
     qty = "CAST(FLOOR(l_quantity + 0.5) AS BIGINT)"
     per_part = (
         li.filter(F.expr(f"year(l_shipdate) IN ({y0}, {y1})"))
@@ -5317,11 +5316,11 @@ def star_referential_integrity_audit(
 
 @register(
     "customer_cohort_ltv_curve",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT o_custkey,
              year(o_orderdate) * 100 + month(o_orderdate) AS ym,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_units_sql("o_totalprice")} AS cents
       FROM orders
     ), coh AS (
       SELECT o_custkey, MIN(ym) AS cohort_ym FROM base GROUP BY 1
@@ -5368,9 +5367,7 @@ def customer_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.select(
         "o_custkey",
         (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("ym"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents_units(F.col("o_totalprice")).alias("cents"),
     )
     coh = base.groupBy("o_custkey").agg(F.min("ym").alias("cohort_ym"))
     j = base.join(coh, "o_custkey").select(
@@ -5615,7 +5612,7 @@ def lineitem_join_order_advisor(
 
 @register(
     "star_denormalize_audit",
-    oracle="""
+    oracle=f"""
     WITH wide AS (
       SELECT l.l_quantity, l.l_extendedprice, l.l_discount,
              o.o_orderdate, o.o_orderpriority,
@@ -5633,8 +5630,8 @@ def lineitem_join_order_advisor(
            CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(COUNT(DISTINCT c_mktsegment) AS BIGINT) AS n_segments,
            CAST(COUNT(DISTINCT p_brand) AS BIGINT) AS n_brands,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100
-                + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
+           CAST(SUM({cents_units_sql("l_extendedprice * (1 - l_discount)")})
+                AS BIGINT) AS revenue_cents,
            CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
     FROM wide GROUP BY cust_region
     """,
@@ -5692,10 +5689,7 @@ def star_denormalize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_regionkey") == region["r_regionkey"],
         )
     )
-    rev = F.expr(
-        "CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5)"
-        " AS BIGINT)"
-    )
+    rev = cents_units(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return wide.groupBy(F.col("r_name").alias("cust_region")).agg(
         F.count("*").cast("long").alias("n_rows"),
         F.countDistinct("c_mktsegment").cast("long").alias("n_segments"),

@@ -19,7 +19,8 @@ import os
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 STATUS_SUCCESS = "OK"  # reference literal, main.py:103
 STATUS_FAILED = "Failed"
@@ -77,6 +78,17 @@ class ParseResult:
         façade's error paths, main.py:134-144)."""
         self._parse_info = STATUS_FAILED
         return self
+
+    @classmethod
+    def failed(
+        cls, spark: SparkSession, file_path: str, **meta: str
+    ) -> "ParseResult":
+        """An empty, column-less table already marked Failed, with
+        ``meta`` (``engine``, ``sheet_name``, …) set as given: the one
+        result every source returns for a file or table it cannot
+        read."""
+        empty = spark.createDataFrame([], T.StructType([]))
+        return cls(data=empty, file_path=file_path, **meta).mark_failed()
 
     @property
     def ok(self) -> bool:

@@ -9,10 +9,13 @@ already is, on the driver, and a bigger one in executor tasks, which
 also bounds what the driver decodes of such a file. Workbook and HTML
 grids are parsed on the driver at any size.
 
-* :func:`arrow_frame` hands a driver-built Arrow batch over as
-  ``clamp(ceil(nbytes / cut), 1, defaultParallelism)`` partitions, rows
-  in order. Driver-decoded string grids (xlsx and the other workbook
-  formats, SpreadsheetML, HTML) go through :func:`grid_frame`.
+* :func:`arrow_frame` hands a driver-built Arrow batch or table over
+  as ``clamp(ceil(nbytes / cut), 1, defaultParallelism)`` partitions
+  (:func:`_byte_sized`), rows in order; :func:`pandas_frame` does the
+  same for a pandas frame (pickle, NumPy arrays, dict-shaped JSON).
+  Driver-decoded string grids (xlsx and the other workbook formats,
+  SpreadsheetML, HTML) go through :func:`grid_frame`; Feather and
+  Arrow IPC tables go through :func:`arrow_frame` as they are.
 * :func:`decoded_frame` is the rule for range-addressable formats
   (SQLite rowids, DBF records): each supplies ``decode(lo, hi) ->
   RecordBatch``; at or under the cut the whole table is one driver
@@ -52,17 +55,34 @@ def _mb(nbytes: int) -> str:
     return f"{nbytes / 2**20:.3g} MB"
 
 
-def arrow_frame(spark: SparkSession, batch) -> DataFrame:
-    """A driver-built ``pyarrow.RecordBatch`` as a DataFrame of
+def _byte_sized(df: DataFrame, nbytes: int) -> DataFrame:
+    """A DataFrame handed over from the driver, coalesced to
     ``clamp(ceil(nbytes / DRIVER_DECODE_BYTES), 1, defaultParallelism)``
-    partitions. The hand-off slices the batch into
+    partitions. The hand-off slices the data into
     ``defaultParallelism`` pieces in order; the coalesce merges
-    neighbours, so rows stay in batch order. No Python worker runs."""
+    neighbours, so rows stay in order."""
+    n = -(-int(nbytes) // DRIVER_DECODE_BYTES)
+    return df.coalesce(
+        max(1, min(n, df.sparkSession.sparkContext.defaultParallelism))
+    )
+
+
+def arrow_frame(spark: SparkSession, data) -> DataFrame:
+    """A driver-built ``pyarrow.RecordBatch`` or ``Table`` as a
+    :func:`_byte_sized` DataFrame. No Python worker runs."""
     import pyarrow as pa
 
-    n = -(-batch.nbytes // DRIVER_DECODE_BYTES)
-    n = max(1, min(n, spark.sparkContext.defaultParallelism))
-    return spark.createDataFrame(pa.Table.from_batches([batch])).coalesce(n)
+    if isinstance(data, pa.RecordBatch):
+        data = pa.Table.from_batches([data])
+    return _byte_sized(spark.createDataFrame(data), data.nbytes)
+
+
+def pandas_frame(spark: SparkSession, pdf) -> DataFrame:
+    """A driver-built pandas frame as a :func:`_byte_sized` DataFrame,
+    typed by ``createDataFrame``'s pandas inference."""
+    return _byte_sized(
+        spark.createDataFrame(pdf), pdf.memory_usage(deep=True).sum()
+    )
 
 
 def grid_frame(spark: SparkSession, grid: list[list[str]]) -> DataFrame:

@@ -88,7 +88,6 @@ def read_zip(
 
     from almost_any_file_to_pandas_spark.parse import (
         XZ_MAX_DECOMPRESSED_BYTES,
-        _failed,
         _register_temp_file,
         parse,
     )
@@ -97,7 +96,7 @@ def read_zip(
     try:
         zf = zipfile.ZipFile(str(p))
     except (zipfile.BadZipFile, OSError):
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
 
     results: List[ParseResult] = []
     with zf:
@@ -155,7 +154,7 @@ def read_zip(
                 r.temp_path = tmp.name
                 results.append(r)
     if not results:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
     return results
 
 
@@ -178,7 +177,6 @@ def read_tar(
 
     from almost_any_file_to_pandas_spark.parse import (
         XZ_MAX_DECOMPRESSED_BYTES,
-        _failed,
         _register_temp_file,
         parse,
     )
@@ -187,7 +185,7 @@ def read_tar(
     try:
         tf = tarfile.open(str(p), mode="r:*")
     except (tarfile.TarError, OSError):
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
 
     results: List[ParseResult] = []
     with tf:
@@ -241,5 +239,5 @@ def read_tar(
                 r.temp_path = tmp.name
                 results.append(r)
     if not results:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
     return results

@@ -31,6 +31,7 @@ from typing import Union
 from pyspark.sql import SparkSession
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources import arrow_frame, pandas_frame
 
 
 def read_parquet(
@@ -148,7 +149,7 @@ def read_json(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
         else:
             pdf = pd.read_json(path)
             engine = "pandas.read_json -> createDataFrame"
-        df = spark.createDataFrame(pdf)
+        df = pandas_frame(spark, pdf)
     return ParseResult(
         data=df,
         sheet_name="JSON file content",  # main.py:434
@@ -177,7 +178,7 @@ def read_pickle(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
     pdf = pd.read_pickle(str(path))  # noqa: S301 - format parity with reference
     if not isinstance(pdf, pd.DataFrame):
         pdf = pd.DataFrame(pdf)
-    df = spark.createDataFrame(pdf)
+    df = pandas_frame(spark, pdf)
     return ParseResult(
         data=df,
         sheet_name="Pickle file content",  # deviation: main.py:447 says "JSON"
@@ -249,7 +250,7 @@ def read_feather(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
             [f.with_type(supported.get(f.type, f.type)) for f in tbl.schema]
         )
     )
-    df = spark.createDataFrame(tbl)
+    df = arrow_frame(spark, tbl)
     return ParseResult(
         data=df,
         sheet_name="Feather file content",

@@ -154,25 +154,23 @@ def _decode(
 def read_dbf(
     spark: SparkSession, path: Union[str, Path], **options
 ) -> List[ParseResult]:
-    from almost_any_file_to_pandas_spark.parse import _failed
-
     p = Path(path)
     try:
         with open(p, "rb") as fh:
             head = fh.read(32)
             if len(head) < 32:
-                return _failed(spark, str(path))
+                return [ParseResult.failed(spark, str(path))]
             header_size = struct.unpack("<H", head[8:10])[0]
             fh.seek(0)
             header = fh.read(header_size)
     except OSError:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
     try:
         n_records, header_size, record_size, fields = _read_layout(
             header
         )
     except ValueError:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
 
     schema = T.StructType(
         [T.StructField(f.name, _spark_type(f), True) for f in fields]

@@ -27,7 +27,6 @@ from pathlib import Path
 from typing import List, Union
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
 from almost_any_file_to_pandas_spark.sources import excel_core, grid_frame
@@ -60,13 +59,6 @@ def _register(spark: SparkSession) -> None:
     _registered_sessions.add(key)
 
 
-def _failed(spark: SparkSession, path: str, engine: str) -> List[ParseResult]:
-    empty = spark.createDataFrame([], T.StructType([]))
-    return [
-        ParseResult(
-            data=empty, file_path=path, engine=engine
-        ).mark_failed()
-    ]
 
 
 def read_excel(
@@ -86,7 +78,11 @@ def read_excel(
                 p, sheet_name=None, header=None, index_col=None, dtype=str
             )
         except Exception:
-            return _failed(spark, str(p), engine=f"pandas[{suffix}] unavailable")
+            return [
+                ParseResult.failed(
+                    spark, str(p), engine=f"pandas[{suffix}] unavailable"
+                )
+            ]
         out = []
         for name, frame in sheets.items():
             grid = frame.fillna("").astype(str).values.tolist()
@@ -98,11 +94,11 @@ def read_excel(
                     engine="pandas",
                 )
             )
-        return out or _failed(spark, str(p), engine="pandas")
+        return out or [ParseResult.failed(spark, str(p), engine="pandas")]
 
     inventory = excel_core.sheet_inventory(str(p), fmt)
     if not inventory:  # no sheets → failed (main.py:251-253)
-        return _failed(spark, str(p), engine=fmt)
+        return [ParseResult.failed(spark, str(p), engine=fmt)]
 
     results: List[ParseResult] = []
     for sheet_name, ref in inventory:

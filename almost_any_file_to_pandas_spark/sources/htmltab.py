@@ -28,7 +28,6 @@ from pathlib import Path
 from typing import List, Union
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
 from almost_any_file_to_pandas_spark.sources import grid_frame
@@ -175,14 +174,6 @@ def extract_tables(text: str) -> list[list[list[str]]]:
     return p.finish()
 
 
-def _failed(spark: SparkSession, path: str) -> List[ParseResult]:
-    return [
-        ParseResult(
-            data=spark.createDataFrame([], T.StructType([])),
-            file_path=path,
-            engine="html",
-        ).mark_failed()
-    ]
 
 
 def read_html(
@@ -195,7 +186,7 @@ def read_html(
     try:
         raw = p.read_bytes()
     except OSError:
-        return _failed(spark, str(p))
+        return [ParseResult.failed(spark, str(p), engine="html")]
     try:
         text = raw.decode("utf-8")
         encoding = "utf-8"
@@ -212,7 +203,7 @@ def read_html(
             engine="html",
         )
         for i, grid in enumerate(grids)
-    ] or _failed(spark, str(p))
+    ] or [ParseResult.failed(spark, str(p), engine="html")]
 
 
 def read_html_many(spark: SparkSession, paths):

@@ -31,6 +31,7 @@ from typing import List, Optional, Union
 from pyspark.sql import DataFrame, SparkSession
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources import pandas_frame
 
 NPY_MAX_COLUMNS = 4096  # a wider matrix is data modeling gone wrong
 
@@ -82,7 +83,7 @@ def _frame_from_array(spark: SparkSession, arr) -> Optional[DataFrame]:
         return None
     pdf = pd.DataFrame(data)
     pdf.insert(0, "row_id", range(len(pdf)))
-    return spark.createDataFrame(pdf)
+    return pandas_frame(spark, pdf)
 
 
 def read_npy(
@@ -90,16 +91,14 @@ def read_npy(
 ) -> List[ParseResult]:
     import numpy as np
 
-    from almost_any_file_to_pandas_spark.parse import _failed
-
     p = str(path)
     try:
         arr = np.load(p, allow_pickle=False, mmap_mode="r")
     except (OSError, ValueError):
-        return _failed(spark, p)
+        return [ParseResult.failed(spark, p)]
     df = _frame_from_array(spark, np.asarray(arr))
     if df is None:
-        return _failed(spark, p)
+        return [ParseResult.failed(spark, p)]
     return [
         ParseResult(
             data=df,
@@ -115,13 +114,11 @@ def read_npz(
 ) -> List[ParseResult]:
     import numpy as np
 
-    from almost_any_file_to_pandas_spark.parse import _failed
-
     p = str(path)
     try:
         bundle = np.load(p, allow_pickle=False)
     except (OSError, ValueError):
-        return _failed(spark, p)
+        return [ParseResult.failed(spark, p)]
     results: List[ParseResult] = []
     with bundle:
         for name in sorted(bundle.files):
@@ -141,5 +138,5 @@ def read_npz(
                 )
             )
     if not results:
-        return _failed(spark, p)
+        return [ParseResult.failed(spark, p)]
     return results

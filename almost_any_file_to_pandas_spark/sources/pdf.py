@@ -37,14 +37,6 @@ UNSIZED = "PDF file content (unsized)"
 BY_PAGE = "PDF file content (by page)"  # main.py:407
 
 
-def _failed(spark: SparkSession, path: str, engine: str) -> List[ParseResult]:
-    return [
-        ParseResult(
-            data=spark.createDataFrame([], T.StructType([])),
-            file_path=path,
-            engine=engine,
-        ).mark_failed()
-    ]
 
 
 def _to_spark(spark: SparkSession, pdf_frame):
@@ -74,14 +66,14 @@ def read_pdf(
         except Exception:
             frames = []
         if not frames:
-            return _failed(spark, str(p), engine=engine)
+            return [ParseResult.failed(spark, str(p), engine=engine)]
     else:
         try:
             frames = tabula.read_pdf(str(p), pages="all", header=None)
         except Exception:
-            return _failed(spark, str(p), engine=engine)
+            return [ParseResult.failed(spark, str(p), engine=engine)]
         if not frames:
-            return _failed(spark, str(p), engine=engine)
+            return [ParseResult.failed(spark, str(p), engine=engine)]
 
     if not concat:
         # Reference labels every per-page answer identically
@@ -121,12 +113,9 @@ def read_pdf(
         )
     else:
         results.append(
-            ParseResult(
-                data=spark.createDataFrame([], T.StructType([])),
-                sheet_name=CONCATED,
-                file_path=str(p),
-                engine=engine,
-            ).mark_failed()
+            ParseResult.failed(
+                spark, str(p), sheet_name=CONCATED, engine=engine
+            )
         )
     if invalid:
         merged = pd.concat(invalid, ignore_index=True, sort=False)

@@ -189,15 +189,13 @@ def read_sqlite(
     intact catalog) is one failed result beside the healthy tables;
     over the cut such a table fails when a Spark action scans it.
     """
-    from almost_any_file_to_pandas_spark.parse import _empty_df, _failed
-
     p = Path(path)
     try:
         with open(p, "rb") as fh:
             if fh.read(16) != SQLITE_MAGIC:
-                return _failed(spark, str(path))
+                return [ParseResult.failed(spark, str(path))]
     except OSError:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
 
     abspath = str(p.absolute())
     try:
@@ -214,10 +212,10 @@ def read_sqlite(
         finally:
             con.close()
     except sqlite3.Error:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
 
     if not tables:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
 
     nbytes = p.stat().st_size
     results: List[ParseResult] = []
@@ -241,12 +239,12 @@ def read_sqlite(
             # a driver decode that hits corrupt pages fails this
             # table only; the file's other tables still parse
             results.append(
-                ParseResult(
-                    data=_empty_df(spark),
+                ParseResult.failed(
+                    spark,
+                    abspath,
                     sheet_name=tbl,
                     engine="sqlite3 (stdlib; driver decode failed)",
-                    file_path=abspath,
-                ).mark_failed()
+                )
             )
             continue
         results.append(
@@ -258,5 +256,5 @@ def read_sqlite(
             )
         )
     if not results:
-        return _failed(spark, str(path))
+        return [ParseResult.failed(spark, str(path))]
     return results

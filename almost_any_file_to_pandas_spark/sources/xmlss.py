@@ -41,14 +41,6 @@ from almost_any_file_to_pandas_spark.sources import grid_frame
 SS_NS = "{urn:schemas-microsoft-com:office:spreadsheet}"
 
 
-def _failed(spark: SparkSession, path: str) -> List[ParseResult]:
-    return [
-        ParseResult(
-            data=spark.createDataFrame([], T.StructType([])),
-            file_path=path,
-            engine="spreadsheetml",
-        ).mark_failed()
-    ]
 
 
 def table_grid(table: ET.Element) -> list[list[str]]:
@@ -130,7 +122,7 @@ def read_spreadsheetml(
     except ET.ParseError:
         salvaged = _salvage_tables(str(p))
         if not salvaged:
-            return _failed(spark, str(p))
+            return [ParseResult.failed(spark, str(p), engine="spreadsheetml")]
         return [
             ParseResult(
                 data=grid_frame(spark, grid),
@@ -168,7 +160,9 @@ def read_spreadsheetml(
         for table in root.iter(f"{SS_NS}Table"):
             emit(table, None)
 
-    return results or _failed(spark, str(p))
+    return results or [
+        ParseResult.failed(spark, str(p), engine="spreadsheetml")
+    ]
 
 
 def read_spreadsheetml_many(spark: SparkSession, paths):

@@ -469,6 +469,25 @@ def test_sessionization_shortest_repr_tie_now_hardened(
     gate_compare(sf, "events_sessionization")
 
 
+def _raises_on_both_engines(spark, sf_dir, table, name):
+    """Query ``name`` over ``sf_dir``'s ``table`` raises CAST_OVERFLOW
+    in Spark and a ConversionException in its DuckDB oracle."""
+    import duckdb
+
+    from almost_any_file_to_pandas_spark import plans
+
+    plans.load_all()
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        plans.QUERIES[name](spark, sf_dir).collect()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW {table} AS SELECT * FROM"
+        f" read_parquet('{sf_dir}/{table}.parquet/*.parquet')"
+    )
+    with pytest.raises(duckdb.ConversionException):
+        con.execute(plans.ORACLES[name]).fetchall()
+
+
 @pytest.mark.parametrize("bad", [1e13, float("nan")], ids=["1e13", "nan"])
 def test_sessionization_raises_outside_the_micro_unit_domain(
     spark, tmp_path, bad
@@ -477,21 +496,23 @@ def test_sessionization_raises_outside_the_micro_unit_domain(
     none: the per-row BIGINT cast raises on both engines instead of
     summing to 2^63 - 1 or 0 (what Spark's ``floor(double)`` returns
     under ANSI)."""
-    import duckdb
-
-    from almost_any_file_to_pandas_spark import plans
-
-    plans.load_all()
     sf = _events_dir(spark, tmp_path, [bad, 185.22])
-    with pytest.raises(Exception, match="CAST_OVERFLOW"):
-        plans.QUERIES["events_sessionization"](spark, sf).collect()
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM"
-        f" read_parquet('{sf}/events.parquet/*.parquet')"
-    )
-    with pytest.raises(duckdb.ConversionException):
-        con.execute(plans.ORACLES["events_sessionization"]).fetchall()
+    _raises_on_both_engines(spark, sf, "events", "events_sessionization")
+
+
+@pytest.mark.parametrize("bad", [1e17, float("nan")], ids=["1e17", "nan"])
+def test_per_row_cents_raise_outside_bigint(spark, tmp_path, bad):
+    """A purchase of 1e17 is 1e19 cents, past 2^63, and NaN has none:
+    the per-row cents cast raises on both engines. Spark's
+    ``floor(double)`` returned 2^63 - 1 and 0 where DuckDB raised."""
+    base = datetime.datetime(2024, 1, 1)
+    buys = [
+        (500 + i, base + datetime.timedelta(minutes=i), 5, "purchase", v,
+         None)
+        for i, v in enumerate((185.22, bad))
+    ]
+    sf = _events_dir(spark, tmp_path, [185.22], extra=buys)
+    _raises_on_both_engines(spark, sf, "events", "events_user_rolling_median7")
 
 
 def _lineitem_dir(spark, tmp_path, values):
@@ -834,27 +855,44 @@ def test_budget_trim_exact_budget_line(
     assert out["src_odd"]["n_kept"] == 1
 
 
+_CORRUPT_EMBEDDINGS = [
+    (0, [1.0, 0.0, 0.0, 0.0], "a"),
+    (1, None, "a"),
+    (2, [1.0, 2.0], "a"),                       # dim drift
+    (3, [float("nan"), 1.0, 1.0, 1.0], "a"),
+    (4, [float("inf"), 1.0, 1.0, 1.0], "a"),
+    (5, [0.0, 0.0, 0.0, 0.0], "a"),             # zero norm
+    (6, [1.0000005, 0.0, 0.0, 0.0], "b"),       # tie-adjacent norm
+    (7, [0.5, 0.5, 0.5, 0.5], "b"),
+]
+
+
+def _embeddings_dir(spark, tmp_path, rows):
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label string"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    return str(tmp_path)
+
+
 def test_hygiene_report_on_corrupt_corpus(spark, gate_compare, tmp_path):
     """Corrupt embeddings through the REGISTERED hygiene query vs the
     oracle — NULLs, dimension drift, NaN, Inf, zero vectors, plus a
     norm whose sumsq·1e6 sits near a quantization boundary."""
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0], "a"),
-        (1, None, "a"),
-        (2, [1.0, 2.0], "a"),                       # dim drift
-        (3, [float("nan"), 1.0, 1.0, 1.0], "a"),
-        (4, [float("inf"), 1.0, 1.0, 1.0], "a"),
-        (5, [0.0, 0.0, 0.0, 0.0], "a"),             # zero norm
-        (6, [1.0000005, 0.0, 0.0, 0.0], "b"),       # tie-adjacent norm
-        (7, [0.5, 0.5, 0.5, 0.5], "b"),
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label string"
+    sf = _embeddings_dir(spark, tmp_path, _CORRUPT_EMBEDDINGS)
+    gate_compare(sf, "embedding_hygiene_report")
+
+
+def test_hygiene_report_raises_past_the_q6_domain(spark, tmp_path):
+    """A finite component of 1e13 gives a norm of 1e19 q6 units, past
+    2^63: the q6 cast raises on both engines. Spark's
+    ``floor(double)`` returned 2^63 - 1 where DuckDB raised."""
+    rows = _CORRUPT_EMBEDDINGS + [(8, [1e13, 0.0, 0.0, 0.0], "b")]
+    sf = _embeddings_dir(spark, tmp_path, rows)
+    _raises_on_both_engines(
+        spark, sf, "embeddings", "embedding_hygiene_report"
     )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "embeddings.parquet")
-    )
-    gate_compare(str(tmp_path), "embedding_hygiene_report")
 
 
 def _levenshtein(a: str, b: str) -> int:

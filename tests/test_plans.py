@@ -418,6 +418,41 @@ def test_only_the_registry_applies_the_engine_conf():
     assert callers == ["plans/__init__.py", "session.py"]
 
 
+def test_only_the_recipe_rounds_half_up_to_integer_units():
+    """``plans/__init__.py`` is the one place that rounds a double
+    half-up to cents or micro-units (``x * 100 + 0.5``,
+    ``x * 1000000 + 0.5``), in SQL text and Column expressions alike;
+    comments and the Holt/Holt-Winters ``math.floor`` steps on
+    driver-side scalars are exempt."""
+    import io
+    import tokenize
+
+    pkg = Path(__file__).resolve().parents[1]
+    pkg = pkg / "almost_any_file_to_pandas_spark"
+    step = re.compile(
+        r"\*\s*(100|1000000|1_000_000)\b[\s\"]*\+\s*\"?\s*(F\.lit\()?0\.5"
+    )
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        if rel == "plans/__init__.py":
+            continue
+        src = path.read_text(encoding="utf-8")
+        lines = src.splitlines(keepends=True)
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+            if tok.type == tokenize.COMMENT:
+                row, col = tok.start
+                line = lines[row - 1]
+                end = tok.end[1]
+                lines[row - 1] = line[:col] + " " * (end - col) + line[end:]
+        code = "".join(lines)
+        for m in step.finditer(code):
+            row = code.count("\n", 0, m.start())
+            if "math.floor(" not in lines[row]:
+                found.append(f"{rel}:{row + 1}")
+    assert found == []
+
+
 def test_every_query_runs_under_the_engine_conf(spark):
     """Every registered query is the registry's wrapper, and building
     one whose body never applies the conf itself still resets a

@@ -185,3 +185,32 @@ def test_corrupt_table_fails_alone_on_the_driver(spark, tmp_path):
     assert "decode failed" in by_name["big"].engine
     assert by_name["ok"].parse_info == "OK"
     assert sorted(n for (n,) in by_name["ok"].data.collect()) == list(range(5))
+
+
+@pytest.mark.parametrize("suffix", [".feather", ".pickle", ".npy", ".json"])
+def test_small_driver_tables_hand_over_as_one_partition(
+    spark, tmp_path, suffix
+):
+    """A 100-row Feather, pickle, npy or dict-shaped JSON file is far
+    under the cut, so its driver-built table reaches Spark as one
+    partition (a hand-off sized by ``defaultParallelism`` gave one
+    slice per core), with its rows in order."""
+    import numpy as np
+    import pandas as pd
+
+    from almost_any_file_to_pandas_spark import parse
+
+    pdf = pd.DataFrame({"a": range(100), "b": [f"r{i}" for i in range(100)]})
+    path = tmp_path / f"t{suffix}"
+    if suffix == ".feather":
+        pdf.to_feather(path)
+    elif suffix == ".pickle":
+        pdf.to_pickle(path)
+    elif suffix == ".npy":
+        np.save(path, np.arange(100))
+    else:
+        pdf.to_json(path, orient="split")
+    [r] = parse(spark, str(path))
+    assert r.data.rdd.getNumPartitions() == 1
+    first = "row_id" if suffix == ".npy" else "a"
+    assert [x[first] for x in r.data.collect()] == list(range(100))

@@ -62,14 +62,26 @@ def _permutation_dir(spark, tmp_path):
     ).coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
 
 
+def _pr_dir(spark, tmp_path):
+    """Three 64-dim vectors k = 0, 1, 2 with dims 0 and 1 at k and −k:
+    the (0, 1) covariance cell n·G·1e6 − s₀·s₁ = −6e12 over
+    n²·1000 = 9000 is −666666666 truncated, −666666667 floored."""
+    rest = [[0.001 * ((k * 7 + d) % 5) for d in range(62)] for k in range(3)]
+    spark.createDataFrame(
+        [(k, [float(k), float(-k)] + rest[k]) for k in range(3)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+
 @pytest.mark.parametrize(
     "name, write",
     [
         ("text_langid_agreement_kappa", _kappa_dir),
         ("text_readability_flesch_census", _flesch_dir),
         ("events_permutation_test", _permutation_dir),
+        ("emb_effective_rank_pr", _pr_dir),
     ],
-    ids=["kappa", "flesch", "permutation"],
+    ids=["kappa", "flesch", "permutation", "pr"],
 )
 def test_negative_integer_division_matches_oracle(
     spark, gate_compare, tmp_path, name, write
