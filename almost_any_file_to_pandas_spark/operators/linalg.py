@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.plans import (
+    half_up,
+    half_up_sql,
     micro_sum,
     micro_sum_sql,
     micro_units_sql,
@@ -39,6 +41,19 @@ from almost_any_file_to_pandas_spark.plans import (
 SRC_DIMS = 64  # embeddings table dimensionality (TESTDATA.md)
 COV_DIMS = 8  # leading block emitted by emb_covariance_block
 QSCALE = 1_000_000  # integer quantization: floor(x * QSCALE + 0.5)
+Q9 = 1_000_000_000  # the 9-decimal step of the dimension profile
+
+
+def _stepped_sql(expr: str, scale: int) -> str:
+    """``FLOOR(expr·scale + 0.5) / scale`` as DOUBLE: a half-up step
+    on the binary double, where ``ROUND(x, 9)`` splits the engines
+    (Spark rounds the double's decimal string, DuckDB its value)."""
+    return f"CAST({half_up_sql(expr, scale)} AS DOUBLE) / {scale}"
+
+
+def _stepped(col, scale: int):
+    """Twin of :func:`_stepped_sql`."""
+    return half_up(col, scale).cast("double") / F.lit(float(scale))
 
 
 @register(
@@ -62,12 +77,14 @@ QSCALE = 1_000_000  # integer quantization: floor(x * QSCALE + 0.5)
       FROM expanded GROUP BY dim_idx
     )
     SELECT dim_idx, n,
-           ROUND(CAST(s1 AS DOUBLE) / n / {QSCALE}, 9) AS mean_val,
-           ROUND(CAST(s2 AS DOUBLE) / n / {QSCALE}
-                 - (CAST(s1 AS DOUBLE) / n / {QSCALE})
-                   * (CAST(s1 AS DOUBLE) / n / {QSCALE}), 9) AS var_val,
-           ROUND(mn, 6) AS min_val,
-           ROUND(mx, 6) AS max_val
+           {_stepped_sql(f"CAST(s1 AS DOUBLE) / n / {QSCALE}", Q9)}
+             AS mean_val,
+           {_stepped_sql(
+               f"CAST(s2 AS DOUBLE) / n / {QSCALE}"
+               f" - (CAST(s1 AS DOUBLE) / n / {QSCALE})"
+               f" * (CAST(s1 AS DOUBLE) / n / {QSCALE})", Q9)} AS var_val,
+           {_stepped_sql('mn', QSCALE)} AS min_val,
+           {_stepped_sql('mx', QSCALE)} AS max_val
     FROM moments
     """,
 )
@@ -102,10 +119,10 @@ def emb_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "dim_idx",
         "n",
-        F.round(s1d, 9).alias("mean_val"),
-        F.round(s2d - s1d * s1d, 9).alias("var_val"),
-        F.round("mn", 6).alias("min_val"),
-        F.round("mx", 6).alias("max_val"),
+        _stepped(s1d, Q9).alias("mean_val"),
+        _stepped(s2d - s1d * s1d, Q9).alias("var_val"),
+        _stepped(F.col("mn"), QSCALE).alias("min_val"),
+        _stepped(F.col("mx"), QSCALE).alias("max_val"),
     )
 
 
@@ -209,17 +226,31 @@ def gram_moments(emb: DataFrame) -> DataFrame:
     int64) before summing, so partial sums are exact integers and the
     cross-partition total is independent of partitioning — the same
     determinism contract as the column-expression operators, at d=64
-    where 2 080 aggregate columns would blow up codegen.
+    where 2 080 aggregate columns would blow up codegen. A quantum or
+    a partial sum outside int64 raises ``OverflowError``, as the
+    oracles' BIGINT casts raise, instead of wrapping.
     """
     import numpy as np
     import pandas as pd
 
     d = SRC_DIMS
     iu = np.triu_indices(d)
+    bound = 2.0**63
+
+    def quanta_sum(P):
+        # exact column sums of floor(P·QSCALE + 0.5); int64 only where
+        # the float bound Σ|q| rules out a wrap, Python ints otherwise
+        q = np.floor(P * QSCALE + 0.5)
+        a = np.abs(q)
+        if not np.all(a < bound):  # NaN fails the test too
+            raise OverflowError("gram_moments: a quantum overflows int64")
+        if a.sum(axis=0).max() < bound / 2:
+            return q.astype(np.int64).sum(axis=0).astype(object)
+        return q.astype(np.int64).astype(object).sum(axis=0)
 
     def fold(batches):
-        gsum = np.zeros((d, d), dtype=np.int64)
-        s1 = np.zeros(d, dtype=np.int64)
+        gsum = np.zeros((d, d), dtype=object)
+        s1 = np.zeros(d, dtype=object)
         n = 0
         for pdf in batches:
             vals = [
@@ -231,13 +262,13 @@ def gram_moments(emb: DataFrame) -> DataFrame:
                 [np.asarray(v, dtype=np.float64) for v in vals]
             )
             n += X.shape[0]
-            s1 += np.floor(X * QSCALE + 0.5).astype(np.int64).sum(axis=0)
+            s1 += quanta_sum(X)
             for lo in range(0, X.shape[0], PCA_CHUNK):
                 C = X[lo : lo + PCA_CHUNK]
-                O = C[:, :, None] * C[:, None, :]
-                gsum += (
-                    np.floor(O * QSCALE + 0.5).astype(np.int64).sum(axis=0)
-                )
+                gsum += quanta_sum(C[:, :, None] * C[:, None, :])
+        qsum = [*gsum[iu], *s1, n]
+        if not all(-bound <= v < bound for v in qsum):
+            raise OverflowError("gram_moments: a partial sum overflows int64")
         rows = {
             "dim_i": np.concatenate(
                 [iu[0], np.arange(d), np.array([-1])]
@@ -245,9 +276,7 @@ def gram_moments(emb: DataFrame) -> DataFrame:
             "dim_j": np.concatenate(
                 [iu[1], np.full(d, -1), np.array([-1])]
             ).astype(np.int32),
-            "qsum": np.concatenate(
-                [gsum[iu], s1, np.array([n])]
-            ).astype(np.int64),
+            "qsum": np.array(qsum, dtype=np.int64),
         }
         yield pd.DataFrame(rows)
 

@@ -76,15 +76,15 @@ ORACLES: Dict[str, str] = {}
 # exact DECIMAL instead.
 
 
-def _half_up(col: Column, scale: int) -> Column:
+def half_up(col: Column, scale: int) -> Column:
     """``FLOOR(col·scale + 0.5)`` as BIGINT, raising outside BIGINT."""
     v = col * F.lit(float(scale)) + F.lit(0.5)
     t = v.cast("bigint")
     return t - (v < t).cast("bigint")
 
 
-def _half_up_sql(expr: str, scale: int) -> str:
-    """Twin of :func:`_half_up`, valid in DuckDB and in Spark SQL."""
+def half_up_sql(expr: str, scale: int) -> str:
+    """Twin of :func:`half_up`, valid in DuckDB and in Spark SQL."""
     v = f"(({expr}) * {scale} + 0.5)"
     t = f"CAST({v} AS BIGINT)"
     return f"({t} - CAST({v} < {t} AS BIGINT))"
@@ -94,13 +94,13 @@ def micro_units(col: Column) -> Column:
     """``FLOOR(col·1e6 + 0.5)`` as BIGINT: micro-units of a summand,
     or the q6 quantization of a derived statistic. Raises for
     |col| ≥ 9.2e12, NaN or ±inf."""
-    return _half_up(col, 1_000_000)
+    return half_up(col, 1_000_000)
 
 
 def cents_units(col: Column) -> Column:
     """``FLOOR(col·100 + 0.5)`` as BIGINT: one row's whole cents.
     Raises for |col| ≥ 9.2e16, NaN or ±inf."""
-    return _half_up(col, 100)
+    return half_up(col, 100)
 
 
 def micro_sum(col: Column) -> Column:
@@ -147,12 +147,12 @@ def exact_sum_sq(col: Column) -> Column:
 
 def micro_units_sql(expr: str) -> str:
     """Twin of :func:`micro_units`."""
-    return _half_up_sql(expr, 1000000)
+    return half_up_sql(expr, 1000000)
 
 
 def cents_units_sql(expr: str) -> str:
     """Twin of :func:`cents_units`."""
-    return _half_up_sql(expr, 100)
+    return half_up_sql(expr, 100)
 
 
 def micro_sum_sql(expr: str) -> str:

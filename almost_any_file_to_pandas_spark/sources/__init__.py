@@ -4,32 +4,38 @@ Native Spark readers cover parquet/JSON/delimited text/ORC. Every
 source that decodes rows in Python hands them to Spark as Arrow
 through the helpers below, sized by one cut, :data:`DRIVER_DECODE_BYTES`.
 A Python worker task pays a fixed floor of ~0.1 s before it decodes a
-row, so a SQLite or DBF file at or under the cut is decoded where it
-already is, on the driver, and a bigger one in executor tasks, which
-also bounds what the driver decodes of such a file. Workbook and HTML
-grids are parsed on the driver at any size.
+row, so an input at or under the cut is decoded where it already is,
+on the driver, and a bigger one in executor tasks, which also bounds
+what the driver decodes of it. Single workbooks, HTML pages and PDFs
+are parsed on the driver at any size.
 
 * :func:`arrow_frame` hands a driver-built Arrow batch or table over
   as ``clamp(ceil(nbytes / cut), 1, defaultParallelism)`` partitions
   (:func:`_byte_sized`), rows in order; :func:`pandas_frame` does the
   same for a pandas frame (pickle, NumPy arrays, dict-shaped JSON).
   Driver-decoded string grids (xlsx and the other workbook formats,
-  SpreadsheetML, HTML) go through :func:`grid_frame`; Feather and
-  Arrow IPC tables go through :func:`arrow_frame` as they are.
-* :func:`decoded_frame` is the rule for range-addressable formats
-  (SQLite rowids, DBF records): each supplies ``decode(lo, hi) ->
-  RecordBatch``; at or under the cut the whole table is one driver
-  call, over it :func:`range_frame` feeds a ``mapInArrow`` scan that
-  decodes one range per task.
+  SpreadsheetML, HTML, PDF tables) go through :func:`grid_frame`;
+  Feather and Arrow IPC tables go through :func:`arrow_frame` as they
+  are.
+* :func:`decoded_frame` is the one executor-side decode path. A
+  format supplies ``decode(lo, hi) -> RecordBatch`` over integer unit
+  addresses (SQLite rowids, DBF records, Avro blocks, corpus files);
+  at or under the cut the whole input is one driver call, over it
+  :func:`range_frame` feeds a ``mapInArrow`` scan that decodes one
+  range per task, in one narrow stage.
+* :func:`corpus_frame` is the many-files shape over it: one row per
+  grid row of every file, ``(source_file, key, row_idx, cells)``,
+  with the single-file reader's own parser run per file.
+  :func:`expand_paths` turns a path argument into its files.
 
-The one Python DataSource left is the many-workbooks corpus reader
-(``excel.read_excel_many``). Pickle and PDF are driver-side bridges
-(pickle is an inherently single-blob format; PDF requires
-tabula-java, gated behind an import-try).
+Executors import this package to run ``decode``.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import os
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,8 +47,8 @@ from pyspark.sql import types as T
 # local[32] this is one range per core.
 _MAX_RANGES = 64
 
-# Bytes of input a SQLite or DBF file may have and still be decoded
-# in one driver pass; also the bytes per partition of an Arrow
+# Bytes of input a range-addressable source may have and still be
+# decoded in one driver pass; also the bytes per partition of an Arrow
 # hand-off. Measured at local[4], parse plus a noop write of a
 # generated four-column table (median of 5): the driver pass wins
 # below ~1.5 MB (0.5 MB: 0.08 s vs 0.19 s for the range scan; 1 MB:
@@ -137,15 +143,17 @@ def decoded_frame(
     schema: T.StructType,
     unit: str,
 ) -> tuple[DataFrame, str]:
-    """The table of a ``nbytes`` file whose rows ``decode(lo, hi)``
+    """The table of a ``nbytes`` input whose rows ``decode(lo, hi)``
     returns as one Arrow batch of ``schema`` for any inclusive range
-    of its ``unit`` addresses (``rowid``, ``record``), and the regime
-    that built it, for ``ParseResult.engine``.
+    of its ``unit`` addresses (``rowid``, ``record``, ``block``,
+    ``file``), and the regime that built it, for ``ParseResult.engine``.
 
     At or under the cut (and for an empty range) ``decode(lo, hi)``
     runs once on the driver and :func:`arrow_frame` hands the batch
     over; over it each task of a :func:`range_frame` scan decodes its
-    ranges. ``decode`` then travels to executors by pickle."""
+    ranges. ``decode`` then travels to executors by pickle, once per
+    task; a large unit list belongs in its closure
+    (``functools.partial``), which PySpark broadcasts past 1 MB."""
     cut = DRIVER_DECODE_BYTES
     if hi < lo or nbytes <= cut:
         regime = f"{_mb(nbytes)} ≤ {_mb(cut)}" if nbytes <= cut else "no rows"
@@ -174,3 +182,60 @@ def arrow_batch(columns: list[list], schema: T.StructType):
         [pa.array(col, f.type) for col, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
+
+
+def expand_paths(paths) -> list[str]:
+    """The files a path argument names, in order. A list or tuple
+    expands element by element: a directory gives its visible files
+    (names not starting with ``.`` or ``_``, as Spark's file sources
+    skip them), an existing file gives itself, and anything else is a
+    glob pattern giving its matching files, each group sorted."""
+    items = [paths] if isinstance(paths, (str, os.PathLike)) else paths
+    out: list[str] = []
+    for p in map(str, items):
+        if os.path.isdir(p):
+            names = [n for n in os.listdir(p) if not n.startswith((".", "_"))]
+            found = [os.path.join(p, n) for n in names]
+        elif os.path.exists(p):
+            found = [p]
+        else:
+            found = glob.glob(p)
+        out += sorted(f for f in found if os.path.isfile(f))
+    return out
+
+
+def corpus_frame(
+    spark: SparkSession, files: list[str], tables: Callable, key: T.StructField
+) -> tuple[DataFrame, str]:
+    """``files`` as one :func:`decoded_frame` over file indices: a
+    ``(source_file, key, row_idx int, cells array<string>)`` row for
+    every row of every ``(key, rows)`` that ``tables(path)`` returns,
+    in file, table and row order, and the regime. A file that
+    ``tables`` raises on contributes zero rows."""
+    schema = T.StructType(
+        [
+            T.StructField("source_file", T.StringType()),
+            key,
+            T.StructField("row_idx", T.IntegerType()),
+            T.StructField("cells", T.ArrayType(T.StringType())),
+        ]
+    )
+    decode = functools.partial(_decode_files, files, tables, schema)
+    nbytes = sum(os.path.getsize(f) for f in files)
+    return decoded_frame(
+        spark, nbytes, 0, len(files) - 1, decode, schema, "file"
+    )
+
+
+def _decode_files(files, tables, schema, lo: int, hi: int):
+    cols: tuple[list, ...] = ([], [], [], [])
+    for path in files[lo : hi + 1]:
+        try:
+            found = tables(path)
+        except Exception:
+            continue
+        for key, rows in found:
+            for i, row in enumerate(rows):
+                for col, v in zip(cols, (path, key, i, row)):
+                    col.append(v)
+    return arrow_batch(list(cols), schema)

@@ -12,11 +12,11 @@ carrying the writer schema JSON + codec, 16-byte sync marker) then
 independent BLOCKS, each ``(row count, byte size, payload, sync)``.
 The driver walks only the block HEADERS (seek-skipping payloads — an
 O(#blocks) index pass; a production deployment persists this index
-next to the file), then ships ``(offset, size, count)`` triples to
-the executors, which decode their blocks independently — the same
-split-by-structure pattern as the Excel sheet fan-out, but
-row-parallel. Executors re-open the path by name, so files must live
-on storage all executors reach (shared FS / object store).
+next to the file) into one global block list for one file or many,
+and ``sources.decoded_frame`` decodes blocks by index: on the driver
+up to ``sources.DRIVER_DECODE_BYTES`` of files, over it in block-range
+tasks that re-open the paths by name, so files must then live on
+storage all executors reach (shared FS / object store).
 Supported: records of null/boolean/int/long/float/double/string/
 bytes; ``[null, T]`` unions (nullable column) and multi-branch
 unions (struct-of-nullables, one ``u{k}`` field per non-null
@@ -28,14 +28,22 @@ the honest ``NotImplementedError`` gate.
 
 from __future__ import annotations
 
+import functools
 import io
 import json
+import os
 import struct
 import zlib
-from pathlib import Path
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from almost_any_file_to_pandas_spark.sources import (
+    arrow_batch,
+    decoded_frame,
+    expand_paths,
+)
 
 AVRO_MAGIC = b"Obj\x01"
 
@@ -44,13 +52,13 @@ AVRO_MAGIC = b"Obj\x01"
 # double widening silently changed schemas on a round-trip): int↔int,
 # long↔bigint, float↔float, double↔double.
 _PRIMITIVE_SPARK = {
-    "boolean": "boolean",
-    "int": "int",
-    "long": "long",
-    "float": "float",
-    "double": "double",
-    "string": "string",
-    "bytes": "binary",
+    "boolean": T.BooleanType(),
+    "int": T.IntegerType(),
+    "long": T.LongType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "bytes": T.BinaryType(),
 }
 
 
@@ -292,33 +300,39 @@ def _field_decoders(schema: dict):
     ]
 
 
-def _spark_type(t) -> Tuple[str, bool]:
-    """Avro field type → (spark type DDL, nullable)."""
+def _spark_type(t) -> T.DataType:
+    """Avro field type → Spark type."""
     if isinstance(t, str):
         if t == "null":
-            return "string", True  # all-null column
+            return T.StringType()  # all-null column
         if t in _PRIMITIVE_SPARK:
-            return _PRIMITIVE_SPARK[t], False
+            return _PRIMITIVE_SPARK[t]
         raise NotImplementedError(f"Avro type {t!r} not supported")
     if isinstance(t, list):
         non_null = [b for b in t if b != "null"]
         if len(non_null) == 1:
-            ddl, _ = _spark_type(non_null[0])
-            return ddl, True
+            return _spark_type(non_null[0])
         if not non_null:
-            return "string", True  # degenerate ["null"] union
+            return T.StringType()  # degenerate ["null"] union
         # multi-branch union → struct-of-nullables, one field per
         # non-null branch in declaration order (r8 verdict #7); the
         # decoder fills exactly the matching slot, the null branch
         # (if present) yields a NULL struct
-        parts = []
-        for k, b in enumerate(non_null):
-            inner, _ = _spark_type(b)
-            parts.append(f"u{k}: {inner}")
-        return "struct<" + ", ".join(parts) + ">", True
+        return T.StructType(
+            [T.StructField(f"u{k}", _spark_type(b)) for k, b in enumerate(non_null)]
+        )
     if isinstance(t, dict):
         return _spark_type(t.get("type"))
     raise NotImplementedError(f"Avro type {t!r} not supported")
+
+
+def _spark_schema(schema: dict) -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField(f["name"], _spark_type(f["type"]))
+            for f in schema.get("fields", [])
+        ]
+    )
 
 
 AVRO_MAX_META_BYTES = 1 << 26  # header map value ceiling (schema JSON)
@@ -462,58 +476,67 @@ def decode_avro_block(
 
 
 def read_avro(spark: SparkSession, path, **options):
-    """Distributed Avro OCF scan wrapped in the façade's
-    :class:`ParseResult` contract: driver indexes block boundaries,
-    executors decode their blocks independently."""
+    """Avro OCF scan (:func:`_scan`) wrapped in the façade's
+    :class:`ParseResult` contract."""
     from almost_any_file_to_pandas_spark.result import ParseResult
 
+    df, regime = _scan(spark, [str(path)])
     return ParseResult(
-        data=read_avro_frame(spark, path, **options),
+        data=df,
         sheet_name="Avro container content",
-        engine="stdlib avro (block-parallel)",
+        engine=f"stdlib avro ({regime})",
         file_path=str(path),
     )
 
 
 def read_avro_frame(spark: SparkSession, path, **options) -> DataFrame:
-    """The bare DataFrame scan behind :func:`read_avro`.
+    """The bare DataFrame scan behind :func:`read_avro`: the one-file
+    case of :func:`_scan`."""
+    return _scan(spark, [str(path)])[0]
 
-    Driver cost is header + block-header bytes only (seek-skipping
-    payloads — r8 ADVICE closed; the index pass is O(#blocks)).
-    Like the other driver-side arms (Excel, XMLSS, PDF), executors
-    re-open ``path`` BY NAME: the file must live on storage every
-    executor can reach (shared FS / object store) — true on local
-    mode trivially, and the standing deployment assumption at scale.
-    """
-    p = str(path)
-    import os as _os
 
-    with open(p, "rb") as fh:
-        schema, codec, sync = read_avro_header_stream(fh)
-        decoders = _field_decoders(schema)
-        fields = []
-        for f in schema.get("fields", []):
-            ddl, _nullable = _spark_type(f["type"])
-            fields.append(f"`{f['name']}` {ddl}")
-        ddl = ", ".join(fields)
-        blocks = index_avro_blocks_stream(
-            fh, sync, _os.fstat(fh.fileno()).st_size
-        )
-    if not blocks:
-        return spark.createDataFrame([], ddl)
-    sc = spark.sparkContext
-    n_slices = min(len(blocks), sc.defaultParallelism)
+def _scan(spark: SparkSession, files: List[str]) -> Tuple[DataFrame, str]:
+    """One frame over every block of ``files``, in file and block
+    order, and its regime (``sources.decoded_frame``; the units are
+    blocks). Driver cost before the decode is header + block-header
+    bytes only (seek-skipping payloads, O(#blocks)). All files must
+    share one schema; codecs may differ per file."""
+    blocks: List[tuple] = []
+    schema = spark_schema = None
+    nbytes = 0
+    for fp in files:
+        with open(fp, "rb") as fh:
+            file_schema, codec, sync = read_avro_header_stream(fh)
+            if schema is None:
+                _field_decoders(file_schema)  # validates the schema
+                schema, spark_schema = file_schema, _spark_schema(file_schema)
+            elif _spark_schema(file_schema) != spark_schema:
+                raise ValueError(f"read_avro_many: schema mismatch in {fp}")
+            size = os.fstat(fh.fileno()).st_size
+            blocks += [
+                (fp, codec, count, off, n)
+                for count, off, n in index_avro_blocks_stream(fh, sync, size)
+            ]
+        nbytes += size
+    decode = functools.partial(_decode_blocks, blocks, schema, spark_schema)
+    return decoded_frame(
+        spark, nbytes, 0, len(blocks) - 1, decode, spark_schema, "block"
+    )
 
-    def decode_range(spec):
-        count, off, size = spec
-        # executors re-read only their payload byte range
-        with open(p, "rb") as fh:
+
+def _decode_blocks(blocks, schema: dict, spark_schema, lo: int, hi: int):
+    """Blocks ``lo..hi`` as one typed Arrow batch; each payload byte
+    range is read from its file by name."""
+    decoders = _field_decoders(schema)
+    rows: List[tuple] = []
+    for fp, codec, count, off, size in blocks[lo : hi + 1]:
+        with open(fp, "rb") as fh:
             fh.seek(off)
             payload = fh.read(size)
-        return decode_avro_block(payload, codec, decoders, count)
-
-    rdd = sc.parallelize(blocks, n_slices).flatMap(decode_range)
-    return spark.createDataFrame(rdd, ddl)
+        rows += decode_avro_block(payload, codec, decoders, count)
+    return arrow_batch(
+        [[r[i] for r in rows] for i in range(len(decoders))], spark_schema
+    )
 
 
 def synth_avro(
@@ -612,61 +635,17 @@ def synth_avro(
 
 def read_avro_many(spark: SparkSession, paths) -> DataFrame:
     """Corpus-scale Avro ingestion: ONE DataFrame over many container
-    files — the 100 TB shape (the single-file reader exists for the
-    façade's per-file metadata contract, not throughput). The driver
-    reads each file's HEADER + block index only (O(#blocks) seeks,
-    the pass a production deployment persists as a manifest);
-    executors decode `(file, codec, offset, size, count)` slices
-    independently, so parallelism = total block count across the
-    corpus, not file count. All files must share one schema (the
-    homogeneous-corpus assumption of the other `_many` readers);
-    codecs may differ per file."""
-    import glob as _glob
-
-    if isinstance(paths, (str, Path)):
-        file_list = sorted(_glob.glob(str(paths)))
-    else:
-        file_list = [str(p) for p in paths]
-    if not file_list:
+    files (``sources.expand_paths``) — the 100 TB shape (the
+    single-file reader exists for the façade's per-file metadata
+    contract, not throughput). One :func:`_scan` over the corpus'
+    global block list, so parallelism = total block count, not file
+    count. All files must share one schema (the homogeneous-corpus
+    assumption of the other ``_many`` readers); codecs may differ per
+    file."""
+    files = expand_paths(paths)
+    if not files:
         raise ValueError("read_avro_many: no files matched")
-    import os as _os
-
-    specs, ddl0, decoders0 = [], None, None
-    for fp in file_list:
-        with open(fp, "rb") as fh:
-            schema, codec, sync = read_avro_header_stream(fh)
-            fields = []
-            for f in schema.get("fields", []):
-                t, _ = _spark_type(f["type"])
-                fields.append(f"`{f['name']}` {t}")
-            ddl = ", ".join(fields)
-            if ddl0 is None:
-                ddl0, decoders0 = ddl, _field_decoders(schema)
-            elif ddl != ddl0:
-                raise ValueError(
-                    f"read_avro_many: schema mismatch in {fp}"
-                )
-            file_size = _os.fstat(fh.fileno()).st_size
-            for count, off, size in index_avro_blocks_stream(
-                fh, sync, file_size
-            ):
-                specs.append((fp, codec, count, off, size))
-    if not specs:
-        return spark.createDataFrame([], ddl0)
-    sc = spark.sparkContext
-    decoders = decoders0
-
-    def decode_spec(spec):
-        fp, codec, count, off, size = spec
-        with open(fp, "rb") as fh:
-            fh.seek(off)
-            payload = fh.read(size)
-        return decode_avro_block(payload, codec, decoders, count)
-
-    rdd = sc.parallelize(
-        specs, min(len(specs), sc.defaultParallelism)
-    ).flatMap(decode_spec)
-    return spark.createDataFrame(rdd, ddl0)
+    return _scan(spark, files)[0]
 
 
 _SPARK_TO_AVRO = {
@@ -703,7 +682,6 @@ def write_avro(
     part files; ``mode="overwrite"`` clears existing ``part-*.avro``
     first."""
     import glob as _glob
-    import os
 
     out_pre = str(path)
     stale = sorted(_glob.glob(os.path.join(out_pre, "part-*.avro")))

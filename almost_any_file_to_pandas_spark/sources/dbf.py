@@ -12,8 +12,8 @@ range of records sits at pure offset arithmetic
 ``sources.DRIVER_DECODE_BYTES`` (1 MB) is a driver slurp: one
 ``_decode`` of every record, one typed Arrow batch, no Python worker.
 Over the cut it is the same rowid-range pattern as the SQLite arm
-(``sources.range_frame`` feeding ``mapInArrow``, one ``_decode`` per
-range), with zero per-task catalog work.
+(one ``_decode`` per ``sources.range_frame`` range in Python tasks),
+with zero per-task catalog work.
 Deleted records (``*`` flag) are skipped per spec. Shared-filesystem
 requirement as with the other by-path arms.
 

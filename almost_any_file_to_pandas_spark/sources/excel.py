@@ -10,10 +10,10 @@ with the stdlib core (``excel_core``); the padded all-string grid goes
 to Spark as one Arrow table (``sources.grid_frame``), the same hand-off
 as the SpreadsheetML and HTML arms. A sheet part is a single deflate
 stream, so one sheet's parse cannot be split anyway; what scales is
-many workbooks, which ``read_excel_many`` reads executor-side through
-a Spark 4 Python DataSource (``excel_core.ExcelCorpusDataSource``),
-one partition per file. That DataSource module is registered with
-cloudpickle by value, so workers need no package install.
+many workbooks, which ``read_excel_many`` reads with the same per-file
+parser (:func:`workbook_sheets`) through ``sources.corpus_frame``: on the
+driver up to ``sources.DRIVER_DECODE_BYTES`` of files, over it in
+file-range tasks.
 
 All six suffixes parse natively with stdlib code in ``excel_core``:
 .xlsx (OOXML), .xlsb (BIFF12 record reader), .xls (BIFF8 records in a
@@ -23,13 +23,20 @@ degrade to a failed result like the reference's log-and-continue path.
 
 from __future__ import annotations
 
+import functools
 from pathlib import Path
 from typing import List, Union
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
-from almost_any_file_to_pandas_spark.sources import excel_core, grid_frame
+from almost_any_file_to_pandas_spark.sources import (
+    corpus_frame,
+    excel_core,
+    expand_paths,
+    grid_frame,
+)
 
 NATIVE_FORMATS = {
     ".xlsx": "xlsx",
@@ -40,25 +47,22 @@ NATIVE_FORMATS = {
     ".odf": "ods",
 }
 ZIP_XML_FORMATS = NATIVE_FORMATS  # back-compat alias
-_registered_sessions: set[int] = set()
 
 
-def _register(spark: SparkSession) -> None:
-    """Register the corpus DataSource once per session, shipping the
-    stdlib-only core module by value inside the pickled class."""
-    key = id(spark)
-    if key in _registered_sessions:
-        return
-    # PySpark serializes DataSource classes with its *vendored*
-    # cloudpickle — by-value registration must target that module, or
-    # workers try (and fail) to import this package.
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(excel_core)
-    spark.dataSource.register(excel_core.ExcelCorpusDataSource)
-    _registered_sessions.add(key)
+def workbook_sheets(path: str, fmt: str) -> list[tuple[str, list[list]]]:
+    """``[(sheet_name, ragged rows)]`` of one workbook, in workbook
+    order; cells are strings or ``None``."""
+    return [
+        (name, excel_core.sheet_rows(path, fmt, ref))
+        for name, ref in excel_core.sheet_inventory(path, fmt)
+    ]
 
 
+def _string_sheets(fmt: str, path: str) -> list[tuple[str, list[list[str]]]]:
+    return [
+        (name, [["" if v is None else str(v) for v in row] for row in rows])
+        for name, rows in workbook_sheets(path, fmt)
+    ]
 
 
 def read_excel(
@@ -96,13 +100,12 @@ def read_excel(
             )
         return out or [ParseResult.failed(spark, str(p), engine="pandas")]
 
-    inventory = excel_core.sheet_inventory(str(p), fmt)
-    if not inventory:  # no sheets → failed (main.py:251-253)
+    found = workbook_sheets(str(p), fmt)
+    if not found:  # no sheets → failed (main.py:251-253)
         return [ParseResult.failed(spark, str(p), engine=fmt)]
 
     results: List[ParseResult] = []
-    for sheet_name, ref in inventory:
-        rows = excel_core.sheet_rows(str(p), fmt, ref)
+    for sheet_name, rows in found:
         width = excel_core.sheet_width(rows)
         result = ParseResult(
             data=grid_frame(spark, excel_core.padded(rows, width)),
@@ -114,28 +117,16 @@ def read_excel(
     return results
 
 
-def read_excel_many(spark: SparkSession, paths, fmt: str = "xlsx") -> "DataFrame":
-    """Corpus-scale workbook ingestion: one DataFrame over many files,
-    one DataSource partition per file (parallelism = file count),
-    ragged rows as (source_file, sheet_name, row_idx, cells).
-
-    No driver pre-scan: sheet enumeration and parsing happen in the
-    executor that owns the partition. Normalize downstream, e.g.::
+def read_excel_many(spark: SparkSession, paths, fmt: str = "xlsx") -> DataFrame:
+    """Corpus-scale workbook ingestion: one DataFrame of ragged rows
+    ``(source_file, sheet_name, row_idx, cells)`` over every file
+    ``paths`` names (``sources.expand_paths``), each parsed by
+    :func:`workbook_sheets` (``sources.corpus_frame``). Normalize width
+    downstream, e.g.::
 
         width = df.agg(F.max(F.size("cells"))).first()[0]
         df.select(..., *[F.element_at("cells", i+1) for i in range(width)])
     """
-    import glob as _glob
-    from pathlib import Path as _P
-
-    if isinstance(paths, (str, _P)):
-        expanded = sorted(_glob.glob(str(paths))) or [str(paths)]
-    else:
-        expanded = [str(p) for p in paths]
-    _register(spark)
-    return (
-        spark.read.format("aaftp_excel_corpus")
-        .option("paths", "\x1f".join(expanded))
-        .option("fmt", fmt)
-        .load()
-    )
+    key = T.StructField("sheet_name", T.StringType())
+    tables = functools.partial(_string_sheets, fmt)
+    return corpus_frame(spark, expand_paths(paths), tables, key)[0]

@@ -1,4 +1,4 @@
-"""Self-contained (stdlib-only) Excel parsing core + corpus DataSource.
+"""Stdlib-only Excel parsing core.
 
 Covers the reference's Excel arm (`ImportExcel`, /root/reference/
 main.py:239-265): enumerate sheets, read every sheet headerless with
@@ -22,13 +22,9 @@ formats directly from their XML parts:
   LabelSst/Label/Number/RK/MulRk/BoolErr/Formula, XF/FORMAT date
   styles).
 
-EVERYTHING in this module must stay importable-by-value: for the
-corpus reader (``excel.read_excel_many``) the façade registers this
-module with ``cloudpickle.register_pickle_by_value`` so the
-:class:`ExcelCorpusDataSource` class and these parser functions ship
-to executors inside the serialized plan — no package install on
-workers. The single-workbook path (``excel.read_excel``) parses on
-the driver and needs none of this. Keep imports stdlib-only.
+The single-workbook reader (``excel.read_excel``) runs these parsers
+on the driver; the corpus reader (``excel.read_excel_many``) runs the
+same ones per file, on the driver or in executor tasks.
 """
 
 from __future__ import annotations
@@ -854,7 +850,7 @@ def ods_sheet_rows(path: str, table_index: int) -> list[list[str | None]]:
 
 
 # ---------------------------------------------------------------------------
-# Generic helpers + the many-workbooks Python DataSource (Spark 4)
+# Generic helpers
 # ---------------------------------------------------------------------------
 
 
@@ -893,66 +889,3 @@ def padded(rows: list[list[str | None]], width: int) -> list[list[str]]:
         for r in rows
     ]
 
-
-try:  # pragma: no cover - import guard exercised only on Spark < 4
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _FilePartition(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
-
-    class ExcelCorpusReader(DataSourceReader):
-        """Many-workbooks reader: one partition per file; each
-        partition enumerates its own sheets executor-side and yields
-        ragged rows as (source_file, sheet_name, row_idx, cells).
-
-        The array<string> cells column sidesteps the fixed-width
-        schema problem entirely — no driver pre-scan of any workbook;
-        callers normalize width downstream with the same pad
-        expressions the text pipeline uses. This is the 100 TB shape:
-        driver cost is O(#files) path strings, all parsing runs where
-        the tasks run.
-        """
-
-        def __init__(self, options):
-            self.paths = options["paths"].split("\x1f")
-            self.fmt = options.get("fmt", "xlsx")
-
-        def partitions(self):
-            return [_FilePartition(p) for p in self.paths]
-
-        def read(self, partition):
-            fmt = self.fmt
-            try:
-                inventory = sheet_inventory(partition.path, fmt)
-            except Exception:
-                return  # unreadable workbook → contributes no rows
-            for sheet_name, ref in inventory:
-                try:
-                    rows = sheet_rows(partition.path, fmt, ref)
-                except Exception:
-                    continue
-                for idx, row in enumerate(rows):
-                    yield (
-                        partition.path,
-                        sheet_name,
-                        idx,
-                        ["" if v is None else str(v) for v in row],
-                    )
-
-    class ExcelCorpusDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "aaftp_excel_corpus"
-
-        def schema(self):
-            return (
-                "source_file string, sheet_name string, "
-                "row_idx int, cells array<string>"
-            )
-
-        def reader(self, schema):
-            return ExcelCorpusReader(self.options)
-
-except ImportError:  # pragma: no cover
-    ExcelCorpusDataSource = None  # type: ignore[assignment]

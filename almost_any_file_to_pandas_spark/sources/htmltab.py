@@ -16,9 +16,9 @@ stdlib ``html.parser`` — which is error-tolerant BY DESIGN (no
 exception on malformed markup; whatever tables complete are kept, a
 built-in salvage pass). Each table becomes a DataFrame via one Arrow
 table over the padded grid (``sources.grid_frame``); at corpus scale
-the unit of parallelism is many files (``read_html_many``,
-executor-side via mapInPandas over the file list — the
-``read_spreadsheetml_many`` shape).
+the unit of parallelism is many files (``read_html_many``, the same
+per-file parser :func:`file_tables` through ``sources.corpus_frame``,
+the ``read_spreadsheetml_many`` shape).
 """
 
 from __future__ import annotations
@@ -27,10 +27,15 @@ from html.parser import HTMLParser
 from pathlib import Path
 from typing import List, Union
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
-from almost_any_file_to_pandas_spark.sources import grid_frame
+from almost_any_file_to_pandas_spark.sources import (
+    corpus_frame,
+    expand_paths,
+    grid_frame,
+)
 
 _SKIP_TAGS = ("script", "style")
 _VOID_ROW_TAGS = ("thead", "tbody", "tfoot")  # structural, transparent
@@ -176,6 +181,17 @@ def extract_tables(text: str) -> list[list[list[str]]]:
 
 
 
+def file_tables(path: str) -> tuple[list[list[list[str]]], str]:
+    """``(grids, encoding)`` of one file: its bytes decode as UTF-8,
+    else through latin-1 (a total decode), then :func:`extract_tables`."""
+    raw = Path(path).read_bytes()
+    try:
+        text, encoding = raw.decode("utf-8"), "utf-8"
+    except UnicodeDecodeError:
+        text, encoding = raw.decode("latin-1"), "latin-1"
+    return extract_tables(text), encoding
+
+
 def read_html(
     spark: SparkSession, path: Union[str, Path], **options
 ) -> List[ParseResult]:
@@ -184,16 +200,9 @@ def read_html(
     undecodable bytes degrade through latin-1 (total decode) first."""
     p = Path(path)
     try:
-        raw = p.read_bytes()
+        grids, encoding = file_tables(str(p))
     except OSError:
         return [ParseResult.failed(spark, str(p), engine="html")]
-    try:
-        text = raw.decode("utf-8")
-        encoding = "utf-8"
-    except UnicodeDecodeError:
-        text = raw.decode("latin-1")
-        encoding = "latin-1"
-    grids = extract_tables(text)
     return [
         ParseResult(
             data=grid_frame(spark, grid),
@@ -206,57 +215,14 @@ def read_html(
     ] or [ParseResult.failed(spark, str(p), engine="html")]
 
 
-def read_html_many(spark: SparkSession, paths):
+def _tables(path: str) -> list[tuple[int, list[list[str]]]]:
+    return list(enumerate(file_tables(path)[0]))
+
+
+def read_html_many(spark: SparkSession, paths) -> DataFrame:
     """Corpus-scale HTML ingestion: many files → one DataFrame of
-    ragged rows (source_file, table_idx, row_idx, cells), parsed
-    executor-side via mapInPandas over the file list — parallelism
-    scales with file count; unparseable files contribute zero rows."""
-    import glob as _glob
-
-    if isinstance(paths, (str, Path)):
-        expanded = sorted(_glob.glob(str(paths))) or [str(paths)]
-    else:
-        expanded = [str(p) for p in paths]
-
-    def _parse_files(batches):
-        import pandas as pd
-
-        from almost_any_file_to_pandas_spark.sources.htmltab import (
-            extract_tables as _extract,
-        )
-
-        for batch in batches:
-            out = {"source_file": [], "table_idx": [], "row_idx": [],
-                   "cells": []}
-            for path in batch["path"]:
-                try:
-                    raw = Path(path).read_bytes()
-                    try:
-                        text = raw.decode("utf-8")
-                    except UnicodeDecodeError:
-                        text = raw.decode("latin-1")
-                    grids = _extract(text)
-                except OSError:
-                    continue
-                for t_idx, grid in enumerate(grids):
-                    for r_idx, row in enumerate(grid):
-                        out["source_file"].append(path)
-                        out["table_idx"].append(t_idx)
-                        out["row_idx"].append(r_idx)
-                        out["cells"].append(row)
-            # an all-empty dict-of-lists frame infers float64 columns,
-            # which Arrow cannot cast to list<string> — a partition
-            # holding only table-less/unreadable files yields nothing
-            if out["source_file"]:
-                yield pd.DataFrame(out)
-
-    files = spark.createDataFrame(
-        [(p,) for p in expanded], "path string"
-    ).repartition(min(len(expanded), spark.sparkContext.defaultParallelism))
-    return files.mapInPandas(
-        _parse_files,
-        schema=(
-            "source_file string, table_idx int, row_idx int,"
-            " cells array<string>"
-        ),
-    )
+    ragged rows (source_file, table_idx, row_idx, cells), each file
+    parsed by :func:`file_tables` (``sources.corpus_frame``);
+    unreadable files contribute zero rows."""
+    key = T.StructField("table_idx", T.IntegerType())
+    return corpus_frame(spark, expand_paths(paths), _tables, key)[0]

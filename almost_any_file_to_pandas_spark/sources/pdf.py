@@ -17,9 +17,11 @@ digital-born PDFs; files outside its subset degrade to a failed
 result, mirroring the reference's own "unpredictable result" caveat
 for PDFs (README.md:12). Either way extraction happens driver-side
 (the subprocess/byte-parse boundary is inherently local) and each
-extracted table is handed to Spark via ``createDataFrame`` — the
-distributed path begins after extraction, which is the same shape as
-the reference's pipeline.
+extracted table is handed to Spark as an all-string grid
+(``sources.grid_frame``) — the distributed path begins after
+extraction, which is the same shape as the reference's pipeline.
+``read_pdf_many`` runs the stdlib extractor per file through
+``sources.corpus_frame``.
 """
 
 from __future__ import annotations
@@ -31,18 +33,32 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources import (
+    corpus_frame,
+    expand_paths,
+    grid_frame,
+)
 
 CONCATED = "PDF file content (concated)"
 UNSIZED = "PDF file content (unsized)"
 BY_PAGE = "PDF file content (by page)"  # main.py:407
 
 
+def _grid(frame) -> list[list[str]]:
+    """A page-table frame as rows of strings, ``""`` for a missing cell."""
+    return frame.fillna("").astype(str).values.tolist()
 
 
 def _to_spark(spark: SparkSession, pdf_frame):
-    pdf_frame = pdf_frame.fillna("").astype(str)
-    pdf_frame.columns = [f"c{i}" for i in range(pdf_frame.shape[1])]
-    return spark.createDataFrame(pdf_frame)
+    return grid_frame(spark, _grid(pdf_frame))
+
+
+def stdlib_tables(path: str) -> list:
+    """The page tables the stdlib extractor finds in one file, as
+    pandas frames (``pdftext.extract_page_tables``)."""
+    from almost_any_file_to_pandas_spark.sources import pdftext
+
+    return pdftext.extract_page_tables(Path(path).read_bytes())
 
 
 def read_pdf(
@@ -58,11 +74,9 @@ def read_pdf(
         # parsing for simple digital-born PDFs; outside its subset it
         # yields no frames and the failed-answer path below fires, so
         # the never-raise contract is preserved either way.
-        from almost_any_file_to_pandas_spark.sources import pdftext
-
         engine = "stdlib-pdftext"
         try:
-            frames = pdftext.extract_page_tables(p.read_bytes())
+            frames = stdlib_tables(str(p))
         except Exception:
             frames = []
         if not frames:
@@ -132,88 +146,34 @@ def read_pdf(
     return results
 
 
+def _tables(path: str) -> list[tuple[int, list[list[str]]]]:
+    return list(enumerate(map(_grid, stdlib_tables(path))))
+
+
 def read_pdf_many(spark: SparkSession, paths) -> ParseResult:
     """Many-files variant — the distributed PDF-corpus ingestion shape
     (the per-file :func:`read_pdf` exists for reference-parity answer
     lists, not throughput).
 
-    ONE ``binaryFile`` scan over the list/glob; each task runs the
-    stdlib extractor (sources/pdftext.py) on its files inside an
-    Arrow-batched ``mapInPandas`` — parallelism = file count, no
-    driver-side loop, no subprocess. Output is long-form
-    ``(source_file, page, row_idx, cells array<string>)`` so ragged
-    page widths need no union-by-width pass; provenance per row is
-    the distributed analogue of per-file ParseResult metadata.
-    Files outside the extractor's subset contribute zero rows (the
-    corpus-scale form of the failed-answer contract).
+    Every file ``paths`` names (``sources.expand_paths``) runs through
+    the stdlib extractor (:func:`stdlib_tables`) in
+    ``sources.corpus_frame``: on the driver up to
+    ``sources.DRIVER_DECODE_BYTES`` of files, over it in file-range
+    tasks, with no subprocess. Output is long-form ``(source_file,
+    page, row_idx, cells array<string>)`` so ragged page widths need no
+    union-by-width pass; provenance per row is the distributed analogue
+    of per-file ParseResult metadata. Files outside the extractor's
+    subset contribute zero rows (the corpus-scale form of the
+    failed-answer contract), and an argument naming no file gives an
+    empty result already marked failed.
     """
-    from almost_any_file_to_pandas_spark.sources import pdftext
-
-    # never-raise covers the degenerate inputs too: an empty list, a
-    # missing directory, or a glob matching nothing makes binaryFile's
-    # load raise AnalysisException at plan time — exactly the inputs
-    # the per-file path degrades gracefully on, so catch THAT class
-    # and return a failed empty ParseResult (parse() facade contract).
-    # Anything else (broken session, py4j fault, misconfiguration) is
-    # a real bug and propagates — a silent empty parse would mask it.
-    from pyspark.errors import AnalysisException
-
-    try:
-        if isinstance(paths, (list, tuple)):
-            reader = spark.read.format("binaryFile").load(
-                [str(p) for p in paths]
-            )
-        else:
-            reader = spark.read.format("binaryFile").load(str(paths))
-        reader.schema  # force plan-time path resolution here, not later
-    except (AnalysisException, ValueError):
-        from pyspark.sql import types as T
-
-        return ParseResult(
-            data=spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField("source_file", T.StringType()),
-                        T.StructField("page", T.IntegerType()),
-                        T.StructField("row_idx", T.IntegerType()),
-                        T.StructField(
-                            "cells", T.ArrayType(T.StringType())
-                        ),
-                    ]
-                ),
-            ),
-            sheet_name="PDF corpus content",
-            engine="binaryFile + stdlib-pdftext (mapInPandas)",
-            file_path=str(paths),
-        ).mark_failed()
-
-    def extract(batches):
-        import pandas as pd
-
-        cols = ["source_file", "page", "row_idx", "cells"]
-        for pdf_batch in batches:
-            rows = []
-            for path, content in zip(pdf_batch["path"], pdf_batch["content"]):
-                try:
-                    frames = pdftext.extract_page_tables(bytes(content))
-                except Exception:
-                    frames = []
-                for pi, f in enumerate(frames):
-                    for ri, row in enumerate(f.values.tolist()):
-                        rows.append((path, pi, ri, [str(c) for c in row]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    df = reader.select("path", "content").mapInPandas(
-        extract,
-        schema=(
-            "source_file string, page int, row_idx int, "
-            "cells array<string>"
-        ),
-    )
-    return ParseResult(
+    files = expand_paths(paths)
+    key = T.StructField("page", T.IntegerType())
+    df, regime = corpus_frame(spark, files, _tables, key)
+    result = ParseResult(
         data=df,
         sheet_name="PDF corpus content",
-        engine="binaryFile + stdlib-pdftext (mapInPandas)",
+        engine=f"stdlib-pdftext ({regime})",
         file_path=str(paths),
     )
+    return result if files else result.mark_failed()

@@ -18,7 +18,7 @@ Spark design — decode where the input is, ROWID ranges above the cut
 * a file at or under ``sources.DRIVER_DECODE_BYTES`` (1 MB) is a
   driver slurp: each table is one ``_decode`` call on the driver, one
   typed Arrow batch handed to the JVM, and no Python worker starts;
-* over the cut each table scan is ``mapInArrow`` over
+* over the cut each table scan runs in Python tasks over
   ``sources.range_frame``, a ``spark.range`` of rowid ranges with one
   range per partition and no repartition (so a scan is one stage):
   every task opens the SQLite file itself and runs the same

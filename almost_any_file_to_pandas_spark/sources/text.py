@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from almost_any_file_to_pandas_spark.result import ParseResult
-from almost_any_file_to_pandas_spark.sources import sniff
+from almost_any_file_to_pandas_spark.sources import expand_paths, sniff
 
 ANT_DELIMITER = "~~@~~"  # S6, main.py:153-154
 
@@ -231,14 +231,9 @@ def read_delimited_many(
     is preserved per row via ``source_file`` (input_file_name), the
     distributed analogue of per-file ParseResult metadata.
     """
-    from pathlib import Path as _P
-
-    import glob as _glob
-
-    if isinstance(paths, (str, _P)):
-        expanded = sorted(_glob.glob(str(paths))) or [str(paths)]
-    else:
-        expanded = [str(p) for p in paths]
+    expanded = expand_paths(paths)
+    if not expanded:
+        raise FileNotFoundError(f"read_delimited_many: no files match {paths!r}")
     first = expanded[0]
     prefix = sniff.read_prefix(first)
     encoding = sniff.detect_encoding(first, prefix=prefix)
@@ -260,5 +255,5 @@ def read_delimited_many(
         encoding=str(encoding),
         separator=delimiter,
         engine="spark.read.text + split (multi-file)",
-        file_path=str(paths) if isinstance(paths, (str, _P)) else first,
+        file_path=str(paths) if isinstance(paths, (str, Path)) else first,
     )

@@ -17,8 +17,8 @@ file yields its intact prefix rows instead of a failed result;
 nothing salvageable → failed. Each discovered table becomes a
 DataFrame via one Arrow table over the padded all-string grid
 (``sources.grid_frame``); at scale the unit of parallelism is *many
-files*, which the façade callers get by looping paths into
-independent lazy plans.
+files*: ``read_spreadsheetml_many`` runs the same per-file parser
+(:func:`sheet_grids`) through ``sources.corpus_frame``.
 
 Spark's own ``spark.read.format("xml")`` (native since 4.0) is not
 used because rowTag-based parsing cannot express the namespace-
@@ -32,11 +32,15 @@ from pathlib import Path
 from typing import List, Optional, Union
 from xml.etree import ElementTree as ET
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
-from almost_any_file_to_pandas_spark.sources import grid_frame
+from almost_any_file_to_pandas_spark.sources import (
+    corpus_frame,
+    expand_paths,
+    grid_frame,
+)
 
 SS_NS = "{urn:schemas-microsoft-com:office:spreadsheet}"
 
@@ -113,130 +117,60 @@ def _salvage_tables(
     return out
 
 
+def sheet_grids(path: str) -> tuple[list[tuple[str, list[list[str]]]], str]:
+    """``([(sheet_name, padded grid)], engine)`` of one file: every
+    non-empty table of every Worksheet, or the bare tables when there
+    is no Worksheet (sheet name "Not defined", main.py:296-304); a
+    malformed file gives its salvaged tables
+    (:func:`_salvage_tables`)."""
+    try:
+        root = ET.parse(path).getroot()
+    except ET.ParseError:
+        return [
+            (name or "Not defined", grid)
+            for name, grid in _salvage_tables(path)
+        ], "spreadsheetml (salvaged)"
+    worksheets = list(root.iter(f"{SS_NS}Worksheet"))
+    if worksheets:
+        scoped = [
+            (ws.get(f"{SS_NS}Name") or "Not defined", t)
+            for ws in worksheets
+            for t in ws.iter(f"{SS_NS}Table")
+        ]
+    else:  # level-2 fallback: bare tables (main.py:296-304)
+        scoped = [("Not defined", t) for t in root.iter(f"{SS_NS}Table")]
+    grids = [(name, table_grid(t)) for name, t in scoped]
+    return [(name, g) for name, g in grids if g], "spreadsheetml"
+
+
 def read_spreadsheetml(
     spark: SparkSession, path: Union[str, Path], **options
 ) -> List[ParseResult]:
     p = Path(path)
-    try:
-        root = ET.parse(str(p)).getroot()
-    except ET.ParseError:
-        salvaged = _salvage_tables(str(p))
-        if not salvaged:
-            return [ParseResult.failed(spark, str(p), engine="spreadsheetml")]
-        return [
-            ParseResult(
-                data=grid_frame(spark, grid),
-                sheet_name=name if name else "Not defined",
-                file_path=str(p),
-                engine="spreadsheetml (salvaged)",
-            )
-            for name, grid in salvaged
-        ]
-
-    results: List[ParseResult] = []
-
-    def emit(table: ET.Element, sheet_name: Optional[str]) -> None:
-        grid = table_grid(table)
-        if not grid:
-            return
-        results.append(
-            ParseResult(
-                data=grid_frame(spark, grid),
-                sheet_name=sheet_name if sheet_name else "Not defined",
-                file_path=str(p),
-                engine="spreadsheetml",
-            )
+    grids, engine = sheet_grids(str(p))
+    return [
+        ParseResult(
+            data=grid_frame(spark, grid),
+            sheet_name=name,
+            file_path=str(p),
+            engine=engine,
         )
-
-    worksheets = list(root.iter(f"{SS_NS}Worksheet"))
-    if worksheets:
-        for ws in worksheets:
-            name = ws.get(f"{SS_NS}Name") or "Not defined"
-            for table in ws.iter(f"{SS_NS}Table"):
-                emit(table, name)
-    else:
-        # Level-2 fallback: bare tables without a Worksheet wrapper
-        # (main.py:296-304).
-        for table in root.iter(f"{SS_NS}Table"):
-            emit(table, None)
-
-    return results or [
-        ParseResult.failed(spark, str(p), engine="spreadsheetml")
-    ]
+        for name, grid in grids
+    ] or [ParseResult.failed(spark, str(p), engine="spreadsheetml")]
 
 
-def read_spreadsheetml_many(spark: SparkSession, paths):
+def _tables(path: str) -> list[tuple[str, list[list[str]]]]:
+    return sheet_grids(path)[0]
+
+
+def read_spreadsheetml_many(spark: SparkSession, paths) -> DataFrame:
     """Corpus-scale SpreadsheetML ingestion: many .xml files → one
     DataFrame of ragged rows (source_file, sheet_name, row_idx,
-    cells), parsed executor-side via mapInPandas over the file list.
-
-    The per-file parse is the same driver-side logic as
-    :func:`read_spreadsheetml`, relocated to executors: the driver
-    only ships path strings, so parallelism scales with file count —
-    the same corpus shape as ``read_excel_many``. Unparseable files
-    contribute zero rows (log-and-continue, reference behavior).
-    """
-    import glob as _glob
-    from pathlib import Path as _P
-
-    from pyspark.sql import functions as F  # noqa: F401
-
-    if isinstance(paths, (str, _P)):
-        expanded = sorted(_glob.glob(str(paths))) or [str(paths)]
-    else:
-        expanded = [str(p) for p in paths]
-
-    ns = SS_NS
-
-    def _parse_files(batches):
-        # Self-contained closure: everything (including the grid
-        # builder) is local so cloudpickle ships it by value — workers
-        # never import this package.
-        import pandas as pd
-        from xml.etree import ElementTree as _ET
-
-        def grid(tbl):
-            rows = []
-            for row in tbl.iter(f"{ns}Row"):
-                cells = [(d.text or "") for d in row.iter(f"{ns}Data")]
-                if cells:  # F1 empty-row skip
-                    rows.append(cells)
-            width = max((len(r) for r in rows), default=0)
-            return [r + [""] * (width - len(r)) for r in rows]
-
-        for batch in batches:
-            out = {"source_file": [], "sheet_name": [], "row_idx": [], "cells": []}
-            for path in batch["path"]:
-                try:
-                    root = _ET.parse(path).getroot()
-                except Exception:
-                    continue
-                worksheets = list(root.iter(f"{ns}Worksheet"))
-                scoped = (
-                    [(ws.get(f"{ns}Name") or "Not defined", t)
-                     for ws in worksheets for t in ws.iter(f"{ns}Table")]
-                    if worksheets
-                    else [("Not defined", t) for t in root.iter(f"{ns}Table")]
-                )
-                for sheet_name, tbl in scoped:
-                    for idx, row in enumerate(grid(tbl)):
-                        out["source_file"].append(path)
-                        out["sheet_name"].append(sheet_name)
-                        out["row_idx"].append(idx)
-                        out["cells"].append(row)
-            # an all-empty dict-of-lists frame infers float64 columns,
-            # which Arrow cannot cast to list<string> — a partition
-            # holding only unparseable files must yield nothing
-            if out["source_file"]:
-                yield pd.DataFrame(out)
-
-    files = spark.createDataFrame(
-        [(p,) for p in expanded], "path string"
-    ).repartition(min(len(expanded), spark.sparkContext.defaultParallelism))
-    return files.mapInPandas(
-        _parse_files,
-        schema="source_file string, sheet_name string, row_idx int, cells array<string>",
-    )
+    cells), each file parsed by :func:`sheet_grids`, the parser of
+    :func:`read_spreadsheetml` (``sources.corpus_frame``). Damaged
+    files contribute their salvaged rows; unparseable ones none."""
+    key = T.StructField("sheet_name", T.StringType())
+    return corpus_frame(spark, expand_paths(paths), _tables, key)[0]
 
 
 def read_xml_records(
@@ -273,8 +207,6 @@ def read_xml_records(
         )
         df.schema  # force plan-time resolution into the try block
     except (AnalysisException, ValueError):
-        from pyspark.sql import types as T
-
         return ParseResult(
             data=spark.createDataFrame(
                 [], T.StructType([T.StructField("value", T.StringType())])

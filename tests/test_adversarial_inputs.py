@@ -469,15 +469,16 @@ def test_sessionization_shortest_repr_tie_now_hardened(
     gate_compare(sf, "events_sessionization")
 
 
-def _raises_on_both_engines(spark, sf_dir, table, name):
-    """Query ``name`` over ``sf_dir``'s ``table`` raises CAST_OVERFLOW
-    in Spark and a ConversionException in its DuckDB oracle."""
+def _raises_on_both_engines(spark, sf_dir, table, name, match="CAST_OVERFLOW"):
+    """Query ``name`` over ``sf_dir``'s ``table`` raises an error
+    matching ``match`` in Spark and a ConversionException in its
+    DuckDB oracle."""
     import duckdb
 
     from almost_any_file_to_pandas_spark import plans
 
     plans.load_all()
-    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+    with pytest.raises(Exception, match=match):
         plans.QUERIES[name](spark, sf_dir).collect()
     con = duckdb.connect()
     con.execute(
@@ -892,6 +893,19 @@ def test_hygiene_report_raises_past_the_q6_domain(spark, tmp_path):
     sf = _embeddings_dir(spark, tmp_path, rows)
     _raises_on_both_engines(
         spark, sf, "embeddings", "embedding_hygiene_report"
+    )
+
+
+def test_effective_rank_raises_past_the_gram_quantum(spark, tmp_path):
+    """A 64-dim row with one component of 1e13 squares to 1e32 q6
+    units, past 2^63: ``gram_moments`` raises where its int64 cast
+    wrapped the quantum to -2^63, and the PR oracle's per-row BIGINT
+    cast raises too. (``gram_moments`` reads only 64-dim rows.)"""
+    rows = [(0, [0.5] * 64, "a"), (1, [1e13] + [0.0] * 63, "b")]
+    sf = _embeddings_dir(spark, tmp_path, rows)
+    _raises_on_both_engines(
+        spark, sf, "embeddings", "emb_effective_rank_pr",
+        match="OverflowError: gram_moments: a quantum overflows int64",
     )
 
 

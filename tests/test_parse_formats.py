@@ -237,6 +237,32 @@ def test_read_spreadsheetml_many(spark, fixture_dir, xmlss_file):
     assert df.select("source_file").distinct().count() == 2
 
 
+def test_spreadsheetml_readers_salvage_the_same_rows(spark, tmp_path):
+    """A file truncated inside its 5th ``<Row>`` keeps its 4 complete
+    rows in the single-file reader and in the corpus reader alike:
+    both run the one per-file parser."""
+    from almost_any_file_to_pandas_spark.sources.xmlss import (
+        read_spreadsheetml_many,
+    )
+
+    p = tmp_path / "cut.xml"
+    p.write_text(
+        '<?xml version="1.0"?>'
+        '<Workbook xmlns="urn:schemas-microsoft-com:office:spreadsheet" '
+        'xmlns:ss="urn:schemas-microsoft-com:office:spreadsheet">'
+        '<Worksheet ss:Name="W1"><Table>'
+        + "".join(f"<Row><Cell><Data>r{i}</Data></Cell></Row>" for i in range(4))
+        + "<Row><Cell><Data>r4"  # truncation point
+    )
+    [res] = parse(spark, p)
+    assert res.engine == "spreadsheetml (salvaged)"
+    assert grid_of(res.data) == [[f"r{i}"] for i in range(4)]
+    df = read_spreadsheetml_many(spark, str(p))
+    assert [(r.sheet_name, r.row_idx, list(r.cells)) for r in df.collect()] == [
+        ("W1", i, [f"r{i}"]) for i in range(4)
+    ]
+
+
 def test_xlsb_biff12(spark, xlsb_file):
     """S2: native stdlib BIFF12 parse — sheet inventory via
     BrtBundleSh + rels, every cell-record family, row-gap padding."""
